@@ -10,11 +10,11 @@ where concatenating ``spans.text`` in ``offset`` order reconstructs the
 exact KML string the reference reads from disk
 (/root/reference/kml2geojson/main.py:577-583) — span-sequence equality.
 
-All Python execution is Arrow-batched (``mapInPandas``); there are no
-row-at-a-time Python UDFs anywhere in the engine. Parsing is a narrow
-transformation: one pass over the documents, no shuffle. Downstream
-grouping/joins are plain DataFrame ops so Catalyst owns the physical
-plan (broadcast vs SMJ, AQE, partial aggregation).
+The engine's Python runs Arrow-batched (``mapInArrow``, one call per
+batch); there are no row-at-a-time Python UDFs anywhere in the package.
+Parsing is a narrow transformation: one pass over the documents, no
+shuffle. Downstream grouping/joins are plain DataFrame ops so Catalyst
+owns the physical plan (broadcast vs SMJ, AQE, partial aggregation).
 """
 
 from __future__ import annotations

@@ -261,43 +261,43 @@ def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
     against a STATIC polygon dimension → incremental per-polygon point
     counts.
 
-    Stream-static shape: the polygon cover (cell_id, poly_id) is a
-    broadcast build side (static dimension — the driver ring collect is
-    legitimate here and size-gated by ``max_driver_rings``, enforced
-    below with a bounded probe), the
-    streaming points equi-join it on their cell id, and the exact
-    ray-cast runs in the same stateless Arrow map as batch — all
-    streaming-legal operators, so Spark maintains only the final
-    per-polygon running counts as state. The batch counterpart
+    Stream-static shape: the polygon cover (cell_id, poly_id, grid
+    row) and each grid row's edges are broadcast build sides (static
+    dimension, size-gated by ``max_driver_rings``, enforced below with
+    a bounded probe), the streaming points equi-join them on their
+    cell id and then on (poly_id, row), and the exact
+    ray cast is a Column filter with batch's crossing rule (batch counts
+    the same crossings with an aggregation, which a stream would have to
+    keep as state) — all streaming-legal operators, so Spark maintains
+    only the final per-polygon running counts as state. The batch counterpart
     (``pip_join(...).groupBy(poly_id).count()``) equals the streamed
     result once the stream drains (asserted in tests).
     """
     from .spatial import encode_points
-    from .spatial.ops import _pip_join_driver
+    from .spatial.ops import _pip_pairs
 
-    # enforce the driver-broadcast size gate ourselves: the streaming
-    # shape REQUIRES the broadcast plan (cogroup applyInPandas is not
-    # available on streams), so an oversized polygon side must refuse
-    # up front rather than silently collect unbounded rings
+    # enforce the broadcast size gate ourselves: the streaming shape
+    # always broadcasts the cover, so an oversized polygon side must
+    # refuse up front rather than silently broadcast unbounded rings
     bounded = polygons.limit(max_driver_rings + 1).count()
     if bounded > max_driver_rings:
         raise ValueError(
             f"stream_pip_counts: polygon dimension exceeds "
             f"max_driver_rings={max_driver_rings}; the streaming shape "
-            f"needs driver-broadcast rings — pre-aggregate/simplify the "
+            f"broadcasts the polygon cover — pre-aggregate/simplify the "
             f"polygon side or raise the threshold explicitly")
 
     pts = _extract_points_stream(docs)
     # deterministic row id (monotonically_increasing_id is illegal on
-    # streams): _pip_join_driver emits (point_id, poly_id) candidates;
-    # only the count per polygon is aggregated downstream
+    # streams): _pip_pairs emits (point_id, poly_id) matches; only the
+    # count per polygon is aggregated downstream
     pts = pts.select(
         F.xxhash64("doc_id", "feature_idx", "geom_idx").alias("point_id"),
         "x", "y")
     pts = encode_points(pts, res)
     polys = polygons.select(F.col("poly_id"), F.col("rings"))
-    matched = _pip_join_driver(pts, polys, res,
-                               broadcast_polygons=True, salt=None)
+    matched = _pip_pairs(pts, polys, res, broadcast=True,
+                         stateless=True)
     return matched.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"))
 

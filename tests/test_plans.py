@@ -144,9 +144,11 @@ def test_ivf_probe_join_broadcasts_codebook(spark):
 
 
 def test_pip_cogroup_plan_two_shuffles_no_python_cover(spark):
-    """Cogroup pip shape: no CartesianProduct, no driver collect, and
-    the polygon cover side is pure JVM (Column bbox explode — the only
-    Python in the plan is the single ray-cast cogroup)."""
+    """Both pip shapes run without Python: the bbox cover, the edge
+    arrays and the ray cast are Column expressions around a cell
+    equi-join — no Python eval or map node of any kind, no
+    CartesianProduct. ("MapInArrow" also matches the pre-4.0 node name
+    "PythonMapInArrow".)"""
     import numpy as np
     import pandas as pd
     from kml2geojson_spark.spatial import pip_join
@@ -157,13 +159,41 @@ def test_pip_cogroup_plan_two_shuffles_no_python_cover(spark):
         [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
                [-5.0, -5.0]]])],
         "poly_id long, rings array<array<array<double>>>")
-    plan = _plan(pip_join(pts, polys, 6, rings_distribution="cogroup"))
-    assert "CartesianProduct" not in plan
-    assert "FlatMapCoGroupsInPandas" in plan
-    # exactly one Python eval node (the cogrouped ray-cast): the cover
-    # explode must NOT appear as MapInPandas/ArrowEval
-    assert plan.count("MapInPandas") == 0
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    for shape in ("driver", "cogroup"):
+        plan = _plan(pip_join(pts, polys, 6, rings_distribution=shape))
+        for marker in ("FlatMapCoGroupsInPandas", "MapInPandas",
+                       "MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+                       "CartesianProduct"):
+            assert marker not in plan, f"{marker} in {shape} pip plan"
+
+
+def test_pip_driver_broadcasts_edges_per_row_not_per_cell(spark):
+    """The driver pip shape broadcasts two build sides: the cell cover,
+    keyed by cell_id and carrying no edges, and the per-row edge arrays,
+    keyed by (poly_id, _iy). So the broadcast holds each row's edges
+    once, however many cells the row has."""
+    import contextlib
+    import io
+    import re
+    from kml2geojson_spark.spatial import pip_join
+    pts = spark.createDataFrame([(0, 0.5, 0.5)],
+                                "point_id long, x double, y double")
+    polys = spark.createDataFrame(
+        [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
+               [-5.0, -5.0]]])],
+        "poly_id long, rings array<array<array<double>>>")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        pip_join(pts, polys, 9, rings_distribution="driver") \
+            .explain(mode="formatted")
+    # formatted plans list each node as "(k) Name" followed by its
+    # "Input [n]: [...]" columns
+    inputs = re.findall(r"\(\d+\) BroadcastExchange\s*\nInput \[\d+\]: "
+                        r"\[([^\]]*)\]", buf.getvalue())
+    assert len(inputs) == 2, buf.getvalue()
+    cols = [{c.split("#")[0] for c in i.split(", ")} for i in inputs]
+    assert {"cell_id", "poly_id", "_iy"} in cols, cols
+    assert {"poly_id", "_iy", "edges"} in cols, cols
 
 
 def test_global_quantiles_no_unpartitioned_sample_window(spark):
@@ -181,14 +211,19 @@ def test_global_quantiles_no_unpartitioned_sample_window(spark):
 
 def test_polygon_cover_is_narrow_map(spark):
     """polygon_cover is a narrow per-partition kernel: no shuffle
-    (Exchange) anywhere in its plan."""
+    (Exchange) anywhere in its plan, and exactly one Arrow map
+    ("MapInArrow" also matches the pre-4.0 name "PythonMapInArrow"),
+    with no pandas hop."""
     from kml2geojson_spark.spatial import polygon_cover
     polys = spark.createDataFrame(
         [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
                [-5.0, -5.0]]])],
         "poly_id long, rings array<array<array<double>>>")
-    plan = _plan(polygon_cover(polys, 6))
-    assert "Exchange" not in plan, plan
+    for strategy in ("flat", "hier"):
+        plan = _plan(polygon_cover(polys, 6, strategy=strategy))
+        assert "Exchange" not in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan, plan
 
 
 def test_hll_estimate_partial_aggregation(spark):

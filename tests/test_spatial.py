@@ -573,9 +573,10 @@ def _big_poly_corpus(n_polys=5000, n_verts=64, n_pts=500, seed=99):
 def test_pip_join_cogroup_large_polygon_table_no_driver_collect(
         spark, monkeypatch):
     """The scale path: a polygon table too large to sensibly collect.
-    Rings are distributed executor-side (cogroup per cell) — asserted
-    by making every DataFrame.collect raise for the whole job — and
-    the result equals the all-pairs brute-force ray-cast oracle."""
+    Rings are distributed executor-side (edge arrays on the shuffled
+    cover rows) — asserted by making every DataFrame.collect raise for
+    the whole job — and the result equals the all-pairs brute-force
+    ray-cast oracle."""
     from pyspark.sql import DataFrame as SparkDF
 
     pts, polys = _big_poly_corpus()
