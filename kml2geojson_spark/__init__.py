@@ -14,6 +14,12 @@ fractions, salted joins with explicit skew splitting, and
 checkpoint/lineage manifests.
 """
 
+import sys as _sys
+
+if "pyspark.worker" in _sys.modules:  # inside a PySpark Python worker
+    from .worker_imports import install as _install_worker_imports
+    _install_worker_imports()
+
 from .constants import GEOTYPES, STYLE_TYPES
 from .convert_core import (
     build_feature_collection_dict,

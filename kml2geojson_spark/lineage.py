@@ -15,10 +15,15 @@ ourselves, Iceberg-shaped:
   resume only reuses a checkpoint whose *entire upstream chain* is
   unchanged.
 - ``manifest.json`` records status, wall time, totals, and per-partition
-  lineage rows ``(partition_id, input_snapshot, rows, cells)`` computed
-  from the persisted data (one cheap aggregation).
-- Writes are atomic: data first, then manifest to a temp name + rename;
-  a crash mid-write leaves status != "committed" and the stage reruns.
+  lineage rows ``(partition_id, input_snapshot, rows, cells)``. Row
+  counts come from the footers of the parquet files just written (each
+  file holds one write task's rows, so its partition-id column has
+  min = max), so a stage runs no Spark job besides its write; only
+  ``cell_col``'s distinct-cell counts need an aggregation over the
+  persisted data.
+- Writes are atomic: data first, then the manifest and the ``LATEST``
+  pointer each to a temp name + rename; a crash mid-write leaves
+  status != "committed" and the stage reruns.
 
 ``run_stage`` also cuts the Spark lineage chain: downstream stages read
 the checkpointed parquet, so a 40-stage pipeline never rebuilds a
@@ -34,6 +39,7 @@ import time
 from pathlib import Path
 from typing import Callable, Optional, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _PID = "_lineage_pid"
@@ -43,6 +49,34 @@ def _snapshot_id(stage: str, parents: Sequence[str], params) -> str:
     payload = json.dumps({"stage": stage, "parents": list(parents),
                           "params": params}, sort_keys=True, default=str)
     return hashlib.md5(payload.encode()).hexdigest()[:16]
+
+
+def _write_atomic(path: Path, text: str) -> None:
+    """Write to a temp name, then rename: readers see the old file or the
+    whole new one, never a torn write."""
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(text)
+    os.replace(tmp, path)
+
+
+def _footer_rows(data_dir: Path) -> Optional[dict[int, int]]:
+    """Rows per partition id, summed over the row groups of the parquet
+    files in ``data_dir``. A Spark write task writes only its own
+    partition's rows, so each row group's ``_PID`` statistics have
+    min = max; None if any footer lacks those statistics."""
+    rows: dict[int, int] = {}
+    for path in data_dir.glob("*.parquet"):
+        meta = pq.read_metadata(path)
+        col = [meta.schema.column(j).path for j in range(meta.num_columns)].index(_PID)
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            if group.num_rows == 0:
+                continue
+            stats = group.column(col).statistics
+            if stats is None or not stats.has_min_max or stats.min != stats.max:
+                return None
+            rows[stats.min] = rows.get(stats.min, 0) + group.num_rows
+    return rows
 
 
 class LineageLog:
@@ -101,12 +135,18 @@ class LineageLog:
         t0 = time.time()
         df = builder().withColumn(_PID, F.spark_partition_id())
         df.write.mode("overwrite").parquet(str(data_dir))
-        persisted = spark.read.parquet(str(data_dir))
+        # the written schema, so reading back runs no schema-inference job
+        persisted = spark.read.schema(df.schema).parquet(str(data_dir))
 
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        if cell_col is not None and cell_col in persisted.columns:
-            aggs.append(F.countDistinct(cell_col).alias("cells"))
-        part_rows = persisted.groupBy(_PID).agg(*aggs).collect()
+        scan_cells = cell_col is not None and cell_col in persisted.columns
+        rows = None if scan_cells else _footer_rows(data_dir)
+        if rows is None:
+            aggs = [F.count(F.lit(1)).alias("rows")]
+            if scan_cells:
+                aggs.append(F.countDistinct(cell_col).alias("cells"))
+            part_rows = [r.asDict() for r in persisted.groupBy(_PID).agg(*aggs).collect()]
+        else:
+            part_rows = [{_PID: pid, "rows": n} for pid, n in rows.items()]
         wall = time.time() - t0
 
         input_snapshot = parents[0] if parents else None
@@ -114,7 +154,7 @@ class LineageLog:
             ({"partition_id": int(r[_PID]),
               "input_snapshot": input_snapshot,
               "rows": int(r["rows"]),
-              "cells": int(r["cells"]) if "cells" in r.asDict() else None}
+              "cells": int(r["cells"]) if "cells" in r else None}
              for r in part_rows),
             key=lambda d: d["partition_id"])
 
@@ -131,10 +171,8 @@ class LineageLog:
             "n_partitions": len(partitions),
             "partitions": partitions,
         }
-        tmp = sdir / "manifest.json.tmp"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, sdir / "manifest.json")
-        (self.root / stage / "LATEST").write_text(sid)
+        _write_atomic(sdir / "manifest.json", json.dumps(manifest, indent=1))
+        _write_atomic(self.root / stage / "LATEST", sid)
 
         return persisted.drop(_PID), manifest
 

@@ -6,15 +6,17 @@ Design rules (BASELINE.json north_star / SURVEY.md §2.3):
   100-TB hot path never crosses into Python.
 - Python runs only where a kernel cannot be a Column expression, and
   then once per Arrow batch (``mapInArrow``), never per row or per
-  polygon. On warm, reused workers every Python task costs about
-  0.2 CPU-s before user code runs, whatever its size: PySpark's
-  per-task ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
-  which re-reads the zip directories of the ``pyspark.zip`` the
-  workers import from (measured on a 4-vCPU host, PySpark 4.1). So
-  the PIP ray cast is Column expressions over the edges of a polygon
-  that span the point's grid row, and the coverage clip
-  (Sutherland–Hodgman + shoelace in numpy) handles a whole batch of
-  polygons per kernel pass.
+  polygon. A Python worker's first task costs about 0.2 CPU-s before
+  user code runs, whatever its size: PySpark's per-task
+  ``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
+  re-reads the zip directories of the ``pyspark.zip``, py4j zip and
+  spark-core jar the workers import from (measured on a 4-vCPU host,
+  PySpark 4.1). Importing this package in a worker freezes those
+  importers (:mod:`kml2geojson_spark.worker_imports`), so a reused
+  worker's later tasks skip that cost. So the PIP ray cast is Column
+  expressions over the edges of a polygon that span the point's grid
+  row, and the coverage clip (Sutherland–Hodgman + shoelace in numpy)
+  handles a whole batch of polygons per kernel pass.
 - Column kernels stay inside whole-stage codegen: higher-order array
   functions (``aggregate``, ``filter``, ``transform``) are interpreted,
   at roughly 75-350 ns per array element on that host, so work over

@@ -29,19 +29,26 @@ def hot_keys(df: DataFrame, key: str, *, top: int = 64,
              min_share: float = 0.01, sample_fraction: float = 0.05,
              seed: int = 42) -> list:
     """Sampled heavy-hitter detection: keys whose sampled share exceeds
-    ``min_share``, capped at ``top``. One small aggregation job; the
-    driver only ever sees ≤ ``top`` values."""
+    ``min_share`` (and that occur at least twice), capped at ``top``.
+
+    One query: the per-key counts are coalesced into one partition and
+    aggregated once more into the sample's total and the count-sorted
+    (key, count) list, which is cut at the threshold
+    ``max(2, min_share * total)`` and at ``top`` before it leaves the
+    executor. No separate count job runs, and the driver only ever sees
+    ≤ ``top`` values. Keys with equal counts come out in descending key
+    order."""
     sample = df.sample(fraction=sample_fraction, seed=seed) \
         if sample_fraction < 1.0 else df
-    total = sample.count()
-    if total == 0:
-        return []
-    rows = (sample.groupBy(key).count()
-            .where(F.col("count") >= max(2.0, min_share * total))
-            .orderBy(F.col("count").desc())
-            .limit(top)
-            .collect())
-    return [r[key] for r in rows]
+    threshold = F.greatest(F.lit(2.0), F.lit(min_share) * F.col("_total"))
+    row = (sample.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
+           .coalesce(1)
+           .agg(F.sum("_n").alias("_total"),
+                F.sort_array(F.collect_list(F.struct("_n", key)), asc=False).alias("_by_n"))
+           .select(F.slice(F.filter("_by_n", lambda c: c["_n"] >= threshold), 1, top)
+                   .alias("hot"))
+           .first())
+    return [c[key] for c in row["hot"]]
 
 
 def salted_join(probe: DataFrame, build: DataFrame, key: str, *,

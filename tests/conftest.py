@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import sys
 import pathlib
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -52,3 +54,22 @@ def spark():
     )
     yield session
     session.stop()
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block: the
+    block runs under a fresh job group, read back from the status
+    tracker once the listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    ids: list = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))

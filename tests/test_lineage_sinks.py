@@ -13,7 +13,7 @@ import kml2geojson_spark as k2gs
 from kml2geojson_spark.lineage import LineageLog, Pipeline
 from kml2geojson_spark.sinks import export_layers_table, write_geojson_dir
 
-from .conftest import REFERENCE_DATA, reference_available
+from .conftest import REFERENCE_DATA, reference_available, spark_jobs
 
 
 def test_stage_resume_skips_recompute(spark, tmp_path):
@@ -121,6 +121,116 @@ def test_cell_lineage_counts(spark, tmp_path):
     assert manifest["total_rows"] == 1000
     assert all(p["cells"] is not None and p["cells"] <= p["rows"]
                for p in manifest["partitions"])
+
+
+def _scan_counts(spark, data_dir, cell_col=None):
+    """Per-partition (rows, cells) by a group-by scan of the persisted
+    data: the count that the parquet footers replace."""
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if cell_col:
+        aggs.append(F.countDistinct(cell_col).alias("cells"))
+    persisted = spark.read.parquet(str(data_dir))
+    return {r["_lineage_pid"]: (r["rows"], r["cells"] if cell_col else None)
+            for r in persisted.groupBy("_lineage_pid").agg(*aggs).collect()}
+
+
+def _manifest_counts(manifest):
+    return {p["partition_id"]: (p["rows"], p["cells"]) for p in manifest["partitions"]}
+
+
+@pytest.mark.parametrize("cell_col", [None, "cell"])
+def test_partition_counts_equal_scan(spark, tmp_path, cell_col):
+    """Footer row counts (no cell_col) and the scan (cell_col) both equal
+    a group-by over the persisted data: 6 partitions, 3 of them empty,
+    3 files per non-empty partition."""
+    log = LineageLog(tmp_path / "ckpt5")
+
+    def builder():
+        # range partition i holds ids [10i, 10i + 10): odd partitions end up empty
+        return (spark.range(0, 60, numPartitions=6)
+                .where(F.col("id") % 20 < 5)
+                .withColumn("cell", F.col("id") % 3))
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        _, manifest = log.run_stage(spark, "parts", builder, cell_col=cell_col)
+    finally:
+        spark.conf.set(key, old)
+    data = tmp_path / "ckpt5" / "parts" / manifest["snapshot_id"] / "data"
+    assert len(list(data.glob("*.parquet"))) == 9
+    want = _scan_counts(spark, data, cell_col)
+    assert _manifest_counts(manifest) == want
+    assert sorted(want) == [0, 2, 4] and manifest["n_partitions"] == 3
+    assert manifest["total_rows"] == 15
+    assert [list(p) for p in manifest["partitions"]] == \
+        [["partition_id", "input_snapshot", "rows", "cells"]] * 3
+
+
+def test_empty_stage_has_no_partitions(spark, tmp_path):
+    log = LineageLog(tmp_path / "ckpt6")
+    df, manifest = log.run_stage(spark, "empty",
+                                 lambda: spark.range(0, 10, numPartitions=2).where("id < 0"))
+    assert manifest["partitions"] == [] and manifest["total_rows"] == 0
+    assert df.count() == 0
+
+
+def test_run_stage_starts_only_the_write_job(spark, tmp_path):
+    log = LineageLog(tmp_path / "ckpt7")
+    with spark_jobs(spark) as jobs:
+        _, manifest = log.run_stage(
+            spark, "one", lambda: spark.range(0, 1000, numPartitions=4)
+            .withColumn("v", F.col("id") * 2))
+    assert manifest["total_rows"] == 1000
+    assert len(jobs) == 1
+
+
+def test_fresh_and_resumed_stage_share_schema(spark, tmp_path):
+    log = LineageLog(tmp_path / "ckpt8")
+
+    def builder():
+        return (spark.range(0, 20, numPartitions=2)
+                .withColumn("s", F.struct(F.col("id").alias("a"), F.lit("x").alias("b")))
+                .withColumn("arr", F.array(F.lit(1), F.col("id").cast("int")))
+                .withColumn("m", F.create_map(F.lit("k"), F.col("id")))
+                .withColumn("d", F.lit(1.5).cast("decimal(10,2)"))
+                .withColumn("ts", F.current_timestamp()))
+
+    fresh, _ = log.run_stage(spark, "schema", builder)
+    resumed, _ = log.run_stage(spark, "schema", builder)
+    assert fresh.schema == resumed.schema
+    assert "_lineage_pid" not in fresh.columns
+    assert sorted(fresh.select("id", "s", "arr", "m").collect()) == \
+        sorted(resumed.select("id", "s", "arr", "m").collect())
+
+
+def test_latest_pointer_survives_a_torn_write(spark, tmp_path, monkeypatch):
+    """A crash while writing LATEST leaves the previous pointer whole."""
+    import pathlib
+
+    log = LineageLog(tmp_path / "ckpt9")
+    _, m1 = log.run_stage(spark, "gen", lambda: spark.range(5), params={"n": 5})
+    assert log.latest("gen")["snapshot_id"] == m1["snapshot_id"]
+
+    write_text = pathlib.Path.write_text
+
+    def torn(self, text, *a, **kw):
+        if self.name.startswith("LATEST"):
+            write_text(self, text[: len(text) // 2], *a, **kw)
+            raise OSError("killed mid-write")
+        return write_text(self, text, *a, **kw)
+
+    monkeypatch.setattr(pathlib.Path, "write_text", torn)
+    with pytest.raises(OSError, match="killed mid-write"):
+        log.run_stage(spark, "gen", lambda: spark.range(6), params={"n": 6})
+    assert log.latest("gen")["snapshot_id"] == m1["snapshot_id"]
+
+    assert (log.root / "gen" / "LATEST").read_text() == m1["snapshot_id"]
+
+    monkeypatch.setattr(pathlib.Path, "write_text", write_text)
+    _, m3 = log.run_stage(spark, "gen", lambda: spark.range(7), params={"n": 7})
+    assert log.latest("gen")["snapshot_id"] == m3["snapshot_id"] != m1["snapshot_id"]
 
 
 @pytest.mark.skipif(not reference_available(), reason="reference missing")

@@ -20,6 +20,8 @@ from kml2geojson_spark.spatial import (
 )
 from kml2geojson_spark.spatial.ops import knn_exact, _raycast_np, _rings_to_np
 
+from .conftest import spark_jobs
+
 RNG = np.random.default_rng(7)
 N_PTS = 400
 
@@ -156,6 +158,19 @@ def test_knn_kring_matches_exact(spark):
     assert np.allclose(a["dist2"], b["dist2"])
 
 
+def _two_job_hot_keys(df, key, sample_fraction, min_share, top=64, seed=42):
+    """hot_keys as a count() job and then a group-by job, ties broken by
+    descending key."""
+    sample = df.sample(fraction=sample_fraction, seed=seed)
+    total = sample.count()
+    rows = (sample.groupBy(key).count()
+            .where(F.col("count") >= max(2.0, min_share * total))
+            .orderBy(F.col("count").desc(), F.col(key).desc())
+            .limit(top)
+            .collect())
+    return [r[key] for r in rows]
+
+
 def test_salted_join_equals_plain_join(spark):
     # heavily skewed probe: 80% of rows on one key
     n = 5000
@@ -166,8 +181,24 @@ def test_salted_join_equals_plain_join(spark):
         "k": np.arange(0, 50, dtype=np.int64),
         "w": np.arange(0, 50, dtype=np.int64) * 10}))
     plain = probe.join(build, "k").select("k", "v", "w").toPandas()
-    hot = hot_keys(probe, "k", sample_fraction=0.2)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with spark_jobs(spark) as jobs:
+            hot = hot_keys(probe, "k", sample_fraction=0.2)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(jobs) == 1
     assert 7 in hot
+    # 0.001: the threshold is the floor of 2 and most keys are hot
+    for min_share, n_hot in ((0.01, 1), (0.001, 40)):
+        with spark_jobs(spark) as jobs:
+            got = hot_keys(probe, "k", sample_fraction=0.2, min_share=min_share)
+        with spark_jobs(spark) as two_jobs:
+            want = _two_job_hot_keys(probe, "k", 0.2, min_share)
+        assert got == want and len(got) >= n_hot
+        # with AQE a shuffle's map stage is a job of its own
+        assert len(jobs) < len(two_jobs)
     salted = salted_join(probe, build, "k", n_salt=8, hot=hot) \
         .select("k", "v", "w").toPandas()
     a = plain.sort_values(["k", "v"]).reset_index(drop=True)

@@ -1,0 +1,66 @@
+"""Paired perfbench runs, parent commit vs working tree:
+
+    python tools/perf_pairs.py --workload convert_geojson --seeds 41-50 [--parent HEAD]
+
+Extracts ``--parent`` with ``git archive`` into a temporary directory and,
+per seed, runs ``perfbench/run.py`` on both sides, alternating which side
+goes first. Prints per pair the listed metrics and the per-job median of
+each ``info.job_cpu_s`` class, then each side's median and quartiles.
+"""
+
+from __future__ import annotations
+
+import argparse
+import io
+import json
+import statistics
+import subprocess
+import sys
+import tarfile
+import tempfile
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def run(tree: Path, args, seed: int) -> dict:
+    out = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", args.workload, "--seed", str(seed),
+         "--seconds", str(args.seconds), "--trace", str(args.trace)],
+        cwd=tree, capture_output=True, text=True, check=True).stdout.splitlines()
+    info = json.loads(next(line for line in out if line.startswith("info "))[5:])
+    row = {k: v["value"] for k, v in json.loads(out[-1])["metrics"].items()}
+    for c in info["job_cpu_s"][0]:
+        row[f"cpu.{c}"] = statistics.median(j[c] for j in info["job_cpu_s"])
+    return row
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="first-last, e.g. 41-50")
+    ap.add_argument("--parent", default="HEAD")
+    ap.add_argument("--seconds", type=int, default=5)
+    ap.add_argument("--trace", type=int, default=0)
+    args = ap.parse_args()
+    first, last = map(int, args.seeds.split("-"))
+    sides = {"parent": [], "change": []}
+    with tempfile.TemporaryDirectory(prefix="perf_pairs-") as parent:
+        tar = subprocess.run(["git", "archive", args.parent], cwd=ROOT, check=True,
+                             capture_output=True).stdout
+        tarfile.open(fileobj=io.BytesIO(tar)).extractall(parent)
+        trees = [("parent", Path(parent)), ("change", ROOT)]
+        for i, seed in enumerate(range(first, last + 1)):
+            for name, tree in trees[:: 1 if i % 2 == 0 else -1]:
+                sides[name].append(run(tree, args, seed))
+            print(f"seed {seed}", {n: {k: round(v, 3) for k, v in rows[-1].items()}
+                                   for n, rows in sides.items()}, flush=True)
+    for name, rows in sides.items():
+        for k in rows[0]:
+            vals = [r[k] for r in rows]
+            q = statistics.quantiles(vals, n=4) if len(vals) > 1 else vals * 3
+            print(f"{name:6} {k:28} median {q[1]:.4f}  quartiles {q[0]:.4f} .. {q[2]:.4f}")
+
+
+if __name__ == "__main__":
+    main()
