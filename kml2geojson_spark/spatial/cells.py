@@ -24,6 +24,16 @@ Three interchangeable implementations of the same bit-exact function:
 
 All use the same double-precision arithmetic (floor((lon+180)/360*2^r))
 so results agree bit-for-bit across numpy, the JVM, and DuckDB.
+
+The bit spreading differs by form. numpy and the SQL text run the
+classic 5-step mask cascade ``x = ((x << s) | x) & m``. The Column form
+cannot: each step references its input twice, so the cascade holds 32
+copies of the float→grid expression per axis, and Catalyst evaluates
+every copy wherever it inlines the encode into a filter. The Column
+form looks each input byte up in a 256-entry table instead
+(``spread(x) = OR_k T[(x >> 8k) & 255] << 16k`` over the ``res`` bits
+in use), so an input appears ceil(res/8) times; decode gathers with a
+second byte table. Each table is one SQL array literal.
 """
 
 from __future__ import annotations
@@ -99,6 +109,16 @@ def _compact_np(v: np.ndarray) -> np.ndarray:
     return x
 
 
+# Byte tables for the Column forms. _SPREAD_LUT[b] is byte b spread to
+# 16 bits. _COMPACT_LUT[b] gathers the odd bits of byte b (4 x bits)
+# into bits 0-3 and its even bits (4 y bits) into bits 32-35.
+_BYTES = np.arange(256, dtype=np.uint64)
+_SPREAD_LUT = tuple(int(v) for v in _spread_np(_BYTES))
+_COMPACT_LUT = tuple(
+    int(v) for v in _compact_np(_BYTES >> np.uint64(1))
+    | (_compact_np(_BYTES) << np.uint64(32)))
+
+
 def cell_decode_np(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """cell ids → (ix, iy, res) grid coordinates."""
     c = np.asarray(cell).astype(np.uint64)
@@ -153,11 +173,50 @@ def cell_kring_np(cell: int, radius: int) -> np.ndarray:
 # Spark Column implementation (JVM-side, codegen-friendly)
 # ---------------------------------------------------------------------------
 
-def _spread_col(c: Column) -> Column:
-    x = c
-    for shift, mask in _SPREAD_MASKS:
-        x = (F.shiftleft(x, shift).bitwiseOR(x)).bitwiseAND(F.lit(mask))
-    return x
+def _lut_col(values) -> Column:
+    """A constant BIGINT array as ONE parsed SQL literal: a single
+    driver→JVM call, where ``F.array`` over ``F.lit`` Columns costs
+    several per element. Catalyst folds it to one array literal."""
+    return F.expr("array(" + ",".join(f"{v}L" for v in values) + ")")
+
+
+def _lookup_col(lut: Column, c: Column, shift: int) -> Column:
+    """``lut[(c >> shift) & 255]``. ``& 255`` keeps the index inside the
+    256-entry table, so ANSI mode never raises; under ANSI, Catalyst
+    also types the lookup NOT NULL whenever ``c`` is, as it does the
+    bit arithmetic it replaces."""
+    return lut[(F.shiftright(c, shift) if shift else c).bitwiseAND(255)]
+
+
+def _spread_col(c: Column, bits: int, lut: Column) -> Column:
+    """Spread the low ``bits`` bits of ``c`` (a zero bit above each
+    one): one lookup in the byte table ``lut`` (:data:`_SPREAD_LUT`)
+    per 8 bits, so ``c`` appears ceil(bits/8) times (at least once,
+    which keeps NULL in → NULL out)."""
+    out = _lookup_col(lut, c, 0)
+    for k in range(1, -(-bits // 8)):
+        out = out.bitwiseOR(F.shiftleft(_lookup_col(lut, c, 8 * k), 16 * k))
+    return out
+
+
+def _interleave_col(hi: Column, lo: Column, bits: int,
+                    lut: Column) -> Column:
+    """Morton interleave of the low ``bits`` bits of two integer
+    Columns: ``hi`` on the odd bit positions, ``lo`` on the even."""
+    return F.shiftleft(_spread_col(hi, bits, lut), 1) \
+        .bitwiseOR(_spread_col(lo, bits, lut))
+
+
+def _morton_col(ix: Column, iy: Column, res: int, *,
+                lut: Column | None = None) -> Column:
+    """Cell id of the integer grid coordinates (``ix``, ``iy``) at
+    ``res`` — the one Column form of the Morton layout. Spreads the low
+    ``res`` bits of each coordinate; callers keep 0 <= ix, iy < 2**res.
+    ``lut`` lets a caller that encodes many cells in one expression
+    share one table."""
+    lut = _lut_col(_SPREAD_LUT) if lut is None else lut
+    code = _interleave_col(ix, iy, res, lut)
+    return F.shiftleft(code, RES_BITS).bitwiseOR(res)
 
 
 def _grid_col(coord: Column, offset: float, extent: float, res: int) -> Column:
@@ -174,33 +233,31 @@ def cell_encode_col(lon: Column, lat: Column, res: int) -> Column:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
     ix = _grid_col(lon, 180.0, 360.0, res)
     iy = _grid_col(lat, 90.0, 180.0, res)
-    code = F.shiftleft(_spread_col(ix), 1).bitwiseOR(_spread_col(iy))
-    return F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res)).alias("cell_id")
-
-
-def _compact_col(c: Column) -> Column:
-    """Inverse of :func:`_spread_col`: gather every other bit into the
-    low half (the Column mirror of :func:`_compact_np`)."""
-    x = c.bitwiseAND(F.lit(0x5555555555555555))
-    for shift, mask in ((1, 0x3333333333333333),
-                        (2, 0x0F0F0F0F0F0F0F0F),
-                        (4, 0x00FF00FF00FF00FF),
-                        (8, 0x0000FFFF0000FFFF),
-                        (16, 0x00000000FFFFFFFF)):
-        x = (x.bitwiseOR(F.shiftright(x, shift))).bitwiseAND(F.lit(mask))
-    return x
+    # The grid coordinates are never NULL (greatest() skips NULLs), so
+    # neither is the cell. The coalesce is never taken: it tells Catalyst
+    # so with ANSI off too, where a table lookup is typed nullable. A
+    # join on a NOT NULL cell_id infers no isnotnull filter that would
+    # re-run the encode.
+    return F.coalesce(_morton_col(ix, iy, res), F.lit(res)).alias("cell_id")
 
 
 def cell_decode_cols(cell: Column) -> tuple[Column, Column, Column]:
     """Pure-Column cell decode: cell id → (ix, iy, res) grid
-    coordinates, bit-exact with :func:`cell_decode_np`. Stays inside
-    whole-stage codegen (bitwise only — cells are non-negative, so the
-    arithmetic shifts behave as logical)."""
-    res = cell.bitwiseAND(F.lit(RES_MASK))
-    code = F.shiftright(cell, RES_BITS)
-    ix = _compact_col(F.shiftright(code, 1))
-    iy = _compact_col(code)
-    return ix, iy, res
+    coordinates, bit-exact with :func:`cell_decode_np` for every cell
+    id at res ≤ :data:`MAX_RES`. Stays inside whole-stage codegen
+    (bitwise only — cells are non-negative, so the arithmetic shifts
+    behave as logical). The inverse of :func:`_spread_col` is a gather
+    by byte table: each byte of the interleaved code holds 4 bits of
+    each axis, and :data:`_COMPACT_LUT` returns both at once, x in the
+    low word and y in the high one. So ``cell`` appears 7 times in
+    all, where the mask cascade needed 32 copies per axis."""
+    lut = _lut_col(_COMPACT_LUT)
+    both = _lookup_col(lut, cell, RES_BITS)
+    for k in range(1, -(-2 * MAX_RES // 8)):
+        both = both.bitwiseOR(
+            F.shiftleft(_lookup_col(lut, cell, RES_BITS + 8 * k), 4 * k))
+    return (both.bitwiseAND(F.lit(0xFFFFFFFF)), F.shiftright(both, 32),
+            cell.bitwiseAND(F.lit(RES_MASK)))
 
 
 def cell_encode_grid_col(ix: Column, iy: Column, res: int) -> Column:
@@ -210,9 +267,7 @@ def cell_encode_grid_col(ix: Column, iy: Column, res: int) -> Column:
     and the oracle-side ``_morton_ctes`` replay."""
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    code = F.shiftleft(_spread_col(ix.cast("long")), 1) \
-        .bitwiseOR(_spread_col(iy.cast("long")))
-    return F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res)).alias("cell_id")
+    return _morton_col(ix.cast("long"), iy.cast("long"), res).alias("cell_id")
 
 
 def cell_kring_col(lon: Column, lat: Column, res: int,
@@ -230,11 +285,10 @@ def cell_kring_col(lon: Column, lat: Column, res: int,
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
     n = 1 << res
+    lut = _lut_col(_SPREAD_LUT)
 
     def encode(xs: Column, ys: Column) -> Column:
-        code = F.shiftleft(_spread_col(xs), 1).bitwiseOR(_spread_col(ys))
-        cell = F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res))
-        return F.when((ys >= 0) & (ys < n), cell)
+        return F.when((ys >= 0) & (ys < n), _morton_col(xs, ys, res, lut=lut))
 
     ix = _grid_col(lon, 180.0, 360.0, res)
     iy = _grid_col(lat, 90.0, 180.0, res)
@@ -288,7 +342,9 @@ def cell_encode_sql(lon_expr: str, lat_expr: str, res: int,
 
     Note: the spread expression textually duplicates its input, so pass
     simple column references (or pre-computed subquery columns), not
-    heavy expressions.
+    heavy expressions. It keeps the mask cascade on purpose, unlike the
+    byte-table :func:`cell_encode_col`: the DuckDB oracle stays an
+    independent formulation of the same bits.
     """
     n = float(1 << res)
     hi = (1 << res) - 1
@@ -364,10 +420,11 @@ def geohash_encode_col(lon: Column, lat: Column,
     total, nlon, nlat = _geohash_bits(precision)
     ix = _grid_col(lon, 180.0, 360.0, nlon)
     iy = _grid_col(lat, 90.0, 180.0, nlat)
+    lut = _lut_col(_SPREAD_LUT)
     if total % 2 == 0:
-        code = F.shiftleft(_spread_col(ix), 1).bitwiseOR(_spread_col(iy))
+        code = _interleave_col(ix, iy, nlon, lut)
     else:
-        code = _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
+        code = _interleave_col(iy, ix, nlon, lut)
     alpha = F.array(*[F.lit(ch) for ch in GEOHASH_ALPHABET])
     chars = [
         F.element_at(

@@ -22,6 +22,15 @@ Design rules (BASELINE.json north_star / SURVEY.md §2.3):
   at roughly 75-350 ns per array element on that host, so work over
   large arrays is exploded into rows instead (the PIP ray cast ran
   about 7x faster that way).
+- A Column kernel references each of its inputs a bounded number of
+  times, never a number that doubles per step. Inside one Project,
+  subexpression elimination hides repeated inputs, but Catalyst also
+  inlines projections into pushed-down and inferred filters (a join's
+  ``isnotnull``, a salted join's ``CASE WHEN cell_id IN (...)``), and
+  no subexpression elimination runs there: every copy is evaluated
+  per row. So the Morton spread is a byte-table lookup (one reference
+  per 8 bits) rather than the 5-step mask cascade (32 references per
+  axis); see :mod:`.cells`.
 - Joins are plain DataFrame equi-joins on ``cell_id`` so Catalyst picks
   broadcast vs shuffled hash vs SMJ (with AQE); the explicitly-salted
   variant for hot cells lives in :mod:`.salted`.
@@ -1083,7 +1092,7 @@ def explode_kring(df: DataFrame, lon, lat, res: int, radius: int,
     to exactly one full row, so no cell repeats), y clamps at the
     poles (out-of-range rows filtered). Rows whose ring is fully
     off-grid vanish, like an empty-array explode."""
-    from .cells import RES_BITS, _grid_col, _spread_col
+    from .cells import _morton_col
 
     n = 1 << res
     span = 2 * radius + 1
@@ -1096,8 +1105,7 @@ def explode_kring(df: DataFrame, lon, lat, res: int, radius: int,
          .withColumn("_koff", F.explode(offs)))
     xs = F.pmod(F.col("_kgx") + F.col("_koff.dx"), F.lit(n))
     ys = F.col("_kgy") + F.col("_koff.dy")
-    code = F.shiftleft(_spread_col(xs), 1).bitwiseOR(_spread_col(ys))
-    cell = F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res))
+    cell = _morton_col(xs, ys, res)
     return (d.where((ys >= 0) & (ys < F.lit(n)))
             .withColumn(out_col, cell)
             .drop("_kgx", "_kgy", "_koff"))
@@ -2347,7 +2355,7 @@ def cell_smooth(cells: DataFrame, res: int, radius: int = 1, *,
     Output: (cell_id, smoothed) — ``smoothed`` = Σ counts of the input
     cells within ``radius`` of the output cell.
     """
-    from .cells import RES_BITS, _spread_col, cell_decode_cols
+    from .cells import _morton_col, cell_decode_cols
 
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
@@ -2368,8 +2376,7 @@ def cell_smooth(cells: DataFrame, res: int, radius: int = 1, *,
          .withColumn("_soff", F.explode(offs)))
     xs = F.pmod(F.col("_sx") + F.col("_soff.dx"), F.lit(n))
     ys = F.col("_sy") + F.col("_soff.dy")
-    code = F.shiftleft(_spread_col(xs), 1).bitwiseOR(_spread_col(ys))
-    cell = F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res))
+    cell = _morton_col(xs, ys, res)
     return (d.where((ys >= 0) & (ys < F.lit(n)))
             .groupBy(cell.alias("cell_id"))
             .agg(F.sum("_sn").alias("smoothed")))
@@ -2400,7 +2407,7 @@ def buffer_cells(cells: DataFrame, res: int, radius: int = 1, *,
 
     Output: (id_col, cell_id) — distinct dilated cells per id.
     """
-    from .cells import RES_BITS, _spread_col, cell_decode_cols
+    from .cells import _morton_col, cell_decode_cols
 
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
@@ -2420,8 +2427,7 @@ def buffer_cells(cells: DataFrame, res: int, radius: int = 1, *,
          .withColumn("_soff", F.explode(offs)))
     xs = F.pmod(F.col("_sx") + F.col("_soff.dx"), F.lit(n))
     ys = F.col("_sy") + F.col("_soff.dy")
-    code = F.shiftleft(_spread_col(xs), 1).bitwiseOR(_spread_col(ys))
-    cell = F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res))
+    cell = _morton_col(xs, ys, res)
     return (d.where((ys >= 0) & (ys < F.lit(n)))
             .select(F.col(id_col), cell.alias("cell_id"))
             .distinct())
@@ -2929,7 +2935,7 @@ def getis_ord_gstar(cells: DataFrame, res: int, radius: int = 1, *,
     """
     from pyspark.sql.types import DoubleType, FloatType
 
-    from .cells import RES_BITS, _spread_col, cell_decode_cols
+    from .cells import _morton_col, cell_decode_cols
 
     fields = {f.name: f for f in cells.schema.fields}
     if isinstance(fields[value_col].dataType, (DoubleType, FloatType)):
@@ -2960,8 +2966,7 @@ def getis_ord_gstar(cells: DataFrame, res: int, radius: int = 1, *,
          .withColumn("_soff", F.explode(offs)))
     xs = F.pmod(F.col("_sx") + F.col("_soff.dx"), F.lit(n_grid))
     ys = F.col("_sy") + F.col("_soff.dy")
-    code = F.shiftleft(_spread_col(xs), 1).bitwiseOR(_spread_col(ys))
-    cell = F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res))
+    cell = _morton_col(xs, ys, res)
     ring = (d.where((ys >= 0) & (ys < F.lit(n_grid)))
             .groupBy(cell.alias("cell_id"))
             .agg(F.sum("_sv").alias("nbr_sum"),
@@ -3366,7 +3371,7 @@ def idw_interpolate(points: DataFrame, res: int, radius: int = 2, *,
     cells contributing, ``n_samples`` = raw sample rows behind them.
     """
     from pyspark.sql.types import DoubleType, FloatType
-    from .cells import RES_BITS, _grid_col, _spread_col
+    from .cells import _grid_col, _morton_col
 
     fields = {f.name: f for f in points.schema.fields}
     if isinstance(fields[value_col].dataType, (DoubleType, FloatType)):
@@ -3412,9 +3417,7 @@ def idw_interpolate(points: DataFrame, res: int, radius: int = 2, *,
     gaps = agg.join(cells.select(F.col("_sx").alias("_tx"),
                                  F.col("_sy").alias("_ty")),
                     ["_tx", "_ty"], "left_anti")
-    code = F.shiftleft(_spread_col(F.col("_tx")), 1).bitwiseOR(
-        _spread_col(F.col("_ty")))
-    cell = F.shiftleft(code, RES_BITS).bitwiseOR(F.lit(res))
+    cell = _morton_col(F.col("_tx"), F.col("_ty"), res)
     return gaps.select(cell.alias("cell_id"), "n_cells", "n_samples",
                        "num", "den",
                        (F.col("num").cast("double")

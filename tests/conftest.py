@@ -56,6 +56,19 @@ def spark():
     session.stop()
 
 
+@pytest.fixture(params=[True, False], ids=["ansi", "no_ansi"])
+def ansi_spark(spark, request):
+    """The session with ``spark.sql.ansi.enabled`` set true, then false;
+    the previous setting is restored after the test."""
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(request.param).lower())
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, old)
+
+
 @contextmanager
 def spark_jobs(spark):
     """Collect the ids of the Spark jobs started inside the block: the

@@ -8,13 +8,19 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyspark.sql import functions as F
+
 from kml2geojson_spark.spatial.cells import (
     MAX_RES,
     cell_bounds_np,
+    cell_decode_cols,
     cell_decode_np,
     cell_encode_col,
+    cell_encode_grid_col,
+    cell_encode_grid_np,
     cell_encode_np,
     cell_encode_sql,
+    cell_kring_col,
     cell_kring_np,
     cell_parent_np,
 )
@@ -118,6 +124,141 @@ def test_spark_sql_dialect_matches_numpy(spark):
         f"SELECT {expr} AS cell_id FROM pts_sql_enc").collect()])
     exp = cell_encode_np(LON[:100], LAT[:100], res)
     assert sorted(got.tolist()) == sorted(exp.tolist())
+
+
+# ---------------------------------------------------------------------------
+# Column forms: bit-exact with numpy at every resolution, ANSI on and off
+# ---------------------------------------------------------------------------
+
+ALL_RES = range(MAX_RES + 1)
+
+
+def _edge_points():
+    """(lon, lat) arrays: the poles and the antimeridian, every res's
+    grid lines 0, 1, n/2, n-1 and n with their float neighbours, points
+    far off the globe, and random points."""
+    lon, lat = [], []
+    for res in ALL_RES:
+        n = 1 << res
+        for k in sorted({0, 1, n // 2, n - 1, n}):
+            for step in (-np.inf, None, np.inf):
+                x = -180.0 + k * 360.0 / n
+                y = -90.0 + k * 180.0 / n
+                if step is not None:
+                    x, y = np.nextafter(x, step), np.nextafter(y, step)
+                lon.append(x)
+                lat.append(y)
+    for x in (-1000.0, -180.0, 0.0, 180.0, 1000.0):
+        for y in (-1000.0, -90.0, 0.0, 90.0, 1000.0):
+            lon.append(x)
+            lat.append(y)
+    rng = np.random.default_rng(26)
+    lon += list(rng.uniform(-180, 180, 50))
+    lat += list(rng.uniform(-90, 90, 50))
+    return np.array(lon), np.array(lat)
+
+
+def _points_df(spark, lon, lat):
+    return spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "i long, x double, y double")
+
+
+def test_cell_encode_col_bit_exact_every_res(ansi_spark):
+    lon, lat = _edge_points()
+    df = _points_df(ansi_spark, lon, lat)
+    rows = df.select("i", *[cell_encode_col(F.col("x"), F.col("y"), r)
+                            .alias(f"c{r}") for r in ALL_RES]) \
+        .orderBy("i").collect()
+    for r in ALL_RES:
+        got = np.array([row[f"c{r}"] for row in rows], dtype=np.int64)
+        assert (got == cell_encode_np(lon, lat, r)).all(), r
+
+
+def test_grid_encode_and_decode_cols_bit_exact_every_res(ansi_spark):
+    rng = np.random.default_rng(5)
+    grid = []
+    for r in ALL_RES:
+        n = 1 << r
+        edges = sorted({0, 1, n // 2, n - 1})
+        grid += [(r, ix, iy) for ix in edges for iy in edges]
+        grid += [(r, int(ix), int(iy)) for ix, iy in rng.integers(0, n, (8, 2))]
+    res, ix, iy = (np.array(c, dtype=np.int64) for c in zip(*grid))
+    df = ansi_spark.createDataFrame(grid, "r int, ix long, iy long")
+    parts = [df.where(F.col("r") == r).select(
+        "r", "ix", "iy", cell_encode_grid_col(F.col("ix"), F.col("iy"), r))
+        for r in ALL_RES]
+    cells = parts[0]
+    for p in parts[1:]:
+        cells = cells.unionAll(p)
+    dx, dy, dres = cell_decode_cols(F.col("cell_id"))
+    rows = cells.select("r", "ix", "iy", "cell_id", dx.alias("dx"),
+                        dy.alias("dy"), dres.alias("dres")).collect()
+    key = {(row.r, row.ix, row.iy): row for row in rows}
+    assert len(key) == len(set(grid))
+    for r in ALL_RES:
+        sel = res == r
+        exp = cell_encode_grid_np(ix[sel], iy[sel], r)
+        got = np.array([key[(r, a, b)].cell_id
+                        for a, b in zip(ix[sel], iy[sel])], dtype=np.int64)
+        assert (got == exp).all(), r
+        nx, ny, nr = cell_decode_np(exp)
+        got = [(key[(r, a, b)].dx, key[(r, a, b)].dy, key[(r, a, b)].dres)
+               for a, b in zip(ix[sel], iy[sel])]
+        assert got == list(zip(nx.tolist(), ny.tolist(), nr.tolist())), r
+
+
+# the poles, the antimeridian, the grid's last row and column, off-globe
+RING_LON = np.array([-180.0, 180.0, 0.0, 179.99, -45.5, 1000.0])
+RING_LAT = np.array([-90.0, 90.0, 0.0, 89.99, 12.25, -1000.0])
+
+
+def _ring_np(res, radius):
+    return [cell_kring_np(int(home), radius).tolist()
+            for home in cell_encode_np(RING_LON, RING_LAT, res)]
+
+
+@pytest.mark.parametrize("radius", [1, 5])
+def test_cell_kring_col_bit_exact_every_res(ansi_spark, radius):
+    """Unrolled literal offsets at radius 1, sequence/transform at 5."""
+    df = _points_df(ansi_spark, RING_LON, RING_LAT)
+    rows = df.select("i", *[cell_kring_col(F.col("x"), F.col("y"), r, radius)
+                            .alias(f"k{r}") for r in ALL_RES]) \
+        .orderBy("i").collect()
+    for r in ALL_RES:
+        assert [sorted(row[f"k{r}"]) for row in rows] == _ring_np(r, radius), r
+
+
+def test_explode_kring_bit_exact_every_res(ansi_spark):
+    from kml2geojson_spark.spatial.ops import explode_kring
+
+    df = _points_df(ansi_spark, RING_LON, RING_LAT)
+    parts = [explode_kring(df, F.col("x"), F.col("y"), r, 1)
+             .select(F.lit(r).alias("r"), "i", "cell_id") for r in ALL_RES]
+    rings = parts[0]
+    for p in parts[1:]:
+        rings = rings.unionAll(p)
+    got = {}
+    for row in rings.collect():
+        got.setdefault((row.r, row.i), []).append(row.cell_id)
+    for r in ALL_RES:
+        assert [sorted(got[(r, i)]) for i in range(len(RING_LON))] \
+            == _ring_np(r, 1), r
+
+
+def test_geohash_col_bit_exact_every_precision(ansi_spark):
+    from kml2geojson_spark.spatial.cells import (MAX_GEOHASH_PRECISION,
+                                                 geohash_encode_col,
+                                                 geohash_encode_np)
+    lon, lat = _edge_points()
+    precisions = range(1, MAX_GEOHASH_PRECISION + 1)
+    df = _points_df(ansi_spark, lon, lat)
+    rows = df.select("i", *[geohash_encode_col(F.col("x"), F.col("y"), p)
+                            .alias(f"g{p}") for p in precisions]) \
+        .orderBy("i").collect()
+    for p in precisions:
+        assert [row[f"g{p}"] for row in rows] == \
+            list(geohash_encode_np(lon, lat, p)), p
 
 
 # ---------------------------------------------------------------------------

@@ -947,3 +947,41 @@ def test_quadkey_whole_stage_codegen(spark):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
     assert plan.lstrip().startswith("*("), plan[:200]
+
+
+def test_salted_join_encodes_each_point_a_bounded_number_of_times(ansi_spark):
+    """Catalyst inlines the cell encode into the filters it pushes onto
+    the cached point scan (the salt's ``CASE WHEN cell_id IN (...)``),
+    where no subexpression elimination runs. The encode must reference
+    each coordinate once at res 8 (the mask-cascade spread held 64
+    copies per encode: 128 FLOORs in this plan), and cell_id keeps its
+    NOT NULL type, so no isnotnull(cell_id) filter re-runs the encode."""
+    from kml2geojson_spark.spatial.salted import salted_join
+    spark = ansi_spark
+    geoms = spark.range(100).selectExpr(
+        "id", "array(array(array(CAST(id AS DOUBLE) - 50, "
+        "CAST(id AS DOUBLE) / 2 - 25))) AS parts").persist()
+    try:
+        pts = geoms.select(F.col("id").alias("point_id"),
+                           F.col("parts")[0][0][0].alias("x"),
+                           F.col("parts")[0][0][1].alias("y"))
+        probe = encode_points(pts, 8)
+        assert not probe.schema["cell_id"].nullable
+        dim = spark.range(64).selectExpr("id * 32 + 8 AS cell_id",
+                                         "id AS zone")
+        joined = salted_join(probe, dim, "cell_id", n_salt=4, hot=[8, 40])
+        plan = _optimized(joined)
+        assert "InMemoryRelation" in plan, plan
+        assert plan.count("FLOOR(") <= 4, plan
+    finally:
+        geoms.unpersist()
+
+
+def test_cell_encode_col_res26_is_linear(spark):
+    """At res 26 the byte-table spread reads each coordinate 4 times
+    (26 bits, 8 per lookup): 8 FLOORs, against 64 for the cascade."""
+    from kml2geojson_spark.spatial.cells import cell_encode_col
+    df = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS x",
+                                    "CAST(id AS DOUBLE) AS y")
+    plan = _optimized(df.select(cell_encode_col(F.col("x"), F.col("y"), 26)))
+    assert plan.count("FLOOR(") <= 8, plan

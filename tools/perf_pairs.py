@@ -4,8 +4,12 @@
 
 Extracts ``--parent`` with ``git archive`` into a temporary directory and,
 per seed, runs ``perfbench/run.py`` on both sides, alternating which side
-goes first. Prints per pair the listed metrics and the per-job median of
-each ``info.job_cpu_s`` class, then each side's median and quartiles.
+goes first. Prints per pair the listed metrics, the unlisted end-to-end
+``job_s_p50`` and ``cpu_s_per_*`` (so a change that trades executor CPU
+for driver wall time shows up), and the per-job median of each
+``info.job_cpu_s`` class; then each side's median and quartiles, and
+per metric the median change/parent ratio and how many pairs read lower
+at the change.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import tempfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+UNLISTED = ("job_s_p50", "cpu_s_per_kdoc", "cpu_s_per_mpoint")
 
 
 def run(tree: Path, args, seed: int) -> dict:
@@ -30,6 +35,7 @@ def run(tree: Path, args, seed: int) -> dict:
         cwd=tree, capture_output=True, text=True, check=True).stdout.splitlines()
     info = json.loads(next(line for line in out if line.startswith("info "))[5:])
     row = {k: v["value"] for k, v in json.loads(out[-1])["metrics"].items()}
+    row.update({k: info["end_to_end"][k] for k in UNLISTED})
     for c in info["job_cpu_s"][0]:
         row[f"cpu.{c}"] = statistics.median(j[c] for j in info["job_cpu_s"])
     return row
@@ -60,6 +66,12 @@ def main() -> None:
             vals = [r[k] for r in rows]
             q = statistics.quantiles(vals, n=4) if len(vals) > 1 else vals * 3
             print(f"{name:6} {k:28} median {q[1]:.4f}  quartiles {q[0]:.4f} .. {q[2]:.4f}")
+    for k in sides["parent"][0]:
+        pairs = [(p[k], c[k]) for p, c in zip(sides["parent"], sides["change"])]
+        ratios = [c / p for p, c in pairs if p]
+        lower = sum(c < p for p, c in pairs)
+        print(f"pairs  {k:28} median ratio {statistics.median(ratios) if ratios else float('nan'):.4f}"
+              f"  change lower in {lower}/{len(pairs)}")
 
 
 if __name__ == "__main__":
