@@ -49,6 +49,10 @@ from . import compat  # reference-named drop-in API (kml2geojson v5.1.0)
 from . import bucketed  # co-located (pre-shuffled) table layout
 from . import rangejoin  # bucket-candidate interval (range) join
 
+if "pyspark.worker" in _sys.modules:
+    from .worker_imports import freeze_heap as _freeze_heap
+    _freeze_heap()  # after the package's own imports
+
 __version__ = "0.1.0"
 
 __all__ = [

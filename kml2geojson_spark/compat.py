@@ -68,10 +68,8 @@ def _as_node(node) -> Element:
         root = parse_kml(toxml())
         if getattr(node, "documentElement", None) is not None:
             return root  # minidom Document
-        for child in root.children:  # minidom element: unwrap self
-            if type(child) is Element:
-                return child
-        return root
+        # minidom element: unwrap self, the re-parsed document element
+        return Element(root.doc, 1) if len(root.doc.tags) > 1 else root
     raise TypeError(
         f"expected Element, KML string, or minidom node; got {type(node)!r}")
 

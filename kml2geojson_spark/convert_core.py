@@ -8,9 +8,13 @@ code itself is written fresh for this engine (shared parameterized style
 builder, iterative geometry extraction, spec-driven property extraction)
 rather than translated.
 
-These functions are pure Python over the :mod:`kmlparse` Element tree
-and run inside Arrow-batched Spark workers (`mapInPandas`); they carry
-no Spark dependency so they are unit-testable without a session.
+These functions are pure Python over the :mod:`kmlparse` flat preorder
+table: nodes are preorder numbers into a :class:`~.kmlparse.Document`,
+a subtree is a range of them, and each placemark's builder makes one
+pass over its range. The public builders take an
+:class:`~.kmlparse.Element` view. They run inside Arrow-batched Spark
+workers (``mapInArrow``) and carry no Spark dependency, so they are
+unit-testable without a session.
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ import re
 from typing import Optional
 
 from .constants import GEOTYPES, MULTI_CONTAINERS, STYLE_KEYS
-from .kmlparse import Element
+from .kmlparse import Document, Element
 
 _WS = re.compile(r"\s+")
 _FILENAME_JUNK = re.compile(r"(?u)[^-\w. ]")
@@ -33,13 +37,17 @@ def parse_coord_tuple(s: str) -> list[float]:
     """One KML coordinate tuple → floats. All whitespace is removed
     before splitting on commas, so ``' -112.2,36.0,2357 '`` →
     ``[-112.2, 36.0, 2357.0]`` (reference ``coords1``, main.py:83-93)."""
-    return [float(part) for part in _WS.sub("", s).split(",")]
+    # every whitespace character but " " is unprintable, so this skips
+    # the regex exactly when there is no whitespace to remove
+    if " " in s or not s.isprintable():
+        s = _WS.sub("", s)
+    return [float(part) for part in s.split(",")]
 
 
 def parse_coord_seq(s: str) -> list[list[float]]:
     """Whitespace-separated tuple sequence → list of float lists
     (reference ``coords``, main.py:96-110). Empty/blank input → []."""
-    return [parse_coord_tuple(tok) for tok in s.split()]
+    return [[float(part) for part in tok.split(",")] for tok in s.split()]
 
 
 def parse_gx_coord(s: str) -> list[float]:
@@ -55,12 +63,6 @@ def _float_or_none(s: str) -> Optional[float]:
         return float(s)
     except ValueError:
         return None
-
-
-def _elem_text(el: Optional[Element]) -> str:
-    """Text of an element that may be absent (the reference's
-    ``val(get1(...))`` pattern returns "" for None, main.py:54-62)."""
-    return el.text() if el is not None else ""
 
 
 def disambiguate_names(names: list[str], mark: str = "1") -> list[str]:
@@ -117,7 +119,7 @@ def color_and_opacity(s: str) -> tuple[str, float]:
 # Style catalogs
 # ---------------------------------------------------------------------------
 
-def _apply_poly_style(props: dict, poly: Element, K: dict) -> None:
+def _apply_poly_style(props: dict, doc: Document, poly: int, K: dict) -> None:
     """PolyStyle contribution to a style/property dict.
 
     Semantics from reference main.py:237-255 (and the identical inline
@@ -125,7 +127,7 @@ def _apply_poly_style(props: dict, poly: Element, K: dict) -> None:
     int stroke-width 1; the 0/1 ``fill``/``outline`` flags force-set on
     0 but only set-if-absent on 1.
     """
-    color = _elem_text(poly.find("color"))
+    color = doc.text(doc.find(poly, "color"))
     if color:
         rgb, opacity = color_and_opacity(color)
         props[K["fill_color"]] = rgb
@@ -133,29 +135,30 @@ def _apply_poly_style(props: dict, poly: Element, K: dict) -> None:
         props[K["stroke_color"]] = rgb
         props[K["stroke_opacity"]] = opacity
         props[K["stroke_width"]] = 1
-    fill_flag = _float_or_none(_elem_text(poly.find("fill")))
+    fill_flag = _float_or_none(doc.text(doc.find(poly, "fill")))
     if fill_flag == 0:
         props[K["fill_opacity"]] = fill_flag
     elif fill_flag == 1 and K["fill_opacity"] not in props:
         props[K["fill_opacity"]] = fill_flag
-    outline_flag = _float_or_none(_elem_text(poly.find("outline")))
+    outline_flag = _float_or_none(doc.text(doc.find(poly, "outline")))
     if outline_flag == 0:
         props[K["stroke_opacity"]] = outline_flag
     elif outline_flag == 1 and K["stroke_opacity"] not in props:
         props[K["stroke_opacity"]] = outline_flag
 
 
-def _apply_line_style(props: dict, line: Element, K: dict, *, width_truthy: bool) -> None:
+def _apply_line_style(props: dict, doc: Document, line: int, K: dict, *,
+                      width_truthy: bool) -> None:
     """LineStyle contribution. In style catalogs a width is applied when
     ``is not None`` (main.py:263-265) but in inline feature styles via
     truthiness — width 0 is dropped (main.py:446-448). The caller picks
     with ``width_truthy``."""
-    color = _elem_text(line.find("color"))
+    color = doc.text(doc.find(line, "color"))
     if color:
         rgb, opacity = color_and_opacity(color)
         props[K["stroke_color"]] = rgb
         props[K["stroke_opacity"]] = opacity
-    width = _float_or_none(_elem_text(line.find("width")))
+    width = _float_or_none(doc.text(doc.find(line, "width")))
     if (width if width_truthy else width is not None):
         props[K["stroke_width"]] = width
 
@@ -169,19 +172,20 @@ def build_style_catalog(root: Element, style_type: str) -> dict:
     IconStyle) and an IconStyle containing an ``<Icon>`` RESETS the
     accumulated props to just ``{iconUrl}`` (main.py:266-272)."""
     K = STYLE_KEYS[style_type]
+    doc = root.doc
     catalog = {}
-    for style in root.find_all("Style"):
+    for style in doc.find_all(root.i, "Style"):
         props: dict = {}
-        for poly in style.find_all("PolyStyle"):
-            _apply_poly_style(props, poly, K)
-        for line in style.find_all("LineStyle"):
-            _apply_line_style(props, line, K, width_truthy=False)
-        for icon_style in style.find_all("IconStyle"):
-            icon = icon_style.find("Icon")
-            if icon is None:
+        for poly in doc.find_all(style, "PolyStyle"):
+            _apply_poly_style(props, doc, poly, K)
+        for line in doc.find_all(style, "LineStyle"):
+            _apply_line_style(props, doc, line, K, width_truthy=False)
+        for icon_style in doc.find_all(style, "IconStyle"):
+            icon = doc.find(icon_style, "Icon")
+            if icon < 0:
                 continue
-            props = {K["icon_url"]: _elem_text(icon.find("href"))}
-        catalog["#" + style.attr("id")] = props
+            props = {K["icon_url"]: doc.text(doc.find(icon, "href"))}
+        catalog["#" + doc.attr(style, "id")] = props
     return catalog
 
 
@@ -189,103 +193,100 @@ def build_style_catalog(root: Element, style_type: str) -> dict:
 # Geometry
 # ---------------------------------------------------------------------------
 
-_CONTAINER_SET = frozenset(MULTI_CONTAINERS)
 _GEOTYPE_SET = frozenset(GEOTYPES)
+_GEOTYPE_RANK = {g: r for r, g in enumerate(GEOTYPES)}
+# the tags whose first descendant a placemark's builder reads
+_PROPERTY_TAGS = ("name", "description", "styleUrl", "PolyStyle",
+                  "LineStyle", "ExtendedData", "TimeSpan")
+_FIRST_TAGS = frozenset(_PROPERTY_TAGS + MULTI_CONTAINERS)
 
 
-def _collect_geo_nodes(node: Element):
-    """One preorder walk → (winning multi-container | None,
-    {geotype: [nodes in document order]}).
-
-    Equivalent to the reference's repeated ``get1``/``get`` subtree
-    scans (main.py:349-359) — container priority is by MULTI_CONTAINERS
-    order (not document position), each with its first (preorder)
-    occurrence — but ~8× fewer traversals per placemark.
-    """
-    containers: dict = {}
-    buckets: dict = {g: [] for g in GEOTYPES}
-    # inlined preorder walk (≡ node.iter_elements()): this runs once
-    # per placemark on the bulk path — the explicit stack avoids the
-    # generator frame suspension per element
-    Element_t = type(node)
-    stack = [c for c in reversed(node.children) if type(c) is Element_t]
-    while stack:
-        el = stack.pop()
-        t = el.tag
+def _scan(doc: Document, i: int) -> tuple[dict, list]:
+    """One pass over the subtree of ``i`` → ({tag: first descendant} for
+    the multi-containers and the property tags, [geometry nodes in
+    document order]). Replaces the reference's repeated
+    ``get1``/``get`` subtree scans (main.py:349-359, 405-459)."""
+    tags = doc.tags
+    first: dict = {}
+    geo = []
+    for j in range(i + 1, doc.ends[i]):
+        t = tags[j]
         if t in _GEOTYPE_SET:
-            buckets[t].append(el)
-        elif t in _CONTAINER_SET and t not in containers:
-            containers[t] = el
-        for c in reversed(el.children):
-            if type(c) is Element_t:
-                stack.append(c)
-    for tag in MULTI_CONTAINERS:
-        if tag in containers:
-            return containers[tag], buckets
-    return None, buckets
+            geo.append(j)
+        elif t in _FIRST_TAGS and t not in first:
+            first[t] = j
+    return first, geo
+
+
+def _geometry_nodes(doc: Document, first: dict, geo: list) -> list:
+    """The geometry nodes a placemark contributes, in output order.
+
+    The first MultiGeometry / MultiTrack / gx:MultiTrack descendant
+    (checked in that order, not by document position) wins and the
+    search descends into it, discarding sibling geometries
+    (main.py:349-354). The atomic geometries found are grouped in
+    GEOTYPES order, document order within a type (main.py:355-359)."""
+    while True:
+        for tag in MULTI_CONTAINERS:
+            c = first.get(tag)
+            if c is not None:
+                first, geo = _scan(doc, c)
+                break
+        else:
+            break
+    if len(geo) > 1:
+        tags = doc.tags
+        geo.sort(key=lambda j: _GEOTYPE_RANK[tags[j]])
+    return geo
+
+
+def _build_geometries(doc: Document, geo: list) -> tuple[list[dict], list[list[str]]]:
+    """Geometry nodes → (geoms, times).
+
+    Point → single tuple; LineString → tuple sequence; Polygon → every
+    descendant LinearRing in document order (no outer/inner
+    distinction); Track/gx:Track → LineString from ``<gx:coord>``
+    values zipped with ``<when>`` timestamps (main.py:360-392,
+    gx_coords main.py:126-143)."""
+    tags, texts = doc.tags, doc.texts
+    geoms: list[dict] = []
+    times: list[list[str]] = []
+    for g in geo:
+        t = tags[g]
+        if t == "Point":
+            geoms.append({"type": "Point", "coordinates": parse_coord_tuple(
+                doc.text(doc.find(g, "coordinates")))})
+        elif t == "LineString":
+            geoms.append({"type": "LineString", "coordinates": parse_coord_seq(
+                doc.text(doc.find(g, "coordinates")))})
+        elif t == "Polygon":
+            geoms.append({"type": "Polygon", "coordinates": [
+                parse_coord_seq(doc.text(doc.find(ring, "coordinates")))
+                for ring in doc.find_all(g, "LinearRing")]})
+        else:  # Track / gx:Track
+            geoms.append({"type": "LineString", "coordinates": [
+                parse_gx_coord(texts[c].strip())
+                for c in doc.find_all(g, "gx:coord")]})
+            whens = [texts[w].strip() for w in doc.find_all(g, "when")]
+            if whens:
+                times.append(whens)
+    return geoms, times
 
 
 def _extract_geometries(node: Element) -> tuple[list[dict], list[list[str]]]:
-    """Geometry extraction for one placemark-ish node → (geoms, times).
-
-    Reference ``build_geometry`` (main.py:343-394):
-
-    - The first MultiGeometry / MultiTrack / gx:MultiTrack descendant
-      (checked in that order) wins and recursion descends into it,
-      discarding sibling geometries (main.py:349-354).
-    - Otherwise atomic geometries are collected grouped by GEOTYPES
-      order — NOT document order (main.py:355-359).
-    - Point → single tuple; LineString → tuple sequence; Polygon → every
-      descendant LinearRing in document order (no outer/inner
-      distinction); Track/gx:Track → LineString from ``<gx:coord>``
-      values zipped with ``<when>`` timestamps (main.py:360-392,
-      gx_coords main.py:126-143).
-    """
-    container, buckets = _collect_geo_nodes(node)
-    if container is not None:
-        return _extract_geometries(container)
-
-    geoms: list[dict] = []
-    times: list[list[str]] = []
-    for geotype in GEOTYPES:
-        for geonode in buckets[geotype]:
-            if geotype == "Point":
-                geoms.append({
-                    "type": "Point",
-                    "coordinates": parse_coord_tuple(
-                        _elem_text(geonode.find("coordinates"))),
-                })
-            elif geotype == "LineString":
-                geoms.append({
-                    "type": "LineString",
-                    "coordinates": parse_coord_seq(
-                        _elem_text(geonode.find("coordinates"))),
-                })
-            elif geotype == "Polygon":
-                geoms.append({
-                    "type": "Polygon",
-                    "coordinates": [
-                        parse_coord_seq(_elem_text(ring.find("coordinates")))
-                        for ring in geonode.find_all("LinearRing")
-                    ],
-                })
-            else:  # Track / gx:Track
-                geoms.append({
-                    "type": "LineString",
-                    "coordinates": [
-                        parse_gx_coord(c.text())
-                        for c in geonode.find_all("gx:coord")
-                    ],
-                })
-                whens = [w.text() for w in geonode.find_all("when")]
-                if whens:
-                    times.append(whens)
-    return geoms, times
+    """Geometry extraction for one placemark-ish node → (geoms, times)
+    (reference ``build_geometry``, main.py:343-394); see
+    :func:`_geometry_nodes` and :func:`_build_geometries`."""
+    doc = node.doc
+    return _build_geometries(doc, _geometry_nodes(doc, *_scan(doc, node.i)))
 
 
 # ---------------------------------------------------------------------------
 # Features, collections, layers
 # ---------------------------------------------------------------------------
+
+_SVG_KEYS = STYLE_KEYS["svg"]
+
 
 def build_feature_dict(node: Element) -> Optional[dict]:
     """One Placemark → GeoJSON Feature dict, or None when it has no
@@ -301,49 +302,53 @@ def build_feature_dict(node: Element) -> Optional[dict]:
     (main.py:460-465); multiple geometries wrap in a
     GeometryCollection; a placemark ``id`` attribute becomes the
     feature id (main.py:481-482)."""
-    geoms, times = _extract_geometries(node)
+    return _feature(node.doc, node.i)
+
+
+def _feature(doc: Document, p: int) -> Optional[dict]:
+    first, geo = _scan(doc, p)
+    geoms, times = _build_geometries(doc, _geometry_nodes(doc, first, geo))
     if not geoms:
         return None
 
-    K = STYLE_KEYS["svg"]
+    texts = doc.texts
     props: dict = {}
-
-    name_el = node.find("name")
-    if name_el is not None:
-        name = name_el.text()
+    j = first.get("name")
+    if j is not None:
+        name = texts[j].strip()
         if name:
             props["name"] = name
-    desc_el = node.find("description")
-    if desc_el is not None:
-        desc = desc_el.text()
+    j = first.get("description")
+    if j is not None:
+        desc = texts[j].strip()
         if desc:
             props["description"] = desc
-    style_url_el = node.find("styleUrl")
-    if style_url_el is not None:
-        style_url = style_url_el.text()
+    j = first.get("styleUrl")
+    if j is not None:
+        style_url = texts[j].strip()
         # reference indexes style_url[0] (main.py:417) — an empty
         # styleUrl crashes there; we normalize "" → "#" instead of
         # failing the whole partition.
         if not style_url.startswith("#"):
             style_url = "#" + style_url
         props["styleUrl"] = style_url
-    poly = node.find("PolyStyle")
-    if poly is not None:
-        _apply_poly_style(props, poly, K)
-    line = node.find("LineStyle")
-    if line is not None:
-        _apply_line_style(props, line, K, width_truthy=True)
-    ext = node.find("ExtendedData")
-    if ext is not None:
-        for data in ext.find_all("Data"):
-            props[data.attr("name")] = _elem_text(data.find("value"))
-        for simple in ext.find_all("SimpleData"):
-            props[simple.attr("name")] = simple.text()
-    span = node.find("TimeSpan")
-    if span is not None:
+    j = first.get("PolyStyle")
+    if j is not None:
+        _apply_poly_style(props, doc, j, _SVG_KEYS)
+    j = first.get("LineStyle")
+    if j is not None:
+        _apply_line_style(props, doc, j, _SVG_KEYS, width_truthy=True)
+    j = first.get("ExtendedData")
+    if j is not None:
+        for data in doc.find_all(j, "Data"):
+            props[doc.attr(data, "name")] = doc.text(doc.find(data, "value"))
+        for simple in doc.find_all(j, "SimpleData"):
+            props[doc.attr(simple, "name")] = texts[simple].strip()
+    j = first.get("TimeSpan")
+    if j is not None:
         props["timeSpan"] = {
-            "begin": _elem_text(span.find("begin")),
-            "end": _elem_text(span.find("end")),
+            "begin": doc.text(doc.find(j, "begin")),
+            "end": doc.text(doc.find(j, "end")),
         }
     if times:
         props["times"] = times[0] if len(times) == 1 else times
@@ -353,8 +358,9 @@ def build_feature_dict(node: Element) -> Optional[dict]:
         feature["geometry"] = geoms[0]
     else:
         feature["geometry"] = {"type": "GeometryCollection", "geometries": geoms}
-    if node.attr("id"):
-        feature["id"] = node.attr("id")
+    fid = doc.attr(p, "id")
+    if fid:
+        feature["id"] = fid
     return feature
 
 
@@ -363,31 +369,21 @@ def iter_point_coords(root: Element):
     for every Point geometry of every geometry-bearing placemark, with
     indices identical to the full feature builder (placemark document
     order; geometry-less placemarks skipped per main.py:402-404; geom
-    order = :func:`_extract_geometries`). Skips all property work AND
-    the coordinate parsing of non-Point geometries (their count and
-    order still contribute to geom_idx) — several × cheaper than
-    building feature dicts when only point coordinates are needed."""
+    order = :func:`_geometry_nodes`). Skips all property work AND the
+    coordinate parsing of non-Point geometries (their count and order
+    still contribute to geom_idx)."""
+    doc = root.doc
+    tags = doc.tags
     feature_idx = 0
-    for placemark in root.find_all("Placemark"):
-        node = placemark
-        container, buckets = _collect_geo_nodes(node)
-        while container is not None:
-            node = container
-            container, buckets = _collect_geo_nodes(node)
-        n_geoms = sum(len(buckets[g]) for g in GEOTYPES)
-        if n_geoms == 0:
+    for p in doc.find_all(root.i, "Placemark"):
+        geo = _geometry_nodes(doc, *_scan(doc, p))
+        if not geo:
             continue
-        geom_idx = 0
-        for geotype in GEOTYPES:
-            for geonode in buckets[geotype]:
-                if geotype == "Point":
-                    # find_first: probed once per Point — skip the
-                    # subtree-index build the amortized find() pays for
-                    coords = parse_coord_tuple(
-                        _elem_text(geonode.find_first("coordinates")))
-                    if len(coords) >= 2:
-                        yield feature_idx, geom_idx, coords
-                geom_idx += 1
+        for geom_idx, g in enumerate(geo):
+            if tags[g] == "Point":
+                coords = parse_coord_tuple(doc.text(doc.find(g, "coordinates")))
+                if len(coords) >= 2:
+                    yield feature_idx, geom_idx, coords
         feature_idx += 1
 
 
@@ -395,9 +391,13 @@ def build_feature_collection_dict(node: Element, name: Optional[str] = None) -> 
     """All descendant Placemarks (recursive) → FeatureCollection;
     geometry-less placemarks dropped; optional ``name`` key
     (reference ``build_feature_collection``, main.py:487-508)."""
+    return _feature_collection(node.doc, node.i, name)
+
+
+def _feature_collection(doc: Document, i: int, name: Optional[str]) -> dict:
     features = []
-    for placemark in node.find_all("Placemark"):
-        feature = build_feature_dict(placemark)
+    for p in doc.find_all(i, "Placemark"):
+        feature = _feature(doc, p)
         if feature is not None:
             features.append(feature)
     fc: dict = {"type": "FeatureCollection", "features": features}
@@ -413,17 +413,18 @@ def build_layers_dicts(root: Element, *, disambiguate: bool = True) -> list[dict
     to the root as a single layer when no folder qualifies; layer names
     pass through :func:`disambiguate_names`
     (reference ``build_layers``, main.py:511-545)."""
+    doc = root.doc
     layers: list[dict] = []
     names: list[str] = []
-    for folder in root.find_all("Folder"):
-        name = _elem_text(folder.find("name"))
-        fc = build_feature_collection_dict(folder, name)
+    for folder in doc.find_all(root.i, "Folder"):
+        name = doc.text(doc.find(folder, "name"))
+        fc = _feature_collection(doc, folder, name)
         if fc["features"]:
             layers.append(fc)
             names.append(name)
     if not layers:
-        name = _elem_text(root.find("name"))
-        fc = build_feature_collection_dict(root, name)
+        name = doc.text(doc.find(root.i, "name"))
+        fc = _feature_collection(doc, root.i, name)
         if fc["features"]:
             layers.append(fc)
             names.append(name)

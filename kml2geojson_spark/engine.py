@@ -146,6 +146,11 @@ def _validate_style_type(style_type) -> None:
         raise ValueError(f"style type must be one of {list(STYLE_TYPES)}")
 
 
+# json.dumps' bytes for the acyclic dicts the builders make, without the
+# per-container cycle check
+_json_encode = json.JSONEncoder(check_circular=False).encode
+
+
 def _convert_batch(doc_iter, feature_collection_name, style_type,
                    separate_folders) -> pa.RecordBatch:
     """Shared conversion kernel: (doc_id, kml_str) iterator → one
@@ -159,9 +164,9 @@ def _convert_batch(doc_iter, feature_collection_name, style_type,
             separate_folders=separate_folders,
         )
         doc_ids.append(doc_id)
-        style_jsons.append(None if style is None else json.dumps(style))
+        style_jsons.append(None if style is None else _json_encode(style))
         name_lists.append([la.get("name", "") for la in layers])
-        layer_lists.append([json.dumps(la) for la in layers])
+        layer_lists.append([_json_encode(la) for la in layers])
     return pa.RecordBatch.from_arrays(
         [pa.array(doc_ids, pa.string()),
          pa.array(style_jsons, pa.string()),
@@ -254,8 +259,8 @@ def extract_features(
                     layer_name = layer.get("name", "")
                     for feature_idx, feature in enumerate(layer["features"]):
                         props = feature["properties"]
-                        fjson = json.dumps(feature)
-                        pjson = json.dumps(props)
+                        fjson = _json_encode(feature)
+                        pjson = _json_encode(props)
                         for geom_idx, geom in enumerate(
                                 _atomic_geometries(feature["geometry"])):
                             rows["doc_id"].append(doc_id)
@@ -350,7 +355,7 @@ def _tile_counts_batch(doc_iter, res: int) -> pa.RecordBatch:
     for docord, (_doc_id, kml_str) in enumerate(doc_iter):
         # three lanes, each bit-equal by construction + differential
         # tests, each returning None whenever unsure: expat-validated
-        # relevant-tag scan → full token state machine → Element tree
+        # relevant-tag scan → full token state machine → parse table
         pts = simple_point_xy(kml_str)
         if pts is None:
             pts = stream_point_xy(kml_str)
@@ -508,7 +513,7 @@ def extract_styles(df: DataFrame, style_type: str = "svg") -> DataFrame:
                 for style_id, props in catalog.items():
                     doc_ids.append(doc_id)
                     style_ids.append(style_id)
-                    style_jsons.append(json.dumps(props))
+                    style_jsons.append(_json_encode(props))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(doc_ids, pa.string()),
                  pa.array(style_ids, pa.string()),

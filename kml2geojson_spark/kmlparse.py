@@ -1,32 +1,45 @@
-"""Lightweight lxml-free state-machine KML/XML parser.
+"""Lightweight lxml-free KML/XML parser into a flat preorder table.
 
-A single compiled-regex tokenizer drives a push-down tree builder — no
-``xml.dom.minidom`` (the reference parses with minidom at
-/root/reference/kml2geojson/main.py:586), no lxml. The produced
-:class:`Element` tree reproduces the minidom behaviors the reference
-relies on:
+A document parses once into a :class:`Document`: parallel lists indexed
+by preorder number, one entry per element —
 
-- ``getElementsByTagName`` == :meth:`Element.find_all`: preorder
-  document-order descendant search by *literal* tag name — namespace
-  prefixes like ``gx:Track`` are matched verbatim (minidom is
-  prefix-literal; reference main.py:27-31).
-- ``node.firstChild.wholeText.strip()`` == :meth:`Element.text`:
-  concatenation of the leading run of logically-adjacent Text/CDATA
-  children (a comment or child element breaks adjacency), stripped;
-  empty string when the first child is absent or not character data
-  (reference main.py:54-62 ``val``).
+- ``tags[i]``: the literal tag name (``gx:Track`` stays ``gx:Track``);
+- ``ends[i]``: one past the last preorder number of ``i``'s subtree, so
+  the descendants of ``i`` are exactly ``i+1 .. ends[i]-1``;
+- ``texts[i]``: the element's leading character data, unstripped;
+- ``attrs``: a sparse ``{i: {name: value}}`` for elements that have
+  attributes.
+
+Entry 0 is a virtual document root spanning the whole table, so a
+search from the root includes the document element, like the
+reference's ``get(root, ...)`` on a minidom ``Document``
+(/root/reference/kml2geojson/main.py:586). No ``xml.dom.minidom``, no
+lxml, no per-node objects: the table reproduces the minidom behaviours
+the reference relies on —
+
+- ``getElementsByTagName`` == :meth:`Document.find_all`: preorder
+  descendant search by *literal* tag name (minidom is prefix-literal;
+  reference main.py:27-31) — one scan of the node's preorder range.
+- ``node.firstChild.wholeText.strip()`` == :meth:`Document.text`: the
+  run of character data (text and CDATA) before the element's first
+  child element or comment, stripped; processing instructions do not
+  break it (reference main.py:54-62 ``val``).
 - ``getAttribute`` == :meth:`Element.attr`: "" when missing
   (reference main.py:46-51).
 
-The tokenizer handles CDATA sections, XML comments (which appear inside
-geometry containers in real KML), processing instructions, DOCTYPE
-declarations, self-closing tags, and the five standard XML entities plus
-numeric character references.
+:class:`Element` is the public node type, a two-field view
+``(doc, i)`` over the table.
 
-This module is deliberately dependency-free and allocation-light: it is
-executed per-document inside Arrow-batched ``mapInPandas`` workers, so
-documents stream through in columnar batches and the only per-row Python
-is this parser (the engine never uses row-at-a-time Python UDFs).
+Two lanes fill the same table (asserted on the regression-lock corpus):
+stdlib expat for well-formed input, and a compiled-regex tokenizer that
+is lenient on malformed input (see :func:`parse_kml`). The tokenizer
+handles CDATA sections, comments, processing instructions, DOCTYPE
+declarations, self-closing tags, and the five standard XML entities
+plus numeric character references.
+
+This module runs per document inside Arrow-batched ``mapInArrow``
+workers, where the per-row Python is this parser and the builders in
+:mod:`convert_core`; the engine never uses row-at-a-time Python UDFs.
 """
 
 from __future__ import annotations
@@ -63,12 +76,7 @@ _ENTITY = re.compile(r"&(#x?[0-9A-Fa-f]+|[A-Za-z][A-Za-z0-9]*);")
 
 _NAMED_ENTITIES = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
 
-# Child-node kind tags (kept as tiny tuples to minimize allocation):
-# Element instance        -> element child
-# ("t", str)              -> text node (entities decoded)
-# ("c", str)              -> CDATA section (verbatim)
-# ("#",)                  -> comment (breaks text adjacency, else ignored)
-_COMMENT_NODE = ("#",)
+ROOT_TAG = "#document"
 
 
 def _decode_entities(s: str) -> str:
@@ -92,245 +100,250 @@ def _decode_entities(s: str) -> str:
     return _ENTITY.sub(sub, s)
 
 
+class Document:
+    """One parsed document as a flat preorder table (see the module
+    docstring). Node 0 is the virtual root; every search takes the
+    preorder number of the node it searches under and returns preorder
+    numbers, ``-1`` for "none"."""
+
+    __slots__ = ("tags", "ends", "texts", "attrs")
+
+    def __init__(self, tags: list, ends: list, texts: list, attrs: dict):
+        self.tags = tags
+        self.ends = ends
+        self.texts = texts
+        self.attrs = attrs
+
+    def find(self, i: int, tag: str) -> int:
+        """First descendant of ``i`` tagged ``tag`` in preorder, or -1."""
+        try:
+            return self.tags.index(tag, i + 1, self.ends[i])
+        except ValueError:
+            return -1
+
+    def find_all(self, i: int, tag: str) -> list:
+        """Every descendant of ``i`` tagged ``tag``, in preorder."""
+        tags = self.tags
+        return [j for j in range(i + 1, self.ends[i]) if tags[j] == tag]
+
+    def text(self, i: int) -> str:
+        """Leading character data of ``i``, stripped; "" for -1."""
+        return self.texts[i].strip() if i >= 0 else ""
+
+    def attr(self, i: int, name: str) -> str:
+        """Attribute value, "" when absent (minidom getAttribute)."""
+        a = self.attrs.get(i)
+        return a.get(name, "") if a else ""
+
+
 class Element:
-    """One XML element: literal tag name, attribute dict, ordered children."""
+    """A node of a parsed document: the view ``(doc, i)`` of preorder
+    number ``i`` in ``doc``'s table."""
 
-    __slots__ = ("tag", "attributes", "children", "_tag_index")
+    __slots__ = ("doc", "i")
 
-    def __init__(self, tag: str, attributes: Optional[dict] = None):
-        self.tag = tag
-        self.attributes = attributes if attributes is not None else {}
-        self.children: list = []
-        self._tag_index: Optional[dict] = None
+    def __init__(self, doc: Document, i: int):
+        self.doc = doc
+        self.i = i
+
+    @property
+    def tag(self) -> str:
+        return self.doc.tags[self.i]
+
+    @property
+    def attributes(self) -> dict:
+        return self.doc.attrs.get(self.i, {})
+
+    def __eq__(self, other) -> bool:
+        return (type(other) is Element and other.doc is self.doc
+                and other.i == self.i)
+
+    def __hash__(self) -> int:
+        return hash((id(self.doc), self.i))
 
     # -- navigation ------------------------------------------------------
 
     def iter_elements(self) -> Iterator["Element"]:
         """Preorder traversal of descendant elements (not self)."""
-        stack = [c for c in reversed(self.children) if type(c) is Element]
-        while stack:
-            el = stack.pop()
-            yield el
-            for c in reversed(el.children):
-                if type(c) is Element:
-                    stack.append(c)
-
-    def _index(self) -> dict:
-        """Lazy descendant-tag index (document order). The tree is
-        immutable after parsing, so one traversal amortizes the ~10
-        ``find`` calls the feature builder makes per placemark — the
-        repeated-subtree-rescan cost the reference pays on every
-        ``getElementsByTagName`` (main.py:31) is paid once here."""
-        idx = self._tag_index
-        if idx is None:
-            idx = {}
-            # inlined preorder walk (≡ iter_elements): saves the
-            # generator suspension per element on the once-per-document
-            # whole-tree index build
-            stack = [c for c in reversed(self.children)
-                     if type(c) is Element]
-            while stack:
-                el = stack.pop()
-                lst = idx.get(el.tag)
-                if lst is None:
-                    idx[el.tag] = [el]
-                else:
-                    lst.append(el)
-                for c in reversed(el.children):
-                    if type(c) is Element:
-                        stack.append(c)
-            self._tag_index = idx
-        return idx
+        doc = self.doc
+        return (Element(doc, j) for j in range(self.i + 1, doc.ends[self.i]))
 
     def find_all(self, tag: str) -> list["Element"]:
         """All descendant elements with the given literal tag, document order."""
-        lst = self._index().get(tag)
-        return list(lst) if lst else []
+        doc = self.doc
+        return [Element(doc, j) for j in doc.find_all(self.i, tag)]
 
     def find(self, tag: str) -> Optional["Element"]:
         """First descendant element with the given literal tag, else None."""
-        lst = self._index().get(tag)
-        return lst[0] if lst else None
-
-    def find_first(self, tag: str) -> Optional["Element"]:
-        """Same result as :meth:`find` (first matching descendant in
-        preorder) but via an early-exit walk with NO index build — the
-        right call when a node is probed exactly once (the bulk tiling
-        path's per-Point ``coordinates`` lookup), where building and
-        caching the full subtree index is pure overhead. Uses a cached
-        index when one already exists."""
-        if self._tag_index is not None:
-            lst = self._tag_index.get(tag)
-            return lst[0] if lst else None
-        for el in self.iter_elements():
-            if el.tag == tag:
-                return el
-        return None
+        j = self.doc.find(self.i, tag)
+        return Element(self.doc, j) if j >= 0 else None
 
     # -- value access ----------------------------------------------------
 
     def attr(self, name: str) -> str:
         """Attribute value, "" when absent (minidom getAttribute)."""
-        return self.attributes.get(name, "")
+        return self.doc.attr(self.i, name)
 
     def text(self) -> str:
-        """Leading run of adjacent Text/CDATA children, concatenated and
-        stripped — the reference's ``val`` (main.py:54-62 via minidom
-        ``firstChild.wholeText``). Comments and child elements terminate
-        the run; a non-character-data first child yields ""."""
-        parts = []
-        for child in self.children:
-            t = type(child)
-            if t is tuple:
-                if child[0] == "#":  # comment breaks logical adjacency
-                    break
-                parts.append(child[1])
-            else:
-                break
-        if not parts:
-            return ""
-        return "".join(parts).strip()
+        """Leading character-data run, stripped — the reference's
+        ``val`` (main.py:54-62 via minidom ``firstChild.wholeText``);
+        "" when the first child is an element or a comment."""
+        return self.doc.texts[self.i].strip()
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
-        return f"<Element {self.tag} attrs={self.attributes} children={len(self.children)}>"
+        return f"<Element {self.tag} #{self.i} attrs={self.attributes}>"
 
 
 def parse_kml(source: str) -> Element:
-    """Parse a KML/XML string into an :class:`Element` tree.
+    """Parse a KML/XML string; returns the virtual document root
+    (preorder number 0, tag ``"#document"``), the equivalent of
+    minidom's ``Document`` node.
 
-    Returns a synthetic document-root Element (tag ``None``-like sentinel
-    ``"#document"``) whose descendants are the document's elements — the
-    equivalent of minidom's ``Document`` node, so ``find_all`` from the
-    root searches the entire document like the reference's
-    ``get(root, ...)`` calls on the parsed Document (main.py:586).
-
-    Two lanes, identical trees (asserted differentially on the golden
-    fixtures, the synthetic corpus, and the grammar-fuzz corpus):
-    well-formed documents are built by :func:`_parse_kml_expat` (stdlib
-    expat tokenizes and normalizes in C — attribute-value normalization,
-    entity expansion, §2.11 EOL handling — so Python runs only the three
-    tree-building callbacks, measured ~1.9× the regex tokenizer);
+    Two lanes, identical tables: well-formed documents are read by
+    :func:`_parse_kml_expat` (stdlib expat tokenizes and normalizes in
+    C — attribute-value normalization, entity expansion, §2.11 EOL
+    handling — so Python runs only the table-filling callbacks);
     everything expat rejects falls back to :func:`_parse_kml_regex`,
     which is lenient on mismatched close tags (pops to the nearest
     matching open element; ignores unmatched closes) — real-world KML
     is messy and the engine processes untrusted corpora; strictness is
-    not worth a failed partition at 10^12-document scale.
+    not worth a failed partition.
     """
     root = _parse_kml_expat(source)
-    if root is not None:
-        return root
-    return _parse_kml_regex(source)
+    return root if root is not None else _parse_kml_regex(source)
 
 
 def _parse_kml_expat(source: str) -> Optional[Element]:
-    """Expat-built Element tree, or ``None`` when the document is
-    outside the envelope where expat's output provably matches the
-    regex tokenizer's: any DOCTYPE bails (an internal DTD subset could
-    declare entities that expat would expand but the regex lane leaves
+    """The root of the expat-filled table, or ``None`` when the document is outside
+    the envelope where expat's output provably matches the regex
+    tokenizer's: any DOCTYPE bails (an internal DTD subset could declare
+    entities that expat would expand but the regex lane leaves
     verbatim), and any well-formedness error bails to the lenient lane
     (mismatched/unclosed tags, undefined entities, ``<`` in attribute
     values, text outside the root, invalid character references, ...).
 
-    Known inert representation differences vs the regex lane (no
-    behavioral surface reads them — ``Element.text()`` joins adjacent
-    character-data children and ``find*``/traversal skip non-Elements):
-    expat may split one logical text run into several ``("t", ...)``
-    children (buffer boundaries), and it drops ignorable whitespace
-    between the XML declaration and the root element, where the regex
-    lane keeps a root-level text child."""
+    Character data appends to the open element's leading run until its
+    first child element starts or a comment arrives. Expat may deliver
+    one run in several pieces (buffer boundaries, CDATA sections); they
+    are joined here."""
     if "<!DOCTYPE" in source:
         return None
-    root = Element("#document")
-    stack = [root]
-    in_cdata = False
+    tags = [ROOT_TAG]
+    ends = [0]
+    texts = [""]
+    attrs: dict = {}
+    stack = [0]
+    run = -1  # element whose leading run is still open, or -1
 
-    def start(name, attrs):
-        el = Element(name, attrs)
-        stack[-1].children.append(el)
-        stack.append(el)
+    def start(name, a, _tag=tags.append, _end=ends.append,
+              _text=texts.append, _push=stack.append):
+        nonlocal run
+        run = len(tags)
+        _push(run)
+        _tag(name)
+        _end(0)
+        _text("")
+        if a:
+            attrs[run] = a
 
-    def end(_name):
-        stack.pop()
+    def end(_name, _pop=stack.pop):
+        nonlocal run
+        run = -1
+        ends[_pop()] = len(tags)
 
     def chardata(d):
-        stack[-1].children.append(("c", d) if in_cdata else ("t", d))
-
-    def cd_start():
-        nonlocal in_cdata
-        in_cdata = True
-
-    def cd_end():
-        nonlocal in_cdata
-        in_cdata = False
+        if run >= 0:
+            texts[run] += d
 
     def comment(_d):
-        stack[-1].children.append(_COMMENT_NODE)
+        nonlocal run
+        run = -1
 
     p = _expat.ParserCreate()
     p.buffer_text = True
     p.StartElementHandler = start
     p.EndElementHandler = end
     p.CharacterDataHandler = chardata
-    p.StartCdataSectionHandler = cd_start
-    p.EndCdataSectionHandler = cd_end
     p.CommentHandler = comment
     try:
         p.Parse(source, True)
     except _expat.ExpatError:
         return None
-    return root
+    ends[0] = len(tags)
+    return Element(Document(tags, ends, texts, attrs), 0)
 
 
 def _parse_kml_regex(source: str) -> Element:
-    """The original regex-tokenizer tree builder — the lenient lane
-    (see :func:`parse_kml`)."""
+    """The root of the regex-tokenizer table — the lenient lane (see
+    :func:`parse_kml`)."""
     # XML 1.0 §2.11 end-of-line normalization (\r\n and lone \r → \n),
     # which minidom — and therefore the reference — applies to the whole
     # input including CDATA; Windows-authored KML differs without this.
     if "\r" in source:
         source = source.replace("\r\n", "\n").replace("\r", "\n")
-    root = Element("#document")
-    stack = [root]
+    tags = [ROOT_TAG]
+    ends = [0]
+    texts = [""]
+    attrs: dict = {}
+    stack = [0]
+    run = -1  # element whose leading run is still open, or -1
     # Dispatch on m.lastindex (one attribute read) instead of probing
     # named groups: each alternation branch ends in a distinct group —
     # the open branch always participates through `selfclose` (an
     # always-matching `/?`), so its lastindex is _GI_SELFCLOSE.
-    # (m.lastgroup would be masked the same way, but to the RIGHT value.)
     for m in _TOKEN.finditer(source):
         li = m.lastindex
         if li == _GI_TEXT:
-            s = m.group(_GI_TEXT)
-            stack[-1].children.append(
-                ("t", _decode_entities(s) if "&" in s else s))
+            if run >= 0:
+                s = m.group(_GI_TEXT)
+                texts[run] += _decode_entities(s) if "&" in s else s
         elif li == _GI_SELFCLOSE:
             open_tag, attrs_src, selfclose = m.group(
                 _GI_OPEN, _GI_ATTRS, _GI_SELFCLOSE)
-            attrs = {}
+            i = len(tags)
+            tags.append(open_tag)
+            texts.append("")
             if attrs_src:
+                a = {}
                 for am in _ATTR.finditer(attrs_src):
                     v = am.group(2) if am.group(2) is not None else am.group(3)
                     # XML 1.0 §3.3.3 attribute-value normalization:
                     # literal tab/newline become spaces (minidom parity)
                     if "\t" in v or "\n" in v:
                         v = v.replace("\t", " ").replace("\n", " ")
-                    attrs[am.group(1)] = _decode_entities(v)
-            el = Element(open_tag, attrs)
-            stack[-1].children.append(el)
-            if not selfclose:
-                stack.append(el)
+                    a[am.group(1)] = _decode_entities(v)
+                if a:
+                    attrs[i] = a
+            if selfclose:
+                ends.append(i + 1)
+                run = -1
+            else:
+                ends.append(0)
+                stack.append(i)
+                run = i
         elif li == _GI_CLOSE:
             tag = m.group(_GI_CLOSE)
-            if len(stack) > 1 and stack[-1].tag == tag:
-                stack.pop()  # well-formed fast path
+            if len(stack) > 1 and tags[stack[-1]] == tag:
+                ends[stack.pop()] = len(tags)  # well-formed fast path
+                run = -1
             else:
-                # pop to matching open; ignore stray close tags
-                for i in range(len(stack) - 1, 0, -1):
-                    if stack[i].tag == tag:
-                        del stack[i:]
+                # pop to the nearest matching open; a stray close is
+                # ignored and leaves the leading run open
+                for k in range(len(stack) - 1, 0, -1):
+                    if tags[stack[k]] == tag:
+                        n = len(tags)
+                        for j in stack[k:]:
+                            ends[j] = n
+                        del stack[k:]
+                        run = -1
                         break
         elif li == _GI_CDATA:
-            stack[-1].children.append(("c", m.group(_GI_CDATA)))
+            if run >= 0:
+                texts[run] += m.group(_GI_CDATA)
         elif li == _GI_COMMENT:
-            stack[-1].children.append(_COMMENT_NODE)
+            run = -1
         # decl / pi: skipped entirely
-    return root
+    n = len(tags)
+    for j in stack:  # the root, and elements still open at end of input
+        ends[j] = n
+    return Element(Document(tags, ends, texts, attrs), 0)

@@ -2,7 +2,7 @@
 
 ``simple_point_xy`` sits in FRONT of :func:`kmlparse_stream.
 stream_point_xy` in the fused tile kernel. The stream lane already
-skips the Element tree, but it still walks EVERY token of the document
+skips the parse table, but it still walks EVERY token of the document
 through a Python state machine (~330 tokens for a typical 25-placemark
 document, measured ~2.6 us per token of pure dispatch). This lane gets
 the per-document Python work down to the ~130 *relevant* tag events
@@ -11,8 +11,8 @@ the per-document Python work down to the ~130 *relevant* tag events
 1. validating well-formedness ONCE with the stdlib ``expat`` parser —
    a single C pass with no handlers registered, so the Python state
    machine never needs to defend against mismatched or unclosed tags
-   (the cases where the stream lane bails to the tree parser's
-   recovery semantics, kmlparse.py:197);
+   (the cases where the stream lane bails to the general parser's
+   recovery semantics, kmlparse._parse_kml_regex);
 2. scanning only the six tag names the Point extraction semantics
    depend on with one compiled regex (the regex engine skips all other
    markup and all character data at C speed);
@@ -22,7 +22,7 @@ the per-document Python work down to the ~130 *relevant* tag events
 
 Anything outside the validated envelope returns ``None`` and the
 caller falls through to the stream lane (which may itself return
-``None`` and fall through to the tree path) — so the three lanes are
+``None`` and fall through to the general path) — so the three lanes are
 bit-equal by construction on every input, asserted differentially on
 the synthetic corpus, the grammar-fuzz corpus and the adversarial
 fixtures in tests/test_fast_paths.py. Bail-out conditions:
@@ -47,8 +47,8 @@ first-preorder container chain per placemark wins, points outside it
 are dropped, and their coordinate text is parsed only if the
 placemark's final scope keeps them (deferred to the placemark close,
 so malformed text in a discarded scope never raises — exactly like
-the tree path); a Point with no coordinates descendant raises the
-tree path's ValueError under the same scope rules.
+the general path); a Point with no coordinates descendant raises the
+general path's ValueError under the same scope rules.
 """
 
 from __future__ import annotations
@@ -102,7 +102,7 @@ def _parse_xy(s: str):
 
 def simple_point_xy(source: str):
     """The (x, y) of every Point exactly as ``stream_point_xy`` (and
-    therefore the tree path) yields them, or ``None`` when the document
+    therefore the general path) yields them, or ``None`` when the document
     is outside this lane's validated envelope — see the module
     docstring for the envelope and the semantics contract."""
     if "/>" in source:
@@ -126,7 +126,7 @@ def simple_point_xy(source: str):
             return None
         i = source.find("<!", j + 3)
     if "\r" in source:
-        # same EOL normalization as the tree parser (kmlparse.py:73)
+        # same EOL normalization as kmlparse._parse_kml_regex
         # and the stream lane, applied BEFORE validation so the event
         # offsets below index into the normalized string
         source = source.replace("\r\n", "\n").replace("\r", "\n")
@@ -149,7 +149,7 @@ def simple_point_xy(source: str):
         ev = m.lastindex
         if ev == _PM_O:
             if pm_depth:
-                # nested placemarks: the tree path is the only lane
+                # nested placemarks: the general path is the only lane
                 # implementing the k-fold multiplicity AND its emission
                 # order (per-ANCESTOR-placemark grouping, not document
                 # order — unreachable for a single streaming pass)
@@ -167,15 +167,15 @@ def simple_point_xy(source: str):
             pm_depth -= 1
         elif ev == _PT_O:
             if in_point:
-                return None  # nested Points: tree path decides
+                return None  # nested Points: general path decides
             in_point = True
             pm_at_point = pm_depth
             coords_done = False
         elif ev == _PT_C:
             in_point = False
             if not coords_done and pm_at_point:
-                # Point closed with NO coordinates descendant: the tree
-                # path parses find_first(None) -> "" and raises
+                # Point closed with NO coordinates descendant: the general
+                # path reads a missing coordinates as "" and raises
                 # ValueError — match it (deferred via buf in container
                 # docs, exactly like a captured empty payload)
                 if multi:
@@ -213,7 +213,7 @@ def simple_point_xy(source: str):
             if not pm_depth:
                 continue  # outside any placemark: inert, like stream
             if in_point:
-                return None  # container inside a Point: tree path
+                return None  # container inside a Point: general path
             tag = m[ev]
             if kind is not None and tag != kind:
                 return None  # mixed kinds: priority needs lookahead

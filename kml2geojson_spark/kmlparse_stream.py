@@ -18,8 +18,8 @@ def stream_point_xy(source: str):
     ``iter_point_coords(parse_kml(source))`` yields them — including
     the multi-geometry container descent (points outside the innermost
     first-preorder container chain are dropped) and error parity (a
-    Point with no coordinates raises the tree path's ValueError) —
-    WITHOUT building the Element tree: one pass over the token stream
+    Point with no coordinates raises the general path's ValueError) —
+    WITHOUT building the parse table: one pass over the token stream
     with depth counters and a per-placemark scope buffer.
 
     Returns ``None`` whenever the document needs the general path:
@@ -32,20 +32,21 @@ def stream_point_xy(source: str):
       placemarks k times, GROUPED PER ANCESTOR placemark — an order a
       single streaming pass cannot produce);
     - Placemark/Point/container elements nested inside a captured
-      ``<coordinates>`` run (real subtree elements to the tree parser);
+      ``<coordinates>`` run (real subtree elements to the general parser);
     - a mismatched close tag or unclosed elements at EOF (the tree
       parser's recovery semantics differ).
 
-    Callers fall back to the tree path, so the two paths are bit-equal
+    Callers fall back to the general path, so the two paths are bit-equal
     by construction on every input — asserted differentially against
-    the tree path on the synthetic corpus AND the fuzz corpus in
+    the general path on the synthetic corpus AND the fuzz corpus in
     tests/test_fast_paths.py (and on malformed coordinate text both
     paths raise the identical ValueError).
 
     Why it exists: the fused tile kernel discards feature/geometry
-    indices, so the Element tree (~280k allocations per 3k docs), the
-    per-document tag index, and the per-placemark subtree walks are
-    pure overhead — measured ~1.9× on the parse+extract stage.
+    indices, so the general path's parse table and per-placemark
+    subtree scans are pure overhead — measured ~1.9× on the
+    parse+extract stage against the object tree the general path
+    built before its flat table.
     """
     # local import: convert_core imports kmlparse at its top level
     from .convert_core import parse_coord_tuple
@@ -78,7 +79,7 @@ def stream_point_xy(source: str):
             if in_coords:
                 if tag == "Placemark" or tag == "Point" \
                         or tag in _CONTAINERS:
-                    # the tree parser makes these REAL elements of the
+                    # the general parser makes these REAL elements of the
                     # placemark subtree (a Point nested inside another
                     # Point's coordinates is still bucketed and
                     # parsed); replicating that while capturing needs
@@ -92,7 +93,7 @@ def stream_point_xy(source: str):
                 continue
             if multi_mode and pm_depth and tag in _CONTAINERS:
                 if in_point:
-                    return None  # container inside a Point: tree path
+                    return None  # container inside a Point: general path
                 if kind is not None and tag != kind:
                     return None  # mixed kinds: priority needs lookahead
                 kind = tag
@@ -112,8 +113,8 @@ def stream_point_xy(source: str):
                 continue
             if selfclose:
                 # <coordinates/> still claims the first-coordinates
-                # slot of its Point (find_first semantics) with ""
-                # text — which the tree path feeds to the coord parser
+                # slot of its Point (first-descendant semantics) with ""
+                # text — which the general path feeds to the coord parser
                 # (raising ValueError); raise identically
                 if (tag == "coordinates" and in_point and not coords_done):
                     coords_done = True
@@ -124,11 +125,11 @@ def stream_point_xy(source: str):
                             parse_coord_tuple("")
                 elif tag == "Point":
                     # <Point/>: a Point node with NO coordinates — the
-                    # tree path parses find_first(None) -> "" and
+                    # general path reads a missing coordinates as "" and
                     # raises; match it (deferred via buf in container
                     # docs, exactly like a captured empty payload)
                     if in_point:
-                        return None  # nested Points: tree path decides
+                        return None  # nested Points: general path decides
                     if pm_depth and not (multi_mode and ended):
                         if multi_mode:
                             buf.append("")
@@ -138,7 +139,7 @@ def stream_point_xy(source: str):
             stack.append(tag)
             if tag == "Placemark":
                 if pm_depth:
-                    # nested placemarks: only the tree path implements
+                    # nested placemarks: only the general path implements
                     # the k-fold multiplicity AND its emission order
                     # (grouped per ANCESTOR placemark, not document
                     # order — unreachable in one streaming pass)
@@ -151,7 +152,7 @@ def stream_point_xy(source: str):
                     ended = False
             elif tag == "Point":
                 if in_point:
-                    return None  # nested Points: tree path decides
+                    return None  # nested Points: general path decides
                 in_point = True
                 pm_at_point = pm_depth
                 coords_done = False
@@ -163,7 +164,7 @@ def stream_point_xy(source: str):
         elif li == _GI_CLOSE:
             tag = m.group(_GI_CLOSE)
             if not stack or stack[-1] != tag:
-                return None  # recovery semantics: tree path decides
+                return None  # recovery semantics: general path decides
             stack.pop()
             if in_coords:
                 if coords_elem_depth:
@@ -176,7 +177,7 @@ def stream_point_xy(source: str):
                 if pm_at_point and not (multi_mode and ended):
                     if multi_mode:
                         # defer the parse: a later container descent may
-                        # discard this point — the tree path would then
+                        # discard this point — the general path would then
                         # never parse it (so neither may we, even when
                         # the text is malformed)
                         buf.append("".join(parts).strip())
@@ -201,7 +202,7 @@ def stream_point_xy(source: str):
                 if not coords_done and pm_at_point \
                         and not (multi_mode and ended):
                     # Point closed with NO coordinates descendant: the
-                    # tree path parses find_first(None) -> "" and
+                    # general path reads a missing coordinates as "" and
                     # raises ValueError — match it (deferred via buf
                     # in container docs)
                     if multi_mode:
@@ -219,5 +220,5 @@ def stream_point_xy(source: str):
                 capturing = False  # comment breaks logical adjacency
         # decl / pi: skipped
     if stack:
-        return None  # unclosed elements at EOF: tree path decides
+        return None  # unclosed elements at EOF: general path decides
     return out

@@ -11,9 +11,12 @@ ourselves, Iceberg-shaped:
     <root>/<stage>/LATEST            (pointer file)
 
 - ``snapshot_id`` is a content hash of (stage name, parent snapshot ids,
-  stage params) — the lineage DAG is encoded in the ids themselves, so a
-  resume only reuses a checkpoint whose *entire upstream chain* is
-  unchanged.
+  stage params, input identity) — the lineage DAG is encoded in the ids
+  themselves, so a resume only reuses a checkpoint whose *entire
+  upstream chain* is unchanged. The input identity is every data file
+  (name, size, mtime) in the directories the stage's plan reads
+  (``DataFrame.inputFiles()``), so a root stage over a rewritten input
+  table gets a new id, and so does everything downstream of it.
 - ``manifest.json`` records status, wall time, totals, and per-partition
   lineage rows ``(partition_id, input_snapshot, rows, cells)``. Row
   counts come from the footers of the parquet files just written (each
@@ -37,6 +40,7 @@ import json
 import os
 import time
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 from typing import Callable, Optional, Sequence
 
 import pyarrow.parquet as pq
@@ -45,10 +49,43 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 _PID = "_lineage_pid"
 
 
-def _snapshot_id(stage: str, parents: Sequence[str], params) -> str:
+def _snapshot_id(stage: str, parents: Sequence[str], params, inputs=()) -> str:
     payload = json.dumps({"stage": stage, "parents": list(parents),
-                          "params": params}, sort_keys=True, default=str)
+                          "params": params, "inputs": list(inputs)},
+                         sort_keys=True, default=str)
     return hashlib.md5(payload.encode()).hexdigest()[:16]
+
+
+def _input_dirs(df: DataFrame) -> list[str]:
+    """The directories holding the files ``df``'s plan reads."""
+    return sorted({f.rsplit("/", 1)[0] for f in df.inputFiles()})
+
+
+def _input_identity(spark: SparkSession, dirs: Sequence[str]) -> list:
+    """Per input directory, its data files as sorted (name, size, mtime)
+    triples, or None when the directory is gone. Names starting with
+    ``_`` or ``.`` are Spark/Hadoop metadata and are skipped. Local
+    directories are read with ``os`` (mtime in ns), others through the
+    session's Hadoop file system (mtime in ms)."""
+    out = []
+    for d in dirs:
+        files = None
+        if d.startswith("file:"):
+            path = unquote(urlparse(d).path)
+            if os.path.isdir(path):
+                files = [(e.name, st.st_size, st.st_mtime_ns)
+                         for e in os.scandir(path) if e.is_file()
+                         for st in [e.stat()]]
+        else:
+            hpath = spark._jvm.org.apache.hadoop.fs.Path(d)
+            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            if fs.isDirectory(hpath):
+                files = [(st.getPath().getName(), st.getLen(), st.getModificationTime())
+                         for st in fs.listStatus(hpath) if st.isFile()]
+        if files is not None:
+            files = sorted(f for f in files if not f[0].startswith(("_", ".")))
+        out.append([d, files])
+    return out
 
 
 def _write_atomic(path: Path, text: str) -> None:
@@ -114,26 +151,39 @@ class LineageLog:
     ) -> tuple[DataFrame, dict]:
         """Build-or-resume one stage.
 
-        If a committed manifest exists for this (stage, parents, params)
-        snapshot, the builder is NOT invoked — the persisted parquet is
-        returned (resume without recompute). Otherwise the builder runs,
-        the result is persisted, per-partition lineage is recorded, and
-        the manifest committed.
+        The snapshot id covers (stage, parents, params) and the identity
+        of the stage's input files. Which directories those are is
+        recorded per (stage, parents, params) when the stage is built;
+        on a later call they are listed again, so a resume needs neither
+        the builder nor a Spark job. If a committed manifest exists for
+        the resulting snapshot, the builder is NOT invoked — the
+        persisted parquet is returned (resume without recompute).
+        Otherwise (first run, changed params or parents, or input files
+        added, removed or rewritten) the builder runs, the result is
+        persisted, per-partition lineage is recorded, and the manifest
+        committed.
 
         Returns (DataFrame read from the checkpoint, manifest dict).
         """
-        sid = _snapshot_id(stage, parents, params)
-        sdir = self._stage_dir(stage, sid)
-        data_dir = sdir / "data"
-
-        existing = self.manifest(stage, sid)
-        if existing is not None and existing.get("status") == "committed":
-            # drop the internal partition column on resume too, so the
-            # schema is identical between fresh and resumed runs
-            return spark.read.parquet(str(data_dir)).drop(_PID), existing
+        base = _snapshot_id(stage, parents, params)
+        inputs_file = self.root / stage / f"inputs-{base}.json"
+        if inputs_file.is_file():
+            dirs = json.loads(inputs_file.read_text())
+            sid = _snapshot_id(stage, parents, params, _input_identity(spark, dirs))
+            existing = self.manifest(stage, sid)
+            if existing is not None and existing.get("status") == "committed":
+                # drop the internal partition column on resume too, so
+                # the schema is identical between fresh and resumed runs
+                data_dir = self._stage_dir(stage, sid) / "data"
+                return spark.read.parquet(str(data_dir)).drop(_PID), existing
 
         t0 = time.time()
-        df = builder().withColumn(_PID, F.spark_partition_id())
+        built = builder()
+        dirs = _input_dirs(built)
+        sid = _snapshot_id(stage, parents, params, _input_identity(spark, dirs))
+        sdir = self._stage_dir(stage, sid)
+        data_dir = sdir / "data"
+        df = built.withColumn(_PID, F.spark_partition_id())
         df.write.mode("overwrite").parquet(str(data_dir))
         # the written schema, so reading back runs no schema-inference job
         persisted = spark.read.schema(df.schema).parquet(str(data_dir))
@@ -164,6 +214,7 @@ class LineageLog:
             "snapshot_id": sid,
             "parents": list(parents),
             "params": params,
+            "inputs": dirs,
             "status": "committed",
             "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "wall_time_s": round(wall, 3),
@@ -172,6 +223,7 @@ class LineageLog:
             "partitions": partitions,
         }
         _write_atomic(sdir / "manifest.json", json.dumps(manifest, indent=1))
+        _write_atomic(inputs_file, json.dumps(dirs))
         _write_atomic(self.root / stage / "LATEST", sid)
 
         return persisted.drop(_PID), manifest

@@ -46,7 +46,7 @@ from kml2geojson_spark import (
     parse_kml,
 )
 from kml2geojson_spark.convert_core import iter_point_coords
-from kml2geojson_spark.kmlparse import _parse_kml_expat
+from kml2geojson_spark.kmlparse import _parse_kml_expat, _parse_kml_regex
 
 from .test_differential_fuzz import make_fuzz_kml
 
@@ -180,6 +180,39 @@ def test_corruptions_reach_the_lenient_lane():
     strict = [cid for cid, kml in _CASES.items()
               if cid.startswith("corrupt/") and _parse_kml_expat(kml) is not None]
     assert strict == []
+
+
+def _table(root) -> tuple:
+    d = root.doc
+    return d.tags, d.ends, d.texts, d.attrs
+
+
+def test_lanes_yield_identical_tables():
+    """Every well-formed lock document gives the same flat table from
+    the strict (expat) and the lenient (regex) lane."""
+    well_formed = 0
+    for cid, kml in _CASES.items():
+        strict = _parse_kml_expat(kml)
+        if strict is None:
+            continue
+        well_formed += 1
+        assert _table(strict) == _table(_parse_kml_regex(kml)), cid
+    assert well_formed >= 2400
+
+
+def test_engine_encoder_writes_json_dumps_bytes():
+    from kml2geojson_spark.engine import _json_encode
+
+    encoded = 0
+    for kml in _CASES.values():
+        try:
+            style, layers = convert_kml_string(kml, style_type="svg")
+        except ValueError:
+            continue
+        for obj in [style, *layers]:
+            assert _json_encode(obj) == json.dumps(obj)
+        encoded += 1
+    assert encoded > 2000
 
 
 def test_synth_variants_are_present():
@@ -336,6 +369,20 @@ def test_nested_folders_duplicate_and_disambiguate():
     assert [la["name"] for la in layers] == ["dup", "dup1"]
     assert [[f["properties"]["name"] for f in la["features"]]
             for la in layers] == [["a", "b"], ["b"]]
+
+
+def test_coordinate_tuple_skips_the_regex_only_without_whitespace():
+    """parse_coord_tuple removes whitespace only when the tuple has some:
+    every whitespace character but " " is unprintable."""
+    import re
+    from kml2geojson_spark.convert_core import parse_coord_tuple
+
+    assert all(c == " " or not c.isprintable()
+               for c in map(chr, range(sys.maxunicode + 1)) if c.isspace())
+    ws = re.compile(r"\s+")
+    for s in ["1,2", " 1 , 2 ", "1,\u20032", "1\u00a0.5,2", "1,2,\n3", "1_0,2",
+              "1,\x1f2", "-112.2,36.0,2357"]:
+        assert parse_coord_tuple(s) == [float(x) for x in ws.sub("", s).split(",")]
 
 
 def test_point_with_empty_coordinates_raises():

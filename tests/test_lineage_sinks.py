@@ -168,6 +168,58 @@ def test_partition_counts_equal_scan(spark, tmp_path, cell_col):
         [["partition_id", "input_snapshot", "rows", "cells"]] * 3
 
 
+def test_root_stage_over_a_rewritten_input_rebuilds(spark, tmp_path):
+    """A root stage's snapshot covers its input files: overwriting,
+    adding to or deleting the input table rebuilds the stage and
+    everything downstream of it, instead of resuming stale data."""
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    calls = {"a": 0, "b": 0}
+
+    def run():
+        def build_a():
+            calls["a"] += 1
+            return spark.read.parquet(src)
+
+        def build_b():
+            calls["b"] += 1
+            return spark.read.parquet(src).where("id % 2 = 0")
+
+        p = Pipeline(spark, tmp_path / "ckpt10")
+        a = p.stage("a", build_a)
+        b = p.stage("b", build_b)
+        return a.count(), b.count(), p.manifests
+
+    assert run()[:2] == (10, 5) and calls == {"a": 1, "b": 1}
+    _, _, m1 = run()  # unchanged input: resume without the builders
+    assert calls == {"a": 1, "b": 1}
+
+    spark.range(20).write.mode("overwrite").parquet(src)
+    n_a, n_b, m2 = run()
+    assert (n_a, n_b) == (20, 10) and calls == {"a": 2, "b": 2}
+    assert m2["a"]["snapshot_id"] != m1["a"]["snapshot_id"]
+
+    spark.range(100, 103).write.mode("append").parquet(src)
+    assert run()[:2] == (23, 12) and calls == {"a": 3, "b": 3}
+    assert run()[:2] == (23, 12) and calls == {"a": 3, "b": 3}
+
+
+def test_input_identity_reads_local_and_hadoop_paths_alike(spark, tmp_path):
+    from kml2geojson_spark.lineage import _input_identity
+
+    src = tmp_path / "src"
+    spark.range(10).write.parquet(str(src))
+    [[_, local]] = _input_identity(spark, [src.as_uri()])  # os
+    [[_, hadoop]] = _input_identity(spark, [str(src)])     # Hadoop FS
+    assert local and all(name.endswith(".parquet") for name, _, _ in local)
+    assert [f[:2] for f in local] == [f[:2] for f in hadoop]
+    assert all(abs(ns // 10**6 - ms) <= 1
+               for (*_, ns), (*_, ms) in zip(local, hadoop))
+    gone = str(tmp_path / "gone")
+    assert _input_identity(spark, [gone, "file:" + gone]) == [
+        [gone, None], ["file:" + gone, None]]
+
+
 def test_empty_stage_has_no_partitions(spark, tmp_path):
     log = LineageLog(tmp_path / "ckpt6")
     df, manifest = log.run_stage(spark, "empty",

@@ -171,3 +171,31 @@ def test_shipped_zip_is_still_reread(spark, tmp_path):
     for r in warm:
         assert f"{SHIPPED_MOD}.zip" in r["reads"], r
         assert not [a for a in r["reads"] if _is_spark_archive(a)], r
+
+
+def test_worker_heap_is_frozen_after_the_package_import(spark):
+    """The daemon's full collection after each task then skips the
+    worker's imported heap."""
+
+    def kernel(batches):
+        import gc
+
+        import pyarrow as pa
+
+        import kml2geojson_spark  # noqa: F401  (freezes the heap)
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"frozen": [gc.get_freeze_count()]})
+
+    rows = spark.range(0, 8, numPartitions=4).mapInArrow(
+        kernel, "frozen long").collect()
+    # pyspark, py4j, pyarrow and numpy alone are tens of thousands
+    assert rows and all(r["frozen"] > 10_000 for r in rows), rows
+
+
+def test_importing_the_package_leaves_the_driver_heap_unfrozen():
+    code = ("import gc, pyspark.sql, kml2geojson_spark.spatial\n"
+            "assert gc.get_freeze_count() == 0, gc.get_freeze_count()\n")
+    subprocess.run([sys.executable, "-c", code], cwd=REPO_ROOT, check=True,
+                   env={**os.environ, "PYTHONPATH": str(REPO_ROOT)})
