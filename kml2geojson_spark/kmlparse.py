@@ -12,8 +12,8 @@ by preorder number, one entry per element —
 
 Entry 0 is a virtual document root spanning the whole table, so a
 search from the root includes the document element, like the
-reference's ``get(root, ...)`` on a minidom ``Document``
-(/root/reference/kml2geojson/main.py:586). No ``xml.dom.minidom``, no
+reference's ``get(root, ...)`` on a minidom ``Document`` (reference
+main.py:586). No ``xml.dom.minidom``, no
 lxml, no per-node objects: the table reproduces the minidom behaviours
 the reference relies on —
 
@@ -214,9 +214,9 @@ def parse_kml(source: str) -> Element:
 
 
 def _parse_kml_expat(source: str) -> Optional[Element]:
-    """The root of the expat-filled table, or ``None`` when the document is outside
-    the envelope where expat's output provably matches the regex
-    tokenizer's: any DOCTYPE bails (an internal DTD subset could declare
+    """The root of the expat-filled table, or ``None`` when the document
+    is outside the envelope where expat's output provably matches the
+    regex tokenizer's: any DOCTYPE bails (an internal DTD subset could declare
     entities that expat would expand but the regex lane leaves
     verbatim), and any well-formedness error bails to the lenient lane
     (mismatched/unclosed tags, undefined entities, ``<`` in attribute
