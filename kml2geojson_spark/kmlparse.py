@@ -100,6 +100,29 @@ def _decode_entities(s: str) -> str:
     return _ENTITY.sub(sub, s)
 
 
+def _run_appender(texts: list, more: dict):
+    """``add(i, piece)`` appends ``piece`` to node ``i``'s leading run.
+    The first piece goes to ``texts[i]``; later ones collect in
+    ``more[i]`` for :func:`_join_runs`, instead of re-copying the
+    growing string with ``+=`` per piece, which is quadratic in the
+    run's length."""
+
+    def add(i, piece):
+        if not texts[i]:
+            texts[i] = piece
+        elif i in more:
+            more[i].append(piece)
+        else:
+            more[i] = [texts[i], piece]
+
+    return add
+
+
+def _join_runs(texts: list, more: dict) -> None:
+    for i, parts in more.items():
+        texts[i] = "".join(parts)
+
+
 class Document:
     """One parsed document as a flat preorder table (see the module
     docstring). Node 0 is the virtual root; every search takes the
@@ -223,9 +246,10 @@ def _parse_kml_expat(source: str) -> Optional[Element]:
     values, text outside the root, invalid character references, ...).
 
     Character data appends to the open element's leading run until its
-    first child element starts or a comment arrives. Expat may deliver
-    one run in several pieces (buffer boundaries, CDATA sections); they
-    are joined here."""
+    first child element starts or a comment arrives. Expat delivers a
+    long run in pieces of at most ``buffer_size`` characters; a run's
+    second and later pieces are kept in a list and joined once at the
+    end, so a multi-megabyte ``<coordinates>`` costs linear time."""
     if "<!DOCTYPE" in source:
         return None
     tags = [ROOT_TAG]
@@ -234,6 +258,8 @@ def _parse_kml_expat(source: str) -> Optional[Element]:
     attrs: dict = {}
     stack = [0]
     run = -1  # element whose leading run is still open, or -1
+    more: dict = {}  # run -> its pieces, for runs that came in several
+    add = _run_appender(texts, more)
 
     def start(name, a, _tag=tags.append, _end=ends.append,
               _text=texts.append, _push=stack.append):
@@ -253,7 +279,7 @@ def _parse_kml_expat(source: str) -> Optional[Element]:
 
     def chardata(d):
         if run >= 0:
-            texts[run] += d
+            add(run, d)
 
     def comment(_d):
         nonlocal run
@@ -270,6 +296,7 @@ def _parse_kml_expat(source: str) -> Optional[Element]:
     except _expat.ExpatError:
         return None
     ends[0] = len(tags)
+    _join_runs(texts, more)
     return Element(Document(tags, ends, texts, attrs), 0)
 
 
@@ -287,6 +314,8 @@ def _parse_kml_regex(source: str) -> Element:
     attrs: dict = {}
     stack = [0]
     run = -1  # element whose leading run is still open, or -1
+    more: dict = {}  # as in _parse_kml_expat: CDATA and PIs split a run
+    add = _run_appender(texts, more)
     # Dispatch on m.lastindex (one attribute read) instead of probing
     # named groups: each alternation branch ends in a distinct group —
     # the open branch always participates through `selfclose` (an
@@ -296,7 +325,7 @@ def _parse_kml_regex(source: str) -> Element:
         if li == _GI_TEXT:
             if run >= 0:
                 s = m.group(_GI_TEXT)
-                texts[run] += _decode_entities(s) if "&" in s else s
+                add(run, _decode_entities(s) if "&" in s else s)
         elif li == _GI_SELFCLOSE:
             open_tag, attrs_src, selfclose = m.group(
                 _GI_OPEN, _GI_ATTRS, _GI_SELFCLOSE)
@@ -339,11 +368,12 @@ def _parse_kml_regex(source: str) -> Element:
                         break
         elif li == _GI_CDATA:
             if run >= 0:
-                texts[run] += m.group(_GI_CDATA)
+                add(run, m.group(_GI_CDATA))
         elif li == _GI_COMMENT:
             run = -1
         # decl / pi: skipped entirely
     n = len(tags)
     for j in stack:  # the root, and elements still open at end of input
         ends[j] = n
+    _join_runs(texts, more)
     return Element(Document(tags, ends, texts, attrs), 0)

@@ -204,20 +204,39 @@ def test_root_stage_over_a_rewritten_input_rebuilds(spark, tmp_path):
     assert run()[:2] == (23, 12) and calls == {"a": 3, "b": 3}
 
 
-def test_input_identity_reads_local_and_hadoop_paths_alike(spark, tmp_path):
+@pytest.mark.parametrize("v1_sources", ["parquet", ""])
+def test_partition_added_under_an_input_root_rebuilds(spark, tmp_path, v1_sources):
+    """The identity lists the table's root recursively, so a partition
+    directory added under a partitioned table rebuilds the stage, with
+    data source V1 or V2 reading it, and under a root whose name needs
+    percent-encoding in a URI."""
+    src = str(tmp_path / "in put%20dir")
+    spark.range(6).withColumn("k", F.col("id") % 2).write.partitionBy("k").parquet(src)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.read.parquet(src)
+
+    def run():
+        return Pipeline(spark, tmp_path / "ckpt11").stage("a", build).count()
+
+    old = spark.conf.get("spark.sql.sources.useV1SourceList")
+    spark.conf.set("spark.sql.sources.useV1SourceList", v1_sources)
+    try:
+        assert (run(), run(), len(calls)) == (6, 6, 1)
+        spark.range(6, 9).withColumn("k", F.lit(7)).write.mode("append") \
+            .partitionBy("k").parquet(src)  # a new directory k=7
+        assert (run(), run(), len(calls)) == (9, 9, 2)
+    finally:
+        spark.conf.set("spark.sql.sources.useV1SourceList", old)
+
+
+def test_input_identity_of_a_missing_root_is_none(spark, tmp_path):
     from kml2geojson_spark.lineage import _input_identity
 
-    src = tmp_path / "src"
-    spark.range(10).write.parquet(str(src))
-    [[_, local]] = _input_identity(spark, [src.as_uri()])  # os
-    [[_, hadoop]] = _input_identity(spark, [str(src)])     # Hadoop FS
-    assert local and all(name.endswith(".parquet") for name, _, _ in local)
-    assert [f[:2] for f in local] == [f[:2] for f in hadoop]
-    assert all(abs(ns // 10**6 - ms) <= 1
-               for (*_, ns), (*_, ms) in zip(local, hadoop))
     gone = str(tmp_path / "gone")
-    assert _input_identity(spark, [gone, "file:" + gone]) == [
-        [gone, None], ["file:" + gone, None]]
+    assert _input_identity(spark, [gone]) == [[gone, None]]
 
 
 def test_empty_stage_has_no_partitions(spark, tmp_path):
