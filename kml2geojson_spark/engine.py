@@ -348,17 +348,14 @@ def _tile_counts_batch(doc_iter, res: int) -> pa.RecordBatch:
     distinct-doc counts from a single small shuffle."""
     from .convert_core import iter_point_coords
     from .kmlparse_fast import simple_point_xy
-    from .kmlparse_stream import stream_point_xy
     from .spatial.cells import cell_encode_np
 
     docords, xs, ys = [], [], []
     for docord, (_doc_id, kml_str) in enumerate(doc_iter):
-        # three lanes, each bit-equal by construction + differential
-        # tests, each returning None whenever unsure: expat-validated
-        # relevant-tag scan → full token state machine → parse table
+        # two lanes, bit-equal by construction + differential tests: the
+        # expat-validated relevant-tag scan, which returns None whenever
+        # unsure, then the parse table
         pts = simple_point_xy(kml_str)
-        if pts is None:
-            pts = stream_point_xy(kml_str)
         if pts is not None:
             for x, y in pts:
                 docords.append(docord)

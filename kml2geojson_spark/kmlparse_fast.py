@@ -1,18 +1,16 @@
 """Simple-document Point extractor — the tile path's fastest lane.
 
-``simple_point_xy`` sits in FRONT of :func:`kmlparse_stream.
-stream_point_xy` in the fused tile kernel. The stream lane already
-skips the parse table, but it still walks EVERY token of the document
-through a Python state machine (~330 tokens for a typical 25-placemark
-document, measured ~2.6 us per token of pure dispatch). This lane gets
-the per-document Python work down to the ~130 *relevant* tag events
+``simple_point_xy`` sits in FRONT of the parse table
+(``iter_point_coords(parse_kml(source))``) in the fused tile kernel.
+The table records every element of the document; this lane gets the
+per-document Python work down to the ~130 *relevant* tag events
 (Placemark / Point / coordinates / multi-geometry containers) by:
 
 1. validating well-formedness ONCE with the stdlib ``expat`` parser —
    a single C pass with no handlers registered, so the Python state
    machine never needs to defend against mismatched or unclosed tags
-   (the cases where the stream lane bails to the general parser's
-   recovery semantics, kmlparse._parse_kml_regex);
+   (the cases the general parser recovers from with its lenient lane,
+   kmlparse._parse_kml_regex);
 2. scanning only the six tag names the Point extraction semantics
    depend on with one compiled regex (the regex engine skips all other
    markup and all character data at C speed);
@@ -21,34 +19,33 @@ the per-document Python work down to the ~130 *relevant* tag events
    so the leading character-data run ends exactly at the next ``<``).
 
 Anything outside the validated envelope returns ``None`` and the
-caller falls through to the stream lane (which may itself return
-``None`` and fall through to the general path) — so the three lanes are
+caller falls through to the general path — so the two lanes are
 bit-equal by construction on every input, asserted differentially on
 the synthetic corpus, the grammar-fuzz corpus and the adversarial
 fixtures in tests/test_fast_paths.py. Bail-out conditions:
 
-- any self-closing tag (``/>``): the stream lane implements the
+- any self-closing tag (``/>``): the general path implements the
   reference's ``<coordinates/>`` / empty-container semantics
   (main.py:83-93, 349-359); this lane doesn't re-derive them;
 - a processing instruction after the leading XML declaration, any
   comment or DOCTYPE, or a CDATA section whose payload contains ``<``
   (could hide markup-looking text from the regex scan);
 - CDATA adjacent to a captured coordinates run (CDATA *continues* a
-  capture in the stream lane; slicing to ``<`` would truncate it);
+  capture in the general path; slicing to ``<`` would truncate it);
 - not well-formed XML per expat (undefined entities, mismatched or
   unclosed tags, ``<`` in attribute values, multiple roots, ...);
 - nested ``<Point>`` elements, a container opening inside a Point, or
   nested Placemarks — the same subtree-lookahead / emission-order
-  cases the stream lane defers to the tree for.
+  cases that need the tree.
 
-Semantics replicated from the stream lane (see its docstring for the
-reference mapping): in container documents the innermost
-first-preorder container chain per placemark wins, points outside it
-are dropped, and their coordinate text is parsed only if the
-placemark's final scope keeps them (deferred to the placemark close,
-so malformed text in a discarded scope never raises — exactly like
-the general path); a Point with no coordinates descendant raises the
-general path's ValueError under the same scope rules.
+Semantics replicated from the general path (:mod:`kmlparse_stream`'s
+docstring maps them to the reference): in container documents the
+innermost first-preorder container chain per placemark wins, points
+outside it are dropped, and their coordinate text is parsed only if
+the placemark's final scope keeps them (deferred to the placemark
+close, so malformed text in a discarded scope never raises — exactly
+like the general path); a Point with no coordinates descendant raises
+the general path's ValueError under the same scope rules.
 """
 
 from __future__ import annotations
@@ -64,7 +61,7 @@ from .kmlparse import _decode_entities
 # no .group() string fetch on the hot loop. Anchored on "<" and
 # terminated by the (?=[\s>]) lookahead, so prefixed names
 # (<ns:Point>) and longer names (<Pointer>) don't match — matching the
-# stream lane's exact-string tag comparisons. "</coordinates" matches
+# parse table's exact-string tag comparisons. "</coordinates" matches
 # nothing (no event needed: captures complete at the open tag). No "/"
 # in the lookahead: documents with any self-closing tag never reach
 # this scan.
@@ -101,8 +98,8 @@ def _parse_xy(s: str):
 
 
 def simple_point_xy(source: str):
-    """The (x, y) of every Point exactly as ``stream_point_xy`` (and
-    therefore the general path) yields them, or ``None`` when the document
+    """The (x, y) of every Point exactly as the general path
+    (``iter_point_coords(parse_kml(source))``) yields them, or ``None`` when the document
     is outside this lane's validated envelope — see the module
     docstring for the envelope and the semantics contract."""
     if "/>" in source:
@@ -120,14 +117,14 @@ def simple_point_xy(source: str):
     i = source.find("<!")
     while i != -1:  # every "<!" must be a markup-free CDATA section
         if not source.startswith("<![CDATA[", i):
-            return None  # comment / DOCTYPE: stream lane decides
+            return None  # comment / DOCTYPE: general path decides
         j = source.find("]]>", i + 9)
         if j == -1 or "<" in source[i + 9:j]:
             return None
         i = source.find("<!", j + 3)
     if "\r" in source:
-        # same EOL normalization as kmlparse._parse_kml_regex
-        # and the stream lane, applied BEFORE validation so the event
+        # same EOL normalization as kmlparse._parse_kml_regex,
+        # applied BEFORE validation so the event
         # offsets below index into the normalized string
         source = source.replace("\r\n", "\n").replace("\r", "\n")
     try:
@@ -197,7 +194,7 @@ def simple_point_xy(source: str):
                 e += 1
             nxt = source.index("<", e)
             if source.startswith("<![CDATA[", nxt):
-                return None  # CDATA continues the capture: stream lane
+                return None  # CDATA continues the capture: general path
             s = source[e:nxt]
             if "&" in s:
                 s = _decode_entities(s)
@@ -211,7 +208,7 @@ def simple_point_xy(source: str):
                         out.append(xy)
         elif ev == _CT_O:
             if not pm_depth:
-                continue  # outside any placemark: inert, like stream
+                continue  # outside any placemark: inert, as in the tree
             if in_point:
                 return None  # container inside a Point: general path
             tag = m[ev]

@@ -1,7 +1,11 @@
-"""Streaming Point extractor — the tile-path fast lane.
+"""Streaming Point extractor, off the tile path.
 
 Split out of :mod:`kmlparse` to keep the parser module focused; shares
-its tokenizer. See :func:`stream_point_xy`.
+its tokenizer. See :func:`stream_point_xy`. The tile kernel no longer
+calls it: on the documents :mod:`kmlparse_fast` refuses it cost more
+CPU than the parse table it was meant to skip (0.66 against 0.53
+ms/doc, one process on a 4-vCPU host). It stays for its differential
+tests and for perfbench's per-layer rates, which import it.
 """
 
 from __future__ import annotations
@@ -41,12 +45,6 @@ def stream_point_xy(source: str):
     the general path on the synthetic corpus AND the fuzz corpus in
     tests/test_fast_paths.py (and on malformed coordinate text both
     paths raise the identical ValueError).
-
-    Why it exists: the fused tile kernel discards feature/geometry
-    indices, so the general path's parse table and per-placemark
-    subtree scans are pure overhead — measured ~1.9× on the
-    parse+extract stage against the object tree the general path
-    built before its flat table.
     """
     # local import: convert_core imports kmlparse at its top level
     from .convert_core import parse_coord_tuple

@@ -824,9 +824,13 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
       grid row it spans, not once per cell. REFUSED above
       ``max_driver_rings`` polygons — a broadcast must never carry an
       unbounded table.
-    - ``"cogroup"`` — a shuffle join: each cover row carries its row's
-      edges, so each task holds only its cells' cover rows. Edge bytes
-      are replicated per covering cell, never per point.
+    - ``"cogroup"`` — one join: each cover row carries its row's edges.
+      Catalyst picks the plan. As a shuffle join on ``cell_id``, each
+      task holds only its cells' cover rows; with the points broadcast
+      (a small or cached point table), the cover rows stay where the
+      per-row edge regroup put them. Either way the crossing count
+      needs no further exchange, and edge bytes are replicated per
+      covering cell, never per point.
     - ``"auto"`` (default) — one cheap count() on the polygon side
       picks driver below ``max_driver_rings``, cogroup above.
 
@@ -920,21 +924,29 @@ def _pip_polys(polys: DataFrame, res: int) -> DataFrame:
     """(poly_id, rings) → (poly_id, _edges, _x0, _x1, _y0, _y1): each
     polygon's edges (:func:`_edges_col`) and the grid ranges of its
     outer-ring bbox at ``res``. The outer ring is the FIRST ring that
-    survives :func:`_clean_rings_col`, as in ``_rings_to_np``; polygons
-    with no ring left are dropped."""
+    survives :func:`_clean_rings_col`, as in ``_rings_to_np``. A
+    polygon with no ring left keeps its row, with no edges and null
+    ranges, so it explodes to no band and no cell. It is not filtered
+    out here: a filter on ``_rings`` or ``_edges`` is pushed below this
+    projection with the ring-cleaning and edge chains inlined, where no
+    subexpression elimination runs (the module's design rules)."""
     n = float(1 << res)
     hi = (1 << res) - 1
 
+    def clamp(v):
+        # greatest/least skip nulls, and a polygon with no ring left must
+        # keep null ranges, which explode to no bbox row
+        v = v.cast("long")
+        return F.when(v.isNotNull(), F.greatest(F.lit(0), F.least(F.lit(hi), v)))
+
     def lo(c, off, ext):
-        return F.greatest(F.lit(0), F.least(F.lit(hi), F.floor(
-            (c + F.lit(off)) / F.lit(ext) * F.lit(n)).cast("long")))
+        return clamp(F.floor((c + F.lit(off)) / F.lit(ext) * F.lit(n)))
 
     def up(c, off, ext):
-        return F.greatest(F.lit(0), F.least(F.lit(hi), (F.ceil(
-            (c + F.lit(off)) / F.lit(ext) * F.lit(n)) - 1).cast("long")))
+        return clamp(F.ceil((c + F.lit(off)) / F.lit(ext) * F.lit(n)) - 1)
 
     clean = polys.select("poly_id", _clean_rings_col(F.col("rings"))
-                         .alias("_rings")).where(F.size("_rings") >= 1)
+                         .alias("_rings"))
     outer = F.get(F.col("_rings"), 0)
     xs = F.transform(outer, lambda v: v[0])
     ys = F.transform(outer, lambda v: v[1])
@@ -944,6 +956,10 @@ def _pip_polys(polys: DataFrame, res: int) -> DataFrame:
         up(F.array_max(xs), 180.0, 360.0).alias("_x1"),
         lo(F.array_min(ys), 90.0, 180.0).alias("_y0"),
         up(F.array_max(ys), 90.0, 180.0).alias("_y1"))
+
+
+# the columns _pip_bands groups (and so hash-partitions) its rows by
+_BAND_KEY = ("poly_id", "_iy", "_x0", "_x1")
 
 
 def _pip_bands(polys: DataFrame, res: int) -> DataFrame:
@@ -967,16 +983,19 @@ def _pip_bands(polys: DataFrame, res: int) -> DataFrame:
         return _grid_col(c, 90.0, 180.0, res)
 
     # explode from a projection of its own, so the bbox and the edge
-    # array are computed once per polygon, not once per output row
+    # array are computed once per polygon, not once per output row. An
+    # inner explode would make Catalyst infer size(_edges) > 0 below
+    # that projection, with the edge chain inlined; explode_outer infers
+    # nothing, and the null row of an edgeless polygon is dropped here
     edges = _pip_polys(polys, res).select(
         "poly_id", "_x0", "_x1", "_y0", "_y1",
-        F.explode("_edges").alias("_e"))
+        F.explode_outer("_edges").alias("_e")).where(F.col("_e").isNotNull())
     return (edges
             .select("poly_id", "_x0", "_x1", "_e", F.explode(_index_range(
                 F.greatest(row(F.least("_e.y1", "_e.y2")), F.col("_y0")),
                 F.least(row(F.greatest("_e.y1", "_e.y2")), F.col("_y1"))))
                 .alias("_iy"))
-            .groupBy("poly_id", "_iy", "_x0", "_x1")
+            .groupBy(*_BAND_KEY)
             .agg(F.collect_list("_e").alias("edges")))
 
 
@@ -1014,11 +1033,18 @@ def _pip_pairs(pts: DataFrame, polys: DataFrame, res: int, *,
     rows where :func:`_crossing` holds and keeps the candidates with an
     odd count: all whole-stage codegen, about 7x less CPU per edge than
     the interpreted :func:`_raycast_col`. The count groups by a row id
-    given to each point, so duplicate points each keep their own pair,
-    and by ``cell_id`` first, so a shuffle join's partitioning serves
-    it without another exchange. A stream cannot hold that aggregation
-    as state, so ``stateless`` filters each candidate with
-    :func:`_raycast_col` instead: stream-static joins and a filter."""
+    given to each point, so duplicate points each keep their own pair.
+    Without ``broadcast`` it also groups by ``cell_id`` and by every
+    band column (``_BAND_KEY``). Those add no groups, since each is a
+    function of ``poly_id`` and ``cell_id``, and they spare the count an
+    exchange of its own in either plan Catalyst picks: a shuffle join's
+    ``cell_id`` partitioning clusters it, and with the points broadcast
+    the cover rows keep the band regroup's partitioning, under which
+    all edge rows of one candidate come from one band row. With
+    ``broadcast`` the point side streams, so the count shuffles. A
+    stream cannot hold that aggregation as state, so ``stateless``
+    filters each candidate with :func:`_raycast_col` instead:
+    stream-static joins and a filter."""
     bands = _pip_bands(polys, res)
     if not stateless:
         pts = pts.withColumn("_rid", F.monotonically_increasing_id())
@@ -1036,13 +1062,14 @@ def _pip_pairs(pts: DataFrame, polys: DataFrame, res: int, *,
         cand = join(_cells(rows, res).select("cell_id", "poly_id", "_iy")) \
             .join(F.broadcast(bands.select("poly_id", "_iy", "edges")),
                   ["poly_id", "_iy"])
+        key = ["cell_id", "_rid", "point_id", "poly_id"]
     else:
-        cand = join(_cells(bands, res).select("cell_id", "poly_id", "edges"))
+        cand = join(_cells(bands, res).select("cell_id", *_BAND_KEY, "edges"))
+        key = ["cell_id", "_rid", "point_id", *_BAND_KEY]
     px, py = F.col("x").cast("double"), F.col("y").cast("double")
     if stateless:
         inside = cand.where(_raycast_col(px, py, F.col("edges")))
     else:
-        key = ["cell_id", "_rid", "point_id", "poly_id"]
         inside = (cand.select(*key, px.alias("x"), py.alias("y"),
                               F.explode("edges").alias("_e"))
                   .where(_crossing(F.col("x"), F.col("y"), F.col("_e")))

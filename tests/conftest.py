@@ -69,6 +69,26 @@ def ansi_spark(spark, request):
         spark.conf.set(key, old)
 
 
+@pytest.fixture(params=["broadcast", "shuffle"])
+def pip_plan(spark, request):
+    """The two physical plans of pip_join's cogroup shape. "broadcast"
+    makes the points the broadcast build side, as Catalyst plans
+    perfbench's cached points, here with a hint; "shuffle" turns
+    auto-broadcast off, so the candidate join shuffles both sides on
+    ``cell_id``. Yields (the plan's name, the function that readies a
+    points DataFrame for it)."""
+    from pyspark.sql import functions as F
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if request.param == "shuffle":
+        spark.conf.set(key, "-1")
+    try:
+        yield request.param, (F.broadcast if request.param == "broadcast"
+                              else lambda df: df)
+    finally:
+        spark.conf.set(key, old)
+
+
 @contextmanager
 def spark_jobs(spark):
     """Collect the ids of the Spark jobs started inside the block: the

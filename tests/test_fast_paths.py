@@ -95,7 +95,8 @@ def test_convert_documents_from_parquet_parity(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# streaming point extractor (tile-path fast lane)
+# streaming point extractor (off the tile path; perfbench's per-layer
+# rates call it)
 # ---------------------------------------------------------------------------
 
 def _tree_points(kml):
@@ -382,9 +383,10 @@ def test_simple_point_xy_adversarial_cases():
 
 def test_tile_counts_batch_lane_fallbacks():
     """The fused kernel must produce identical (cell_id, n) batches no
-    matter which lane each document lands in: simple (clean docs),
-    stream (simple-lane bail-outs, e.g. self-closing tags), or tree
-    (stream-lane bail-outs, e.g. mixed container kinds)."""
+    matter which lane each document lands in: simple (clean docs) or
+    tree (simple-lane bail-outs: a self-closing container, which the
+    stream extractor would accept, and mixed container kinds, which it
+    refuses)."""
     from kml2geojson_spark.datagen import synthesize_kml
     from kml2geojson_spark.engine import _tile_counts_batch
     from kml2geojson_spark.kmlparse_fast import simple_point_xy

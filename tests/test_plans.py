@@ -985,3 +985,70 @@ def test_cell_encode_col_res26_is_linear(spark):
                                     "CAST(id AS DOUBLE) AS y")
     plan = _optimized(df.select(cell_encode_col(F.col("x"), F.col("y"), 26)))
     assert plan.count("FLOOR(") <= 8, plan
+
+
+def test_pip_cogroup_builds_each_polygons_edges_once(spark):
+    """perfbench's pip_join shape: points and polygons selected from one
+    cached table. Catalyst inlines projections into the filters it
+    pushes down and infers (a where on the cleaned rings, the
+    isnotnull/size > 0 it infers from an explode), where no
+    subexpression elimination runs; this plan held 3 edge builds
+    (``zip_with``) and 4 ring-cleaning chains. It holds one of each."""
+    from kml2geojson_spark.spatial import pip_join
+    geoms = spark.createDataFrame(
+        [(0, "Point", [[[0.5, 0.5]]]), (1, "Point", [[[9.0, 9.0]]]),
+         (2, "Polygon", [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0],
+                          [-5.0, 5.0], [-5.0, -5.0]]])],
+        "id long, geom_type string, parts array<array<array<double>>>"
+    ).persist()
+    try:
+        geoms.count()
+        pts = geoms.where(F.col("geom_type") == "Point").select(
+            F.col("id").alias("point_id"),
+            F.col("parts")[0][0][0].alias("x"),
+            F.col("parts")[0][0][1].alias("y"))
+        polys = geoms.where(F.col("geom_type") == "Polygon").select(
+            F.col("id").alias("poly_id"), F.col("parts").alias("rings"))
+        joined = pip_join(pts, polys, 8, rings_distribution="cogroup")
+        plan = _optimized(joined)
+        assert "InMemoryRelation" in plan, plan
+        assert plan.count("zip_with(") == 1, plan
+        assert plan.count("filter(transform(") == 1, plan
+        assert [tuple(r) for r in joined.collect()] == [(0, 2)]
+    finally:
+        geoms.unpersist()
+
+
+def test_pip_cogroup_parity_count_needs_no_exchange(spark, pip_plan):
+    """The crossing count groups by ``cell_id`` and by every column the
+    band regroup partitions by, so a shuffle join's ``cell_id``
+    partitioning clusters it, and so does the band regroup's when the
+    points are the broadcast side: no Exchange between the candidate
+    join and the parity HashAggregate. The shuffle join keeps its 3
+    exchanges (band regroup and both join sides); with the points
+    broadcast only the band regroup shuffles."""
+    import re
+    from kml2geojson_spark.spatial import pip_join
+    name, ready = pip_plan
+    pts = ready(spark.createDataFrame(
+        [(i, -10.0 + i * 0.4, -10.0 + i * 0.4) for i in range(50)],
+        "point_id long, x double, y double"))
+    polys = spark.createDataFrame(
+        [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
+               [-5.0, -5.0]]])],
+        "poly_id long, rings array<array<array<double>>>")
+    plan = _plan(pip_join(pts, polys, 6, rings_distribution="cogroup"))
+    lines = plan.splitlines()
+    agg = next(i for i, line in enumerate(lines)
+               if "HashAggregate" in line and "functions=[count(1)]" in line)
+    join = next(i for i, line in enumerate(lines)
+                if re.search(r"(BroadcastHash|ShuffledHash|SortMerge)Join", line))
+    assert agg < join, plan
+    assert not any("Exchange" in line for line in lines[agg:join]), plan
+    shuffles = len(re.findall(r"(?<!Broadcast)Exchange hashpartitioning", plan))
+    if name == "broadcast":
+        assert "BuildLeft" in lines[join], plan
+        assert shuffles == 1, plan
+    else:
+        assert "BroadcastExchange" not in plan, plan
+        assert shuffles == 3, plan

@@ -6,6 +6,8 @@ edge bands that bound the ray cast's work."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -395,3 +397,58 @@ def test_pip_join_keeps_duplicate_points(spark):
                       pip_join(points, polys, PIP_RES,
                                rings_distribution=shape).collect())
         assert got == exp, shape
+
+
+def test_pip_bands_and_cells_skip_polygons_with_no_ring_left(spark):
+    """A polygon with no ring left after cleaning keeps its _pip_polys
+    row (no filter there, so none is pushed below its projection) but
+    explodes to no band and, in the driver shape's bbox rows, to no
+    cell."""
+    sq = _square(0.0, 0.0, 2.0)
+    polys = spark.createDataFrame(
+        [(0, []), (1, [[[5.0, 5.0], [6.0, 6.0]]]), (2, [[[1.0]] * 4]),
+         (3, [[[1.0], [2.0, 2.0], [3.0, 1.0]]]), (4, [sq])], POLY_SCHEMA)
+    assert {r["poly_id"] for r in ops._pip_bands(polys, 6).collect()} == {4}
+    rows = ops._pip_polys(polys, 6).select(
+        "poly_id", F.explode(ops._index_range(F.col("_y0"), F.col("_y1"))))
+    assert {r["poly_id"] for r in rows.collect()} == {4}
+
+
+def test_pip_cogroup_matches_oracle_in_both_plans(spark, pip_plan):
+    """The cogroup shape counts crossings with no exchange after the
+    candidate join, in the broadcast-points plan and in the shuffle-join
+    plan (tests/test_plans.py), so every edge row of a candidate must
+    meet in one task. Both give _pip_oracle's pairs over many-vertex
+    polygons spanning many rows, points on row and column boundaries,
+    and duplicate points: the same row twice keeps both pairs, the same
+    coordinates under another id get their own."""
+    _, ready = pip_plan
+    polys = _band_polys()
+    pts = _band_points(polys)
+    rng = np.random.default_rng(8)
+    cw = 360.0 / (1 << BAND_RES)
+    xs, ys = [], []
+    for _, rings in polys:
+        ring = np.asarray(rings[0])
+        (x0, y0), (x1, y1) = ring.min(axis=0), ring.max(axis=0)
+        cols = np.arange(np.floor((x0 + 180.0) / cw), np.ceil((x1 + 180.0) / cw))
+        xs.append(cols * cw - 180.0)
+        ys.append(rng.uniform(y0, y1, len(cols)))
+    x = np.concatenate(xs)
+    on_cols = pd.DataFrame({"point_id": np.arange(len(x)) + len(pts),
+                            "x": x, "y": np.concatenate(ys)})
+    pts = pd.concat([pts, on_cols], ignore_index=True)
+    moved = pts.iloc[1::7].assign(point_id=lambda d: d["point_id"] + 10**6)
+    pts = pd.concat([pts, pts.iloc[::5], moved], ignore_index=True)
+    exp = Counter()
+    for pid, rings in polys:
+        inside = _raycast_np(pts["x"].to_numpy(), pts["y"].to_numpy(),
+                             _rings_to_np(rings))
+        exp.update((int(p), pid) for p in pts["point_id"].to_numpy()[inside])
+    got = Counter((r["point_id"], r["poly_id"]) for r in pip_join(
+        ready(spark.createDataFrame(pts)),
+        spark.createDataFrame(polys, POLY_SCHEMA), BAND_RES,
+        rings_distribution="cogroup").collect())
+    assert set(got) == _pip_oracle(pts, polys)
+    assert got == exp
+    assert max(exp.values()) == 2 and len(exp) > 500
