@@ -75,15 +75,15 @@ def convert_kml_dir(spark: SparkSession, input_path: str, output_dir: str, *,
     on the driver (matching the single-file reference CLI,
     cli.py:48-66). Returns all written paths.
 
-    ``max_files`` is the driver-safety gate (the pip_join
-    ``max_driver_rings`` pattern): this CLI-parity path iterates the
-    converted documents through the driver to write local files, which
-    is unbounded state if pointed at a whole corpus — above the gate it
-    raises instead of OOMing mid-write. For corpus-scale output use the
-    distributed sink (``convert_documents`` + ``df.write``), which
-    never routes rows through the driver. Rows stream through
-    ``toLocalIterator`` (one partition in memory at a time), so below
-    the gate peak driver memory is one partition, not the directory.
+    ``max_files`` is the driver-safety gate: this CLI-parity path
+    iterates the converted documents through the driver to write local
+    files, which is unbounded state if pointed at a whole corpus —
+    above the gate it raises instead of OOMing mid-write. For
+    corpus-scale output use the distributed sink (``convert_documents``
+    + ``df.write``), which never routes rows through the driver. Rows
+    stream through ``toLocalIterator`` (one partition in memory at a
+    time), so below the gate peak driver memory is one partition, not
+    the directory.
     """
     from .convert_core import disambiguate_names
     from .engine import convert_documents

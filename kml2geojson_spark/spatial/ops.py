@@ -310,7 +310,7 @@ def _rings_to_np(rings) -> list[np.ndarray]:
     surviving vertices. The reference semantics for every pip/cover
     path (:func:`_arrow_rings` and :func:`_clean_rings_col` apply the
     same rule): a malformed row must neither crash a task nor change
-    results between the driver and cogroup shapes."""
+    the pip verdict between the Column and numpy ray casts."""
     out = []
     for ring in rings:
         pts = [p[:2] for p in ring if p is not None and len(p) >= 2]
@@ -801,38 +801,26 @@ def _raycast_np(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
 def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
              point_id: str = "point_id", x: str = "x", y: str = "y",
              poly_id: str = "poly_id", rings: str = "rings",
-             broadcast_polygons: bool = True,
              salt: Optional[int] = None,
-             rings_distribution: str = "auto",
-             max_driver_rings: int = 20_000) -> DataFrame:
+             rings_distribution: str = "cogroup") -> DataFrame:
     """Ray-casting point-in-polygon join, bucketed by quadtree cell.
 
     Points get a cell id; each polygon's bbox rows at ``res`` get the
     polygon's edges that can cross a ray cast from a point in that row
-    (:func:`_pip_bands`); the candidate join is an equi-join on
-    ``cell_id``, and the even-odd ray cast counts :func:`_crossing` over
-    the row's edges in whole-stage-codegen Column expressions
-    (:func:`_pip_pairs`). Nothing runs in Python and the rings never
-    touch the driver. ``salt`` routes hot cells through the
-    explicitly-salted join (:func:`.salted.salted_join`). Two plan
-    shapes, chosen by ``rings_distribution``:
-
-    - ``"driver"`` — polygons are a dimension table: the (cell, polygon,
-      row) cover and the per-row edge arrays are two broadcast build
-      sides (when ``broadcast_polygons``), so the point side shuffles
-      only for the crossing count, and each edge is broadcast once per
-      grid row it spans, not once per cell. REFUSED above
-      ``max_driver_rings`` polygons — a broadcast must never carry an
-      unbounded table.
-    - ``"cogroup"`` — one join: each cover row carries its row's edges.
-      Catalyst picks the plan. As a shuffle join on ``cell_id``, each
-      task holds only its cells' cover rows; with the points broadcast
-      (a small or cached point table), the cover rows stay where the
-      per-row edge regroup put them. Either way the crossing count
-      needs no further exchange, and edge bytes are replicated per
-      covering cell, never per point.
-    - ``"auto"`` (default) — one cheap count() on the polygon side
-      picks driver below ``max_driver_rings``, cogroup above.
+    (:func:`_pip_bands`), and each cell of a row carries that row's
+    edges; the candidate join is one equi-join on ``cell_id``, and the
+    even-odd ray cast counts :func:`_crossing` over the row's edges in
+    whole-stage-codegen Column expressions (:func:`_pip_pairs`).
+    Nothing runs in Python, the rings never touch the driver, and
+    building the plan runs no Spark job. Catalyst picks the join: as a
+    shuffle join on ``cell_id`` each task holds only its cells' cover
+    rows; with the points broadcast (a small or cached point table) the
+    cover rows stay where the per-row edge regroup put them. Either way
+    the crossing count needs no further exchange, and edge bytes are
+    replicated per covering cell, never per point. ``salt`` routes hot
+    cells through the explicitly-salted join
+    (:func:`.salted.salted_join`). ``rings_distribution`` names this
+    plan, ``"cogroup"``, its only value.
 
     Cost: each candidate pair costs work linear in the edges of its
     polygon that span the point's grid row — about vertices / rows
@@ -844,34 +832,16 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
 
     A point lives in exactly one cell and a polygon covers a cell at
     most once, so candidate pairs are unique — no post-join dedup
-    shuffle in either shape.
+    shuffle.
     """
-    if rings_distribution not in ("auto", "driver", "cogroup"):
+    if rings_distribution != "cogroup":
         raise ValueError(f"unknown rings_distribution {rings_distribution!r}")
     pts = encode_points(points.select(
         F.col(point_id).alias("point_id"), F.col(x).alias("x"),
         F.col(y).alias("y")), res)
     polys = polygons.select(F.col(poly_id).alias("poly_id"),
                             F.col(rings).alias("rings"))
-
-    if rings_distribution in ("auto", "driver"):
-        # bounded probe: limit(threshold+1).count() stops scanning once
-        # the threshold is exceeded instead of evaluating the whole
-        # polygon lineage just to size-check it
-        bounded = polys.limit(max_driver_rings + 1).count()
-        if rings_distribution == "auto":
-            rings_distribution = \
-                "driver" if bounded <= max_driver_rings else "cogroup"
-        elif bounded > max_driver_rings:
-            raise ValueError(
-                f"rings_distribution='driver' with more than "
-                f"{max_driver_rings} polygons (max_driver_rings): "
-                f"broadcasting them would bottleneck the driver — use "
-                f"'cogroup' (or raise the threshold explicitly)")
-
-    return _pip_pairs(pts, polys, res, salt=salt,
-                      broadcast=rings_distribution == "driver"
-                      and broadcast_polygons)
+    return _pip_pairs(pts, polys, res, salt=salt)
 
 
 def _clean_rings_col(rings: Column) -> Column:
@@ -1016,60 +986,43 @@ def _cells(rows: DataFrame, res: int) -> DataFrame:
 
 
 def _pip_pairs(pts: DataFrame, polys: DataFrame, res: int, *,
-               broadcast: bool, salt: Optional[int] = None,
+               salt: Optional[int] = None,
                stateless: bool = False) -> DataFrame:
     """Encoded points (point_id, x, y, cell_id) ⋈ the polygons' bbox
     cells on ``cell_id``, kept where the ray cast over the edges of the
     cell's row (:func:`_pip_bands`) says inside → (point_id long,
-    poly_id long).
-
-    With ``broadcast``, the broadcast cells carry only (poly_id, _iy),
-    straight from the bbox, and the edges come from a second broadcast
-    join on (poly_id, _iy), so the broadcast holds each row's edges once
-    instead of once per cell. Otherwise the cells of each band row carry
-    its edges into one shuffle join.
+    poly_id long). The cells of each band row carry its edges into one
+    join.
 
     The ray cast explodes each candidate's edges into rows, keeps the
     rows where :func:`_crossing` holds and keeps the candidates with an
     odd count: all whole-stage codegen, about 7x less CPU per edge than
     the interpreted :func:`_raycast_col`. The count groups by a row id
-    given to each point, so duplicate points each keep their own pair.
-    Without ``broadcast`` it also groups by ``cell_id`` and by every
-    band column (``_BAND_KEY``). Those add no groups, since each is a
-    function of ``poly_id`` and ``cell_id``, and they spare the count an
-    exchange of its own in either plan Catalyst picks: a shuffle join's
-    ``cell_id`` partitioning clusters it, and with the points broadcast
-    the cover rows keep the band regroup's partitioning, under which
-    all edge rows of one candidate come from one band row. With
-    ``broadcast`` the point side streams, so the count shuffles. A
-    stream cannot hold that aggregation as state, so ``stateless``
-    filters each candidate with :func:`_raycast_col` instead:
-    stream-static joins and a filter."""
-    bands = _pip_bands(polys, res)
+    given to each point, so duplicate points each keep their own pair,
+    and also by ``cell_id`` and by every band column (``_BAND_KEY``).
+    Those add no groups, since each is a function of ``poly_id`` and
+    ``cell_id``, and they spare the count an exchange of its own in
+    either plan Catalyst picks: a shuffle join's ``cell_id``
+    partitioning clusters it, and with the points broadcast the cover
+    rows keep the band regroup's partitioning, under which all edge
+    rows of one candidate come from one band row. A stream cannot hold
+    that aggregation as state, so ``stateless`` filters each candidate
+    with :func:`_raycast_col` instead: a stream-static join and a
+    filter."""
+    cells = _cells(_pip_bands(polys, res), res) \
+        .select("cell_id", *_BAND_KEY, "edges")
     if not stateless:
         pts = pts.withColumn("_rid", F.monotonically_increasing_id())
-
-    def join(build):
-        if salt:
-            from .salted import salted_join
-            return salted_join(pts, build, "cell_id", n_salt=salt)
-        return pts.join(F.broadcast(build) if broadcast else build, "cell_id")
-
-    if broadcast:
-        rows = _pip_polys(polys, res).select(
-            "poly_id", "_x0", "_x1",
-            F.explode(_index_range(F.col("_y0"), F.col("_y1"))).alias("_iy"))
-        cand = join(_cells(rows, res).select("cell_id", "poly_id", "_iy")) \
-            .join(F.broadcast(bands.select("poly_id", "_iy", "edges")),
-                  ["poly_id", "_iy"])
-        key = ["cell_id", "_rid", "point_id", "poly_id"]
+    if salt:
+        from .salted import salted_join
+        cand = salted_join(pts, cells, "cell_id", n_salt=salt)
     else:
-        cand = join(_cells(bands, res).select("cell_id", *_BAND_KEY, "edges"))
-        key = ["cell_id", "_rid", "point_id", *_BAND_KEY]
+        cand = pts.join(cells, "cell_id")
     px, py = F.col("x").cast("double"), F.col("y").cast("double")
     if stateless:
         inside = cand.where(_raycast_col(px, py, F.col("edges")))
     else:
+        key = ["cell_id", "_rid", "point_id", *_BAND_KEY]
         inside = (cand.select(*key, px.alias("x"), py.alias("y"),
                               F.explode("edges").alias("_e"))
                   .where(_crossing(F.col("x"), F.col("y"), F.col("_e")))
@@ -3280,8 +3233,7 @@ def zonal_stats(points: DataFrame, polygons: DataFrame, res: int, *,
     and sum are exact BIGINTs, the mean is ONE division.
 
     Scale shape: inherits :func:`pip_join`'s cell-bucketed candidate
-    discipline (broadcast dimension polygons or the any-scale shuffled
-    "cogroup" shape via ``pip_kwargs``); the value join is a key
+    join (``pip_kwargs`` forward to it); the value join is a key
     equi-join on point_id; the final aggregate is keyed by polygon.
     Points outside every polygon contribute nothing (inner semantics —
     use :func:`pip_anti_join` for the complement).

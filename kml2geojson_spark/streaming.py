@@ -256,36 +256,24 @@ def stream_purchase_click_join(events: DataFrame, *,
 
 
 def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
-                      res: int, *, max_driver_rings: int = 20_000) -> DataFrame:
+                      res: int) -> DataFrame:
     """Streaming spatial join: points parsed from a documents STREAM
     against a STATIC polygon dimension → incremental per-polygon point
     counts.
 
-    Stream-static shape: the polygon cover (cell_id, poly_id, grid
-    row) and each grid row's edges are broadcast build sides (static
-    dimension, size-gated by ``max_driver_rings``, enforced below with
-    a bounded probe), the streaming points equi-join them on their
-    cell id and then on (poly_id, row), and the exact
-    ray cast is a Column filter with batch's crossing rule (batch counts
-    the same crossings with an aggregation, which a stream would have to
-    keep as state) — all streaming-legal operators, so Spark maintains
-    only the final per-polygon running counts as state. The batch counterpart
+    Stream-static shape: the streaming points equi-join
+    :func:`.spatial.pip_join`'s static cell cover (each cell carrying
+    its grid row's edges) on their cell id, and the exact ray cast is a
+    Column filter with batch's crossing rule (batch counts the same
+    crossings with an aggregation, which a stream would have to keep as
+    state) — all streaming-legal operators, so Spark maintains only the
+    final per-polygon running counts as state. Building the query runs
+    no Spark job. The batch counterpart
     (``pip_join(...).groupBy(poly_id).count()``) equals the streamed
     result once the stream drains (asserted in tests).
     """
     from .spatial import encode_points
     from .spatial.ops import _pip_pairs
-
-    # enforce the broadcast size gate ourselves: the streaming shape
-    # always broadcasts the cover, so an oversized polygon side must
-    # refuse up front rather than silently broadcast unbounded rings
-    bounded = polygons.limit(max_driver_rings + 1).count()
-    if bounded > max_driver_rings:
-        raise ValueError(
-            f"stream_pip_counts: polygon dimension exceeds "
-            f"max_driver_rings={max_driver_rings}; the streaming shape "
-            f"broadcasts the polygon cover — pre-aggregate/simplify the "
-            f"polygon side or raise the threshold explicitly")
 
     pts = _extract_points_stream(docs)
     # deterministic row id (monotonically_increasing_id is illegal on
@@ -296,8 +284,7 @@ def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
         "x", "y")
     pts = encode_points(pts, res)
     polys = polygons.select(F.col("poly_id"), F.col("rings"))
-    matched = _pip_pairs(pts, polys, res, broadcast=True,
-                         stateless=True)
+    matched = _pip_pairs(pts, polys, res, stateless=True)
     return matched.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"))
 

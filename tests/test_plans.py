@@ -144,10 +144,10 @@ def test_ivf_probe_join_broadcasts_codebook(spark):
 
 
 def test_pip_cogroup_plan_two_shuffles_no_python_cover(spark):
-    """Both pip shapes run without Python: the bbox cover, the edge
-    arrays and the ray cast are Column expressions around a cell
-    equi-join — no Python eval or map node of any kind, no
-    CartesianProduct. ("MapInArrow" also matches the pre-4.0 node name
+    """pip_join runs without Python: the bbox cover, the edge arrays and
+    the ray cast are Column expressions around a cell equi-join — no
+    Python eval or map node of any kind, no CartesianProduct.
+    ("MapInArrow" also matches the pre-4.0 node name
     "PythonMapInArrow".)"""
     import numpy as np
     import pandas as pd
@@ -159,41 +159,10 @@ def test_pip_cogroup_plan_two_shuffles_no_python_cover(spark):
         [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
                [-5.0, -5.0]]])],
         "poly_id long, rings array<array<array<double>>>")
-    for shape in ("driver", "cogroup"):
-        plan = _plan(pip_join(pts, polys, 6, rings_distribution=shape))
-        for marker in ("FlatMapCoGroupsInPandas", "MapInPandas",
-                       "MapInArrow", "ArrowEvalPython", "BatchEvalPython",
-                       "CartesianProduct"):
-            assert marker not in plan, f"{marker} in {shape} pip plan"
-
-
-def test_pip_driver_broadcasts_edges_per_row_not_per_cell(spark):
-    """The driver pip shape broadcasts two build sides: the cell cover,
-    keyed by cell_id and carrying no edges, and the per-row edge arrays,
-    keyed by (poly_id, _iy). So the broadcast holds each row's edges
-    once, however many cells the row has."""
-    import contextlib
-    import io
-    import re
-    from kml2geojson_spark.spatial import pip_join
-    pts = spark.createDataFrame([(0, 0.5, 0.5)],
-                                "point_id long, x double, y double")
-    polys = spark.createDataFrame(
-        [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
-               [-5.0, -5.0]]])],
-        "poly_id long, rings array<array<array<double>>>")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pip_join(pts, polys, 9, rings_distribution="driver") \
-            .explain(mode="formatted")
-    # formatted plans list each node as "(k) Name" followed by its
-    # "Input [n]: [...]" columns
-    inputs = re.findall(r"\(\d+\) BroadcastExchange\s*\nInput \[\d+\]: "
-                        r"\[([^\]]*)\]", buf.getvalue())
-    assert len(inputs) == 2, buf.getvalue()
-    cols = [{c.split("#")[0] for c in i.split(", ")} for i in inputs]
-    assert {"cell_id", "poly_id", "_iy"} in cols, cols
-    assert {"poly_id", "_iy", "edges"} in cols, cols
+    plan = _plan(pip_join(pts, polys, 6))
+    for marker in ("FlatMapCoGroupsInPandas", "MapInPandas", "MapInArrow",
+                   "ArrowEvalPython", "BatchEvalPython", "CartesianProduct"):
+        assert marker not in plan, f"{marker} in pip plan"
 
 
 def test_global_quantiles_no_unpartitioned_sample_window(spark):

@@ -632,20 +632,6 @@ def test_pip_join_cogroup_large_polygon_table_no_driver_collect(
     assert got == _pip_oracle(pts, polys)
 
 
-def test_pip_join_driver_mode_refuses_oversized_polygon_table(spark):
-    pts, polys = _big_poly_corpus(n_polys=300, n_pts=10)
-    points_df = spark.createDataFrame(pts)
-    poly_df = spark.createDataFrame(
-        polys, "poly_id long, rings array<array<array<double>>>")
-    with pytest.raises(ValueError, match="max_driver_rings"):
-        pip_join(points_df, poly_df, 7, rings_distribution="driver",
-                 max_driver_rings=100)
-    # auto mode silently takes the cogroup path instead
-    out = pip_join(points_df, poly_df, 7, max_driver_rings=100)
-    assert {(r["point_id"], r["poly_id"]) for r in out.collect()} \
-        == _pip_oracle(pts, polys)
-
-
 def test_pip_join_cogroup_salted_matches_unsalted(spark):
     pts = _points_pdf()
     polys = _polygons()
@@ -662,9 +648,10 @@ def test_pip_join_cogroup_salted_matches_unsalted(spark):
 
 
 def test_pip_join_modes_agree_on_malformed_polygons(spark):
-    """Malformed rings (short rings, bad vertices) must produce the
-    SAME output in driver and cogroup modes — auto mode picks by table
-    size, so divergence would make results depend on row count."""
+    """Malformed rings (short rings, bad vertices, no valid ring) give
+    the numpy oracle's pairs: the Column ring cleaning applies
+    ``_rings_to_np``'s rule, and a polygon with no ring left matches
+    nothing instead of failing the task."""
     pts = _points_pdf()
     sq = [[-10.0, -10.0], [10.0, -10.0], [10.0, 10.0], [-10.0, 10.0],
           [-10.0, -10.0]]
@@ -681,13 +668,42 @@ def test_pip_join_modes_agree_on_malformed_polygons(spark):
     points_df = spark.createDataFrame(pts)
     poly_df = spark.createDataFrame(
         polys, "poly_id long, rings array<array<array<double>>>")
-    a = {(r["point_id"], r["poly_id"]) for r in
-         pip_join(points_df, poly_df, 6,
-                  rings_distribution="driver").collect()}
-    b = {(r["point_id"], r["poly_id"]) for r in
-         pip_join(points_df, poly_df, 6,
-                  rings_distribution="cogroup").collect()}
-    assert a == b == _pip_oracle(pts, polys)
+    got = {(r["point_id"], r["poly_id"]) for r in
+           pip_join(points_df, poly_df, 6).collect()}
+    assert got == _pip_oracle(pts, polys)
+    assert {pid for _, pid in got} == {0, 1, 2}
+
+
+def test_pip_join_and_stream_pip_counts_build_without_a_job(spark, tmp_path):
+    """Building pip_join's plan or stream_pip_counts' query starts no
+    Spark job: nothing probes the polygon side's size. The one plan is
+    the only ``rings_distribution`` accepted."""
+    import kml2geojson_spark as k2gs
+    from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
+    pts = _points_pdf()
+    polys = _polygons()
+    points_df = spark.createDataFrame(pts)
+    poly_df = spark.createDataFrame(
+        polys, "poly_id long, rings array<array<array<double>>>")
+    src = str(tmp_path / "docs")
+    kml = ('<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
+           '<Placemark><Point><coordinates>1.0,1.0</coordinates></Point>'
+           '</Placemark></Document></kml>')
+    spark.createDataFrame([("d0", k2gs.pack_spans(kml))],
+                          k2gs.spans_schema()).write.parquet(src)
+    stream = stream_documents(spark, src)
+    with spark_jobs(spark) as built:
+        joined = pip_join(points_df, poly_df, 6)
+        streamed = stream_pip_counts(stream, poly_df, 6)
+    assert built == []
+    assert streamed.isStreaming
+    # the job group does see the jobs the plan runs once it is executed
+    with spark_jobs(spark) as ran:
+        got = {(r["point_id"], r["poly_id"]) for r in joined.collect()}
+    assert ran and got == _pip_oracle(pts, polys)
+    for mode in ("driver", "auto"):
+        with pytest.raises(ValueError, match="rings_distribution"):
+            pip_join(points_df, poly_df, 6, rings_distribution=mode)
 
 
 def test_within_distance_join_matches_bruteforce(spark):

@@ -242,20 +242,18 @@ def test_raycast_col_equals_numpy_on_edge_cases(ansi):
 
 
 def test_pip_join_shapes_and_stream_agree_on_edge_cases(ansi, tmp_path):
-    """pip_join's driver, cogroup and salted shapes, and the streaming
-    stream_pip_counts, all give _pip_oracle's pairs under ANSI mode."""
+    """pip_join, plain and salted, and the streaming stream_pip_counts
+    all give _pip_oracle's pairs under ANSI mode."""
     from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
     spark = ansi
     pts = _pip_points()
     exp = _pip_oracle(pts, PIP_POLYS)
     points = spark.createDataFrame(pts)
     polys = spark.createDataFrame(PIP_POLYS, POLY_SCHEMA)
-    for shape, salt in (("driver", None), ("cogroup", None), ("cogroup", 3),
-                        ("driver", 3)):
+    for salt in (None, 3):
         got = {(r["point_id"], r["poly_id"]) for r in
-               pip_join(points, polys, PIP_RES, rings_distribution=shape,
-                        salt=salt).collect()}
-        assert got == exp, (shape, salt)
+               pip_join(points, polys, PIP_RES, salt=salt).collect()}
+        assert got == exp, salt
 
     placemarks = "".join(
         f"<Placemark><Point><coordinates>{x!r},{y!r}</coordinates></Point>"
@@ -366,8 +364,8 @@ def test_pip_bands_keep_exactly_each_rows_edges(spark):
 
 def test_pip_join_many_vertex_polygons_across_rows(ansi):
     """Polygons of 300-500 vertices spanning many rows, with holes and
-    with vertices and points exactly on row boundaries: every pip shape
-    gives _pip_oracle's pairs."""
+    with vertices and points exactly on row boundaries: pip_join, plain
+    and salted, gives _pip_oracle's pairs."""
     spark = ansi
     polys = _band_polys()
     pts = _band_points(polys)
@@ -375,35 +373,30 @@ def test_pip_join_many_vertex_polygons_across_rows(ansi):
     assert len(exp) > 500
     points = spark.createDataFrame(pts)
     poly_df = spark.createDataFrame(polys, POLY_SCHEMA)
-    for shape, salt in (("driver", None), ("cogroup", None), ("driver", 3),
-                        ("cogroup", 3)):
+    for salt in (None, 3):
         got = {(r["point_id"], r["poly_id"]) for r in
-               pip_join(points, poly_df, BAND_RES, rings_distribution=shape,
-                        salt=salt).collect()}
-        assert got == exp, (shape, salt)
+               pip_join(points, poly_df, BAND_RES, salt=salt).collect()}
+        assert got == exp, salt
 
 
 def test_pip_join_keeps_duplicate_points(spark):
     """A point listed twice (same id, same coordinates) gives its pairs
-    twice in every shape: the crossing count is per input row, so the
-    copies' crossings never add up to an even count."""
+    twice: the crossing count is per input row, so the copies'
+    crossings never add up to an even count."""
     from collections import Counter
     pts = _pip_points()
     exp = Counter({pair: 2 for pair in _pip_oracle(pts, PIP_POLYS)})
     points = spark.createDataFrame(pd.concat([pts, pts]))
     polys = spark.createDataFrame(PIP_POLYS, POLY_SCHEMA)
-    for shape in ("driver", "cogroup"):
-        got = Counter((r["point_id"], r["poly_id"]) for r in
-                      pip_join(points, polys, PIP_RES,
-                               rings_distribution=shape).collect())
-        assert got == exp, shape
+    got = Counter((r["point_id"], r["poly_id"]) for r in
+                  pip_join(points, polys, PIP_RES).collect())
+    assert got == exp
 
 
 def test_pip_bands_and_cells_skip_polygons_with_no_ring_left(spark):
     """A polygon with no ring left after cleaning keeps its _pip_polys
     row (no filter there, so none is pushed below its projection) but
-    explodes to no band and, in the driver shape's bbox rows, to no
-    cell."""
+    explodes to no band, and its null grid ranges to no bbox row."""
     sq = _square(0.0, 0.0, 2.0)
     polys = spark.createDataFrame(
         [(0, []), (1, [[[5.0, 5.0], [6.0, 6.0]]]), (2, [[[1.0]] * 4]),

@@ -259,21 +259,6 @@ def test_stream_pip_counts_equals_batch(spark, tmp_path):
     assert got == batch and got
 
 
-def test_stream_pip_counts_refuses_oversized_polygons(spark, tmp_path):
-    from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
-    import pytest as _pytest
-    src = str(tmp_path / "incoming4")
-    docs = k2gs.synthesize_documents_kml(spark, 5, seed=41, max_placemarks=2)
-    docs.write.parquet(src)
-    polys = spark.range(50).selectExpr(
-        "id AS poly_id",
-        "array(array(array(0.0d, 0.0d), array(1.0d, 0.0d), "
-        "array(1.0d, 1.0d), array(0.0d, 0.0d))) AS rings")
-    with _pytest.raises(ValueError, match="max_driver_rings"):
-        stream_pip_counts(stream_documents(spark, src), polys, 5,
-                          max_driver_rings=10)
-
-
 def test_stream_dedup_new_docs_across_batches(spark, tmp_path):
     """Exact-dup suppression with cross-batch state: a duplicate
     arriving in a LATER micro-batch is suppressed; each content emits
