@@ -22,6 +22,13 @@ Design rules (BASELINE.json north_star / SURVEY.md §2.3):
   at roughly 75-350 ns per array element on that host, so work over
   large arrays is exploded into rows instead (the PIP ray cast ran
   about 7x faster that way).
+- A job's generated classes fit Spark's codegen cache: 100 entries of
+  (classloader, source) in 4 LRU segments of 25, where local mode holds
+  each whole-stage subtree twice (driver and executor classloaders) and
+  each operator outside whole-stage codegen adds its own classes. Past
+  25 in a segment every job recompiles them in its task threads. So a
+  plan carries no operator it can do without: the PIP cover is not
+  regrouped into per-row edge arrays (an aggregation outside codegen).
 - A Column kernel references each of its inputs a bounded number of
   times, never a number that doubles per step. Inside one Project,
   subexpression elimination hides repeated inputs, but Catalyst also
@@ -815,8 +822,8 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
     building the plan runs no Spark job. Catalyst picks the join: as a
     shuffle join on ``cell_id`` each task holds only its cells' cover
     rows; with the points broadcast (a small or cached point table) the
-    cover rows stay where the per-row edge regroup put them. Either way
-    the crossing count needs no further exchange, and edge bytes are
+    cover rows stay in the partition of their polygon. Either way the
+    crossing count needs no further exchange, and edge bytes are
     replicated per covering cell, never per point. ``salt`` routes hot
     cells through the explicitly-salted join
     (:func:`.salted.salted_join`). ``rings_distribution`` names this
@@ -928,27 +935,24 @@ def _pip_polys(polys: DataFrame, res: int) -> DataFrame:
         up(F.array_max(ys), 90.0, 180.0).alias("_y1"))
 
 
-# the columns _pip_bands groups (and so hash-partitions) its rows by
-_BAND_KEY = ("poly_id", "_iy", "_x0", "_x1")
-
-
 def _pip_bands(polys: DataFrame, res: int) -> DataFrame:
-    """(poly_id, rings) → (poly_id, _iy, _x0, _x1, edges): one row per
-    grid row ``_iy`` of the polygon's outer-ring bbox at ``res`` (whose
-    columns run ``_x0.._x1``) that holds any of the polygon's edges (all
-    rings) able to cross a ray cast from a point in that row.
+    """(poly_id, rings) → (poly_id, _iy, _x0, _x1, _e): one row per grid
+    row ``_iy`` of the polygon's outer-ring bbox at ``res`` (whose
+    columns run ``_x0.._x1``) and per edge ``_e`` of the polygon (all
+    rings) able to cross a ray cast from a point in that row, all rows
+    of a polygon in one partition (the polygons are hash-partitioned by
+    ``poly_id`` first).
 
     An edge crosses only when ``min(y1, y2) <= py < max(y1, y2)``, and
     the point's grid row is ``_grid_col(py)``, the same expression
     :func:`encode_points` uses, which is monotone in ``py``. So giving
     each edge the rows ``_grid_col(min y).._grid_col(max y)`` drops only
     edges that cannot cross, and the verdict is unchanged (an edge with
-    a non-finite y never crosses: its abscissa is NaN). A row without
-    edges has no row here — no point there can be inside. Each edge is
-    exploded to its rows and the rows regrouped, so the work is the
-    output size, not rows × edges; the regrouping shuffles the polygon
-    side only. Edge order within a row is arbitrary, which the ray
-    cast's crossing count does not see."""
+    a non-finite y never crosses: its abscissa is NaN). A horizontal
+    edge (``y1 == y2``) or one with a null ``y`` crosses no ray, so it
+    has no row. A row without edges has no row here — no point there
+    can be inside. Each edge is exploded to its rows, so the work is the
+    output size, not rows × edges."""
     def row(c):
         return _grid_col(c, 90.0, 180.0, res)
 
@@ -957,16 +961,14 @@ def _pip_bands(polys: DataFrame, res: int) -> DataFrame:
     # inner explode would make Catalyst infer size(_edges) > 0 below
     # that projection, with the edge chain inlined; explode_outer infers
     # nothing, and the null row of an edgeless polygon is dropped here
-    edges = _pip_polys(polys, res).select(
+    edges = _pip_polys(polys.repartition("poly_id"), res).select(
         "poly_id", "_x0", "_x1", "_y0", "_y1",
-        F.explode_outer("_edges").alias("_e")).where(F.col("_e").isNotNull())
-    return (edges
-            .select("poly_id", "_x0", "_x1", "_e", F.explode(_index_range(
-                F.greatest(row(F.least("_e.y1", "_e.y2")), F.col("_y0")),
-                F.least(row(F.greatest("_e.y1", "_e.y2")), F.col("_y1"))))
-                .alias("_iy"))
-            .groupBy(*_BAND_KEY)
-            .agg(F.collect_list("_e").alias("edges")))
+        F.explode_outer("_edges").alias("_e")).where(
+            F.col("_e").isNotNull() & (F.col("_e.y1") != F.col("_e.y2")))
+    return edges.select("poly_id", F.explode(_index_range(
+        F.greatest(row(F.least("_e.y1", "_e.y2")), F.col("_y0")),
+        F.least(row(F.greatest("_e.y1", "_e.y2")), F.col("_y1"))))
+        .alias("_iy"), "_x0", "_x1", "_e")
 
 
 def _index_range(a: Column, b: Column) -> Column:
@@ -991,27 +993,27 @@ def _pip_pairs(pts: DataFrame, polys: DataFrame, res: int, *,
     """Encoded points (point_id, x, y, cell_id) ⋈ the polygons' bbox
     cells on ``cell_id``, kept where the ray cast over the edges of the
     cell's row (:func:`_pip_bands`) says inside → (point_id long,
-    poly_id long). The cells of each band row carry its edges into one
-    join.
+    poly_id long). Every cell of a band row is one cover row per edge of
+    that row, all in one join.
 
-    The ray cast explodes each candidate's edges into rows, keeps the
-    rows where :func:`_crossing` holds and keeps the candidates with an
-    odd count: all whole-stage codegen, about 7x less CPU per edge than
+    The join gives one row per candidate and edge; the rows where
+    :func:`_crossing` holds are counted and the candidates with an odd
+    count kept: all whole-stage codegen, about 7x less CPU per edge than
     the interpreted :func:`_raycast_col`. The count groups by a row id
     given to each point, so duplicate points each keep their own pair,
-    and also by ``cell_id`` and by every band column (``_BAND_KEY``).
-    Those add no groups, since each is a function of ``poly_id`` and
-    ``cell_id``, and they spare the count an exchange of its own in
-    either plan Catalyst picks: a shuffle join's ``cell_id``
+    and by ``cell_id`` and ``poly_id``, so it needs no exchange of its
+    own in either plan Catalyst picks: a shuffle join's ``cell_id``
     partitioning clusters it, and with the points broadcast the cover
-    rows keep the band regroup's partitioning, under which all edge
-    rows of one candidate come from one band row. A stream cannot hold
-    that aggregation as state, so ``stateless`` filters each candidate
-    with :func:`_raycast_col` instead: a stream-static join and a
-    filter."""
-    cells = _cells(_pip_bands(polys, res), res) \
-        .select("cell_id", *_BAND_KEY, "edges")
-    if not stateless:
+    rows keep :func:`_pip_bands`' ``poly_id`` partitioning. A stream
+    cannot hold that aggregation as state, so ``stateless`` gathers each
+    cover cell's edges into an array on the static side and filters each
+    candidate with :func:`_raycast_col` instead: a stream-static join
+    and a filter."""
+    cells = _cells(_pip_bands(polys, res), res).select("cell_id", "poly_id", "_e")
+    if stateless:
+        cells = cells.groupBy("cell_id", "poly_id").agg(
+            F.collect_list("_e").alias("edges"))
+    else:
         pts = pts.withColumn("_rid", F.monotonically_increasing_id())
     if salt:
         from .salted import salted_join
@@ -1022,11 +1024,8 @@ def _pip_pairs(pts: DataFrame, polys: DataFrame, res: int, *,
     if stateless:
         inside = cand.where(_raycast_col(px, py, F.col("edges")))
     else:
-        key = ["cell_id", "_rid", "point_id", *_BAND_KEY]
-        inside = (cand.select(*key, px.alias("x"), py.alias("y"),
-                              F.explode("edges").alias("_e"))
-                  .where(_crossing(F.col("x"), F.col("y"), F.col("_e")))
-                  .groupBy(*key).count()
+        inside = (cand.where(_crossing(px, py, F.col("_e")))
+                  .groupBy("cell_id", "_rid", "point_id", "poly_id").count()
                   .where(F.col("count") % 2 == 1))
     return inside.select(F.col("point_id").cast("long"),
                          F.col("poly_id").cast("long"))
@@ -1131,12 +1130,14 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int, res: int,
     cand = _kring_candidates(points, queries, res, radius,
                              point_id=point_id, x=x, y=y,
                              query_id=query_id) \
-        .withColumnRenamed("_pid", "neighbor_id")
+        .select("query_id", F.col("_pid").alias("neighbor_id"), "dist2")
+    # query_id first: the exchange's and the window's key projections then
+    # read ordinal 0, the same generated classes other operators' long keys
+    # compile to, so a job caches fewer classes
     w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
                                                F.col("neighbor_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "dist2", "rank"))
+            .where(F.col("rank") <= k))
 
 
 def within_distance_join(points: DataFrame, queries: DataFrame,

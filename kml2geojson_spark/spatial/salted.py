@@ -31,24 +31,24 @@ def hot_keys(df: DataFrame, key: str, *, top: int = 64,
     """Sampled heavy-hitter detection: keys whose sampled share exceeds
     ``min_share`` (and that occur at least twice), capped at ``top``.
 
-    One query: the per-key counts are coalesced into one partition and
-    aggregated once more into the sample's total and the count-sorted
-    (key, count) list, which is cut at the threshold
-    ``max(2, min_share * total)`` and at ``top`` before it leaves the
-    executor. No separate count job runs, and the driver only ever sees
-    ≤ ``top`` values. Keys with equal counts come out in descending key
-    order."""
+    One query: a rollup over the key counts every key of the sample and,
+    in the same aggregation, the sample's total (the row where
+    ``grouping(key)`` is 1). The total row and the ``top`` most frequent
+    keys leave the executor, so the driver only ever sees ≤ ``top + 1``
+    rows, and is cut there at the threshold ``max(2, min_share *
+    total)``. No separate count job runs, and the whole query is
+    whole-stage codegen apart from its exchange and the final top-N.
+    Keys with equal counts come out in descending key order."""
     sample = df.sample(fraction=sample_fraction, seed=seed) \
         if sample_fraction < 1.0 else df
-    threshold = F.greatest(F.lit(2.0), F.lit(min_share) * F.col("_total"))
-    row = (sample.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
-           .coalesce(1)
-           .agg(F.sum("_n").alias("_total"),
-                F.sort_array(F.collect_list(F.struct("_n", key)), asc=False).alias("_by_n"))
-           .select(F.slice(F.filter("_by_n", lambda c: c["_n"] >= threshold), 1, top)
-                   .alias("hot"))
-           .first())
-    return [c[key] for c in row["hot"]]
+    rows = (sample.rollup(key)
+            .agg(F.count(F.lit(1)).alias("_n"), F.grouping(key).alias("_total"))
+            .orderBy(F.desc("_total"), F.desc("_n"), F.desc(key))
+            .limit(top + 1).collect())
+    if not rows:
+        return []
+    threshold = max(2.0, min_share * rows[0]["_n"])
+    return [r[key] for r in rows[1:] if r["_n"] >= threshold]
 
 
 def salted_join(probe: DataFrame, build: DataFrame, key: str, *,

@@ -323,15 +323,20 @@ def _band_points(polys) -> pd.DataFrame:
 
 def test_pip_bands_keep_exactly_each_rows_edges(spark):
     """_pip_bands gives every bbox row of a polygon exactly the edges
-    whose grid-row span contains it, in any order (the rows' edge sets
-    computed here in numpy with encode_points' row expression), and at a
-    resolution where many-vertex polygons span many rows that is a
-    small share of edges × rows."""
+    whose grid-row span contains it, in any order, apart from horizontal
+    edges, which cross no ray (the rows' edge sets computed here in
+    numpy with encode_points' row expression), and at a resolution where
+    many-vertex polygons span many rows that is a small share of edges ×
+    rows."""
     polys = _band_polys()
-    got = {(r["poly_id"], r["_iy"]): (r["_x0"], r["_x1"],
-                                      sorted(tuple(e) for e in r["edges"]))
-           for r in ops._pip_bands(spark.createDataFrame(polys, POLY_SCHEMA),
-                                   BAND_RES).collect()}
+    got = {}
+    for r in ops._pip_bands(spark.createDataFrame(polys, POLY_SCHEMA),
+                            BAND_RES).collect():
+        x0, x1, edges = got.setdefault((r["poly_id"], r["_iy"]),
+                                       (r["_x0"], r["_x1"], []))
+        assert (x0, x1) == (r["_x0"], r["_x1"])
+        edges.append(tuple(r["_e"]))
+    got = {k: (x0, x1, sorted(edges)) for k, (x0, x1, edges) in got.items()}
     n = float(1 << BAND_RES)
     hi = (1 << BAND_RES) - 1
 
@@ -354,7 +359,7 @@ def test_pip_bands_keep_exactly_each_rows_edges(spark):
                          - 1, 0, hi))
         full += len(e) * (y1 - y0 + 1)
         for iy in range(y0, y1 + 1):
-            sel = (lo_r <= iy) & (iy <= hi_r)
+            sel = (lo_r <= iy) & (iy <= hi_r) & (e[:, 1] != e[:, 3])
             if sel.any():
                 exp[(pid, iy)] = (x0, x1,
                                   sorted(tuple(v) for v in e[sel].tolist()))
@@ -391,6 +396,76 @@ def test_pip_join_keeps_duplicate_points(spark):
     got = Counter((r["point_id"], r["poly_id"]) for r in
                   pip_join(points, polys, PIP_RES).collect())
     assert got == exp
+
+
+def _row_boundary_polys():
+    """Polygons whose horizontal edges lie exactly on grid-row boundaries
+    at PIP_RES (rows of 11.25°): a square, a staircase with a vertex on a
+    boundary, an outer ring with a hole, both with horizontal edges on
+    boundaries, and a triangle with a horizontal base."""
+    return [
+        (10, [[[0.0, 0.0], [10.0, 0.0], [10.0, 11.25], [0.0, 11.25]]]),
+        (11, [[[20.0, 0.0], [40.0, 0.0], [40.0, 11.25], [30.0, 11.25],
+               [30.0, 22.5], [20.0, 22.5], [20.0, 0.0]]]),
+        (12, [[[-40.0, -11.25], [-20.0, -11.25], [-20.0, 22.5],
+               [-40.0, 22.5]],
+              [[-35.0, 0.0], [-25.0, 0.0], [-25.0, 11.25], [-35.0, 11.25]]]),
+        (13, [[[50.0, 11.25], [70.0, 11.25], [60.0, 0.0]]]),
+    ]
+
+
+def test_pip_horizontal_edges_on_row_boundaries(spark, pip_plan, tmp_path):
+    """_pip_bands drops horizontal edges, which cross no ray. With such
+    edges exactly on grid-row boundaries, points exactly at their height
+    (and between) and on column boundaries, and polygons with
+    non-finite vertices, pip_join in both physical plans and
+    stream_pip_counts still give _pip_oracle's pairs among the points
+    of each polygon's bbox cells."""
+    from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
+    name, ready = pip_plan
+    polys = _row_boundary_polys() + NONFINITE_POLYS
+    poly_df = spark.createDataFrame(polys, POLY_SCHEMA)
+    assert all(r["_e"]["y1"] != r["_e"]["y2"]
+               for r in ops._pip_bands(poly_df, PIP_RES).collect())
+    xs = np.arange(-45.0, 75.0, 2.5)
+    ys = np.array([-11.25, -5.625, 0.0, 5.625, 11.25, 16.875, 22.5, 33.75])
+    gx, gy = np.meshgrid(xs, ys)
+    pts = pd.DataFrame({"point_id": np.arange(gx.size, dtype=np.int64),
+                        "x": gx.ravel(), "y": gy.ravel()})
+    # pip_join tests the points in the cells of each polygon's outer-ring
+    # bbox (as _pip_polys computes it); the ray cast decides among those
+    n = 1 << PIP_RES
+    col = np.clip(np.floor((pts["x"].to_numpy() + 180.0) / 360.0 * n), 0, n - 1)
+    row = np.clip(np.floor((pts["y"].to_numpy() + 90.0) / 180.0 * n), 0, n - 1)
+    bbox = {r["poly_id"]: (r["_x0"], r["_x1"], r["_y0"], r["_y1"])
+            for r in ops._pip_polys(poly_df, PIP_RES).collect()}
+    exp = {(p, q) for p, q in _pip_oracle(pts, polys)
+           if bbox[q][0] <= col[p] <= bbox[q][1] and bbox[q][2] <= row[p] <= bbox[q][3]}
+    assert {q for _, q in exp} == {8, 10, 11, 12, 13}
+    on_edges = pts["y"].isin([0.0, 11.25, 22.5])
+    assert {p for p, _ in exp} & set(pts["point_id"][on_edges])
+    got = {(r["point_id"], r["poly_id"]) for r in pip_join(
+        ready(spark.createDataFrame(pts)), poly_df, PIP_RES).collect()}
+    assert got == exp
+
+    placemarks = "".join(
+        f"<Placemark><Point><coordinates>{x!r},{y!r}</coordinates></Point>"
+        f"</Placemark>" for x, y in zip(pts["x"], pts["y"]))
+    kml = ('<?xml version="1.0" encoding="UTF-8"?>'
+           '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
+           f"{placemarks}</Document></kml>")
+    src = str(tmp_path / "row_edge_docs")
+    spark.createDataFrame([("rows", k2gs.pack_spans(kml))],
+                          k2gs.spans_schema()).write.parquet(src)
+    q = (stream_pip_counts(stream_documents(spark, src), poly_df, PIP_RES)
+         .writeStream.format("memory").queryName(f"pip_rows_{name}")
+         .outputMode("complete")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    counts = {r["poly_id"]: r["n_points"]
+              for r in spark.sql(f"SELECT * FROM pip_rows_{name}").collect()}
+    assert counts == dict(Counter(p for _, p in exp))
 
 
 def test_pip_bands_and_cells_skip_polygons_with_no_ring_left(spark):

@@ -12,6 +12,13 @@ threads (``Executor CPU Time``), the task deserialization CPU, the task
 count and the shuffle records read and written, as medians over the
 jobs. Python worker CPU is not in these figures: it is not part of a
 task's metrics.
+
+It also prints the Janino compilations of every job, per operation and
+in total: the change in Spark's ``CodegenMetrics`` compilation count
+around each span and around the whole job. The cold job's figures are
+the codegen-cache entries each operation adds (a class an earlier
+operation or the set-up already compiled counts once); a warm job that
+compiles anything recompiles classes the cache evicted.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ import shutil
 import statistics
 import sys
 from collections import defaultdict
+from contextlib import contextmanager
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -112,6 +120,17 @@ def report(spans, rows: list[dict]) -> None:
           f"operation (set-up, cold and warm-up jobs): {len(untraced)}")
 
 
+def compile_report(jobs: list) -> None:
+    """Print the Janino compilations per operation and per job total: the
+    cold job, the warm-up job, then each traced job."""
+    labels = ["cold", "warm-up"] + [f"job {i + 1}" for i in range(len(jobs) - 2)]
+    print("janino compilations (cold job = codegen-cache entries it adds)")
+    print(f"{'operation':44}" + "".join(f" {lab:>7}" for lab in labels))
+    for name in jobs[0]["ops"]:
+        print(f"{name:44}" + "".join(f" {job['ops'].get(name, 0):7d}" for job in jobs))
+    print(f"{'job total':44}" + "".join(f" {job['total']:7d}" for job in jobs))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True,
@@ -148,25 +167,49 @@ def main() -> None:
     from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
+    class CompileTracer(Tracer):
+        """perfbench's tracer, also counting Janino compilations per span
+        into the current job's entry of ``compiles``, enabled or not."""
+
+        @contextmanager
+        def span(self, name):
+            before = compilations()
+            with super().span(name) as sp:
+                yield sp
+            ops = compiles[-1]["ops"]
+            ops[name] = ops.get(name, 0) + compilations() - before
+
+    def run_job(tracer, what: str) -> None:
+        compiles.append({"ops": {}})
+        before = compilations()
+        ok, extra = wl.check(wl.job(tracer))
+        compiles[-1]["total"] = compilations() - before
+        if not ok:
+            raise SystemExit(f"op_cpu: {what} failed its check: {extra}")
+
     conf = SparkConf().setAll(spark_conf(work, cores, mem_mb, event_log=True).items())
-    tracer = Tracer(True)
+    tracer = CompileTracer(True)
+    compiles: list = []
     spark = SparkSession(SparkContext.getOrCreate(conf))
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compilations() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     try:
         spark.sparkContext.setLogLevel("ERROR")
         corpus_mod.write_span_table(docs, work / "corpus")
         wl.setup(spark, work / "corpus", work)
-        off = Tracer(False)
-        for _ in range(2):  # cold and warm-up jobs, as perfbench runs them
-            if not wl.check(wl.job(off))[0]:
-                raise SystemExit("op_cpu: a set-up job failed its check")
+        off = CompileTracer(False)
+        for what in ("the cold job", "the warm-up job"):  # as perfbench runs them
+            run_job(off, what)
         tracer.spark = spark
         for _ in range(args.jobs):
-            ok, extra = wl.check(wl.job(tracer))
-            if not ok:
-                raise SystemExit(f"op_cpu: a job failed its check: {extra}")
+            run_job(tracer, "a job")
     finally:
         spark.stop()  # flushes the event log
     report(tracer.spans, stage_rows(work / "eventlog"))
+    compile_report(compiles)
     shutil.rmtree(work, ignore_errors=True)
 
 
