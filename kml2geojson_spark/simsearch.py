@@ -641,8 +641,7 @@ def label_centroids(embeddings: DataFrame, *, vec_col: str = "embedding",
     bit-identical on every engine), summed as exact BIGINTs, and
     divided by the count with truncating integer division, so no float
     aggregate ever happens and partial-aggregation order cannot
-    perturb the result (the same discipline as
-    ``eventops.group_outlier_stats``).
+    perturb the result.
 
     Overflow headroom: |v| ≤ 10³ at scale 10⁶ keeps per-row magnitude
     ≤ 10⁹, safe to ~9·10⁹ rows per (label, dim) group.
@@ -912,8 +911,8 @@ def embedding_norm_stats(embeddings: DataFrame, *,
     :func:`~kml2geojson_spark.graph.degree_assortativity` rule —
     n·Q alone overflows BIGINT at corpus scale), z is one fixed IEEE
     expression, and the outlier verdict is an EXACT INTEGER
-    comparison (``(n·m − S)²·10⁶ > thr²·(n·Q − S²)`` in DECIMAL —
-    the `rolling_zscore` rule, widened). NULL ids/vectors drop.
+    comparison (``(n·m − S)²·10⁶ > thr²·(n·Q − S²)`` in DECIMAL,
+    so no square root decides a verdict). NULL ids/vectors drop.
 
     Scale shape: one narrow projection (fold per row), ONE global
     hash-aggregate producing a 1-row frame broadcast back — no
@@ -1275,42 +1274,3 @@ def jl_project(df: DataFrame, *, dim: int, out_dim: int = 8,
     return d.select("id", F.col("_jp.k").alias("proj_idx"),
                     F.round(y * F.lit(1_000_000.0)).cast("long")
                     .alias("y_micro"))
-
-
-def dimension_quantiles(df: DataFrame, *, vec_col: str = "embedding",
-                        permilles: list[int] = (250, 500, 750)
-                        ) -> DataFrame:
-    """Per-DIMENSION exact quantiles of an embedding corpus at
-    micro-unit resolution — the robust-scaler companion to
-    :func:`dimension_profile`'s mean/variance view (median/IQR per
-    dimension feed robust normalization and winsorization bounds
-    before quantization or cosine work; outlier dimensions that
-    mean/variance miss show up here).
-
-    Determinism: each element quantizes ONCE to micro-units
-    (``round(x·10⁶)`` BIGINT, the :func:`dimension_profile` rule) and
-    then flows through
-    :func:`~kml2geojson_spark.relational.group_quantiles`' exact
-    integer order-statistic machinery (type-1 lower quantile at
-    integer permilles — no float probability ever multiplies a
-    count). Bit-stable across engines and partitionings.
-
-    Scale shape: one posexplode → the (dim, value) hash-aggregate +
-    cumulative window group_quantiles runs on VALUE-LEVEL rows
-    (cardinality bounded by dims × distinct quantized values, not
-    corpus size). NULL vectors drop.
-
-    Output: (dim, permille, n, q_micro BIGINT).
-    """
-    from .relational import group_quantiles
-
-    ex = (df.where(F.col(vec_col).isNotNull())
-          .select(F.posexplode(F.col(vec_col)).alias("dim", "_x"))
-          .select(F.col("dim").cast("long").alias("dim"),
-                  F.round(F.col("_x").cast("double")
-                          * F.lit(1_000_000.0)).cast("long")
-                  .alias("_xq")))
-    out = group_quantiles(ex, value_col="_xq", group_cols=["dim"],
-                          permilles=list(permilles))
-    return out.select("dim", "permille", "n",
-                      F.col("value").alias("q_micro"))
