@@ -1918,6 +1918,7 @@ FROM a
 """.format(pts=_PTS_SQL)
 
 
+
 def _q79_trajectory_stats(spark, sf):
     """Per-user trajectory rollup over event-derived positions:
     partitioned lag window (no global funnel) + order-independent
@@ -2098,6 +2099,8 @@ WHERE CAST(n_shared AS DOUBLE) / sa.n_grams >= 0.2
 """
 
 
+
+
 def _q85_pagerank(spark, sf):
     """3-round integer PageRank over the customer→supplier purchase
     graph (supplier ids offset to keep the two key spaces disjoint).
@@ -2136,6 +2139,7 @@ s0 AS (SELECT node, CAST(1000000 AS BIGINT) AS score FROM nodes),
 {",".join(rounds)}
 SELECT node, score AS score_micro FROM s3
 """
+
 
 
 def _q41_lsh_cosine_topk(spark, sf):
@@ -2313,6 +2317,140 @@ corners AS (
   UNION ALL SELECT b FROM t
   UNION ALL SELECT c FROM t)
 SELECT node, COUNT(*) AS n_triangles FROM corners GROUP BY node
+"""
+
+
+_FUNNEL_STAGES = ["signup", "view", "click", "purchase"]
+
+
+def _q87_funnel(spark, sf):
+    """Ordered-funnel completion over the events table: earliest
+    strictly-after completion per stage, per-stage shrinking frontier
+    joins (eventops.funnel_counts)."""
+    from kml2geojson_spark.eventops import funnel_counts
+    return funnel_counts(_t(spark, sf, "events"), _FUNNEL_STAGES)
+
+
+def _o87() -> str:
+    ctes = ["s0 AS (SELECT user_id AS u, MIN(ts) AS r FROM events "
+            f"WHERE event_type = '{_FUNNEL_STAGES[0]}' GROUP BY user_id)"]
+    for i, stage in enumerate(_FUNNEL_STAGES[1:], start=1):
+        ctes.append(
+            f"s{i} AS (SELECT e.user_id AS u, MIN(e.ts) AS r FROM events e "
+            f"JOIN s{i - 1} p ON e.user_id = p.u "
+            f"WHERE e.event_type = '{stage}' AND e.ts > p.r "
+            f"GROUP BY e.user_id)")
+    selects = [
+        f"SELECT {i} AS stage_idx, '{stage}' AS stage, "
+        f"(SELECT COUNT(*) FROM s{i}) AS n_users"
+        for i, stage in enumerate(_FUNNEL_STAGES)]
+    return ("WITH " + ", ".join(ctes) + " "
+            + " UNION ALL ".join(selects))
+
+
+def _q88_od_matrix(spark, sf):
+    """Origin-destination flow matrix over per-user event trajectories
+    (positions derived deterministically from event ids, 30-degree
+    grid cells)."""
+    from kml2geojson_spark.eventops import od_matrix
+    e = _t(spark, sf, "events")
+    x = ((F.col("event_id") * 9301 + 49297) % 36000) / 100.0 - 180.0
+    y = ((F.col("event_id") * 7919 + 104729) % 17000) / 100.0 - 85.0
+    pts = e.select("event_id", "user_id", x.alias("x"), y.alias("y"))
+    return od_matrix(pts, cell_size=30.0)
+
+
+_O88 = """
+WITH pts AS (
+  SELECT event_id, user_id,
+         ((event_id * 9301 + 49297) % 36000) / 100.0 - 180.0 AS x,
+         ((event_id * 7919 + 104729) % 17000) / 100.0 - 85.0 AS y
+  FROM events),
+lagged AS (
+  SELECT user_id,
+         CAST(FLOOR(x / 30.0) AS BIGINT) AS to_cx,
+         CAST(FLOOR(y / 30.0) AS BIGINT) AS to_cy,
+         LAG(CAST(FLOOR(x / 30.0) AS BIGINT)) OVER w AS from_cx,
+         LAG(CAST(FLOOR(y / 30.0) AS BIGINT)) OVER w AS from_cy
+  FROM pts WINDOW w AS (PARTITION BY user_id ORDER BY event_id))
+SELECT from_cx, from_cy, to_cx, to_cy, COUNT(*) AS n_trips
+FROM lagged WHERE from_cx IS NOT NULL
+GROUP BY from_cx, from_cy, to_cx, to_cy
+"""
+
+
+def _q89_cohort_retention(spark, sf):
+    """Weekly cohort-retention triangle over the events table (date
+    arithmetic on TIMESTAMP_NTZ — session-timezone independent)."""
+    from kml2geojson_spark.eventops import cohort_retention
+    return cohort_retention(_t(spark, sf, "events"))
+
+
+_O89 = """
+WITH ev AS (
+  SELECT user_id AS u,
+         datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day
+  FROM events),
+first AS (SELECT u, MIN(day) AS fd FROM ev GROUP BY u)
+SELECT CAST(fd // 7 AS BIGINT) AS cohort_period,
+       CAST(day // 7 - fd // 7 AS BIGINT) AS period_offset,
+       COUNT(DISTINCT ev.u) AS n_users
+FROM ev JOIN first ON ev.u = first.u
+GROUP BY 1, 2
+"""
+
+
+def _q90_group_outliers(spark, sf):
+    """Per-event-type z-score outlier counts in pure BIGINT arithmetic
+    (floor-division mean/variance — partial-agg-order independent,
+    hash-exact on both engines)."""
+    from kml2geojson_spark.eventops import group_outlier_stats
+    return (group_outlier_stats(_t(spark, sf, "events"))
+            .withColumnRenamed("group", "grp"))
+
+
+_O90 = """
+WITH d AS (
+  SELECT event_type AS grp, CAST(ROUND(value * 1000.0) AS BIGINT) AS vm
+  FROM events),
+st AS (
+  SELECT grp, COUNT(*) AS n, CAST(SUM(vm) AS BIGINT) AS s,
+         CAST(SUM(vm * vm) AS BIGINT) AS s2
+  FROM d GROUP BY grp),
+st2 AS (
+  SELECT grp, n, s // n AS mean_milli,
+         (s2 // n) - (s // n) * (s // n) AS var_milli2
+  FROM st)
+SELECT d.grp, n, mean_milli,
+       CAST(SUM(CASE WHEN (vm - mean_milli) * (vm - mean_milli) * 1000000
+                          > 4000000 * var_milli2
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+FROM d JOIN st2 USING (grp)
+GROUP BY d.grp, n, mean_milli
+"""
+
+
+def _q91_skyline(spark, sf):
+    """2-D Pareto skyline (minimize both coords) over deterministic
+    integer points — two-phase bucketed prefix-min, never a global
+    sort (relational.skyline2d)."""
+    from kml2geojson_spark.relational import skyline2d
+    c = _t(spark, sf, "customer")
+    pts = c.select(((F.col("c_custkey") * 9301 + 49297) % 36000).alias("x"),
+                   ((F.col("c_custkey") * 7919 + 104729) % 17000).alias("y"))
+    return skyline2d(pts)
+
+
+# Oracle uses the independent NOT-EXISTS dominance formulation.
+_O91 = """
+WITH p AS (
+  SELECT DISTINCT (c_custkey * 9301 + 49297) % 36000 AS x,
+                  (c_custkey * 7919 + 104729) % 17000 AS y
+  FROM customer)
+SELECT x, y FROM p
+WHERE NOT EXISTS (
+  SELECT 1 FROM p q
+  WHERE q.x <= p.x AND q.y <= p.y AND (q.x < p.x OR q.y < p.y))
 """
 
 
@@ -2615,6 +2753,71 @@ WHERE levenshtein(a.c_name, b.c_name) <= 1
 """
 
 
+def _q104_merge_intervals(spark, sf):
+    """Gaps-and-islands: merge each supplier's overlapping-or-touching
+    [shipdate, receiptdate] intervals into maximal coverage islands —
+    one shuffle on the key (window partition = final groupBy key, no
+    second exchange). Dates are emitted as epoch-day integers so the
+    hash compare is engine-neutral."""
+    from kml2geojson_spark.eventops import merge_intervals
+    # integer epoch-day endpoints (timezone-free: NTZ microsecond diff,
+    # the q17 pattern); interval length is quantity-derived since the
+    # synthetic lineitem has no receipt date
+    start_day = F.expr(
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
+        "l_shipdate) div 86400000000")
+    li = _t(spark, sf, "lineitem").select(
+        F.col("l_suppkey").alias("key"),
+        start_day.alias("start"),
+        (start_day + (F.col("l_quantity") % 14).cast("int") + 1).alias("end"))
+    out = merge_intervals(li)
+    return out.select(
+        "key",
+        F.col("island_start").alias("start_day"),
+        F.col("island_end").alias("end_day"),
+        "n_intervals")
+
+
+_O104 = """
+WITH iv AS (
+  SELECT l_suppkey AS key,
+         epoch_us(l_shipdate) // 86400000000 AS s,
+         epoch_us(l_shipdate) // 86400000000
+           + CAST(l_quantity % 14 AS INT) + 1 AS e,
+         l_orderkey AS u1, l_linenumber AS u2
+  FROM lineitem),
+flagged AS (
+  SELECT key, s, e, u1, u2,
+         CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END AS ni
+  FROM (SELECT key, s, e, u1, u2,
+               MAX(e) OVER (PARTITION BY key ORDER BY s, e, u1, u2
+                            ROWS BETWEEN UNBOUNDED PRECEDING
+                            AND 1 PRECEDING) AS pme
+        FROM iv)),
+isl AS (
+  SELECT key, s, e,
+         SUM(ni) OVER (PARTITION BY key ORDER BY s, e, u1, u2
+                       ROWS BETWEEN UNBOUNDED PRECEDING
+                       AND CURRENT ROW) AS island
+  FROM flagged)
+SELECT key,
+       MIN(s)::BIGINT AS start_day,
+       MAX(e)::BIGINT AS end_day,
+       COUNT(*)::BIGINT AS n_intervals
+FROM isl GROUP BY key, island
+"""
+# The (u1, u2) = (l_orderkey, l_linenumber) tiebreaker makes the
+# window ORDER BY a TOTAL order. Without it the flag pass and the
+# running-sum pass are two separate window sorts, and an engine may
+# order duplicate (s, e) rows DIFFERENTLY in each: an ni=0 flag
+# computed behind its twin in pass 1 can land ahead of the twin's
+# ni=1 in pass 2, splicing the island boundary one row early
+# (observed intermittently in DuckDB at sf0.1, key 62's duplicated
+# (10347, 10349) pair; the merged result itself is tie-order
+# invariant, so Spark — which evaluates both functions over ONE
+# sort — was stable and correct all along).
+
+
 def _q105_asof_forward(spark, sf):
     """Forward as-of join: each purchase event gets the same user's
     FIRST click at or after it (next-event attribution — the mirror of
@@ -2657,6 +2860,47 @@ SELECT purchase_id, user_id, click_id, gap_us FROM j WHERE rn = 1
 # SAME SQL the staged tests assert against, with BIGINT casts on aggregates
 # so the DuckDB frame round-trips to pandas integers.
 # ---------------------------------------------------------------------------
+
+def _q106_sessionize_batch(spark, sf):
+    """Batch sessionization (30-min gap rule) — the batch twin of the
+    streaming sessionizer (q08): one shuffle on the user key, the
+    session aggregate reuses the window partitioning (single Exchange,
+    plan-asserted in tests). Session bounds are emitted as epoch
+    seconds so the cross-engine hash never touches a timestamp."""
+    from kml2geojson_spark.eventops import sessionize_batch
+    out = sessionize_batch(_t(spark, sf, "events"), gap_seconds=1800)
+    return out.select(
+        "user_id", F.col("session_idx").cast("long").alias("session_idx"),
+        F.unix_timestamp("session_start").alias("start_sec"),
+        F.unix_timestamp("session_end").alias("end_sec"), "n_events")
+
+
+_O106 = """
+WITH e AS (
+  SELECT user_id AS _u, ts AS _t, event_id AS _eid,
+         CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800
+                   OR lag(ts) OVER w IS NULL
+              THEN 1 ELSE 0 END AS _new
+  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+s AS (
+  SELECT _u, _t,
+         SUM(_new) OVER (PARTITION BY _u ORDER BY _t, _eid
+                         ROWS UNBOUNDED PRECEDING) AS _sess
+  FROM e)
+SELECT _u AS user_id, CAST(_sess AS BIGINT) AS session_idx,
+       CAST(floor(epoch(MIN(_t))) AS BIGINT) AS start_sec,
+       CAST(floor(epoch(MAX(_t))) AS BIGINT) AS end_sec,
+       COUNT(*) AS n_events
+FROM s GROUP BY _u, _sess
+"""
+# The event_id tiebreaker totalizes both window ORDER BYs — same
+# two-pass re-sort hazard as _O104: the flag CTE and the running-sum
+# CTE are separate window sorts, and duplicate (user_id, ts) rows
+# carrying (_new=1, _new=0) can swap between passes, splicing a
+# session boundary (semantics are tie-invariant; only the replay's
+# independent sorts can disagree). Spark evaluates both functions
+# over ONE sort, so sessionize_batch itself needs no tiebreak.
 
 
 def _q107_weighted_sample(spark, sf):
@@ -2755,6 +2999,54 @@ WHERE point_id NOT IN (SELECT point_id FROM inside)
 """
 
 
+def _q111_gapfill(spark, sf):
+    """Dense zero-filled daily event counts per type (the hypertable
+    time_bucket_gapfill): raw rows collapse through one (group, bucket)
+    hash-aggregate first; the dense grid is a per-group sequence
+    explode of ONE row per group."""
+    from kml2geojson_spark.eventops import time_bucket_gapfill
+    return time_bucket_gapfill(_t(spark, sf, "events"),
+                               bucket_seconds=86400)
+
+
+_O111 = """
+WITH e AS (
+  SELECT event_type AS g, CAST(floor(epoch(ts)) AS BIGINT) AS s
+  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
+c AS (SELECT g, s - (((s % 86400) + 86400) % 86400) AS b, COUNT(*) AS n
+      FROM e GROUP BY 1, 2),
+r AS (SELECT g, MIN(b) AS lo, MAX(b) AS hi FROM c GROUP BY g),
+grid AS (SELECT g, unnest(generate_series(lo, hi, 86400)) AS b FROM r)
+SELECT grid.g AS event_type, CAST(grid.b AS BIGINT) AS bucket_sec,
+       CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events
+FROM grid LEFT JOIN c ON grid.g = c.g AND grid.b = c.b
+"""
+
+
+def _q112_transitions(spark, sf):
+    """First-order Markov transition counts over per-user event
+    streams, with exact integer parts-per-million probabilities (no
+    float ever materializes): one user-key shuffle for the lag window,
+    then the normalizing window runs on the tiny |types|² frame."""
+    from kml2geojson_spark.eventops import event_transition_counts
+    return event_transition_counts(_t(spark, sf, "events"))
+
+
+_O112 = """
+WITH e AS (
+  SELECT event_type AS c,
+         lag(event_type) OVER (PARTITION BY user_id
+                               ORDER BY ts, event_id) AS p
+  FROM events WHERE ts IS NOT NULL),
+pr AS (SELECT p, c, COUNT(*) AS n_trans FROM e WHERE p IS NOT NULL
+       GROUP BY p, c)
+SELECT p AS prev_type, c AS next_type, n_trans,
+       CAST((n_trans * 1000000) // SUM(n_trans) OVER (PARTITION BY p)
+            AS BIGINT) AS ppm
+FROM pr
+"""
+
+
 def _q113_label_centroids(spark, sf):
     """Per-label embedding centroids in exact integer micro-units
     (floor-integerized per row, BIGINT sums, truncating division —
@@ -2767,6 +3059,65 @@ def _q113_label_centroids(spark, sf):
 def _o113() -> str:
     from kml2geojson_spark.simsearch import label_centroids_sql
     return label_centroids_sql()
+
+
+def _q114_histogram(spark, sf):
+    """Exact fixed-width histogram with all bins present (zero-filled):
+    one filter + one ≤n_bins-cell hash-aggregate, then a broadcast
+    left join against the tiny range frame."""
+    from kml2geojson_spark.relational import histogram1d
+    return histogram1d(_t(spark, sf, "events"), value_col="value",
+                       lo=0.0, hi=100.0, n_bins=20)
+
+
+_O114 = """
+WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events
+           WHERE value IS NOT NULL AND value >= 0.0 AND value <= 100.0),
+b AS (SELECT CASE WHEN CAST(floor((v - 0.0) / 5.0) AS BIGINT) >= 20 THEN 19
+                  ELSE CAST(floor((v - 0.0) / 5.0) AS BIGINT) END AS bin
+      FROM v),
+c AS (SELECT bin, COUNT(*) AS n FROM b GROUP BY bin)
+SELECT CAST(r.range AS BIGINT) AS bin, 0.0 + r.range * 5.0 AS bin_lo,
+       CAST(COALESCE(c.n, 0) AS BIGINT) AS n
+FROM range(20) r LEFT JOIN c ON r.range = c.bin
+"""
+
+
+def _q115_weighted_median(spark, sf):
+    """Exact quantity-weighted median price per return flag: weights
+    integerized to milli-units so the half-mass test is pure BIGINT;
+    ONE shuffle on the group key shared by both windows and the final
+    aggregate (plan-asserted single Exchange in tests)."""
+    from kml2geojson_spark.relational import weighted_median
+    li = (_t(spark, sf, "lineitem")
+          .withColumn("lid", F.col("l_orderkey") * 100
+                      + F.col("l_linenumber")))
+    return weighted_median(li, group_col="l_returnflag",
+                           value_col="l_extendedprice",
+                           weight_col="l_quantity", id_col="lid")
+
+
+_O115 = """
+WITH d0 AS (
+  SELECT l_returnflag AS g, CAST(l_extendedprice AS DOUBLE) AS v,
+         l_orderkey * 100 + l_linenumber AS i,
+         CAST(ROUND(CAST(l_quantity AS DOUBLE) * 1000.0) AS BIGINT) AS wm
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL),
+d AS (SELECT * FROM d0 WHERE wm > 0),
+c AS (
+  SELECT g, v, i, wm,
+         SUM(wm) OVER (PARTITION BY g ORDER BY v, i
+                       ROWS UNBOUNDED PRECEDING) AS cum,
+         SUM(wm) OVER (PARTITION BY g) AS tot
+  FROM d),
+q AS (
+  SELECT g, v, CAST(tot AS BIGINT) AS tot,
+         ROW_NUMBER() OVER (PARTITION BY g ORDER BY v, i) AS rn
+  FROM c WHERE cum * 2 >= tot)
+SELECT g AS l_returnflag, v AS median, tot AS total_weight_milli
+FROM q WHERE rn = 1
+"""
 
 
 def _q116_polygon_centroid(spark, sf):
@@ -2803,6 +3154,30 @@ SELECT poly_id,
            AS cy_micro,
        CAST(ROUND(SUM(x1 * y2 - x2 * y1) * 1e6) AS BIGINT) AS area2_micro
 FROM verts GROUP BY poly_id
+"""
+
+
+def _q117_group_mode(spark, sf):
+    """Deterministic per-user modal event type (ties → smallest value,
+    so the result is engine-portable unlike built-in mode()): raw rows
+    collapse through one (group, value) hash-aggregate before the
+    ranking window runs on the aggregated frame."""
+    from kml2geojson_spark.relational import group_mode
+    return group_mode(_t(spark, sf, "events"), group_col="user_id",
+                      value_col="event_type")
+
+
+_O117 = """
+WITH c AS (
+  SELECT user_id, event_type, COUNT(*) AS n
+  FROM events WHERE event_type IS NOT NULL AND user_id IS NOT NULL
+  GROUP BY user_id, event_type),
+r AS (
+  SELECT user_id, event_type, n,
+         ROW_NUMBER() OVER (PARTITION BY user_id
+                            ORDER BY n DESC, event_type ASC) AS rn
+  FROM c)
+SELECT user_id, event_type AS mode, n FROM r WHERE rn = 1
 """
 
 
@@ -2861,6 +3236,107 @@ r AS (
                             ORDER BY n_occurrences DESC, gram ASC) AS rank
   FROM c)
 SELECT lang, gram, n_occurrences, rank FROM r WHERE rank <= 8
+"""
+
+
+def _q120_inter_event(spark, sf):
+    """Per-user inter-arrival gap statistics in exact epoch-second
+    integers — the measurement behind sessionization-gap choice (q106)
+    and burstiness features. Single Exchange on the user key (lag
+    window + aggregate share the partitioning). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import inter_event_stats
+    return inter_event_stats(_t(spark, sf, "events"))
+
+
+_O120 = """
+WITH e AS (
+  SELECT user_id, ts, event_id,
+         CAST(floor(epoch(ts)) AS BIGINT) AS s
+  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
+g AS (
+  SELECT user_id,
+         s - LAG(s) OVER (PARTITION BY user_id
+                          ORDER BY ts, event_id) AS gap
+  FROM e)
+, s AS (
+  SELECT user_id, COUNT(*) AS n_events, COUNT(gap) AS n_gaps,
+         MIN(gap) AS min_gap_s, MAX(gap) AS max_gap_s,
+         CAST(COALESCE(SUM(gap), 0) AS BIGINT) AS span_s,
+         CAST(COALESCE(SUM(gap * gap), 0) AS BIGINT) AS gap_sq_sum
+  FROM g GROUP BY user_id)
+SELECT user_id, n_events, n_gaps, min_gap_s, max_gap_s, span_s,
+       gap_sq_sum,
+       CASE WHEN n_gaps > 0 THEN CAST(span_s AS DOUBLE)
+            / CAST(n_gaps AS DOUBLE) END AS mean_gap_s,
+       CASE WHEN n_gaps > 0
+             AND SQRT(CAST(n_gaps * gap_sq_sum - span_s * span_s
+                           AS DOUBLE)) / CAST(n_gaps AS DOUBLE)
+                 + CAST(span_s AS DOUBLE) / CAST(n_gaps AS DOUBLE) > 0
+            THEN (SQRT(CAST(n_gaps * gap_sq_sum - span_s * span_s
+                            AS DOUBLE)) / CAST(n_gaps AS DOUBLE)
+                  - CAST(span_s AS DOUBLE) / CAST(n_gaps AS DOUBLE))
+                 / (SQRT(CAST(n_gaps * gap_sq_sum - span_s * span_s
+                              AS DOUBLE)) / CAST(n_gaps AS DOUBLE)
+                    + CAST(span_s AS DOUBLE)
+                      / CAST(n_gaps AS DOUBLE))
+       END AS burstiness
+FROM s
+"""
+
+
+def _q121_rfm(spark, sf):
+    """RFM customer scoring over orders: exact-integer recency days /
+    order count / cents, each NTILE(5)-bucketed over a total order
+    (metric, custkey) so both engines assign identical tiles. One
+    per-customer hash-aggregate + a broadcast single-row anchor.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import customer_rfm
+    return customer_rfm(_t(spark, sf, "orders"))
+
+
+_O121 = """
+WITH pc AS (
+  SELECT o_custkey AS custkey, MAX(CAST(o_orderdate AS DATE)) AS last_d,
+         COUNT(*) AS frequency,
+         CAST(SUM(CAST(ROUND(o_totalprice * 100.0) AS BIGINT)) AS BIGINT)
+             AS monetary_cents
+  FROM orders
+  WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
+  GROUP BY o_custkey),
+a AS (SELECT MAX(last_d) AS anchor FROM pc),
+d AS (
+  SELECT custkey,
+         CAST(date_diff('day', last_d, anchor) AS BIGINT) AS recency_days,
+         frequency, monetary_cents
+  FROM pc, a)
+SELECT custkey, recency_days, frequency, monetary_cents,
+       NTILE(5) OVER (ORDER BY recency_days ASC, custkey ASC) AS r_score,
+       NTILE(5) OVER (ORDER BY frequency DESC, custkey ASC) AS f_score,
+       NTILE(5) OVER (ORDER BY monetary_cents DESC, custkey ASC) AS m_score
+FROM d
+"""
+
+
+def _q122_key_skew(spark, sf):
+    """Join-key skew report on lineitem's supplier key — the top-15
+    heavy hitters with exact ppm share and multiple-of-average: the
+    measurement run before choosing q15's salting factor. Hash-agg +
+    TakeOrderedAndProject, no global sort. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import key_skew_stats
+    return key_skew_stats(_t(spark, sf, "lineitem"), "l_suppkey", k=15)
+
+
+_O122 = """
+WITH c AS (
+  SELECT l_suppkey AS key, COUNT(*) AS cnt
+  FROM lineitem WHERE l_suppkey IS NOT NULL GROUP BY l_suppkey),
+t AS (SELECT SUM(cnt) AS total, COUNT(*) AS n_keys FROM c)
+SELECT key, cnt,
+       CAST(cnt * 1000000 // total AS BIGINT) AS share_ppm,
+       CAST(cnt * n_keys * 1000000 // total AS BIGINT) AS avg_multiple_ppm
+FROM c, t ORDER BY cnt DESC, key ASC LIMIT 15
 """
 
 
@@ -3514,6 +3990,69 @@ FROM cagg, pagg
 """
 
 
+def _q138_cooccurrence(spark, sf):
+    """Co-purchase pairs: parts co-occurring in an order (distinct
+    per basket, basket-key self-equi-join, exact pair count,
+    min_count=2 tail prune). Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import cooccurrence_pairs
+    return cooccurrence_pairs(_t(spark, sf, "lineitem"),
+                              basket_col="l_orderkey",
+                              item_col="l_partkey", min_count=2)
+
+
+_O138 = """
+WITH base AS (
+  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem
+  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL)
+SELECT a.it AS item_a, b.it AS item_b, COUNT(*) AS n_baskets
+FROM base a JOIN base b ON a.bk = b.bk AND a.it < b.it
+GROUP BY 1, 2 HAVING COUNT(*) >= 2
+"""
+
+
+def _q139_session_paths(spark, sf):
+    """Session journey mining: n_sessions per first-5-event-type path
+    over gap-1800 sessions — one user-key Exchange feeds both window
+    passes, bounded collect_list, path hash-agg. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import session_path_counts
+    return session_path_counts(_t(spark, sf, "events"),
+                               gap_seconds=1800, max_len=5)
+
+
+_O139 = """
+WITH e AS (
+  SELECT user_id AS u, ts AS t, event_id AS i, event_type AS ty
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND event_type IS NOT NULL),
+f AS (
+  SELECT u, t, i, ty,
+         CASE WHEN lag(epoch(t)) OVER w IS NULL
+                   OR epoch(t) - lag(epoch(t)) OVER w > 1800
+              THEN 1 ELSE 0 END AS new
+  FROM e WINDOW w AS (PARTITION BY u ORDER BY t, i)),
+s AS (
+  SELECT u, ty, t, i,
+         SUM(new) OVER (PARTITION BY u ORDER BY t, i
+                        ROWS UNBOUNDED PRECEDING) AS sid
+  FROM f),
+r AS (
+  SELECT u, sid, ty, ROW_NUMBER() OVER (
+           PARTITION BY u, sid ORDER BY t, i) AS rn
+  FROM s),
+p AS (
+  SELECT u, sid, STRING_AGG(ty, '>' ORDER BY rn) AS path
+  FROM r WHERE rn <= 5 GROUP BY u, sid)
+SELECT path, COUNT(*) AS n_sessions FROM p GROUP BY path
+"""
+# Both window ORDER BYs and the STRING_AGG totalize with event_id /
+# rn — the _O104/_O106 two-pass re-sort hazard; Spark's single-sort
+# plan needs the id tie-break too because path ORDER (unlike session
+# membership) is not tie-invariant under equal timestamps.
+
+
 def _q140_decontaminate_near(spark, sf):
     """Fuzzy decontamination: flag corpus docs (doc_id % 17 != 3)
     whose SimHash is within 3 bits of any benchmark doc (% 17 == 3) —
@@ -3592,6 +4131,53 @@ j AS (
   FROM p LEFT JOIN c ON p.user_id = c.user_id
 )
 SELECT purchase_id, user_id, click_id, gap_us FROM j WHERE rn = 1
+"""
+
+
+def _q142_attribution(spark, sf):
+    """First/last-touch attribution matrix: every purchase attributed
+    to the same user's first and last preceding view/click in the
+    totalized (ts, event_id) order, then counted per (first_type,
+    last_type) cell. ONE user-key exchange, null-skipping struct
+    min/max over a rows-frame window — no conversion×touch join.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import touch_attribution
+    out = touch_attribution(_t(spark, sf, "events"),
+                            conversion_type="purchase",
+                            touch_types=["view", "click"])
+    return (out.groupBy(
+        F.coalesce("first_type", F.lit("(none)")).alias("first_type"),
+        F.coalesce("last_type", F.lit("(none)")).alias("last_type"))
+        .agg(F.count(F.lit(1)).alias("n_conversions")))
+
+
+_O142 = """
+WITH conv AS (SELECT event_id, user_id, ts FROM events
+              WHERE event_type = 'purchase'
+                AND user_id IS NOT NULL AND ts IS NOT NULL),
+t AS (SELECT event_id, user_id, ts, event_type FROM events
+      WHERE event_type IN ('view', 'click')
+        AND user_id IS NOT NULL AND ts IS NOT NULL),
+pairs AS (
+  SELECT c.event_id AS conv_id, t.event_type AS touch_type,
+         ROW_NUMBER() OVER (PARTITION BY c.event_id
+                            ORDER BY t.ts ASC, t.event_id ASC) AS rf,
+         ROW_NUMBER() OVER (PARTITION BY c.event_id
+                            ORDER BY t.ts DESC, t.event_id DESC) AS rl
+  FROM conv c JOIN t ON t.user_id = c.user_id
+                    AND (t.ts, t.event_id) < (c.ts, c.event_id)
+),
+att AS (
+  SELECT c.event_id AS conv_id,
+         MAX(CASE WHEN p.rf = 1 THEN p.touch_type END) AS first_type,
+         MAX(CASE WHEN p.rl = 1 THEN p.touch_type END) AS last_type
+  FROM conv c LEFT JOIN pairs p ON p.conv_id = c.event_id
+  GROUP BY c.event_id
+)
+SELECT COALESCE(first_type, '(none)') AS first_type,
+       COALESCE(last_type, '(none)') AS last_type,
+       COUNT(*)::BIGINT AS n_conversions
+FROM att GROUP BY 1, 2
 """
 
 
@@ -3768,6 +4354,103 @@ FROM a GROUP BY bucket
 """
 
 
+def _q147_group_ols(spark, sf):
+    """Per-priority OLS trend of order value vs order date (dollars ~
+    epoch days): exact BIGINT sufficient statistics (partial-agg-
+    order-independent) assembled by ONE fixed double expression —
+    grid_moran's determinism pattern applied to regression. One
+    map-side-combinable hash-agg, no window, no join. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import group_ols
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority",
+        F.datediff(F.col("o_orderdate").cast("date"),
+                   F.lit("1970-01-01").cast("date"))
+        .cast("long").alias("x_days"),
+        F.round(F.col("o_totalprice")).cast("long").alias("y_dollars"))
+    return group_ols(o, x_col="x_days", y_col="y_dollars",
+                     group_cols=["o_orderpriority"])
+
+
+_O147 = """
+WITH o AS (
+  SELECT o_orderpriority,
+         CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
+           AS x,
+         CAST(ROUND(o_totalprice) AS BIGINT) AS y
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_orderdate IS NOT NULL
+    AND o_totalprice IS NOT NULL),
+s AS (SELECT o_orderpriority, COUNT(*) AS n,
+             CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+             CAST(SUM(x * y) AS BIGINT) AS sxy,
+             CAST(SUM(x * x) AS BIGINT) AS sx2,
+             CAST(SUM(y * y) AS BIGINT) AS sy2
+      FROM o GROUP BY o_orderpriority)
+SELECT o_orderpriority, n, sx, sy, sxy, sx2, sy2,
+  CASE WHEN n::DOUBLE * sx2::DOUBLE - sx::DOUBLE * sx::DOUBLE = 0
+       THEN NULL
+       ELSE (n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+            / (n::DOUBLE * sx2::DOUBLE - sx::DOUBLE * sx::DOUBLE)
+  END AS slope,
+  CASE WHEN n::DOUBLE * sx2::DOUBLE - sx::DOUBLE * sx::DOUBLE = 0
+       THEN NULL
+       ELSE (sy::DOUBLE
+             - ((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+                / (n::DOUBLE * sx2::DOUBLE - sx::DOUBLE * sx::DOUBLE))
+               * sx::DOUBLE) / n::DOUBLE
+  END AS intercept,
+  CASE WHEN n::DOUBLE * sx2::DOUBLE - sx::DOUBLE * sx::DOUBLE = 0
+        OR n::DOUBLE * sy2::DOUBLE - sy::DOUBLE * sy::DOUBLE = 0
+       THEN NULL
+       ELSE (n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+            * (n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+            / ((n::DOUBLE * sx2::DOUBLE - sx::DOUBLE * sx::DOUBLE)
+               * (n::DOUBLE * sy2::DOUBLE - sy::DOUBLE * sy::DOUBLE))
+  END AS r2
+FROM s
+"""
+
+
+def _q148_group_gini(spark, sf):
+    """Per-priority Gini concentration of order value (cents): exact
+    BIGINT rank-formula sums (tie order provably irrelevant — equal
+    values contribute the same Σ rank·x under any tie permutation),
+    ONE group-partitioned window + one hash-agg, final G one fixed
+    double expression. Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import group_gini
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100.0).cast("long")
+        .alias("price_cents"))
+    return group_gini(o, value_col="price_cents",
+                      group_cols=["o_orderpriority"])
+
+
+_O148 = """
+WITH o AS (
+  SELECT o_orderpriority,
+         CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS v
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_totalprice IS NOT NULL),
+r AS (SELECT o_orderpriority, v,
+             ROW_NUMBER() OVER (PARTITION BY o_orderpriority
+                                ORDER BY v ASC) AS rk
+      FROM o),
+s AS (SELECT o_orderpriority, COUNT(*) AS n,
+             CAST(SUM(v) AS BIGINT) AS total,
+             CAST(SUM(rk * v) AS BIGINT) AS srx
+      FROM r GROUP BY o_orderpriority)
+SELECT o_orderpriority, n, total,
+  CASE WHEN total = 0 THEN NULL
+       ELSE (2.0 * srx::DOUBLE - (n::DOUBLE + 1.0) * total::DOUBLE)
+            / (n::DOUBLE * total::DOUBLE)
+  END AS gini
+FROM s
+"""
+
+
 def _q149_quantize_embeddings(spark, sf):
     """Symmetric per-vector int8 quantization of the embeddings table
     (scale = max|v|/127, q = round(v/scale)), emitted flat so the
@@ -3796,6 +4479,271 @@ SELECT vec_id, CAST(idx AS INTEGER) AS idx,
             END AS INTEGER) AS qval,
        scale
 FROM x
+"""
+
+
+def _q150_mad_outliers(spark, sf):
+    """Robust MAD outlier stats per priority: the heavy-tail-safe
+    twin of q90's mean/std outliers — exact integer medians (q19's
+    low-order-statistic rule) applied twice, integer verdict
+    dev·1000 > 3000·MAD. ONE Exchange on the group key; the second
+    median pass re-sorts in place. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import group_mad_outliers
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority", "o_orderkey",
+        F.round(F.col("o_totalprice") * 100.0).cast("long")
+        .alias("price_cents"))
+    out = group_mad_outliers(o, value_col="price_cents",
+                             id_col="o_orderkey",
+                             group_cols=["o_orderpriority"])
+    return (out.groupBy("o_orderpriority")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.min("mad").alias("mad"),
+                 F.sum(F.col("is_outlier").cast("long"))
+                 .alias("n_outliers")))
+
+
+_O150 = """
+WITH b AS (
+  SELECT o_orderpriority AS g, o_orderkey AS id,
+         CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS v
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_orderkey IS NOT NULL
+    AND o_totalprice IS NOT NULL),
+r1 AS (SELECT g, id, v,
+              ROW_NUMBER() OVER (PARTITION BY g
+                                 ORDER BY v ASC, id ASC) AS rn,
+              COUNT(*) OVER (PARTITION BY g) AS cnt
+       FROM b),
+med AS (SELECT g, v AS med FROM r1
+        WHERE rn = CAST(FLOOR((cnt + 1) / 2.0) AS BIGINT)),
+d AS (SELECT r1.g, r1.id, ABS(r1.v - med.med) AS dev
+      FROM r1 JOIN med ON med.g = r1.g),
+r2 AS (SELECT g, id, dev,
+              ROW_NUMBER() OVER (PARTITION BY g
+                                 ORDER BY dev ASC, id ASC) AS rn,
+              COUNT(*) OVER (PARTITION BY g) AS cnt
+       FROM d),
+mad AS (SELECT g, dev AS mad FROM r2
+        WHERE rn = CAST(FLOOR((cnt + 1) / 2.0) AS BIGINT)),
+j AS (SELECT d.g, d.dev, mad.mad FROM d JOIN mad ON mad.g = d.g)
+SELECT g AS o_orderpriority, COUNT(*) AS n, MIN(mad) AS mad,
+       CAST(SUM(CASE WHEN dev * 1000 > 3000 * mad THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_outliers
+FROM j GROUP BY g
+"""
+
+
+def _q151_group_auc(spark, sf):
+    """Per-source ROC AUC of document length predicting lang='en':
+    exact BIGINT midrank sums over the (group, score) distinct table
+    (tie handling is the textbook midrank rule carried as integers),
+    final AUC one fixed double expression. One hash-agg + one
+    group-window + one hash-agg; no join. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import group_auc
+    d = _t(spark, sf, "documents").select(
+        "source", F.col("n_chars").cast("long").alias("len_score"),
+        F.when(F.col("lang").isNull(), F.lit(None))
+        .otherwise((F.col("lang") == "en").cast("long")).alias("is_en"))
+    return group_auc(d, score_col="len_score", label_col="is_en",
+                     group_cols=["source"])
+
+
+_O151 = """
+WITH b AS (
+  SELECT source AS g, CAST(n_chars AS BIGINT) AS s,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+  FROM documents
+  WHERE source IS NOT NULL AND n_chars IS NOT NULL
+    AND lang IS NOT NULL),
+ps AS (SELECT g, s, CAST(SUM(y) AS BIGINT) AS p,
+              CAST(COUNT(*) AS BIGINT) AS c
+       FROM b GROUP BY g, s),
+st AS (SELECT g, p, c,
+              CAST(SUM(c) OVER (PARTITION BY g ORDER BY s ASC
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND CURRENT ROW) AS BIGINT) AS cum
+       FROM ps),
+agg AS (SELECT g, CAST(SUM(p) AS BIGINT) AS n_pos,
+               CAST(SUM(c) - SUM(p) AS BIGINT) AS n_neg,
+               CAST(SUM(p * (2 * (cum - c) + c + 1)) AS BIGINT) AS s2
+        FROM st GROUP BY g)
+SELECT g AS source, n_pos, n_neg,
+       s2 - n_pos * (n_pos + 1) AS auc_num,
+       CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
+            ELSE (s2 - n_pos * (n_pos + 1))::DOUBLE
+                 / (2.0 * n_pos::DOUBLE * n_neg::DOUBLE)
+       END AS auc
+FROM agg
+"""
+
+
+def _q152_ks_2sample(spark, sf):
+    """Per-event-type two-sample KS between the spend distributions
+    of even- vs odd-user shards (the split-balance drift check):
+    exact BIGINT numerator max|cumA*nB - cumB*nA| over the (group,
+    value) distinct table, divided once at the end. One hash-agg,
+    one Exchange for the cumulative+full-frame windows, one final
+    hash-agg. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import ks_2sample
+    e = _t(spark, sf, "events").where(F.col("user_id").isNotNull()) \
+        .select(
+        "event_type",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"),
+        F.when(F.col("user_id") % 2 == 0, F.lit("even"))
+        .otherwise(F.lit("odd")).alias("shard"))
+    return ks_2sample(e, value_col="cents", side_col="shard",
+                      side_a="even", side_b="odd",
+                      group_cols=["event_type"])
+
+
+_O152 = """
+WITH b AS (
+  SELECT event_type AS g,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS v,
+         CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS a
+  FROM events
+  WHERE event_type IS NOT NULL AND value IS NOT NULL
+    AND user_id IS NOT NULL),
+pv AS (SELECT g, v, CAST(SUM(a) AS BIGINT) AS ca,
+              CAST(COUNT(*) - SUM(a) AS BIGINT) AS cb
+       FROM b GROUP BY g, v),
+st AS (SELECT g,
+              CAST(SUM(ca) OVER (PARTITION BY g ORDER BY v ASC
+                                 ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND CURRENT ROW) AS BIGINT) AS cuma,
+              CAST(SUM(cb) OVER (PARTITION BY g ORDER BY v ASC
+                                 ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND CURRENT ROW) AS BIGINT) AS cumb,
+              CAST(SUM(ca) OVER (PARTITION BY g) AS BIGINT) AS na,
+              CAST(SUM(cb) OVER (PARTITION BY g) AS BIGINT) AS nb
+       FROM pv)
+SELECT g AS event_type, MAX(na) AS n_a, MAX(nb) AS n_b,
+       MAX(ABS(cuma * nb - cumb * na)) AS ks_num,
+       CASE WHEN MAX(na) = 0 OR MAX(nb) = 0 THEN NULL
+            ELSE MAX(ABS(cuma * nb - cumb * na))::DOUBLE
+                 / (MAX(na)::DOUBLE * MAX(nb)::DOUBLE)
+       END AS ks
+FROM st GROUP BY g
+"""
+
+
+def _q153_top_p_coverage(spark, sf):
+    """Per-event-type user concentration: the minimal number of
+    distinct users (ranked by event count desc, id asc — pinned)
+    covering 80% of the type's events. Coverage test is the exact
+    integer comparison cum_before*1000 < 800*total; one (group,
+    item) hash-agg + one group window + one final hash-agg. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import top_p_coverage
+    e = _t(spark, sf, "events")
+    return top_p_coverage(e, item_col="user_id",
+                          group_cols=["event_type"], p_milli=800)
+
+
+_O153 = """
+WITH b AS (
+  SELECT event_type AS g, user_id AS it
+  FROM events
+  WHERE event_type IS NOT NULL AND user_id IS NOT NULL),
+pi AS (SELECT g, it, CAST(COUNT(*) AS BIGINT) AS c
+       FROM b GROUP BY g, it),
+st AS (SELECT g, c,
+              CAST(SUM(c) OVER (PARTITION BY g
+                                ORDER BY c DESC, it ASC
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND CURRENT ROW) AS BIGINT) AS cum,
+              CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS total
+       FROM pi)
+SELECT g AS event_type, COUNT(*) AS n_items,
+       MAX(total) AS total,
+       CAST(SUM(CASE WHEN (cum - c) * 1000 < 800 * total
+                     THEN 1 ELSE 0 END) AS BIGINT) AS k_items,
+       MAX(CASE WHEN (cum - c) * 1000 < 800 * total
+                THEN cum END) AS head_mass
+FROM st GROUP BY g
+"""
+
+
+def _q154_group_entropy(spark, sf):
+    """Per-language Shannon entropy of the source mix: category
+    counts are exact BIGINTs, ln is integerized to micro-nats PER
+    DISTINCT COUNT before any sum (unigram_surprisal's rule), and
+    the final entropy is one division of identical integers. Two
+    hash-aggs, no window/join/collected list. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import group_entropy
+    return group_entropy(_t(spark, sf, "documents"),
+                         cat_col="source", group_cols=["lang"])
+
+
+_O154 = """
+WITH b AS (
+  SELECT lang AS g, source AS cat FROM documents
+  WHERE lang IS NOT NULL AND source IS NOT NULL),
+pc AS (SELECT g, cat, CAST(COUNT(*) AS BIGINT) AS c
+       FROM b GROUP BY g, cat),
+s AS (SELECT g, CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS k_cats,
+             CAST(SUM(c * CAST(ROUND(LN(c::DOUBLE) * 1000000.0)
+                               AS BIGINT)) AS BIGINT) AS sclc
+      FROM pc GROUP BY g)
+SELECT g AS lang, n, k_cats,
+       n * CAST(ROUND(LN(n::DOUBLE) * 1000000.0) AS BIGINT) - sclc
+         AS ent_num_micro,
+       (n * CAST(ROUND(LN(n::DOUBLE) * 1000000.0) AS BIGINT)
+        - sclc)::DOUBLE / (n::DOUBLE * 1000000.0) AS entropy
+FROM s
+"""
+
+
+def _q155_cusum_changepoint(spark, sf):
+    """Per-event-type CUSUM change-point of the spend series ordered
+    by (epoch-micros, event_id): exact BIGINT deviations carried xn
+    (|n*cum - i*total|), argmax tie pinned to the smallest position
+    via min(struct(-dev, i)), magnitude one division of identical
+    integers. A single Exchange (cumulative + full-frame windows on
+    one partitioning) + one final hash-agg. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import cusum_changepoint
+    e = _t(spark, sf, "events").select(
+        "event_type", "event_id",
+        F.expr("timestampdiff(MICROSECOND, "
+               "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
+        .alias("ts_us"),
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return cusum_changepoint(e, value_col="cents", order_col="ts_us",
+                             id_col="event_id",
+                             group_cols=["event_type"])
+
+
+_O155 = """
+WITH b AS (
+  SELECT event_type AS g, epoch_us(ts) AS o, event_id AS id,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS v
+  FROM events
+  WHERE event_type IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+r AS (SELECT g, o,
+             ROW_NUMBER() OVER (PARTITION BY g
+                                ORDER BY o ASC, id ASC) AS i,
+             CAST(SUM(v) OVER (PARTITION BY g ORDER BY o ASC, id ASC
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND CURRENT ROW) AS BIGINT) AS cum,
+             CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n,
+             CAST(SUM(v) OVER (PARTITION BY g) AS BIGINT) AS tot
+      FROM b),
+d AS (SELECT g, o, i, n, tot, ABS(n * cum - i * tot) AS dev FROM r),
+p AS (SELECT g, o, i, n, tot, dev,
+             ROW_NUMBER() OVER (PARTITION BY g
+                                ORDER BY dev DESC, i ASC) AS pick
+      FROM d)
+SELECT g AS event_type, n, tot AS total, CAST(i AS BIGINT) AS cp_pos,
+       o AS cp_at, dev AS cusum_num,
+       dev::DOUBLE / (n::DOUBLE * n::DOUBLE) AS cusum
+FROM p WHERE pick = 1
 """
 
 
@@ -3839,6 +4787,221 @@ SELECT n_name, plen AS net_plen,
 FROM ip JOIN net
   ON (ipn >> (32 - plen)) = (base >> (32 - plen))
 GROUP BY n_name, plen
+"""
+
+
+def _q157_rolling_median(spark, sf):
+    """Per-event-type trailing-25 rolling median of spend cents
+    ordered by (epoch-micros, event_id): exact integer low order
+    statistic per frame (q19's rule applied to a bounded rows frame
+    — task memory O(window), never an unbounded collect). ONE group
+    Exchange. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import rolling_median
+    e = _t(spark, sf, "events").select(
+        "event_type", "event_id",
+        F.expr("timestampdiff(MICROSECOND, "
+               "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
+        .alias("ts_us"),
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return rolling_median(e, value_col="cents", order_col="ts_us",
+                          id_col="event_id",
+                          group_cols=["event_type"], window=25)
+
+
+_O157 = """
+WITH b AS (
+  SELECT event_type AS g, epoch_us(ts) AS o, event_id AS id,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS v
+  FROM events
+  WHERE event_type IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+w AS (
+  SELECT g, o, id, v,
+         list_sort(list(v) OVER (PARTITION BY g ORDER BY o ASC, id ASC
+                                 ROWS BETWEEN 24 PRECEDING
+                                 AND CURRENT ROW)) AS fr
+  FROM b)
+SELECT g AS event_type, o AS ts_us, id AS event_id, v AS value,
+       fr[CAST((len(fr) + 1) // 2 AS INT)] AS roll_med
+FROM w
+"""
+
+
+def _q158_max_streak(spark, sf):
+    """Per-user longest consecutive-active-day streak: classic
+    islands arithmetic (day - row_number constant within a run), all
+    exact integers; distinct + a user-clustered window/agg tail on
+    one Exchange. Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.eventops import max_streak
+    e = _t(spark, sf, "events").select(
+        "user_id",
+        F.expr("timestampdiff(MICROSECOND, "
+               "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+               " div 86400000000").alias("day"))
+    return max_streak(e, user_col="user_id", day_col="day")
+
+
+_O158 = """
+WITH b AS (
+  SELECT DISTINCT user_id AS u,
+         epoch_us(ts) // 86400000000 AS d
+  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+r AS (SELECT u, d,
+             d - ROW_NUMBER() OVER (PARTITION BY u ORDER BY d ASC)
+               AS isl
+      FROM b),
+runs AS (SELECT u, isl, CAST(COUNT(*) AS BIGINT) AS len
+         FROM r GROUP BY u, isl)
+SELECT u AS user_id, CAST(SUM(len) AS BIGINT) AS n_active_days,
+       COUNT(*) AS n_streaks, CAST(MAX(len) AS BIGINT) AS max_streak
+FROM runs GROUP BY u
+"""
+
+
+def _q159_percentile_rank(spark, sf):
+    """Per-priority percentile rank of order value (ANSI PERCENT_RANK
+    semantics, min-rank ties) carried as exact integers with ONE
+    final division — the curriculum-ordering primitive. Rank and the
+    full-frame count share a single group Exchange. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import percentile_rank
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority", "o_orderkey",
+        F.round(F.col("o_totalprice") * 100.0).cast("long")
+        .alias("price_cents"))
+    return percentile_rank(o, value_col="price_cents",
+                           id_col="o_orderkey",
+                           group_cols=["o_orderpriority"])
+
+
+_O159 = """
+WITH b AS (
+  SELECT o_orderpriority AS g, o_orderkey AS id,
+         CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS v
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_orderkey IS NOT NULL
+    AND o_totalprice IS NOT NULL),
+r AS (SELECT g, id, v,
+             CAST(RANK() OVER (PARTITION BY g ORDER BY v ASC)
+                  AS BIGINT) AS rnk,
+             CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
+      FROM b)
+SELECT g AS o_orderpriority, id AS o_orderkey, v AS value, rnk, n,
+       CASE WHEN n = 1 THEN NULL
+            ELSE (rnk - 1)::DOUBLE / (n - 1)::DOUBLE
+       END AS pct_rank
+FROM r
+"""
+
+
+def _q160_jaccard_pairs(spark, sf):
+    """Audience overlap between event types: pairwise Jaccard of
+    user sets — cooccurrence_pairs for the exact intersections plus
+    broadcast degree joins; |A∪B| derived as n_a+n_b−n_both, J one
+    division of identical integers. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import jaccard_pairs
+    e = _t(spark, sf, "events")
+    return jaccard_pairs(e, basket_col="user_id",
+                         item_col="event_type")
+
+
+_O160 = """
+WITH b AS (
+  SELECT DISTINCT user_id AS bk, event_type AS it
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
+deg AS (SELECT it, CAST(COUNT(*) AS BIGINT) AS d FROM b GROUP BY it),
+p AS (SELECT a.it AS item_a, bb.it AS item_b,
+             CAST(COUNT(*) AS BIGINT) AS n_both
+      FROM b a JOIN b bb ON a.bk = bb.bk AND a.it < bb.it
+      GROUP BY a.it, bb.it)
+SELECT item_a, item_b, da.d AS n_a, db.d AS n_b, n_both,
+       n_both::DOUBLE / (da.d + db.d - n_both)::DOUBLE AS jaccard
+FROM p
+JOIN deg da ON da.it = item_a
+JOIN deg db ON db.it = item_b
+"""
+
+
+def _q161_corr_matrix(spark, sf):
+    """Per-returnflag Pearson correlation matrix over four integer-
+    ized lineitem metrics: ONE hash-aggregate computes all k·(k+1)/2
+    exact BIGINT cross sums (dollars not cents so Σx² stays far from
+    2⁶³ at sf0.1), then each correlation is a fixed double expression
+    of identical integers — bit-exact cross-engine. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import corr_matrix
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.round(F.col("l_quantity")).cast("long").alias("qty"),
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"),
+        F.round(F.col("l_discount") * 100.0).cast("long")
+        .alias("disc_pct"),
+        F.round(F.col("l_tax") * 100.0).cast("long").alias("tax_pct"))
+    return corr_matrix(li,
+                       value_cols=["qty", "price_dollars",
+                                   "disc_pct", "tax_pct"],
+                       group_cols=["l_returnflag"])
+
+
+_O161 = """
+WITH b AS (
+  SELECT l_returnflag AS g,
+         CAST(ROUND(l_quantity) AS BIGINT) AS q,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS p,
+         CAST(ROUND(l_discount * 100.0) AS BIGINT) AS d,
+         CAST(ROUND(l_tax * 100.0) AS BIGINT) AS t
+  FROM lineitem
+  WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
+    AND l_extendedprice IS NOT NULL AND l_discount IS NOT NULL
+    AND l_tax IS NOT NULL),
+s AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(d) AS BIGINT) AS s_d,
+             CAST(SUM(p) AS BIGINT) AS s_p,
+             CAST(SUM(q) AS BIGINT) AS s_q,
+             CAST(SUM(t) AS BIGINT) AS s_t,
+             CAST(SUM(d * d) AS BIGINT) AS p_dd,
+             CAST(SUM(d * p) AS BIGINT) AS p_dp,
+             CAST(SUM(d * q) AS BIGINT) AS p_dq,
+             CAST(SUM(d * t) AS BIGINT) AS p_dt,
+             CAST(SUM(p * p) AS BIGINT) AS p_pp,
+             CAST(SUM(p * q) AS BIGINT) AS p_pq,
+             CAST(SUM(p * t) AS BIGINT) AS p_pt,
+             CAST(SUM(q * q) AS BIGINT) AS p_qq,
+             CAST(SUM(q * t) AS BIGINT) AS p_qt,
+             CAST(SUM(t * t) AS BIGINT) AS p_tt
+      FROM b GROUP BY g),
+pairs AS (
+  SELECT g, n, 'disc_pct' AS col_a, 'price_dollars' AS col_b,
+         p_dp AS pab, s_d AS sa, s_p AS sb, p_dd AS paa, p_pp AS pbb
+  FROM s
+  UNION ALL
+  SELECT g, n, 'disc_pct', 'qty', p_dq, s_d, s_q, p_dd, p_qq FROM s
+  UNION ALL
+  SELECT g, n, 'disc_pct', 'tax_pct', p_dt, s_d, s_t, p_dd, p_tt
+  FROM s
+  UNION ALL
+  SELECT g, n, 'price_dollars', 'qty', p_pq, s_p, s_q, p_pp, p_qq
+  FROM s
+  UNION ALL
+  SELECT g, n, 'price_dollars', 'tax_pct', p_pt, s_p, s_t, p_pp,
+         p_tt
+  FROM s
+  UNION ALL
+  SELECT g, n, 'qty', 'tax_pct', p_qt, s_q, s_t, p_qq, p_tt FROM s)
+SELECT g AS l_returnflag, col_a, col_b, n,
+  CASE WHEN n::DOUBLE * paa::DOUBLE - sa::DOUBLE * sa::DOUBLE <= 0
+        OR n::DOUBLE * pbb::DOUBLE - sb::DOUBLE * sb::DOUBLE <= 0
+       THEN NULL
+       ELSE (n::DOUBLE * pab::DOUBLE - sa::DOUBLE * sb::DOUBLE)
+            / sqrt((n::DOUBLE * paa::DOUBLE - sa::DOUBLE * sa::DOUBLE)
+                 * (n::DOUBLE * pbb::DOUBLE - sb::DOUBLE * sb::DOUBLE))
+  END AS corr
+FROM pairs
 """
 
 
@@ -3910,6 +5073,112 @@ FROM o
 """
 
 _O162 = _O162_TEMPLATE.format(pred=_Q162_PRED.format(h="h"))
+
+
+def _q163_chi2(spark, sf):
+    """Chi-square independence of order priority × order status with
+    Cramér's V: exact BIGINT contingency marginals, micro-unit-floored
+    per-cell contributions summed as integers (addition-order
+    independent), zero cells of the full grid included. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import chi2_independence
+    return chi2_independence(_t(spark, sf, "orders"),
+                             col_a="o_orderpriority",
+                             col_b="o_orderstatus")
+
+
+_O163 = """
+WITH cells AS (
+  SELECT o_orderpriority AS a, o_orderstatus AS b,
+         CAST(COUNT(*) AS BIGINT) AS obs
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
+  GROUP BY 1, 2),
+ra AS (SELECT a, CAST(SUM(obs) AS BIGINT) AS ra FROM cells GROUP BY a),
+cb AS (SELECT b, CAST(SUM(obs) AS BIGINT) AS cb FROM cells GROUP BY b),
+tot AS (SELECT CAST(SUM(ra) AS BIGINT) AS n FROM ra),
+grid AS (
+  SELECT ra.a, cb.b, ra.ra, cb.cb, COALESCE(cells.obs, 0) AS obs, tot.n
+  FROM ra CROSS JOIN cb CROSS JOIN tot
+  LEFT JOIN cells ON cells.a = ra.a AND cells.b = cb.b),
+contrib AS (
+  SELECT n, a, b,
+         CAST(FLOOR(
+           CAST((obs * n - ra * cb) AS DOUBLE)
+           * CAST((obs * n - ra * cb) AS DOUBLE)
+           / CAST(n * ra * cb AS DOUBLE) * 1000000.0) AS BIGINT) AS c
+  FROM grid),
+agg AS (
+  SELECT MAX(n) AS n,
+         CAST(COUNT(DISTINCT a) AS BIGINT) AS k_a,
+         CAST(COUNT(DISTINCT b) AS BIGINT) AS k_b,
+         CAST(SUM(c) AS BIGINT) AS chi2_micro
+  FROM contrib)
+SELECT n, k_a, k_b, (k_a - 1) * (k_b - 1) AS dof, chi2_micro,
+       CASE WHEN (k_a - 1) * (k_b - 1) > 0
+            THEN chi2_micro::DOUBLE / 1000000.0 END AS chi2,
+       CASE WHEN (k_a - 1) * (k_b - 1) > 0 AND n > 0
+            THEN sqrt((chi2_micro::DOUBLE / 1000000.0)
+                      / CAST(n * (LEAST(k_a, k_b) - 1) AS DOUBLE)) END
+         AS cramers_v
+FROM agg
+"""
+
+
+def _q164_welch_ttest(spark, sf):
+    """Welch t of returned-vs-refused line revenue per linestatus:
+    one conditional hash-agg of exact BIGINT n/Σv/Σv² per side, then
+    fixed IEEE double expressions — bit-identical cross-engine.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import welch_ttest
+    li = _t(spark, sf, "lineitem").select(
+        "l_linestatus", "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    return welch_ttest(li, value_col="price_dollars",
+                       group_col="l_returnflag",
+                       group_a="A", group_b="R",
+                       group_cols=["l_linestatus"])
+
+
+_O164 = """
+WITH b AS (
+  SELECT l_linestatus AS g, l_returnflag AS f,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS v
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_linestatus IS NOT NULL
+    AND l_returnflag IN ('A', 'R')),
+s AS (
+  SELECT g,
+         CAST(SUM(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+         CAST(SUM(CASE WHEN f = 'A' THEN v ELSE 0 END) AS BIGINT) AS s_a,
+         CAST(SUM(CASE WHEN f = 'A' THEN v * v ELSE 0 END) AS BIGINT)
+           AS ss_a,
+         CAST(SUM(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+         CAST(SUM(CASE WHEN f = 'R' THEN v ELSE 0 END) AS BIGINT) AS s_b,
+         CAST(SUM(CASE WHEN f = 'R' THEN v * v ELSE 0 END) AS BIGINT)
+           AS ss_b
+  FROM b GROUP BY g),
+e AS (
+  SELECT g, n_a, n_b,
+         s_a::DOUBLE / n_a::DOUBLE AS mean_a,
+         s_b::DOUBLE / n_b::DOUBLE AS mean_b,
+         ((n_a::DOUBLE * ss_a::DOUBLE - s_a::DOUBLE * s_a::DOUBLE)
+          / (n_a::DOUBLE * (n_a::DOUBLE - 1.0))) / n_a::DOUBLE AS va,
+         ((n_b::DOUBLE * ss_b::DOUBLE - s_b::DOUBLE * s_b::DOUBLE)
+          / (n_b::DOUBLE * (n_b::DOUBLE - 1.0))) / n_b::DOUBLE AS vb
+  FROM s)
+SELECT g AS l_linestatus, n_a, n_b,
+       CASE WHEN n_a > 0 THEN mean_a END AS mean_a,
+       CASE WHEN n_b > 0 THEN mean_b END AS mean_b,
+       CASE WHEN n_a >= 2 AND n_b >= 2 AND va + vb > 0
+            THEN (mean_a - mean_b) / sqrt(va + vb) END AS t_stat,
+       CASE WHEN n_a >= 2 AND n_b >= 2 AND va + vb > 0
+            THEN ((va + vb) * (va + vb))
+                 / (va * va / (n_a::DOUBLE - 1.0)
+                    + vb * vb / (n_b::DOUBLE - 1.0)) END AS welch_df
+FROM e
+"""
 
 
 def _q165_snm_pairs(spark, sf):
@@ -4152,6 +5421,169 @@ FROM agg
 """
 
 
+def _q171_mannwhitney(spark, sf):
+    """Mann-Whitney U of returned-vs-refused line revenue per
+    linestatus: per-value side counts + exclusive prefix sum (the
+    ks_2sample shape), U carried ×2 as an exact BIGINT so tie-halves
+    stay integral, tie-corrected z one fixed double expression.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import mannwhitney_u
+    li = _t(spark, sf, "lineitem").select(
+        "l_linestatus", "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    return mannwhitney_u(li, value_col="price_dollars",
+                         side_col="l_returnflag",
+                         side_a="A", side_b="R",
+                         group_cols=["l_linestatus"])
+
+
+_O171 = """
+WITH b AS (
+  SELECT l_linestatus AS g,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS v,
+         CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END AS a
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_linestatus IS NOT NULL
+    AND l_returnflag IN ('A', 'R')),
+pv AS (SELECT g, v, CAST(SUM(a) AS BIGINT) AS ca,
+              CAST(COUNT(*) - SUM(a) AS BIGINT) AS cb
+       FROM b GROUP BY g, v),
+st AS (
+  SELECT g, ca, cb,
+         COALESCE(SUM(cb) OVER (PARTITION BY g ORDER BY v
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND 1 PRECEDING), 0) AS beforeb,
+         SUM(ca) OVER (PARTITION BY g) AS na,
+         SUM(cb) OVER (PARTITION BY g) AS nb,
+         (ca + cb) * (ca + cb) * (ca + cb) - (ca + cb) AS t3
+  FROM pv),
+s AS (
+  SELECT g, CAST(MAX(na) AS BIGINT) AS n_a,
+         CAST(MAX(nb) AS BIGINT) AS n_b,
+         CAST(SUM(ca * (2 * beforeb + cb)) AS BIGINT) AS u2_a,
+         CAST(SUM(t3) AS BIGINT) AS T3
+  FROM st GROUP BY g)
+SELECT g AS l_linestatus, n_a, n_b, u2_a,
+  CASE WHEN n_a > 0 AND n_b > 0
+       THEN u2_a::DOUBLE / 2.0 END AS u_a,
+  CASE WHEN n_a > 0 AND n_b > 0 AND
+            (n_a::DOUBLE * n_b::DOUBLE / 12.0)
+            * ((n_a + n_b)::DOUBLE + 1.0
+               - T3::DOUBLE / ((n_a + n_b)::DOUBLE
+                               * ((n_a + n_b)::DOUBLE - 1.0))) > 0
+       THEN (u2_a::DOUBLE - n_a::DOUBLE * n_b::DOUBLE)
+            / (2.0 * sqrt((n_a::DOUBLE * n_b::DOUBLE / 12.0)
+               * ((n_a + n_b)::DOUBLE + 1.0
+                  - T3::DOUBLE / ((n_a + n_b)::DOUBLE
+                                  * ((n_a + n_b)::DOUBLE - 1.0)))))
+  END AS z
+FROM s
+"""
+
+
+def _q172_prop_ztest(spark, sf):
+    """Two-proportion z-test of the urgent-order rate between order
+    statuses F and O: four exact BIGINTs from one conditional
+    hash-agg, rates/pooled-p/z fixed double expressions. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import two_proportion_ztest
+    o = _t(spark, sf, "orders").select(
+        "o_orderstatus",
+        (F.col("o_orderpriority") == "1-URGENT").cast("long")
+        .alias("urgent"))
+    return two_proportion_ztest(o, success_col="urgent",
+                                group_col="o_orderstatus",
+                                group_a="F", group_b="O")
+
+
+_O172 = """
+WITH b AS (
+  SELECT o_orderstatus AS g,
+         CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS v
+  FROM orders WHERE o_orderstatus IN ('F', 'O')),
+s AS (
+  SELECT
+    CAST(SUM(CASE WHEN g = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+    CAST(SUM(CASE WHEN g <> 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+    CAST(SUM(CASE WHEN g = 'F' THEN v ELSE 0 END) AS BIGINT) AS s_a,
+    CAST(SUM(CASE WHEN g <> 'F' THEN v ELSE 0 END) AS BIGINT) AS s_b
+  FROM b)
+SELECT n_a, n_b, s_a, s_b,
+  CASE WHEN n_a > 0 THEN s_a::DOUBLE / n_a::DOUBLE END AS p_a,
+  CASE WHEN n_b > 0 THEN s_b::DOUBLE / n_b::DOUBLE END AS p_b,
+  CASE WHEN n_a > 0 AND n_b > 0 AND s_a + s_b > 0
+            AND s_a + s_b < n_a + n_b
+       THEN (s_a::DOUBLE / n_a::DOUBLE - s_b::DOUBLE / n_b::DOUBLE)
+            / sqrt(((s_a + s_b)::DOUBLE / (n_a + n_b)::DOUBLE)
+                   * (1.0 - (s_a + s_b)::DOUBLE / (n_a + n_b)::DOUBLE)
+                   * (1.0 / n_a::DOUBLE + 1.0 / n_b::DOUBLE))
+  END AS z
+FROM s
+"""
+
+
+def _q173_lag_autocorr(spark, sf):
+    """Lag-1/2/3 autocorrelation of each supplier's line-revenue
+    series (order totalized as orderkey·100+linenumber — unique per
+    supplier): one per-group window sort feeds all lag leads, six
+    exact BIGINT sufficient statistics per (supplier, lag), acf one
+    fixed double expression. Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import lag_autocorr
+    li = _t(spark, sf, "lineitem").select(
+        "l_suppkey", "l_orderkey", "l_linenumber", "l_partkey",
+        F.round(F.col("l_extendedprice")).cast("long").alias("price"))
+    return lag_autocorr(li, value_col="price",
+                        order_cols=["l_orderkey", "l_linenumber",
+                                    "l_partkey"],
+                        group_cols=["l_suppkey"], lags=(1, 2, 3))
+
+
+_O173 = """
+WITH b AS (
+  SELECT l_suppkey AS g, l_orderkey AS o1, l_linenumber AS o2,
+         l_partkey AS o3,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS x
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_suppkey IS NOT NULL
+    AND l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
+    AND l_partkey IS NOT NULL),
+led AS (
+  SELECT g, x,
+         lead(x, 1) OVER w AS y1,
+         lead(x, 2) OVER w AS y2,
+         lead(x, 3) OVER w AS y3
+  FROM b WINDOW w AS (PARTITION BY g ORDER BY o1, o2, o3)),
+p AS (
+  SELECT g, 1 AS lag, x, y1 AS y FROM led WHERE y1 IS NOT NULL
+  UNION ALL
+  SELECT g, 2, x, y2 FROM led WHERE y2 IS NOT NULL
+  UNION ALL
+  SELECT g, 3, x, y3 FROM led WHERE y3 IS NOT NULL),
+s AS (
+  SELECT g, lag, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y * y) AS BIGINT) AS syy,
+         CAST(SUM(x * y) AS BIGINT) AS sxy
+  FROM p GROUP BY g, lag)
+SELECT g AS l_suppkey, lag, n_pairs,
+  CASE WHEN n_pairs >= 2
+            AND n_pairs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE
+                > 0
+            AND n_pairs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE
+                > 0
+       THEN (n_pairs::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+            / sqrt((n_pairs::DOUBLE * sxx::DOUBLE
+                    - sx::DOUBLE * sx::DOUBLE)
+                 * (n_pairs::DOUBLE * syy::DOUBLE
+                    - sy::DOUBLE * sy::DOUBLE))
+  END AS acf
+FROM s
+"""
+
+
 def _q174_benford(spark, sf):
     """Benford first-digit audit of line revenue (dollars) per
     returnflag: leading digit from the STRING rendering (never
@@ -4195,6 +5627,53 @@ SELECT grid.g AS l_returnflag, grid.digit,
 FROM grid
 LEFT JOIN c ON c.g = grid.g AND c.digit = grid.digit
 LEFT JOIN tot ON tot.g = grid.g
+"""
+
+
+def _q175_anova(spark, sf):
+    """One-way ANOVA F of line revenue across returnflag levels per
+    linestatus: per-level exact BIGINT n/Σv/Σv², between-groups
+    contributions milli-floored per level before the BIGINT sum
+    (addition-order independent), F one fixed double expression.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import oneway_anova
+    li = _t(spark, sf, "lineitem").select(
+        "l_linestatus", "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    return oneway_anova(li, value_col="price_dollars",
+                        factor_col="l_returnflag",
+                        group_cols=["l_linestatus"])
+
+
+_O175 = """
+WITH b AS (
+  SELECT l_linestatus AS g, l_returnflag AS lvl,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS v
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_linestatus IS NOT NULL
+    AND l_returnflag IS NOT NULL),
+lv AS (
+  SELECT g, lvl, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(v) AS BIGINT) AS s, CAST(SUM(v * v) AS BIGINT) AS ss
+  FROM b GROUP BY g, lvl),
+agg AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS k, CAST(SUM(n) AS BIGINT) AS n,
+         CAST(SUM(s) AS BIGINT) AS S, CAST(SUM(ss) AS BIGINT) AS SS,
+         CAST(SUM(CAST(FLOOR(s::DOUBLE * s::DOUBLE / n::DOUBLE
+                             * 1000.0) AS BIGINT)) AS BIGINT) AS cb
+  FROM lv GROUP BY g),
+fin AS (
+  SELECT g, k, n,
+         cb - CAST(FLOOR(S::DOUBLE * S::DOUBLE / n::DOUBLE * 1000.0)
+                   AS BIGINT) AS ssb_milli,
+         1000 * SS - cb AS ssw_milli
+  FROM agg)
+SELECT g AS l_linestatus, k, n, ssb_milli, ssw_milli,
+  CASE WHEN k >= 2 AND n > k AND ssw_milli > 0
+       THEN (ssb_milli::DOUBLE / (k - 1)::DOUBLE)
+            / (ssw_milli::DOUBLE / (n - k)::DOUBLE) END AS f_stat
+FROM fin
 """
 
 
@@ -4306,6 +5785,120 @@ FROM agg
 """
 
 
+def _q178_ndcg(spark, sf):
+    """NDCG@10 per returnflag: system ranks parts by revenue, graded
+    relevance = total quantity; discounts are precomputed micro
+    literals for the 10 fixed positions, DCG/IDCG exact BIGINT dot
+    products, both rankings totalized by the part id. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import ndcg_at_k
+    li = _t(spark, sf, "lineitem")
+    d = (li.groupBy("l_returnflag", "l_partkey")
+         .agg(F.round(F.sum(F.col("l_extendedprice"))).cast("long")
+              .alias("rev"),
+              F.round(F.sum("l_quantity")).cast("long").alias("qty")))
+    return ndcg_at_k(d, group_cols=["l_returnflag"],
+                     id_col="l_partkey", score_col="rev",
+                     rel_col="qty", k=10)
+
+
+def _o178() -> str:
+    import math
+    disc = [round(1_000_000 / math.log2(i + 1)) for i in range(1, 11)]
+    darr = "[" + ", ".join(str(x) for x in disc) + "]"
+    return f"""
+WITH d AS (
+  SELECT l_returnflag AS g, l_partkey AS id,
+         CAST(ROUND(SUM(l_extendedprice)) AS BIGINT) AS s,
+         CAST(ROUND(SUM(l_quantity)) AS BIGINT) AS r
+  FROM lineitem
+  WHERE l_returnflag IS NOT NULL AND l_partkey IS NOT NULL
+  GROUP BY 1, 2),
+rk AS (
+  SELECT g, r,
+         ROW_NUMBER() OVER (PARTITION BY g ORDER BY s DESC, id ASC)
+           AS rk_sys,
+         ROW_NUMBER() OVER (PARTITION BY g ORDER BY r DESC, id ASC)
+           AS rk_ideal
+  FROM d),
+agg AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n_items,
+         CAST(SUM(CASE WHEN rk_sys <= 10
+                       THEN r * ({darr})[rk_sys] ELSE 0 END)
+              AS BIGINT) AS dcg_micro,
+         CAST(SUM(CASE WHEN rk_ideal <= 10
+                       THEN r * ({darr})[rk_ideal] ELSE 0 END)
+              AS BIGINT) AS idcg_micro
+  FROM rk GROUP BY g)
+SELECT g AS l_returnflag, n_items, dcg_micro, idcg_micro,
+       CASE WHEN idcg_micro > 0
+            THEN dcg_micro::DOUBLE / idcg_micro::DOUBLE END AS ndcg
+FROM agg
+"""
+
+
+def _q179_rrf(spark, sf):
+    """RRF fusion of two top-100 part rankings (by revenue, by
+    quantity): per-run min-rank collapse, one full-outer equi-join,
+    score a FIXED two-term IEEE sum — never a data-ordered float
+    aggregation. The run construction's global row_number windows run
+    over the part-level AGGREGATE (bounded by distinct parts), the
+    package's documented tiny-frame window exception. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from pyspark.sql import Window as W
+    from kml2geojson_spark.relational import rrf_fuse
+    li = _t(spark, sf, "lineitem")
+    pa = (li.groupBy("l_partkey")
+          .agg(F.round(F.sum("l_extendedprice")).cast("long")
+               .alias("m")))
+    runa = pa.select(F.col("l_partkey").alias("item"),
+                     F.row_number().over(
+                         W.orderBy(F.col("m").desc(),
+                                   F.col("l_partkey").asc()))
+                     .alias("rnk"))
+    pb = (li.groupBy("l_partkey")
+          .agg(F.round(F.sum("l_quantity")).cast("long").alias("m")))
+    runb = pb.select(F.col("l_partkey").alias("item"),
+                     F.row_number().over(
+                         W.orderBy(F.col("m").desc(),
+                                   F.col("l_partkey").asc()))
+                     .alias("rnk"))
+    return rrf_fuse([runa.where(F.col("rnk") <= 100),
+                     runb.where(F.col("rnk") <= 100)], k=60)
+
+
+_O179 = """
+WITH pa AS (
+  SELECT l_partkey AS item,
+         ROW_NUMBER() OVER (ORDER BY CAST(ROUND(SUM(l_extendedprice))
+                                          AS BIGINT) DESC,
+                            l_partkey ASC) AS rnk
+  FROM lineitem WHERE l_partkey IS NOT NULL GROUP BY l_partkey),
+pb AS (
+  SELECT l_partkey AS item,
+         ROW_NUMBER() OVER (ORDER BY CAST(ROUND(SUM(l_quantity))
+                                          AS BIGINT) DESC,
+                            l_partkey ASC) AS rnk
+  FROM lineitem WHERE l_partkey IS NOT NULL GROUP BY l_partkey),
+a AS (SELECT item, CAST(MIN(rnk) AS BIGINT) AS rank_1 FROM pa
+      WHERE rnk <= 100 GROUP BY item),
+b AS (SELECT item, CAST(MIN(rnk) AS BIGINT) AS rank_2 FROM pb
+      WHERE rnk <= 100 GROUP BY item),
+f AS (SELECT COALESCE(a.item, b.item) AS item, rank_1, rank_2
+      FROM a FULL OUTER JOIN b ON a.item = b.item)
+SELECT item,
+       CAST((rank_1 IS NOT NULL)::INTEGER
+            + (rank_2 IS NOT NULL)::INTEGER AS INTEGER) AS n_runs_hit,
+       rank_1, rank_2,
+       (0.0 + CASE WHEN rank_1 IS NOT NULL
+                   THEN 1.0 / (60.0 + rank_1::DOUBLE) ELSE 0.0 END)
+           + CASE WHEN rank_2 IS NOT NULL
+                  THEN 1.0 / (60.0 + rank_2::DOUBLE) ELSE 0.0 END
+         AS rrf_score
+FROM f
+"""
+
+
 def _q180_kcore(spark, sf):
     """8-core of the customer–supplier purchase graph: iterative
     degree peeling to the fixpoint (raises rather than return a
@@ -4344,6 +5937,147 @@ e{i} AS MATERIALIZED (SELECT t.src, t.dst FROM {prev} t
 SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS degree
 FROM {prev} GROUP BY src"""
     return s
+
+
+def _q181_burst_dedup(spark, sf):
+    """Burst (retry) dedup of the events stream per (user, type):
+    chained 1-hour gap bursts, keeper = min(struct(ts, id)), all time
+    arithmetic exact microsecond BIGINTs (timestampdiff — a float
+    epoch would flip threshold-adjacent bursts). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import event_dedup_bursts
+    return event_dedup_bursts(_t(spark, sf, "events"),
+                              key_cols=["user_id", "event_type"],
+                              gap_seconds=3600)
+
+
+_O181 = """
+WITH b AS (
+  SELECT user_id AS u, event_type AS et, ts AS t, event_id AS id,
+         CASE WHEN date_diff('microseconds', lag(ts) OVER w, ts)
+                   > 3600000000
+                   OR lag(ts) OVER w IS NULL
+              THEN 1 ELSE 0 END AS nw
+  FROM events
+  WHERE ts IS NOT NULL AND event_id IS NOT NULL
+    AND user_id IS NOT NULL AND event_type IS NOT NULL
+  WINDOW w AS (PARTITION BY user_id, event_type
+               ORDER BY ts, event_id)),
+s AS (
+  SELECT u, et, t, id,
+         SUM(nw) OVER (PARTITION BY u, et ORDER BY t, id
+                       ROWS UNBOUNDED PRECEDING) AS burst
+  FROM b),
+agg AS (
+  SELECT u, et, burst,
+         MIN(struct_pack(t := t, id := id)) AS kp,
+         CAST(COUNT(*) AS BIGINT) AS burst_size,
+         CAST(date_diff('microseconds', MIN(t), MAX(t)) AS BIGINT)
+           AS burst_span_us
+  FROM s GROUP BY u, et, burst)
+SELECT u AS user_id, et AS event_type,
+       CAST(burst AS BIGINT) AS burst_idx,
+       kp.id AS keeper_id, kp.t AS keeper_ts, burst_size,
+       burst_span_us
+FROM agg
+"""
+
+
+def _q182_trimmed_mean(spark, sf):
+    """5%-each-side trimmed mean of line revenue per returnflag:
+    value-level count prefix sums, exact integer trim counts and kept
+    multiplicities, ONE final division — no float quantile anywhere.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import trimmed_mean
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    return trimmed_mean(li, value_col="price_dollars",
+                        group_cols=["l_returnflag"], trim_milli=50)
+
+
+_O182 = """
+WITH b AS (
+  SELECT l_returnflag AS g, CAST(ROUND(l_extendedprice) AS BIGINT) AS v
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL),
+pv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY g, v),
+st AS (
+  SELECT g, v, c,
+         CAST(COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY v
+                                    ROWS BETWEEN UNBOUNDED PRECEDING
+                                    AND 1 PRECEDING), 0) AS BIGINT)
+           AS before,
+         CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM pv),
+kp AS (
+  SELECT g, v, c, before, n,
+         GREATEST(0, LEAST(before + c, n - (n * 50) // 1000)
+                     - GREATEST(before, (n * 50) // 1000)) AS kept
+  FROM st)
+SELECT g AS l_returnflag, CAST(MAX(n) AS BIGINT) AS n,
+       CAST(SUM(kept) AS BIGINT) AS n_kept,
+       CAST(SUM(v * kept) AS BIGINT) AS trimmed_sum,
+       CASE WHEN SUM(kept) > 0
+            THEN SUM(v * kept)::DOUBLE / SUM(kept)::DOUBLE END
+         AS trimmed_mean
+FROM kp GROUP BY g
+"""
+
+
+def _q183_ratio_metric(spark, sf):
+    """Delta-method ratio metric (revenue per unit quantity) per
+    returnflag: six exact BIGINT sufficient statistics from ONE
+    hash-agg; ratio and its standard error fixed double expressions
+    (nested whens so ANSI never divides by a zero denominator in an
+    unevaluated branch). Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import ratio_metric_stats
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long").alias("rev"),
+        F.round(F.col("l_quantity")).cast("long").alias("qty"))
+    return ratio_metric_stats(li, num_col="rev", den_col="qty",
+                              group_cols=["l_returnflag"])
+
+
+_O183 = """
+WITH b AS (
+  SELECT l_returnflag AS g,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS x,
+         CAST(ROUND(l_quantity) AS BIGINT) AS y
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
+    AND l_returnflag IS NOT NULL),
+s AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sum_num,
+         CAST(SUM(y) AS BIGINT) AS sum_den,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y * y) AS BIGINT) AS syy,
+         CAST(SUM(x * y) AS BIGINT) AS sxy
+  FROM b GROUP BY g),
+e AS (
+  SELECT g, n, sum_num, sum_den,
+         sum_num::DOUBLE / sum_den::DOUBLE AS r,
+         (n::DOUBLE * sxx::DOUBLE - sum_num::DOUBLE * sum_num::DOUBLE)
+           / (n::DOUBLE * (n::DOUBLE - 1.0)) AS vxx,
+         (n::DOUBLE * syy::DOUBLE - sum_den::DOUBLE * sum_den::DOUBLE)
+           / (n::DOUBLE * (n::DOUBLE - 1.0)) AS vyy,
+         (n::DOUBLE * sxy::DOUBLE - sum_num::DOUBLE * sum_den::DOUBLE)
+           / (n::DOUBLE * (n::DOUBLE - 1.0)) AS vxy,
+         sum_den::DOUBLE / n::DOUBLE AS ybar
+  FROM s)
+SELECT g AS l_returnflag, n, sum_num, sum_den,
+  CASE WHEN sum_den <> 0 THEN r END AS ratio,
+  CASE WHEN sum_den <> 0 AND n >= 2
+            AND (vxx + r * r * vyy - 2.0 * r * vxy)
+                / (n::DOUBLE * ybar * ybar) >= 0.0
+       THEN sqrt((vxx + r * r * vyy - 2.0 * r * vxy)
+                 / (n::DOUBLE * ybar * ybar)) END AS se
+FROM e
+"""
 
 
 def _q184_table_diff(spark, sf):
@@ -4413,6 +6147,230 @@ FROM j
 """
 
 
+def _q185_cohort_ltv(spark, sf):
+    """Cohort LTV curves over the events table (cents-integerized
+    value, 30-day horizon): exact BIGINT per-(cohort, age) sums and
+    cumulative window; the cohort day is emitted as its ISO string so
+    the cross-engine hash is date-representation independent.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import cohort_ltv
+    return (cohort_ltv(_t(spark, sf, "events"), value_scale=100,
+                       max_age_days=30)
+            .withColumn("cohort_day",
+                        F.col("cohort_day").cast("string")))
+
+
+_O185 = """
+WITH b AS (
+  SELECT user_id AS u, CAST(ts AS DATE) AS d,
+         CAST(ROUND(CAST(value AS DOUBLE) * 100.0) AS BIGINT) AS v
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
+c AS (SELECT u, MIN(d) AS cd FROM b GROUP BY u),
+sz AS (SELECT cd, CAST(COUNT(*) AS BIGINT) AS n_users_cohort
+       FROM c GROUP BY cd),
+j AS (SELECT b.u, b.d, b.v, c.cd, date_diff('day', c.cd, b.d) AS age
+      FROM b JOIN c ON b.u = c.u
+      WHERE date_diff('day', c.cd, b.d) <= 30),
+pa AS (SELECT cd, age, CAST(SUM(v) AS BIGINT) AS value_scaled
+       FROM j GROUP BY cd, age)
+SELECT CAST(pa.cd AS VARCHAR) AS cohort_day,
+       CAST(pa.age AS INTEGER) AS age_days,
+       sz.n_users_cohort, pa.value_scaled,
+       CAST(SUM(pa.value_scaled) OVER (PARTITION BY pa.cd
+                       ORDER BY pa.age
+                       ROWS UNBOUNDED PRECEDING) AS BIGINT)
+         AS cum_value_scaled
+FROM pa JOIN sz ON sz.cd = pa.cd
+"""
+
+
+def _q186_spearman(spark, sf):
+    """Spearman rank correlation of quantity vs line price per
+    returnflag: doubled midranks (exact BIGINT window expressions),
+    DECIMAL(38,0) sufficient statistics, one final double ratio.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import spearman_corr
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.col("l_quantity").cast("long").alias("qty"),
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    return spearman_corr(li, x_col="qty", y_col="price_dollars",
+                         group_cols=["l_returnflag"])
+
+
+_O186 = """
+WITH b AS (
+  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS x,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS y
+  FROM lineitem
+  WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
+    AND l_extendedprice IS NOT NULL),
+r AS (
+  SELECT g,
+         CAST(2 * RANK() OVER (PARTITION BY g ORDER BY x)
+              + COUNT(*) OVER (PARTITION BY g, x) - 1 AS HUGEINT)
+           AS rx,
+         CAST(2 * RANK() OVER (PARTITION BY g ORDER BY y)
+              + COUNT(*) OVER (PARTITION BY g, y) - 1 AS HUGEINT)
+           AS ry
+  FROM b),
+s AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         SUM(rx) AS sx, SUM(ry) AS sy,
+         SUM(rx * rx) AS sxx, SUM(ry * ry) AS syy,
+         SUM(rx * ry) AS sxy
+  FROM r GROUP BY g)
+SELECT g AS l_returnflag, n,
+       CASE WHEN n >= 2 AND n * sxx - sx * sx > 0
+                 AND n * syy - sy * sy > 0
+            THEN CAST(n * sxy - sx * sy AS DOUBLE)
+                 / SQRT(CAST(n * sxx - sx * sx AS DOUBLE)
+                        * CAST(n * syy - sy * sy AS DOUBLE))
+       END AS spearman
+FROM s
+"""
+
+
+def _q187_kruskal(spark, sf):
+    """Kruskal-Wallis H of the dollar-rounded order total across the
+    five order priorities per order status: doubled midranks,
+    per-level floor(S'^2/n) terms summed as BIGINT, exact tie-cube
+    correction, one final double expression.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import kruskal_wallis
+    od = _t(spark, sf, "orders").select(
+        "o_orderstatus", "o_orderpriority",
+        F.round(F.col("o_totalprice")).cast("long").alias("price"))
+    return kruskal_wallis(od, value_col="price",
+                          factor_col="o_orderpriority",
+                          group_cols=["o_orderstatus"])
+
+
+_O187 = """
+WITH b AS (
+  SELECT o_orderstatus AS g, o_orderpriority AS lvl,
+         CAST(ROUND(o_totalprice) AS BIGINT) AS v
+  FROM orders
+  WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
+    AND o_totalprice IS NOT NULL),
+r AS (
+  SELECT g, lvl,
+         CAST(2 * RANK() OVER (PARTITION BY g ORDER BY v)
+              + COUNT(*) OVER (PARTITION BY g, v) - 1 AS HUGEINT) AS rr
+  FROM b),
+lv AS (
+  SELECT g, lvl, CAST(COUNT(*) AS BIGINT) AS n, SUM(rr) AS s
+  FROM r GROUP BY g, lvl),
+g1 AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS k, SUM(n) AS n,
+         CAST(SUM(CAST(FLOOR(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
+                        / CAST(n AS DOUBLE)) AS BIGINT)) AS BIGINT)
+           AS t_sum
+  FROM lv GROUP BY g),
+tie AS (
+  SELECT g, v, CAST(COUNT(*) AS HUGEINT) AS t FROM b GROUP BY g, v),
+g2 AS (
+  SELECT g, CAST(SUM(t * t * t - t) AS BIGINT) AS tie_cube FROM tie GROUP BY g)
+SELECT g1.g AS o_orderstatus, k, CAST(g1.n AS BIGINT) AS n, t_sum,
+       tie_cube,
+       CASE WHEN k >= 2 AND g1.n >= 2
+                 AND 1.0 - CAST(tie_cube AS DOUBLE)
+                     / CAST(CAST(g1.n AS HUGEINT) * g1.n * g1.n - g1.n
+                            AS DOUBLE) > 0.0
+            THEN (3.0 * CAST(t_sum AS DOUBLE)
+                  / (CAST(g1.n AS DOUBLE) * (CAST(g1.n AS DOUBLE) + 1.0))
+                  - 3.0 * (CAST(g1.n AS DOUBLE) + 1.0))
+                 / (1.0 - CAST(tie_cube AS DOUBLE)
+                    / CAST(CAST(g1.n AS HUGEINT) * g1.n * g1.n - g1.n
+                           AS DOUBLE))
+       END AS h_stat
+FROM g1 JOIN g2 ON g1.g = g2.g
+"""
+
+
+def _q188_moments(spark, sf):
+    """Per-returnflag skewness and excess kurtosis of quantity: exact
+    DECIMAL(38,0) power sums, exact scaled central moments, fixed
+    IEEE shape expressions (sqrt is correctly rounded).
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import group_moments
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag", F.col("l_quantity").cast("long").alias("qty"))
+    return group_moments(li, value_col="qty",
+                         group_cols=["l_returnflag"])
+
+
+_O188 = """
+WITH b AS (
+  SELECT l_returnflag AS g, CAST(l_quantity AS HUGEINT) AS v
+  FROM lineitem
+  WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL),
+s AS (
+  SELECT g, CAST(COUNT(*) AS HUGEINT) AS n,
+         SUM(v) AS s1, SUM(v * v) AS s2,
+         SUM(v * v * v) AS s3, SUM(v * v * v * v) AS s4
+  FROM b GROUP BY g)
+SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
+       CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
+       CAST(n * s2 - s1 * s1 AS DOUBLE)
+         / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS m2,
+       CASE WHEN n >= 2 AND n * s2 - s1 * s1 > 0
+            THEN CAST(n * n * s3 - 3 * n * s2 * s1
+                      + 2 * s1 * s1 * s1 AS DOUBLE)
+                 / (CAST(n * s2 - s1 * s1 AS DOUBLE)
+                    * SQRT(CAST(n * s2 - s1 * s1 AS DOUBLE)))
+       END AS skewness,
+       CASE WHEN n >= 2 AND n * s2 - s1 * s1 > 0
+            THEN CAST(n * n * n * s4 - 4 * n * n * s3 * s1
+                      + 6 * n * s2 * s1 * s1
+                      - 3 * s1 * s1 * s1 * s1 AS DOUBLE)
+                 / (CAST(n * s2 - s1 * s1 AS DOUBLE)
+                    * CAST(n * s2 - s1 * s1 AS DOUBLE)) - 3.0
+       END AS kurtosis_excess
+FROM s
+"""
+
+
+def _q189_quantiles(spark, sf):
+    """Exact p50/p90/p99 of the dollar-rounded order total per order
+    priority: integer permille targets ceil(n*pm/1000) over the
+    value-level cumulative — no float probability ever multiplies a
+    count. Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import group_quantiles
+    od = _t(spark, sf, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice")).cast("long").alias("price"))
+    return group_quantiles(od, value_col="price",
+                           group_cols=["o_orderpriority"],
+                           permilles=[500, 900, 990])
+
+
+_O189 = """
+WITH b AS (
+  SELECT o_orderpriority AS g,
+         CAST(ROUND(o_totalprice) AS BIGINT) AS v
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_totalprice IS NOT NULL),
+pv AS (
+  SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY g, v),
+cum AS (
+  SELECT g, v, c,
+         CAST(SUM(c) OVER (PARTITION BY g ORDER BY v) AS BIGINT)
+           AS cm,
+         CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM pv),
+ex AS (
+  SELECT g, v, c, cm, n, UNNEST([500, 900, 990]) AS permille
+  FROM cum)
+SELECT g AS o_orderpriority, permille, n, v AS value
+FROM ex
+WHERE cm >= CEIL(n * permille / 1000.0)
+  AND cm - c < CEIL(n * permille / 1000.0)
+"""
+
+
 def _q190_clustering(spark, sf):
     """Per-node local clustering coefficient over the part co-order
     graph (q86's edge set): exact degree + degree-oriented triangle
@@ -4454,6 +6412,110 @@ SELECT deg.node, degree, COALESCE(nt, 0) AS n_triangles,
                     * (CAST(degree AS DOUBLE) - 1.0))
        END AS clustering_coeff
 FROM deg LEFT JOIN tri ON tri.node = deg.node
+"""
+
+
+def _q191_kaplan_meier(spark, sf):
+    """Kaplan-Meier survival of user lifetime (minutes between first
+    and last event), event = the user ever purchased, censored
+    otherwise, cohort = user_id mod 3: exact at-risk/event counts,
+    micro-nat integerized cumulative log-survival. The engine-local
+    exp(survival) column is projected out (exp differs by 1 ulp
+    across libms — measured); the oracle hashes exact integers only.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import kaplan_meier
+    ev = _t(spark, sf, "events").where(
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+        & F.col("event_type").isNotNull())
+    pu = (ev.groupBy("user_id")
+          .agg((F.max(F.unix_micros(F.col("ts").cast("timestamp")))
+                - F.min(F.unix_micros(F.col("ts").cast("timestamp"))))
+               .alias("diff_us"),
+               F.max((F.col("event_type") == "purchase")
+                     .cast("long")).alias("ev")))
+    surv = pu.select(
+        F.pmod(F.col("user_id"), F.lit(3)).alias("cohort"),
+        F.expr("diff_us div 60000000").alias("dur_min"),
+        "ev")
+    return kaplan_meier(surv, duration_col="dur_min", event_col="ev",
+                        group_cols=["cohort"])         .select("cohort", "t", "at_risk", "events", "censored",
+                "log_surv_micro")
+
+
+_O191 = """
+WITH pu AS (
+  SELECT user_id % 3 AS cohort,
+         (MAX(epoch_us(ts)) - MIN(epoch_us(ts))) // 60000000 AS t0,
+         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+           AS ev
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_type IS NOT NULL
+  GROUP BY user_id),
+pt AS (
+  SELECT cohort, CAST(t0 AS BIGINT) AS t,
+         CAST(SUM(ev) AS BIGINT) AS d,
+         CAST(SUM(1 - ev) AS BIGINT) AS c
+  FROM pu GROUP BY cohort, t0),
+w AS (
+  SELECT cohort, t, d, c,
+         CAST(SUM(d + c) OVER (PARTITION BY cohort) AS BIGINT)
+           AS total,
+         CAST(COALESCE(SUM(d + c) OVER (
+              PARTITION BY cohort ORDER BY t
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+              AS BIGINT) AS prior
+  FROM pt),
+evt AS (
+  SELECT cohort, t, d, c, total - prior AS at_risk
+  FROM w WHERE d > 0),
+lg AS (
+  SELECT cohort, t, at_risk, d, c,
+         CAST(SUM(CASE WHEN at_risk - d > 0
+              THEN CAST(ROUND(LN(CAST(at_risk - d AS DOUBLE)) * 1e6)
+                        AS BIGINT)
+                   - CAST(ROUND(LN(CAST(at_risk AS DOUBLE)) * 1e6)
+                          AS BIGINT)
+              ELSE 0 END) OVER (PARTITION BY cohort ORDER BY t)
+              AS BIGINT) AS cum,
+         MAX(CASE WHEN at_risk = d THEN 1 ELSE 0 END)
+           OVER (PARTITION BY cohort ORDER BY t) AS zf
+  FROM evt)
+SELECT cohort, t, at_risk, d AS events, c AS censored,
+       CASE WHEN zf = 0 THEN cum END AS log_surv_micro
+FROM lg
+"""
+
+
+def _q192_theil(spark, sf):
+    """Theil T inequality of document length per language: micro-nat
+    integerized x*ln(x) summed as exact BIGINT, ONE fixed double
+    expression. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import theil_index
+    docs = _t(spark, sf, "documents").select(
+        "lang", F.col("n_chars").cast("long").alias("n_chars"))
+    return theil_index(docs, value_col="n_chars", group_cols=["lang"])
+
+
+_O192 = """
+WITH b AS (
+  SELECT lang AS g, CAST(n_chars AS BIGINT) AS v FROM documents
+  WHERE lang IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0),
+pv AS (
+  SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY g, v),
+s AS (
+  SELECT g, CAST(SUM(c) AS BIGINT) AS n,
+         CAST(SUM(c * v) AS BIGINT) AS sum_v,
+         CAST(SUM(c * v * CAST(ROUND(LN(CAST(v AS DOUBLE)) * 1e6)
+                               AS BIGINT)) AS BIGINT) AS xlnx_micro
+  FROM pv GROUP BY g)
+SELECT g AS lang, n, sum_v, xlnx_micro,
+       (CAST(xlnx_micro AS DOUBLE) / CAST(sum_v AS DOUBLE)
+        - CAST(CAST(ROUND(LN(CAST(sum_v AS DOUBLE)) * 1e6) AS BIGINT)
+               - CAST(ROUND(LN(CAST(n AS DOUBLE)) * 1e6) AS BIGINT)
+          AS DOUBLE)) / 1e6 AS theil
+FROM s
 """
 
 
@@ -4505,6 +6567,72 @@ FROM s
 """
 
 
+def _q194_odds_ratio(spark, sf):
+    """2x2 odds ratio per user-cohort: exposure = the user ever
+    clicked, outcome = the user ever purchased; exact BIGINT cells,
+    micro-nat integerized log-OR, Wald CI left in log scale (exp is
+    engine-local). Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import odds_ratio
+    ev = _t(spark, sf, "events").where(
+        F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
+    pu = (ev.groupBy("user_id")
+          .agg(F.max((F.col("event_type") == "click").cast("long"))
+               .alias("e"),
+               F.max((F.col("event_type") == "purchase").cast("long"))
+               .alias("o")))
+    strata = pu.select(F.pmod(F.col("user_id"), F.lit(4))
+                       .alias("cohort"), "e", "o")
+    return odds_ratio(strata, exposure_col="e", outcome_col="o",
+                      group_cols=["cohort"])
+
+
+_O194 = """
+WITH pu AS (
+  SELECT user_id % 4 AS cohort,
+         MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS e,
+         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+           AS o
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+  GROUP BY user_id),
+s AS (
+  SELECT cohort,
+    CAST(SUM(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END) AS BIGINT)
+      AS n11,
+    CAST(SUM(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END) AS BIGINT)
+      AS n10,
+    CAST(SUM(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END) AS BIGINT)
+      AS n01,
+    CAST(SUM(CASE WHEN e = 0 AND o = 0 THEN 1 ELSE 0 END) AS BIGINT)
+      AS n00
+  FROM pu GROUP BY cohort),
+x AS (
+  SELECT cohort, n11, n10, n01, n00,
+         n11 > 0 AND n10 > 0 AND n01 > 0 AND n00 > 0 AS ok,
+         CASE WHEN n11 > 0 AND n10 > 0 AND n01 > 0 AND n00 > 0 THEN
+           CAST(ROUND(LN(CAST(n11 AS DOUBLE)) * 1e6) AS BIGINT)
+           + CAST(ROUND(LN(CAST(n00 AS DOUBLE)) * 1e6) AS BIGINT)
+           - CAST(ROUND(LN(CAST(n10 AS DOUBLE)) * 1e6) AS BIGINT)
+           - CAST(ROUND(LN(CAST(n01 AS DOUBLE)) * 1e6) AS BIGINT)
+         END AS lom,
+         SQRT(1.0 / CAST(n11 AS DOUBLE) + 1.0 / CAST(n10 AS DOUBLE)
+              + 1.0 / CAST(n01 AS DOUBLE)
+              + 1.0 / CAST(n00 AS DOUBLE)) AS se
+  FROM s)
+SELECT cohort, n11, n10, n01, n00,
+       CASE WHEN ok THEN CAST(n11 * n00 AS DOUBLE)
+                         / CAST(n10 * n01 AS DOUBLE) END AS odds_ratio,
+       CASE WHEN ok THEN lom END AS log_or_micro,
+       CASE WHEN ok THEN se END AS se_log_or,
+       CASE WHEN ok THEN CAST(lom AS DOUBLE) - 1.959964 * se * 1e6 END
+         AS ci_lo_log_micro,
+       CASE WHEN ok THEN CAST(lom AS DOUBLE) + 1.959964 * se * 1e6 END
+         AS ci_hi_log_micro
+FROM x
+"""
+
+
 def _q195_getis_ord(spark, sf):
     """Getis-Ord Gi* hot-spot z-scores over the q10 customer cell
     raster (res 9, radius-1 Chebyshev ring): cell_smooth's scatter
@@ -4547,6 +6675,210 @@ def _o195() -> str:
         "/ SQRT(CAST(gn * gu - gt * gt AS DOUBLE) "
         "* CAST(gn * w - w * w AS DOUBLE) "
         "/ CAST(gn - 1 AS DOUBLE)) END AS gi_star FROM enc")
+
+
+def _q196_cohens_d(spark, sf):
+    """Cohen's d / Hedges' g of the dollar-rounded order total
+    between open and fulfilled orders per priority: exact BIGINT
+    sufficient statistics, fixed IEEE effect-size expressions.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import cohens_d
+    od = _t(spark, sf, "orders").select(
+        "o_orderpriority", "o_orderstatus",
+        F.round(F.col("o_totalprice")).cast("long").alias("price"))
+    return cohens_d(od, value_col="price", group_col="o_orderstatus",
+                    group_a="O", group_b="F",
+                    group_cols=["o_orderpriority"])
+
+
+_O196 = """
+WITH b AS (
+  SELECT o_orderpriority AS g, o_orderstatus AS lvl,
+         CAST(ROUND(o_totalprice) AS BIGINT) AS v
+  FROM orders
+  WHERE o_totalprice IS NOT NULL AND o_orderpriority IS NOT NULL
+    AND o_orderstatus IN ('O', 'F')),
+s AS (
+  SELECT g,
+    CAST(SUM(CASE WHEN lvl = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS na,
+    CAST(SUM(CASE WHEN lvl = 'O' THEN v ELSE 0 END) AS BIGINT) AS sa,
+    CAST(SUM(CASE WHEN lvl = 'O' THEN v * v ELSE 0 END) AS BIGINT)
+      AS ssa,
+    CAST(SUM(CASE WHEN lvl = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS nb,
+    CAST(SUM(CASE WHEN lvl = 'F' THEN v ELSE 0 END) AS BIGINT) AS sb,
+    CAST(SUM(CASE WHEN lvl = 'F' THEN v * v ELSE 0 END) AS BIGINT)
+      AS ssb
+  FROM b GROUP BY g),
+x AS (
+  SELECT g, na, nb,
+         CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) AS mean_a,
+         CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) AS mean_b,
+         ((CAST(na AS DOUBLE) * CAST(ssa AS DOUBLE)
+           - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))
+          / CAST(na AS DOUBLE)
+          + (CAST(nb AS DOUBLE) * CAST(ssb AS DOUBLE)
+             - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))
+            / CAST(nb AS DOUBLE))
+         / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2.0) AS sp2
+  FROM s)
+SELECT g AS o_orderpriority, na AS n_a, nb AS n_b, mean_a, mean_b,
+       CASE WHEN na >= 2 AND nb >= 2 AND sp2 > 0.0
+            THEN (mean_a - mean_b) / SQRT(sp2) END AS cohens_d,
+       CASE WHEN na >= 2 AND nb >= 2 AND sp2 > 0.0
+            THEN (mean_a - mean_b) / SQRT(sp2)
+                 * (1.0 - 3.0 / (4.0 * (CAST(na AS DOUBLE)
+                                        + CAST(nb AS DOUBLE)) - 9.0))
+       END AS hedges_g
+FROM x
+"""
+
+
+def _q197_twa(spark, sf):
+    """Time-weighted average event value (cents, held until the next
+    sample) per event type over epoch-minute timestamps: one LEAD on
+    the group exchange, exact BIGINT v*dt sums, one final double
+    division — the correct mean where bursty sampling skews a row
+    average. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.eventops import time_weighted_average
+    ev = _t(spark, sf, "events").where(
+        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
+        & F.col("value").isNotNull()).select(
+        "event_type",
+        F.expr("unix_micros(cast(ts as timestamp)) div 60000000")
+        .alias("tm"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"))
+    return time_weighted_average(ev, ts_col="tm", value_col="cents",
+                                 group_cols=["event_type"])
+
+
+_O197 = """
+WITH b AS (
+  SELECT event_type AS g, epoch_us(ts) // 60000000 AS tm,
+         CAST(ROUND(value * 100) AS BIGINT) AS v
+  FROM events
+  WHERE event_type IS NOT NULL AND ts IS NOT NULL
+    AND value IS NOT NULL),
+l AS (
+  SELECT g, tm, v,
+         LEAD(tm) OVER (PARTITION BY g ORDER BY tm, v) AS nxt
+  FROM b),
+s AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(MIN(tm) AS BIGINT) AS tmin,
+         CAST(MAX(tm) AS BIGINT) AS tmax,
+         CAST(SUM(CASE WHEN nxt IS NOT NULL THEN v * (nxt - tm)
+                       ELSE 0 END) AS BIGINT) AS vdt
+  FROM l GROUP BY g)
+SELECT g AS event_type, n, tmax - tmin AS t_span, vdt AS vdt_sum,
+       CASE WHEN tmax > tmin
+            THEN CAST(vdt AS DOUBLE) / CAST(tmax - tmin AS DOUBLE)
+       END AS twa
+FROM s
+"""
+
+
+def _q198_mantel_haenszel(spark, sf):
+    """Mantel-Haenszel pooled click->purchase odds ratio across the
+    q194 user cohorts (confounder-adjusted pooling instead of
+    collapsing — Simpson-safe): per-stratum milli-floored terms
+    summed as exact BIGINT, one final division. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import mantel_haenszel_or
+    ev = _t(spark, sf, "events").where(
+        F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
+    pu = (ev.groupBy("user_id")
+          .agg(F.max((F.col("event_type") == "click").cast("long"))
+               .alias("e"),
+               F.max((F.col("event_type") == "purchase").cast("long"))
+               .alias("o")))
+    strata = pu.select(F.pmod(F.col("user_id"), F.lit(4))
+                       .alias("cohort"), "e", "o")
+    return mantel_haenszel_or(strata, exposure_col="e",
+                              outcome_col="o", strata_col="cohort")
+
+
+_O198 = """
+WITH pu AS (
+  SELECT user_id % 4 AS cohort,
+         MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS e,
+         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+           AS o
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+  GROUP BY user_id),
+per_s AS (
+  SELECT cohort,
+    CAST(SUM(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END) AS BIGINT)
+      AS a,
+    CAST(SUM(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END) AS BIGINT)
+      AS b,
+    CAST(SUM(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END) AS BIGINT)
+      AS c,
+    CAST(SUM(CASE WHEN e = 0 AND o = 0 THEN 1 ELSE 0 END) AS BIGINT)
+      AS d
+  FROM pu GROUP BY cohort),
+t AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS k_strata,
+    CAST(SUM(CAST(FLOOR(CAST(a AS DOUBLE) * CAST(d AS DOUBLE) * 1000.0
+                        / CAST(a + b + c + d AS DOUBLE)) AS BIGINT))
+         AS BIGINT) AS num_milli,
+    CAST(SUM(CAST(FLOOR(CAST(b AS DOUBLE) * CAST(c AS DOUBLE) * 1000.0
+                        / CAST(a + b + c + d AS DOUBLE)) AS BIGINT))
+         AS BIGINT) AS den_milli
+  FROM per_s)
+SELECT k_strata, num_milli, den_milli,
+       CASE WHEN den_milli > 0
+            THEN CAST(num_milli AS DOUBLE) / CAST(den_milli AS DOUBLE)
+       END AS or_mh
+FROM t
+"""
+
+
+def _q200_hourly_profile(spark, sf):
+    """Hour-of-week seasonality of event value (cents) per event
+    type: pure integer epoch arithmetic for (dow, hour) — no engine
+    date-function conventions — exact BIGINT bucket sums, seasonal
+    index as one division of exact integer products. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import hourly_profile
+    ev = _t(spark, sf, "events").where(
+        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
+        & F.col("value").isNotNull()).select(
+        "event_type",
+        F.expr("unix_micros(cast(ts as timestamp))").alias("tus"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"))
+    return hourly_profile(ev, ts_micros_col="tus", value_col="cents",
+                          group_cols=["event_type"])
+
+
+_O200 = """
+WITH b AS (
+  SELECT event_type AS g, epoch_us(ts) AS tus,
+         CAST(ROUND(value * 100) AS BIGINT) AS v
+  FROM events
+  WHERE event_type IS NOT NULL AND ts IS NOT NULL
+    AND value IS NOT NULL),
+bb AS (
+  SELECT g, CAST(((tus // 86400000000) + 3) % 7 AS BIGINT) AS dow,
+         CAST((tus // 3600000000) % 24 AS BIGINT) AS hour, v
+  FROM b WHERE tus >= 0),
+pb AS (
+  SELECT g, dow, hour, CAST(COUNT(*) AS BIGINT) AS n_events,
+         CAST(SUM(v) AS BIGINT) AS value_sum
+  FROM bb GROUP BY g, dow, hour),
+w AS (
+  SELECT g, dow, hour, n_events, value_sum,
+         CAST(SUM(n_events) OVER (PARTITION BY g) AS BIGINT) AS tn,
+         CAST(SUM(value_sum) OVER (PARTITION BY g) AS BIGINT) AS tv
+  FROM pb)
+SELECT g AS event_type, dow, hour, n_events, value_sum,
+       CASE WHEN n_events > 0 AND tv != 0
+            THEN CAST(value_sum * tn AS DOUBLE)
+                 / CAST(n_events * tv AS DOUBLE)
+       END AS seasonal_index
+FROM w
+"""
 
 
 def _q201_assortativity(spark, sf):
@@ -4637,6 +6969,206 @@ FROM s
 """
 
 
+def _q203_js_divergence(spark, sf):
+    """Jensen–Shannon divergence (micro-nat integerized log-ratio
+    terms, exact BIGINT weighted sums) between the return-flag mix of
+    open vs finished lineitems. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import js_divergence
+    return js_divergence(_t(spark, sf, "lineitem"),
+                         cat_col="l_returnflag",
+                         group_col="l_linestatus",
+                         group_a="O", group_b="F")
+
+
+_O203 = """
+WITH b AS (
+  SELECT l_returnflag AS cat,
+         CAST(SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c1,
+         CAST(SUM(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END)
+              AS BIGINT) AS c2
+  FROM lineitem
+  WHERE l_returnflag IS NOT NULL AND l_linestatus IN ('O', 'F')
+  GROUP BY l_returnflag),
+t AS (
+  SELECT c1, c2,
+         CAST(SUM(c1) OVER () AS BIGINT) AS n1,
+         CAST(SUM(c2) OVER () AS BIGINT) AS n2
+  FROM b),
+s AS (
+  SELECT MAX(n1) AS n_a, MAX(n2) AS n_b,
+         CAST(COUNT(*) AS BIGINT) AS k_cats,
+         CAST(SUM(CASE WHEN c1 > 0 THEN c1 * (
+             CAST(ROUND(LN(CAST(2 * c1 * n2 AS DOUBLE)) * 1e6)
+                  AS BIGINT)
+           - CAST(ROUND(LN(CAST(c1 * n2 + c2 * n1 AS DOUBLE)) * 1e6)
+                  AS BIGINT)) ELSE 0 END) AS BIGINT)
+           AS jsd_num_a_micro,
+         CAST(SUM(CASE WHEN c2 > 0 THEN c2 * (
+             CAST(ROUND(LN(CAST(2 * c2 * n1 AS DOUBLE)) * 1e6)
+                  AS BIGINT)
+           - CAST(ROUND(LN(CAST(c1 * n2 + c2 * n1 AS DOUBLE)) * 1e6)
+                  AS BIGINT)) ELSE 0 END) AS BIGINT)
+           AS jsd_num_b_micro
+  FROM t)
+SELECT n_a, n_b, k_cats, jsd_num_a_micro, jsd_num_b_micro,
+       CASE WHEN n_a > 0 AND n_b > 0 THEN
+         (CAST(jsd_num_a_micro AS DOUBLE) / CAST(n_a AS DOUBLE)
+          + CAST(jsd_num_b_micro AS DOUBLE) / CAST(n_b AS DOUBLE))
+         / 2e6
+       END AS jsd
+FROM s
+"""
+
+
+def _q204_map_at_k(spark, sf):
+    """MAP@3 per order, relevance = high-quantity line: totalized
+    (score desc, id asc) ranking, per-hit milli-floored precision
+    summed as exact BIGINT. Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import map_at_k
+    li = _t(spark, sf, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_extendedprice",
+        (F.col("l_quantity") > 25).cast("int").alias("rel"))
+    return map_at_k(li, group_cols=["l_orderkey"],
+                    id_col="l_linenumber",
+                    score_col="l_extendedprice", rel_col="rel", k=3)
+
+
+_O204 = """
+WITH b AS (
+  SELECT l_orderkey,
+         l_linenumber AS id,
+         l_extendedprice AS s,
+         CAST(l_quantity > 25 AS BIGINT) AS r
+  FROM lineitem
+  WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
+    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL),
+ranked AS (
+  SELECT l_orderkey, r,
+         ROW_NUMBER() OVER (PARTITION BY l_orderkey
+                            ORDER BY s DESC, id ASC) AS rnk,
+         SUM(r) OVER (PARTITION BY l_orderkey
+                      ORDER BY s DESC, id ASC
+                      ROWS BETWEEN UNBOUNDED PRECEDING
+                      AND CURRENT ROW) AS cum,
+         SUM(r) OVER (PARTITION BY l_orderkey) AS nrel
+  FROM b),
+s AS (
+  SELECT l_orderkey,
+         CAST(MAX(nrel) AS BIGINT) AS n_rel,
+         CAST(SUM(CASE WHEN r = 1 AND rnk <= 3 THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_hits_at_k,
+         CAST(SUM(CASE WHEN r = 1 AND rnk <= 3
+                  THEN CAST(FLOOR(CAST(cum AS DOUBLE) * 1000.0
+                                  / CAST(rnk AS DOUBLE)) AS BIGINT)
+                  ELSE 0 END) AS BIGINT) AS ap_milli_sum
+  FROM ranked GROUP BY l_orderkey)
+SELECT l_orderkey, n_rel, n_hits_at_k, ap_milli_sum,
+       CASE WHEN n_rel > 0 THEN
+         CAST(ap_milli_sum AS DOUBLE)
+         / (CAST(LEAST(n_rel, 3) AS DOUBLE) * 1000.0)
+       END AS map_at_k
+FROM s
+"""
+
+
+def _q205_runs_test(spark, sf):
+    """Wald–Wolfowitz runs test per user over the high-value flag of
+    their (ts, event_id)-totalized event stream: one LAG, exact
+    BIGINT run counts, one fixed IEEE z. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import runs_test
+    ev = _t(spark, sf, "events").select(
+        "user_id", "ts", "event_id",
+        (F.col("value") > 50).cast("int").alias("hi"))
+    return runs_test(ev, flag_col="hi", order_col="ts",
+                     id_col="event_id", group_cols=["user_id"])
+
+
+_O205 = """
+WITH b AS (
+  SELECT user_id, ts, event_id,
+         CAST(value > 50 AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+lagged AS (
+  SELECT user_id, x,
+         LAG(x) OVER (PARTITION BY user_id
+                      ORDER BY ts ASC, event_id ASC) AS px
+  FROM b),
+s AS (
+  SELECT user_id,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS n1,
+         CAST(SUM(1 - x) AS BIGINT) AS n0,
+         CAST(SUM(CASE WHEN px IS NULL OR px <> x THEN 1 ELSE 0 END)
+              AS BIGINT) AS runs
+  FROM lagged GROUP BY user_id)
+SELECT user_id, n, n1, n0, runs,
+       CASE WHEN n1 > 0 AND n0 > 0 AND n >= 2
+             AND 2.0 * n1 * n0 * (2.0 * n1 * n0 - n)
+                 / (CAST(n AS DOUBLE) * n * (n - 1.0)) > 0
+            THEN (CAST(runs AS DOUBLE) - 1.0
+                  - 2.0 * n1 * n0 / CAST(n AS DOUBLE))
+                 / SQRT(2.0 * n1 * n0 * (2.0 * n1 * n0 - n)
+                        / (CAST(n AS DOUBLE) * n * (n - 1.0)))
+       END AS z
+FROM s
+"""
+
+
+def _q206_poisson_rate(spark, sf):
+    """Two-sample Poisson rate z-test (returned vs clean lineitems;
+    quantity events per line-number exposure): ONE conditional
+    hash-aggregate of exact BIGINT sums, one fixed IEEE z. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import poisson_rate_ztest
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag", "l_linenumber",
+        F.col("l_quantity").cast("long").alias("qty"))
+    return poisson_rate_ztest(li, count_col="qty",
+                              exposure_col="l_linenumber",
+                              group_col="l_returnflag",
+                              group_a="R", group_b="N")
+
+
+_O206 = """
+WITH b AS (
+  SELECT l_returnflag AS g,
+         CAST(l_quantity AS BIGINT) AS k,
+         CAST(l_linenumber AS BIGINT) AS t
+  FROM lineitem
+  WHERE l_quantity IS NOT NULL AND l_linenumber IS NOT NULL
+    AND CAST(l_quantity AS BIGINT) >= 0 AND l_linenumber > 0
+    AND l_returnflag IN ('R', 'N')),
+s AS (
+  SELECT CAST(SUM(CASE WHEN g = 'R' THEN k ELSE 0 END) AS BIGINT)
+           AS k_a,
+         CAST(SUM(CASE WHEN g = 'R' THEN t ELSE 0 END) AS BIGINT)
+           AS t_a,
+         CAST(SUM(CASE WHEN g <> 'R' THEN k ELSE 0 END) AS BIGINT)
+           AS k_b,
+         CAST(SUM(CASE WHEN g <> 'R' THEN t ELSE 0 END) AS BIGINT)
+           AS t_b
+  FROM b)
+SELECT k_a, t_a, k_b, t_b,
+       CASE WHEN t_a > 0 THEN CAST(k_a AS DOUBLE) / t_a END AS rate_a,
+       CASE WHEN t_b > 0 THEN CAST(k_b AS DOUBLE) / t_b END AS rate_b,
+       CASE WHEN t_a > 0 AND t_b > 0 AND (k_a > 0 OR k_b > 0)
+            THEN (CAST(k_a AS DOUBLE) / t_a
+                  - CAST(k_b AS DOUBLE) / t_b)
+                 / SQRT(CAST(k_a AS DOUBLE)
+                        / (CAST(t_a AS DOUBLE) * t_a)
+                        + CAST(k_b AS DOUBLE)
+                          / (CAST(t_b AS DOUBLE) * t_b))
+       END AS z
+FROM s
+"""
+
+
 def _q207_char_entropy(spark, sf):
     """Per-document character-level Shannon entropy (micro-nat
     integerized logs, exact BIGINT numerators) — the gibberish /
@@ -4672,6 +7204,201 @@ SELECT doc_id, n_chars_counted, k_chars,
               - sclc AS DOUBLE)
          / (CAST(n_chars_counted AS DOUBLE) * 1e6) AS char_entropy
 FROM s
+"""
+
+
+def _q208_basket_lift(spark, sf):
+    """Market-basket pair lift over order baskets (apriori pruning
+    cascade: size-capped baskets → frequent items → basket equi-join,
+    never all-pairs). Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import basket_lift
+    return basket_lift(_t(spark, sf, "lineitem"),
+                       basket_col="l_orderkey", item_col="l_partkey",
+                       min_count=2, max_basket=64)
+
+
+_O208 = """
+WITH b AS (
+  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
+  FROM lineitem
+  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
+sz AS (SELECT bk FROM b GROUP BY bk HAVING COUNT(*) <= 64),
+kept AS (SELECT b.bk, b.it FROM b JOIN sz USING (bk)),
+ic AS (SELECT it, CAST(COUNT(*) AS BIGINT) AS ni
+       FROM kept GROUP BY it),
+f AS (SELECT kept.bk, kept.it, ic.ni
+      FROM kept JOIN ic USING (it) WHERE ni >= 2),
+p AS (
+  SELECT a.it AS item_a, c.it AS item_b,
+         CAST(MAX(a.ni) AS BIGINT) AS n_a,
+         CAST(MAX(c.ni) AS BIGINT) AS n_b,
+         CAST(COUNT(*) AS BIGINT) AS n_ab
+  FROM f a JOIN f c ON a.bk = c.bk AND a.it < c.it
+  GROUP BY a.it, c.it HAVING COUNT(*) >= 2),
+nb AS (SELECT CAST(COUNT(DISTINCT bk) AS BIGINT) AS n_baskets
+       FROM kept)
+SELECT item_a, item_b, n_a, n_b, n_ab, n_baskets,
+       CAST(n_ab AS DOUBLE) / CAST(n_baskets AS DOUBLE) AS support,
+       CAST(n_ab AS DOUBLE) / CAST(n_a AS DOUBLE) AS confidence,
+       CAST(n_ab * n_baskets AS DOUBLE)
+         / CAST(n_a * n_b AS DOUBLE) AS lift
+FROM p CROSS JOIN nb
+"""
+
+
+def _q210_rolling_zscore(spark, sf):
+    """Trailing-20-event z-score anomalies per user over
+    cent-integerized event values; exact-integer anomaly verdict.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import rolling_zscore
+    ev = _t(spark, sf, "events").select(
+        "user_id", "event_id",
+        F.col("ts").cast("timestamp").cast("long").alias("ts_s"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"))
+    return rolling_zscore(ev, value_col="cents", order_col="ts_s",
+                          id_col="event_id", group_cols=["user_id"],
+                          window=20, min_periods=5,
+                          threshold_milli=3000)
+
+
+_O210 = """
+WITH b AS (
+  SELECT user_id, event_id,
+         epoch_us(ts) // 1000000 AS o,
+         CAST(ROUND(value * 100) AS BIGINT) AS v
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+st AS (
+  SELECT user_id, event_id AS id, o, v,
+         CAST(COUNT(*) OVER w AS BIGINT) AS n,
+         CAST(SUM(v) OVER w AS BIGINT) AS s,
+         CAST(SUM(v * v) OVER w AS BIGINT) AS q
+  FROM b
+  WINDOW w AS (PARTITION BY user_id ORDER BY o ASC, event_id ASC
+               ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
+SELECT user_id, id, o AS "order", v AS value, n AS n_window,
+       CASE WHEN n >= 5 AND n * q - s * s > 0
+            THEN CAST(n * v - s AS DOUBLE)
+                 / SQRT(CAST(n * q - s * s AS DOUBLE))
+       END AS z,
+       CASE WHEN n >= 5 AND n * q - s * s > 0
+            THEN (n * v - s) * (n * v - s) * 1000000
+                 > 3000 * 3000 * (n * q - s * s)
+            ELSE FALSE END AS is_anomaly
+FROM st
+"""
+
+
+def _q212_topk_overlap(spark, sf):
+    """Overlap@5 per customer between the value ranking and the
+    recency ranking of their orders (two totalized row_number
+    windows on one exchange, zero joins). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import topk_overlap
+    od = _t(spark, sf, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice",
+        F.col("o_orderdate").cast("timestamp").cast("long")
+        .alias("recency"))
+    return topk_overlap(od, group_cols=["o_custkey"],
+                        id_col="o_orderkey",
+                        score_a_col="o_totalprice",
+                        score_b_col="recency", k=5)
+
+
+_O212 = """
+WITH b AS (
+  SELECT o_custkey, o_orderkey AS id, o_totalprice AS sa,
+         epoch_us(o_orderdate) // 1000000 AS sb
+  FROM orders
+  WHERE o_custkey IS NOT NULL AND o_orderkey IS NOT NULL
+    AND o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL),
+ranked AS (
+  SELECT o_custkey,
+         ROW_NUMBER() OVER (PARTITION BY o_custkey
+                            ORDER BY sa DESC, id ASC) AS ra,
+         ROW_NUMBER() OVER (PARTITION BY o_custkey
+                            ORDER BY sb DESC, id ASC) AS rb
+  FROM b),
+s AS (
+  SELECT o_custkey,
+         CAST(COUNT(*) AS BIGINT) AS n_items,
+         CAST(SUM(CASE WHEN ra <= 5 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_top_a,
+         CAST(SUM(CASE WHEN ra <= 5 AND rb <= 5 THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_overlap
+  FROM ranked GROUP BY o_custkey)
+SELECT o_custkey, n_items, n_top_a, n_overlap,
+       CAST(n_overlap AS DOUBLE)
+         / CAST(LEAST(5, n_items) AS DOUBLE) AS overlap_at_k
+FROM s
+"""
+
+
+def _q213_calibration_bins(spark, sf):
+    """Reliability-curve deciles of event value vs purchase label
+    (totalized NTILE, milli-integerized score sums). Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import calibration_bins
+    ev = _t(spark, sf, "events").select(
+        "event_id", "value",
+        (F.col("event_type") == "purchase").cast("int").alias("y"))
+    return calibration_bins(ev, score_col="value", label_col="y",
+                            id_col="event_id", bins=10)
+
+
+_O213 = """
+WITH b AS (
+  SELECT CAST(event_type = 'purchase' AS BIGINT) AS y,
+         value AS s, event_id AS i,
+         CAST(ROUND(value * 1000.0) AS BIGINT) AS sm
+  FROM events
+  WHERE event_type IS NOT NULL AND value IS NOT NULL
+    AND event_id IS NOT NULL),
+binned AS (
+  SELECT y, sm, NTILE(10) OVER (ORDER BY s ASC, i ASC) AS bin
+  FROM b),
+s AS (
+  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS n_pos,
+         CAST(SUM(sm) AS BIGINT) AS score_milli_sum
+  FROM binned GROUP BY bin)
+SELECT bin, n, n_pos, score_milli_sum,
+       CAST(score_milli_sum AS DOUBLE)
+         / (CAST(n AS DOUBLE) * 1000.0) AS mean_score,
+       CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) AS frac_pos
+FROM s
+"""
+
+
+def _q214_attribution(spark, sf):
+    """Last-touch purchase attribution per channel (one totalized
+    window last() on the user exchange). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import last_touch_attribution
+    return last_touch_attribution(_t(spark, sf, "events"),
+                                  conversion_type="purchase")
+
+
+_O214 = """
+WITH b AS (
+  SELECT user_id, ts, event_id, event_type
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND event_type IS NOT NULL),
+touched AS (
+  SELECT event_type,
+         last_value(CASE WHEN event_type <> 'purchase'
+                         THEN event_type END IGNORE NULLS)
+           OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+           AS ch
+  FROM b)
+SELECT COALESCE(ch, '(none)') AS channel,
+       CAST(COUNT(*) AS BIGINT) AS n_conversions
+FROM touched WHERE event_type = 'purchase'
+GROUP BY COALESCE(ch, '(none)')
 """
 
 
@@ -4792,6 +7519,79 @@ FROM s
 """
 
 
+def _q219_trigram_paths(spark, sf):
+    """Frequent 3-step event paths (two LEADs on one user exchange,
+    one hash-agg). Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.eventops import event_trigram_paths
+    return event_trigram_paths(_t(spark, sf, "events"), min_count=2)
+
+
+_O219 = """
+WITH b AS (
+  SELECT user_id, ts, event_id, event_type AS step1
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND event_type IS NOT NULL),
+g AS (
+  SELECT step1,
+         LEAD(step1, 1) OVER w AS step2,
+         LEAD(step1, 2) OVER w AS step3
+  FROM b
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC))
+SELECT step1, step2, step3, CAST(COUNT(*) AS BIGINT) AS n_paths
+FROM g WHERE step3 IS NOT NULL
+GROUP BY step1, step2, step3
+HAVING COUNT(*) >= 2
+"""
+
+
+def _q220_funnel_latency(spark, sf):
+    """Stage-to-stage funnel latency (greedy earliest-completion
+    frontier cascade, exact BIGINT second gaps). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import funnel_latency
+    return funnel_latency(_t(spark, sf, "events"),
+                          ["signup", "click", "purchase"])
+
+
+_O220 = """
+WITH ev AS (
+  SELECT user_id, ts, event_type FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_type IS NOT NULL),
+s0 AS (SELECT user_id AS u, MIN(ts) AS r FROM ev
+       WHERE event_type = 'signup' GROUP BY user_id),
+s1 AS (SELECT e.user_id AS u, MIN(e.ts) AS r
+       FROM ev e JOIN s0 ON e.user_id = s0.u
+       WHERE e.event_type = 'click' AND e.ts > s0.r
+       GROUP BY e.user_id),
+s2 AS (SELECT e.user_id AS u, MIN(e.ts) AS r
+       FROM ev e JOIN s1 ON e.user_id = s1.u
+       WHERE e.event_type = 'purchase' AND e.ts > s1.r
+       GROUP BY e.user_id),
+g1 AS (SELECT epoch_us(s1.r) // 1000000 - epoch_us(s0.r) // 1000000
+         AS g FROM s1 JOIN s0 USING (u)),
+g2 AS (SELECT epoch_us(s2.r) // 1000000 - epoch_us(s1.r) // 1000000
+         AS g FROM s2 JOIN s1 USING (u))
+SELECT 1 AS stage_idx, 'click' AS stage,
+       CAST(COUNT(*) AS BIGINT) AS n_users,
+       CAST(SUM(g) AS BIGINT) AS gap_sum_s,
+       CAST(MIN(g) AS BIGINT) AS gap_min_s,
+       CAST(MAX(g) AS BIGINT) AS gap_max_s,
+       CASE WHEN COUNT(*) > 0 THEN CAST(SUM(g) AS DOUBLE)
+            / CAST(COUNT(*) AS DOUBLE) END AS mean_gap_s
+FROM g1
+UNION ALL
+SELECT 2, 'purchase', CAST(COUNT(*) AS BIGINT),
+       CAST(SUM(g) AS BIGINT), CAST(MIN(g) AS BIGINT),
+       CAST(MAX(g) AS BIGINT),
+       CASE WHEN COUNT(*) > 0 THEN CAST(SUM(g) AS DOUBLE)
+            / CAST(COUNT(*) AS DOUBLE) END
+FROM g2
+"""
+
+
 def _q221_k_anonymity(spark, sf):
     """k-anonymity audit over the (lang, source) quasi-identifier
     pair of the documents sidecar. Round-5 post-pin registration:
@@ -4818,6 +7618,95 @@ SELECT n_rows, n_groups, min_group_size, groups_at_risk,
        rows_at_risk,
        CASE WHEN n_rows > 0 THEN CAST(rows_at_risk AS DOUBLE)
             / CAST(n_rows AS DOUBLE) END AS risk_fraction
+FROM s
+"""
+
+
+def _q222_period_over_period(spark, sf):
+    """Weekly revenue period-over-period per order priority
+    (fixed-length epoch buckets, exact cent sums, one LAG over the
+    aggregated frame). Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import period_over_period
+    od = _t(spark, sf, "orders").select(
+        "o_orderpriority", "o_orderdate",
+        F.round(F.col("o_totalprice") * 100).cast("long")
+        .alias("cents"))
+    return period_over_period(od, ts_col="o_orderdate",
+                              value_col="cents",
+                              group_cols=["o_orderpriority"],
+                              period_seconds=604800)
+
+
+_O222 = """
+WITH b AS (
+  SELECT o_orderpriority,
+         (epoch_us(o_orderdate) // 1000000) // 604800 AS bucket,
+         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS v
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_orderdate IS NOT NULL
+    AND o_totalprice IS NOT NULL),
+per AS (
+  SELECT o_orderpriority, bucket,
+         CAST(COUNT(*) AS BIGINT) AS n_events,
+         CAST(SUM(v) AS BIGINT) AS value_sum
+  FROM b GROUP BY o_orderpriority, bucket),
+lagged AS (
+  SELECT o_orderpriority, bucket,
+         CAST(bucket * 604800 AS BIGINT) AS period_start_s,
+         n_events, value_sum,
+         LAG(value_sum) OVER (PARTITION BY o_orderpriority
+                              ORDER BY bucket ASC) AS prev_sum
+  FROM per)
+SELECT o_orderpriority, bucket, period_start_s, n_events, value_sum,
+       prev_sum, value_sum - prev_sum AS delta,
+       CASE WHEN prev_sum <> 0
+            THEN CAST(value_sum - prev_sum AS DOUBLE)
+                 / CAST(prev_sum AS DOUBLE)
+       END AS pct_change
+FROM lagged
+"""
+
+
+def _q223_wilson_ci(spark, sf):
+    """Wilson score interval for the high-value-event rate per event
+    type (exact BIGINT n/k, fixed IEEE interval). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import wilson_ci
+    ev = _t(spark, sf, "events").select(
+        "event_type", (F.col("value") > 50).cast("int").alias("hi"))
+    return wilson_ci(ev, label_col="hi", group_cols=["event_type"])
+
+
+_O223 = """
+WITH s AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(CAST(value > 50 AS BIGINT)) AS BIGINT) AS k
+  FROM events
+  WHERE event_type IS NOT NULL AND value IS NOT NULL
+  GROUP BY event_type)
+SELECT event_type, n, k,
+       CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p_hat,
+       ((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
+         + 1.96 * 1.96 / CAST(n AS DOUBLE) / 2.0)
+        / (1.0 + 1.96 * 1.96 / CAST(n AS DOUBLE)))
+       - (1.96 * SQRT(CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
+                      * (1.0 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
+                      / CAST(n AS DOUBLE)
+                      + 1.96 * 1.96
+                        / (4.0 * CAST(n AS DOUBLE)
+                           * CAST(n AS DOUBLE))))
+         / (1.0 + 1.96 * 1.96 / CAST(n AS DOUBLE)) AS ci_lo,
+       ((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
+         + 1.96 * 1.96 / CAST(n AS DOUBLE) / 2.0)
+        / (1.0 + 1.96 * 1.96 / CAST(n AS DOUBLE)))
+       + (1.96 * SQRT(CAST(k AS DOUBLE) / CAST(n AS DOUBLE)
+                      * (1.0 - CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
+                      / CAST(n AS DOUBLE)
+                      + 1.96 * 1.96
+                        / (4.0 * CAST(n AS DOUBLE)
+                           * CAST(n AS DOUBLE))))
+         / (1.0 + 1.96 * 1.96 / CAST(n AS DOUBLE)) AS ci_hi
 FROM s
 """
 
@@ -4879,6 +7768,48 @@ SELECT label, n_vecs, dim,
             / (CAST(n_vecs AS DOUBLE) * 1e12))
        END AS fisher_ratio
 FROM per_l
+"""
+
+
+def _q225_information_gain(spark, sf):
+    """Mutual information I(returnflag; linestatus) in exact
+    micro-nats (every term a BIGINT — the group_entropy rule
+    extended to the joint decomposition). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import information_gain
+    return information_gain(_t(spark, sf, "lineitem"),
+                            x_col="l_returnflag",
+                            y_col="l_linestatus")
+
+
+_O225 = """
+WITH cell AS (
+  SELECT l_returnflag AS x, l_linestatus AS y,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM lineitem
+  WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL
+  GROUP BY l_returnflag, l_linestatus),
+staged AS (
+  SELECT x, y, c,
+         CAST(SUM(c) OVER () AS BIGINT) AS n,
+         CAST(SUM(c) OVER (PARTITION BY x) AS BIGINT) AS cx,
+         CAST(SUM(c) OVER (PARTITION BY y) AS BIGINT) AS cy
+  FROM cell),
+s AS (
+  SELECT MAX(n) AS n,
+         CAST(COUNT(DISTINCT x) AS BIGINT) AS k_x,
+         CAST(COUNT(DISTINCT y) AS BIGINT) AS k_y,
+         CAST(SUM(c * (
+             CAST(ROUND(LN(CAST(c AS DOUBLE)) * 1e6) AS BIGINT)
+           - CAST(ROUND(LN(CAST(cx AS DOUBLE)) * 1e6) AS BIGINT)
+           - CAST(ROUND(LN(CAST(cy AS DOUBLE)) * 1e6) AS BIGINT)
+           + CAST(ROUND(LN(CAST(n AS DOUBLE)) * 1e6) AS BIGINT)))
+           AS BIGINT) AS ig_num_micro
+  FROM staged)
+SELECT n, k_x, k_y, ig_num_micro,
+       CAST(ig_num_micro AS DOUBLE)
+         / (CAST(n AS DOUBLE) * 1e6) AS info_gain
+FROM s
 """
 
 
@@ -5066,9 +7997,117 @@ LEFT JOIN comp ON comp.node = ids.id
 """
 
 
+def _q230_cume_gains(spark, sf):
+    """Cumulative gains/lift table over lineitem (score = price
+    cents, positive = returned line): sampled-boundary deciles (the
+    q146 100-TB-safe ntile), exact BIGINT band counts, cumulative
+    windows over the ≤10-row aggregate only. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import cume_gains
+    li = _t(spark, sf, "lineitem").select(
+        F.round(F.col("l_extendedprice") * 100.0).cast("long")
+        .alias("price_cents"),
+        (F.col("l_returnflag") == "R").cast("int").alias("returned"))
+    return cume_gains(li, score_col="price_cents",
+                      label_col="returned", n_buckets=10)
+
+
+def _o230() -> str:
+    qs = ", ".join(f"({i / 10!r}::DOUBLE)" for i in range(1, 10))
+    return f"""
+WITH base AS (
+  SELECT CAST(ROUND(l_extendedprice * 100.0) AS BIGINT) AS s,
+         CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL),
+samp AS (
+  SELECT s FROM base
+  WHERE ('0x' || substr(md5(CAST(s AS VARCHAR)), 1, 2))::BIGINT < 16),
+ranked AS (
+  SELECT s, ROW_NUMBER() OVER (ORDER BY s ASC) AS rn,
+         COUNT(*) OVER () AS cnt
+  FROM samp),
+bounds AS (
+  SELECT s AS b
+  FROM ranked CROSS JOIN (VALUES {qs}) AS qv(q)
+  WHERE rn = CAST(FLOOR(q * (cnt - 1)) AS BIGINT) + 1),
+a AS (
+  SELECT (SELECT COUNT(*) FROM bounds WHERE b <= base.s) AS bucket, y
+  FROM base),
+per_b AS (
+  SELECT CAST(bucket AS INTEGER) AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS n_pos
+  FROM a GROUP BY bucket),
+g AS (
+  SELECT bucket, n, n_pos,
+         CAST(ROW_NUMBER() OVER (ORDER BY bucket DESC) AS INTEGER)
+           AS rank,
+         CAST(SUM(n) OVER (ORDER BY bucket DESC
+                           ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND CURRENT ROW) AS BIGINT) AS cum_n,
+         CAST(SUM(n_pos) OVER (ORDER BY bucket DESC
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND CURRENT ROW) AS BIGINT) AS cum_pos,
+         CAST(SUM(n) OVER () AS BIGINT) AS tn,
+         CAST(SUM(n_pos) OVER () AS BIGINT) AS tp
+  FROM per_b)
+SELECT rank, bucket, n, n_pos, cum_n, cum_pos,
+       CASE WHEN tp > 0 THEN
+         CAST(cum_pos AS DOUBLE) / CAST(tp AS DOUBLE) END AS capture,
+       CASE WHEN tp > 0 AND cum_n > 0 THEN
+         CAST(cum_pos * tn AS DOUBLE)
+           / CAST(cum_n * tp AS DOUBLE) END AS lift
+FROM g
+"""
+
+
+
+
 # ------------------------------------------------------------------
 # Round-5 session-8 registrations (post-pin: in-repo oracle sweep)
 # ------------------------------------------------------------------
+
+
+def _q231_mrr_at_k(spark, sf):
+    """MRR@5 per order, relevance = very-high-quantity line:
+    totalized (score desc, id asc) ranking, exact integer first-hit
+    rank, ONE division for the reciprocal. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import mrr_at_k
+    li = _t(spark, sf, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_extendedprice",
+        (F.col("l_quantity") > 40).cast("int").alias("rel"))
+    return mrr_at_k(li, group_cols=["l_orderkey"],
+                    id_col="l_linenumber",
+                    score_col="l_extendedprice", rel_col="rel", k=5)
+
+
+_O231 = """
+WITH b AS (
+  SELECT l_orderkey, l_linenumber AS id, l_extendedprice AS s,
+         CAST(l_quantity > 40 AS BIGINT) AS r
+  FROM lineitem
+  WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
+    AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL),
+ranked AS (
+  SELECT l_orderkey, r,
+         ROW_NUMBER() OVER (PARTITION BY l_orderkey
+                            ORDER BY s DESC, id ASC) AS rnk
+  FROM b),
+s AS (
+  SELECT l_orderkey,
+         CAST(SUM(r) AS BIGINT) AS n_rel,
+         CAST(MIN(CASE WHEN r = 1 AND rnk <= 5 THEN rnk END)
+              AS INTEGER) AS first_rel_rank
+  FROM ranked GROUP BY l_orderkey)
+SELECT l_orderkey, n_rel, first_rel_rank,
+       CASE WHEN n_rel > 0 THEN
+         CASE WHEN first_rel_rank IS NOT NULL
+              THEN 1.0 / CAST(first_rel_rank AS DOUBLE) ELSE 0.0 END
+       END AS rr_at_k
+FROM s
+"""
 
 
 def _q232_script_mix(spark, sf):
@@ -5104,6 +8143,43 @@ SELECT doc_id, n_chars, n_lower, n_upper, n_digit, n_space, n_punct,
        CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE)
             / CAST(n_chars AS DOUBLE) END AS frac_punct
 FROM c
+"""
+
+
+def _q233_circular_time(spark, sf):
+    """Circular time-of-day statistics per event type: per-row
+    micro-floored cos/sin summed as exact BIGINT, resultant/variance
+    derived by IEEE-exact ops. Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.eventops import circular_time_stats
+    return circular_time_stats(_t(spark, sf, "events"))
+
+
+_K233 = repr(2.0 * __import__("math").pi / 86400.0)
+
+_O233 = f"""
+WITH b AS (
+  SELECT event_type,
+         CAST(extract(hour FROM ts) * 3600 + extract(minute FROM ts) * 60
+              + extract(second FROM ts) AS DOUBLE) * {_K233} AS theta
+  FROM events
+  WHERE ts IS NOT NULL AND event_type IS NOT NULL),
+g AS (
+  SELECT event_type AS grp, COUNT(*) AS n,
+         CAST(SUM(CAST(FLOOR(cos(theta) * 1000000.0) AS BIGINT))
+              AS BIGINT) AS cq,
+         CAST(SUM(CAST(FLOOR(sin(theta) * 1000000.0) AS BIGINT))
+              AS BIGINT) AS sq
+  FROM b GROUP BY event_type)
+SELECT grp AS "group", CAST(n AS BIGINT) AS n,
+       cq AS cos_sum_q, sq AS sin_sum_q,
+       sqrt(CAST(cq AS DOUBLE) * CAST(cq AS DOUBLE)
+            + CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
+         / (CAST(n AS DOUBLE) * 1000000.0) AS resultant_len,
+       1.0 - sqrt(CAST(cq AS DOUBLE) * CAST(cq AS DOUBLE)
+                  + CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
+         / (CAST(n AS DOUBLE) * 1000000.0) AS circ_variance
+FROM g
 """
 
 
@@ -5217,6 +8293,31 @@ SELECT id_a, id_b, area_a, area_b, inter_area,
             THEN inter_area / LEAST(area_a, area_b)
             ELSE 0.0 END AS overlap_frac
 FROM ar WHERE inter_area > 0.0
+"""
+
+
+
+
+def _q235_rolling_active(spark, sf):
+    """Exact DAU + trailing-7-day active users over events: dedup
+    before the bounded window fan-out, pure BIGINT set arithmetic.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import rolling_active_users
+    return rolling_active_users(_t(spark, sf, "events"), window_days=7)
+
+
+_O235 = """
+WITH ud AS (
+  SELECT DISTINCT user_id AS u,
+         datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
+dau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM ud GROUP BY day),
+ex AS (SELECT DISTINCT u, day + x AS day2
+       FROM ud CROSS JOIN (SELECT unnest(range(0, 7)) AS x) t),
+wau AS (SELECT day2, CAST(COUNT(*) AS BIGINT) AS rolling_active
+        FROM ex GROUP BY day2)
+SELECT CAST(dau.day AS BIGINT) AS day, dau.dau, wau.rolling_active
+FROM dau JOIN wau ON wau.day2 = dau.day
 """
 
 
@@ -5344,6 +8445,60 @@ FROM d GROUP BY flag
 """
 
 
+def _q239_winsorized(spark, sf):
+    """Per-returnflag winsorized mean of price cents (clamp the 10%
+    tails to the boundary values): exact value-count integer
+    arithmetic, ONE final division. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import winsorized_mean
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice") * 100.0).cast("long")
+        .alias("cents"))
+    return winsorized_mean(li, value_col="cents",
+                           group_cols=["l_returnflag"], wins_milli=100)
+
+
+_O239 = """
+WITH b AS (
+  SELECT l_returnflag AS g,
+         CAST(ROUND(l_extendedprice * 100.0) AS BIGINT) AS v
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL),
+pv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY g, v),
+st AS (
+  SELECT g, v, c,
+         CAST(COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY v
+                                    ROWS BETWEEN UNBOUNDED PRECEDING
+                                    AND 1 PRECEDING), 0) AS BIGINT)
+           AS before,
+         CAST(SUM(c) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM pv),
+kp AS (
+  SELECT g, v, c, before, n, (n * 100) // 1000 AS k,
+         GREATEST(0, LEAST(before + c, n - (n * 100) // 1000)
+                     - GREATEST(before, (n * 100) // 1000)) AS mid
+  FROM st),
+agg AS (
+  SELECT g, CAST(MAX(n) AS BIGINT) AS n,
+         CAST(MAX(k) AS BIGINT) AS k_per_side,
+         CAST(MAX(CASE WHEN before <= k AND before + c > k THEN v END)
+              AS BIGINT) AS lo_clamp,
+         CAST(MAX(CASE WHEN before < n - k AND before + c >= n - k
+                  THEN v END) AS BIGINT) AS hi_clamp,
+         CAST(SUM(v * mid) AS BIGINT) AS midsum
+  FROM kp GROUP BY g)
+SELECT g AS l_returnflag, n, k_per_side, lo_clamp, hi_clamp,
+       CAST(midsum + k_per_side * lo_clamp + k_per_side * hi_clamp
+            AS BIGINT) AS winsorized_sum,
+       CAST(midsum + k_per_side * lo_clamp + k_per_side * hi_clamp
+            AS DOUBLE) / CAST(n AS DOUBLE) AS winsorized_mean
+FROM agg
+"""
+
+
+
+
 def _q241_keyword_snippets(spark, sf):
     """First-occurrence keyword-in-context snippets for 'spark' over
     documents: integer locate/substring arithmetic, no regex.
@@ -5402,6 +8557,8 @@ SELECT poly_id,
        CAST(FLOOR(deg * 1000.0) AS BIGINT) AS bearing_millideg
 FROM b
 """
+
+
 
 
 def _q244_cohens_kappa(spark, sf):
@@ -5477,6 +8634,8 @@ FROM er
 """
 
 
+
+
 def _q246_simhash_curve(spark, sf):
     """Near-dup pair counts by SimHash hamming distance — the
     dedup-threshold tuning curve over the q26 banded join. Round-5
@@ -5519,6 +8678,8 @@ SELECT dim, n, sum_q, sumsq_q,
          / (1000000.0 * 1000000.0) AS variance
 FROM g
 """
+
+
 
 
 def _q248_frame_checksums(spark, sf):
@@ -5577,6 +8738,51 @@ SELECT media_ref, frame_idx, COUNT(*)::BIGINT AS n_bytes,
        SUM((rel + 1) * b)::BIGINT AS byte_wsum
 FROM asg GROUP BY media_ref, frame_idx
 """
+
+
+
+
+def _q249_peak_concurrency(spark, sf):
+    """Peak simultaneously-open synthetic order intervals per
+    priority (half-open sweep, totalized (t, delta) order, exact
+    BIGINT running sums). Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.eventops import peak_concurrency
+    o = _t(spark, sf, "orders")
+    day = F.datediff(F.col("o_orderdate").cast("date"),
+                     F.to_date(F.lit("1970-01-01"))).cast("long")
+    iv = o.where(F.col("o_orderpriority").isNotNull()
+                 & F.col("o_orderdate").isNotNull()
+                 & F.col("o_orderkey").isNotNull())         .select(F.col("o_orderpriority").alias("key"),
+                day.alias("start"),
+                (day + 1 + (F.col("o_orderkey") % 30)).alias("end"))
+    return peak_concurrency(iv)
+
+
+_O249 = """
+WITH iv AS (
+  SELECT o_orderpriority AS k,
+         datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
+           AS s,
+         datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
+           + 1 + (o_orderkey % 30) AS e
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_orderdate IS NOT NULL
+    AND o_orderkey IS NOT NULL),
+ev AS (SELECT k, s AS t, CAST(1 AS BIGINT) AS d FROM iv
+       UNION ALL
+       SELECT k, e AS t, CAST(-1 AS BIGINT) AS d FROM iv),
+run AS (
+  SELECT k, SUM(d) OVER (PARTITION BY k ORDER BY t ASC, d ASC
+                         ROWS BETWEEN UNBOUNDED PRECEDING
+                         AND CURRENT ROW) AS r
+  FROM ev)
+SELECT k AS key, CAST(COUNT(*) / 2 AS BIGINT) AS n_intervals,
+       CAST(MAX(r) AS BIGINT) AS peak
+FROM run GROUP BY k
+"""
+
+
 
 
 def _q250_zonal_stats(spark, sf):
@@ -5726,6 +8932,283 @@ rk AS (SELECT grp AS lang, token, y_g AS n_group, n_rest, zeta_micro,
                 AS rank
        FROM sc)
 SELECT * FROM rk WHERE rank <= 5
+"""
+
+
+def _q254_ewma_last(spark, sf):
+    """Per-user EWMA (dyadic weights over the last 6 events) at the
+    latest event: exact BIGINT num/den, ONE division. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.eventops import ewma_last
+    return ewma_last(_t(spark, sf, "events"), window=6)
+
+
+_O254 = """
+WITH e AS (
+  SELECT user_id AS key, ts, event_id,
+         CAST(ROUND(value * 1000.0) AS BIGINT) AS v
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+l AS (
+  SELECT key, v,
+         lag(v, 1) OVER w AS v1, lag(v, 2) OVER w AS v2,
+         lag(v, 3) OVER w AS v3, lag(v, 4) OVER w AS v4,
+         lag(v, 5) OVER w AS v5,
+         ROW_NUMBER() OVER (PARTITION BY key
+                            ORDER BY ts DESC, event_id DESC) AS rn,
+         COUNT(*) OVER (PARTITION BY key) AS n_events
+  FROM e
+  WINDOW w AS (PARTITION BY key ORDER BY ts ASC, event_id ASC)),
+f AS (
+  SELECT key, n_events,
+         (COALESCE(v * 32, 0) + COALESCE(v1 * 16, 0)
+          + COALESCE(v2 * 8, 0) + COALESCE(v3 * 4, 0)
+          + COALESCE(v4 * 2, 0) + COALESCE(v5 * 1, 0))::BIGINT AS num,
+         (CASE WHEN v IS NOT NULL THEN 32 ELSE 0 END
+          + CASE WHEN v1 IS NOT NULL THEN 16 ELSE 0 END
+          + CASE WHEN v2 IS NOT NULL THEN 8 ELSE 0 END
+          + CASE WHEN v3 IS NOT NULL THEN 4 ELSE 0 END
+          + CASE WHEN v4 IS NOT NULL THEN 2 ELSE 0 END
+          + CASE WHEN v5 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS den
+  FROM l WHERE rn = 1)
+SELECT key, n_events, num, den,
+       num::DOUBLE / den::DOUBLE AS ewma_milli
+FROM f
+"""
+
+
+def _q255_mann_kendall(spark, sf):
+    """Mann-Kendall trend test per user over event value cents
+    ((ts, event_id)-totalized pair order, exact BIGINT S and
+    tie-corrected 18-Var, fixed IEEE z). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import mann_kendall
+    ev = _t(spark, sf, "events").select(
+        "user_id", "ts", "event_id",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return mann_kendall(ev, value_col="cents",
+                        order_cols=["ts", "event_id"],
+                        group_cols=["user_id"])
+
+
+_O255 = """
+WITH b AS (
+  SELECT user_id AS grp, ts, event_id,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+s AS (
+  SELECT a.grp,
+         SUM(CASE WHEN b2.x > a.x THEN 1
+                  WHEN b2.x < a.x THEN -1 ELSE 0 END)::BIGINT AS s_stat
+  FROM b a JOIN b b2
+    ON a.grp = b2.grp AND (a.ts, a.event_id) < (b2.ts, b2.event_id)
+  GROUP BY a.grp),
+n AS (SELECT grp, COUNT(*)::BIGINT AS n FROM b GROUP BY grp),
+t AS (SELECT grp, SUM(t * (t - 1) * (2 * t + 5))::BIGINT AS corr
+      FROM (SELECT grp, x, COUNT(*)::BIGINT AS t FROM b GROUP BY grp, x)
+      GROUP BY grp),
+f AS (
+  SELECT n.grp, n.n, COALESCE(s.s_stat, 0)::BIGINT AS s_stat,
+         (n.n * (n.n - 1) * (2 * n.n + 5) - t.corr)::BIGINT AS var18
+  FROM n JOIN t USING (grp) LEFT JOIN s USING (grp))
+SELECT grp AS user_id, n, s_stat, var18,
+       CASE WHEN n >= 2 AND var18 > 0 THEN
+         CASE WHEN s_stat > 0
+              THEN (s_stat - 1)::DOUBLE / sqrt(var18::DOUBLE / 18.0)
+              WHEN s_stat < 0
+              THEN (s_stat + 1)::DOUBLE / sqrt(var18::DOUBLE / 18.0)
+              ELSE 0.0 END
+       END AS z
+FROM f
+"""
+
+
+def _q256_brown_forsythe(spark, sf):
+    """Brown-Forsythe variance-equality F across returnflag levels of
+    line revenue (dollars): lower-median deviations (exact BIGINT),
+    then oneway_anova's milli-floored sums. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import brown_forsythe
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    return brown_forsythe(li, value_col="price_dollars",
+                          factor_col="l_returnflag")
+
+
+_O256 = """
+WITH b AS (
+  SELECT l_returnflag AS lvl,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS v
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_returnflag IS NOT NULL),
+r AS (SELECT lvl, v,
+             ROW_NUMBER() OVER (PARTITION BY lvl ORDER BY v ASC) AS rn,
+             COUNT(*) OVER (PARTITION BY lvl) AS n
+      FROM b),
+m AS (SELECT lvl, v AS med FROM r WHERE rn = (n + 1) // 2),
+d AS (SELECT b.lvl, ABS(b.v - m.med)::BIGINT AS z
+      FROM b JOIN m USING (lvl)),
+lv AS (SELECT lvl, CAST(COUNT(*) AS BIGINT) AS n,
+              CAST(SUM(z) AS BIGINT) AS s,
+              CAST(SUM(z * z) AS BIGINT) AS ss
+       FROM d GROUP BY lvl),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS k, CAST(SUM(n) AS BIGINT) AS n,
+         CAST(SUM(s) AS BIGINT) AS S, CAST(SUM(ss) AS BIGINT) AS SS,
+         CAST(SUM(CAST(FLOOR(s::DOUBLE * s::DOUBLE / n::DOUBLE
+                             * 1000.0) AS BIGINT)) AS BIGINT) AS cb
+  FROM lv),
+fin AS (
+  SELECT k, n,
+         cb - CAST(FLOOR(S::DOUBLE * S::DOUBLE / n::DOUBLE * 1000.0)
+                   AS BIGINT) AS ssb_milli,
+         1000 * SS - cb AS ssw_milli
+  FROM agg)
+SELECT k, n, ssb_milli, ssw_milli,
+  CASE WHEN k >= 2 AND n > k AND ssw_milli > 0
+       THEN (ssb_milli::DOUBLE / (k - 1)::DOUBLE)
+            / (ssw_milli::DOUBLE / (n - k)::DOUBLE) END AS f_stat
+FROM fin
+"""
+
+
+def _q257_bh_fdr(spark, sf):
+    """Multiple-comparisons pipeline: Welch t per suppkey%37 bucket
+    (A vs R revenue, null true by construction) -> normal two-sided p
+    via the fixed A&S erfc polynomial -> Benjamini-Hochberg step-up
+    adjustment, micro-quantized. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import (bh_fdr,
+                                              normal_two_sided_p,
+                                              welch_ttest)
+    li = _t(spark, sf, "lineitem").select(
+        (F.col("l_suppkey") % 37).alias("bucket"), "l_returnflag",
+        F.round(F.col("l_extendedprice")).cast("long")
+        .alias("price_dollars"))
+    w = welch_ttest(li, value_col="price_dollars",
+                    group_col="l_returnflag",
+                    group_a="A", group_b="R", group_cols=["bucket"])
+    tests = (w.where(F.col("t_stat").isNotNull())
+             .select(F.col("bucket").alias("tid"),
+                     normal_two_sided_p(F.col("t_stat")).alias("p")))
+    out = bh_fdr(tests, p_col="p", test_id_col="tid")
+    return out.select(
+        "test_id", "rank", "m",
+        F.round(F.col("p") * F.lit(1_000_000.0)).cast("long")
+        .alias("p_micro"),
+        "adj_p_micro", "significant")
+
+
+def _o257() -> str:
+    from kml2geojson_spark.relational import normal_two_sided_p_sql
+    p_expr = normal_two_sided_p_sql("t_stat")
+    return f"""
+WITH b AS (
+  SELECT l_suppkey % 37 AS tid, l_returnflag AS f,
+         CAST(ROUND(l_extendedprice) AS BIGINT) AS v
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_suppkey IS NOT NULL
+    AND l_returnflag IN ('A', 'R')),
+s AS (
+  SELECT tid,
+         CAST(SUM(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+         CAST(SUM(CASE WHEN f = 'A' THEN v ELSE 0 END) AS BIGINT) AS s_a,
+         CAST(SUM(CASE WHEN f = 'A' THEN v * v ELSE 0 END) AS BIGINT)
+           AS ss_a,
+         CAST(SUM(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+         CAST(SUM(CASE WHEN f = 'R' THEN v ELSE 0 END) AS BIGINT) AS s_b,
+         CAST(SUM(CASE WHEN f = 'R' THEN v * v ELSE 0 END) AS BIGINT)
+           AS ss_b
+  FROM b GROUP BY tid),
+e AS (
+  SELECT tid, n_a, n_b,
+         s_a::DOUBLE / n_a::DOUBLE AS mean_a,
+         s_b::DOUBLE / n_b::DOUBLE AS mean_b,
+         ((n_a::DOUBLE * ss_a::DOUBLE - s_a::DOUBLE * s_a::DOUBLE)
+          / (n_a::DOUBLE * (n_a::DOUBLE - 1.0))) / n_a::DOUBLE AS va,
+         ((n_b::DOUBLE * ss_b::DOUBLE - s_b::DOUBLE * s_b::DOUBLE)
+          / (n_b::DOUBLE * (n_b::DOUBLE - 1.0))) / n_b::DOUBLE AS vb
+  FROM s),
+tt AS (
+  SELECT tid,
+         CASE WHEN n_a >= 2 AND n_b >= 2 AND va + vb > 0
+              THEN (mean_a - mean_b) / sqrt(va + vb) END AS t_stat
+  FROM e),
+p AS (SELECT tid, {p_expr} AS p FROM tt WHERE t_stat IS NOT NULL),
+r AS (SELECT tid, p,
+             ROW_NUMBER() OVER (ORDER BY p ASC, tid ASC) AS rank,
+             COUNT(*) OVER () AS m
+      FROM p),
+a AS (SELECT tid, p, rank, m,
+             LEAST(1.0, MIN(m::DOUBLE * p / rank::DOUBLE)
+                        OVER (ORDER BY rank DESC
+                              ROWS BETWEEN UNBOUNDED PRECEDING
+                              AND CURRENT ROW)) AS adj
+      FROM r)
+SELECT tid AS test_id, rank, m,
+       CAST(ROUND(p * 1000000.0) AS BIGINT) AS p_micro,
+       CAST(ROUND(adj * 1000000.0) AS BIGINT) AS adj_p_micro,
+       (CAST(ROUND(adj * 1000000.0) AS BIGINT) <= 50000) AS significant
+FROM a
+"""
+
+
+def _q258_kendall_tau(spark, sf):
+    """Kendall tau-b per user between event value cents and event
+    epoch seconds (is spend drifting with time, rank-wise): exact
+    BIGINT C/D/tie counts off a per-group pair self-join, ONE fixed
+    IEEE tau expression. Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import kendall_tau
+    ev = _t(spark, sf, "events").select(
+        "user_id", "event_id",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"),
+        F.floor(F.unix_timestamp("ts")).cast("long").alias("tsec"))
+    return kendall_tau(ev, col_x="tsec", col_y="cents",
+                       id_col="event_id", group_cols=["user_id"])
+
+
+_O258 = """
+WITH b AS (
+  SELECT user_id AS grp, event_id AS i,
+         CAST(floor(epoch(ts)) AS BIGINT) AS x,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS y
+  FROM events
+  WHERE value IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND user_id IS NOT NULL),
+cd AS (
+  SELECT a.grp,
+         SUM(CASE WHEN (a.x - b2.x) * (a.y - b2.y) > 0
+                  THEN 1 ELSE 0 END)::BIGINT AS c,
+         SUM(CASE WHEN (a.x - b2.x) * (a.y - b2.y) < 0
+                  THEN 1 ELSE 0 END)::BIGINT AS d
+  FROM b a JOIN b b2 ON a.grp = b2.grp AND a.i < b2.i
+  GROUP BY a.grp),
+n AS (SELECT grp, COUNT(*)::BIGINT AS n FROM b GROUP BY grp),
+tx AS (SELECT grp, (SUM(t * (t - 1)) / 2)::BIGINT AS n1
+       FROM (SELECT grp, x, COUNT(*)::BIGINT AS t FROM b GROUP BY grp, x)
+       GROUP BY grp),
+ty AS (SELECT grp, (SUM(t * (t - 1)) / 2)::BIGINT AS n2
+       FROM (SELECT grp, y, COUNT(*)::BIGINT AS t FROM b GROUP BY grp, y)
+       GROUP BY grp),
+f AS (
+  SELECT n.grp, n.n,
+         COALESCE(cd.c, 0)::BIGINT AS concordant,
+         COALESCE(cd.d, 0)::BIGINT AS discordant,
+         (n.n * (n.n - 1) / 2)::BIGINT AS n0, tx.n1, ty.n2
+  FROM n JOIN tx USING (grp) JOIN ty USING (grp)
+  LEFT JOIN cd USING (grp))
+SELECT grp AS user_id, n, concordant, discordant, n0, n1, n2,
+       CASE WHEN n0 > n1 AND n0 > n2 THEN
+         (concordant - discordant)::DOUBLE
+         / sqrt((n0 - n1)::DOUBLE * (n0 - n2)::DOUBLE)
+       END AS tau_b
+FROM f
 """
 
 
@@ -5962,6 +9445,55 @@ FROM base b CROSS JOIN hp
 """
 
 
+def _q264_seasonality(spark, sf):
+    """Hour-of-day seasonality strength (ANOVA eta-squared on the
+    phase bucket) of event value cents per event type: pure integer
+    phase arithmetic, oneway_anova's exact milli-floored sums, ONE
+    division for eta2. Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.eventops import seasonality_strength
+    ev = _t(spark, sf, "events").select(
+        "event_type", "ts",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return seasonality_strength(ev, value_col="cents",
+                                group_cols=["event_type"])
+
+
+_O264 = """
+WITH b AS (
+  SELECT event_type AS g,
+         ((CAST(floor(epoch(ts)) AS BIGINT) % 86400 + 86400) % 86400)
+           * 24 // 86400 AS ph,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS v
+  FROM events
+  WHERE ts IS NOT NULL AND value IS NOT NULL AND event_type IS NOT NULL),
+lv AS (SELECT g, ph, CAST(COUNT(*) AS BIGINT) AS n,
+              CAST(SUM(v) AS BIGINT) AS s,
+              CAST(SUM(v * v) AS BIGINT) AS ss
+       FROM b GROUP BY g, ph),
+agg AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS k, CAST(SUM(n) AS BIGINT) AS n,
+         CAST(SUM(s) AS BIGINT) AS S, CAST(SUM(ss) AS BIGINT) AS SS,
+         CAST(SUM(CAST(FLOOR(s::DOUBLE * s::DOUBLE / n::DOUBLE
+                             * 1000.0) AS BIGINT)) AS BIGINT) AS cb
+  FROM lv GROUP BY g),
+fin AS (
+  SELECT g, k, n,
+         cb - CAST(FLOOR(S::DOUBLE * S::DOUBLE / n::DOUBLE * 1000.0)
+                   AS BIGINT) AS ssb_milli,
+         1000 * SS - cb AS ssw_milli
+  FROM agg)
+SELECT g AS event_type, k, n, ssb_milli, ssw_milli,
+  CASE WHEN k >= 2 AND n > k AND ssw_milli > 0
+       THEN (ssb_milli::DOUBLE / (k - 1)::DOUBLE)
+            / (ssw_milli::DOUBLE / (n - k)::DOUBLE) END AS f_stat,
+  CASE WHEN ssb_milli + ssw_milli > 0
+       THEN ssb_milli::DOUBLE / (ssb_milli + ssw_milli)::DOUBLE
+  END AS eta2
+FROM fin
+"""
+
+
 def _q265_destination_point(spark, sf):
     """Forward geodesic: customer points pushed (1 + key % 50) km
     along bearing (key * 37) % 360 on the package sphere —
@@ -6015,6 +9547,142 @@ FROM o
 """
 
 
+def _q266_rolling_corr(spark, sf):
+    """Trailing-12-event Pearson correlation between event value
+    cents and epoch seconds per user (is spend locally tracking
+    time): exact BIGINT window sums, ONE fixed IEEE expression,
+    micro-quantized. Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import rolling_corr
+    # rebase epoch seconds to 2024-01-01 so n*x*x stays inside int64
+    # over the 12-row frame (the operator's documented bound)
+    ev = _t(spark, sf, "events").select(
+        "user_id", "event_id",
+        (F.floor(F.unix_timestamp("ts")).cast("long")
+         - F.lit(1_704_067_200)).alias("tsec"),
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return rolling_corr(ev, x_col="tsec", y_col="cents",
+                        order_col="tsec", id_col="event_id",
+                        group_cols=["user_id"], window=12,
+                        min_periods=4)
+
+
+_O266 = """
+WITH b AS (
+  SELECT user_id AS g,
+         CAST(floor(epoch(ts)) AS BIGINT) - 1704067200 AS o,
+         event_id AS id,
+         CAST(floor(epoch(ts)) AS BIGINT) - 1704067200 AS x,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS y
+  FROM events
+  WHERE value IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND user_id IS NOT NULL),
+w AS (
+  SELECT g, o, id, x, y,
+         COUNT(*) OVER fr AS n,
+         SUM(x) OVER fr AS sx, SUM(y) OVER fr AS sy,
+         SUM(x * y) OVER fr AS sxy,
+         SUM(x * x) OVER fr AS sxx, SUM(y * y) OVER fr AS syy
+  FROM b
+  WINDOW fr AS (PARTITION BY g ORDER BY o ASC, id ASC
+                ROWS BETWEEN 11 PRECEDING AND CURRENT ROW))
+SELECT g AS user_id, o, id, x, y, n::BIGINT AS n_window,
+       CASE WHEN n >= 4 AND n * sxx - sx * sx > 0
+                 AND n * syy - sy * sy > 0
+            THEN CAST(ROUND((n * sxy - sx * sy)::DOUBLE
+                            / sqrt((n * sxx - sx * sx)::DOUBLE
+                                   * (n * syy - sy * sy)::DOUBLE)
+                            * 1000000.0) AS BIGINT)
+       END AS corr_micro
+FROM w
+"""
+
+
+def _q267_target_encode(spark, sf):
+    """Leakage-guarded target encoding of market segment against
+    account-balance cents: md5 folds, exact BIGINT leave-fold-out
+    sums, ONE division. Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import target_encode_loo
+    c = _t(spark, sf, "customer").select(
+        "c_custkey", "c_mktsegment",
+        F.round(F.col("c_acctbal") * 100.0).cast("long").alias("cents"))
+    return target_encode_loo(c, cat_col="c_mktsegment",
+                             target_col="cents", id_col="c_custkey",
+                             n_folds=5)
+
+
+_O267 = """
+WITH b AS (
+  SELECT c_mktsegment AS cat,
+         CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 2))
+              AS BIGINT) % 5 AS fold,
+         CAST(ROUND(c_acctbal * 100.0) AS BIGINT) AS y
+  FROM customer
+  WHERE c_mktsegment IS NOT NULL AND c_custkey IS NOT NULL
+    AND c_acctbal IS NOT NULL),
+cf AS (SELECT cat, CAST(fold AS INTEGER) AS fold,
+              COUNT(*)::BIGINT AS n, SUM(y)::BIGINT AS s
+       FROM b GROUP BY cat, fold),
+tot AS (SELECT cat, SUM(n)::BIGINT AS tn, SUM(s)::BIGINT AS ts
+        FROM cf GROUP BY cat)
+SELECT cf.cat, cf.fold, (tn - n)::BIGINT AS loo_n,
+       (ts - s)::BIGINT AS loo_sum,
+       CASE WHEN tn - n > 0
+            THEN (ts - s)::DOUBLE / (tn - n)::DOUBLE END AS encoding
+FROM cf JOIN tot USING (cat)
+"""
+
+
+def _q268_cronbach(spark, sf):
+    """Cronbach's alpha over the first three line quantities per
+    order (complete 3-line orders only): one aggregate pass, exact
+    BIGINT variance numerators with the n^2 denominators cancelled,
+    ONE IEEE expression. Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import cronbach_alpha
+    li = _t(spark, sf, "lineitem")
+    items = (li.where(F.col("l_linenumber") <= 3)
+             .groupBy("l_orderkey")
+             .agg(*[F.max(F.when(F.col("l_linenumber") == i,
+                                 F.col("l_quantity").cast("long")))
+                    .alias(f"q{i}") for i in (1, 2, 3)]))
+    return cronbach_alpha(items, item_cols=["q1", "q2", "q3"])
+
+
+_O268 = """
+WITH items AS (
+  SELECT l_orderkey,
+         MAX(CASE WHEN l_linenumber = 1
+                  THEN CAST(l_quantity AS BIGINT) END) AS q1,
+         MAX(CASE WHEN l_linenumber = 2
+                  THEN CAST(l_quantity AS BIGINT) END) AS q2,
+         MAX(CASE WHEN l_linenumber = 3
+                  THEN CAST(l_quantity AS BIGINT) END) AS q3
+  FROM lineitem WHERE l_linenumber <= 3 GROUP BY l_orderkey),
+c AS (SELECT q1, q2, q3, q1 + q2 + q3 AS t FROM items
+      WHERE q1 IS NOT NULL AND q2 IS NOT NULL AND q3 IS NOT NULL),
+g AS (
+  SELECT COUNT(*)::BIGINT AS n,
+         SUM(q1)::BIGINT AS s1, SUM(q1 * q1)::BIGINT AS ss1,
+         SUM(q2)::BIGINT AS s2, SUM(q2 * q2)::BIGINT AS ss2,
+         SUM(q3)::BIGINT AS s3, SUM(q3 * q3)::BIGINT AS ss3,
+         SUM(t)::BIGINT AS st, SUM(t * t)::BIGINT AS sst
+  FROM c),
+f AS (
+  SELECT CAST(3 AS INTEGER) AS k, n,
+         ((n * ss1 - s1 * s1) + (n * ss2 - s2 * s2)
+          + (n * ss3 - s3 * s3))::BIGINT AS item_var_num,
+         (n * sst - st * st)::BIGINT AS total_var_num
+  FROM g)
+SELECT k, n, item_var_num, total_var_num,
+       CASE WHEN n >= 2 AND total_var_num > 0
+            THEN 1.5 * (1.0 - item_var_num::DOUBLE
+                        / total_var_num::DOUBLE) END AS alpha
+FROM f
+"""
+
+
 def _q269_negative_samples(spark, sf):
     """Deterministic md5 negative sampling over the q97 customer ->
     supplier purchase graph (k=5 draws per customer into the 20-node
@@ -6053,6 +9721,143 @@ neg AS (
   WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.s = w.s AND e.d = w.d))
 SELECT s AS src, d AS neg_dst, CAST(MIN(j) AS INTEGER) AS try_idx
 FROM neg GROUP BY s, d
+"""
+
+
+def _q270_hashed_features(spark, sf):
+    """Hashing-trick signed count vectors over order priority/status
+    (32 buckets): md5 bucket + hex-parity sign, one (id, bucket)
+    hash-aggregate — the vocabulary-free categorical vectorizer.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import hashed_features
+    o = _t(spark, sf, "orders")
+    return hashed_features(o, id_col="o_orderkey",
+                           cat_cols=["o_orderpriority", "o_orderstatus"],
+                           n_buckets=32)
+
+
+_O270 = """
+WITH f AS (
+  SELECT o_orderkey AS id,
+         'o_orderpriority=' || o_orderpriority AS feat
+  FROM orders WHERE o_orderpriority IS NOT NULL
+  UNION ALL
+  SELECT o_orderkey, 'o_orderstatus=' || o_orderstatus
+  FROM orders WHERE o_orderstatus IS NOT NULL),
+h AS (
+  SELECT id,
+         CAST(((('0x' || substr(md5(feat), 1, 15))::BIGINT % 32) + 32)
+              % 32 AS INTEGER) AS bucket,
+         CASE WHEN ('0x' || substr(md5(feat), 16, 1))::BIGINT % 2 = 0
+              THEN 1 ELSE -1 END AS sgn
+  FROM f)
+SELECT id, bucket, SUM(sgn)::BIGINT AS feat_val
+FROM h GROUP BY id, bucket
+"""
+
+
+def _q271_cuped(spark, sf):
+    """CUPED variance-reduced readout over orders: arm =
+    o_orderpriority, metric = total-price cents, covariate = a
+    deterministic custkey stratum; exact BIGINT sums off one pass,
+    pooled theta ONE expression. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import cuped_adjusted_means
+    # kilodollar metric units and a 4-bit covariate keep every pooled
+    # cross-product below 2^53 through sf1 (the jarque_bera
+    # conversion-window rule) — cents overflowed BIGINT at sf0.1
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") / 1000.0).cast("long").alias("y"),
+        (F.col("o_custkey") % 16).cast("long").alias("x"))
+    return cuped_adjusted_means(o, metric_col="y", covariate_col="x",
+                                arm_col="o_orderpriority")
+
+
+_O271 = """
+WITH b AS (
+  SELECT o_orderpriority AS arm,
+         CAST(ROUND(o_totalprice / 1000.0) AS BIGINT) AS y,
+         CAST(o_custkey % 16 AS BIGINT) AS x
+  FROM orders
+  WHERE o_orderpriority IS NOT NULL AND o_totalprice IS NOT NULL
+    AND o_custkey IS NOT NULL),
+arms AS (
+  SELECT arm, COUNT(*)::BIGINT AS n, SUM(y)::BIGINT AS sy,
+         SUM(x)::BIGINT AS sx, SUM(x * y)::BIGINT AS sxy,
+         SUM(x * x)::BIGINT AS sxx
+  FROM b GROUP BY arm),
+p AS (SELECT SUM(n)::BIGINT AS pn, SUM(sy)::BIGINT AS psy,
+             SUM(sx)::BIGINT AS psx, SUM(sxy)::BIGINT AS psxy,
+             SUM(sxx)::BIGINT AS psxx
+      FROM arms)
+SELECT arm, n,
+       sy::DOUBLE / n::DOUBLE AS mean_y,
+       sx::DOUBLE / n::DOUBLE AS mean_x,
+       CASE WHEN pn * psxx - psx * psx > 0
+            THEN (pn * psxy - psx * psy)::DOUBLE
+                 / (pn * psxx - psx * psx)::DOUBLE END AS theta,
+       CASE WHEN pn * psxx - psx * psx > 0
+            THEN sy::DOUBLE / n::DOUBLE
+                 - ((pn * psxy - psx * psy)::DOUBLE
+                    / (pn * psxx - psx * psx)::DOUBLE)
+                   * (sx::DOUBLE / n::DOUBLE - psx::DOUBLE / pn::DOUBLE)
+            ELSE sy::DOUBLE / n::DOUBLE END AS adjusted_mean
+FROM arms, p
+"""
+
+
+def _q272_diff_in_diff(spark, sf):
+    """Difference-in-differences over orders: treated = even
+    customers, post = orderdate >= 1995-01-01, metric = total-price
+    cents; four exact BIGINT cells off one aggregate, DID one fixed
+    expression. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import diff_in_diff
+    o = _t(spark, sf, "orders").select(
+        F.when(F.col("o_custkey") % 2 == 0, F.lit("t"))
+        .otherwise(F.lit("c")).alias("grp"),
+        F.when(F.col("o_orderdate") >= F.lit("1995-01-01"),
+               F.lit("post")).otherwise(F.lit("pre")).alias("period"),
+        F.round(F.col("o_totalprice") * 100.0).cast("long").alias("y"))
+    return diff_in_diff(o, metric_col="y", group_col="grp",
+                        period_col="period", treated_value="t",
+                        post_value="post")
+
+
+_O272 = """
+WITH b AS (
+  SELECT CASE WHEN o_custkey % 2 = 0 THEN 1 ELSE 0 END AS t,
+         CASE WHEN o_orderdate >= DATE '1995-01-01'
+              THEN 1 ELSE 0 END AS p,
+         CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS y
+  FROM orders
+  WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
+    AND o_totalprice IS NOT NULL),
+g AS (
+  SELECT SUM(CASE WHEN t = 1 AND p = 1 THEN 1 ELSE 0 END)::BIGINT AS n_tp,
+         SUM(CASE WHEN t = 1 AND p = 1 THEN y ELSE 0 END)::BIGINT AS stp,
+         SUM(CASE WHEN t = 1 AND p = 0 THEN 1 ELSE 0 END)::BIGINT AS n_tr,
+         SUM(CASE WHEN t = 1 AND p = 0 THEN y ELSE 0 END)::BIGINT AS str_,
+         SUM(CASE WHEN t = 0 AND p = 1 THEN 1 ELSE 0 END)::BIGINT AS n_cp,
+         SUM(CASE WHEN t = 0 AND p = 1 THEN y ELSE 0 END)::BIGINT AS scp,
+         SUM(CASE WHEN t = 0 AND p = 0 THEN 1 ELSE 0 END)::BIGINT AS n_cr,
+         SUM(CASE WHEN t = 0 AND p = 0 THEN y ELSE 0 END)::BIGINT AS scr
+  FROM b)
+SELECT n_tp, n_tr, n_cp, n_cr,
+       CASE WHEN n_tp > 0 THEN stp::DOUBLE / n_tp::DOUBLE END
+         AS mean_treated_post,
+       CASE WHEN n_tr > 0 THEN str_::DOUBLE / n_tr::DOUBLE END
+         AS mean_treated_pre,
+       CASE WHEN n_cp > 0 THEN scp::DOUBLE / n_cp::DOUBLE END
+         AS mean_control_post,
+       CASE WHEN n_cr > 0 THEN scr::DOUBLE / n_cr::DOUBLE END
+         AS mean_control_pre,
+       CASE WHEN n_tp > 0 AND n_tr > 0 AND n_cp > 0 AND n_cr > 0
+            THEN (stp::DOUBLE / n_tp::DOUBLE - str_::DOUBLE / n_tr::DOUBLE)
+                 - (scp::DOUBLE / n_cp::DOUBLE
+                    - scr::DOUBLE / n_cr::DOUBLE) END AS did
+FROM g
 """
 
 
@@ -6167,6 +9972,45 @@ FROM v
 """
 
 
+def _q276_theil_sen(spark, sf):
+    """Theil-Sen robust slope per user over event value cents vs
+    epoch-micros time (exact long pair differences, one IEEE
+    division per pair, lower-median selection by sort position) —
+    mann_kendall's (q255) companion magnitude. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import theil_sen
+    ev = _t(spark, sf, "events").select(
+        "user_id",
+        F.expr("timestampdiff(MICROSECOND, "
+               "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)").alias("t_us"),
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return theil_sen(ev, value_col="cents", t_col="t_us",
+                     group_cols=["user_id"])
+
+
+_O276 = """
+WITH b AS (
+  SELECT user_id AS g, epoch_us(ts) AS t,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
+p AS (
+  SELECT a.g, (b2.x - a.x)::DOUBLE / (b2.t - a.t)::DOUBLE AS s
+  FROM b a JOIN b b2 ON a.g = b2.g AND a.t < b2.t),
+r AS (
+  SELECT g, s,
+         ROW_NUMBER() OVER (PARTITION BY g ORDER BY s ASC) AS rn,
+         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS m
+  FROM p),
+med AS (SELECT g, m, s FROM r
+        WHERE rn = CAST(FLOOR((m + 1) / 2.0) AS BIGINT)),
+allg AS (SELECT DISTINCT g FROM b)
+SELECT allg.g AS user_id,
+       COALESCE(med.m, 0)::BIGINT AS n_pairs, med.s AS slope
+FROM allg LEFT JOIN med ON allg.g = med.g
+"""
+
+
 def _q288_spherical_area(spark, sf):
     """Spherical polygon area (m²) of the nation diamonds — the
     geodesic correction to the planar shoelace; micro-steradian
@@ -6216,6 +10060,82 @@ SELECT poly_id, 5 AS n_vertices,
        CAST(FLOOR(ABS(s)::DOUBLE / 1000000000000.0 / 2.0
                   * 6371000.0 * 6371000.0 + 0.5) AS BIGINT) AS area_m2
 FROM acc
+"""
+
+
+def _q286_hodges_lehmann(spark, sf):
+    """Hodges-Lehmann robust location of event value cents per user
+    (lower median of exact-integer Walsh averages, selection by sort
+    position). Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import hodges_lehmann
+    ev = _t(spark, sf, "events").select(
+        "user_id", "ts", "event_id",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return hodges_lehmann(ev, value_col="cents",
+                          order_cols=["ts", "event_id"],
+                          group_cols=["user_id"])
+
+
+_O286 = """
+WITH b AS (
+  SELECT user_id AS g, ts, event_id,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+p AS (
+  SELECT a.g, (a.x + b2.x)::DOUBLE / 2.0 AS w
+  FROM b a JOIN b b2
+    ON a.g = b2.g AND (a.ts, a.event_id) <= (b2.ts, b2.event_id)),
+r AS (SELECT g, w,
+             ROW_NUMBER() OVER (PARTITION BY g ORDER BY w ASC) AS rn,
+             CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS m
+      FROM p)
+SELECT g AS user_id, m AS n_pairs, w AS hl_estimate
+FROM r WHERE rn = CAST(FLOOR((m + 1) / 2.0) AS BIGINT)
+"""
+
+
+def _q287_siegel_slope(spark, sf):
+    """Siegel repeated-medians slope per user (50% breakdown): the
+    per-point lower-median of pairwise slopes, then the lower median
+    of those — same exact-integer pair machinery as q276. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import siegel_slope
+    ev = _t(spark, sf, "events").select(
+        "user_id",
+        F.expr("timestampdiff(MICROSECOND, "
+               "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)").alias("t_us"),
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return siegel_slope(ev, value_col="cents", t_col="t_us",
+                        group_cols=["user_id"])
+
+
+_O287 = """
+WITH b AS (
+  SELECT user_id AS g, epoch_us(ts) AS t,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
+p AS (
+  SELECT a.g, a.t AS ti, a.x AS xi,
+         (b2.x - a.x)::DOUBLE / (b2.t - a.t)::DOUBLE AS s
+  FROM b a JOIN b b2 ON a.g = b2.g AND a.t != b2.t),
+r1 AS (SELECT g, ti, xi, s,
+              ROW_NUMBER() OVER (PARTITION BY g, ti, xi
+                                 ORDER BY s ASC) AS rn,
+              CAST(COUNT(*) OVER (PARTITION BY g, ti, xi) AS BIGINT)
+                AS m
+       FROM p),
+mi AS (SELECT g, s AS mi FROM r1
+       WHERE rn = CAST(FLOOR((m + 1) / 2.0) AS BIGINT)),
+r2 AS (SELECT g, mi,
+              ROW_NUMBER() OVER (PARTITION BY g ORDER BY mi ASC) AS rn,
+              CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS np
+       FROM mi)
+SELECT g AS user_id, np AS n_points, mi AS slope
+FROM r2 WHERE rn = CAST(FLOOR((np + 1) / 2.0) AS BIGINT)
 """
 
 
@@ -6457,6 +10377,129 @@ FROM hab JOIN hba ON hab.ia = hba.ia AND hab.ib = hba.ib
 """
 
 
+def _q282_bootstrap_ci(spark, sf):
+    """Derandomized percentile bootstrap CI for the mean event value
+    (cents): md5(seed:id:b) 52-bit uniforms -> Poisson(1) weights,
+    exact BIGINT resample sums, order-statistic CI bounds. Round-5
+    post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import bootstrap_ci
+    ev = _t(spark, sf, "events").select(
+        "event_id",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return bootstrap_ci(ev, value_col="cents", id_col="event_id",
+                        n_resamples=100, alpha_permille=50,
+                        seed="boot")
+
+
+def _poisson1_case_sql(u_expr: str) -> str:
+    from kml2geojson_spark.relational import POISSON1_CDF
+    cases = " ".join(
+        f"WHEN {u_expr} < {c!r} THEN {k}"
+        for k, c in enumerate(POISSON1_CDF))
+    return f"CASE {cases} ELSE 7 END"
+
+
+_U52_SQL = ("(('0x' || substr(md5({s}), 1, 13))::BIGINT::DOUBLE"
+            " / 4503599627370496.0)")
+
+
+def _o282() -> str:
+    u = _U52_SQL.format(
+        s="'boot:' || CAST(event_id AS VARCHAR) || ':' "
+          "|| CAST(b AS VARCHAR)")
+    return f"""
+WITH base AS (
+  SELECT event_id, CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events WHERE value IS NOT NULL AND event_id IS NOT NULL),
+obs AS (SELECT COUNT(*)::BIGINT AS n,
+               SUM(x)::DOUBLE / COUNT(*)::DOUBLE AS observed_mean
+        FROM base),
+rs AS (SELECT event_id, x, b
+       FROM base, generate_series(1, 100) AS t(b)),
+wt AS (SELECT b, x, CAST({_poisson1_case_sql(u)} AS BIGINT) AS w
+       FROM rs),
+means AS (
+  SELECT b, SUM(w * x)::DOUBLE / SUM(w)::DOUBLE AS m
+  FROM wt GROUP BY b HAVING SUM(w) > 0),
+ranked AS (
+  SELECT m, ROW_NUMBER() OVER (ORDER BY m ASC) AS rn,
+         CAST(COUNT(*) OVER () AS BIGINT) AS beff
+  FROM means),
+half AS (SELECT beff, CAST(CEIL(beff * 50 / 2000.0) AS BIGINT) AS h
+         FROM ranked LIMIT 1),
+lo AS (SELECT r.beff AS b_eff, r.m AS lo_mean
+       FROM ranked r JOIN half ON r.rn = half.h),
+hi AS (SELECT r.m AS hi_mean
+       FROM ranked r JOIN half ON r.rn = half.beff - half.h + 1)
+SELECT obs.n, obs.observed_mean, lo.b_eff, lo.lo_mean, hi.hi_mean
+FROM obs CROSS JOIN lo CROSS JOIN hi
+"""
+
+
+def _q283_permutation_test(spark, sf):
+    """Derandomized binomial-relabeling permutation test: click vs
+    view mean event cents; md5(seed:id:r) uniforms relabel each row
+    per round, exact integer sums per pseudo-group, add-one p.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import permutation_test
+    ev = _t(spark, sf, "events").select(
+        "event_id", "event_type",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return permutation_test(ev, value_col="cents",
+                            group_col="event_type", group_a="click",
+                            group_b="view", id_col="event_id",
+                            n_rounds=100, seed="perm")
+
+
+def _o283() -> str:
+    u = _U52_SQL.format(
+        s="'perm:' || CAST(event_id AS VARCHAR) || ':' "
+          "|| CAST(r AS VARCHAR)")
+    return f"""
+WITH base AS (
+  SELECT event_id, event_type = 'click' AS is_a,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE value IS NOT NULL AND event_id IS NOT NULL
+    AND event_type IN ('click', 'view')),
+obs AS (
+  SELECT SUM(CASE WHEN is_a THEN 1 ELSE 0 END)::BIGINT AS n_a,
+         SUM(CASE WHEN is_a THEN 0 ELSE 1 END)::BIGINT AS n_b,
+         SUM(CASE WHEN is_a THEN x END)::DOUBLE
+           / SUM(CASE WHEN is_a THEN 1 ELSE 0 END)::DOUBLE
+         - SUM(CASE WHEN NOT is_a THEN x END)::DOUBLE
+           / SUM(CASE WHEN is_a THEN 0 ELSE 1 END)::DOUBLE
+           AS observed_diff,
+         SUM(CASE WHEN is_a THEN 1 ELSE 0 END)::DOUBLE
+           / COUNT(*)::DOUBLE AS pa
+  FROM base),
+rs AS (SELECT event_id, x, r
+       FROM base, generate_series(1, 100) AS t(r)),
+lab AS (SELECT r, x, ({u}) < obs.pa AS to_a FROM rs CROSS JOIN obs),
+rounds AS (
+  SELECT r,
+         SUM(CASE WHEN to_a THEN 1 ELSE 0 END)::BIGINT AS na,
+         SUM(CASE WHEN to_a THEN 0 ELSE 1 END)::BIGINT AS nb,
+         SUM(CASE WHEN to_a THEN x END) AS sa,
+         SUM(CASE WHEN NOT to_a THEN x END) AS sb
+  FROM lab GROUP BY r HAVING SUM(CASE WHEN to_a THEN 1 ELSE 0 END) > 0
+       AND SUM(CASE WHEN to_a THEN 0 ELSE 1 END) > 0),
+ds AS (SELECT sa::DOUBLE / na::DOUBLE - sb::DOUBLE / nb::DOUBLE AS d
+       FROM rounds),
+tally AS (
+  SELECT COUNT(*)::BIGINT AS r_eff,
+         SUM(CASE WHEN ABS(d) >= ABS(obs.observed_diff)
+                  THEN 1 ELSE 0 END)::BIGINT AS n_extreme
+  FROM ds CROSS JOIN obs
+  GROUP BY obs.observed_diff)
+SELECT obs.n_a, obs.n_b, obs.observed_diff, tally.r_eff,
+       tally.n_extreme,
+       (1 + tally.n_extreme)::DOUBLE / (tally.r_eff + 1)::DOUBLE
+         AS p_value
+FROM obs CROSS JOIN tally
+"""
+
+
 _AHASH_SQL_BODY = """
 chunks AS (
   SELECT doc_id, media_ref, i,
@@ -6562,6 +10605,214 @@ FROM hashes a JOIN hashes b
  AND (a.b0 = b.b0 OR a.b1 = b.b1 OR a.b2 = b.b2 OR a.b3 = b.b3)
 WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
       + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3
+"""
+
+
+def _q289_pettitt(spark, sf):
+    """Pettitt rank changepoint per user over event value cents —
+    rank-identity O(n log n) form (no pair join), exact BIGINT U_t,
+    micro-quantized significance. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import pettitt_test
+    ev = _t(spark, sf, "events").select(
+        "user_id", "ts", "event_id",
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"))
+    return pettitt_test(ev, value_col="cents",
+                        order_cols=["ts", "event_id"],
+                        group_cols=["user_id"])
+
+
+_O289 = """
+WITH b AS (
+  SELECT user_id AS g, ts, event_id,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+r AS (
+  SELECT g, ts, event_id, x,
+         RANK() OVER (PARTITION BY g ORDER BY x ASC) AS rlo,
+         RANK() OVER (PARTITION BY g ORDER BY x DESC) AS rrev,
+         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM b),
+u AS (
+  SELECT g, n,
+         CAST(SUM(rlo + (n + 1 - rrev) - 1 - n) OVER (
+           PARTITION BY g ORDER BY ts ASC, event_id ASC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS BIGINT) AS u,
+         CAST(ROW_NUMBER() OVER (
+           PARTITION BY g ORDER BY ts ASC, event_id ASC)
+           AS BIGINT) AS t
+  FROM r),
+c AS (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY g ORDER BY ABS(u) DESC, t ASC) AS rn
+  FROM u WHERE t < n)
+SELECT g AS user_id, n, ABS(u) AS k_stat, t AS t_index, u AS u_at_t,
+       CAST(FLOOR(LEAST(
+         2.0 * EXP(-6.0 * (ABS(u)::DOUBLE) * (ABS(u)::DOUBLE)
+                   / ((n::DOUBLE) * (n::DOUBLE) * (n::DOUBLE)
+                      + (n::DOUBLE) * (n::DOUBLE))), 1.0)
+         * 1000000.0 + 0.5) AS BIGINT) AS p_micro
+FROM c WHERE rn = 1
+"""
+
+
+def _q290_grubbs(spark, sf):
+    """Grubbs extreme-outlier statistic per order priority over total
+    price cents — exact HUGEINT/DECIMAL(38) moment sums, one
+    correctly-rounded IEEE tree for sd and G, smallest-key
+    tie-break. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import grubbs_test
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority", "o_orderkey",
+        F.round(F.col("o_totalprice") * 100.0).cast("long")
+        .alias("cents"))
+    return grubbs_test(o, value_col="cents", id_col="o_orderkey",
+                       group_cols=["o_orderpriority"])
+
+
+_O290 = """
+WITH b AS (
+  SELECT o_orderpriority AS g, o_orderkey AS id,
+         CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS x
+  FROM orders
+  WHERE o_totalprice IS NOT NULL AND o_orderkey IS NOT NULL
+    AND o_orderpriority IS NOT NULL),
+m AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         SUM(CAST(x AS HUGEINT)) AS s1,
+         SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS s2
+  FROM b GROUP BY g),
+j AS (
+  SELECT b.g, b.id, b.x, m.n, m.s1, m.s2,
+         ABS((b.x::DOUBLE) - ((m.s1::DOUBLE) / (m.n::DOUBLE))) AS dev
+  FROM b JOIN m USING (g)),
+p AS (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY g ORDER BY dev DESC, id ASC) AS rn
+  FROM j)
+SELECT g AS o_orderpriority, n, id AS outlier_id,
+       x AS outlier_value, dev AS max_dev,
+       CASE WHEN n >= 3 AND (CAST(n AS HUGEINT) * s2 - s1 * s1) > 0
+            THEN dev / SQRT(((CAST(n AS HUGEINT) * s2 - s1 * s1)::DOUBLE)
+                            / ((n::DOUBLE) * ((n::DOUBLE) - 1.0)))
+       END AS g_stat
+FROM p WHERE rn = 1
+"""
+
+
+def _q291_jarque_bera(spark, sf):
+    """Jarque-Bera normality screen per event type over WHOLE-unit
+    event values (not cents: whole units keep the exact power sums
+    below 2^53, inside the window where HUGEINT->DOUBLE conversion
+    is bit-identical across engines — the documented jarque_bera
+    caveat) — one hash-aggregate of exact DECIMAL(38)/HUGEINT sums,
+    one shared IEEE tree for skew/kurtosis/JB. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import jarque_bera
+    ev = _t(spark, sf, "events").select(
+        "event_type",
+        F.round(F.col("value")).cast("long").alias("units"))
+    return jarque_bera(ev, value_col="units",
+                       group_cols=["event_type"])
+
+
+def _o291() -> str:
+    nd = "(n::DOUBLE)"
+    mu = f"((s1::DOUBLE) / {nd})"
+    m2 = f"((s2::DOUBLE) / {nd} - {mu} * {mu})"
+    m3 = (f"((s3::DOUBLE) / {nd} - 3.0 * {mu} * ((s2::DOUBLE) / {nd})"
+          f" + 2.0 * {mu} * {mu} * {mu})")
+    m4 = (f"((s4::DOUBLE) / {nd} - 4.0 * {mu} * ((s3::DOUBLE) / {nd})"
+          f" + 6.0 * {mu} * {mu} * ((s2::DOUBLE) / {nd})"
+          f" - 3.0 * {mu} * {mu} * {mu} * {mu})")
+    skew = f"({m3} / ({m2} * SQRT({m2})))"
+    exk = f"({m4} / ({m2} * {m2}) - 3.0)"
+    jb = f"({nd} / 6.0 * ({skew} * {skew} + {exk} * {exk} / 4.0))"
+    ok = f"(n >= 4 AND {m2} > 0)"
+    return f"""
+WITH b AS (
+  SELECT event_type AS g,
+         CAST(ROUND(value) AS BIGINT) AS x
+  FROM events
+  WHERE value IS NOT NULL AND event_type IS NOT NULL),
+m AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         SUM(CAST(x AS HUGEINT)) AS s1,
+         SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS s2,
+         SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)
+             * CAST(x AS HUGEINT)) AS s3,
+         SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)
+             * CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS s4
+  FROM b GROUP BY g)
+SELECT g AS event_type, n,
+       CASE WHEN {ok} THEN {skew} END AS skewness,
+       CASE WHEN {ok} THEN {exk} END AS ex_kurtosis,
+       CASE WHEN {ok} THEN {jb} END AS jb_stat
+FROM m
+"""
+
+
+def _q292_mcnemar(spark, sf):
+    """McNemar paired flip test: per user-cohort, did users with a
+    purchase in the first half of the month keep purchasing in the
+    second half? Exact discordant counts, continuity-corrected chi2,
+    micro-quantized p. Round-5 post-pin registration: in-repo oracle
+    sweep only."""
+    from kml2geojson_spark.relational import mcnemar_test
+    ev = _t(spark, sf, "events")
+    cut = F.lit("2024-01-16 00:00:00").cast("timestamp")
+    is_p = (F.col("event_type") == "purchase")
+    flags = (ev.where(F.col("user_id").isNotNull()
+                      & F.col("ts").isNotNull())
+             .groupBy("user_id")
+             .agg(F.max(F.when(is_p & (F.col("ts") < cut), 1)
+                        .otherwise(0)).alias("before"),
+                  F.max(F.when(is_p & (F.col("ts") >= cut), 1)
+                        .otherwise(0)).alias("after"))
+             .withColumn("cohort", F.col("user_id") % 4))
+    return mcnemar_test(flags, before_col="before", after_col="after",
+                        group_cols=["cohort"])
+
+
+def _o292() -> str:
+    from kml2geojson_spark.relational import normal_two_sided_p_sql
+    p_expr = normal_two_sided_p_sql("SQRT(chi2)")
+    return f"""
+WITH flags AS (
+  SELECT user_id,
+         MAX(CASE WHEN event_type = 'purchase'
+                   AND ts < TIMESTAMP '2024-01-16 00:00:00'
+                  THEN 1 ELSE 0 END) AS before,
+         MAX(CASE WHEN event_type = 'purchase'
+                   AND ts >= TIMESTAMP '2024-01-16 00:00:00'
+                  THEN 1 ELSE 0 END) AS after
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+  GROUP BY user_id),
+agg AS (
+  SELECT user_id % 4 AS cohort,
+         CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         CAST(SUM(CASE WHEN before = 1 AND after = 0
+                       THEN 1 ELSE 0 END) AS BIGINT) AS b,
+         CAST(SUM(CASE WHEN before = 0 AND after = 1
+                       THEN 1 ELSE 0 END) AS BIGINT) AS c
+  FROM flags GROUP BY user_id % 4),
+st AS (
+  SELECT *,
+         ((GREATEST(ABS(b - c) - 1, 0))::DOUBLE
+          * (GREATEST(ABS(b - c) - 1, 0))::DOUBLE)
+         / ((b + c)::DOUBLE) AS chi2
+  FROM agg)
+SELECT cohort, n_pairs, b, c,
+       CASE WHEN b + c > 0 THEN chi2 END AS chi2,
+       CASE WHEN b + c > 0 THEN
+         CAST(FLOOR(LEAST({p_expr}, 1.0) * 1000000.0 + 0.5)
+              AS BIGINT) END AS p_micro
+FROM st
 """
 
 
@@ -6686,6 +10937,261 @@ GROUP BY c.hq + o.dq, c.hr + o.dr
 """
 
 
+def _q301_cochran_armitage(spark, sf):
+    """Cochran-Armitage purchase-rate trend over week-of-month dose
+    per small user cohort (cohorts sized so the exact B statistic
+    stays inside the 2^53 cross-engine conversion window — the
+    documented cochran_armitage caveat). Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import cochran_armitage
+    ev = _t(spark, sf, "events")
+    dd = F.datediff(F.col("ts").cast("date"),
+                    F.to_date(F.lit("2024-01-01")))
+    base = (ev.where(F.col("user_id").isNotNull()
+                     & F.col("ts").isNotNull()
+                     & F.col("event_type").isNotNull())
+            .select((F.col("user_id") % 40).alias("cohort"),
+                    F.floor(dd.cast("double") / F.lit(7.0))
+                    .cast("long").alias("week"),
+                    F.when(F.col("event_type") == "purchase", 1)
+                    .otherwise(0).cast("long").alias("purchased")))
+    out = cochran_armitage(base, dose_col="week",
+                           label_col="purchased",
+                           group_cols=["cohort"])
+    return out.select("cohort", "n", "cases",
+                      F.col("a_stat").cast("long").alias("a_stat"),
+                      F.col("b_stat").cast("long").alias("b_stat"),
+                      "z")
+
+
+_O301 = """
+WITH b AS (
+  SELECT user_id % 40 AS g,
+         CAST(FLOOR(
+           datediff('day', DATE '2024-01-01', CAST(ts AS DATE))::DOUBLE
+           / 7.0) AS BIGINT) AS s,
+         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_type IS NOT NULL),
+per AS (
+  SELECT g, s, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS r
+  FROM b GROUP BY g, s),
+agg AS (
+  SELECT g, CAST(SUM(n) AS BIGINT) AS n,
+         CAST(SUM(r) AS BIGINT) AS cases,
+         COUNT(DISTINCT s) AS k,
+         SUM(CAST(s AS HUGEINT) * CAST(r AS HUGEINT)) AS sr,
+         SUM(CAST(s AS HUGEINT) * CAST(n AS HUGEINT)) AS sn,
+         SUM(CAST(s AS HUGEINT) * CAST(s AS HUGEINT)
+             * CAST(n AS HUGEINT)) AS ssn
+  FROM per GROUP BY g),
+st AS (
+  SELECT g, n, cases, k,
+         CAST(n AS HUGEINT) * sr - CAST(cases AS HUGEINT) * sn AS a,
+         CAST(cases AS HUGEINT) * (CAST(n AS HUGEINT)
+                                   - CAST(cases AS HUGEINT))
+         * (CAST(n AS HUGEINT) * ssn - sn * sn) AS bb
+  FROM agg)
+SELECT g AS cohort, n, cases,
+       CAST(a AS BIGINT) AS a_stat, CAST(bb AS BIGINT) AS b_stat,
+       CASE WHEN bb > 0 AND k >= 2 THEN
+         (a::DOUBLE) / SQRT((bb::DOUBLE) / (n::DOUBLE))
+       END AS z
+FROM st
+"""
+
+
+def _q302_durbin_watson(spark, sf):
+    """Durbin-Watson residual autocorrelation of each user's OLS
+    spend trend over the observation index (row number per user —
+    unique, integer, overflow-safe): exact long OLS sums, residuals
+    quantized once to milli-units. Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import durbin_watson
+    ev = _t(spark, sf, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc())
+    base = (ev.where(F.col("user_id").isNotNull()
+                     & F.col("ts").isNotNull()
+                     & F.col("event_id").isNotNull()
+                     & F.col("value").isNotNull())
+            .select("user_id",
+                    F.round(F.col("value")).cast("long").alias("units"),
+                    F.row_number().over(w).cast("long").alias("t")))
+    return durbin_watson(base, y_col="units", t_col="t",
+                         group_cols=["user_id"])
+
+
+_O302 = """
+WITH b AS (
+  SELECT user_id AS g, ts, event_id,
+         CAST(ROUND(value) AS BIGINT) AS y
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL),
+idx AS (
+  SELECT g, y,
+         CAST(ROW_NUMBER() OVER (
+           PARTITION BY g ORDER BY ts ASC, event_id ASC)
+           AS BIGINT) AS t
+  FROM b),
+mom AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(t) AS BIGINT) AS st, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(t * t) AS BIGINT) AS stt,
+         CAST(SUM(t * y) AS BIGINT) AS sty
+  FROM idx GROUP BY g),
+fit AS (
+  SELECT g, n, st, sy,
+         CASE WHEN (n * stt - st * st) > 0 THEN
+           ((n * sty - st * sy)::DOUBLE)
+           / ((n * stt - st * st)::DOUBLE) END AS b,
+         CASE WHEN (n * stt - st * st) > 0 THEN
+           ((sy::DOUBLE)
+            - (((n * sty - st * sy)::DOUBLE)
+               / ((n * stt - st * st)::DOUBLE)) * (st::DOUBLE))
+           / (n::DOUBLE) END AS a
+  FROM mom),
+res AS (
+  SELECT i.g, i.t, f.n, f.a, f.b,
+         CAST(FLOOR(((i.y::DOUBLE)
+                     - (f.a + f.b * (i.t::DOUBLE))) * 1000.0 + 0.5)
+              AS BIGINT) AS em
+  FROM idx i JOIN fit f USING (g)),
+lagd AS (
+  SELECT g, n, a, b, em,
+         em - LAG(em, 1) OVER (PARTITION BY g ORDER BY t ASC) AS dm
+  FROM res),
+fin AS (
+  SELECT g, MAX(n) AS n, MAX(b) AS slope, MAX(a) AS intercept,
+         CAST(SUM(dm * dm) AS BIGINT) AS sd2,
+         CAST(SUM(em * em) AS BIGINT) AS se2
+  FROM lagd GROUP BY g)
+SELECT g AS user_id, n, slope, intercept,
+       CASE WHEN n >= 3 AND slope IS NOT NULL AND se2 > 0 THEN
+         (sd2::DOUBLE) / (se2::DOUBLE) END AS dw
+FROM fin
+"""
+
+
+def _q303_cliffs_delta(spark, sf):
+    """Cliff's delta effect size of purchase vs view spend per user
+    cohort — rank-identity form (no pair join), exact BIGINT
+    numerator, banded magnitude label. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import cliffs_delta
+    ev = _t(spark, sf, "events")
+    base = (ev.where(F.col("event_type").isin("purchase", "view")
+                     & F.col("user_id").isNotNull()
+                     & F.col("value").isNotNull())
+            .select((F.col("user_id") % 8).alias("cohort"),
+                    F.round(F.col("value")).cast("long").alias("units"),
+                    F.when(F.col("event_type") == "purchase", 1)
+                    .otherwise(0).cast("long").alias("is_a")))
+    return cliffs_delta(base, value_col="units", flag_col="is_a",
+                        group_cols=["cohort"])
+
+
+_O303 = """
+WITH b AS (
+  SELECT user_id % 8 AS g, CAST(ROUND(value) AS BIGINT) AS x,
+         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS f
+  FROM events
+  WHERE event_type IN ('purchase', 'view')
+    AND user_id IS NOT NULL AND value IS NOT NULL),
+r AS (
+  SELECT g, f,
+         CAST(RANK() OVER (PARTITION BY g ORDER BY x ASC)
+              AS BIGINT) AS rlo,
+         CAST(RANK() OVER (PARTITION BY g ORDER BY x DESC)
+              AS BIGINT) AS rrev,
+         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM b),
+agg AS (
+  SELECT g,
+         CAST(SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_a,
+         CAST(SUM(CASE WHEN f = 0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_b,
+         CAST(SUM(CASE WHEN f = 1 THEN rlo + (n + 1 - rrev)
+                  ELSE 0 END) AS BIGINT) AS r2a
+  FROM r GROUP BY g),
+st AS (
+  SELECT g, n_a, n_b,
+         r2a - n_a * (n_a + 1) - n_a * n_b AS num
+  FROM agg),
+fin AS (
+  SELECT g, n_a, n_b, num,
+         CASE WHEN n_a > 0 AND n_b > 0 THEN
+           (num::DOUBLE) / ((n_a * n_b)::DOUBLE) END AS delta
+  FROM st)
+SELECT g AS cohort, n_a, n_b,
+       CASE WHEN n_a > 0 AND n_b > 0 THEN num END AS delta_num,
+       delta,
+       CASE WHEN n_a > 0 AND n_b > 0 THEN
+         CASE WHEN ABS(delta) < 0.147 THEN 'negligible'
+              WHEN ABS(delta) < 0.33 THEN 'small'
+              WHEN ABS(delta) < 0.474 THEN 'medium'
+              ELSE 'large' END
+       END AS magnitude
+FROM fin
+"""
+
+
+def _q304_boxplot(spark, sf):
+    """Tukey boxplot five-number summary + fence outlier counts per
+    order priority over total price cents (exact rank-selected
+    quartiles). Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import boxplot_stats
+    o = _t(spark, sf, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100.0).cast("long")
+        .alias("cents"))
+    return boxplot_stats(o, value_col="cents",
+                         group_cols=["o_orderpriority"])
+
+
+_O304 = """
+WITH b AS (
+  SELECT o_orderpriority AS g,
+         CAST(ROUND(o_totalprice * 100.0) AS BIGINT) AS x
+  FROM orders
+  WHERE o_totalprice IS NOT NULL AND o_orderpriority IS NOT NULL),
+st AS (
+  SELECT g, x,
+         CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY x ASC)
+              AS BIGINT) AS rn,
+         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM b),
+q AS (
+  SELECT g, MAX(n) AS n,
+         MAX(CASE WHEN rn = CAST(CEIL((n::DOUBLE) / 4.0) AS BIGINT)
+                  THEN x END) AS q1,
+         MAX(CASE WHEN rn = CAST(FLOOR(((n + 1)::DOUBLE) / 2.0)
+                                 AS BIGINT) THEN x END) AS median,
+         MAX(CASE WHEN rn = CAST(CEIL(3.0 * (n::DOUBLE) / 4.0)
+                                 AS BIGINT) THEN x END) AS q3
+  FROM st GROUP BY g),
+qq AS (
+  SELECT g, n, q1, median, q3, q3 - q1 AS iqr,
+         (q1::DOUBLE) - 1.5 * ((q3 - q1)::DOUBLE) AS lo_fence,
+         (q3::DOUBLE) + 1.5 * ((q3 - q1)::DOUBLE) AS hi_fence
+  FROM q)
+SELECT qq.g AS o_orderpriority, qq.n, qq.q1, qq.median, qq.q3,
+       qq.iqr, qq.lo_fence, qq.hi_fence,
+       CAST(SUM(CASE WHEN (b.x::DOUBLE) < qq.lo_fence
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
+       CAST(SUM(CASE WHEN (b.x::DOUBLE) > qq.hi_fence
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_high
+FROM b JOIN qq USING (g)
+GROUP BY qq.g, qq.n, qq.q1, qq.median, qq.q3, qq.iqr, qq.lo_fence,
+         qq.hi_fence
+"""
+
+
 def _q305_fd_violations(spark, sf):
     """Functional-dependency audit: users whose events span more than
     one event type (user_id -> event_type deliberately violated by
@@ -6770,6 +11276,129 @@ FROM agg
 """
 
 
+def _q308_mood_median(spark, sf):
+    """Mood's k-sample median test over whole-unit event values per
+    event type — global lower median via the distinct-value
+    histogram, micro-quantized chi2 contributions summed exactly.
+    Round-5 post-pin registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import mood_median_test
+    ev = _t(spark, sf, "events").select(
+        "event_type",
+        F.round(F.col("value")).cast("long").alias("units"))
+    return mood_median_test(ev, value_col="units",
+                            group_col="event_type")
+
+
+_O308 = """
+WITH b AS (
+  SELECT event_type AS g, CAST(ROUND(value) AS BIGINT) AS x
+  FROM events
+  WHERE value IS NOT NULL AND event_type IS NOT NULL),
+hist AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY x),
+cum AS (
+  SELECT x,
+         CAST(SUM(c) OVER (ORDER BY x ASC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS BIGINT) AS cum,
+         CAST(SUM(c) OVER () AS BIGINT) AS tot
+  FROM hist),
+med AS (
+  SELECT MIN(x) AS med, MAX(tot) AS nt
+  FROM cum
+  WHERE cum >= CAST(FLOOR(((tot + 1)::DOUBLE) / 2.0) AS BIGINT)),
+per AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(CASE WHEN b.x > m.med THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_above,
+         MAX(m.nt) AS nt
+  FROM b, med m GROUP BY g),
+tot2 AS (
+  SELECT g, n, n_above, nt,
+         CAST(SUM(n_above) OVER () AS BIGINT) AS a_tot,
+         CAST(COUNT(*) OVER () AS BIGINT) AS k
+  FROM per),
+ct AS (
+  SELECT g, n, n_above, nt, a_tot, k,
+         CASE WHEN a_tot > 0 AND a_tot < nt THEN
+           CAST(FLOOR((
+             ((n_above::DOUBLE) - (n::DOUBLE) * (a_tot::DOUBLE)
+              / (nt::DOUBLE))
+             * ((n_above::DOUBLE) - (n::DOUBLE) * (a_tot::DOUBLE)
+                / (nt::DOUBLE))
+             / ((n::DOUBLE) * (a_tot::DOUBLE) / (nt::DOUBLE))
+             + (((n - n_above)::DOUBLE) - (n::DOUBLE)
+                * ((nt - a_tot)::DOUBLE) / (nt::DOUBLE))
+             * (((n - n_above)::DOUBLE) - (n::DOUBLE)
+                * ((nt - a_tot)::DOUBLE) / (nt::DOUBLE))
+             / ((n::DOUBLE) * ((nt - a_tot)::DOUBLE) / (nt::DOUBLE)))
+             * 1000000.0 + 0.5) AS BIGINT)
+         END AS contrib_micro
+  FROM tot2)
+SELECT g AS event_type, n, n_above, contrib_micro,
+       CAST(SUM(contrib_micro) OVER () AS BIGINT) AS chi2_micro, k
+FROM ct
+"""
+
+
+def _q309_page_trend(spark, sf):
+    """Page's L ordered trend test: do per-user event COUNTS rise
+    across the alphabetically ordered event types? Complete blocks,
+    exact 2R ranks, doubled-L BIGINT statistic. Round-5 post-pin
+    registration: in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import page_trend_test
+    ev = _t(spark, sf, "events")
+    cells = (ev.where(F.col("user_id").isNotNull()
+                      & F.col("event_type").isNotNull())
+             .groupBy("user_id", "event_type")
+             .agg(F.count(F.lit(1)).cast("long").alias("n_events")))
+    return page_trend_test(cells, block_col="user_id",
+                           treatment_col="event_type",
+                           value_col="n_events")
+
+
+_O309 = """
+WITH cell AS (
+  SELECT user_id AS b, event_type AS tr,
+         CAST(COUNT(*) AS BIGINT) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+  GROUP BY user_id, event_type),
+kk AS (SELECT COUNT(DISTINCT tr) AS k FROM cell),
+comp AS (SELECT b FROM cell GROUP BY b
+         HAVING COUNT(*) = (SELECT k FROM kk)),
+kept AS (SELECT cell.* FROM cell JOIN comp USING (b)),
+r AS (
+  SELECT b, tr,
+         RANK() OVER (PARTITION BY b ORDER BY x ASC)
+         + ((COUNT(*) OVER (PARTITION BY b)) + 1
+            - RANK() OVER (PARTITION BY b ORDER BY x DESC)) AS r2
+  FROM kept),
+s AS (SELECT tr, CAST(SUM(r2) AS BIGINT) AS s2r FROM r GROUP BY tr),
+sj AS (SELECT tr, s2r,
+              CAST(DENSE_RANK() OVER (ORDER BY tr ASC) AS BIGINT)
+                AS j
+       FROM s),
+t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k_treatments,
+             CAST(SUM(j * s2r) AS BIGINT) AS l2_stat
+      FROM sj),
+nb AS (SELECT CAST(COUNT(*) / COUNT(DISTINCT tr) AS BIGINT)
+         AS n_blocks FROM kept)
+SELECT k_treatments, n_blocks, l2_stat,
+       CASE WHEN k_treatments >= 3 AND n_blocks > 0 THEN
+         ((l2_stat::DOUBLE)
+          - (n_blocks::DOUBLE) * (k_treatments::DOUBLE)
+            * ((k_treatments::DOUBLE) + 1.0)
+            * ((k_treatments::DOUBLE) + 1.0) / 2.0)
+         / (2.0 * SQRT((n_blocks::DOUBLE) * (k_treatments::DOUBLE)
+                       * (k_treatments::DOUBLE)
+                       * ((k_treatments::DOUBLE) + 1.0)
+                       * ((k_treatments::DOUBLE)
+                          * (k_treatments::DOUBLE) - 1.0) / 144.0))
+       END AS z
+FROM t, nb
+"""
+
+
 def _q310_cross_track(spark, sf):
     """Cross-track / along-track great-circle distances from every
     synthetic customer point to a fixed route, floor-half-up
@@ -6828,6 +11457,154 @@ nbr AS (
 SELECT c.cx, c.cy, c.n, COALESCE(nbr.nbr_max, 0) AS nbr_max
 FROM cells c LEFT JOIN nbr ON nbr.cx = c.cx AND nbr.cy = c.cy
 WHERE c.n > 0 AND c.n > COALESCE(nbr.nbr_max, 0)
+"""
+
+
+def _q312_lead_lag(spark, sf):
+    """Lead-lag cross-correlation per user between whole-unit event
+    values and the props-payload length over the observation index
+    (exact sufficient sums per lag, one window partitioning, no
+    self-join). Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import lead_lag_corr
+    ev = _t(spark, sf, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc())
+    base = (ev.where(F.col("user_id").isNotNull()
+                     & F.col("ts").isNotNull()
+                     & F.col("event_id").isNotNull()
+                     & F.col("value").isNotNull()
+                     & F.col("props").isNotNull())
+            .select("user_id",
+                    F.round(F.col("value")).cast("long").alias("x"),
+                    F.length(F.col("props")).cast("long").alias("y"),
+                    F.row_number().over(w).cast("long").alias("t")))
+    return lead_lag_corr(base, x_col="x", y_col="y", order_col="t",
+                         group_cols=["user_id"], max_lag=3)
+
+
+_O312 = """
+WITH idx AS (
+  SELECT user_id AS g,
+         CAST(ROUND(value) AS BIGINT) AS x,
+         CAST(length(props) AS BIGINT) AS y,
+         CAST(ROW_NUMBER() OVER (
+           PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+           AS BIGINT) AS t
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    AND event_id IS NOT NULL AND value IS NOT NULL
+    AND props IS NOT NULL),
+lags(k) AS (VALUES (-3), (-2), (-1), (0), (1), (2), (3)),
+pairs AS (
+  SELECT a.g, l.k AS lag, a.x, b.y
+  FROM idx a, lags l
+  JOIN idx b ON b.g = a.g AND b.t = a.t + l.k),
+agg AS (
+  SELECT g, lag, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y * y) AS BIGINT) AS syy,
+         CAST(SUM(x * y) AS BIGINT) AS sxy
+  FROM pairs GROUP BY g, lag)
+SELECT g AS user_id, CAST(lag AS INT) AS lag, n,
+       CASE WHEN n >= 2 AND (n * sxx - sx * sx) > 0
+                 AND (n * syy - sy * sy) > 0 THEN
+         ((n * sxy - sx * sy)::DOUBLE)
+         / SQRT(((n * sxx - sx * sx)::DOUBLE)
+                * ((n * syy - sy * sy)::DOUBLE))
+       END AS corr
+FROM agg
+"""
+
+
+def _q313_elbow(spark, sf):
+    """Elbow of each return flag's quantity survival curve
+    (y = rows with quantity >= x): exact cross-product argmax on the
+    chord rule. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import elbow_point
+    li = _t(spark, sf, "lineitem").where(F.col("l_quantity").isNotNull())
+    hist = (li.select("l_returnflag",
+                      F.col("l_quantity").cast("long").alias("q"))
+            .groupBy("l_returnflag", "q")
+            .agg(F.count(F.lit(1)).alias("_c")))
+    wrev = (Window.partitionBy("l_returnflag")
+            .orderBy(F.col("q").asc())
+            .rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    curve = hist.select("l_returnflag", "q",
+                        F.sum("_c").over(wrev).alias("surv"))
+    return elbow_point(curve, x_col="q", y_col="surv",
+                       group_cols=["l_returnflag"])
+
+
+_O313 = """
+WITH hist AS (
+  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS q,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM lineitem WHERE l_quantity IS NOT NULL
+  GROUP BY l_returnflag, l_quantity),
+curve AS (
+  SELECT g, q,
+         CAST(SUM(c) OVER (PARTITION BY g ORDER BY q ASC
+           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+           AS BIGINT) AS surv
+  FROM hist),
+ends AS (
+  SELECT g, CAST(COUNT(*) AS BIGINT) AS n,
+         MIN({'q': q, 'surv': surv}) AS p1,
+         MAX({'q': q, 'surv': surv}) AS p2
+  FROM curve GROUP BY g),
+j AS (
+  SELECT c.g, c.n, c.q, c.surv,
+         ABS((c.x2 - c.x1) * (c.y1 - c.surv)
+             - (c.x1 - c.q) * (c.y2 - c.y1)) AS cr
+  FROM (SELECT curve.g, curve.q, curve.surv, ends.n,
+               ends.p1['q'] AS x1, ends.p1['surv'] AS y1,
+               ends.p2['q'] AS x2, ends.p2['surv'] AS y2
+        FROM curve JOIN ends USING (g)
+        WHERE ends.n >= 3) c),
+pick AS (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY g ORDER BY cr DESC, q ASC) AS rn
+  FROM j)
+SELECT g AS l_returnflag, n, q AS elbow_x, surv AS elbow_y,
+       cr AS cross_stat
+FROM pick WHERE rn = 1
+"""
+
+
+def _q314_sequence_gaps(spark, sf):
+    """Inactivity gaps per user: maximal missing-day ranges in each
+    user's active-day sequence (the SQL islands classic, exact lag
+    arithmetic). Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import sequence_gaps
+    ev = _t(spark, sf, "events")
+    days = ev.where(F.col("user_id").isNotNull()
+                    & F.col("ts").isNotNull()).select(
+        "user_id",
+        F.datediff(F.col("ts").cast("date"),
+                   F.to_date(F.lit("2024-01-01"))).cast("long")
+        .alias("day"))
+    return sequence_gaps(days, id_col="day", group_cols=["user_id"])
+
+
+_O314 = """
+WITH d AS (
+  SELECT DISTINCT user_id,
+         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
+              AS BIGINT) AS day
+  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+lagd AS (
+  SELECT user_id, day,
+         LAG(day, 1) OVER (PARTITION BY user_id ORDER BY day ASC)
+           AS prev
+  FROM d)
+SELECT user_id, prev + 1 AS gap_start, day - 1 AS gap_end,
+       day - prev - 1 AS gap_len
+FROM lagd
+WHERE prev IS NOT NULL AND day - prev > 1
 """
 
 
@@ -6911,6 +11688,91 @@ FROM o
 """
 
 
+def _q317_weighted_quantile(spark, sf):
+    """Quantity-weighted P90 of extended price per return flag —
+    weighted_median generalized to any permille level, same exact
+    milli-mass machinery. Round-5 post-pin registration: in-repo
+    oracle sweep only."""
+    from kml2geojson_spark.relational import weighted_quantile
+    li = _t(spark, sf, "lineitem").select(
+        "l_returnflag", "l_extendedprice", "l_quantity",
+        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"))
+    return weighted_quantile(li, group_col="l_returnflag",
+                             value_col="l_extendedprice",
+                             weight_col="l_quantity", id_col="rid",
+                             p_milli=900)
+
+
+_O317 = """
+WITH d AS (
+  SELECT l_returnflag AS g, l_extendedprice AS v,
+         l_orderkey * 8 + l_linenumber AS i,
+         CAST(ROUND(l_quantity * 1000.0) AS BIGINT) AS wm
+  FROM lineitem
+  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
+    AND CAST(ROUND(l_quantity * 1000.0) AS BIGINT) > 0),
+run AS (
+  SELECT g, v, i, wm,
+         CAST(SUM(wm) OVER (PARTITION BY g ORDER BY v ASC, i ASC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS BIGINT) AS cum,
+         CAST(SUM(wm) OVER (PARTITION BY g) AS BIGINT) AS tot
+  FROM d),
+q AS (SELECT * FROM run WHERE cum * 1000 >= tot * 900)
+SELECT g AS l_returnflag,
+       MIN({'v': v, 'i': i})['v'] AS quantile,
+       CAST(MAX(tot) AS BIGINT) AS total_weight_milli
+FROM q GROUP BY g
+"""
+
+
+def _q318_sn_scale(spark, sf):
+    """Rousseeuw-Croux Sn robust spread of purchase cents per user
+    (50% breakdown, two exact selection medians over the pair
+    distances). Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import sn_scale
+    ev = (_t(spark, sf, "events")
+          .where(F.col("event_type") == "purchase")
+          .select("user_id", "ts", "event_id",
+                  F.round(F.col("value") * 100.0).cast("long")
+                  .alias("cents")))
+    return sn_scale(ev, value_col="cents",
+                    order_cols=["ts", "event_id"],
+                    group_cols=["user_id"])
+
+
+_O318 = """
+WITH b AS (
+  SELECT user_id AS g, ts, event_id,
+         CAST(ROUND(value * 100.0) AS BIGINT) AS x
+  FROM events
+  WHERE event_type = 'purchase' AND user_id IS NOT NULL
+    AND ts IS NOT NULL AND event_id IS NOT NULL
+    AND value IS NOT NULL),
+pairs AS (
+  SELECT a.g, a.ts, a.event_id, ABS(a.x - b2.x) AS d
+  FROM b a JOIN b b2
+    ON a.g = b2.g AND (a.ts, a.event_id) <> (b2.ts, b2.event_id)),
+per_i AS (
+  SELECT g, d AS mi
+  FROM (SELECT g, ts, event_id, d,
+               ROW_NUMBER() OVER (PARTITION BY g, ts, event_id
+                                  ORDER BY d ASC) AS rn,
+               COUNT(*) OVER (PARTITION BY g, ts, event_id) AS m
+        FROM pairs)
+  WHERE rn = CAST(FLOOR((m::DOUBLE) / 2.0) AS BIGINT) + 1),
+fin AS (
+  SELECT g, mi,
+         ROW_NUMBER() OVER (PARTITION BY g ORDER BY mi ASC) AS rn,
+         CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
+  FROM per_i)
+SELECT g AS user_id, n, mi AS sn_raw,
+       (mi::DOUBLE) * 1.1926 AS sn
+FROM fin WHERE rn = CAST(FLOOR(((n + 1)::DOUBLE) / 2.0) AS BIGINT)
+"""
+
+
 def _q319_canonical_url(spark, sf):
     """URL-dedup canonicalization over deterministically messy URLs
     (mixed-case hosts, default ports, shuffled tracking params,
@@ -6958,6 +11820,178 @@ def _o319() -> str:
 WITH u AS (SELECT ({url}) AS url FROM customer)
 SELECT {canon} AS canonical_url, CAST(COUNT(*) AS BIGINT) AS n
 FROM u GROUP BY 1
+"""
+
+
+def _q320_cochran_q(spark, sf):
+    """Cochran's Q over per-user big-ticket flags across the five
+    event types (complete blocks, exact BIGINT totals, one IEEE
+    division). Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import cochran_q
+    ev = _t(spark, sf, "events")
+    cells = (ev.where(F.col("user_id").isNotNull()
+                      & F.col("event_type").isNotNull()
+                      & F.col("value").isNotNull())
+             .groupBy("user_id", "event_type")
+             .agg(F.max(F.when(F.col("value") > 200.0, 1)
+                        .otherwise(0)).cast("long").alias("big")))
+    return cochran_q(cells, block_col="user_id",
+                     treatment_col="event_type", label_col="big")
+
+
+_O320 = """
+WITH cell AS (
+  SELECT user_id AS b, event_type AS tr,
+         CAST(MAX(CASE WHEN value > 200.0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS y
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+    AND value IS NOT NULL
+  GROUP BY user_id, event_type),
+kk AS (SELECT COUNT(DISTINCT tr) AS k FROM cell),
+comp AS (SELECT b FROM cell GROUP BY b
+         HAVING COUNT(*) = (SELECT k FROM kk)),
+kept AS (SELECT cell.* FROM cell JOIN comp USING (b)),
+gj AS (SELECT tr, CAST(SUM(y) AS BIGINT) AS g FROM kept GROUP BY tr),
+li AS (SELECT b, CAST(SUM(y) AS BIGINT) AS l FROM kept GROUP BY b),
+tg AS (SELECT CAST(COUNT(*) AS BIGINT) AS k_treatments,
+              CAST(SUM(g * g) AS BIGINT) AS sg2,
+              CAST(SUM(g) AS BIGINT) AS grand_total
+       FROM gj),
+tl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_blocks,
+              CAST(SUM(l * l) AS BIGINT) AS sl2
+       FROM li)
+SELECT k_treatments, n_blocks, grand_total,
+       CASE WHEN k_treatments >= 2 AND n_blocks > 0
+                 AND (k_treatments * grand_total - sl2) > 0 THEN
+         (((k_treatments - 1) * (k_treatments * sg2
+            - grand_total * grand_total))::DOUBLE)
+         / ((k_treatments * grand_total - sl2)::DOUBLE)
+       END AS q_stat
+FROM tg, tl
+"""
+
+
+def _q321_poisson_dispersion(spark, sf):
+    """Poisson overdispersion of per-user daily event counts — are
+    users' daily activity counts clumped? One exact-sum aggregate
+    per user. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import poisson_dispersion
+    ev = _t(spark, sf, "events")
+    daily = (ev.where(F.col("user_id").isNotNull()
+                      & F.col("ts").isNotNull())
+             .groupBy("user_id",
+                      F.datediff(F.col("ts").cast("date"),
+                                 F.to_date(F.lit("2024-01-01")))
+                      .alias("day"))
+             .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
+    return poisson_dispersion(daily, count_col="cnt",
+                              group_cols=["user_id"])
+
+
+_O321 = """
+WITH daily AS (
+  SELECT user_id,
+         datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM events
+  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+  GROUP BY user_id, datediff('day', DATE '2024-01-01',
+                             CAST(ts AS DATE))),
+agg AS (
+  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(c) AS BIGINT) AS s,
+         CAST(SUM(c * c) AS BIGINT) AS ss
+  FROM daily GROUP BY user_id)
+SELECT user_id, n,
+       CASE WHEN n >= 2 AND s > 0
+            THEN (s::DOUBLE) / (n::DOUBLE) END AS mean,
+       CASE WHEN n >= 2 AND s > 0 THEN
+         (((n * ss - s * s)::DOUBLE)
+          / ((n::DOUBLE) * ((n::DOUBLE) - 1.0)))
+         / ((s::DOUBLE) / (n::DOUBLE))
+       END AS dispersion,
+       CASE WHEN n >= 2 AND s > 0 THEN
+         ((n::DOUBLE) - 1.0)
+         * ((((n * ss - s * s)::DOUBLE)
+             / ((n::DOUBLE) * ((n::DOUBLE) - 1.0)))
+            / ((s::DOUBLE) / (n::DOUBLE)))
+       END AS chi2_stat
+FROM agg
+"""
+
+
+def _q322_holm(spark, sf):
+    """Holm step-down FWER adjustment over deterministic synthetic
+    p-values (one tiny unpartitioned window over the m-row test
+    table — the bh_fdr shape). Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import holm_adjust
+    s = _t(spark, sf, "supplier")
+    p = (((F.col("s_suppkey") * 2654435761) % 1000000)
+         .cast("double") / F.lit(1000000.0))
+    tests = s.select(F.concat(F.lit("test-"),
+                              F.col("s_suppkey").cast("string"))
+                     .alias("tid"), p.alias("p"))
+    return holm_adjust(tests, p_col="p", test_id_col="tid")
+
+
+_O322 = """
+WITH t AS (
+  SELECT 'test-' || CAST(s_suppkey AS VARCHAR) AS test_id,
+         (((s_suppkey * 2654435761) % 1000000)::DOUBLE)
+         / 1000000.0 AS p
+  FROM supplier),
+r AS (
+  SELECT test_id, p,
+         CAST(ROW_NUMBER() OVER (ORDER BY p ASC, test_id ASC)
+              AS BIGINT) AS rank,
+         CAST(COUNT(*) OVER () AS BIGINT) AS m
+  FROM t),
+s AS (
+  SELECT test_id, p, rank,
+         LEAST(1.0, MAX(((m - rank + 1)::DOUBLE) * p) OVER (
+           ORDER BY p ASC, test_id ASC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+           AS adj_p
+  FROM r)
+SELECT test_id, p, rank, adj_p, adj_p <= 0.05 AS significant
+FROM s
+"""
+
+
+def _q296_quantile_normalize(spark, sf):
+    """Quantile normalization of document lengths across sources —
+    every source ends up with an identical length distribution
+    (rank window + rank-mean join). Round-5 post-pin registration:
+    in-repo oracle sweep only."""
+    from kml2geojson_spark.relational import quantile_normalize
+    docs = _t(spark, sf, "documents")
+    return quantile_normalize(docs, value_col="n_chars",
+                              id_col="doc_id", dist_col="source")
+
+
+_O296 = """
+WITH b AS (
+  SELECT source AS dist, doc_id AS id, n_chars AS value
+  FROM documents
+  WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL
+    AND source IS NOT NULL),
+ranked AS (
+  SELECT dist, id, value,
+         CAST(ROW_NUMBER() OVER (
+           PARTITION BY dist ORDER BY value ASC, id ASC)
+           AS BIGINT) AS rank
+  FROM b),
+means AS (
+  SELECT rank,
+         (SUM(CAST(value AS HUGEINT))::DOUBLE)
+         / (COUNT(*)::DOUBLE) AS normalized
+  FROM ranked GROUP BY rank)
+SELECT r.dist, r.id, r.value, r.rank, m.normalized
+FROM ranked r JOIN means m USING (rank)
 """
 
 
@@ -7059,6 +12093,61 @@ FROM lagd
 """
 
 
+def _q299_friedman(spark, sf):
+    """Friedman repeated-measures rank test: do the five event types
+    differ in per-user spend, blocking by user? Complete blocks
+    only, exact 2R integer ranks, one fixed IEEE tree for the
+    statistic. Round-5 post-pin registration: in-repo oracle sweep
+    only."""
+    from kml2geojson_spark.relational import friedman_test
+    ev = _t(spark, sf, "events")
+    cells = (ev.where(F.col("user_id").isNotNull()
+                      & F.col("event_type").isNotNull()
+                      & F.col("value").isNotNull())
+             .groupBy("user_id", "event_type")
+             .agg(F.sum(F.round(F.col("value") * 100.0).cast("long"))
+                  .alias("cents")))
+    return (friedman_test(cells, block_col="user_id",
+                          treatment_col="event_type",
+                          value_col="cents")
+            .select("k_treatments", "n_blocks", "chi2_f"))
+
+
+_O299 = """
+WITH cell AS (
+  SELECT user_id AS b, event_type AS tr,
+         SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS x
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+    AND value IS NOT NULL
+  GROUP BY user_id, event_type),
+kk AS (SELECT COUNT(DISTINCT tr) AS k FROM cell),
+comp AS (SELECT b FROM cell GROUP BY b
+         HAVING COUNT(*) = (SELECT k FROM kk)),
+kept AS (SELECT cell.* FROM cell JOIN comp USING (b)),
+r AS (
+  SELECT b, tr,
+         RANK() OVER (PARTITION BY b ORDER BY x ASC)
+         + ((COUNT(*) OVER (PARTITION BY b)) + 1
+            - RANK() OVER (PARTITION BY b ORDER BY x DESC)) AS r2
+  FROM kept),
+s AS (SELECT tr, CAST(SUM(r2) AS BIGINT) AS s2r FROM r GROUP BY tr),
+t AS (SELECT CAST(COUNT(*) AS BIGINT) AS k_treatments,
+             CAST(SUM(s2r * s2r) AS BIGINT) AS sumsq4
+      FROM s),
+nb AS (SELECT CAST(COUNT(*) / COUNT(DISTINCT tr) AS BIGINT)
+         AS n_blocks FROM kept)
+SELECT k_treatments, n_blocks,
+       CASE WHEN n_blocks > 0 AND k_treatments >= 2 THEN
+         12.0 / ((n_blocks::DOUBLE) * (k_treatments::DOUBLE)
+                 * ((k_treatments::DOUBLE) + 1.0))
+         * ((sumsq4::DOUBLE) / 4.0)
+         - 3.0 * (n_blocks::DOUBLE) * ((k_treatments::DOUBLE) + 1.0)
+       END AS chi2_f
+FROM t, nb
+"""
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "q01_filter_project": _q01_filter_project,
@@ -7138,6 +12227,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q84_containment": _q84_containment,
         "q85_pagerank": _q85_pagerank,
         "q86_triangle_count": _q86_triangle_count,
+        "q87_funnel": _q87_funnel,
+        "q88_od_matrix": _q88_od_matrix,
+        "q89_cohort_retention": _q89_cohort_retention,
+        "q90_group_outliers": _q90_group_outliers,
+        "q91_skyline": _q91_skyline,
         "q92_hilbert_counts": _q92_hilbert_counts,
         "q93_surprisal": _q93_surprisal,
         "q94_bm25": _q94_bm25,
@@ -7150,15 +12244,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q101_cube": _q101_cube,
         "q102_moving_window": _q102_moving_window,
         "q103_fuzzy_pairs": _q103_fuzzy_pairs,
+        "q104_merge_intervals": _q104_merge_intervals,
         "q105_asof_forward": _q105_asof_forward,
+        "q106_sessionize_batch": _q106_sessionize_batch,
         "q107_weighted_sample": _q107_weighted_sample,
         "q108_lang_hll": _q108_lang_hll,
         "q109_cell_smooth": _q109_cell_smooth,
         "q110_pip_anti": _q110_pip_anti,
+        "q111_gapfill": _q111_gapfill,
+        "q112_transitions": _q112_transitions,
         "q113_label_centroids": _q113_label_centroids,
+        "q114_histogram": _q114_histogram,
+        "q115_weighted_median": _q115_weighted_median,
         "q116_polygon_centroid": _q116_polygon_centroid,
+        "q117_group_mode": _q117_group_mode,
         "q118_passage_dedup": _q118_passage_dedup,
         "q119_lang_profile": _q119_lang_profile,
+        "q120_inter_event": _q120_inter_event,
+        "q121_rfm": _q121_rfm,
+        "q122_key_skew": _q122_key_skew,
         "q123_union_cover": _q123_union_cover,
         "q124_orphan_audit": _q124_orphan_audit,
         "q125_column_profile": _q125_column_profile,
@@ -7174,46 +12278,104 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q135_heading_octants": _q135_heading_octants,
         "q136_segment_intersections": _q136_segment_intersections,
         "q137_grid_moran": _q137_grid_moran,
+        "q138_cooccurrence": _q138_cooccurrence,
+        "q139_session_paths": _q139_session_paths,
         "q140_decontaminate_near": _q140_decontaminate_near,
         "q141_asof_nearest": _q141_asof_nearest,
+        "q142_attribution": _q142_attribution,
         "q143_line_buffer": _q143_line_buffer,
         "q144_chunk_documents": _q144_chunk_documents,
         "q145_convex_hull": _q145_convex_hull,
         "q146_quantile_buckets": _q146_quantile_buckets,
+        "q147_group_ols": _q147_group_ols,
+        "q148_group_gini": _q148_group_gini,
         "q149_quantize_embeddings": _q149_quantize_embeddings,
+        "q150_mad_outliers": _q150_mad_outliers,
+        "q151_group_auc": _q151_group_auc,
+        "q152_ks_2sample": _q152_ks_2sample,
+        "q153_top_p_coverage": _q153_top_p_coverage,
+        "q154_group_entropy": _q154_group_entropy,
+        "q155_cusum_changepoint": _q155_cusum_changepoint,
         "q156_cidr_join": _q156_cidr_join,
+        "q157_rolling_median": _q157_rolling_median,
+        "q158_max_streak": _q158_max_streak,
+        "q159_percentile_rank": _q159_percentile_rank,
+        "q160_jaccard_pairs": _q160_jaccard_pairs,
+        "q161_corr_matrix": _q161_corr_matrix,
         "q162_classification_report": _q162_classification_report,
+        "q163_chi2": _q163_chi2,
+        "q164_welch_ttest": _q164_welch_ttest,
         "q165_snm_pairs": _q165_snm_pairs,
         "q166_winnow": _q166_winnow,
         "q167_bfs_hops": _q167_bfs_hops,
         "q168_hits": _q168_hits,
         "q169_label_vote": _q169_label_vote,
         "q170_psi_drift": _q170_psi_drift,
+        "q171_mannwhitney": _q171_mannwhitney,
+        "q172_prop_ztest": _q172_prop_ztest,
+        "q173_lag_autocorr": _q173_lag_autocorr,
         "q174_benford": _q174_benford,
+        "q175_anova": _q175_anova,
         "q176_bellman_ford": _q176_bellman_ford,
         "q177_centroid_drift": _q177_centroid_drift,
+        "q178_ndcg": _q178_ndcg,
+        "q179_rrf": _q179_rrf,
         "q180_kcore": _q180_kcore,
+        "q181_burst_dedup": _q181_burst_dedup,
+        "q182_trimmed_mean": _q182_trimmed_mean,
+        "q183_ratio_metric": _q183_ratio_metric,
         "q184_table_diff": _q184_table_diff,
+        "q185_cohort_ltv": _q185_cohort_ltv,
+        "q186_spearman": _q186_spearman,
+        "q187_kruskal_wallis": _q187_kruskal,
+        "q188_group_moments": _q188_moments,
+        "q189_group_quantiles": _q189_quantiles,
         "q190_clustering_coeff": _q190_clustering,
+        "q191_kaplan_meier": _q191_kaplan_meier,
+        "q192_theil_index": _q192_theil,
         "q193_zipf_fit": _q193_zipf,
+        "q194_odds_ratio": _q194_odds_ratio,
         "q195_getis_ord": _q195_getis_ord,
+        "q196_cohens_d": _q196_cohens_d,
+        "q197_time_weighted_avg": _q197_twa,
+        "q198_mantel_haenszel": _q198_mantel_haenszel,
+        "q200_hourly_profile": _q200_hourly_profile,
         "q201_assortativity": _q201_assortativity,
         "q202_bigram_lm": _q202_bigram_lm,
+        "q203_js_divergence": _q203_js_divergence,
+        "q204_map_at_k": _q204_map_at_k,
+        "q205_runs_test": _q205_runs_test,
+        "q206_poisson_rate": _q206_poisson_rate,
         "q207_char_entropy": _q207_char_entropy,
+        "q208_basket_lift": _q208_basket_lift,
+        "q210_rolling_zscore": _q210_rolling_zscore,
+        "q212_topk_overlap": _q212_topk_overlap,
+        "q213_calibration_bins": _q213_calibration_bins,
+        "q214_attribution": _q214_attribution,
         "q215_embedding_norms": _q215_embedding_norms,
         "q216_doc_novelty": _q216_doc_novelty,
         "q217_reciprocity": _q217_reciprocity,
+        "q219_trigram_paths": _q219_trigram_paths,
+        "q220_funnel_latency": _q220_funnel_latency,
         "q221_k_anonymity": _q221_k_anonymity,
+        "q222_period_over_period": _q222_period_over_period,
+        "q223_wilson_ci": _q223_wilson_ci,
         "q224_fisher": _q224_fisher,
+        "q225_information_gain": _q225_information_gain,
         "q226_silhouette": _q226_silhouette,
         "q227_lpa_communities": _q227_lpa_communities,
         "q228_hll_overlap": _q228_hll_overlap,
         "q229_er_entities": _q229_er_entities,
+        "q230_cume_gains": _q230_cume_gains,
+        "q231_mrr_at_k": _q231_mrr_at_k,
         "q232_script_mix": _q232_script_mix,
+        "q233_circular_time": _q233_circular_time,
         "q234_polygon_overlap": _q234_polygon_overlap,
+        "q235_rolling_active": _q235_rolling_active,
         "q236_readability": _q236_readability,
         "q237_hits": _q237_hits,
         "q238_haversine": _q238_haversine,
+        "q239_winsorized": _q239_winsorized,
         "q241_keyword_snippets": _q241_keyword_snippets,
         "q242_bearing": _q242_bearing,
         "q244_cohens_kappa": _q244_cohens_kappa,
@@ -7221,41 +12383,79 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q246_simhash_curve": _q246_simhash_curve,
         "q247_dimension_profile": _q247_dimension_profile,
         "q248_frame_checksums": _q248_frame_checksums,
+        "q249_peak_concurrency": _q249_peak_concurrency,
         "q250_zonal_stats": _q250_zonal_stats,
         "q251_spatial_thin": _q251_spatial_thin,
         "q252_adamic_adar": _q252_adamic_adar,
         "q253_distinctive_terms": _q253_distinctive_terms,
+        "q254_ewma_last": _q254_ewma_last,
+        "q255_mann_kendall": _q255_mann_kendall,
+        "q256_brown_forsythe": _q256_brown_forsythe,
+        "q257_bh_fdr": _q257_bh_fdr,
+        "q258_kendall_tau": _q258_kendall_tau,
         "q259_idw_interpolate": _q259_idw_interpolate,
         "q260_two_hop_reach": _q260_two_hop_reach,
         "q261_parse_wkt": _q261_parse_wkt,
         "q262_pcm_features": _q262_pcm_features,
         "q263_jl_project": _q263_jl_project,
+        "q264_seasonality": _q264_seasonality,
         "q265_destination_point": _q265_destination_point,
+        "q266_rolling_corr": _q266_rolling_corr,
+        "q267_target_encode": _q267_target_encode,
+        "q268_cronbach": _q268_cronbach,
         "q269_negative_samples": _q269_negative_samples,
+        "q270_hashed_features": _q270_hashed_features,
+        "q271_cuped": _q271_cuped,
+        "q272_diff_in_diff": _q272_diff_in_diff,
         "q273_parse_url": _q273_parse_url,
         "q274_gc_interpolate": _q274_gc_interpolate,
+        "q276_theil_sen": _q276_theil_sen,
         "q277_ripley_k": _q277_ripley_k,
         "q278_clark_evans": _q278_clark_evans,
         "q279_ring_audit": _q279_ring_audit,
         "q280_image_ahash": _q280_image_ahash,
         "q281_ahash_pairs": _q281_ahash_pairs,
+        "q282_bootstrap_ci": _q282_bootstrap_ci,
+        "q283_permutation_test": _q283_permutation_test,
         "q284_line_interpolate": _q284_line_interpolate,
         "q285_hausdorff": _q285_hausdorff,
+        "q286_hodges_lehmann": _q286_hodges_lehmann,
+        "q287_siegel_slope": _q287_siegel_slope,
         "q288_spherical_area": _q288_spherical_area,
+        "q289_pettitt": _q289_pettitt,
+        "q290_grubbs": _q290_grubbs,
+        "q291_jarque_bera": _q291_jarque_bera,
+        "q292_mcnemar": _q292_mcnemar,
         "q293_kmv_registers": _q293_kmv_registers,
         "q294_kmv_estimate": _q294_kmv_estimate,
         "q295_hex_bin": _q295_hex_bin,
+        "q296_quantile_normalize": _q296_quantile_normalize,
         "q297_neighbor_jaccard": _q297_neighbor_jaccard,
         "q298_shot_boundaries": _q298_shot_boundaries,
+        "q299_friedman": _q299_friedman,
         "q300_hex_smooth": _q300_hex_smooth,
+        "q301_cochran_armitage": _q301_cochran_armitage,
+        "q302_durbin_watson": _q302_durbin_watson,
+        "q303_cliffs_delta": _q303_cliffs_delta,
+        "q304_boxplot": _q304_boxplot,
         "q305_fd_violations": _q305_fd_violations,
         "q306_source_mix": _q306_source_mix,
         "q307_chao1": _q307_chao1,
+        "q308_mood_median": _q308_mood_median,
+        "q309_page_trend": _q309_page_trend,
         "q310_cross_track": _q310_cross_track,
         "q311_raster_peaks": _q311_raster_peaks,
+        "q312_lead_lag": _q312_lead_lag,
+        "q313_elbow": _q313_elbow,
+        "q314_sequence_gaps": _q314_sequence_gaps,
         "q315_quadkey": _q315_quadkey,
         "q316_langid_eval": _q316_langid_eval,
+        "q317_weighted_quantile": _q317_weighted_quantile,
+        "q318_sn_scale": _q318_sn_scale,
         "q319_canonical_url": _q319_canonical_url,
+        "q320_cochran_q": _q320_cochran_q,
+        "q321_poisson_dispersion": _q321_poisson_dispersion,
+        "q322_holm": _q322_holm,
     }
 
 
@@ -7334,6 +12534,11 @@ def oracle_sql() -> dict[str, str]:
         "q84_containment": _O84,
         "q85_pagerank": _o85(),
         "q86_triangle_count": _O86,
+        "q87_funnel": _o87(),
+        "q88_od_matrix": _O88,
+        "q89_cohort_retention": _O89,
+        "q90_group_outliers": _O90,
+        "q91_skyline": _O91,
         "q92_hilbert_counts": _o92(),
         "q93_surprisal": _O93,
         "q94_bm25": _o94(),
@@ -7346,15 +12551,25 @@ def oracle_sql() -> dict[str, str]:
         "q101_cube": _O101,
         "q102_moving_window": _O102,
         "q103_fuzzy_pairs": _O103,
+        "q104_merge_intervals": _O104,
         "q105_asof_forward": _O105,
+        "q106_sessionize_batch": _O106,
         "q107_weighted_sample": _o107(),
         "q108_lang_hll": _o108(),
         "q109_cell_smooth": _o109(),
         "q110_pip_anti": _O110,
+        "q111_gapfill": _O111,
+        "q112_transitions": _O112,
         "q113_label_centroids": _o113(),
+        "q114_histogram": _O114,
+        "q115_weighted_median": _O115,
         "q116_polygon_centroid": _O116,
+        "q117_group_mode": _O117,
         "q118_passage_dedup": _O118,
         "q119_lang_profile": _O119,
+        "q120_inter_event": _O120,
+        "q121_rfm": _O121,
+        "q122_key_skew": _O122,
         "q123_union_cover": _o123(),
         "q124_orphan_audit": _o124(),
         "q125_column_profile": _o125(),
@@ -7370,46 +12585,104 @@ def oracle_sql() -> dict[str, str]:
         "q135_heading_octants": _O135,
         "q136_segment_intersections": _O136,
         "q137_grid_moran": _O137,
+        "q138_cooccurrence": _O138,
+        "q139_session_paths": _O139,
         "q140_decontaminate_near": _o140(),
         "q141_asof_nearest": _O141,
+        "q142_attribution": _O142,
         "q143_line_buffer": _o143(),
         "q144_chunk_documents": _o144(),
         "q145_convex_hull": _O145,
         "q146_quantile_buckets": _o146(),
+        "q147_group_ols": _O147,
+        "q148_group_gini": _O148,
         "q149_quantize_embeddings": _O149,
+        "q150_mad_outliers": _O150,
+        "q151_group_auc": _O151,
+        "q152_ks_2sample": _O152,
+        "q153_top_p_coverage": _O153,
+        "q154_group_entropy": _O154,
+        "q155_cusum_changepoint": _O155,
         "q156_cidr_join": _O156,
+        "q157_rolling_median": _O157,
+        "q158_max_streak": _O158,
+        "q159_percentile_rank": _O159,
+        "q160_jaccard_pairs": _O160,
+        "q161_corr_matrix": _O161,
         "q162_classification_report": _O162,
+        "q163_chi2": _O163,
+        "q164_welch_ttest": _O164,
         "q165_snm_pairs": _O165,
         "q166_winnow": _O166,
         "q167_bfs_hops": _O167,
         "q168_hits": _O168,
         "q169_label_vote": _O169,
         "q170_psi_drift": _O170,
+        "q171_mannwhitney": _O171,
+        "q172_prop_ztest": _O172,
+        "q173_lag_autocorr": _O173,
         "q174_benford": _O174,
+        "q175_anova": _O175,
         "q176_bellman_ford": _O176,
         "q177_centroid_drift": _O177,
+        "q178_ndcg": _o178(),
+        "q179_rrf": _O179,
         "q180_kcore": _o180(),
+        "q181_burst_dedup": _O181,
+        "q182_trimmed_mean": _O182,
+        "q183_ratio_metric": _O183,
         "q184_table_diff": _O184,
+        "q185_cohort_ltv": _O185,
+        "q186_spearman": _O186,
+        "q187_kruskal_wallis": _O187,
+        "q188_group_moments": _O188,
+        "q189_group_quantiles": _O189,
         "q190_clustering_coeff": _O190,
+        "q191_kaplan_meier": _O191,
+        "q192_theil_index": _O192,
         "q193_zipf_fit": _O193,
+        "q194_odds_ratio": _O194,
         "q195_getis_ord": _o195(),
+        "q196_cohens_d": _O196,
+        "q197_time_weighted_avg": _O197,
+        "q198_mantel_haenszel": _O198,
+        "q200_hourly_profile": _O200,
         "q201_assortativity": _O201,
         "q202_bigram_lm": _O202,
+        "q203_js_divergence": _O203,
+        "q204_map_at_k": _O204,
+        "q205_runs_test": _O205,
+        "q206_poisson_rate": _O206,
         "q207_char_entropy": _O207,
+        "q208_basket_lift": _O208,
+        "q210_rolling_zscore": _O210,
+        "q212_topk_overlap": _O212,
+        "q213_calibration_bins": _O213,
+        "q214_attribution": _O214,
         "q215_embedding_norms": _O215,
         "q216_doc_novelty": _O216,
         "q217_reciprocity": _O217,
+        "q219_trigram_paths": _O219,
+        "q220_funnel_latency": _O220,
         "q221_k_anonymity": _O221,
+        "q222_period_over_period": _O222,
+        "q223_wilson_ci": _O223,
         "q224_fisher": _O224,
+        "q225_information_gain": _O225,
         "q226_silhouette": _O226,
         "q227_lpa_communities": _o227(),
         "q228_hll_overlap": _o228(),
         "q229_er_entities": _O229,
+        "q230_cume_gains": _o230(),
+        "q231_mrr_at_k": _O231,
         "q232_script_mix": _O232,
+        "q233_circular_time": _O233,
         "q234_polygon_overlap": _o234(),
+        "q235_rolling_active": _O235,
         "q236_readability": _O236,
         "q237_hits": _o237(),
         "q238_haversine": _O238,
+        "q239_winsorized": _O239,
         "q241_keyword_snippets": _O241,
         "q242_bearing": _O242,
         "q244_cohens_kappa": _O244,
@@ -7417,41 +12690,79 @@ def oracle_sql() -> dict[str, str]:
         "q246_simhash_curve": _o246(),
         "q247_dimension_profile": _O247,
         "q248_frame_checksums": _O248,
+        "q249_peak_concurrency": _O249,
         "q250_zonal_stats": _O250,
         "q251_spatial_thin": _o251(),
         "q252_adamic_adar": _O252,
         "q253_distinctive_terms": _O253,
+        "q254_ewma_last": _O254,
+        "q255_mann_kendall": _O255,
+        "q256_brown_forsythe": _O256,
+        "q257_bh_fdr": _o257(),
+        "q258_kendall_tau": _O258,
         "q259_idw_interpolate": _o259(),
         "q260_two_hop_reach": _O260,
         "q261_parse_wkt": _O261,
         "q262_pcm_features": _O262,
         "q263_jl_project": _o263(),
+        "q264_seasonality": _O264,
         "q265_destination_point": _o265(),
+        "q266_rolling_corr": _O266,
+        "q267_target_encode": _O267,
+        "q268_cronbach": _O268,
         "q269_negative_samples": _O269,
+        "q270_hashed_features": _O270,
+        "q271_cuped": _O271,
+        "q272_diff_in_diff": _O272,
         "q273_parse_url": _O273,
         "q274_gc_interpolate": _o274(),
+        "q276_theil_sen": _O276,
         "q277_ripley_k": _o277(),
         "q278_clark_evans": _O278,
         "q279_ring_audit": _O279,
         "q280_image_ahash": _O280,
         "q281_ahash_pairs": _O281,
+        "q282_bootstrap_ci": _o282(),
+        "q283_permutation_test": _o283(),
         "q284_line_interpolate": _O284,
         "q285_hausdorff": _O285,
+        "q286_hodges_lehmann": _O286,
+        "q287_siegel_slope": _O287,
         "q288_spherical_area": _o288(),
+        "q289_pettitt": _O289,
+        "q290_grubbs": _O290,
+        "q291_jarque_bera": _o291(),
+        "q292_mcnemar": _o292(),
         "q293_kmv_registers": _O293,
         "q294_kmv_estimate": _O294,
         "q295_hex_bin": _o295(),
+        "q296_quantile_normalize": _O296,
         "q297_neighbor_jaccard": _O297,
         "q298_shot_boundaries": _O298,
+        "q299_friedman": _O299,
         "q300_hex_smooth": _o300(),
+        "q301_cochran_armitage": _O301,
+        "q302_durbin_watson": _O302,
+        "q303_cliffs_delta": _O303,
+        "q304_boxplot": _O304,
         "q305_fd_violations": _O305,
         "q306_source_mix": _O306,
         "q307_chao1": _O307,
+        "q308_mood_median": _O308,
+        "q309_page_trend": _O309,
         "q310_cross_track": _o310(),
         "q311_raster_peaks": _O311,
+        "q312_lead_lag": _O312,
+        "q313_elbow": _O313,
+        "q314_sequence_gaps": _O314,
         "q315_quadkey": _o315(),
         "q316_langid_eval": _o316(),
+        "q317_weighted_quantile": _O317,
+        "q318_sn_scale": _O318,
         "q319_canonical_url": _o319(),
+        "q320_cochran_q": _O320,
+        "q321_poisson_dispersion": _O321,
+        "q322_holm": _O322,
         "q41_lsh_cosine_topk": _o41_sql(),
         "q43_media_features": _O43,
         # q44: rows-only (the IVF candidate set is approximate by

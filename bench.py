@@ -45,6 +45,7 @@ BENCH_QUERIES = [
     "q132_geofence_dwell",   # pip_join x trajectory-window dwell
     "q234_polygon_overlap",  # bbox-cell-bucketed SH polygon overlap join
     "q237_hits",             # 3-round integer HITS (iterative join loop)
+    "q249_peak_concurrency",  # half-open interval sweep window
 ]
 
 

@@ -1031,8 +1031,9 @@ def neighbor_jaccard(edges: DataFrame, *, left: str = "src",
     of their 10,000 neighbors score ~0.0005, not 10.
 
     Determinism: intersection and degrees are exact BIGINT counts;
-    the score is ONE correctly-rounded IEEE division of exact
-    integers — bit-exact cross-engine, no quantization needed.
+    the score is ONE correctly-rounded IEEE division — bit-exact
+    cross-engine (the :func:`grubbs_test` rule, no quantization
+    needed).
 
     Scale shape: identical to :func:`adamic_adar` — dedup, one
     left-degree hash-aggregate joined back per pair, wedge self-join

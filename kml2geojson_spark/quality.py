@@ -166,7 +166,8 @@ def grouped_heavy_hitters(df: DataFrame, *, group_col: str,
     """Per-group heavy hitters: the top-``k`` most frequent values
     inside each group, with their exact count and parts-per-million
     share of the group — per-language top tokens, per-source top
-    domains, per-segment top priorities.
+    domains, per-segment top priorities; the grouped twin of the
+    global :func:`~kml2geojson_spark.relational.key_skew_stats`.
 
     Determinism: rank order is (count DESC, value ASC) — a total
     order, so ties at the k-boundary resolve identically on every
@@ -289,11 +290,12 @@ def psi_drift(df: DataFrame, *, value_col: str, split_col: str,
     THE standard distribution-drift monitor in ML scoring pipelines
     (rule of thumb: < 0.1 stable, 0.1–0.25 drifting, > 0.25 shifted).
     ``PSI = Σ_bins (p_a − p_b) · ln(p_a / p_b)`` over a fixed-width
-    binning of ``[lo, hi]`` (the top bin is closed on the right;
-    out-of-range and NULL values drop).
+    binning of ``[lo, hi]`` (same closed-right top edge as
+    ``histogram1d``; out-of-range and NULL values drop).
 
-    Determinism (integerized lns, milli-nat scaled): bin counts
-    c_a, c_b and totals n_a, n_b are exact BIGINTs; each bin's term is
+    Determinism (the `group_entropy` integerized-ln rule, milli-nat
+    scaled): bin counts c_a, c_b and totals n_a, n_b are exact
+    BIGINTs; each bin's term is
     ``(c_a·n_b − c_b·n_a) · (mln(c_a·n_b) − mln(c_b·n_a))`` with
     ``mln(x) = round(ln(x)·10³)`` integerized PER EXACT PRODUCT
     before any sum — an exact BIGINT, addition-order independent, and

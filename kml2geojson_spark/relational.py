@@ -2224,67 +2224,6 @@ def mantel_haenszel_or(df: DataFrame, *, exposure_col: str,
                     orr.alias("or_mh"))
 
 
-def pythagorean_means(df: DataFrame, *, value_col: str,
-                      group_cols: list[str]) -> DataFrame:
-    """Per-group arithmetic / geometric / harmonic means of a
-    positive metric — the rate-averaging toolkit (harmonic for
-    speeds and rates, geometric for growth factors and multiplicative
-    scores, arithmetic as the reference; AM ≥ GM ≥ HM always).
-
-    Determinism: values must be POSITIVE INTEGERS (floats raise;
-    v ≤ 0 drops). Arithmetic: exact BIGINT Σv. Geometric: the exact
-    micro-nat ``Σ lnμ(v)`` (per-distinct-integer ln, the
-    :func:`group_entropy` rule) is emitted as ``log_gmean_micro_sum``
-    — the convenience ``gmean = exp(Σ/(n·10⁶))`` is engine-local
-    (exp drifts 1 ulp across libms — measured), so cross-engine
-    hashing uses the exact column. Harmonic: reciprocals integerized
-    PER DISTINCT VALUE to pico-units ``round(10¹²/v)`` and summed as
-    exact BIGINT; ``hmean = n·10¹²/Σ`` is one fixed double division.
-    Caller guarantees Σ round(10¹²/v) < 2⁶³ (~9·10⁶ rows of v = 1;
-    far more for realistic v > 1).
-
-    Scale shape: one (group, value) hash-aggregate with map-side
-    combine, one group hash-aggregate. No window, no join.
-
-    Output: (group..., n, sum_v, mean_arith, log_gmean_micro_sum,
-    gmean, recip_pico_sum, hmean).
-    """
-    from pyspark.sql.types import DoubleType, FloatType
-
-    fields = {f.name: f for f in df.schema.fields}
-    if isinstance(fields[value_col].dataType, (DoubleType, FloatType)):
-        raise ValueError(
-            f"pythagorean_means: {value_col!r} is floating-point — "
-            "integerize first (exact integer sums are the "
-            "determinism contract)")
-    if not group_cols:
-        raise ValueError(
-            "pythagorean_means: group_cols must be non-empty")
-    keep = F.col(value_col).isNotNull() & (F.col(value_col) > 0)
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    per_val = (df.where(keep)
-               .groupBy(*group_cols,
-                        F.col(value_col).cast("long").alias("_v"))
-               .agg(F.count(F.lit(1)).alias("_c")))
-    lnv = F.round(F.log(F.col("_v").cast("double")) * 1e6).cast("long")
-    rec = F.round(F.lit(1e12) / F.col("_v").cast("double")).cast("long")
-    s = per_val.groupBy(*group_cols).agg(
-        F.sum("_c").alias("n"),
-        F.sum(F.col("_c") * F.col("_v")).alias("sum_v"),
-        F.sum(F.col("_c") * lnv).alias("log_gmean_micro_sum"),
-        F.sum(F.col("_c") * rec).alias("recip_pico_sum"))
-    nd = F.col("n").cast("double")
-    gmean = F.exp(F.col("log_gmean_micro_sum").cast("double")
-                  / (nd * F.lit(1e6)))
-    hmean = nd * F.lit(1e12) / F.col("recip_pico_sum").cast("double")
-    return s.select(*group_cols, "n", "sum_v",
-                    (F.col("sum_v").cast("double") / nd)
-                    .alias("mean_arith"),
-                    "log_gmean_micro_sum", gmean.alias("gmean"),
-                    "recip_pico_sum", hmean.alias("hmean"))
-
-
 def js_divergence(df: DataFrame, *, cat_col: str, group_col: str,
                   group_a: str, group_b: str,
                   group_cols: list[str] | None = None) -> DataFrame:
@@ -3225,44 +3164,6 @@ def winsorized_mean(df: DataFrame, *, value_col: str,
         wsum.alias("winsorized_sum"),
         (wsum.cast("double") / F.col("n").cast("double"))
         .alias("winsorized_mean"))
-
-
-def herfindahl_index(df: DataFrame, *, item_col: str,
-                     group_cols: list[str]) -> DataFrame:
-    """Herfindahl–Hirschman concentration index per group —
-    ``HHI = Σ share_i²`` over item frequency shares; 1/n_items
-    (perfectly even) … 1.0 (single item). The one-number "is this
-    source/vendor/domain mix dangerously concentrated" answer beside
-    :func:`group_entropy` (its information-theoretic cousin) and
-    :func:`top_p_coverage` (the head-mass view).
-
-    Determinism: per-item counts and the sum of squared counts are
-    exact BIGINTs (overflow at ~3·10⁹ rows per item — documented);
-    HHI is ONE expression over exact integers
-    (``sum_sq / (n·n)`` with the denominator multiplied in double to
-    dodge BIGINT overflow on huge groups).
-
-    Scale shape: one (group, item) hash-aggregate with map-side
-    combine, then one group aggregate. No window, no join.
-
-    Output: (group..., n, n_items, sum_sq, hhi).
-    """
-    if not group_cols:
-        raise ValueError("herfindahl_index: group_cols must be non-empty")
-    keep = F.col(item_col).isNotNull()
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    per_item = (df.where(keep)
-                .groupBy(*group_cols, F.col(item_col).alias("_i"))
-                .agg(F.count(F.lit(1)).alias("_c")))
-    s = per_item.groupBy(*group_cols).agg(
-        F.sum("_c").alias("n"),
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.col("_c") * F.col("_c")).alias("sum_sq"))
-    nd = F.col("n").cast("double")
-    return s.select(*group_cols, "n", "n_items", "sum_sq",
-                    (F.col("sum_sq").cast("double") / (nd * nd))
-                    .alias("hhi"))
 
 
 def mann_kendall(df: DataFrame, *, value_col: str,

@@ -641,7 +641,8 @@ def label_centroids(embeddings: DataFrame, *, vec_col: str = "embedding",
     bit-identical on every engine), summed as exact BIGINTs, and
     divided by the count with truncating integer division, so no float
     aggregate ever happens and partial-aggregation order cannot
-    perturb the result.
+    perturb the result (the same discipline as
+    ``eventops.group_outlier_stats``).
 
     Overflow headroom: |v| ≤ 10³ at scale 10⁶ keeps per-row magnitude
     ≤ 10⁹, safe to ~9·10⁹ rows per (label, dim) group.
@@ -911,8 +912,8 @@ def embedding_norm_stats(embeddings: DataFrame, *,
     :func:`~kml2geojson_spark.graph.degree_assortativity` rule —
     n·Q alone overflows BIGINT at corpus scale), z is one fixed IEEE
     expression, and the outlier verdict is an EXACT INTEGER
-    comparison (``(n·m − S)²·10⁶ > thr²·(n·Q − S²)`` in DECIMAL,
-    so no square root decides a verdict). NULL ids/vectors drop.
+    comparison (``(n·m − S)²·10⁶ > thr²·(n·Q − S²)`` in DECIMAL —
+    the `rolling_zscore` rule, widened). NULL ids/vectors drop.
 
     Scale shape: one narrow projection (fold per row), ONE global
     hash-aggregate producing a 1-row frame broadcast back — no

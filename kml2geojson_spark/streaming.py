@@ -384,6 +384,172 @@ def stream_dedup_new_docs(docs: DataFrame, *,
                 "doc_id string", "append", timeout))
 
 
+def stream_burst_dedup(events: DataFrame, *, gap_seconds: int = 60,
+                       state_timeout_minutes: int = 60) -> DataFrame:
+    """Streaming twin of :func:`kml2geojson_spark.eventops.
+    event_dedup_bursts`: per (user_id, event_type), events closer than
+    ``gap_seconds`` to the previous one belong to the same burst
+    (retry / double-fire), and only the burst's FIRST event is
+    emitted — emitted IMMEDIATELY (the keeper is the burst opener, so
+    unlike a session the answer needs no closing event), which makes
+    this an append-mode filter with O(1) state per key: (last event
+    us, keeper id of the open burst).
+
+    Late events admitted by the watermark that land INSIDE the open
+    burst's gap extend it (no emission); a late event EARLIER than
+    the current burst opener cannot retroactively replace the already
+    -emitted keeper — the batch op picks min(ts, id), so streaming
+    output can differ on late data by exactly that event; the pytest
+    pins the in-order equivalence.
+
+    State is partitioned by (user_id, event_type); timeout clears
+    idle keys past the watermark.
+
+    Output rows: (user_id, event_type, keeper_id, keeper_ts_us).
+    """
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    gap_us = int(gap_seconds) * 1_000_000
+
+    def fn(key, pdfs, state: GroupState):
+        user_id, event_type = key
+        if state.hasTimedOut:
+            state.remove()
+            return
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        rows = rows.sort_values(["ts", "event_id"], kind="mergesort")
+        ts_us = rows["ts"].astype("datetime64[us]").astype("int64")
+        ids = rows["event_id"]
+        last_us = state.get[0] if state.exists else None
+        out = {"user_id": [], "event_type": [], "keeper_id": [],
+               "keeper_ts_us": []}
+        for t, eid in zip(ts_us, ids):
+            t, eid = int(t), int(eid)
+            if last_us is None or t - last_us > gap_us:
+                out["user_id"].append(user_id)
+                out["event_type"].append(event_type)
+                out["keeper_id"].append(eid)
+                out["keeper_ts_us"].append(t)
+                last_us = t
+            else:
+                last_us = max(last_us, t)
+        state.update((int(last_us),))
+        state.setTimeoutTimestamp(
+            int(last_us) // 1000 + state_timeout_minutes * 60_000)
+        if out["user_id"]:
+            yield pd.DataFrame(out)
+
+    return (events
+            .withWatermark("ts", f"{state_timeout_minutes} minutes")
+            .groupBy("user_id", "event_type")
+            .applyInPandasWithState(
+                fn,
+                outputStructType=("user_id long, event_type string, "
+                                  "keeper_id long, keeper_ts_us long"),
+                stateStructType="last_us long",
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout))
+
+
+def stream_rolling_zscore(events: DataFrame, *, value_col: str = "value",
+                          ts_col: str = "ts",
+                          id_col: str = "event_id",
+                          key_col: str = "user_id",
+                          window: int = 20, min_periods: int = 5,
+                          threshold_milli: int = 3000) -> DataFrame:
+    """Streaming twin of :func:`kml2geojson_spark.relational
+    .rolling_zscore`: per-key trailing-window z-score anomaly flags
+    over a live event stream — the "alert when a sensor departs its
+    OWN recent history" operator, emitted per event in append mode.
+
+    Semantics match the batch operator for in-order arrival (the
+    pytest pins batch parity on an in-order corpus): per key, the
+    trailing frame is the last ``window`` INTEGER values in (ts, id)
+    order; n/S/Q are exact Python ints; ``z = (n·v − S)/√(n·Q − S²)``
+    is the identical IEEE expression and the anomaly verdict the
+    identical exact-integer comparison. Within a micro-batch rows are
+    sorted by (ts, id) before folding; late rows in LATER batches
+    fold in arrival order — the documented streaming trade (same
+    class as :func:`stream_burst_dedup`'s late-event note).
+
+    State per key is EXACTLY the last ``window − 1`` values (a tuple
+    of ints, ~8·window bytes) — bounded by key cardinality ×
+    window, never by stream length. The batch operator's threshold
+    bound applies unchanged: |z| ≤ √(window − 1), so size
+    ``window ≥ threshold² + 1``.
+
+    Output (append): (key, id, order_s, value, n_window, z,
+    is_anomaly).
+    """
+    import math as _math
+
+    import pandas as pd
+
+    if window < 2 or min_periods < 2 or min_periods > window:
+        raise ValueError(
+            "stream_rolling_zscore: need window >= 2 and "
+            "2 <= min_periods <= window")
+    if threshold_milli <= 0:
+        raise ValueError(
+            "stream_rolling_zscore: threshold_milli must be > 0")
+    hashed = events.select(
+        F.col(key_col).alias("key"),
+        F.col(id_col).alias("id"),
+        F.col(ts_col).cast("timestamp").cast("long").alias("order_s"),
+        F.col(value_col).cast("long").alias("value")).where(
+        F.col("key").isNotNull() & F.col("id").isNotNull()
+        & F.col("order_s").isNotNull() & F.col("value").isNotNull())
+
+    thr2 = threshold_milli * threshold_milli
+
+    def fn(key, pdfs, state):
+        (k,) = key
+        tail: list[int] = list(state.get[0]) if state.exists else []
+        rows = {"key": [], "id": [], "order_s": [], "value": [],
+                "n_window": [], "z": [], "is_anomaly": []}
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            pdf = pdf.sort_values(["order_s", "id"])
+            for _i, r in pdf.iterrows():
+                v = int(r["value"])
+                frame = tail[-(window - 1):] + [v]
+                n = len(frame)
+                s = sum(frame)
+                q = sum(x * x for x in frame)
+                num = n * v - s
+                den2 = n * q - s * s
+                if n >= min_periods and den2 > 0:
+                    z = float(num) / _math.sqrt(float(den2))
+                    flag = num * num * 1000000 > thr2 * den2
+                else:
+                    z = None
+                    flag = False
+                rows["key"].append(k)
+                rows["id"].append(int(r["id"]))
+                rows["order_s"].append(int(r["order_s"]))
+                rows["value"].append(v)
+                rows["n_window"].append(n)
+                rows["z"].append(z)
+                rows["is_anomaly"].append(bool(flag))
+                tail = frame[-(window - 1):]
+        if not rows["key"]:
+            return
+        state.update((tuple(tail),))
+        yield pd.DataFrame(rows)
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return (hashed.groupBy("key")
+            .applyInPandasWithState(
+                fn,
+                "key long, id long, order_s long, value long, "
+                "n_window int, z double, is_anomaly boolean",
+                "tail array<long>", "append",
+                GroupStateTimeout.NoTimeout))
+
+
 def _mg_fold(counters: dict, decrements: int, values,
              capacity: int) -> tuple[dict, int]:
     """One Misra–Gries pass: fold ``values`` (arrival order) into the
@@ -524,6 +690,88 @@ def stream_heavy_hitters(events: DataFrame, *, value_col: str,
                 "append", GroupStateTimeout.NoTimeout))
 
 
+def stream_ewma(events: DataFrame, *, value_col: str = "value",
+                ts_col: str = "ts", id_col: str = "event_id",
+                key_col: str = "user_id",
+                window: int = 8) -> DataFrame:
+    """Streaming twin of :func:`kml2geojson_spark.eventops.ewma_last`:
+    the per-key finite-window dyadic-weight EWMA level, re-emitted
+    per event in append mode — the live "current smoothed level"
+    board the batch operator computes once at the latest event.
+
+    Semantics match the batch operator for in-order arrival (the
+    pytest pins parity on an in-order corpus): per key, the i-th most
+    recent of the last ``window`` milli-integerized values carries
+    weight 2^(window−1−i); num/den are exact Python ints and
+    ``ewma_milli = num/den`` is the identical single IEEE division.
+    Within a micro-batch rows sort by (ts, id); late rows in LATER
+    batches fold in arrival order — the documented streaming trade
+    (:func:`stream_rolling_zscore`'s class).
+
+    State per key is EXACTLY the last ``window`` milli-values (a
+    tuple of ints plus the running event count) — bounded by key
+    cardinality × window, never stream length.
+
+    Output (append): (key, id, order_s, n_events, num, den,
+    ewma_milli).
+    """
+    import pandas as pd
+
+    if not 1 <= window <= 16:
+        raise ValueError(f"window must be in [1, 16], got {window}")
+    hashed = events.select(
+        F.col(key_col).alias("key"),
+        F.col(id_col).alias("id"),
+        F.col(ts_col).cast("timestamp").cast("long").alias("order_s"),
+        F.round(F.col(value_col) * F.lit(1000.0)).cast("long")
+        .alias("vm")).where(
+        F.col("key").isNotNull() & F.col("id").isNotNull()
+        & F.col("order_s").isNotNull() & F.col("vm").isNotNull())
+
+    def fn(key, pdfs, state):
+        (k,) = key
+        if state.exists:
+            tail = list(state.get[0])
+            seen = int(state.get[1])
+        else:
+            tail, seen = [], 0
+        rows = {"key": [], "id": [], "order_s": [], "n_events": [],
+                "num": [], "den": [], "ewma_milli": []}
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            pdf = pdf.sort_values(["order_s", "id"])
+            for _i, r in pdf.iterrows():
+                tail = (tail + [int(r["vm"])])[-window:]
+                seen += 1
+                num = den = 0
+                for i, v in enumerate(reversed(tail)):
+                    wt = 1 << (window - 1 - i)
+                    num += v * wt
+                    den += wt
+                rows["key"].append(k)
+                rows["id"].append(int(r["id"]))
+                rows["order_s"].append(int(r["order_s"]))
+                rows["n_events"].append(seen)
+                rows["num"].append(num)
+                rows["den"].append(den)
+                rows["ewma_milli"].append(float(num) / float(den))
+        if not rows["key"]:
+            return
+        state.update((tuple(tail), seen))
+        yield pd.DataFrame(rows)
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return (hashed.groupBy("key")
+            .applyInPandasWithState(
+                fn,
+                "key long, id long, order_s long, n_events long, "
+                "num long, den long, ewma_milli double",
+                "tail array<long>, seen long", "append",
+                GroupStateTimeout.NoTimeout))
+
+
 def stream_shot_boundaries(checksums: DataFrame, *,
                            threshold: int = 2000) -> DataFrame:
     """Streaming twin of
@@ -536,7 +784,7 @@ def stream_shot_boundaries(checksums: DataFrame, *,
     pytest pins parity): within a micro-batch frames sort by
     frame_idx; frames arriving in LATER batches fold against the
     last state frame in arrival order — the documented streaming
-    trade for late data. State per media ref is
+    trade (:func:`stream_ewma`'s class). State per media ref is
     EXACTLY the last (frame_idx, byte_sum) pair — O(1) per key.
 
     Output (append): (media_ref, frame_idx, byte_sum, jump,

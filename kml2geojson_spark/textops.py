@@ -1483,11 +1483,11 @@ def zipf_fit(documents: DataFrame, *, text_col: str = "text",
     (freq desc, token asc) assembled with :func:`vocabulary`'s
     two-phase range-partitioned row numbers (never one global window
     task); both regression variables are micro-nat integerized lns
-    (``round(ln(k)·10⁶)`` per exact integer, so every engine rounds
-    the same double to the same BIGINT), the five sufficient
-    statistics are exact DECIMAL(38,0) sums, and slope/intercept/R²
-    are fixed IEEE expressions of those exact integers —
-    bit-identical across engines and partitionings.
+    (``round(ln(k)·10⁶)`` per exact integer — the
+    :func:`~kml2geojson_spark.relational.group_entropy` rule), the
+    five sufficient statistics are exact DECIMAL(38,0) sums, and
+    slope/intercept/R² are fixed IEEE expressions of those exact
+    integers — bit-identical across engines and partitionings.
 
     Scale shape: one token explode + (token) hash-aggregate with
     map-side combine, one range repartition + per-bucket row
@@ -1568,9 +1568,9 @@ def bigram_lm_surprisal(documents: DataFrame, *, id_col: str = "doc_id",
     unigram counts and vocabulary size V. Per document,
     ``logprob_micro = Σ lnμ(C₁₂+1) − lnμ(C₁+V)`` over its adjacent
     token pairs — every ln micro-nat integerized per exact integer
-    (``lnμ(k) = round(ln(k)·10⁶)`` as a BIGINT), so the sum is an
-    exact BIGINT and the average surprisal ``−logprob/(n·10⁶)`` is
-    one fixed double expression —
+    (the :func:`~kml2geojson_spark.relational.group_entropy` rule),
+    so the sum is an exact BIGINT and the average surprisal
+    ``−logprob/(n·10⁶)`` is one fixed double expression —
     bit-identical across engines.
 
     Scale shape: tokens via ONE posexplode of the empty-filtered
@@ -1701,10 +1701,13 @@ def char_entropy(documents: DataFrame, *, id_col: str = "doc_id",
     language sits in a narrow entropy band, encoded blobs above it,
     repeated-character spam below. Complements
     :func:`bigram_lm_surprisal` (word order) and
-    :func:`repetition_stats` (span repeats) at the character level.
+    :func:`repetition_stats` (span repeats) at the character level;
+    the per-DOCUMENT counterpart of
+    :func:`~kml2geojson_spark.relational.group_entropy` (which
+    measures one categorical column's mix per GROUP).
 
-    Determinism (micro-nat integerized lns,
-    ``lnμ(k) = round(ln(k)·10⁶)`` per exact integer): per-doc
+    Determinism (the :func:`~kml2geojson_spark.relational
+    .group_entropy` micro-nat rule applied per document): per-doc
     char counts c are exact BIGINTs; entropy numerator
     ``n·lnμ(n) − Σ c·lnμ(c)`` is an exact BIGINT (each ln
     integerized per exact integer), and the entropy is ONE division

@@ -451,6 +451,58 @@ def test_triangle_count_all_equi_joins_no_python(spark):
         assert marker not in plan, marker
 
 
+def test_skyline_only_bucket_frame_window_is_unpartitioned(spark):
+    """The point-level window must be keyed by the x bucket; only the
+    n_buckets-row aggregate frame (its line mentions bk_min) may use a
+    single-partition window, and its result returns via broadcast."""
+    from kml2geojson_spark.relational import skyline2d
+    df = spark.range(5000).selectExpr("id % 997 AS x", "(id * 7) % 991 AS y")
+    plan = _plan(skyline2d(df))
+    for line in plan.splitlines():
+        if "windowspecdefinition(" in line and "bk_min" not in line:
+            assert "windowspecdefinition(bk#" in line, line
+    assert "BroadcastHashJoin" in plan, plan
+    assert plan.count("SinglePartition") == 1, plan
+
+
+def test_group_outliers_broadcasts_stats_stays_jvm(spark):
+    from kml2geojson_spark.eventops import group_outlier_stats
+    df = spark.range(2000).selectExpr(
+        "id AS event_id", "concat('g', id % 5) AS event_type",
+        "CAST(id % 100 AS DOUBLE) AS value")
+    plan = _plan(group_outlier_stats(df))
+    assert "BroadcastHashJoin" in plan, plan
+    assert "partial_" in plan  # map-side combine on the stats aggregate
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert marker not in plan, marker
+
+
+def test_od_matrix_window_is_user_partitioned(spark):
+    from kml2geojson_spark.eventops import od_matrix
+    df = spark.range(1000).selectExpr(
+        "id AS event_id", "id % 50 AS user_id",
+        "CAST(id % 360 AS DOUBLE) AS x", "CAST(id % 170 AS DOUBLE) AS y")
+    plan = _plan(od_matrix(df))
+    for line in plan.splitlines():
+        if "windowspecdefinition(" in line:
+            assert "windowspecdefinition(user_id#" in line, line
+    assert "partial_" in plan
+
+
+def test_funnel_no_python_no_cartesian(spark):
+    from kml2geojson_spark.eventops import funnel_counts
+    df = spark.range(2000).selectExpr(
+        "id AS event_id", "id % 100 AS user_id",
+        "concat('s', id % 4) AS event_type",
+        "timestamp_ntz '2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS ts",
+        "0.0 AS value")
+    plan = _plan(funnel_counts(df, ["s0", "s1", "s2"]))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert marker not in plan, marker
+
+
 def test_hilbert_encode_linear_codegen_no_python(spark):
     """The unrolled state machine must stay LINEAR in the plan (one
     Project per level, not an exponential substitution) and inside a
@@ -554,6 +606,22 @@ def test_knn_join_and_dwithin_fully_jvm(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_touch_attribution_single_exchange(spark):
+    """Attribution = one user-key Exchange feeding the window; no
+    conversion-by-touch join, no Python."""
+    import datetime as dt
+    from kml2geojson_spark.eventops import touch_attribution
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1), 1, "view"),
+         (2, dt.datetime(2024, 1, 2), 1, "purchase")],
+        "event_id long, ts timestamp, user_id long, event_type string")
+    plan = _plan(touch_attribution(df, conversion_type="purchase",
+                                   touch_types=["view", "click"]))
+    assert plan.count("Exchange") == 1, plan
+    for marker in ("Join", "ArrowEvalPython", "BatchEvalPython"):
+        assert marker not in plan, f"{marker} found in attribution plan"
+
+
 def test_chunk_documents_no_exchange_no_python(spark):
     """Chunking is a narrow map: zero shuffles, zero Python eval."""
     from kml2geojson_spark.textops import chunk_documents
@@ -602,6 +670,68 @@ def test_convex_hull_partial_then_grouped(spark):
     assert "Join" not in plan, plan
 
 
+def test_group_ols_single_hash_agg(spark):
+    from kml2geojson_spark.relational import group_ols
+    df = spark.createDataFrame([(1, 2, 3)], "g int, x long, y long")
+    plan = _plan(group_ols(df, x_col="x", y_col="y", group_cols=["g"]))
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("HashAggregate") >= 2, plan  # map-side combine
+    for marker in ("Join", "Window", "ArrowEvalPython"):
+        assert marker not in plan, f"{marker} found in ols plan"
+
+
+def test_welch_and_ztest_single_hash_aggregate(spark):
+    """Both two-sample tests: ONE map-side-combinable hash aggregate —
+    no window, no join, no Python."""
+    from kml2geojson_spark.relational import (two_proportion_ztest,
+                                              welch_ttest)
+    df = spark.createDataFrame([("g", "A", 1), ("g", "B", 0)],
+                               "grp string, side string, v long")
+    for out in (welch_ttest(df, value_col="v", group_col="side",
+                            group_a="A", group_b="B",
+                            group_cols=["grp"]),
+                two_proportion_ztest(df, success_col="v",
+                                     group_col="side", group_a="A",
+                                     group_b="B", group_cols=["grp"])):
+        plan = _plan(out)
+        assert plan.count("Exchange") == 1, plan
+        assert plan.count("HashAggregate") >= 2, plan  # partial+final
+        for marker in ("Window", "Join", "ArrowEvalPython",
+                       "BatchEvalPython"):
+            assert marker not in plan, f"{marker} in two-sample plan"
+
+
+def test_mannwhitney_one_partitioning(spark):
+    """MWU: the value-count agg, the prefix/full-frame windows, and
+    the final agg all share the group partitioning — exactly one
+    Exchange, no join."""
+    from kml2geojson_spark.relational import mannwhitney_u
+    df = spark.createDataFrame([("g", "A", 1), ("g", "B", 2)],
+                               "grp string, side string, v long")
+    plan = _plan(mannwhitney_u(df, value_col="v", side_col="side",
+                               side_a="A", side_b="B",
+                               group_cols=["grp"]))
+    # (group, value) agg exchange + ONE group exchange shared by the
+    # prefix window, the full-frame window, and the final aggregate
+    assert plan.count("Exchange") == 2, plan
+    assert plan.count("Window") == 2, plan
+    assert "Join" not in plan, plan
+
+
+def test_anova_two_aggregates_one_exchange_chain(spark):
+    """ANOVA: (group, level) agg then group agg — no window, no join;
+    AQE may coalesce but never add a join."""
+    from kml2geojson_spark.relational import oneway_anova
+    df = spark.createDataFrame([("g", "a", 1), ("g", "b", 2)],
+                               "grp string, lvl string, v long")
+    plan = _plan(oneway_anova(df, value_col="v", factor_col="lvl",
+                              group_cols=["grp"]))
+    for marker in ("Window", "Join", "ArrowEvalPython",
+                   "BatchEvalPython"):
+        assert marker not in plan, f"{marker} in anova plan"
+    assert plan.count("HashAggregate") >= 2
+
+
 def test_benford_single_scan_single_exchange(spark):
     """Benford: one conditional hash agg (9 counters) + scalar
     explode — ONE scan of the base relation, one Exchange, no join."""
@@ -611,6 +741,19 @@ def test_benford_single_scan_single_exchange(spark):
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan, plan
     assert plan.count("Scan ExistingRDD") <= 1
+
+
+def test_lag_autocorr_one_window_partitioning(spark):
+    """All lag leads ride ONE per-group window sort; then one
+    (group, lag) hash agg — two Exchanges total, no join."""
+    from kml2geojson_spark.relational import lag_autocorr
+    df = spark.createDataFrame([("g", 1, 5), ("g", 2, 6)],
+                               "grp string, o long, v long")
+    plan = _plan(lag_autocorr(df, value_col="v", order_cols="o",
+                              group_cols=["grp"], lags=(1, 2, 3)))
+    assert plan.count("Window") == 1, plan
+    assert plan.count("Exchange") <= 2, plan
+    assert "Join" not in plan, plan
 
 
 def test_winnow_per_doc_window_no_join(spark):
@@ -635,6 +778,43 @@ def test_snm_leads_share_one_window_sort(spark):
     assert plan.count("Window") == 1, plan
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan, plan
+
+
+def test_pettitt_single_exchange_no_join(spark):
+    """Pettitt: both rank windows, the cumulative U window and the
+    argmax pick all share ONE group-key partitioning — one Exchange,
+    no join, no pair blowup, no Python."""
+    from kml2geojson_spark.relational import pettitt_test
+    df = spark.createDataFrame([("g", 1, 2)], "g string, t long, v long")
+    plan = _plan(pettitt_test(df, value_col="v", order_cols="t",
+                              group_cols=["g"]))
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert marker not in plan
+
+
+def test_cliffs_delta_single_exchange_no_join(spark):
+    """Cliff's delta via the rank identity: two rank windows + the
+    reduce share one group partitioning — one Exchange, no pair
+    join."""
+    from kml2geojson_spark.relational import cliffs_delta
+    df = spark.createDataFrame([("g", 1, 1)], "g string, v long, f long")
+    plan = _plan(cliffs_delta(df, value_col="v", flag_col="f",
+                              group_cols=["g"]))
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_jarque_bera_one_hash_aggregate(spark):
+    """JB: four power sums in ONE hash-aggregate with map-side
+    combine — one Exchange, no window, no join (the one-pass shape,
+    not the textbook two-pass)."""
+    from kml2geojson_spark.relational import jarque_bera
+    df = spark.createDataFrame([("g", 1)], "g string, v long")
+    plan = _plan(jarque_bera(df, value_col="v", group_cols=["g"]))
+    assert plan.count("Exchange") == 1, plan
+    assert "Window" not in plan and "Join" not in plan, plan
 
 
 def test_kmv_distinct_then_rank_share_partitioning(spark):
@@ -673,6 +853,46 @@ def test_neighbor_jaccard_equi_joins_only(spark):
     plan = _plan(neighbor_jaccard(e))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_grubbs_boxplot_join_back_is_equi(spark):
+    """Grubbs / boxplot: the moment join-back is an equi-join on the
+    group key — no nested loop, no Python."""
+    from kml2geojson_spark.relational import boxplot_stats, grubbs_test
+    df = spark.createDataFrame([("g", 1, 5)], "g string, id long, v long")
+    for out in (grubbs_test(df, value_col="v", id_col="id",
+                            group_cols=["g"]),
+                boxplot_stats(df, value_col="v", group_cols=["g"])):
+        plan = _plan(out)
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        for marker in ("BatchEvalPython", "ArrowEvalPython",
+                       "MapInPandas"):
+            assert marker not in plan
+
+
+def test_sequence_gaps_one_partitioning(spark):
+    """Islands/gaps: distinct + LAG window share the group key — no
+    join, no Python."""
+    from kml2geojson_spark.relational import sequence_gaps
+    df = spark.createDataFrame([("g", 1)], "g string, i long")
+    plan = _plan(sequence_gaps(df, id_col="i", group_cols=["g"]))
+    assert "Join" not in plan, plan
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert marker not in plan
+
+
+def test_lead_lag_corr_no_self_join(spark):
+    """Lead-lag corr: all 2K+1 shifts run over ONE window
+    partitioning, the stack is a map-side explode — no self-join."""
+    from kml2geojson_spark.relational import lead_lag_corr
+    df = spark.createDataFrame([("g", 1, 2, 3)],
+                               "g string, t long, x long, y long")
+    plan = _plan(lead_lag_corr(df, x_col="x", y_col="y",
+                               order_col="t", group_cols=["g"],
+                               max_lag=3))
+    assert "Join" not in plan, plan
+    assert plan.count("Window") == 1, plan
 
 
 def test_raster_peaks_scatter_join_is_equi(spark):

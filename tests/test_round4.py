@@ -1,4 +1,5 @@
-"""Round-4 additions: forward as-of direction, the real PPM media decode, and the md5-Rademacher pure-Column
+"""Round-4 additions: gaps-and-islands interval merging, forward as-of
+direction, the real PPM media decode, and the md5-Rademacher pure-Column
 LSH bucket path (plan-asserted zero-Python)."""
 
 from __future__ import annotations
@@ -10,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kml2geojson_spark.asof import asof_join
+from kml2geojson_spark.eventops import merge_intervals
 from kml2geojson_spark.multimodal import (_md5_chain, _ppm_payload,
                                           decode_ppm, fetch_media_stub,
                                           media_features, parse_ppm)
@@ -19,6 +21,63 @@ from kml2geojson_spark.simsearch import (hyperplane_band_buckets,
 
 def _mk(spark, rows, cols):
     return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+
+
+# -- merge_intervals ---------------------------------------------------------
+
+def test_merge_intervals_touching_and_gaps(spark):
+    iv = _mk(spark, [
+        ("a", 1, 3), ("a", 3, 5),      # touching -> one island
+        ("a", 7, 9),                   # strict gap -> new island
+        ("b", 1, 10), ("b", 2, 4),     # contained -> one island
+    ], ["key", "start", "end"])
+    got = {(r["key"], r["island_start"]): (r["island_end"], r["n_intervals"])
+           for r in merge_intervals(iv).collect()}
+    assert got == {("a", 1): (5, 2), ("a", 7): (9, 1), ("b", 1): (10, 2)}
+
+
+def test_merge_intervals_running_max_not_lag(spark):
+    # [1,10] then [2,3] then [4,6]: a lag(end)-based flag would wrongly
+    # split at 4 (prev end 3); the running MAX(end) keeps one island
+    iv = _mk(spark, [("k", 1, 10), ("k", 2, 3), ("k", 4, 6)],
+             ["key", "start", "end"])
+    out = merge_intervals(iv).collect()
+    assert len(out) == 1
+    assert (out[0]["island_start"], out[0]["island_end"],
+            out[0]["n_intervals"]) == (1, 10, 3)
+
+
+def test_merge_intervals_partitioning_invariant(spark):
+    rng = np.random.default_rng(7)
+    n = 400
+    pdf = pd.DataFrame({
+        "key": rng.integers(0, 5, n),
+        "start": rng.integers(0, 300, n),
+    })
+    pdf["end"] = pdf["start"] + rng.integers(0, 20, n)
+    a = merge_intervals(spark.createDataFrame(pdf)).toPandas()
+    b = merge_intervals(spark.createDataFrame(pdf).repartition(13)) \
+        .toPandas()
+    key = ["key", "island_start", "island_end", "n_intervals"]
+    pd.testing.assert_frame_equal(
+        a.sort_values(key).reset_index(drop=True),
+        b.sort_values(key).reset_index(drop=True))
+    # brute-force oracle per key
+    for k, g in pdf.groupby("key"):
+        ivs = sorted(zip(g["start"], g["end"]))
+        islands, cur_s, cur_e, cnt = [], None, None, 0
+        for s, e in ivs:
+            if cur_s is None or s > cur_e:
+                if cur_s is not None:
+                    islands.append((cur_s, cur_e, cnt))
+                cur_s, cur_e, cnt = s, e, 1
+            else:
+                cur_e, cnt = max(cur_e, e), cnt + 1
+        islands.append((cur_s, cur_e, cnt))
+        mine = sorted(
+            (r.island_start, r.island_end, r.n_intervals)
+            for r in a[a["key"] == k].itertuples())
+        assert mine == islands, f"key {k}"
 
 
 # -- forward as-of -----------------------------------------------------------
@@ -212,6 +271,20 @@ def test_adaptive_knn_candidate_stage_pure_column(spark):
     assert ring.count() == 25
 
 
+def test_merge_intervals_single_exchange_plan(spark):
+    """The island aggregation must reuse the window's hash
+    partitioning: exactly ONE Exchange (the key shuffle), one Sort,
+    and partial+final aggregation — no Python eval anywhere."""
+    iv = spark.createDataFrame(
+        [("k", 1, 3)], "key string, start int, end int")
+    plan = merge_intervals(iv)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                   "PythonMapInArrow"):
+        assert marker not in plan, plan
+
+
 def test_explode_kring_matches_np(spark):
     from kml2geojson_spark.spatial.cells import cell_encode_np, cell_kring_np
     from kml2geojson_spark.spatial.ops import explode_kring
@@ -297,6 +370,20 @@ def test_edit_distance_pairs_empty_string(spark):
            for r in edit_distance_pairs(df, col="name").collect()}
     assert got == {("", "a"), ("", "b"), ("a", "b"), ("a", "ab"),
                    ("ab", "b")}
+
+
+def test_merge_intervals_degenerate_inverted_rows(spark):
+    """start > end rows participate as written (their endpoints feed
+    the running max) — pinned so the Spark window and the SQL oracle
+    formulation can never drift on degenerate input."""
+    iv = _mk(spark, [("k", 5, 3), ("k", 4, 10), ("z", 7, 2)],
+             ["key", "start", "end"])
+    got = {(r["key"]): (r["island_start"], r["island_end"],
+                        r["n_intervals"])
+           for r in merge_intervals(iv).collect()}
+    # sorted: (4,10) then (5,3): 5 <= 10 -> one island, end max(10,3)
+    assert got["k"] == (4, 10, 2)
+    assert got["z"] == (7, 2, 1)
 
 
 # --- expat tree-builder lane (kmlparse._parse_kml_expat) -------------------

@@ -1,10 +1,101 @@
-"""Round-5 final-session operators: decontaminate_near, buffer_cells,
-convex_hull, quantile_bucket_assign and quantize_embeddings."""
+"""Round-5 final-session operators: cooccurrence_pairs (q138) and
+session_path_counts (q139) — post-pin registrations, in-repo oracle
+sweep evidence."""
 
 from __future__ import annotations
 
+from datetime import datetime
+from itertools import combinations
+
 import numpy as np
 import pytest
+
+from kml2geojson_spark.relational import cooccurrence_pairs
+from kml2geojson_spark.eventops import session_path_counts
+
+
+# ------------------------------------------------------- cooccurrence
+
+
+def _baskets(spark, rows):
+    return spark.createDataFrame(rows, "bk long, it long")
+
+
+def test_cooccurrence_hand(spark):
+    df = _baskets(spark, [(1, 10), (1, 11), (1, 10),   # dup item ignored
+                          (2, 10), (2, 11), (2, 12),
+                          (3, 10), (None, 9), (4, None)])
+    got = {(r["item_a"], r["item_b"]): r["n_baskets"]
+           for r in cooccurrence_pairs(
+               df, basket_col="bk", item_col="it").collect()}
+    assert got == {(10, 11): 2, (10, 12): 1, (11, 12): 1}
+
+
+def test_cooccurrence_min_count_and_max_basket(spark):
+    df = _baskets(spark, [(1, 10), (1, 11),
+                          (2, 10), (2, 11),
+                          (3, 10), (3, 11), (3, 12)])  # whale if max=2
+    got = cooccurrence_pairs(df, basket_col="bk", item_col="it",
+                             min_count=2).collect()
+    assert {(r["item_a"], r["item_b"], r["n_baskets"])
+            for r in got} == {(10, 11, 3)}
+    got = cooccurrence_pairs(df, basket_col="bk", item_col="it",
+                             max_basket=2).collect()
+    assert {(r["item_a"], r["item_b"], r["n_baskets"])
+            for r in got} == {(10, 11, 2)}
+    with pytest.raises(ValueError):
+        cooccurrence_pairs(df, basket_col="bk", item_col="it", min_count=0)
+
+
+def test_cooccurrence_matches_brute(spark):
+    rng = np.random.default_rng(138)
+    rows = [(int(rng.integers(0, 40)), int(rng.integers(0, 15)))
+            for _ in range(400)]
+    want = {}
+    baskets = {}
+    for bk, it in rows:
+        baskets.setdefault(bk, set()).add(it)
+    for items in baskets.values():
+        for a, b in combinations(sorted(items), 2):
+            want[(a, b)] = want.get((a, b), 0) + 1
+    got = {(r["item_a"], r["item_b"]): r["n_baskets"]
+           for r in cooccurrence_pairs(
+               _baskets(spark, rows), basket_col="bk",
+               item_col="it").collect()}
+    assert got == want
+
+
+# ---------------------------------------------------- session paths
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        [(u, datetime.fromtimestamp(t), i, ty) for u, t, i, ty in rows],
+        "user_id long, ts timestamp, event_id long, event_type string")
+
+
+def test_session_paths_hand(spark):
+    rows = [
+        (1, 1000, 1, "a"), (1, 1100, 2, "b"),      # session 1: a>b
+        (1, 9000, 3, "a"), (1, 9100, 4, "c"),      # session 2: a>c
+        (2, 1000, 5, "a"), (2, 1000, 6, "b"),      # tie ts → id order: a>b
+        (None, 1000, 7, "z"),
+    ]
+    got = {r["path"]: r["n_sessions"]
+           for r in session_path_counts(
+               _events(spark, rows), gap_seconds=1800).collect()}
+    assert got == {"a>b": 2, "a>c": 1}
+
+
+def test_session_paths_truncation_and_gap_edge(spark):
+    rows = [(1, 1000 + 100 * k, k, "e%d" % k) for k in range(8)]
+    # gap exactly gap_seconds stays in-session
+    rows.append((1, 1700 + 1800, 99, "tail"))
+    got = {r["path"]: r["n_sessions"]
+           for r in session_path_counts(
+               _events(spark, rows), gap_seconds=1800,
+               max_len=3).collect()}
+    assert got == {"e0>e1>e2": 1}
 
 
 # ------------------------------------------------- fuzzy decontamination
@@ -219,6 +310,98 @@ def test_quantile_bucket_assign_nulls_skew_and_guard(spark):
         quantile_bucket_assign(df, "v", n_buckets=1)
 
 
+# --- group_ols (per-group least-squares trend) -------------------------------
+
+def test_group_ols_matches_numpy(spark):
+    import numpy as np
+    import random as _random
+    from kml2geojson_spark.relational import group_ols
+    rng = _random.Random(29)
+    rows = []
+    for g in range(4):
+        for _ in range(60):
+            x = rng.randrange(0, 1000)
+            y = 3 * x + g * 100 + rng.randrange(-50, 51)
+            rows.append((g, x, y))
+    rows += [(7, 5, 9), (7, 5, 11)]      # constant x -> NULL fit
+    rows += [(8, 1, 4), (8, 2, 4)]       # constant y -> slope 0, r2 NULL
+    rows += [(None, 1, 1), (1, None, 1), (1, 1, None)]  # dropped
+    df = spark.createDataFrame(rows, "g int, x long, y long")
+    got = {r["g"]: r for r in
+           group_ols(df, x_col="x", y_col="y", group_cols=["g"]).collect()}
+    for g in range(4):
+        pts = [(x, y) for gg, x, y in rows
+               if gg == g and x is not None and y is not None]
+        xs = np.array([p[0] for p in pts], dtype=float)
+        ys = np.array([p[1] for p in pts], dtype=float)
+        # independent CENTERED formulation vs the operator's
+        # uncentered-sums closed form
+        cov = float(np.mean((xs - xs.mean()) * (ys - ys.mean())))
+        vx = float(np.mean((xs - xs.mean()) ** 2))
+        vy = float(np.mean((ys - ys.mean()) ** 2))
+        slope = cov / vx
+        intercept = float(ys.mean() - slope * xs.mean())
+        r = cov / (vx * vy) ** 0.5
+        assert abs(got[g]["slope"] - slope) < 1e-8
+        assert abs(got[g]["intercept"] - intercept) < 1e-6
+        assert abs(got[g]["r2"] - r * r) < 1e-8
+        assert got[g]["n"] == 60
+        assert got[g]["sx"] == sum(p[0] for p in pts)  # exact sums
+    assert got[7]["slope"] is None and got[7]["r2"] is None
+    assert got[8]["slope"] == 0.0 and got[8]["r2"] is None
+
+
+def test_group_ols_guards(spark):
+    import pytest
+    from pyspark.sql import functions as F
+    from kml2geojson_spark.relational import group_ols
+    df = spark.createDataFrame([(1, 0.5, 2)], "g int, x double, y long")
+    with pytest.raises(ValueError):
+        group_ols(df, x_col="x", y_col="y", group_cols=["g"])
+    with pytest.raises(ValueError):
+        group_ols(df.select("g", F.col("y").alias("x"), "y"),
+                  x_col="x", y_col="y", group_cols=[])
+
+
+# --- group_gini (rank-formula concentration) ---------------------------------
+
+def test_group_gini_known_values_and_tie_invariance(spark):
+    from kml2geojson_spark.relational import group_gini
+    rows = ([(1, v) for v in [10, 10, 10, 10]]        # equality -> 0
+            + [(2, v) for v in [0, 0, 0, 100]]        # one holder -> 3/4
+            + [(3, v) for v in [1, 2, 3, 4, 5]]
+            + [(4, 0), (4, 0)]                        # all-zero -> NULL
+            + [(5, 7)])                               # singleton -> 0
+    df = spark.createDataFrame(rows, "g int, v long")
+    got = {r["g"]: r for r in
+           group_gini(df, value_col="v", group_cols=["g"]).collect()}
+    assert got[1]["gini"] == 0.0
+    assert abs(got[2]["gini"] - 0.75) < 1e-12
+    # brute force for group 3: G = sum_i sum_j |xi-xj| / (2 n^2 mean)
+    xs = [1, 2, 3, 4, 5]
+    brute = (sum(abs(a - b) for a in xs for b in xs)
+             / (2.0 * len(xs) ** 2 * (sum(xs) / len(xs))))
+    assert abs(got[3]["gini"] - brute) < 1e-12
+    assert got[4]["gini"] is None
+    assert got[5]["gini"] == 0.0
+    # tie-order invariance: shuffled input partitioning, same result
+    got13 = {r["g"]: r["gini"] for r in
+             group_gini(df.repartition(13), value_col="v",
+                        group_cols=["g"]).collect()}
+    assert got13 == {g: r["gini"] for g, r in got.items()}
+
+
+def test_group_gini_guards(spark):
+    import pytest
+    from kml2geojson_spark.relational import group_gini
+    dff = spark.createDataFrame([(1, 0.5)], "g int, v double")
+    with pytest.raises(ValueError):
+        group_gini(dff, value_col="v", group_cols=["g"])
+    dfn = spark.createDataFrame([(1, -3)], "g int, v long")
+    with pytest.raises(Exception):  # negative raises in-task
+        group_gini(dfn, value_col="v", group_cols=["g"]).collect()
+
+
 # --- quantize_embeddings (symmetric int8) ------------------------------------
 
 def test_quantize_embeddings_matches_numpy_and_bounds(spark):
@@ -250,3 +433,51 @@ def test_quantize_embeddings_matches_numpy_and_bounds(spark):
     assert got[(101, 0)][0] == -127 and got[(101, 1)][0] == 127
 
 
+# --- group_mad_outliers (robust MAD flags) -----------------------------------
+
+def test_group_mad_outliers_matches_brute(spark):
+    import random as _random
+    from kml2geojson_spark.relational import group_mad_outliers
+    rng = _random.Random(37)
+    rows = []
+    for g in range(3):
+        rows += [(g, i, rng.randrange(90, 111)) for i in range(41)]
+        rows.append((g, 900 + g, 10_000))      # one whale per group
+    rows += [(5, 1, 7), (5, 2, 7), (5, 3, 7), (5, 4, 99)]  # MAD = 0
+    df = spark.createDataFrame(rows, "g int, id long, v long")
+    got = {(r["g"], r["id"]): (r["dev"], r["mad"], r["is_outlier"])
+           for r in group_mad_outliers(
+               df, value_col="v", id_col="id", group_cols=["g"]).collect()}
+
+    def lowmed(pairs):  # pairs of (key, id); returns key at rank
+        s = sorted(pairs)
+        return s[(len(s) + 1) // 2 - 1][0]
+
+    for g in {r[0] for r in rows}:
+        grp = [(i, v) for gg, i, v in rows if gg == g]
+        med = lowmed([(v, i) for i, v in grp])
+        mad = lowmed([(abs(v - med), i) for i, v in grp])
+        for i, v in grp:
+            dev = abs(v - med)
+            assert got[(g, i)] == (dev, mad, dev * 1000 > 3000 * mad), \
+                (g, i, med, mad)
+    # every whale flagged; zero-MAD group flags exactly its deviator
+    assert all(got[(g, 900 + g)][2] for g in range(3))
+    assert got[(5, 4)][2] and not got[(5, 1)][2]
+
+
+def test_group_mad_outliers_guards_and_plan(spark):
+    import pytest
+    from kml2geojson_spark.relational import group_mad_outliers
+    dff = spark.createDataFrame([(1, 1, 0.5)], "g int, id long, v double")
+    with pytest.raises(ValueError):
+        group_mad_outliers(dff, value_col="v", id_col="id",
+                           group_cols=["g"])
+    dfl = spark.createDataFrame([(1, 1, 5)], "g int, id long, v long")
+    with pytest.raises(ValueError):
+        group_mad_outliers(dfl, value_col="v", id_col="id", group_cols=[])
+    # ONE Exchange: the second median pass re-sorts, never re-shuffles
+    plan = group_mad_outliers(dfl, value_col="v", id_col="id",
+                              group_cols=["g"])._jdf \
+        .queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan

@@ -11,7 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from kml2geojson_spark.textops import passage_dedup, lang_ngram_profile
+from kml2geojson_spark.eventops import inter_event_stats, customer_rfm
+from kml2geojson_spark.relational import key_skew_stats
 from kml2geojson_spark.spatial.ops import union_cover_stats
+
+SF = "/root/testdata/sf0.01"
 
 
 def _plan(df) -> str:
@@ -85,6 +89,102 @@ def test_lang_ngram_profile_rank_is_deterministic_on_count_ties(spark):
     assert got == ["abc", "bcd"]
 
 
+# ---------------------------------------------------------------- events
+
+
+def test_inter_event_stats_gaps(spark):
+    rows = [(1, "2024-01-01 00:00:00", 10),
+            (1, "2024-01-01 00:00:30", 11),
+            (1, "2024-01-01 00:02:30", 12),
+            (2, "2024-01-01 09:00:00", 13),    # single event: no gaps
+            (None, "2024-01-01 00:00:00", 14),  # NULL user dropped
+            (3, None, 15)]                      # NULL ts dropped
+    df = spark.createDataFrame(rows, "user_id long, ts string, event_id long") \
+        .select("user_id", F.col("ts").cast("timestamp").alias("ts"),
+                "event_id")
+    got = {r["user_id"]: r for r in inter_event_stats(df).collect()}
+    assert set(got) == {1, 2}
+    u1 = got[1]
+    assert (u1["n_events"], u1["n_gaps"], u1["min_gap_s"],
+            u1["max_gap_s"], u1["span_s"]) == (3, 2, 30, 120, 150)
+    u2 = got[2]
+    assert (u2["n_events"], u2["n_gaps"], u2["span_s"]) == (1, 0, 0)
+    assert u2["min_gap_s"] is None and u2["max_gap_s"] is None
+
+
+def test_inter_event_stats_tie_order_by_event_id(spark):
+    # equal timestamps: gap 0 regardless of order, but the lag chain
+    # must be deterministic — assert it runs and yields gap 0
+    rows = [(1, "2024-01-01 00:00:00", 2), (1, "2024-01-01 00:00:00", 1)]
+    df = spark.createDataFrame(rows, "user_id long, ts string, event_id long") \
+        .select("user_id", F.col("ts").cast("timestamp").alias("ts"),
+                "event_id")
+    (r,) = inter_event_stats(df).collect()
+    assert (r["n_gaps"], r["min_gap_s"], r["max_gap_s"]) == (1, 0, 0)
+
+
+def test_inter_event_stats_single_exchange_plan(spark):
+    events = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(inter_event_stats(events))
+    assert plan.count("Exchange") == 1
+    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+
+
+# ------------------------------------------------------------------- rfm
+
+
+def test_customer_rfm_exact_metrics(spark):
+    rows = [(1, "2024-01-10 00:00:00", 10.00),
+            (1, "2024-01-20 00:00:00", 5.50),
+            (2, "2024-01-25 00:00:00", 100.00)]
+    df = spark.createDataFrame(
+        rows, "o_custkey long, o_orderdate string, o_totalprice double") \
+        .select("o_custkey",
+                F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
+                "o_totalprice")
+    got = {r["custkey"]: r for r in customer_rfm(df, n_tiles=2).collect()}
+    # anchor = 2024-01-25 (customer 2's last order)
+    assert got[1]["recency_days"] == 5 and got[2]["recency_days"] == 0
+    assert got[1]["frequency"] == 2 and got[2]["frequency"] == 1
+    assert got[1]["monetary_cents"] == 1550
+    assert got[2]["monetary_cents"] == 10000
+    # most recent / biggest spender gets tile 1
+    assert got[2]["r_score"] == 1 and got[1]["r_score"] == 2
+    assert got[2]["m_score"] == 1 and got[1]["m_score"] == 2
+    assert got[1]["f_score"] == 1 and got[2]["f_score"] == 2
+
+
+def test_customer_rfm_validates_tiles(spark):
+    df = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", 1.0)],
+        "o_custkey long, o_orderdate string, o_totalprice double") \
+        .select("o_custkey",
+                F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
+                "o_totalprice")
+    with pytest.raises(ValueError):
+        customer_rfm(df, n_tiles=0)
+
+
+# ------------------------------------------------------------------ skew
+
+
+def test_key_skew_stats_exact_ppm(spark):
+    # key 7 carries 6 of 10 rows over 3 keys
+    rows = [(7,)] * 6 + [(8,)] * 3 + [(9,)] * 1 + [(None,)]
+    df = spark.createDataFrame(rows, "k long")
+    got = [(r["key"], r["cnt"], r["share_ppm"], r["avg_multiple_ppm"])
+           for r in key_skew_stats(df, "k", k=2).collect()]
+    # share = 6/10, multiple = 6/(10/3)
+    assert got == [(7, 6, 600000, 1800000), (8, 3, 300000, 900000)]
+
+
+def test_key_skew_stats_topk_plan_has_no_global_sort(spark):
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    plan = _plan(key_skew_stats(li, "l_suppkey", k=15))
+    assert "TakeOrderedAndProject" in plan
+    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+
+
 # ----------------------------------------------------------------- union
 
 
@@ -115,6 +215,40 @@ def test_union_cover_stats_duplicate_polygon_does_not_grow_union(spark):
     assert u2["n_cells"] == u1["n_cells"]
     assert u2["union_cells_nano"] == u1["union_cells_nano"]
     assert u2["n_cover_rows"] == 2 * u1["n_cover_rows"]
+
+
+# ------------------------------------- two-pass window-oracle totality
+
+
+def test_merge_intervals_duplicate_rows_tie_invariant(spark):
+    """Duplicate (key, start, end) rows at an island boundary must
+    land in ONE island with n_intervals counting both — the case whose
+    two-pass SQL replay flaked in DuckDB until the oracle ORDER BYs
+    were totalized (q104 note in __spark_entry__.py)."""
+    from kml2geojson_spark.eventops import merge_intervals
+    iv = spark.createDataFrame(
+        [(1, 10, 20), (1, 30, 35), (1, 30, 35), (1, 50, 60)],
+        "key long, start long, end long")
+    rows = {(r["island_start"], r["island_end"]): r["n_intervals"]
+            for r in merge_intervals(iv, key_col="key",
+                                     start_col="start",
+                                     end_col="end").collect()}
+    assert rows == {(10, 20): 1, (30, 35): 2, (50, 60): 1}
+
+
+def test_two_pass_window_oracles_are_totally_ordered():
+    """The q104/q106 oracles compute a window flag and a running sum
+    in SEPARATE windowed subqueries; both ORDER BYs must carry the
+    unique tiebreaker or an engine may sort duplicate rows
+    differently in each pass and splice an island/session boundary
+    (observed intermittently in DuckDB at sf0.1 before the fix)."""
+    import __spark_entry__ as entry
+    oracles = entry.oracle_sql()
+    o104 = oracles["q104_merge_intervals"]
+    assert o104.count("ORDER BY s, e, u1, u2") == 2
+    o106 = oracles["q106_sessionize_batch"]
+    assert o106.count("ORDER BY ts, event_id") == 1
+    assert o106.count("ORDER BY _t, _eid") == 1
 
 
 # ------------------------------------------------- grid_cluster chains

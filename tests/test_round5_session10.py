@@ -1,6 +1,6 @@
-"""Round-5 session-10 operators: idw_interpolate, two_hop_reach,
-parse_wkt_vertices. Each verified against an independent brute-force
-computation."""
+"""Round-5 session-10 operators: kendall_tau, idw_interpolate,
+two_hop_reach, parse_wkt_vertices. Each verified against an
+independent brute-force computation."""
 
 from __future__ import annotations
 
@@ -9,6 +9,80 @@ import math
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# kendall_tau
+# ---------------------------------------------------------------------------
+
+def _brute_tau(rows):
+    """rows: list of (x, y). Returns (n, C, D, n0, n1, n2, tau_b|None)."""
+    n = len(rows)
+    c = d = 0
+    for i in range(n):
+        for j in range(i + 1, n):
+            p = (rows[i][0] - rows[j][0]) * (rows[i][1] - rows[j][1])
+            if p > 0:
+                c += 1
+            elif p < 0:
+                d += 1
+    n0 = n * (n - 1) // 2
+    from collections import Counter
+    n1 = sum(t * (t - 1) // 2 for t in Counter(x for x, _ in rows).values())
+    n2 = sum(t * (t - 1) // 2 for t in Counter(y for _, y in rows).values())
+    tau = None
+    if n0 > n1 and n0 > n2:
+        tau = (c - d) / math.sqrt(float(n0 - n1) * float(n0 - n2))
+    return n, c, d, n0, n1, n2, tau
+
+
+def test_kendall_tau_matches_brute(spark):
+    from kml2geojson_spark.relational import kendall_tau
+
+    rng = np.random.default_rng(11)
+    data = []
+    groups = {}
+    for g in ["a", "b", "c"]:
+        rows = [(int(rng.integers(0, 6)), int(rng.integers(0, 6)))
+                for _ in range(25)]
+        groups[g] = rows
+        data += [(g, i, x, y) for i, (x, y) in enumerate(rows)]
+    df = spark.createDataFrame(data, "g string, id long, x long, y long")
+    got = {r.g: r for r in kendall_tau(
+        df, col_x="x", col_y="y", id_col="id", group_cols=["g"]).collect()}
+    for g, rows in groups.items():
+        n, c, d, n0, n1, n2, tau = _brute_tau(rows)
+        r = got[g]
+        assert (r.n, r.concordant, r.discordant, r.n0, r.n1, r.n2) == \
+            (n, c, d, n0, n1, n2)
+        if tau is None:
+            assert r.tau_b is None
+        else:
+            assert r.tau_b == pytest.approx(tau, abs=1e-12)
+
+
+def test_kendall_tau_perfect_and_degenerate(spark):
+    from kml2geojson_spark.relational import kendall_tau
+
+    rows = ([("up", i, i, 2 * i) for i in range(10)]
+            + [("down", i, i, -i) for i in range(10)]
+            + [("flat", i, i, 7) for i in range(10)])
+    df = spark.createDataFrame(rows, "g string, id long, x long, y long")
+    got = {r.g: r for r in kendall_tau(
+        df, col_x="x", col_y="y", id_col="id", group_cols=["g"]).collect()}
+    assert got["up"].tau_b == pytest.approx(1.0)
+    assert got["down"].tau_b == pytest.approx(-1.0)
+    assert got["flat"].tau_b is None  # all y tied
+
+
+def test_kendall_tau_float_raises(spark):
+    from kml2geojson_spark.relational import kendall_tau
+
+    df = spark.createDataFrame([("a", 1, 1, 1.5)],
+                               "g string, id long, x long, y double")
+    with pytest.raises(ValueError, match="floating-point"):
+        kendall_tau(df, col_x="x", col_y="y", id_col="id",
+                    group_cols=["g"])
 
 
 # ---------------------------------------------------------------------------

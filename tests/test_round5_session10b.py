@@ -1,4 +1,5 @@
-"""Round-5 session-10 batch 2: pcm_window_features, jl_project."""
+"""Round-5 session-10 batch 2: pcm_window_features, jl_project,
+seasonality_strength."""
 
 from __future__ import annotations
 
@@ -6,6 +7,8 @@ import hashlib
 import math
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
@@ -133,3 +136,56 @@ def test_jl_project_preserves_distances_approximately(spark):
     assert all(0.4 < r < 1.9 for r in ratios)
 
 
+# ---------------------------------------------------------------------------
+# seasonality_strength
+# ---------------------------------------------------------------------------
+
+def test_seasonality_strength_strong_vs_flat(spark):
+    from kml2geojson_spark.eventops import seasonality_strength
+
+    rows = []
+    # "rhythm": value determined entirely by hour -> eta2 == 1.
+    # "flat": same value everywhere -> eta2 NULL (SSB+SSW == 0).
+    # "noise": hour-independent alternation -> eta2 near 0.
+    for day in range(4):
+        for hour in range(24):
+            ts = f"2024-01-{day+1:02d} {hour:02d}:30:00"
+            rows.append(("rhythm", ts, (hour % 6) * 10))
+            rows.append(("flat", ts, 5))
+            # two 0s and two 100s per hour -> every phase mean is 50
+            rows.append(("noise", ts, 100 * ((day + hour) % 2)))
+    df = spark.createDataFrame(rows, "g string, ts string, v long").withColumn("ts", F.to_timestamp("ts"))
+    got = {r.g: r for r in seasonality_strength(
+        df, value_col="v", group_cols=["g"]).collect()}
+    assert got["rhythm"].eta2 == pytest.approx(1.0)
+    assert got["flat"].eta2 is None
+    assert got["noise"].eta2 == pytest.approx(0.0, abs=1e-9)
+    assert got["rhythm"].k == 24 and got["rhythm"].n == 96
+
+
+def test_seasonality_strength_matches_anova_by_hand(spark):
+    from kml2geojson_spark.eventops import seasonality_strength
+
+    rng = np.random.default_rng(17)
+    rows = [("g", f"2024-02-0{1 + i % 5} {int(rng.integers(0, 24)):02d}:"
+                  f"{int(rng.integers(0, 60)):02d}:00",
+             int(rng.integers(0, 50))) for i in range(300)]
+    df = spark.createDataFrame(rows, "g string, ts string, v long").withColumn("ts", F.to_timestamp("ts"))
+    r = seasonality_strength(df, value_col="v", group_cols=["g"]
+                             ).collect()[0]
+    # brute-force eta2 with the same milli-floor discipline
+    from collections import defaultdict
+    import datetime as dt
+    per = defaultdict(list)
+    for _, ts, v in rows:
+        t = dt.datetime.fromisoformat(ts)
+        sec = t.hour * 3600 + t.minute * 60 + t.second
+        per[(sec * 24) // 86400].append(v)
+    allv = [v for vs in per.values() for v in vs]
+    cb = sum(math.floor(sum(vs) ** 2 / len(vs) * 1000.0)
+             for vs in per.values())
+    grand = math.floor(sum(allv) ** 2 / len(allv) * 1000.0)
+    ssb = cb - grand
+    ssw = 1000 * sum(v * v for v in allv) - cb
+    assert (r.ssb_milli, r.ssw_milli) == (ssb, ssw)
+    assert r.eta2 == pytest.approx(ssb / (ssb + ssw))

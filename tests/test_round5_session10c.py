@@ -1,9 +1,11 @@
-"""Round-5 session-10 batch 3: destination_point."""
+"""Round-5 session-10 batch 3: destination_point, rolling_corr,
+stream_ewma."""
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -71,3 +73,153 @@ def test_destination_point_antimeridian_wrap(spark):
     assert r.lon2 == pytest.approx(-179.5, abs=1e-9)
 
 
+# ---------------------------------------------------------------------------
+# rolling_corr
+# ---------------------------------------------------------------------------
+
+def _brute_rolling_corr(series, window, min_periods):
+    """series: [(o, id, x, y)] sorted. -> {(o,id): (n, corr_micro)}"""
+    out = {}
+    for i in range(len(series)):
+        frame = series[max(0, i - window + 1):i + 1]
+        n = len(frame)
+        sx = sum(r[2] for r in frame)
+        sy = sum(r[3] for r in frame)
+        sxy = sum(r[2] * r[3] for r in frame)
+        sxx = sum(r[2] * r[2] for r in frame)
+        syy = sum(r[3] * r[3] for r in frame)
+        vx, vy = n * sxx - sx * sx, n * syy - sy * sy
+        if n >= min_periods and vx > 0 and vy > 0:
+            c = (n * sxy - sx * sy) / math.sqrt(float(vx) * float(vy))
+            cm = round(c * 1_000_000.0)
+        else:
+            cm = None
+        out[(series[i][0], series[i][1])] = (n, cm)
+    return out
+
+
+def test_rolling_corr_matches_brute(spark):
+    from kml2geojson_spark.relational import rolling_corr
+
+    rng = np.random.default_rng(13)
+    data, ref = [], {}
+    for g in ["a", "b"]:
+        series = []
+        for i in range(60):
+            x = int(rng.integers(-30, 30))
+            y = x + int(rng.integers(-10, 10)) if g == "a" \
+                else int(rng.integers(-30, 30))
+            series.append((i, i, x, y))
+        ref[g] = _brute_rolling_corr(series, 12, 4)
+        data += [(g, o, i, x, y) for o, i, x, y in series]
+    df = spark.createDataFrame(data,
+                               "g string, o long, id long, x long, y long")
+    got = rolling_corr(df, x_col="x", y_col="y", order_col="o",
+                       id_col="id", group_cols=["g"],
+                       window=12, min_periods=4).collect()
+    assert len(got) == 120
+    for r in got:
+        n, cm = ref[r.g][(r.o, r.id)]
+        assert (r.n_window, r.corr_micro) == (n, cm)
+
+
+def test_rolling_corr_perfect_correlation(spark):
+    from kml2geojson_spark.relational import rolling_corr
+
+    rows = [("g", i, i, i, 3 * i + 7) for i in range(20)]
+    df = spark.createDataFrame(rows,
+                               "g string, o long, id long, x long, y long")
+    out = rolling_corr(df, x_col="x", y_col="y", order_col="o",
+                       id_col="id", group_cols=["g"],
+                       window=8, min_periods=3).collect()
+    for r in out:
+        if r.corr_micro is not None:
+            assert r.corr_micro == 1_000_000
+
+
+def test_rolling_corr_float_raises(spark):
+    from kml2geojson_spark.relational import rolling_corr
+
+    df = spark.createDataFrame([("g", 1, 1, 1, 1.5)],
+                               "g string, o long, id long, x long, "
+                               "y double")
+    with pytest.raises(ValueError, match="floating-point"):
+        rolling_corr(df, x_col="x", y_col="y", order_col="o",
+                     id_col="id", group_cols=["g"])
+
+
+# ---------------------------------------------------------------------------
+# stream_ewma
+# ---------------------------------------------------------------------------
+
+def test_stream_ewma_batch_parity_across_batches(spark, tmp_path):
+    """The streaming EWMA's LAST emitted row per key equals the batch
+    ewma_last, and every emitted row equals the batch operator run on
+    the corresponding prefix (spot-checked), across two micro-batches."""
+    import glob
+    import os
+    import random
+
+    from datetime import datetime, timedelta
+
+    from kml2geojson_spark.eventops import ewma_last
+    from kml2geojson_spark.streaming import stream_ewma
+
+    random.seed(67)
+    base = datetime(2024, 3, 1)
+    rows = []
+    eid = 0
+    for u in range(3):
+        for i in range(30):
+            rows.append((eid, base + timedelta(seconds=10 * i), u,
+                         round(random.uniform(-5, 5), 3)))
+            eid += 1
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, value double")
+
+    ref = {r.key: r for r in ewma_last(df, window=6).collect()}
+
+    src = str(tmp_path / "ew")
+    first = df.where(F.col("event_id") % 30 < 15)
+    rest = df.where(F.col("event_id") % 30 >= 15)
+    first.coalesce(1).write.parquet(src)
+    f1 = set(glob.glob(src + "/*.parquet"))
+    rest.coalesce(1).write.mode("append").parquet(src)
+    later = max(os.path.getmtime(f) for f in f1) + 10
+    for f in set(glob.glob(src + "/*.parquet")) - f1:
+        os.utime(f, (later, later))
+
+    stream = (spark.readStream.schema(df.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    out = stream_ewma(stream, window=6)
+    q = (out.writeStream.format("memory").queryName("ew_mem")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ewck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.sql("SELECT * FROM ew_mem").collect()
+    assert len(got) == 90
+    last = {}
+    for r in got:
+        if r.key not in last or r.n_events > last[r.key].n_events:
+            last[r.key] = r
+    for k, rr in ref.items():
+        g = last[k]
+        assert (g.n_events, g.num, g.den) == (rr.n_events, rr.num,
+                                              rr.den)
+        assert g.ewma_milli == rr.ewma_milli
+    # prefix parity at the first-batch boundary (15 events per user)
+    prefix = {r.key: r for r in ewma_last(
+        df.where(F.col("event_id") % 30 < 15), window=6).collect()}
+    mid = {r.key: r for r in got if r.n_events == 15}
+    for k, rr in prefix.items():
+        assert (mid[k].num, mid[k].den) == (rr.num, rr.den)
+
+
+def test_stream_ewma_validation():
+    from kml2geojson_spark.streaming import stream_ewma
+
+    with pytest.raises(ValueError, match="window"):
+        stream_ewma(None, window=0)
+    with pytest.raises(ValueError, match="window"):
+        stream_ewma(None, window=17)

@@ -1,15 +1,121 @@
-"""Round-5 session-10 batch 4: negative_edge_samples."""
+"""Round-5 session-10 batch 4: target_encode_loo, cronbach_alpha,
+negative_edge_samples, hashed_features."""
 
 from __future__ import annotations
 
 import hashlib
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
+
+
+def _md5_bucket(s) -> int:
+    return int(hashlib.md5(str(s).encode()).hexdigest()[:2], 16)
 
 
 def _md5_u60(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+# ---------------------------------------------------------------------------
+# target_encode_loo
+# ---------------------------------------------------------------------------
+
+def test_target_encode_loo_matches_brute(spark):
+    from kml2geojson_spark.relational import target_encode_loo
+
+    rng = np.random.default_rng(71)
+    rows = [(i, ["a", "b", "c"][int(rng.integers(0, 3))],
+             int(rng.integers(0, 100))) for i in range(400)]
+    df = spark.createDataFrame(rows, "id long, cat string, y long")
+    got = {(r.cat, r.fold): (r.loo_n, r.loo_sum, r.encoding)
+           for r in target_encode_loo(
+               df, cat_col="cat", target_col="y", id_col="id",
+               n_folds=4).collect()}
+    from collections import defaultdict
+    cf = defaultdict(lambda: [0, 0])
+    for i, c, y in rows:
+        f = _md5_bucket(i) % 4
+        cf[(c, f)][0] += 1
+        cf[(c, f)][1] += y
+    tot = defaultdict(lambda: [0, 0])
+    for (c, f), (n, s) in cf.items():
+        tot[c][0] += n
+        tot[c][1] += s
+    want = {}
+    for (c, f), (n, s) in cf.items():
+        ln, ls = tot[c][0] - n, tot[c][1] - s
+        want[(c, f)] = (ln, ls, ls / ln if ln > 0 else None)
+    assert got == want
+
+
+def test_target_encode_loo_single_fold_category_null(spark):
+    from kml2geojson_spark.relational import target_encode_loo
+
+    # find an id whose fold is 0 under 2 folds, and give its category
+    # no other rows -> encoding NULL for that (cat, fold)
+    lone = next(i for i in range(100) if _md5_bucket(i) % 2 == 0)
+    rows = [(lone, "solo", 7)] + [(1000 + i, "big", i) for i in range(20)]
+    df = spark.createDataFrame(rows, "id long, cat string, y long")
+    out = {(r.cat, r.fold): r for r in target_encode_loo(
+        df, cat_col="cat", target_col="y", id_col="id",
+        n_folds=2).collect()}
+    assert out[("solo", 0)].encoding is None
+    assert out[("solo", 0)].loo_n == 0
+
+
+# ---------------------------------------------------------------------------
+# cronbach_alpha
+# ---------------------------------------------------------------------------
+
+def test_cronbach_alpha_matches_brute(spark):
+    from kml2geojson_spark.relational import cronbach_alpha
+
+    rng = np.random.default_rng(77)
+    rows = []
+    for _ in range(200):
+        base = int(rng.integers(0, 40))
+        rows.append((base + int(rng.integers(-3, 4)),
+                     base + int(rng.integers(-3, 4)),
+                     base + int(rng.integers(-3, 4))))
+    df = spark.createDataFrame(rows, "i1 long, i2 long, i3 long")
+    r = cronbach_alpha(df, item_cols=["i1", "i2", "i3"]).collect()[0]
+    n = len(rows)
+    a = 0
+    for c in range(3):
+        s = sum(row[c] for row in rows)
+        ss = sum(row[c] ** 2 for row in rows)
+        a += n * ss - s * s
+    ts = sum(sum(row) for row in rows)
+    tss = sum(sum(row) ** 2 for row in rows)
+    b = n * tss - ts * ts
+    assert (r.k, r.n, r.item_var_num, r.total_var_num) == (3, n, a, b)
+    assert r.alpha == pytest.approx(1.5 * (1 - a / b))
+    assert 0.8 < r.alpha <= 1.0  # highly consistent by construction
+
+
+def test_cronbach_alpha_independent_items_low(spark):
+    from kml2geojson_spark.relational import cronbach_alpha
+
+    rng = np.random.default_rng(79)
+    rows = [(int(rng.integers(0, 100)), int(rng.integers(0, 100)))
+            for _ in range(500)]
+    df = spark.createDataFrame(rows, "i1 long, i2 long")
+    r = cronbach_alpha(df, item_cols=["i1", "i2"]).collect()[0]
+    assert abs(r.alpha) < 0.3
+
+
+def test_cronbach_alpha_null_rows_drop_and_float_raises(spark):
+    from kml2geojson_spark.relational import cronbach_alpha
+
+    df = spark.createDataFrame([(1, 2), (3, None), (5, 6)],
+                               "i1 long, i2 long")
+    r = cronbach_alpha(df, item_cols=["i1", "i2"]).collect()[0]
+    assert r.n == 2
+    dff = spark.createDataFrame([(1, 2.5)], "i1 long, i2 double")
+    with pytest.raises(ValueError, match="floating-point"):
+        cronbach_alpha(dff, item_cols=["i1", "i2"])
 
 
 # ---------------------------------------------------------------------------
@@ -56,3 +162,48 @@ def test_negative_samples_never_true_edges(spark):
         assert r.src != r.neg_dst
 
 
+# ---------------------------------------------------------------------------
+# hashed_features
+# ---------------------------------------------------------------------------
+
+def test_hashed_features_match_brute(spark):
+    from kml2geojson_spark.relational import hashed_features
+
+    rows = [(1, "red", "large", "us"),
+            (2, "blue", None, "de"),
+            (3, "red", "small", "us")]
+    df = spark.createDataFrame(rows, "id long, color string, "
+                                     "size string, country string")
+    nb = 16
+    got = {(r.id, r.bucket): r.feat_val
+           for r in hashed_features(
+               df, id_col="id", cat_cols=["color", "size", "country"],
+               n_buckets=nb).collect()}
+    from collections import defaultdict
+    want = defaultdict(int)
+    for i, color, size, country in rows:
+        for cname, v in (("color", color), ("size", size),
+                         ("country", country)):
+            if v is None:
+                continue
+            hx = hashlib.md5(f"{cname}={v}".encode()).hexdigest()
+            b = int(hx[:15], 16) % nb
+            sgn = 1 if int(hx[15], 16) % 2 == 0 else -1
+            want[(i, b)] += sgn
+    assert got == dict(want)
+
+
+def test_hashed_features_stable_and_bounded(spark):
+    from kml2geojson_spark.relational import hashed_features
+
+    rng = np.random.default_rng(97)
+    rows = [(i, f"v{int(rng.integers(0, 1000))}") for i in range(300)]
+    df = spark.createDataFrame(rows, "id long, c string")
+    a = sorted(map(tuple, hashed_features(
+        df, id_col="id", cat_cols=["c"], n_buckets=32).collect()))
+    b = sorted(map(tuple, hashed_features(
+        df.repartition(7), id_col="id", cat_cols=["c"],
+        n_buckets=32).collect()))
+    assert a == b  # partitioning-independent
+    assert all(0 <= r[1] < 32 for r in a)
+    assert all(r[2] in (-1, 1) for r in a)  # one cat col, one feature

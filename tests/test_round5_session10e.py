@@ -1,10 +1,93 @@
-"""Round-5 session-10 batch 5: parse_url, great_circle_interpolate."""
+"""Round-5 session-10 batch 5: cuped_adjusted_means, diff_in_diff,
+parse_url, great_circle_interpolate."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# cuped_adjusted_means
+# ---------------------------------------------------------------------------
+
+def test_cuped_matches_brute_and_reduces_variance_bias(spark):
+    from kml2geojson_spark.relational import cuped_adjusted_means
+
+    rng = np.random.default_rng(19)
+    rows = []
+    # y = x + arm_effect + noise; CUPED should recover ~arm_effect gap
+    for arm, eff in (("a", 0), ("b", 5)):
+        for _ in range(500):
+            x = int(rng.integers(0, 100))
+            rows.append((arm, x + eff + int(rng.integers(-3, 4)), x))
+    df = spark.createDataFrame(rows, "arm string, y long, x long")
+    got = {r.arm: r for r in cuped_adjusted_means(
+        df, metric_col="y", covariate_col="x", arm_col="arm").collect()}
+
+    n = len(rows)
+    sy = sum(r[1] for r in rows)
+    sx = sum(r[2] for r in rows)
+    sxy = sum(r[1] * r[2] for r in rows)
+    sxx = sum(r[2] * r[2] for r in rows)
+    theta = (n * sxy - sx * sy) / (n * sxx - sx * sx)
+    pooled_mx = sx / n
+    for arm in ("a", "b"):
+        sub = [r for r in rows if r[0] == arm]
+        my = sum(r[1] for r in sub) / len(sub)
+        mx = sum(r[2] for r in sub) / len(sub)
+        want = my - theta * (mx - pooled_mx)
+        assert got[arm].theta == pytest.approx(theta)
+        assert got[arm].adjusted_mean == pytest.approx(want)
+        assert got[arm].n == len(sub)
+    gap = got["b"].adjusted_mean - got["a"].adjusted_mean
+    assert gap == pytest.approx(5.0, abs=0.6)
+
+
+def test_cuped_zero_variance_covariate(spark):
+    from kml2geojson_spark.relational import cuped_adjusted_means
+
+    df = spark.createDataFrame([("a", 10, 7), ("a", 20, 7), ("b", 30, 7)],
+                               "arm string, y long, x long")
+    got = {r.arm: r for r in cuped_adjusted_means(
+        df, metric_col="y", covariate_col="x", arm_col="arm").collect()}
+    assert got["a"].theta is None
+    assert got["a"].adjusted_mean == pytest.approx(15.0)  # raw mean
+    assert got["b"].adjusted_mean == pytest.approx(30.0)
+
+
+# ---------------------------------------------------------------------------
+# diff_in_diff
+# ---------------------------------------------------------------------------
+
+def test_diff_in_diff_known_effect(spark):
+    from kml2geojson_spark.relational import diff_in_diff
+
+    rows = []
+    # common trend +10 post; treatment adds +7 only to treated-post
+    for g, p, base in (("t", "pre", 50), ("t", "post", 67),
+                       ("c", "pre", 30), ("c", "post", 40)):
+        rows += [(g, p, base + d) for d in (-1, 0, 1)]
+    df = spark.createDataFrame(rows, "g string, period string, y long")
+    r = diff_in_diff(df, metric_col="y", group_col="g",
+                     period_col="period", treated_value="t",
+                     post_value="post").collect()[0]
+    assert r.did == pytest.approx(7.0)
+    assert (r.n_tp, r.n_tr, r.n_cp, r.n_cr) == (3, 3, 3, 3)
+    assert r.mean_treated_post == pytest.approx(67.0)
+
+
+def test_diff_in_diff_empty_cell_null(spark):
+    from kml2geojson_spark.relational import diff_in_diff
+
+    df = spark.createDataFrame([("t", "post", 1), ("c", "pre", 2),
+                                ("c", "post", 3)],
+                               "g string, period string, y long")
+    r = diff_in_diff(df, metric_col="y", group_col="g",
+                     period_col="period", treated_value="t",
+                     post_value="post").collect()[0]
+    assert r.did is None and r.n_tr == 0
 
 
 # ---------------------------------------------------------------------------
@@ -97,5 +180,3 @@ def test_gc_interpolate_equidistant_at_half(spark):
     for r in out:
         assert r.d1 == pytest.approx(r.d2, rel=1e-6)
         assert r.d1 + r.d2 == pytest.approx(r.dt, rel=1e-6)
-
-

@@ -1,4 +1,4 @@
-"""Round-5 session-11: ripley_k, clark_evans, ring_audit."""
+"""Round-5 session-11: theil_sen, ripley_k, clark_evans, ring_audit."""
 
 from __future__ import annotations
 
@@ -7,6 +7,64 @@ import math
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# theil_sen
+# ---------------------------------------------------------------------------
+
+def _brute_theil_sen(pts):
+    slopes = sorted((xj - xi) / (tj - ti)
+                    for i, (ti, xi) in enumerate(pts)
+                    for (tj, xj) in pts[i + 1:] if tj != ti
+                    for _ in [0] if ti < tj)
+    if not slopes:
+        return 0, None
+    return len(slopes), slopes[(len(slopes) + 1) // 2 - 1]
+
+
+def test_theil_sen_matches_brute(spark):
+    from kml2geojson_spark.relational import theil_sen
+
+    rng = np.random.default_rng(7)
+    rows, expect = [], {}
+    for g in range(8):
+        n = int(rng.integers(2, 12))
+        ts = sorted(rng.choice(200, size=n, replace=False).tolist())
+        xs = [int(2 * t + rng.integers(-30, 31)) for t in ts]
+        pts = list(zip(ts, xs))
+        expect[f"g{g}"] = _brute_theil_sen(pts)
+        rows += [(f"g{g}", int(t), int(x)) for t, x in pts]
+    df = spark.createDataFrame(rows, "g string, t long, v long")
+    got = {r.g: (r.n_pairs, r.slope)
+           for r in theil_sen(df, value_col="v", t_col="t",
+                              group_cols=["g"]).collect()}
+    assert got == expect
+
+
+def test_theil_sen_outlier_robust_and_ties(spark):
+    from kml2geojson_spark.relational import theil_sen
+
+    # slope-2 line with one wild outlier: median slope stays 2
+    rows = [("a", t, 2 * t) for t in range(1, 10)] + [("a", 10, 100000)]
+    # all timestamps tied -> zero usable pairs, NULL slope
+    rows += [("b", 5, 1), ("b", 5, 2), ("b", 5, 3)]
+    df = spark.createDataFrame(rows, "g string, t long, v long")
+    got = {r.g: r for r in theil_sen(df, value_col="v", t_col="t",
+                                     group_cols=["g"]).collect()}
+    assert got["a"].slope == pytest.approx(2.0)
+    assert got["b"].n_pairs == 0 and got["b"].slope is None
+
+
+def test_theil_sen_rejects_float_columns(spark):
+    from kml2geojson_spark.relational import theil_sen
+
+    df = spark.createDataFrame([("a", 1, 1.5)], "g string, t long, v double")
+    with pytest.raises(ValueError, match="integerize"):
+        theil_sen(df, value_col="v", t_col="t", group_cols=["g"])
+    df2 = spark.createDataFrame([("a", 1.0, 1)], "g string, t double, v long")
+    with pytest.raises(ValueError, match="integerize"):
+        theil_sen(df2, value_col="v", t_col="t", group_cols=["g"])
 
 
 # ---------------------------------------------------------------------------
@@ -266,6 +324,132 @@ def test_image_ahash_pairs_threshold_guard(spark):
 
 
 # ---------------------------------------------------------------------------
+# bootstrap_ci / permutation_test
+# ---------------------------------------------------------------------------
+
+def _u52(s):
+    import hashlib
+    return int(hashlib.md5(s.encode()).hexdigest()[:13], 16) / 2.0 ** 52
+
+
+def test_bootstrap_ci_matches_brute(spark):
+    from kml2geojson_spark.relational import POISSON1_CDF, bootstrap_ci
+
+    rng = np.random.default_rng(31)
+    rows = [(i, int(v)) for i, v in enumerate(rng.integers(0, 1000, 80))]
+    df = spark.createDataFrame(rows, "id long, v long")
+    B = 50
+    got = bootstrap_ci(df, value_col="v", id_col="id",
+                       n_resamples=B, alpha_permille=100).collect()[0]
+
+    def draw(u):
+        for k, c in enumerate(POISSON1_CDF):
+            if u < c:
+                return k
+        return 7
+
+    means = []
+    for b in range(1, B + 1):
+        sw = sx = 0
+        for i, v in rows:
+            w = draw(_u52(f"boot:{i}:{b}"))
+            sw += w
+            sx += w * v
+        if sw > 0:
+            means.append(sx / sw)
+    means.sort()
+    half = math.ceil(len(means) * 100 / 2000.0)
+    assert got.n == 80 and got.b_eff == len(means)
+    assert got.observed_mean == pytest.approx(
+        sum(v for _, v in rows) / 80, rel=1e-12)
+    assert got.lo_mean == means[half - 1]
+    assert got.hi_mean == means[len(means) - half]
+    assert got.lo_mean <= got.observed_mean <= got.hi_mean
+
+
+def test_bootstrap_ci_validation(spark):
+    from kml2geojson_spark.relational import bootstrap_ci
+
+    df = spark.createDataFrame([(1, 1.5)], "id long, v double")
+    with pytest.raises(ValueError, match="integerize"):
+        bootstrap_ci(df, value_col="v", id_col="id")
+    df2 = spark.createDataFrame([(1, 1)], "id long, v long")
+    with pytest.raises(ValueError, match="n_resamples"):
+        bootstrap_ci(df2, value_col="v", id_col="id", n_resamples=1)
+    with pytest.raises(ValueError, match="alpha_permille"):
+        bootstrap_ci(df2, value_col="v", id_col="id", alpha_permille=0)
+
+
+def test_permutation_test_detects_effect_and_null(spark):
+    from kml2geojson_spark.relational import permutation_test
+
+    rng = np.random.default_rng(37)
+    effect = [(i, "a" if i % 2 else "b",
+               int(v) + (60 if i % 2 else 0))
+              for i, v in enumerate(rng.integers(0, 50, 300))]
+    df = spark.createDataFrame(effect, "id long, g string, v long")
+    r = permutation_test(df, value_col="v", group_col="g",
+                         group_a="a", group_b="b", id_col="id",
+                         n_rounds=99).collect()[0]
+    assert r.n_a == 150 and r.n_b == 150
+    assert r.p_value == pytest.approx(1 / 100)  # max significance
+    assert r.observed_diff > 50
+
+    null = [(i, "a" if i % 2 else "b", int(v))
+            for i, v in enumerate(rng.integers(0, 50, 300))]
+    df0 = spark.createDataFrame(null, "id long, g string, v long")
+    r0 = permutation_test(df0, value_col="v", group_col="g",
+                          group_a="a", group_b="b", id_col="id",
+                          n_rounds=99).collect()[0]
+    assert r0.p_value > 0.05
+
+
+def test_permutation_test_matches_brute(spark):
+    from kml2geojson_spark.relational import permutation_test
+
+    rng = np.random.default_rng(43)
+    rows = [(i, "a" if i < 20 else "b", int(v))
+            for i, v in enumerate(rng.integers(0, 100, 50))]
+    df = spark.createDataFrame(rows, "id long, g string, v long")
+    R = 40
+    got = permutation_test(df, value_col="v", group_col="g",
+                           group_a="a", group_b="b", id_col="id",
+                           n_rounds=R).collect()[0]
+    n_a = 20
+    n = len(rows)
+    pa = n_a / n
+    sa = sum(v for i, g, v in rows if g == "a")
+    sb = sum(v for i, g, v in rows if g == "b")
+    d_obs = sa / n_a - sb / (n - n_a)
+    extreme = r_eff = 0
+    for r in range(1, R + 1):
+        ga = [v for i, g, v in rows if _u52(f"perm:{i}:{r}") < pa]
+        gb = [v for i, g, v in rows if not _u52(f"perm:{i}:{r}") < pa]
+        if not ga or not gb:
+            continue
+        r_eff += 1
+        d = sum(ga) / len(ga) - sum(gb) / len(gb)
+        if abs(d) >= abs(d_obs):
+            extreme += 1
+    assert got.observed_diff == pytest.approx(d_obs, rel=1e-12)
+    assert (got.r_eff, got.n_extreme) == (r_eff, extreme)
+    assert got.p_value == pytest.approx((1 + extreme) / (r_eff + 1))
+
+
+def test_permutation_test_validation(spark):
+    from kml2geojson_spark.relational import permutation_test
+
+    df = spark.createDataFrame([(1, "a", 1)], "id long, g string, v long")
+    with pytest.raises(ValueError, match="differ"):
+        permutation_test(df, value_col="v", group_col="g",
+                         group_a="a", group_b="a", id_col="id")
+    with pytest.raises(ValueError, match="n_rounds"):
+        permutation_test(df, value_col="v", group_col="g",
+                         group_a="a", group_b="b", id_col="id",
+                         n_rounds=0)
+
+
+# ---------------------------------------------------------------------------
 # line_interpolate / discrete_hausdorff
 # ---------------------------------------------------------------------------
 
@@ -411,6 +595,117 @@ def test_image_ahash_pairs_plan_band_equi_join(spark):
     plan = _plan(image_ahash_pairs(h, max_hamming=3))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_bootstrap_and_linear_ops_no_python_nodes(spark):
+    """bootstrap_ci / theil_sen / line_interpolate stay JVM-side —
+    no Python eval node anywhere in the plan."""
+    from kml2geojson_spark.relational import bootstrap_ci, theil_sen
+    from kml2geojson_spark.spatial.ops import line_interpolate
+
+    ev = spark.createDataFrame([(i, i % 13) for i in range(40)],
+                               "id long, v long")
+    lines = spark.createDataFrame(
+        [(1, [(0.0, 0.0), (3.0, 4.0)], 0.5)],
+        "line_id long, line array<struct<x double, y double>>, "
+        "frac double")
+    ts = spark.createDataFrame([("a", 1, 2), ("a", 2, 4)],
+                               "g string, t long, v long")
+    for df in (bootstrap_ci(ev, value_col="v", id_col="id",
+                            n_resamples=10),
+               theil_sen(ts, value_col="v", t_col="t",
+                         group_cols=["g"]),
+               line_interpolate(lines, id_cols=["line_id"])):
+        plan = _plan(df)
+        for marker in ("ArrowEvalPython", "BatchEvalPython",
+                       "MapInPandas", "PythonMapInArrow"):
+            assert marker not in plan, f"{marker} in plan"
+
+
+# ---------------------------------------------------------------------------
+# hodges_lehmann / siegel_slope
+# ---------------------------------------------------------------------------
+
+def test_hodges_lehmann_matches_brute(spark):
+    from kml2geojson_spark.relational import hodges_lehmann
+
+    rng = np.random.default_rng(71)
+    rows, expect = [], {}
+    for g in range(6):
+        n = int(rng.integers(1, 15))
+        xs = [int(v) for v in rng.integers(-500, 500, n)]
+        ws = sorted((a + b) / 2 for i, a in enumerate(xs)
+                    for b in xs[i:])
+        expect[f"g{g}"] = (len(ws), ws[(len(ws) + 1) // 2 - 1])
+        rows += [(f"g{g}", i, x) for i, x in enumerate(xs)]
+    df = spark.createDataFrame(rows, "g string, o long, v long")
+    got = {r.g: (r.n_pairs, r.hl_estimate)
+           for r in hodges_lehmann(df, value_col="v", order_cols="o",
+                                   group_cols=["g"]).collect()}
+    assert got == expect
+
+
+def test_hodges_lehmann_outlier_robust(spark):
+    from kml2geojson_spark.relational import hodges_lehmann
+
+    rows = [("a", i, 100) for i in range(9)] + [("a", 9, 10 ** 9)]
+    df = spark.createDataFrame(rows, "g string, o long, v long")
+    r = hodges_lehmann(df, value_col="v", order_cols="o",
+                       group_cols=["g"]).collect()[0]
+    assert r.hl_estimate == 100.0  # one wild point cannot move it
+
+
+def test_siegel_slope_breakdown_beats_theil_sen(spark):
+    """~45% corrupted points: Siegel still reads slope 3, while the
+    Theil-Sen pairwise median is dragged away (its breakdown is
+    ~29%)."""
+    from kml2geojson_spark.relational import siegel_slope, theil_sen
+
+    rows = [("s", t, 3 * t) for t in range(1, 12)] + \
+           [("s", t, -7000 - 100 * t) for t in range(12, 21)]
+    df = spark.createDataFrame(rows, "g string, t long, v long")
+    sg = siegel_slope(df, value_col="v", t_col="t",
+                      group_cols=["g"]).collect()[0]
+    ts = theil_sen(df, value_col="v", t_col="t",
+                   group_cols=["g"]).collect()[0]
+    assert sg.slope == pytest.approx(3.0)
+    assert abs(ts.slope - 3.0) > 10  # corrupted beyond breakdown
+
+
+def test_siegel_slope_matches_brute(spark):
+    from kml2geojson_spark.relational import siegel_slope
+
+    rng = np.random.default_rng(83)
+    rows, expect = [], {}
+    for g in range(5):
+        n = int(rng.integers(2, 10))
+        ts_ = sorted(rng.choice(100, size=n, replace=False).tolist())
+        xs = [int(v) for v in rng.integers(-100, 100, n)]
+        mis = []
+        for i in range(n):
+            ss = sorted((xs[j] - xs[i]) / (ts_[j] - ts_[i])
+                        for j in range(n) if ts_[j] != ts_[i])
+            if ss:
+                mis.append(ss[(len(ss) + 1) // 2 - 1])
+        mis.sort()
+        expect[f"g{g}"] = (len(mis), mis[(len(mis) + 1) // 2 - 1])
+        rows += [(f"g{g}", t, x) for t, x in zip(ts_, xs)]
+    df = spark.createDataFrame(rows, "g string, t long, v long")
+    got = {r.g: (r.n_points, r.slope)
+           for r in siegel_slope(df, value_col="v", t_col="t",
+                                 group_cols=["g"]).collect()}
+    assert got == expect
+
+
+def test_robust_estimators_reject_float_columns(spark):
+    from kml2geojson_spark.relational import hodges_lehmann, siegel_slope
+
+    df = spark.createDataFrame([("a", 1, 1.5)], "g string, t long, v double")
+    with pytest.raises(ValueError, match="integerize"):
+        hodges_lehmann(df, value_col="v", order_cols="t",
+                       group_cols=["g"])
+    with pytest.raises(ValueError, match="integerize"):
+        siegel_slope(df, value_col="v", t_col="t", group_cols=["g"])
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,325 @@
-"""Round-5 continuation operators: cidr_contain_join, read_kmz_files,
-classification_report."""
+"""Round-5 continuation operators: group_auc (q151), ks_2sample
+(q152), top_p_coverage (q153) — post-pin registrations, in-repo
+oracle sweep evidence."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+
+from kml2geojson_spark.relational import (group_auc, ks_2sample,
+                                          top_p_coverage)
+
+
+# ---------------------------------------------------------- group_auc
+
+
+def _scored(spark, rows):
+    return spark.createDataFrame(rows, "g string, s long, y long")
+
+
+def _auc_brute(pairs):
+    """Mean over pos x neg pairs of 1[s_p > s_n] + 0.5 * 1[s_p == s_n]."""
+    pos = [s for s, y in pairs if y == 1]
+    neg = [s for s, y in pairs if y == 0]
+    if not pos or not neg:
+        return None
+    wins = sum(1.0 if p > n else (0.5 if p == n else 0.0)
+               for p in pos for n in neg)
+    return wins / (len(pos) * len(neg))
+
+
+def test_group_auc_hand_perfect_and_ties(spark):
+    df = _scored(spark, [
+        ("a", 1, 0), ("a", 2, 0), ("a", 3, 1), ("a", 4, 1),  # perfect
+        ("b", 5, 0), ("b", 5, 1),                             # all tied
+        ("c", 1, 1), ("c", 2, 0),                             # inverted
+        ("d", 7, 1), ("d", 8, 1),                             # one class
+    ])
+    got = {r["g"]: r for r in group_auc(
+        df, score_col="s", label_col="y", group_cols=["g"]).collect()}
+    assert got["a"]["auc"] == 1.0
+    assert got["b"]["auc"] == 0.5
+    assert got["c"]["auc"] == 0.0
+    assert got["d"]["auc"] is None
+    assert (got["a"]["n_pos"], got["a"]["n_neg"]) == (2, 2)
+
+
+def test_group_auc_matches_brute(spark):
+    rng = np.random.default_rng(151)
+    rows = []
+    for g in ("x", "y", "z"):
+        for _ in range(120):
+            y = int(rng.integers(0, 2))
+            # correlated score with heavy ties
+            s = int(rng.integers(0, 8)) + 3 * y
+            rows.append((g, s, y))
+    got = {r["g"]: r["auc"] for r in group_auc(
+        _scored(spark, rows), score_col="s", label_col="y",
+        group_cols=["g"]).collect()}
+    for g in ("x", "y", "z"):
+        pairs = [(s, y) for gg, s, y in rows if gg == g]
+        assert got[g] == pytest.approx(_auc_brute(pairs), abs=1e-12)
+
+
+def test_group_auc_guards_and_nulls(spark):
+    df = _scored(spark, [("a", 1, 0), ("a", 2, 1), (None, 3, 1),
+                         ("a", None, 0), ("a", 4, None)])
+    rows = group_auc(df, score_col="s", label_col="y",
+                     group_cols=["g"]).collect()
+    assert len(rows) == 1 and rows[0]["n_pos"] == 1 and rows[0]["n_neg"] == 1
+    fdf = spark.createDataFrame([("a", 1.5, 1)], "g string, s double, y long")
+    with pytest.raises(ValueError):
+        group_auc(fdf, score_col="s", label_col="y", group_cols=["g"])
+    with pytest.raises(ValueError):
+        group_auc(df, score_col="s", label_col="y", group_cols=[])
+    bad = _scored(spark, [("a", 1, 2)])
+    with pytest.raises(Exception):
+        group_auc(bad, score_col="s", label_col="y",
+                  group_cols=["g"]).collect()
+
+
+# --------------------------------------------------------- ks_2sample
+
+
+def _sided(spark, rows):
+    return spark.createDataFrame(rows, "g string, v long, side string")
+
+
+def _ks_brute(a, b):
+    if not a or not b:
+        return None
+    vals = sorted(set(a) | set(b))
+    na, nb = len(a), len(b)
+    return max(abs(sum(1 for x in a if x <= v) / na
+                   - sum(1 for x in b if x <= v) / nb) for v in vals)
+
+
+def test_ks_hand_identical_and_disjoint(spark):
+    df = _sided(spark, [
+        ("g", 1, "A"), ("g", 2, "A"), ("g", 1, "B"), ("g", 2, "B"),
+        ("h", 1, "A"), ("h", 2, "A"), ("h", 10, "B"), ("h", 11, "B"),
+    ])
+    got = {r["g"]: r for r in ks_2sample(
+        df, value_col="v", side_col="side", side_a="A", side_b="B",
+        group_cols=["g"]).collect()}
+    assert got["g"]["ks"] == 0.0
+    assert got["h"]["ks"] == 1.0
+    assert got["h"]["ks_num"] == 4  # 2*2
+
+
+def test_ks_matches_brute(spark):
+    rng = np.random.default_rng(152)
+    rows = []
+    for g in ("x", "y"):
+        for _ in range(150):
+            side = "A" if rng.random() < 0.5 else "B"
+            v = int(rng.integers(0, 20)) + (3 if side == "B" else 0)
+            rows.append((g, v, side))
+    got = {r["g"]: r["ks"] for r in ks_2sample(
+        _sided(spark, rows), value_col="v", side_col="side",
+        side_a="A", side_b="B", group_cols=["g"]).collect()}
+    for g in ("x", "y"):
+        a = [v for gg, v, s in rows if gg == g and s == "A"]
+        b = [v for gg, v, s in rows if gg == g and s == "B"]
+        assert got[g] == pytest.approx(_ks_brute(a, b), abs=1e-12)
+
+
+def test_ks_other_sides_dropped_and_guards(spark):
+    df = _sided(spark, [("g", 1, "A"), ("g", 9, "C"), ("g", 2, "B"),
+                        ("g", None, "A"), (None, 3, "B")])
+    rows = ks_2sample(df, value_col="v", side_col="side", side_a="A",
+                      side_b="B", group_cols=["g"]).collect()
+    assert len(rows) == 1 and rows[0]["n_a"] == 1 and rows[0]["n_b"] == 1
+    with pytest.raises(ValueError):
+        ks_2sample(df, value_col="v", side_col="side", side_a="A",
+                   side_b="A", group_cols=["g"])
+    fdf = spark.createDataFrame([("g", 1.5, "A")],
+                                "g string, v double, side string")
+    with pytest.raises(ValueError):
+        ks_2sample(fdf, value_col="v", side_col="side", side_a="A",
+                   side_b="B", group_cols=["g"])
+
+
+def test_ks_single_exchange_plan(spark):
+    df = _sided(spark, [("g", 1, "A"), ("g", 2, "B")])
+    plan = ks_2sample(
+        df, value_col="v", side_col="side", side_a="A", side_b="B",
+        group_cols=["g"])._jdf.queryExecution().executedPlan().toString()
+    # one Exchange for the (group, value) hash-agg, one for the group
+    # windows + final agg — the two windows and final agg share theirs
+    assert plan.count("Exchange") <= 2
+
+
+# ----------------------------------------------------- top_p_coverage
+
+
+def _items(spark, rows):
+    return spark.createDataFrame(rows, "g string, it string")
+
+
+def _coverage_brute(items, p_milli):
+    from collections import Counter
+    c = Counter(items)
+    ranked = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))
+    total = sum(c.values())
+    cum = k = head = 0
+    for _, n in ranked:
+        if cum * 1000 < p_milli * total:
+            k += 1
+            cum += n
+            head = cum
+        else:
+            break
+    return len(c), total, k, head
+
+
+def test_top_p_hand(spark):
+    rows = ([("g", "a")] * 6 + [("g", "b")] * 3 + [("g", "c")] * 1)
+    got = top_p_coverage(_items(spark, rows), item_col="it",
+                         group_cols=["g"], p_milli=900).collect()[0]
+    # a(6) covers 60% < 90%; a+b = 9 -> cum_before 6*1000 < 900*10 -> b
+    # needed; c: cum_before 9000 >= 9000 -> not needed
+    assert (got["n_items"], got["total"], got["k_items"],
+            got["head_mass"]) == (3, 10, 2, 9)
+
+
+def test_top_p_tie_pinning_and_exact_boundary(spark):
+    # equal counts -> item asc decides; p exactly on a boundary
+    rows = [("g", "b"), ("g", "a")] * 5          # a:5, b:5
+    got = top_p_coverage(_items(spark, rows), item_col="it",
+                         group_cols=["g"], p_milli=500).collect()[0]
+    assert (got["k_items"], got["head_mass"]) == (1, 5)
+
+
+def test_top_p_matches_brute(spark):
+    rng = np.random.default_rng(153)
+    rows = [("x" if rng.random() < 0.6 else "y",
+             f"it{int(rng.integers(0, 30) ** 2 // 37)}")
+            for _ in range(500)]
+    for p in (500, 800, 1000):
+        got = {r["g"]: r for r in top_p_coverage(
+            _items(spark, rows), item_col="it", group_cols=["g"],
+            p_milli=p).collect()}
+        for g in ("x", "y"):
+            items = [it for gg, it in rows if gg == g]
+            want = _coverage_brute(items, p)
+            assert (got[g]["n_items"], got[g]["total"],
+                    got[g]["k_items"], got[g]["head_mass"]) == want
+
+
+def test_top_p_guards(spark):
+    df = _items(spark, [("g", "a")])
+    for bad in (0, 1001, -5):
+        with pytest.raises(ValueError):
+            top_p_coverage(df, item_col="it", group_cols=["g"],
+                           p_milli=bad)
+    with pytest.raises(ValueError):
+        top_p_coverage(df, item_col="it", group_cols=[])
+
+
+# ------------------------------------------------------ group_entropy
+
+from math import log
+
+from kml2geojson_spark.relational import group_entropy
+from kml2geojson_spark.eventops import cusum_changepoint
+
+
+def test_group_entropy_hand_and_brute(spark):
+    rows = ([("g", "a")] * 4 + [("g", "b")] * 4          # uniform 2 cats
+            + [("h", "a")] * 9 + [("h", "b")]            # skewed
+            + [("i", "only")] * 5)                        # degenerate
+    df = spark.createDataFrame(rows, "g string, cat string")
+    got = {r["g"]: r for r in group_entropy(
+        df, cat_col="cat", group_cols=["g"]).collect()}
+    assert got["g"]["entropy"] == pytest.approx(log(2), abs=2e-6)
+    assert got["i"]["entropy"] == 0.0
+    n, cs = 10, [9, 1]
+    want = log(n) - sum(c * log(c) for c in cs) / n
+    assert got["h"]["entropy"] == pytest.approx(want, abs=2e-6)
+    assert got["h"]["k_cats"] == 2 and got["h"]["n"] == 10
+
+
+def test_group_entropy_nulls_and_guard(spark):
+    df = spark.createDataFrame(
+        [("g", "a"), ("g", None), (None, "b")], "g string, cat string")
+    rows = group_entropy(df, cat_col="cat", group_cols=["g"]).collect()
+    assert len(rows) == 1 and rows[0]["n"] == 1
+    with pytest.raises(ValueError):
+        group_entropy(df, cat_col="cat", group_cols=[])
+
+
+# -------------------------------------------------- cusum_changepoint
+
+
+def _series(spark, rows):
+    return spark.createDataFrame(rows, "g string, o long, id long, v long")
+
+
+def _cusum_brute(vals):
+    n = len(vals)
+    tot = sum(vals)
+    cum = 0
+    best = (-1, None)
+    for i, v in enumerate(vals, start=1):
+        cum += v
+        d = abs(n * cum - i * tot)
+        if d > best[0]:
+            best = (d, i)
+    return best  # (dev, pos) smallest pos on tie by strict >
+
+
+def test_cusum_hand_level_shift(spark):
+    # 5 zeros then 5 tens -> change point at pos 5
+    rows = [("g", t, t, 0 if t <= 5 else 10) for t in range(1, 11)]
+    got = cusum_changepoint(
+        _series(spark, rows), value_col="v", order_col="o",
+        id_col="id", group_cols=["g"]).collect()[0]
+    assert got["cp_pos"] == 5 and got["cp_at"] == 5
+    assert got["n"] == 10 and got["total"] == 50
+    # dev at i=5: |10*0 - 5*50| = 250; cusum = 250/100 = 2.5
+    assert got["cusum_num"] == 250 and got["cusum"] == 2.5
+
+
+def test_cusum_matches_brute_and_tie_pin(spark):
+    rng = np.random.default_rng(155)
+    rows = []
+    for g in ("x", "y"):
+        shift = int(rng.integers(20, 80))
+        for t in range(100):
+            v = int(rng.integers(0, 5)) + (7 if t >= shift else 0)
+            rows.append((g, t, t, v))
+    # constant series: every dev is 0 -> tie -> pos 1
+    rows += [("z", t, t, 3) for t in range(1, 6)]
+    got = {r["g"]: r for r in cusum_changepoint(
+        _series(spark, rows), value_col="v", order_col="o",
+        id_col="id", group_cols=["g"]).collect()}
+    for g in ("x", "y"):
+        vals = [v for gg, _, _, v in rows if gg == g]
+        dev, pos = _cusum_brute(vals)
+        assert (got[g]["cusum_num"], got[g]["cp_pos"]) == (dev, pos)
+    assert got["z"]["cp_pos"] == 1 and got["z"]["cusum_num"] == 0
+
+
+def test_cusum_guards(spark):
+    df = _series(spark, [("g", 1, 1, 1)])
+    with pytest.raises(ValueError):
+        cusum_changepoint(df, value_col="v", order_col="o",
+                          id_col="id", group_cols=[])
+    fdf = spark.createDataFrame([("g", 1.0, 1, 1)],
+                                "g string, o double, id long, v long")
+    with pytest.raises(ValueError):
+        cusum_changepoint(fdf, value_col="v", order_col="o",
+                          id_col="id", group_cols=["g"])
+
+
+def test_cusum_single_exchange_plan(spark):
+    df = _series(spark, [("g", 1, 1, 1), ("g", 2, 2, 5)])
+    plan = cusum_changepoint(
+        df, value_col="v", order_col="o", id_col="id",
+        group_cols=["g"])._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") <= 1
 
 
 # ------------------------------------------------------------- netops
@@ -86,6 +401,46 @@ def test_cidr_join_no_bnl_plan(spark):
     assert "BroadcastNestedLoop" not in plan and "CartesianProduct" not in plan
 
 
+# ------------------------------------------------------ rolling_median
+
+from kml2geojson_spark.relational import rolling_median
+
+
+def test_rolling_median_matches_brute(spark):
+    rng = np.random.default_rng(157)
+    rows = [("g" if i % 3 else "h", i, i, int(rng.integers(0, 100)))
+            for i in range(200)]
+    df = spark.createDataFrame(rows, "g string, o long, id long, v long")
+    for w in (1, 5, 25):
+        got = {(r["g"], r["o"]): r["roll_med"] for r in rolling_median(
+            df, value_col="v", order_col="o", id_col="id",
+            group_cols=["g"], window=w).collect()}
+        series = {}
+        for g, o, _, v in sorted(rows):
+            series.setdefault(g, []).append((o, v))
+        for g, s in series.items():
+            vals = [v for _, v in s]
+            for idx, (o, _) in enumerate(s):
+                frame = sorted(vals[max(0, idx - w + 1):idx + 1])
+                assert got[(g, o)] == frame[(len(frame) + 1) // 2 - 1]
+
+
+def test_rolling_median_guards(spark):
+    df = spark.createDataFrame([("g", 1, 1, 1.5)],
+                               "g string, o long, id long, v double")
+    with pytest.raises(ValueError):
+        rolling_median(df, value_col="v", order_col="o", id_col="id",
+                       group_cols=["g"])
+    idf = spark.createDataFrame([("g", 1, 1, 1)],
+                                "g string, o long, id long, v long")
+    with pytest.raises(ValueError):
+        rolling_median(idf, value_col="v", order_col="o", id_col="id",
+                       group_cols=["g"], window=0)
+    with pytest.raises(ValueError):
+        rolling_median(idf, value_col="v", order_col="o", id_col="id",
+                       group_cols=[])
+
+
 # ----------------------------------------------------- read_kmz_files
 
 import zipfile
@@ -127,6 +482,185 @@ def test_read_kmz_skips_corrupt_and_kml_less(spark, tmp_path):
     assert [r["doc_id"] for r in rows] == ["good"]
     with pytest.raises(ValueError):
         read_kmz_files(spark, str(d), doc_ids="basename")
+
+
+# ------------------------------------------------------- jaccard_pairs
+
+from kml2geojson_spark.relational import jaccard_pairs
+
+
+def test_jaccard_pairs_hand_and_brute(spark):
+    rows = [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (4, "c"),
+            (4, "a"), (1, "a")]  # dup (1,a) ignored
+    df = spark.createDataFrame(rows, "bk long, it string")
+    got = {(r["item_a"], r["item_b"]):
+           (r["n_a"], r["n_b"], r["n_both"], r["jaccard"])
+           for r in jaccard_pairs(
+               df, basket_col="bk", item_col="it").collect()}
+    # a: {1,2,3,4}, b: {1,2}, c: {4}
+    assert got[("a", "b")] == (4, 2, 2, 0.5)
+    assert got[("a", "c")] == (4, 1, 1, 0.25)
+    assert ("b", "c") not in got  # no shared basket
+
+
+def test_jaccard_pairs_matches_brute(spark):
+    rng = np.random.default_rng(160)
+    rows = [(int(rng.integers(0, 50)), f"t{int(rng.integers(0, 8))}")
+            for _ in range(600)]
+    sets = {}
+    for bk, it in rows:
+        sets.setdefault(it, set()).add(bk)
+    want = {}
+    items = sorted(sets)
+    for i, a in enumerate(items):
+        for b in items[i + 1:]:
+            inter = len(sets[a] & sets[b])
+            if inter:
+                want[(a, b)] = (len(sets[a]), len(sets[b]), inter,
+                                inter / len(sets[a] | sets[b]))
+    got = {(r["item_a"], r["item_b"]):
+           (r["n_a"], r["n_b"], r["n_both"], r["jaccard"])
+           for r in jaccard_pairs(
+               spark.createDataFrame(rows, "bk long, it string"),
+               basket_col="bk", item_col="it").collect()}
+    assert got == want
+
+
+# ----------------------------------------------------- percentile_rank
+
+from kml2geojson_spark.relational import percentile_rank
+
+
+def test_percentile_rank_hand_ties_and_singleton(spark):
+    rows = [("g", 1, 10), ("g", 2, 20), ("g", 3, 20), ("g", 4, 30),
+            ("h", 9, 5)]
+    df = spark.createDataFrame(rows, "g string, id long, v long")
+    got = {r["id"]: (r["rnk"], r["n"], r["pct_rank"])
+           for r in percentile_rank(df, value_col="v", id_col="id",
+                                    group_cols=["g"]).collect()}
+    assert got[1] == (1, 4, 0.0)
+    assert got[2] == (2, 4, pytest.approx(1 / 3)) == got[3]
+    assert got[4] == (4, 4, 1.0)
+    assert got[9] == (1, 1, None)
+
+
+def test_percentile_rank_guards(spark):
+    df = spark.createDataFrame([("g", 1, 1.5)], "g string, id long, v double")
+    with pytest.raises(ValueError):
+        percentile_rank(df, value_col="v", id_col="id", group_cols=["g"])
+    idf = spark.createDataFrame([("g", 1, 1)], "g string, id long, v long")
+    with pytest.raises(ValueError):
+        percentile_rank(idf, value_col="v", id_col="id", group_cols=[])
+
+
+# ---------------------------------------------------------- max_streak
+
+from kml2geojson_spark.eventops import max_streak
+
+
+def test_max_streak_hand(spark):
+    rows = ([(1, d) for d in (10, 11, 12, 20, 21, 12)]   # dup day
+            + [(2, d) for d in (5,)]
+            + [(3, d) for d in (1, 3, 5)])
+    df = spark.createDataFrame(rows, "u long, d long")
+    got = {r["u"]: (r["n_active_days"], r["n_streaks"], r["max_streak"])
+           for r in max_streak(df, user_col="u", day_col="d").collect()}
+    assert got[1] == (5, 2, 3)
+    assert got[2] == (1, 1, 1)
+    assert got[3] == (3, 3, 1)
+
+
+def test_max_streak_matches_brute(spark):
+    rng = np.random.default_rng(158)
+    rows = [(int(rng.integers(0, 30)), int(rng.integers(0, 60)))
+            for _ in range(800)]
+    days = {}
+    for u, d in rows:
+        days.setdefault(u, set()).add(d)
+    want = {}
+    for u, ds in days.items():
+        ds = sorted(ds)
+        runs, cur = [], 1
+        for a, b in zip(ds, ds[1:]):
+            if b == a + 1:
+                cur += 1
+            else:
+                runs.append(cur)
+                cur = 1
+        runs.append(cur)
+        want[u] = (len(ds), len(runs), max(runs))
+    got = {r["u"]: (r["n_active_days"], r["n_streaks"], r["max_streak"])
+           for r in max_streak(
+               spark.createDataFrame(rows, "u long, d long"),
+               user_col="u", day_col="d").collect()}
+    assert got == want
+
+
+def test_max_streak_single_exchange_after_distinct(spark):
+    df = spark.createDataFrame([(1, 1), (1, 2)], "u long, d long")
+    plan = max_streak(df, user_col="u",
+                      day_col="d")._jdf.queryExecution() \
+        .executedPlan().toString()
+    # distinct needs one Exchange on (u, d); everything after runs on
+    # the single user-key Exchange
+    assert plan.count("Exchange") <= 2
+
+
+# --------------------------------------------------------- corr_matrix
+
+from kml2geojson_spark.relational import corr_matrix
+
+
+def test_corr_matrix_matches_numpy(spark):
+    rng = np.random.default_rng(161)
+    rows = []
+    for g in ("x", "y"):
+        for _ in range(80):
+            a = int(rng.integers(0, 50))
+            rows.append((g, a, a * 2 + int(rng.integers(0, 10)),
+                         int(rng.integers(0, 50))))
+    df = spark.createDataFrame(rows, "g string, a long, b long, c long")
+    got = {(r["g"], r["col_a"], r["col_b"]): r["corr"]
+           for r in corr_matrix(df, value_cols=["a", "b", "c"],
+                                group_cols=["g"]).collect()}
+    for g in ("x", "y"):
+        m = np.array([[a, b, c] for gg, a, b, c in rows if gg == g],
+                     dtype=float)
+        want = np.corrcoef(m.T)
+        for (i, ca), (j, cb) in [((0, "a"), (1, "b")), ((0, "a"), (2, "c")),
+                                 ((1, "b"), (2, "c"))]:
+            assert got[(g, ca, cb)] == pytest.approx(want[i, j], abs=1e-12)
+
+
+def test_corr_matrix_constant_and_guards(spark):
+    df = spark.createDataFrame([("g", 1, 5), ("g", 2, 5)],
+                               "g string, a long, b long")
+    got = corr_matrix(df, value_cols=["a", "b"],
+                      group_cols=["g"]).collect()
+    assert got[0]["corr"] is None and got[0]["n"] == 2
+    with pytest.raises(ValueError):
+        corr_matrix(df, value_cols=["a"], group_cols=["g"])
+    with pytest.raises(ValueError):
+        corr_matrix(df, value_cols=["a", "b"], group_cols=[])
+    fdf = spark.createDataFrame([("g", 1.5, 1)], "g string, a double, b long")
+    with pytest.raises(ValueError):
+        corr_matrix(fdf, value_cols=["a", "b"], group_cols=["g"])
+
+
+def test_corr_matrix_listwise_nulls_single_agg_plan(spark):
+    df = spark.createDataFrame(
+        [("g", 1, 1, None), ("g", 2, 3, 7), ("g", 3, 5, 9),
+         ("g", 4, 7, 11)], "g string, a long, b long, c long")
+    out = corr_matrix(df, value_cols=["a", "b", "c"], group_cols=["g"])
+    rows = out.collect()
+    assert all(r["n"] == 3 for r in rows)          # null row dropped for ALL
+    perfect = {(r["col_a"], r["col_b"]): r["corr"] for r in rows}
+    assert perfect[("a", "b")] == pytest.approx(1.0)
+    # pre-AQE physical plan (the executed plan repeats the Exchange
+    # inside the AQE final-plan section)
+    plan = out._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("Exchange") <= 1
+    assert plan.count("HashAggregate") == 2  # partial + final
 
 
 # ----------------------------------------------- classification_report

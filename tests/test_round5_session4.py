@@ -1,4 +1,4 @@
-"""Round-5 session-4 operators (registered q165–q167 AFTER the driver
+"""Round-5 session-4 operators (registered q163–q167 AFTER the driver
 pinned the round's query list — the in-repo oracle sweep in BENCH/ is
 their cross-engine evidence, regenerated in-round; these tests pin the
 edge semantics and the plan shapes)."""
@@ -12,12 +12,132 @@ import pytest
 from pyspark.sql import functions as F
 
 from kml2geojson_spark.graph import bfs_hops
+from kml2geojson_spark.relational import chi2_independence, welch_ttest
 from kml2geojson_spark.textops import (sorted_neighborhood_pairs,
                                        winnow_fingerprints)
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# ------------------------------------------------------------------ chi2
+
+
+def _chi2_expected(cells: dict[tuple[str, str], int]) -> float:
+    """Micro-unit-exact replay of the operator's contract in plain
+    Python: per-cell floor(((d/…)·1e6)) summed as ints."""
+    ras: dict[str, int] = {}
+    cbs: dict[str, int] = {}
+    for (a, b), o in cells.items():
+        ras[a] = ras.get(a, 0) + o
+        cbs[b] = cbs.get(b, 0) + o
+    n = sum(cells.values())
+    micro = 0
+    for a, ra in ras.items():
+        for b, cb in cbs.items():
+            obs = cells.get((a, b), 0)
+            d = float(obs * n - ra * cb)
+            micro += math.floor(d * d / float(n * ra * cb) * 1000000.0)
+    return micro
+
+
+def test_chi2_hand_case_includes_zero_cells(spark):
+    rows = [("x", "u")] * 10 + [("x", "v")] * 2 + [("y", "v")] * 8
+    # cell (y, u) is absent from the data but must contribute
+    df = spark.createDataFrame(rows, "a string, b string")
+    got = chi2_independence(df, col_a="a", col_b="b").collect()[0]
+    exp_micro = _chi2_expected({("x", "u"): 10, ("x", "v"): 2,
+                                ("y", "v"): 8})
+    assert got["n"] == 20 and got["k_a"] == 2 and got["k_b"] == 2
+    assert got["dof"] == 1
+    assert got["chi2_micro"] == exp_micro
+    assert got["chi2"] == exp_micro / 1000000.0
+    assert got["cramers_v"] == pytest.approx(
+        math.sqrt(got["chi2"] / 20.0))
+
+
+def test_chi2_independent_columns_near_zero(spark):
+    rows = [(a, b) for a in ("x", "y") for b in ("u", "v")] * 5
+    df = spark.createDataFrame(rows, "a string, b string")
+    got = chi2_independence(df, col_a="a", col_b="b").collect()[0]
+    assert got["chi2_micro"] == 0
+
+
+def test_chi2_single_category_dof_zero(spark):
+    df = spark.createDataFrame([("x", "u"), ("x", "v")],
+                               "a string, b string")
+    got = chi2_independence(df, col_a="a", col_b="b").collect()[0]
+    assert got["dof"] == 0
+    assert got["chi2"] is None and got["cramers_v"] is None
+
+
+def test_chi2_drops_nulls(spark):
+    df = spark.createDataFrame(
+        [("x", "u"), ("x", None), (None, "u"), ("y", "v")],
+        "a string, b string")
+    got = chi2_independence(df, col_a="a", col_b="b").collect()[0]
+    assert got["n"] == 2
+
+
+# ----------------------------------------------------------------- welch
+
+
+def _welch(va: list[int], vb: list[int]):
+    na, nb = len(va), len(vb)
+    ma, mb = sum(va) / na, sum(vb) / nb
+    sa = (na * sum(v * v for v in va) - sum(va) ** 2) / (na * (na - 1))
+    sb = (nb * sum(v * v for v in vb) - sum(vb) ** 2) / (nb * (nb - 1))
+    se2 = sa / na + sb / nb
+    t = (ma - mb) / math.sqrt(se2)
+    dof = se2 * se2 / ((sa / na) ** 2 / (na - 1)
+                       + (sb / nb) ** 2 / (nb - 1))
+    return t, dof
+
+
+def test_welch_hand_case(spark):
+    va, vb = [10, 12, 9, 11], [14, 15, 13]
+    df = spark.createDataFrame(
+        [("A", v) for v in va] + [("B", v) for v in vb],
+        "g string, v long")
+    got = welch_ttest(df, value_col="v", group_col="g",
+                      group_a="A", group_b="B").collect()[0]
+    t, dof = _welch(va, vb)
+    assert got["n_a"] == 4 and got["n_b"] == 3
+    assert got["mean_a"] == sum(va) / 4 and got["mean_b"] == sum(vb) / 3
+    assert got["t_stat"] == pytest.approx(t, abs=1e-12)
+    assert got["welch_df"] == pytest.approx(dof, abs=1e-12)
+
+
+def test_welch_small_side_is_null(spark):
+    df = spark.createDataFrame([("A", 1), ("A", 2), ("B", 5)],
+                               "g string, v long")
+    got = welch_ttest(df, value_col="v", group_col="g",
+                      group_a="A", group_b="B").collect()[0]
+    assert got["t_stat"] is None and got["welch_df"] is None
+    assert got["mean_b"] == 5.0
+
+
+def test_welch_rejects_float_values(spark):
+    df = spark.createDataFrame([("A", 1.5)], "g string, v double")
+    with pytest.raises(ValueError):
+        welch_ttest(df, value_col="v", group_col="g",
+                    group_a="A", group_b="B")
+
+
+def test_welch_grouped_single_aggregate(spark):
+    df = spark.createDataFrame(
+        [("g1", "A", 1), ("g1", "A", 3), ("g1", "B", 2), ("g1", "B", 6),
+         ("g2", "A", 9), ("g2", "A", 9), ("g2", "B", 1), ("g2", "B", 3)],
+        "grp string, g string, v long")
+    out = welch_ttest(df, value_col="v", group_col="g",
+                      group_a="A", group_b="B", group_cols=["grp"])
+    rows = {r["grp"]: r for r in out.collect()}
+    assert set(rows) == {"g1", "g2"}
+    # zero-variance pair (g2 side A) still defined while se2 > 0
+    assert rows["g2"]["t_stat"] is not None
+    plan = _plan(out)
+    assert "Window" not in plan and "SortMergeJoin" not in plan
 
 
 # ------------------------------------------------- sorted neighborhood
@@ -288,6 +408,144 @@ def test_psi_validates_params(spark):
                   split_b=1, lo=5.0, hi=5.0)
 
 
+# ----------------------------------------------------------- mann-whitney
+
+
+def _brute_u(a: list[int], b: list[int]) -> float:
+    return sum((1.0 if x > y else 0.5 if x == y else 0.0)
+               for x in a for y in b)
+
+
+def test_mwu_matches_brute_force_with_ties(spark):
+    from kml2geojson_spark.relational import mannwhitney_u
+    a, b = [1, 3, 3, 7, 9], [2, 3, 5, 5]
+    df = spark.createDataFrame(
+        [("g", "A", v) for v in a] + [("g", "B", v) for v in b],
+        "grp string, side string, v long")
+    (r,) = mannwhitney_u(df, value_col="v", side_col="side",
+                         side_a="A", side_b="B",
+                         group_cols=["grp"]).collect()
+    assert r["u_a"] == _brute_u(a, b)
+    assert r["u2_a"] == int(2 * _brute_u(a, b))
+    assert r["n_a"] == 5 and r["n_b"] == 4
+    # symmetry: U_a + U_b = n_a * n_b
+    (r2,) = mannwhitney_u(df, value_col="v", side_col="side",
+                          side_a="B", side_b="A",
+                          group_cols=["grp"]).collect()
+    assert r["u_a"] + r2["u_a"] == 20.0
+    assert r["z"] is not None and r2["z"] == -r["z"]
+
+
+def test_mwu_all_ties_z_null(spark):
+    from kml2geojson_spark.relational import mannwhitney_u
+    df = spark.createDataFrame(
+        [("g", "A", 5)] * 3 + [("g", "B", 5)] * 2,
+        "grp string, side string, v long")
+    (r,) = mannwhitney_u(df, value_col="v", side_col="side",
+                         side_a="A", side_b="B",
+                         group_cols=["grp"]).collect()
+    assert r["u_a"] == 3.0  # all half-ties: 3*2/2
+    assert r["z"] is None
+
+
+def test_mwu_validation(spark):
+    from kml2geojson_spark.relational import mannwhitney_u
+    df = spark.createDataFrame([("g", "A", 1.0)],
+                               "grp string, side string, v double")
+    with pytest.raises(ValueError):
+        mannwhitney_u(df, value_col="v", side_col="side",
+                      side_a="A", side_b="B", group_cols=["grp"])
+    with pytest.raises(ValueError):
+        mannwhitney_u(df.select("grp", "side",
+                                F.lit(1).alias("v")),
+                      value_col="v", side_col="side",
+                      side_a="A", side_b="A", group_cols=["grp"])
+
+
+# ------------------------------------------------------- two-proportion z
+
+
+def test_ztest_hand_case(spark):
+    from kml2geojson_spark.relational import two_proportion_ztest
+    rows = [("A", 1)] * 30 + [("A", 0)] * 70 \
+        + [("B", 1)] * 20 + [("B", 0)] * 80
+    df = spark.createDataFrame(rows, "g string, s long")
+    (r,) = two_proportion_ztest(df, success_col="s", group_col="g",
+                                group_a="A", group_b="B").collect()
+    assert (r["n_a"], r["s_a"], r["n_b"], r["s_b"]) == (100, 30, 100, 20)
+    assert r["p_a"] == 0.3 and r["p_b"] == 0.2
+    p = 50 / 200
+    se = math.sqrt(p * (1 - p) * (1 / 100 + 1 / 100))
+    assert r["z"] == pytest.approx(0.1 / se, rel=1e-12)
+
+
+def test_ztest_degenerate_pooled_rate_null(spark):
+    from kml2geojson_spark.relational import two_proportion_ztest
+    df = spark.createDataFrame(
+        [("A", 1), ("A", 1), ("B", 1)], "g string, s long")
+    (r,) = two_proportion_ztest(df, success_col="s", group_col="g",
+                                group_a="A", group_b="B").collect()
+    assert r["z"] is None and r["p_a"] == 1.0
+
+
+def test_ztest_drops_non_binary_and_rejects_float(spark):
+    from kml2geojson_spark.relational import two_proportion_ztest
+    df = spark.createDataFrame(
+        [("A", 1), ("A", 2), ("B", 0)], "g string, s long")
+    (r,) = two_proportion_ztest(df, success_col="s", group_col="g",
+                                group_a="A", group_b="B").collect()
+    assert r["n_a"] == 1  # the s=2 row dropped
+    dff = spark.createDataFrame([("A", 0.5)], "g string, s double")
+    with pytest.raises(ValueError):
+        two_proportion_ztest(dff, success_col="s", group_col="g",
+                             group_a="A", group_b="B")
+
+
+# ------------------------------------------------------------ autocorr
+
+
+def test_autocorr_perfect_and_alternating(spark):
+    from kml2geojson_spark.relational import lag_autocorr
+    # strictly increasing series: lag-1 acf = 1 is wrong (it's
+    # Pearson of two shifted *different* windows) — use alternating
+    # series where lag-2 pairs are identical → acf = 1 exactly.
+    rows = [("s", i, 10 if i % 2 == 0 else -10) for i in range(12)]
+    df = spark.createDataFrame(rows, "g string, o long, v long")
+    got = {r["lag"]: r for r in lag_autocorr(
+        df, value_col="v", order_cols="o", group_cols=["g"],
+        lags=(1, 2)).collect()}
+    assert got[2]["acf"] == 1.0
+    assert got[1]["acf"] == pytest.approx(-1.0)
+    assert got[1]["n_pairs"] == 11 and got[2]["n_pairs"] == 10
+
+
+def test_autocorr_constant_side_null_and_short_series(spark):
+    from kml2geojson_spark.relational import lag_autocorr
+    df = spark.createDataFrame(
+        [("s", 1, 5), ("s", 2, 5), ("s", 3, 5), ("t", 1, 7)],
+        "g string, o long, v long")
+    rows = lag_autocorr(df, value_col="v", order_cols="o",
+                        group_cols=["g"], lags=(1,)).collect()
+    by_g = {r["g"]: r for r in rows}
+    assert by_g["s"]["acf"] is None  # constant series
+    assert "t" not in by_g           # no pairs at lag 1
+
+
+def test_autocorr_validation(spark):
+    from kml2geojson_spark.relational import lag_autocorr
+    df = spark.createDataFrame([("s", 1, 1.0)],
+                               "g string, o long, v double")
+    with pytest.raises(ValueError):
+        lag_autocorr(df, value_col="v", order_cols="o", group_cols=["g"])
+    dfl = spark.createDataFrame([("s", 1, 1)], "g string, o long, v long")
+    with pytest.raises(ValueError):
+        lag_autocorr(dfl, value_col="v", order_cols="o",
+                     group_cols=["g"], lags=(0,))
+    with pytest.raises(ValueError):
+        lag_autocorr(dfl, value_col="v", order_cols="o",
+                     group_cols=["g"], lags=(1, 1))
+
+
 # -------------------------------------------------------------- benford
 
 
@@ -332,6 +590,46 @@ def test_benford_grouped_and_float_raises(spark):
     dff = spark.createDataFrame([(1.5,)], "v double")
     with pytest.raises(ValueError):
         benford_audit(dff, value_col="v")
+
+
+# ------------------------------------------------------------------ anova
+
+
+def test_anova_hand_case(spark):
+    from kml2geojson_spark.relational import oneway_anova
+    data = {"a": [1, 2, 3], "b": [4, 5, 6], "c": [7, 8, 9]}
+    rows = [(lvl, v) for lvl, vs in data.items() for v in vs]
+    df = spark.createDataFrame(rows, "lvl string, v long")
+    (r,) = oneway_anova(df, value_col="v", factor_col="lvl").collect()
+    assert r["k"] == 3 and r["n"] == 9
+    # exact: SSB = 54, SSW = 6 → F = (54/2)/(6/6) = 27
+    assert r["ssb_milli"] == 54000 and r["ssw_milli"] == 6000
+    assert r["f_stat"] == 27.0
+
+
+def test_anova_single_level_and_constant(spark):
+    from kml2geojson_spark.relational import oneway_anova
+    df1 = spark.createDataFrame([("a", 1), ("a", 2)], "lvl string, v long")
+    (r1,) = oneway_anova(df1, value_col="v", factor_col="lvl").collect()
+    assert r1["f_stat"] is None  # k < 2
+    df2 = spark.createDataFrame(
+        [("a", 5), ("a", 5), ("b", 5), ("b", 5)], "lvl string, v long")
+    (r2,) = oneway_anova(df2, value_col="v", factor_col="lvl").collect()
+    assert r2["ssw_milli"] == 0 and r2["f_stat"] is None
+
+
+def test_anova_grouped_and_float_raises(spark):
+    from kml2geojson_spark.relational import oneway_anova
+    df = spark.createDataFrame(
+        [("g1", "a", 1), ("g1", "b", 9), ("g2", "a", 3), ("g2", "b", 3)],
+        "g string, lvl string, v long")
+    rows = {r["g"]: r for r in oneway_anova(
+        df, value_col="v", factor_col="lvl", group_cols=["g"]).collect()}
+    assert rows["g1"]["ssb_milli"] == 32000
+    assert rows["g2"]["ssb_milli"] == 0
+    dff = spark.createDataFrame([("a", 1.0)], "lvl string, v double")
+    with pytest.raises(ValueError):
+        oneway_anova(dff, value_col="v", factor_col="lvl")
 
 
 # ----------------------------------------------------------- bellman-ford
@@ -440,6 +738,97 @@ def test_centroid_drift_partition_invariant(spark):
     assert a == b  # exact BIGINT sums → bit-identical cosine
 
 
+# ------------------------------------------------------------------ ndcg
+
+
+def test_ndcg_perfect_and_inverted(spark):
+    from kml2geojson_spark.relational import ndcg_at_k
+    # system ranking identical to relevance order → ndcg == 1
+    rows = [("g", i, 100 - i, 10 - i) for i in range(5)]
+    df = spark.createDataFrame(rows, "g string, id long, s long, r long")
+    (r,) = ndcg_at_k(df, group_cols=["g"], id_col="id", score_col="s",
+                     rel_col="r", k=5).collect()
+    assert r["ndcg"] == 1.0 and r["dcg_micro"] == r["idcg_micro"]
+    # inverted system order → ndcg < 1, hand-checkable
+    import math
+    rows2 = [("g", 1, 1, 3), ("g", 2, 2, 1)]  # system ranks id2 first
+    df2 = spark.createDataFrame(rows2, "g string, id long, s long, r long")
+    (r2,) = ndcg_at_k(df2, group_cols=["g"], id_col="id", score_col="s",
+                      rel_col="r", k=2).collect()
+    d1 = round(1_000_000 / math.log2(2))
+    d2 = round(1_000_000 / math.log2(3))
+    assert r2["dcg_micro"] == 1 * d1 + 3 * d2
+    assert r2["idcg_micro"] == 3 * d1 + 1 * d2
+    assert r2["ndcg"] == r2["dcg_micro"] / r2["idcg_micro"]
+
+
+def test_ndcg_zero_relevance_null_and_k_cut(spark):
+    from kml2geojson_spark.relational import ndcg_at_k
+    df = spark.createDataFrame([("g", 1, 5, 0), ("g", 2, 4, 0)],
+                               "g string, id long, s long, r long")
+    (r,) = ndcg_at_k(df, group_cols=["g"], id_col="id", score_col="s",
+                     rel_col="r", k=2).collect()
+    assert r["ndcg"] is None
+    # item outside top-k contributes nothing
+    df2 = spark.createDataFrame(
+        [("g", 1, 9, 1), ("g", 2, 8, 1), ("g", 3, 7, 100)],
+        "g string, id long, s long, r long")
+    (r2,) = ndcg_at_k(df2, group_cols=["g"], id_col="id",
+                      score_col="s", rel_col="r", k=2).collect()
+    assert r2["ndcg"] < 0.1  # the rel-100 item was ranked out
+
+
+def test_ndcg_validation(spark):
+    from kml2geojson_spark.relational import ndcg_at_k
+    df = spark.createDataFrame([("g", 1, 1, 0.5)],
+                               "g string, id long, s long, r double")
+    with pytest.raises(ValueError):
+        ndcg_at_k(df, group_cols=["g"], id_col="id", score_col="s",
+                  rel_col="r")
+    dfl = spark.createDataFrame([("g", 1, 1, 1)],
+                                "g string, id long, s long, r long")
+    with pytest.raises(ValueError):
+        ndcg_at_k(dfl, group_cols=[], id_col="id", score_col="s",
+                  rel_col="r")
+    with pytest.raises(ValueError):
+        ndcg_at_k(dfl, group_cols=["g"], id_col="id", score_col="s",
+                  rel_col="r", k=0)
+
+
+# ------------------------------------------------------------------- rrf
+
+
+def test_rrf_hand_scores_and_missing_items(spark):
+    from kml2geojson_spark.relational import rrf_fuse
+    ra = spark.createDataFrame([(10, 1), (20, 2)], "item long, rnk long")
+    rb = spark.createDataFrame([(20, 1), (30, 2)], "item long, rnk long")
+    got = {r["item"]: r for r in rrf_fuse([ra, rb], k=60).collect()}
+    assert got[20]["n_runs_hit"] == 2
+    assert got[20]["rrf_score"] == 1 / 62 + 1 / 61
+    assert got[10]["rrf_score"] == 1 / 61 and got[10]["rank_2"] is None
+    assert got[30]["rrf_score"] == 1 / 62 and got[30]["rank_1"] is None
+
+
+def test_rrf_dup_items_keep_min_rank_and_three_runs(spark):
+    from kml2geojson_spark.relational import rrf_fuse
+    ra = spark.createDataFrame([(1, 5), (1, 2)], "item long, rnk long")
+    rb = spark.createDataFrame([(1, 3)], "item long, rnk long")
+    rc = spark.createDataFrame([(2, 1)], "item long, rnk long")
+    got = {r["item"]: r for r in rrf_fuse([ra, rb, rc]).collect()}
+    assert got[1]["rank_1"] == 2  # min of the duplicates
+    assert got[1]["rrf_score"] == 1 / 62 + 1 / 63
+    assert got[2]["n_runs_hit"] == 1
+
+
+def test_rrf_validation(spark):
+    from kml2geojson_spark.relational import rrf_fuse
+    r = spark.createDataFrame([(1, 1)], "item long, rnk long")
+    with pytest.raises(ValueError):
+        rrf_fuse([r])
+    with pytest.raises(ValueError):
+        rrf_fuse([r, r], k=0)
+
+
 # ----------------------------------------------------------------- k-core
 
 
@@ -503,6 +892,145 @@ def test_kcore_matches_networkx_style_brute(spark):
     assert got == {n: len(nb) for n, nb in adj.items()}
 
 
+# ----------------------------------------------------------- burst dedup
+
+
+def test_bursts_chain_and_keeper(spark):
+    import datetime as dt
+    from kml2geojson_spark.eventops import event_dedup_bursts
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [
+        (1, t0, 9, "click"),                                  # burst 1
+        (2, t0 + dt.timedelta(seconds=30), 9, "click"),       # chained
+        (3, t0 + dt.timedelta(seconds=55), 9, "click"),       # chained
+        (4, t0 + dt.timedelta(seconds=200), 9, "click"),      # burst 2
+        (5, t0, 9, "view"),                                   # other key
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, "
+              "event_type string")
+    got = {(r["user_id"], r["event_type"], r["burst_idx"]): r
+           for r in event_dedup_bursts(
+               df, key_cols=["user_id", "event_type"],
+               gap_seconds=60).collect()}
+    b1 = got[(9, "click", 1)]
+    assert b1["keeper_id"] == 1 and b1["burst_size"] == 3
+    assert b1["burst_span_us"] == 55_000_000
+    assert got[(9, "click", 2)]["keeper_id"] == 4
+    assert got[(9, "view", 1)]["keeper_id"] == 5
+
+
+def test_bursts_duplicate_ts_totalized_and_validation(spark):
+    import datetime as dt
+    from kml2geojson_spark.eventops import event_dedup_bursts
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(7, t0, 1, "x"), (3, t0, 1, "x")],
+        "event_id long, ts timestamp, user_id long, event_type string")
+    (r,) = event_dedup_bursts(df, key_cols=["user_id", "event_type"],
+                              gap_seconds=60).collect()
+    assert r["keeper_id"] == 3 and r["burst_size"] == 2
+    with pytest.raises(ValueError):
+        event_dedup_bursts(df, key_cols=[], gap_seconds=60)
+    with pytest.raises(ValueError):
+        event_dedup_bursts(df, key_cols=["user_id"], gap_seconds=-1)
+
+
+# ------------------------------------------------------------ trimmed mean
+
+
+def test_trimmed_mean_hand_case_and_tie_handling(spark):
+    from kml2geojson_spark.relational import trimmed_mean
+    # 10 values, trim 10% each side → drop min and max exactly
+    vals = [100, 1, 2, 3, 4, 5, 6, 7, 8, -50]
+    df = spark.createDataFrame([("g", v) for v in vals],
+                               "grp string, v long")
+    (r,) = trimmed_mean(df, value_col="v", group_cols=["grp"],
+                        trim_milli=100).collect()
+    kept = sorted(vals)[1:-1]
+    assert r["n"] == 10 and r["n_kept"] == 8
+    assert r["trimmed_sum"] == sum(kept)
+    assert r["trimmed_mean"] == sum(kept) / 8
+    # duplicated extremes: trim removes BY COUNT, not by value
+    vals2 = [5, 5, 5, 1, 1, 9, 9]
+    df2 = spark.createDataFrame([("g", v) for v in vals2],
+                                "grp string, v long")
+    (r2,) = trimmed_mean(df2, value_col="v", group_cols=["grp"],
+                         trim_milli=200).collect()
+    kept2 = sorted(vals2)[1:-1]  # k = 7*200//1000 = 1 per side
+    assert r2["trimmed_sum"] == sum(kept2) and r2["n_kept"] == 5
+
+
+def test_trimmed_mean_zero_trim_is_mean_and_validation(spark):
+    from kml2geojson_spark.relational import trimmed_mean
+    df = spark.createDataFrame([("g", 1), ("g", 2), ("g", 3)],
+                               "grp string, v long")
+    (r,) = trimmed_mean(df, value_col="v", group_cols=["grp"],
+                        trim_milli=0).collect()
+    assert r["trimmed_mean"] == 2.0 and r["n_kept"] == 3
+    with pytest.raises(ValueError):
+        trimmed_mean(df, value_col="v", group_cols=["grp"],
+                     trim_milli=500)
+    dff = spark.createDataFrame([("g", 1.0)], "grp string, v double")
+    with pytest.raises(ValueError):
+        trimmed_mean(dff, value_col="v", group_cols=["grp"])
+
+
+def test_trimmed_mean_heavy_trim_leaves_median_like_core(spark):
+    from kml2geojson_spark.relational import trimmed_mean
+    df = spark.createDataFrame([("g", v) for v in range(1, 12)],
+                               "grp string, v long")
+    # n=11, trim 40% → k=4 per side → keep ranks 5..7 → values 5,6,7
+    (r,) = trimmed_mean(df, value_col="v", group_cols=["grp"],
+                        trim_milli=400).collect()
+    assert r["n_kept"] == 3 and r["trimmed_mean"] == 6.0
+
+
+# --------------------------------------------------------- ratio metrics
+
+
+def test_ratio_metric_hand_case(spark):
+    from kml2geojson_spark.relational import ratio_metric_stats
+    import math
+    xs, ys = [10, 20, 30], [1, 2, 3]
+    df = spark.createDataFrame([("g", x, y) for x, y in zip(xs, ys)],
+                               "grp string, x long, y long")
+    (r,) = ratio_metric_stats(df, num_col="x", den_col="y",
+                              group_cols=["grp"]).collect()
+    assert r["ratio"] == sum(xs) / sum(ys) == 10.0
+    n = 3
+    def cov(a, b):
+        return (n * sum(p * q for p, q in zip(a, b))
+                - sum(a) * sum(b)) / (n * (n - 1))
+    R = 10.0
+    ybar = sum(ys) / n
+    var = (cov(xs, xs) + R * R * cov(ys, ys)
+           - 2 * R * cov(xs, ys)) / (n * ybar * ybar)
+    assert r["se"] == pytest.approx(math.sqrt(var), abs=1e-15)
+    # perfectly proportional x = 10y → zero variance of the ratio
+    assert r["se"] == 0.0
+
+
+def test_ratio_metric_noise_and_degenerate(spark):
+    from kml2geojson_spark.relational import ratio_metric_stats
+    df = spark.createDataFrame(
+        [("g", 12, 1), ("g", 18, 2), ("g", 35, 3)],
+        "grp string, x long, y long")
+    (r,) = ratio_metric_stats(df, num_col="x", den_col="y",
+                              group_cols=["grp"]).collect()
+    assert r["se"] is not None and r["se"] > 0
+    dz = spark.createDataFrame([("g", 5, 0), ("g", 3, 0)],
+                               "grp string, x long, y long")
+    (r2,) = ratio_metric_stats(dz, num_col="x", den_col="y",
+                               group_cols=["grp"]).collect()
+    assert r2["ratio"] is None and r2["se"] is None
+    dff = spark.createDataFrame([("g", 1.0, 1)],
+                                "grp string, x double, y long")
+    with pytest.raises(ValueError):
+        ratio_metric_stats(dff, num_col="x", den_col="y",
+                           group_cols=["grp"])
+
+
 # ------------------------------------------------------------- table diff
 
 
@@ -556,3 +1084,121 @@ def test_table_diff_validation(spark):
         table_diff(df, df, key_cols=["k"], value_cols=[])
 
 
+# ------------------------------------------------------------- cohort ltv
+
+
+def test_cohort_ltv_hand_case(spark):
+    import datetime as dt
+    from kml2geojson_spark.eventops import cohort_ltv
+    d0 = dt.datetime(2024, 1, 1, 10)
+    rows = [
+        (1, d0, 9, "buy", 1.50, "{}"),
+        (2, d0 + dt.timedelta(days=1), 9, "buy", 2.00, "{}"),
+        (3, d0 + dt.timedelta(days=1, hours=2), 9, "buy", 0.25, "{}"),
+        (4, d0, 8, "buy", 10.0, "{}"),
+    ]
+    df = spark.createDataFrame(rows, "event_id long, ts timestamp, "
+                               "user_id long, event_type string, "
+                               "value double, props string")
+    got = {(str(r["cohort_day"]), r["age_days"]): r
+           for r in cohort_ltv(df).collect()}
+    day0 = got[("2024-01-01", 0)]
+    assert day0["value_scaled"] == 150 + 1000   # both users, cents
+    assert day0["n_users_cohort"] == 2
+    day1 = got[("2024-01-01", 1)]
+    assert day1["value_scaled"] == 200 + 25
+    assert day1["cum_value_scaled"] == 1150 + 225
+
+
+def test_cohort_ltv_age_cap_and_validation(spark):
+    import datetime as dt
+    from kml2geojson_spark.eventops import cohort_ltv
+    d0 = dt.datetime(2024, 1, 1)
+    rows = [(1, d0, 9, "b", 1.0, "{}"),
+            (2, d0 + dt.timedelta(days=100), 9, "b", 5.0, "{}")]
+    df = spark.createDataFrame(rows, "event_id long, ts timestamp, "
+                               "user_id long, event_type string, "
+                               "value double, props string")
+    out = cohort_ltv(df, max_age_days=30).collect()
+    assert len(out) == 1 and out[0]["age_days"] == 0
+    with pytest.raises(ValueError):
+        cohort_ltv(df, max_age_days=-1)
+    with pytest.raises(ValueError):
+        cohort_ltv(df, value_scale=0)
+
+
+# ------------------------------------------------------------ spearman
+
+
+def test_spearman_brute_force_midranks(spark):
+    from kml2geojson_spark.relational import spearman_corr
+    import random
+    random.seed(11)
+    rows = [("g", random.randint(0, 15), random.randint(0, 40))
+            for _ in range(150)]
+    df = spark.createDataFrame(rows, "grp string, x long, y long")
+    (r,) = spearman_corr(df, x_col="x", y_col="y",
+                         group_cols=["grp"]).collect()
+
+    def midranks(vals):
+        order = sorted(range(len(vals)), key=lambda i: vals[i])
+        out = [0.0] * len(vals)
+        i = 0
+        while i < len(order):
+            j = i
+            while (j + 1 < len(order)
+                   and vals[order[j + 1]] == vals[order[i]]):
+                j += 1
+            avg = (i + 1 + j + 1) / 2
+            for k in range(i, j + 1):
+                out[order[k]] = avg
+            i = j + 1
+        return out
+
+    xs = [t[1] for t in rows]
+    ys = [t[2] for t in rows]
+    rx, ry = midranks(xs), midranks(ys)
+    n = len(rx)
+    sx, sy = sum(rx), sum(ry)
+    sxx = sum(a * a for a in rx)
+    syy = sum(a * a for a in ry)
+    sxy = sum(a * b for a, b in zip(rx, ry))
+    rho = ((n * sxy - sx * sy)
+           / math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)))
+    assert r["n"] == n
+    assert abs(r["spearman"] - rho) < 1e-12
+
+
+def test_spearman_edges_and_validation(spark):
+    from kml2geojson_spark.relational import spearman_corr
+    rows = ([("m", i, i * i) for i in range(8)]          # monotone -> 1
+            + [("a", i, -3 * i) for i in range(8)]       # anti -> -1
+            + [("c", 4, i) for i in range(5)]            # const x -> NULL
+            + [("s", 7, 9)])                             # n=1 -> NULL
+    df = spark.createDataFrame(rows, "grp string, x long, y long")
+    out = {r["grp"]: r for r in
+           spearman_corr(df, x_col="x", y_col="y",
+                         group_cols=["grp"]).collect()}
+    assert out["m"]["spearman"] == 1.0
+    assert out["a"]["spearman"] == -1.0
+    assert out["c"]["spearman"] is None
+    assert out["s"]["spearman"] is None
+    dff = spark.createDataFrame([("g", 1.0, 2)],
+                                "grp string, x double, y long")
+    with pytest.raises(ValueError):
+        spearman_corr(dff, x_col="x", y_col="y", group_cols=["grp"])
+    with pytest.raises(ValueError):
+        spearman_corr(df, x_col="x", y_col="y", group_cols=[])
+
+
+def test_spearman_plan_one_exchange_zero_python(spark):
+    from kml2geojson_spark.relational import spearman_corr
+    df = spark.createDataFrame([("g", i % 5, i % 7) for i in range(40)],
+                               "grp string, x long, y long")
+    plan = _plan(spearman_corr(df, x_col="x", y_col="y",
+                               group_cols=["grp"]))
+    assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
+    # window passes + final agg all share the group hash partitioning:
+    # exchanges = the group hash + the agg's (AQE may reuse); never a
+    # per-rank re-shuffle per window.
+    assert plan.count("Exchange") <= 3

@@ -11,11 +11,323 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kml2geojson_spark.relational import (js_divergence, map_at_k,
+                                          poisson_rate_ztest, runs_test)
 from kml2geojson_spark.textops import char_entropy
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# --------------------------------------------------------- js_divergence
+
+
+def _jsd_reference(ca: dict[str, int], cb: dict[str, int]) -> float:
+    """Micro-nat replay of the operator's integerization contract."""
+    n1 = sum(ca.values())
+    n2 = sum(cb.values())
+
+    def lnmu(x: int) -> int:
+        return round(math.log(float(x)) * 1e6)
+
+    sa = sb = 0
+    for cat in set(ca) | set(cb):
+        c1, c2 = ca.get(cat, 0), cb.get(cat, 0)
+        mix = c1 * n2 + c2 * n1
+        if c1 > 0:
+            sa += c1 * (lnmu(2 * c1 * n2) - lnmu(mix))
+        if c2 > 0:
+            sb += c2 * (lnmu(2 * c2 * n1) - lnmu(mix))
+    return (sa / n1 + sb / n2) / 2e6
+
+
+def test_js_divergence_matches_reference(spark):
+    import random
+    random.seed(11)
+    cats = list("abcdef")
+    rows = ([("A", random.choice(cats)) for _ in range(300)]
+            + [("B", random.choice(cats[:4])) for _ in range(200)])
+    df = spark.createDataFrame(rows, "grp string, cat string")
+    (r,) = js_divergence(df, cat_col="cat", group_col="grp",
+                         group_a="A", group_b="B").collect()
+    ca: dict[str, int] = {}
+    cb: dict[str, int] = {}
+    for g, c in rows:
+        (ca if g == "A" else cb)[c] = (ca if g == "A" else cb).get(c, 0) + 1
+    assert r["n_a"] == 300 and r["n_b"] == 200
+    assert r["k_cats"] == len(set(ca) | set(cb))
+    assert r["jsd"] == pytest.approx(_jsd_reference(ca, cb), abs=1e-12)
+    # bounded by ln 2 (+ integerization slack)
+    assert -1e-5 <= r["jsd"] <= math.log(2.0) + 1e-5
+
+
+def test_js_divergence_identical_distributions_zero(spark):
+    rows = [(g, c) for g in ("A", "B") for c in ("x", "x", "y")]
+    df = spark.createDataFrame(rows, "grp string, cat string")
+    (r,) = js_divergence(df, cat_col="cat", group_col="grp",
+                         group_a="A", group_b="B").collect()
+    assert r["jsd_num_a_micro"] == 0 and r["jsd_num_b_micro"] == 0
+    assert r["jsd"] == 0.0
+
+
+def test_js_divergence_disjoint_supports_ln2(spark):
+    rows = [("A", "x")] * 5 + [("B", "y")] * 7
+    df = spark.createDataFrame(rows, "grp string, cat string")
+    (r,) = js_divergence(df, cat_col="cat", group_col="grp",
+                         group_a="A", group_b="B").collect()
+    assert r["jsd"] == pytest.approx(math.log(2.0), abs=1e-5)
+
+
+def test_js_divergence_empty_side_null_and_other_groups_drop(spark):
+    rows = [("A", "x"), ("A", "y"), ("C", "z"), (None, "x"),
+            ("A", None)]
+    df = spark.createDataFrame(rows, "grp string, cat string")
+    (r,) = js_divergence(df, cat_col="cat", group_col="grp",
+                         group_a="A", group_b="B").collect()
+    assert r["n_a"] == 2 and r["n_b"] == 0
+    assert r["jsd"] is None
+
+
+def test_js_divergence_grouped_and_plan(spark):
+    rows = [("g1", "A", "x"), ("g1", "A", "y"), ("g1", "B", "x"),
+            ("g2", "A", "x"), ("g2", "B", "y"), (None, "A", "x")]
+    df = spark.createDataFrame(rows, "seg string, grp string, cat string")
+    out = js_divergence(df, cat_col="cat", group_col="grp",
+                        group_a="A", group_b="B",
+                        group_cols=["seg"])
+    got = {r["seg"]: r for r in out.collect()}
+    assert set(got) == {"g1", "g2"}
+    assert got["g1"]["n_a"] == 2 and got["g1"]["n_b"] == 1
+    assert got["g2"]["jsd"] == pytest.approx(math.log(2.0), abs=1e-5)
+    plan = _plan(out)
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan  # window + aggregates only
+
+
+# --------------------------------------------------------- map_at_k
+
+
+def _ap_reference(ranked_rel: list[int], k: int) -> tuple[int, float]:
+    """Milli-floored per-hit precision replay."""
+    n_rel = sum(ranked_rel)
+    s = 0
+    cum = 0
+    for i, r in enumerate(ranked_rel, start=1):
+        cum += r
+        if r == 1 and i <= k:
+            s += math.floor(cum * 1000.0 / i)
+    return s, s / (min(n_rel, k) * 1000.0) if n_rel else float("nan")
+
+
+def test_map_at_k_matches_reference(spark):
+    import random
+    random.seed(5)
+    rows = []
+    expect = {}
+    for q in range(20):
+        items = [(q, i, random.random(), random.randint(0, 1))
+                 for i in range(15)]
+        rows += items
+        ranked = sorted(items, key=lambda t: (-t[2], t[1]))
+        rel = [t[3] for t in ranked]
+        n_rel = sum(rel)
+        s, ap = _ap_reference(rel, 5)
+        expect[q] = (n_rel, s, ap if n_rel else None)
+    df = spark.createDataFrame(
+        rows, "qid long, iid long, score double, rel long")
+    out = {r["qid"]: r for r in
+           map_at_k(df, group_cols=["qid"], id_col="iid",
+                    score_col="score", rel_col="rel", k=5).collect()}
+    assert set(out) == set(expect)
+    for q, (n_rel, s, ap) in expect.items():
+        assert out[q]["n_rel"] == n_rel
+        assert out[q]["ap_milli_sum"] == s
+        if ap is None:
+            assert out[q]["map_at_k"] is None
+        else:
+            assert out[q]["map_at_k"] == pytest.approx(ap, abs=1e-12)
+
+
+def test_map_at_k_perfect_and_worst_ranking(spark):
+    rows = ([("p", i, 100.0 - i, 1 if i < 3 else 0) for i in range(10)]
+            + [("w", i, 100.0 - i, 1 if i >= 7 else 0)
+               for i in range(10)])
+    df = spark.createDataFrame(
+        rows, "qid string, iid long, score double, rel long")
+    out = {r["qid"]: r for r in
+           map_at_k(df, group_cols=["qid"], id_col="iid",
+                    score_col="score", rel_col="rel", k=3).collect()}
+    assert out["p"]["map_at_k"] == pytest.approx(1.0)
+    assert out["w"]["n_hits_at_k"] == 0
+    assert out["w"]["map_at_k"] == 0.0
+
+
+def test_map_at_k_rejects_float_rel_and_bad_args(spark):
+    df = spark.createDataFrame([("q", 1, 1.0, 1.0)],
+                               "qid string, iid long, s double, r double")
+    with pytest.raises(ValueError, match="floating-point"):
+        map_at_k(df, group_cols=["qid"], id_col="iid", score_col="s",
+                 rel_col="r", k=3)
+    df2 = spark.createDataFrame([("q", 1, 1.0, 1)],
+                                "qid string, iid long, s double, r long")
+    with pytest.raises(ValueError, match="group_cols"):
+        map_at_k(df2, group_cols=[], id_col="iid", score_col="s",
+                 rel_col="r", k=3)
+    with pytest.raises(ValueError, match="k must"):
+        map_at_k(df2, group_cols=["qid"], id_col="iid", score_col="s",
+                 rel_col="r", k=0)
+
+
+def test_map_at_k_drops_non_binary_and_null_rows(spark):
+    rows = [("q", 1, 9.0, 1), ("q", 2, 8.0, 2), ("q", 3, 7.0, None),
+            ("q", None, 6.0, 1), ("q", 4, None, 1), ("q", 5, 5.0, 0)]
+    df = spark.createDataFrame(
+        rows, "qid string, iid long, score double, rel long")
+    (r,) = map_at_k(df, group_cols=["qid"], id_col="iid",
+                    score_col="score", rel_col="rel", k=3).collect()
+    # only iid 1 (rel=1) and iid 5 (rel=0) survive
+    assert r["n_rel"] == 1 and r["n_hits_at_k"] == 1
+    assert r["map_at_k"] == pytest.approx(1.0)
+
+
+def test_map_at_k_plan_single_window_no_join(spark):
+    df = spark.createDataFrame([("q", 1, 1.0, 1)],
+                               "qid string, iid long, s double, r long")
+    plan = _plan(map_at_k(df, group_cols=["qid"], id_col="iid",
+                          score_col="s", rel_col="r", k=3))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan
+
+
+# --------------------------------------------------------- runs_test
+
+
+def _runs_reference(seq: list[int]) -> tuple[int, float | None]:
+    runs = 1 + sum(1 for a, b in zip(seq, seq[1:]) if a != b)
+    n = len(seq)
+    n1 = sum(seq)
+    n0 = n - n1
+    if n1 == 0 or n0 == 0 or n < 2:
+        return runs, None
+    p2 = 2.0 * n1 * n0
+    var = p2 * (p2 - n) / (n * n * (n - 1.0))
+    if var <= 0:
+        return runs, None
+    return runs, (runs - 1.0 - p2 / n) / math.sqrt(var)
+
+
+def test_runs_test_matches_reference(spark):
+    import random
+    random.seed(3)
+    rows = []
+    expect = {}
+    for g in range(8):
+        seq = [random.randint(0, 1) for _ in range(50)]
+        rows += [(g, i, i * 10, x) for i, x in enumerate(seq)]
+        expect[g] = _runs_reference(seq)
+    df = spark.createDataFrame(rows, "grp long, eid long, o long, x long")
+    out = {r["grp"]: r for r in
+           runs_test(df, flag_col="x", order_col="o", id_col="eid",
+                     group_cols=["grp"]).collect()}
+    for g, (runs, z) in expect.items():
+        assert out[g]["runs"] == runs
+        if z is None:
+            assert out[g]["z"] is None
+        else:
+            assert out[g]["z"] == pytest.approx(z, abs=1e-12)
+
+
+def test_runs_test_order_ties_broken_by_id(spark):
+    # same order value for all rows: sequence is id order
+    rows = [("g", 1, 0, 0), ("g", 2, 0, 1), ("g", 3, 0, 0),
+            ("g", 4, 0, 1)]
+    df = spark.createDataFrame(rows, "grp string, eid long, o long, x long")
+    (r,) = runs_test(df, flag_col="x", order_col="o", id_col="eid",
+                     group_cols=["grp"]).collect()
+    assert r["runs"] == 4  # perfectly alternating
+
+
+def test_runs_test_constant_sequence_null_z(spark):
+    rows = [("g", i, i, 1) for i in range(6)]
+    df = spark.createDataFrame(rows, "grp string, eid long, o long, x long")
+    (r,) = runs_test(df, flag_col="x", order_col="o", id_col="eid",
+                     group_cols=["grp"]).collect()
+    assert r["runs"] == 1 and r["n0"] == 0
+    assert r["z"] is None
+
+
+def test_runs_test_rejects_float_flag(spark):
+    df = spark.createDataFrame([("g", 1, 1, 0.5)],
+                               "grp string, eid long, o long, x double")
+    with pytest.raises(ValueError, match="floating-point"):
+        runs_test(df, flag_col="x", order_col="o", id_col="eid",
+                  group_cols=["grp"])
+
+
+def test_runs_test_plan_no_join_no_python(spark):
+    df = spark.createDataFrame([("g", 1, 1, 1)],
+                               "grp string, eid long, o long, x long")
+    plan = _plan(runs_test(df, flag_col="x", order_col="o",
+                           id_col="eid", group_cols=["grp"]))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan
+
+
+# --------------------------------------------------------- poisson rate
+
+
+def test_poisson_rate_ztest_matches_reference(spark):
+    rows = [("A", 3, 10), ("A", 7, 20), ("B", 1, 15), ("B", 2, 25),
+            ("C", 99, 1), (None, 5, 5), ("A", None, 5), ("A", 5, None),
+            ("A", -1, 5), ("A", 5, 0)]
+    df = spark.createDataFrame(rows, "grp string, k long, t long")
+    (r,) = poisson_rate_ztest(df, count_col="k", exposure_col="t",
+                              group_col="grp", group_a="A",
+                              group_b="B").collect()
+    ka, ta, kb, tb = 10, 30, 3, 40
+    assert (r["k_a"], r["t_a"], r["k_b"], r["t_b"]) == (ka, ta, kb, tb)
+    ra, rb = ka / ta, kb / tb
+    z = (ra - rb) / math.sqrt(ka / ta**2 + kb / tb**2)
+    assert r["rate_a"] == pytest.approx(ra)
+    assert r["z"] == pytest.approx(z, abs=1e-12)
+
+
+def test_poisson_rate_ztest_zero_counts_null_z(spark):
+    rows = [("A", 0, 10), ("B", 0, 10)]
+    df = spark.createDataFrame(rows, "grp string, k long, t long")
+    (r,) = poisson_rate_ztest(df, count_col="k", exposure_col="t",
+                              group_col="grp", group_a="A",
+                              group_b="B").collect()
+    assert r["z"] is None
+    assert r["rate_a"] == 0.0
+
+
+def test_poisson_rate_ztest_grouped_and_guards(spark):
+    rows = [("s1", "A", 4, 10), ("s1", "B", 2, 10),
+            ("s2", "A", 1, 10), (None, "A", 9, 9)]
+    df = spark.createDataFrame(rows, "seg string, grp string, k long, t long")
+    out = {r["seg"]: r for r in
+           poisson_rate_ztest(df, count_col="k", exposure_col="t",
+                              group_col="grp", group_a="A",
+                              group_b="B",
+                              group_cols=["seg"]).collect()}
+    assert set(out) == {"s1", "s2"}
+    assert out["s2"]["t_b"] == 0 and out["s2"]["z"] is None
+    fdf = spark.createDataFrame([("A", 1.5, 1)],
+                                "grp string, k double, t long")
+    with pytest.raises(ValueError, match="floating-point"):
+        poisson_rate_ztest(fdf, count_col="k", exposure_col="t",
+                           group_col="grp", group_a="A", group_b="B")
+
+
+def test_poisson_rate_ztest_plan_single_agg(spark):
+    df = spark.createDataFrame([("A", 1, 1)], "grp string, k long, t long")
+    plan = _plan(poisson_rate_ztest(df, count_col="k", exposure_col="t",
+                                    group_col="grp", group_a="A",
+                                    group_b="B"))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan and "Window" not in plan
 
 
 # --------------------------------------------------------- char_entropy
@@ -79,6 +391,373 @@ def test_char_entropy_plan_no_python_no_join(spark):
     plan = _plan(char_entropy(df))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Join" not in plan and "Window" not in plan
+
+
+# --------------------------------------------------------- basket_lift
+
+from kml2geojson_spark.relational import basket_lift, rolling_zscore
+
+
+def _lift_reference(baskets: dict[int, set[str]], min_count: int,
+                    max_basket: int):
+    kept = {b: its for b, its in baskets.items()
+            if len(its) <= max_basket}
+    nb = len(kept)
+    ic: dict[str, int] = {}
+    for its in kept.values():
+        for i in its:
+            ic[i] = ic.get(i, 0) + 1
+    freq = {i for i, c in ic.items() if c >= min_count}
+    pc: dict[tuple[str, str], int] = {}
+    for its in kept.values():
+        f = sorted(i for i in its if i in freq)
+        for x in range(len(f)):
+            for y in range(x + 1, len(f)):
+                pc[(f[x], f[y])] = pc.get((f[x], f[y]), 0) + 1
+    out = {}
+    for (a, b), nab in pc.items():
+        if nab >= min_count:
+            out[(a, b)] = (ic[a], ic[b], nab, nb,
+                           nab / nb, nab / ic[a],
+                           nab * nb / (ic[a] * ic[b]))
+    return out
+
+
+def test_basket_lift_matches_reference(spark):
+    import random
+    random.seed(13)
+    items = [f"i{k}" for k in range(12)]
+    baskets = {b: set(random.sample(items, random.randint(2, 6)))
+               for b in range(60)}
+    rows = [(b, i) for b, its in baskets.items() for i in its]
+    # duplicate rows must not double-count
+    rows += rows[:20]
+    df = spark.createDataFrame(rows, "bk long, it string")
+    got = {(r["item_a"], r["item_b"]): r for r in
+           basket_lift(df, basket_col="bk", item_col="it",
+                       min_count=3, max_basket=64).collect()}
+    exp = _lift_reference(baskets, 3, 64)
+    assert set(got) == set(exp)
+    for k, (na, nbq, nab, nb, sup, conf, lift) in exp.items():
+        r = got[k]
+        assert (r["n_a"], r["n_b"], r["n_ab"], r["n_baskets"]) == \
+            (na, nbq, nab, nb)
+        assert r["support"] == pytest.approx(sup, abs=1e-15)
+        assert r["confidence"] == pytest.approx(conf, abs=1e-15)
+        assert r["lift"] == pytest.approx(lift, abs=1e-12)
+
+
+def test_basket_lift_max_basket_excludes_mega_basket(spark):
+    rows = ([("big", f"i{k}") for k in range(10)]
+            + [("s1", "a"), ("s1", "b"), ("s2", "a"), ("s2", "b")])
+    df = spark.createDataFrame(rows, "bk string, it string")
+    out = basket_lift(df, basket_col="bk", item_col="it",
+                      min_count=2, max_basket=5).collect()
+    assert len(out) == 1
+    (r,) = out
+    assert (r["item_a"], r["item_b"]) == ("a", "b")
+    assert r["n_baskets"] == 2  # the mega-basket is not in the universe
+    assert r["lift"] == pytest.approx(2 * 2 / (2 * 2))
+
+
+def test_basket_lift_min_count_prunes_and_validates(spark):
+    rows = [("b1", "a"), ("b1", "x"), ("b2", "a"), ("b2", "x"),
+            ("b3", "rare")]
+    df = spark.createDataFrame(rows, "bk string, it string")
+    out = basket_lift(df, basket_col="bk", item_col="it",
+                      min_count=2, max_basket=10).collect()
+    assert {(r["item_a"], r["item_b"]) for r in out} == {("a", "x")}
+    with pytest.raises(ValueError, match="min_count"):
+        basket_lift(df, basket_col="bk", item_col="it", min_count=0)
+    with pytest.raises(ValueError, match="max_basket"):
+        basket_lift(df, basket_col="bk", item_col="it", max_basket=1)
+
+
+def test_basket_lift_plan_broadcasts_frequent_items(spark):
+    df = spark.createDataFrame([("b", "a"), ("b", "c")],
+                               "bk string, it string")
+    plan = _plan(basket_lift(df, basket_col="bk", item_col="it"))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "BroadcastHashJoin" in plan  # frequent-item prune + n_baskets
+    assert "CartesianProduct" not in plan
+
+
+# --------------------------------------------------------- rolling_zscore
+
+
+def test_rolling_zscore_matches_reference(spark):
+    import random
+    random.seed(17)
+    vals = [random.randint(-50, 150) for _ in range(40)]
+    rows = [("g", i, i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "grp string, eid long, o long, v long")
+    out = {r["id"]: r for r in
+           rolling_zscore(df, value_col="v", order_col="o",
+                          id_col="eid", group_cols=["grp"], window=10,
+                          min_periods=4,
+                          threshold_milli=1500).collect()}
+    for i, v in enumerate(vals):
+        frame = vals[max(0, i - 9):i + 1]
+        n, s, q = len(frame), sum(frame), sum(x * x for x in frame)
+        r = out[i]
+        assert r["n_window"] == n
+        den2 = n * q - s * s
+        if n >= 4 and den2 > 0:
+            z = (n * v - s) / math.sqrt(den2)
+            assert r["z"] == pytest.approx(z, abs=1e-12)
+            assert r["is_anomaly"] == (
+                (n * v - s) ** 2 * 1000000 > 1500 ** 2 * den2)
+        else:
+            assert r["z"] is None
+            assert r["is_anomaly"] is False
+
+
+def test_rolling_zscore_flags_spike_not_noise(spark):
+    vals = [100] * 19 + [100000]
+    rows = [("g", i, i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "grp string, eid long, o long, v long")
+    out = {r["id"]: r for r in
+           rolling_zscore(df, value_col="v", order_col="o",
+                          id_col="eid", group_cols=["grp"],
+                          window=20, min_periods=5).collect()}
+    assert out[19]["is_anomaly"] is True
+    # constant prefix: zero variance -> never flagged, z NULL
+    assert out[10]["is_anomaly"] is False and out[10]["z"] is None
+
+
+def test_rolling_zscore_validation_and_plan(spark):
+    df = spark.createDataFrame([("g", 1, 1, 1.5)],
+                               "grp string, eid long, o long, v double")
+    with pytest.raises(ValueError, match="floating-point"):
+        rolling_zscore(df, value_col="v", order_col="o", id_col="eid",
+                       group_cols=["grp"])
+    di = spark.createDataFrame([("g", 1, 1, 1)],
+                               "grp string, eid long, o long, v long")
+    with pytest.raises(ValueError, match="min_periods"):
+        rolling_zscore(di, value_col="v", order_col="o", id_col="eid",
+                       group_cols=["grp"], window=5, min_periods=6)
+    plan = _plan(rolling_zscore(di, value_col="v", order_col="o",
+                                id_col="eid", group_cols=["grp"]))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan
+    assert plan.count("Window") == 1  # one Window node for all frames
+
+
+# ------------------------------------- inter_event_stats burstiness ext.
+
+from kml2geojson_spark.eventops import inter_event_stats
+
+
+def test_inter_event_stats_burstiness_matches_reference(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    gaps = [5, 5, 5, 100, 1, 1]
+    ts = [base]
+    for g in gaps:
+        ts.append(ts[-1] + timedelta(seconds=g))
+    rows = [(7, t, i) for i, t in enumerate(ts)]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
+    (r,) = inter_event_stats(df).collect()
+    n = len(gaps)
+    ssum = sum(gaps)
+    q = sum(g * g for g in gaps)
+    mu = ssum / n
+    sigma = math.sqrt(n * q - ssum * ssum) / n
+    assert (r["n_gaps"], r["span_s"], r["gap_sq_sum"]) == (n, ssum, q)
+    assert r["mean_gap_s"] == pytest.approx(mu)
+    assert r["burstiness"] == pytest.approx((sigma - mu) / (sigma + mu),
+                                            abs=1e-12)
+
+
+def test_inter_event_stats_regular_vs_bursty_ordering(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    rows = []
+    # machine-regular: constant gap -> burstiness -1
+    for i in range(20):
+        rows.append((1, base + timedelta(seconds=60 * i), i))
+    # bursty: many tiny gaps + one huge
+    t = base
+    for i in range(19):
+        t = t + timedelta(seconds=1 if i != 10 else 86400)
+        rows.append((2, t, 100 + i))
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
+    out = {r["user_id"]: r for r in inter_event_stats(df).collect()}
+    assert out[1]["burstiness"] == pytest.approx(-1.0)
+    assert out[2]["burstiness"] > 0.5
+
+
+def test_inter_event_stats_single_event_null_burstiness(spark):
+    from datetime import datetime
+    df = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1), 0)],
+        "user_id long, ts timestamp, event_id long")
+    (r,) = inter_event_stats(df).collect()
+    assert r["n_gaps"] == 0 and r["gap_sq_sum"] == 0
+    assert r["mean_gap_s"] is None and r["burstiness"] is None
+
+
+# --------------------------------------------------------- topk_overlap
+
+from kml2geojson_spark.relational import calibration_bins, topk_overlap
+from kml2geojson_spark.eventops import last_touch_attribution
+
+
+def test_topk_overlap_matches_reference(spark):
+    import random
+    random.seed(23)
+    rows = []
+    expect = {}
+    for g in range(12):
+        items = [(g, i, random.random(), random.random())
+                 for i in range(random.randint(2, 15))]
+        rows += items
+        top_a = {t[1] for t in sorted(items, key=lambda t: (-t[2], t[1]))[:4]}
+        top_b = {t[1] for t in sorted(items, key=lambda t: (-t[3], t[1]))[:4]}
+        n_ov = len(top_a & top_b)
+        expect[g] = (len(items), len(top_a), n_ov,
+                     n_ov / min(4, len(items)))
+    df = spark.createDataFrame(rows, "grp long, iid long, sa double, sb double")
+    out = {r["grp"]: r for r in
+           topk_overlap(df, group_cols=["grp"], id_col="iid",
+                        score_a_col="sa", score_b_col="sb",
+                        k=4).collect()}
+    for g, (n, nta, nov, ov) in expect.items():
+        r = out[g]
+        assert (r["n_items"], r["n_top_a"], r["n_overlap"]) == \
+            (n, nta, nov)
+        assert r["overlap_at_k"] == pytest.approx(ov, abs=1e-15)
+
+
+def test_topk_overlap_identical_and_disjoint(spark):
+    rows = [("s", i, float(i), float(i)) for i in range(10)]
+    rows += [("d", i, float(i), float(-i)) for i in range(10)]
+    df = spark.createDataFrame(rows, "grp string, iid long, sa double, sb double")
+    out = {r["grp"]: r for r in
+           topk_overlap(df, group_cols=["grp"], id_col="iid",
+                        score_a_col="sa", score_b_col="sb",
+                        k=3).collect()}
+    assert out["s"]["overlap_at_k"] == pytest.approx(1.0)
+    assert out["d"]["overlap_at_k"] == 0.0
+
+
+def test_topk_overlap_short_group_scores_against_what_exists(spark):
+    df = spark.createDataFrame([("g", 1, 1.0, 2.0), ("g", 2, 2.0, 1.0)],
+                               "grp string, iid long, sa double, sb double")
+    (r,) = topk_overlap(df, group_cols=["grp"], id_col="iid",
+                        score_a_col="sa", score_b_col="sb",
+                        k=10).collect()
+    assert r["n_items"] == 2 and r["overlap_at_k"] == pytest.approx(1.0)
+
+
+def test_topk_overlap_plan_no_join(spark):
+    df = spark.createDataFrame([("g", 1, 1.0, 2.0)],
+                               "grp string, iid long, sa double, sb double")
+    plan = _plan(topk_overlap(df, group_cols=["grp"], id_col="iid",
+                              score_a_col="sa", score_b_col="sb"))
+    assert "Join" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+# --------------------------------------------------------- calibration
+
+
+def test_calibration_bins_matches_reference(spark):
+    import random
+    random.seed(29)
+    rows = [(i, random.random(),
+             1 if random.random() < 0.3 else 0) for i in range(200)]
+    df = spark.createDataFrame(rows, "iid long, s double, y long")
+    out = {r["bin"]: r for r in
+           calibration_bins(df, score_col="s", label_col="y",
+                            id_col="iid", bins=5).collect()}
+    ordered = sorted(rows, key=lambda t: (t[1], t[0]))
+    # ntile(5) over 200 rows -> 40 per bin
+    for b in range(1, 6):
+        chunk = ordered[(b - 1) * 40: b * 40]
+        r = out[b]
+        assert r["n"] == 40
+        assert r["n_pos"] == sum(y for _, _, y in chunk)
+        sm = sum(round(s * 1000.0) for _, s, _ in chunk)
+        assert r["score_milli_sum"] == sm
+        assert r["mean_score"] == pytest.approx(sm / 40000.0, abs=1e-15)
+    # monotone mean score across bins (equal-count quantile bins)
+    means = [out[b]["mean_score"] for b in range(1, 6)]
+    assert means == sorted(means)
+
+
+def test_calibration_bins_well_calibrated_score(spark):
+    import random
+    random.seed(31)
+    rows = []
+    for i in range(4000):
+        s = random.random()
+        rows.append((i, s, 1 if random.random() < s else 0))
+    df = spark.createDataFrame(rows, "iid long, s double, y long")
+    out = calibration_bins(df, score_col="s", label_col="y",
+                           id_col="iid", bins=4).collect()
+    for r in out:
+        assert r["frac_pos"] == pytest.approx(r["mean_score"], abs=0.06)
+
+
+def test_calibration_bins_validation(spark):
+    df = spark.createDataFrame([(1, 0.5, 1.0)],
+                               "iid long, s double, y double")
+    with pytest.raises(ValueError, match="floating-point"):
+        calibration_bins(df, score_col="s", label_col="y",
+                         id_col="iid")
+    di = spark.createDataFrame([(1, 0.5, 1)], "iid long, s double, y long")
+    with pytest.raises(ValueError, match="bins"):
+        calibration_bins(di, score_col="s", label_col="y",
+                         id_col="iid", bins=1)
+
+
+# --------------------------------------------------------- attribution
+
+
+def test_last_touch_attribution_matches_reference(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    rows = []
+    # user 1: view -> click -> BUY (click), click -> BUY (click),
+    #         BUY with no preceding touch? no — first is view
+    seq1 = ["view", "click", "BUY", "click", "BUY"]
+    for i, t in enumerate(seq1):
+        rows.append((1, base + timedelta(seconds=i), i, t))
+    # user 2: BUY first (no touch) then email -> BUY
+    seq2 = ["BUY", "email", "BUY"]
+    for i, t in enumerate(seq2):
+        rows.append((2, base + timedelta(seconds=i), 100 + i, t))
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, event_type string")
+    out = {r["channel"]: r["n_conversions"] for r in
+           last_touch_attribution(df, conversion_type="BUY").collect()}
+    assert out == {"click": 2, "email": 1, "(none)": 1}
+
+
+def test_last_touch_attribution_consecutive_conversions_share_touch(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    rows = [(1, base + timedelta(seconds=i), i, t)
+            for i, t in enumerate(["ad", "BUY", "BUY", "BUY"])]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, event_type string")
+    out = {r["channel"]: r["n_conversions"] for r in
+           last_touch_attribution(df, conversion_type="BUY").collect()}
+    # a conversion is never a touch: all three credit the ad
+    assert out == {"ad": 3}
+
+
+def test_last_touch_attribution_tie_order_by_id(spark):
+    from datetime import datetime
+    t0 = datetime(2024, 1, 1)
+    # same timestamp: id order decides -> touch (id 1) precedes BUY (id 2)
+    rows = [(1, t0, 1, "promo"), (1, t0, 2, "BUY")]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, event_type string")
+    out = {r["channel"]: r["n_conversions"] for r in
+           last_touch_attribution(df, conversion_type="BUY").collect()}
+    assert out == {"promo": 1}
 
 
 # --------------------------------------------------- embedding_norm_stats
@@ -309,6 +988,7 @@ def test_read_jsonl_docs_reads_and_audits(spark, tmp_path):
 # chunk grammar from the session-6 angle: coverage + overlap invariants)
 
 from kml2geojson_spark.textops import chunk_documents
+from kml2geojson_spark.eventops import event_trigram_paths
 
 
 def _chunks_reference(tokens, chunk, overlap):
@@ -381,7 +1061,110 @@ def test_chunk_documents_plan_pure_column(spark):
     assert "Join" not in plan and "Window" not in plan
 
 
+# --------------------------------------------------- event_trigram_paths
+
+
+def test_event_trigram_paths_matches_reference(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    streams = {1: ["a", "b", "c", "b", "c", "a"],
+               2: ["a", "b", "c"],
+               3: ["x", "y"]}  # too short: no trigram
+    rows = []
+    eid = 0
+    for u, seq in streams.items():
+        for i, t in enumerate(seq):
+            rows.append((u, base + timedelta(seconds=i), eid, t))
+            eid += 1
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, event_type string")
+    out = {(r["step1"], r["step2"], r["step3"]): r["n_paths"]
+           for r in event_trigram_paths(df, min_count=1).collect()}
+    ref = {}
+    for seq in streams.values():
+        for i in range(len(seq) - 2):
+            k = tuple(seq[i:i + 3])
+            ref[k] = ref.get(k, 0) + 1
+    assert out == ref
+    # min_count prunes
+    out2 = {(r["step1"], r["step2"], r["step3"]): r["n_paths"]
+            for r in event_trigram_paths(df, min_count=2).collect()}
+    assert out2 == {k: v for k, v in ref.items() if v >= 2}
+
+
+def test_event_trigram_paths_never_cross_users(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    rows = [(1, base, 0, "a"), (1, base + timedelta(seconds=1), 1, "b"),
+            (2, base + timedelta(seconds=2), 2, "c"),
+            (2, base + timedelta(seconds=3), 3, "d")]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, event_type string")
+    assert event_trigram_paths(df).count() == 0
+
+
+# -------------------------------------------------------- funnel_latency
+
+from kml2geojson_spark.eventops import funnel_latency, funnel_counts
 from kml2geojson_spark.quality import k_anonymity_audit
+
+
+def test_funnel_latency_matches_hand_case(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+
+    def ev(u, sec, t):
+        return (u, base + timedelta(seconds=sec), t)
+
+    rows = [
+        # user 1: A@0 -> B@10 -> C@40 (gaps 10, 30)
+        ev(1, 0, "A"), ev(1, 10, "B"), ev(1, 40, "C"),
+        # user 2: A@5 -> B@6 (gap 1), never C
+        ev(2, 5, "A"), ev(2, 6, "B"),
+        # user 3: B@0 before A@1: B does not count until after A;
+        # B@100 completes (gap 99), C@50 is BEFORE B-completion: no C
+        ev(3, 0, "B"), ev(3, 1, "A"), ev(3, 100, "B"), ev(3, 50, "C"),
+        # user 4: only C: nothing
+        ev(4, 0, "C"),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, "
+                                     "event_type string")
+    out = {r["stage_idx"]: r for r in
+           funnel_latency(df, ["A", "B", "C"]).collect()}
+    b = out[1]
+    assert b["stage"] == "B" and b["n_users"] == 3
+    assert (b["gap_min_s"], b["gap_max_s"]) == (1, 99)
+    assert b["gap_sum_s"] == 10 + 1 + 99
+    assert b["mean_gap_s"] == pytest.approx(110 / 3)
+    c = out[2]
+    assert c["stage"] == "C" and c["n_users"] == 1
+    assert c["gap_sum_s"] == 30
+
+
+def test_funnel_latency_user_sets_agree_with_funnel_counts(spark):
+    import random
+    from datetime import datetime, timedelta
+    random.seed(47)
+    base = datetime(2024, 1, 1)
+    rows = []
+    for u in range(40):
+        for i in range(12):
+            rows.append((u, base + timedelta(seconds=random.randint(0, 500)),
+                         random.choice(["A", "B", "C", "x"])))
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, "
+                                     "event_type string")
+    counts = {r["stage_idx"]: r["n_users"] for r in
+              funnel_counts(df, ["A", "B", "C"]).collect()}
+    lat = {r["stage_idx"]: r["n_users"] for r in
+           funnel_latency(df, ["A", "B", "C"]).collect()}
+    assert lat[1] == counts[1] and lat[2] == counts[2]
+
+
+def test_funnel_latency_validates_stages(spark):
+    df = spark.createDataFrame([(1, None, "A")],
+                               "user_id long, ts timestamp, event_type string")
+    with pytest.raises(ValueError, match="2 stages"):
+        funnel_latency(df, ["A"])
 
 
 # ------------------------------------------------------ k_anonymity
@@ -419,9 +1202,121 @@ def test_k_anonymity_audit_plan_two_aggs_no_join(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+# --------------------------------------------------- period_over_period
+
+from kml2geojson_spark.relational import period_over_period, wilson_ci
+
+
+def test_period_over_period_matches_reference(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    rows = []
+    # group g: weeks 0,1,3 present (week 2 missing -> LAG skips it)
+    for week, vals in [(0, [100, 200]), (1, [50]), (3, [400])]:
+        for v in vals:
+            rows.append(("g", base + timedelta(days=7 * week, hours=1), v))
+    df = spark.createDataFrame(rows, "grp string, ts timestamp, v long")
+    out = {r["bucket"]: r for r in
+           period_over_period(df, ts_col="ts", value_col="v",
+                              group_cols=["grp"],
+                              period_seconds=604800).collect()}
+    buckets = sorted(out)
+    assert len(buckets) == 3
+    b0, b1, b3 = buckets
+    assert b1 == b0 + 1 and b3 == b0 + 3
+    assert out[b0]["value_sum"] == 300 and out[b0]["prev_sum"] is None
+    assert out[b0]["pct_change"] is None
+    assert out[b1]["prev_sum"] == 300 and out[b1]["delta"] == -250
+    assert out[b1]["pct_change"] == pytest.approx(-250 / 300)
+    # missing week 2: week 3 compares against week 1 (previous OBSERVED)
+    assert out[b3]["prev_sum"] == 50 and out[b3]["delta"] == 350
+    assert out[b0]["period_start_s"] == b0 * 604800
+
+
+def test_period_over_period_zero_base_and_validation(spark):
+    from datetime import datetime, timedelta
+    base = datetime(2024, 1, 1)
+    rows = [("g", base, 0), ("g", base + timedelta(days=7), 10)]
+    df = spark.createDataFrame(rows, "grp string, ts timestamp, v long")
+    out = sorted(period_over_period(df, ts_col="ts", value_col="v",
+                                    group_cols=["grp"],
+                                    period_seconds=604800).collect(),
+                 key=lambda r: r["bucket"])
+    assert out[1]["prev_sum"] == 0 and out[1]["pct_change"] is None
+    fdf = spark.createDataFrame([("g", base, 1.5)],
+                                "grp string, ts timestamp, v double")
+    with pytest.raises(ValueError, match="floating-point"):
+        period_over_period(fdf, ts_col="ts", value_col="v",
+                           group_cols=["grp"])
+    with pytest.raises(ValueError, match="period_seconds"):
+        period_over_period(df, ts_col="ts", value_col="v",
+                           group_cols=["grp"], period_seconds=0)
+
+
+def test_period_over_period_plan_lag_on_aggregated_frame(spark):
+    from datetime import datetime
+    df = spark.createDataFrame([("g", datetime(2024, 1, 1), 1)],
+                               "grp string, ts timestamp, v long")
+    plan = _plan(period_over_period(df, ts_col="ts", value_col="v",
+                                    group_cols=["grp"]))
+    assert "Join" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+# ----------------------------------------------------------- wilson_ci
+
+
+def _wilson_reference(k, n, z=1.96):
+    p = k / n
+    denom = 1.0 + z * z / n
+    center = (p + z * z / n / 2.0) / denom
+    half = z * math.sqrt(p * (1 - p) / n + z * z / (4.0 * n * n)) / denom
+    return center - half, center + half
+
+
+def test_wilson_ci_matches_reference(spark):
+    rows = ([("a", 1)] * 40 + [("a", 0)] * 60
+            + [("b", 1)] * 1 + [("b", 0)] * 0
+            + [("c", 1)] * 98 + [("c", 0)] * 2)
+    df = spark.createDataFrame(rows, "grp string, y long")
+    out = {r["grp"]: r for r in
+           wilson_ci(df, label_col="y", group_cols=["grp"]).collect()}
+    for grp, k, n in [("a", 40, 100), ("b", 1, 1), ("c", 98, 100)]:
+        lo, hi = _wilson_reference(k, n)
+        r = out[grp]
+        assert (r["n"], r["k"]) == (n, k)
+        assert r["ci_lo"] == pytest.approx(lo, abs=1e-12)
+        assert r["ci_hi"] == pytest.approx(hi, abs=1e-12)
+        assert 0.0 <= r["ci_lo"] <= r["ci_hi"] <= 1.0
+    # the small-sample property the naive interval lacks:
+    # 1-of-1 does NOT beat 98-of-100 on the lower bound
+    assert out["b"]["ci_lo"] < out["c"]["ci_lo"]
+
+
+def test_wilson_ci_extremes_stay_in_unit_interval(spark):
+    rows = [("z", 0)] * 7 + [("o", 1)] * 7
+    df = spark.createDataFrame(rows, "grp string, y long")
+    out = {r["grp"]: r for r in
+           wilson_ci(df, label_col="y", group_cols=["grp"]).collect()}
+    assert out["z"]["ci_lo"] == pytest.approx(0.0, abs=1e-12)
+    assert out["z"]["ci_hi"] > 0.0
+    assert out["o"]["ci_hi"] == pytest.approx(1.0, abs=1e-12)
+    assert out["o"]["ci_lo"] < 1.0
+
+
+def test_wilson_ci_validation(spark):
+    df = spark.createDataFrame([("g", 0.5)], "grp string, y double")
+    with pytest.raises(ValueError, match="floating-point"):
+        wilson_ci(df, label_col="y", group_cols=["grp"])
+    di = spark.createDataFrame([("g", 1)], "grp string, y long")
+    with pytest.raises(ValueError, match="z_milli"):
+        wilson_ci(di, label_col="y", group_cols=["grp"], z_milli=0)
+
+
 # ------------------------------------------------- fisher_separability
 
 from kml2geojson_spark.simsearch import fisher_separability
+from kml2geojson_spark.relational import information_gain
 
 
 def test_fisher_separability_matches_reference(spark):
@@ -488,3 +1383,72 @@ def test_fisher_separability_plan_no_python(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+# ---------------------------------------------------- information_gain
+
+
+def _ig_reference(pairs):
+    from collections import Counter
+    cxy = Counter(pairs)
+    cx = Counter(x for x, _ in pairs)
+    cy = Counter(y for _, y in pairs)
+    n = len(pairs)
+
+    def lnmu(v):
+        return round(math.log(v) * 1e6)
+
+    num = (n * lnmu(n)
+           - sum(c * lnmu(c) for c in cy.values())
+           - sum(c * lnmu(c) for c in cx.values())
+           + sum(c * lnmu(c) for c in cxy.values()))
+    return num, num / (n * 1e6)
+
+
+def test_information_gain_matches_reference(spark):
+    import random
+    random.seed(67)
+    # correlated: y mostly tracks x
+    pairs = []
+    for _ in range(400):
+        x = random.choice("abc")
+        y = x.upper() if random.random() < 0.8 else \
+            random.choice("ABC")
+        pairs.append((x, y))
+    df = spark.createDataFrame(pairs, "x string, y string")
+    (r,) = information_gain(df, x_col="x", y_col="y").collect()
+    num, ig = _ig_reference(pairs)
+    assert r["ig_num_micro"] == num
+    assert r["info_gain"] == pytest.approx(ig, abs=1e-12)
+    assert r["info_gain"] > 0.3  # strongly informative feature
+
+
+def test_information_gain_independent_is_zero(spark):
+    # perfectly independent counts: IG numerator exactly 0
+    pairs = [(x, y) for x in "ab" for y in "cd" for _ in range(25)]
+    df = spark.createDataFrame(pairs, "x string, y string")
+    (r,) = information_gain(df, x_col="x", y_col="y").collect()
+    assert r["ig_num_micro"] == 0
+    assert r["info_gain"] == 0.0
+
+
+def test_information_gain_deterministic_function_is_full_entropy(spark):
+    # y = f(x): IG = H(Y) (up to micro-nat slack)
+    pairs = [("a", "A")] * 30 + [("b", "B")] * 70
+    df = spark.createDataFrame(pairs, "x string, y string")
+    (r,) = information_gain(df, x_col="x", y_col="y").collect()
+    h_y = -(0.3 * math.log(0.3) + 0.7 * math.log(0.7))
+    assert r["info_gain"] == pytest.approx(h_y, abs=1e-4)
+
+
+def test_information_gain_grouped_and_plan(spark):
+    pairs = ([("g1", "a", "A")] * 10 + [("g1", "b", "B")] * 10
+             + [("g2", "a", "A")] * 5 + [("g2", "a", "B")] * 5)
+    df = spark.createDataFrame(pairs, "seg string, x string, y string")
+    out = {r["seg"]: r for r in
+           information_gain(df, x_col="x", y_col="y",
+                            group_cols=["seg"]).collect()}
+    assert out["g1"]["info_gain"] == pytest.approx(math.log(2), abs=1e-4)
+    assert out["g2"]["ig_num_micro"] == 0  # x constant in g2
+    plan = _plan(information_gain(df, x_col="x", y_col="y",
+                                  group_cols=["seg"]))
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "Join" not in plan

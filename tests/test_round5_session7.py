@@ -308,6 +308,55 @@ def test_resolve_entities_transitive_chain(spark):
     assert set(got) == {1, 2, 3, 4, 5}
 
 
+# ------------------------------------------------------------ cume_gains
+
+
+def test_cume_gains_perfect_ranking(spark):
+    from kml2geojson_spark.relational import cume_gains
+    # scores 1..100, positives are exactly the top-20 scores; sample
+    # rate 1/1 → exact decile boundaries at 10,20,...,90
+    rows = [(s, 1 if s > 80 else 0) for s in range(1, 101)]
+    df = spark.createDataFrame(rows, "score long, y long")
+    got = {r["rank"]: r for r in
+           cume_gains(df, score_col="score", label_col="y",
+                      n_buckets=10, rate_num=1, rate_den=1).collect()}
+    top = got[1]
+    assert top["bucket"] == 9
+    assert top["n"] == 11 and top["n_pos"] == 11   # scores 90..100
+    assert top["capture"] == 11 / 20
+    assert top["lift"] == (11 * 100) / (11 * 20)   # = 5.0
+    second = got[2]
+    assert second["cum_n"] == 21 and second["cum_pos"] == 20
+    assert second["capture"] == 1.0
+    last = got[10]
+    assert last["cum_n"] == 100 and last["cum_pos"] == 20
+    assert last["capture"] == 1.0 and last["lift"] == 1.0
+
+
+def test_cume_gains_no_positives_null_metrics(spark):
+    from kml2geojson_spark.relational import cume_gains
+    df = spark.createDataFrame([(s, 0) for s in range(40)],
+                               "score long, y long")
+    rows = cume_gains(df, score_col="score", label_col="y",
+                      n_buckets=4, rate_num=1, rate_den=1).collect()
+    assert all(r["capture"] is None and r["lift"] is None
+               for r in rows)
+    assert sum(r["n"] for r in rows) == 40
+
+
+def test_cume_gains_guards(spark):
+    from kml2geojson_spark.relational import cume_gains
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+    fdf = spark.createDataFrame([(1.5, 1)], "score double, y long")
+    with pytest.raises(ValueError, match="floating-point"):
+        cume_gains(fdf, score_col="score", label_col="y")
+    bad = spark.createDataFrame([(1, 2)], "score long, y long")
+    with pytest.raises(Exception, match="label not in"):
+        cume_gains(bad, score_col="score", label_col="y",
+                   rate_num=1, rate_den=1).collect()
+
+
 # ------------------------------------------------- heavy hitters (MG)
 
 

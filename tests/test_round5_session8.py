@@ -12,6 +12,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kml2geojson_spark.eventops import circular_time_stats
+from kml2geojson_spark.relational import mrr_at_k
 from kml2geojson_spark.spatial import polygon_overlap_pairs
 from kml2geojson_spark.spatial.ops import _clip_edge_many, _shoelace_many
 from kml2geojson_spark.textops import script_mix_stats
@@ -19,6 +21,47 @@ from kml2geojson_spark.textops import script_mix_stats
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# ------------------------------------------------------------ mrr_at_k
+
+
+def test_mrr_basic(spark):
+    rows = [
+        # group 1: relevant item is 2nd by score -> rr = 1/2
+        (1, 10, 9.0, 0), (1, 11, 8.0, 1), (1, 12, 7.0, 0),
+        # group 2: no relevant at all -> rr NULL
+        (2, 20, 5.0, 0), (2, 21, 4.0, 0),
+        # group 3: relevant exists but ranks 4th, k=3 -> rr = 0.0
+        (3, 30, 9.0, 0), (3, 31, 8.0, 0), (3, 32, 7.0, 0),
+        (3, 33, 6.0, 1),
+    ]
+    df = spark.createDataFrame(rows, ["g", "id", "s", "r"])
+    out = {r["g"]: r for r in
+           mrr_at_k(df, group_cols=["g"], id_col="id", score_col="s",
+                    rel_col="r", k=3).collect()}
+    assert out[1]["first_rel_rank"] == 2
+    assert out[1]["rr_at_k"] == 0.5
+    assert out[2]["n_rel"] == 0 and out[2]["rr_at_k"] is None
+    assert out[3]["n_rel"] == 1
+    assert out[3]["first_rel_rank"] is None
+    assert out[3]["rr_at_k"] == 0.0
+
+
+def test_mrr_tie_break_by_id(spark):
+    # equal scores: the smaller id ranks first (totalized order)
+    rows = [(1, 5, 1.0, 0), (1, 2, 1.0, 1)]
+    df = spark.createDataFrame(rows, ["g", "id", "s", "r"])
+    row = mrr_at_k(df, group_cols=["g"], id_col="id", score_col="s",
+                   rel_col="r", k=10).collect()[0]
+    assert row["first_rel_rank"] == 1 and row["rr_at_k"] == 1.0
+
+
+def test_mrr_float_relevance_raises(spark):
+    df = spark.createDataFrame([(1, 1, 1.0, 0.5)], ["g", "id", "s", "r"])
+    with pytest.raises(ValueError, match="binarize"):
+        mrr_at_k(df, group_cols=["g"], id_col="id", score_col="s",
+                 rel_col="r")
 
 
 # ----------------------------------------------------- script_mix_stats
@@ -54,6 +97,51 @@ def test_script_mix_no_shuffle_plan(spark):
     plan = _plan(script_mix_stats(df))
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+
+
+# -------------------------------------------------- circular_time_stats
+
+
+def test_circular_concentrated_vs_spread(spark):
+    rows = (
+        # type "a": all at 06:00 -> resultant ~1
+        [("a", "2024-01-01 06:00:00")] * 4
+        # type "b": 00:00 and 12:00 alternating -> resultant ~0
+        + [("b", "2024-01-01 00:00:00"), ("b", "2024-01-01 12:00:00")] * 2
+        # type "c": straddles midnight (23:50, 00:10) -> resultant ~1
+        + [("c", "2024-01-01 23:50:00"), ("c", "2024-01-01 00:10:00")]
+    )
+    df = spark.createDataFrame(rows, ["event_type", "ts"]) \
+        .select("event_type", F.col("ts").cast("timestamp").alias("ts"))
+    out = {r["group"]: r for r in circular_time_stats(df).collect()}
+    assert out["a"]["resultant_len"] == pytest.approx(1.0, abs=5e-6)
+    assert out["b"]["resultant_len"] == pytest.approx(0.0, abs=5e-6)
+    # the linear mean of 23:50/00:10 is noon; the circular resultant
+    # sees a tight cluster around midnight instead
+    assert out["c"]["resultant_len"] == pytest.approx(
+        math.cos(10 * 60 * 2 * math.pi / 86400), abs=5e-6)
+    assert out["c"]["circ_variance"] == pytest.approx(
+        1 - out["c"]["resultant_len"], abs=1e-12)
+
+
+def test_circular_exact_integer_sums(spark):
+    df = spark.createDataFrame(
+        [("a", "2024-01-01 00:00:00")], ["event_type", "ts"]) \
+        .select("event_type", F.col("ts").cast("timestamp").alias("ts"))
+    row = circular_time_stats(df).collect()[0]
+    # theta = 0: cos=1 -> 10^6 exactly, sin=0 -> 0
+    assert row["cos_sum_q"] == 1_000_000
+    assert row["sin_sum_q"] == 0
+    assert row["resultant_len"] == 1.0
+
+
+def test_circular_single_agg_plan(spark):
+    df = spark.createDataFrame(
+        [("a", "2024-01-01 00:00:00")], ["event_type", "ts"]) \
+        .select("event_type", F.col("ts").cast("timestamp").alias("ts"))
+    plan = _plan(circular_time_stats(df))
+    assert plan.count("Exchange") == 1  # one shuffle for the hash agg
+    assert "Window" not in plan and "Join" not in plan
 
 
 # ----------------------------------------------- polygon_overlap_pairs
@@ -160,6 +248,42 @@ def test_clip_edge_many_matches_scalar():
         assert a1 == a2
 
 
+# -------------------------------------------------- rolling_active_users
+
+
+def test_rolling_active_users_hand_checked(spark):
+    from kml2geojson_spark.eventops import rolling_active_users
+    rows = [
+        (1, "2024-01-01 05:00:00"), (1, "2024-01-01 09:00:00"),  # dup day
+        (2, "2024-01-01 10:00:00"),
+        (1, "2024-01-03 10:00:00"),
+        (3, "2024-01-09 10:00:00"),
+    ]
+    df = spark.createDataFrame(rows, ["user_id", "ts"]) \
+        .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+    out = {r["day"]: r for r in
+           rolling_active_users(df, window_days=7).collect()}
+    d0 = 19723  # 2024-01-01 epoch day
+    assert set(out) == {d0, d0 + 2, d0 + 8}  # observed days only
+    assert out[d0]["dau"] == 2 and out[d0]["rolling_active"] == 2
+    assert out[d0 + 2]["dau"] == 1
+    # window ending Jan 3 covers Jan 1-3: users 1, 2
+    assert out[d0 + 2]["rolling_active"] == 2
+    # window ending Jan 9 covers Jan 3-9: users 1 (Jan 3) and 3
+    assert out[d0 + 8]["dau"] == 1
+    assert out[d0 + 8]["rolling_active"] == 2
+
+
+def test_rolling_active_users_window1_equals_dau(spark):
+    from kml2geojson_spark.eventops import rolling_active_users
+    rows = [(u, f"2024-01-0{d} 01:00:00") for u in (1, 2, 3)
+            for d in (1, 2)]
+    df = spark.createDataFrame(rows, ["user_id", "ts"]) \
+        .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+    for r in rolling_active_users(df, window_days=1).collect():
+        assert r["dau"] == r["rolling_active"]
+
+
 # ---------------------------------------------------- readability_scores
 
 
@@ -255,6 +379,55 @@ def test_haversine_pure_column_plan(spark):
     plan = _plan(df.select(haversine_m(
         F.col("lat"), F.col("lon"), F.lit(1.0), F.lit(1.0)).alias("d")))
     assert "Exchange" not in plan and "EvalPython" not in plan
+
+
+# -------------------------------------------------------- winsorized_mean
+
+
+def test_winsorized_hand_checked(spark):
+    from kml2geojson_spark.relational import winsorized_mean
+    # 10 values 1..10, wins_milli=100 -> k=1: clamp 1->2 and 10->9
+    rows = [("a", v) for v in range(1, 11)]
+    df = spark.createDataFrame(rows, ["g", "v"])
+    row = winsorized_mean(df, value_col="v", group_cols=["g"],
+                          wins_milli=100).collect()[0]
+    assert row["n"] == 10 and row["k_per_side"] == 1
+    assert row["lo_clamp"] == 2 and row["hi_clamp"] == 9
+    # 2 + 2+3+...+9 + 9 = 55 - 1 - 10 + 2 + 9 = 55
+    assert row["winsorized_sum"] == 55
+    assert row["winsorized_mean"] == 5.5
+
+
+def test_winsorized_zero_k_equals_mean(spark):
+    from kml2geojson_spark.relational import winsorized_mean
+    rows = [("a", v) for v in (3, 5, 100)]  # n=3, k = floor(3*0.1)=0
+    df = spark.createDataFrame(rows, ["g", "v"])
+    row = winsorized_mean(df, value_col="v", group_cols=["g"],
+                          wins_milli=100).collect()[0]
+    assert row["k_per_side"] == 0
+    assert row["winsorized_sum"] == 108
+    assert row["winsorized_mean"] == 36.0
+
+
+def test_winsorized_duplicates_cross_boundary(spark):
+    from kml2geojson_spark.relational import winsorized_mean
+    # 10 rows of which the lowest 3 are equal: k=1 clamps ONE copy of
+    # the duplicated minimum onto... itself (lo_clamp = 1), sum unchanged
+    rows = [("a", v) for v in (1, 1, 1, 4, 5, 6, 7, 8, 9, 20)]
+    df = spark.createDataFrame(rows, ["g", "v"])
+    row = winsorized_mean(df, value_col="v", group_cols=["g"],
+                          wins_milli=100).collect()[0]
+    assert row["k_per_side"] == 1
+    assert row["lo_clamp"] == 1   # rank 2 is still value 1
+    assert row["hi_clamp"] == 9   # rank 9
+    assert row["winsorized_sum"] == 1 + 1 + 1 + 4 + 5 + 6 + 7 + 8 + 9 + 9
+
+
+def test_winsorized_float_raises(spark):
+    from kml2geojson_spark.relational import winsorized_mean
+    df = spark.createDataFrame([("a", 1.5)], ["g", "v"])
+    with pytest.raises(ValueError, match="integerize"):
+        winsorized_mean(df, value_col="v", group_cols=["g"])
 
 
 # --------------------------------------------------------- keyword_snippets
@@ -442,6 +615,37 @@ def test_frame_checksums_python_replay(spark):
             exp = (len(fr), sum(fr),
                    sum((k + 1) * b for k, b in enumerate(fr)))
             assert got[(ref, i)] == exp
+
+
+# ------------------------------------------------------------ peak_concurrency
+
+
+def test_peak_concurrency_hand_checked(spark):
+    from kml2geojson_spark.eventops import peak_concurrency
+    rows = [
+        # key a: [0,10), [5,15), [14,20) -> peak 2 (at 5-10 and 14-15)
+        ("a", 0, 10), ("a", 5, 15), ("a", 14, 20),
+        # key b: back-to-back [0,5), [5,10) -> half-open: peak 1
+        ("b", 0, 5), ("b", 5, 10),
+        # key c: triple stack
+        ("c", 0, 9), ("c", 1, 8), ("c", 2, 7),
+        # key d: degenerate interval contributes nothing
+        ("d", 3, 3), ("d", 1, 2),
+    ]
+    df = spark.createDataFrame(rows, ["key", "start", "end"])
+    out = {r["key"]: r for r in peak_concurrency(df).collect()}
+    assert out["a"]["peak"] == 2 and out["a"]["n_intervals"] == 3
+    assert out["b"]["peak"] == 1
+    assert out["c"]["peak"] == 3
+    assert out["d"]["peak"] == 1 and out["d"]["n_intervals"] == 1
+
+
+def test_peak_concurrency_single_window_plan(spark):
+    from kml2geojson_spark.eventops import peak_concurrency
+    df = spark.createDataFrame([("a", 0, 1)], ["key", "start", "end"])
+    plan = _plan(peak_concurrency(df))
+    assert "Join" not in plan
+    assert plan.count("Window") == 1
 
 
 # ------------------------------------------------------------- zonal_stats

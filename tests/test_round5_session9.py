@@ -1,6 +1,6 @@
 """Round-5 session-9 operators: adamic_adar, spatial_thin,
-distinctive_terms. Each is verified against an independent brute-force
-computation."""
+distinctive_terms, ewma_last, mann_kendall, brown_forsythe, bh_fdr.
+Each is verified against an independent brute-force computation."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import Row, functions as F
 
 
 # ---------------------------------------------------------------------------
@@ -172,3 +172,209 @@ def test_distinctive_terms_rejects_bad_alpha(spark):
         distinctive_terms(df, alpha0=0.0)
 
 
+# ---------------------------------------------------------------------------
+# ewma_last
+# ---------------------------------------------------------------------------
+
+def _brute_ewma(rows, window):
+    from collections import defaultdict
+    per = defaultdict(list)
+    for key, t, i, v in rows:
+        if None in (key, t, i, v):
+            continue
+        per[key].append((t, i, round(v * 1000)))
+    out = {}
+    for key, evs in per.items():
+        evs.sort()
+        tail = [v for _, _, v in evs][-window:][::-1]  # newest first
+        num = sum(v * (1 << (window - 1 - i)) for i, v in enumerate(tail))
+        den = sum(1 << (window - 1 - i) for i in range(len(tail)))
+        out[key] = (len(evs), num, den, num / den)
+    return out
+
+
+def test_ewma_last_matches_brute(spark):
+    from kml2geojson_spark.eventops import ewma_last
+
+    rng = np.random.default_rng(3)
+    rows = [(int(rng.integers(0, 5)), int(t), int(t) * 10 + 1,
+             float(rng.normal(50, 20)))
+            for t in range(200)]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts long, event_id long, value double")
+    got = {r.key: (r.n_events, r.num, r.den, r.ewma_milli)
+           for r in ewma_last(df, ts_col="ts", window=6).collect()}
+    assert got == _brute_ewma(rows, 6)
+
+
+def test_ewma_last_short_series_growing_window(spark):
+    from kml2geojson_spark.eventops import ewma_last
+
+    rows = [(1, 1, 1, 2.0), (1, 2, 2, 4.0)]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts long, event_id long, value double")
+    r = ewma_last(df, ts_col="ts", window=4).collect()[0]
+    # weights newest-first: 8 for v=4000, 4 for v=2000; den = 12
+    assert (r.n_events, r.num, r.den) == (2, 4000 * 8 + 2000 * 4, 12)
+    assert r.ewma_milli == (4000 * 8 + 2000 * 4) / 12
+
+
+def test_ewma_last_rejects_bad_window(spark):
+    from kml2geojson_spark.eventops import ewma_last
+
+    df = spark.createDataFrame(
+        [(1, 1, 1, 1.0)], "user_id long, ts long, event_id long, value double")
+    with pytest.raises(ValueError):
+        ewma_last(df, window=0)
+
+
+# ---------------------------------------------------------------------------
+# mann_kendall
+# ---------------------------------------------------------------------------
+
+def _brute_mk(series):
+    n = len(series)
+    s = sum((series[j] > series[i]) - (series[j] < series[i])
+            for i in range(n) for j in range(i + 1, n))
+    from collections import Counter
+    ties = Counter(series)
+    corr = sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
+    var18 = n * (n - 1) * (2 * n + 5) - corr
+    if n < 2 or var18 <= 0:
+        return n, s, var18, None
+    sd = math.sqrt(var18 / 18.0)
+    z = (s - 1) / sd if s > 0 else ((s + 1) / sd if s < 0 else 0.0)
+    return n, s, var18, z
+
+
+def test_mann_kendall_matches_brute(spark):
+    from kml2geojson_spark.relational import mann_kendall
+
+    rng = np.random.default_rng(5)
+    rows = []
+    expect = {}
+    for g in range(4):
+        # group 0: rising trend; 1: falling; 2: noise; 3: constant
+        if g == 0:
+            vals = [t * 2 + int(rng.integers(0, 3)) for t in range(25)]
+        elif g == 1:
+            vals = [100 - 3 * t for t in range(25)]
+        elif g == 2:
+            vals = [int(rng.integers(0, 50)) for _ in range(25)]
+        else:
+            vals = [7] * 25
+        expect[g] = _brute_mk(vals)
+        rows += [(g, t, v) for t, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "grp long, t long, v long")
+    got = {r.grp: (r.n, r.s_stat, r.var18, r.z)
+           for r in mann_kendall(df, value_col="v", order_cols="t",
+                                 group_cols=["grp"]).collect()}
+    for g, (n, s, v18, z) in expect.items():
+        gn, gs, gv, gz = got[g]
+        assert (gn, gs, gv) == (n, s, v18)
+        if z is None:
+            assert gz is None or gz == 0.0 if v18 > 0 else gz is None
+        else:
+            assert gz == pytest.approx(z, abs=0)
+
+
+def test_mann_kendall_rejects_float(spark):
+    from kml2geojson_spark.relational import mann_kendall
+
+    df = spark.createDataFrame([(1, 1, 1.0)], "grp long, t long, v double")
+    with pytest.raises(ValueError):
+        mann_kendall(df, value_col="v", order_cols="t", group_cols=["grp"])
+
+
+# ---------------------------------------------------------------------------
+# brown_forsythe
+# ---------------------------------------------------------------------------
+
+def test_brown_forsythe_matches_scipy_shape(spark):
+    """Verify against a hand-rolled Brown-Forsythe with the lower
+    median (scipy uses the interpolated median, so we replicate the
+    documented deviation exactly)."""
+    from kml2geojson_spark.relational import brown_forsythe
+
+    rng = np.random.default_rng(9)
+    rows = []
+    groups = {"a": rng.integers(0, 20, 31),
+              "b": rng.integers(0, 80, 24),
+              "c": rng.integers(40, 45, 27)}
+    for gname, vals in groups.items():
+        rows += [(gname, int(v)) for v in vals]
+    df = spark.createDataFrame(rows, "f string, v long")
+    r = brown_forsythe(df, value_col="v", factor_col="f").collect()[0]
+
+    devs = {}
+    for gname, vals in groups.items():
+        sv = sorted(int(v) for v in vals)
+        med = sv[(len(sv) + 1) // 2 - 1]  # lower median
+        devs[gname] = [abs(int(v) - med) for v in vals]
+    N = sum(len(d) for d in devs.values())
+    k = len(devs)
+    contrib = {g: math.floor(sum(d) ** 2 / len(d) * 1000.0)
+               for g, d in devs.items()}
+    S = sum(sum(d) for d in devs.values())
+    SS = sum(v * v for d in devs.values() for v in d)
+    cb = sum(contrib.values())
+    ssb = cb - math.floor(S * S / N * 1000.0)
+    ssw = 1000 * SS - cb
+    f_expect = (ssb / (k - 1)) / (ssw / (N - k))
+    assert (r.k, r.n, r.ssb_milli, r.ssw_milli) == (k, N, ssb, ssw)
+    assert r.f_stat == pytest.approx(f_expect, rel=1e-12)
+    # equal-variance sanity: narrow group c should inflate F vs a/b alone
+    assert r.f_stat > 1.0
+
+
+def test_brown_forsythe_rejects_float(spark):
+    from kml2geojson_spark.relational import brown_forsythe
+
+    df = spark.createDataFrame([("a", 1.0)], "f string, v double")
+    with pytest.raises(ValueError):
+        brown_forsythe(df, value_col="v", factor_col="f")
+
+
+# ---------------------------------------------------------------------------
+# bh_fdr + normal_two_sided_p
+# ---------------------------------------------------------------------------
+
+def test_normal_p_matches_erfc(spark):
+    from kml2geojson_spark.relational import normal_two_sided_p
+
+    zs = [0.0, 0.5, -1.0, 1.96, 2.58, -3.3, 5.0]
+    df = spark.createDataFrame([(i, z) for i, z in enumerate(zs)],
+                               "i long, z double")
+    got = {r.i: r.p for r in df.select(
+        "i", normal_two_sided_p(F.col("z")).alias("p")).collect()}
+    for i, z in enumerate(zs):
+        assert got[i] == pytest.approx(math.erfc(abs(z) / math.sqrt(2)),
+                                       abs=1.6e-7)
+
+
+def test_bh_fdr_matches_brute(spark):
+    from kml2geojson_spark.relational import bh_fdr
+
+    ps = [0.001, 0.008, 0.039, 0.041, 0.042, 0.06, 0.074, 0.205,
+          0.212, 0.216, 0.222, 0.251, 0.269, 0.275, 0.34, 0.341,
+          0.569, 0.594, 0.696, 0.762]
+    df = spark.createDataFrame([(i, p) for i, p in enumerate(ps)],
+                               "tid long, p double")
+    got = {r.test_id: (r.rank, r.adj_p_micro, r.significant)
+           for r in bh_fdr(df, p_col="p", test_id_col="tid").collect()}
+    m = len(ps)
+    # brute: adj_i = min_{j>=i} m*p_j/j (ps already sorted ascending)
+    adj = [0.0] * m
+    running = 1.0
+    for i in range(m - 1, -1, -1):
+        running = min(running, m * ps[i] / (i + 1))
+        adj[i] = running
+    for i, p in enumerate(ps):
+        rank, am, sig = got[i]
+        assert rank == i + 1
+        assert am == round(adj[i] * 1e6)
+        assert sig == (am <= 50_000)
+    # classic BH on this textbook vector: exactly the first 5 reject? no -
+    # verify against direct computation instead of folklore.
+    n_sig = sum(1 for i in range(m) if adj[i] <= 0.05)
+    assert sum(1 for v in got.values() if v[2]) == n_sig

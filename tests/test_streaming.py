@@ -401,3 +401,154 @@ def test_stream_dedup_ttl_survives_null_event_times(spark, tmp_path):
     assert [r["doc_id"] for r in rows] == ["n1"]
 
 
+def test_stream_burst_dedup_matches_batch_in_order(spark, tmp_path):
+    """In-order streaming burst dedup emits exactly the batch
+    keepers (event_dedup_bursts) — keeper ids, per-key counts, and
+    timestamps all agree."""
+    import pandas as pd
+    from kml2geojson_spark.eventops import event_dedup_bursts
+    from kml2geojson_spark.streaming import (stream_burst_dedup,
+                                             stream_events)
+
+    src = str(tmp_path / "evb")
+    base = pd.Timestamp("2024-01-01")
+    rows, eid = [], 0
+    for user in range(4):
+        t = base + pd.Timedelta(seconds=user)
+        for burst in range(3):
+            for k in range(3):  # 3 retries, 20s apart (gap 60 chains)
+                rows.append((eid, t, user, "click", 1.0, "{}"))
+                eid += 1
+                t += pd.Timedelta(seconds=20)
+            t += pd.Timedelta(minutes=10)  # > gap: next burst
+    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id",
+                                      "event_type", "value", "props"])
+    df = spark.createDataFrame(pdf)
+    df.write.parquet(src)
+
+    out = stream_burst_dedup(stream_events(spark, src), gap_seconds=60)
+    q = (out.writeStream.format("memory").queryName("burst_mem")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "bck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.sql("SELECT * FROM burst_mem").toPandas()
+
+    batch = (event_dedup_bursts(df, key_cols=["user_id", "event_type"],
+                                gap_seconds=60)
+             .select("user_id", "event_type", "keeper_id").toPandas())
+    assert len(got) == len(batch) == 12  # 4 users x 3 bursts
+    assert (set(map(tuple, got[["user_id", "keeper_id"]].values))
+            == set(map(tuple, batch[["user_id", "keeper_id"]].values)))
+
+
+def test_stream_burst_dedup_chained_burst_single_keeper(spark, tmp_path):
+    """A burst chained past the gap from its opener still emits only
+    the opener (gap is between CONSECUTIVE events, not to the
+    keeper)."""
+    import pandas as pd
+    from kml2geojson_spark.streaming import (stream_burst_dedup,
+                                             stream_events)
+
+    src = str(tmp_path / "evc")
+    base = pd.Timestamp("2024-01-01")
+    rows = [(i, base + pd.Timedelta(seconds=50 * i), 1, "x", 1.0, "{}")
+            for i in range(5)]  # 0,50,100,... all chained at gap=60
+    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id",
+                                      "event_type", "value", "props"])
+    spark.createDataFrame(pdf).write.parquet(src)
+    out = stream_burst_dedup(stream_events(spark, src), gap_seconds=60)
+    q = (out.writeStream.format("memory").queryName("burst_mem2")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "bck2"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.sql("SELECT * FROM burst_mem2").toPandas()
+    assert len(got) == 1 and got.iloc[0]["keeper_id"] == 0
+
+
+def test_stream_rolling_zscore_batch_parity_across_batches(spark, tmp_path):
+    """Streaming rolling z-score equals the batch operator on an
+    in-order corpus, including when the stream delivers it across
+    several micro-batches (state carries the trailing window)."""
+    import glob
+    import os
+    import random
+
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import functions as F
+    from kml2geojson_spark.relational import rolling_zscore
+    from kml2geojson_spark.streaming import stream_rolling_zscore
+
+    random.seed(59)
+    base = datetime(2024, 1, 1)
+    rows = []
+    eid = 0
+    for u in range(4):
+        for i in range(40):
+            v = random.randint(-100, 100) if i != 30 else 5000
+            rows.append((eid, base + timedelta(seconds=10 * i), u,
+                         float(v)))
+            eid += 1
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, value double")
+
+    # batch reference (identical params; value integerized the same way)
+    b = df.select("user_id", "event_id",
+                  F.col("ts").cast("timestamp").cast("long").alias("o"),
+                  F.col("value").cast("long").alias("v"))
+    ref = {(r["user_id"], r["id"]): r for r in
+           rolling_zscore(b, value_col="v", order_col="o",
+                          id_col="event_id", group_cols=["user_id"],
+                          window=8, min_periods=3,
+                          threshold_milli=2500).collect()}
+
+    # stream the same rows split across two files forced into two
+    # micro-batches (first 20 per user, then the rest)
+    src = str(tmp_path / "rz")
+    first = df.where(F.col("event_id") % 40 < 20)
+    rest = df.where(F.col("event_id") % 40 >= 20)
+    first.coalesce(1).write.parquet(src)
+    f1 = set(glob.glob(src + "/*.parquet"))
+    rest.coalesce(1).write.mode("append").parquet(src)
+    later = max(os.path.getmtime(f) for f in f1) + 10
+    for f in set(glob.glob(src + "/*.parquet")) - f1:
+        os.utime(f, (later, later))
+
+    stream = (spark.readStream.schema(df.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    out = stream_rolling_zscore(stream, window=8, min_periods=3,
+                                threshold_milli=2500)
+    q = (out.writeStream.format("memory").queryName("rz_mem")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "rzck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = {(r["key"], r["id"]): r for r in
+           spark.sql("SELECT * FROM rz_mem").collect()}
+
+    assert set(got) == set(ref)
+    n_anom = 0
+    for k, rr in ref.items():
+        g = got[k]
+        assert g["n_window"] == rr["n_window"]
+        assert g["value"] == rr["value"]
+        if rr["z"] is None:
+            assert g["z"] is None
+        else:
+            assert g["z"] == rr["z"]  # identical IEEE expression
+        assert g["is_anomaly"] == rr["is_anomaly"]
+        n_anom += g["is_anomaly"]
+    assert n_anom >= 4  # each user's injected spike flagged
+
+
+def test_stream_rolling_zscore_validation():
+    import pytest as _pytest
+
+    from kml2geojson_spark.streaming import stream_rolling_zscore
+
+    with _pytest.raises(ValueError, match="min_periods"):
+        stream_rolling_zscore(None, window=4, min_periods=5)
+    with _pytest.raises(ValueError, match="threshold_milli"):
+        stream_rolling_zscore(None, threshold_milli=0)
