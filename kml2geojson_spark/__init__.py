@@ -36,7 +36,6 @@ from .convert_core import (
 from .kmlparse import parse_kml, Element
 from .engine import (
     convert_documents,
-    convert_documents_from_parquet,
     extract_features,
     extract_points,
     extract_styles,
@@ -71,7 +70,6 @@ __all__ = [
     "parse_kml",
     "Element",
     "convert_documents",
-    "convert_documents_from_parquet",
     "extract_features",
     "extract_points",
     "extract_styles",

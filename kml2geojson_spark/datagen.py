@@ -26,10 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .engine import DOCUMENTS_KML_SCHEMA
 
-_SPAN_TYPE = pa.list_(pa.struct([
-    ("kind", pa.string()), ("text", pa.string()),
-    ("media_ref", pa.string()), ("offset", pa.int32())]))
-
 _HREF = re.compile(r"<href>([^<]*)</href>")
 
 MAX_CHUNK = 256

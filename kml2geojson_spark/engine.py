@@ -153,8 +153,8 @@ _json_encode = json.JSONEncoder(check_circular=False).encode
 
 def _convert_batch(doc_iter, feature_collection_name, style_type,
                    separate_folders) -> pa.RecordBatch:
-    """Shared conversion kernel: (doc_id, kml_str) iterator → one
-    converted RecordBatch."""
+    """Conversion kernel: (doc_id, kml_str) iterator → one converted
+    RecordBatch."""
     doc_ids, style_jsons, name_lists, layer_lists = [], [], [], []
     for doc_id, kml_str in doc_iter:
         style, layers = convert_kml_string(
@@ -173,39 +173,6 @@ def _convert_batch(doc_iter, feature_collection_name, style_type,
          pa.array(name_lists, pa.list_(pa.string())),
          pa.array(layer_lists, pa.list_(pa.string()))],
         names=["doc_id", "style_json", "layer_names", "layers"])
-
-
-def convert_documents_from_parquet(
-    spark,
-    path: str,
-    feature_collection_name: Optional[str] = None,
-    style_type: Optional[str] = None,
-    *,
-    separate_folders: bool = False,
-) -> DataFrame:
-    """File-granular full conversion: identical result to
-    ``convert_documents(spark.read.parquet(path), ...)`` (asserted in
-    tests) but each Python worker reads its parquet split directly with
-    pyarrow, skipping the JVM's nested-row conversion of the ``spans``
-    column — the same split-granular scan pattern as
-    :func:`extract_points_from_parquet`.
-
-    When to use which: full conversion is dominated by per-doc
-    parse+JSON CPU, so on a warm local cluster the row path measures
-    slightly FASTER (7.2s vs 8.4s for 100k docs at 32 cores,
-    interleaved min-of-3) — the JVM row conversion overlaps with
-    Python work. This variant wins when executor JVM memory/CPU is the
-    scarce resource (the JVM never materializes the nested spans rows)
-    or when the table format hands out file-granular splits anyway."""
-    _validate_style_type(style_type)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in _iter_file_doc_batches(batches):
-            yield _convert_batch(iter_docs_from_arrow(rb),
-                                 feature_collection_name, style_type,
-                                 separate_folders)
-
-    return parquet_files_df(spark, path).mapInArrow(run, CONVERTED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -298,33 +265,47 @@ POINTS_SCHEMA = ("doc_id string, layer_idx int, feature_idx int, "
                  "geom_idx int, x double, y double")
 
 
-def _points_batch_from_docs(doc_iter) -> pa.RecordBatch:
-    """Shared kernel: (doc_id, kml) iterator → flat points RecordBatch
-    (merged-layer mode, indices per the full feature builder)."""
+def extract_points(df: DataFrame) -> DataFrame:
+    """Slim fast path for the tiling engine: documents_kml → one row per
+    Point coordinate, nothing else — no feature JSON, no nested arrays,
+    so the Arrow transfer is 6 flat columns. Indices follow the merged
+    feature builder (``layer_idx`` is always 0). A plain ``mapInArrow``,
+    so it runs on streaming DataFrames too. This is the hot path for
+    bulk tile assignment; use :func:`extract_features` when you need the
+    full typed feature rows."""
+
     from .convert_core import iter_point_coords
 
-    doc_ids, lids, fids, gids, xs, ys = [], [], [], [], [], []
-    for doc_id, kml_str in doc_iter:
-        root = parse_kml(kml_str)
-        for feature_idx, geom_idx, pos in iter_point_coords(root):
-            doc_ids.append(doc_id)
-            lids.append(0)
-            fids.append(feature_idx)
-            gids.append(geom_idx)
-            xs.append(pos[0])
-            ys.append(pos[1])
-    return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, pa.string()), pa.array(lids, pa.int32()),
-         pa.array(fids, pa.int32()), pa.array(gids, pa.int32()),
-         pa.array(xs, pa.float64()), pa.array(ys, pa.float64())],
-        names=["doc_id", "layer_idx", "feature_idx", "geom_idx", "x", "y"])
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            doc_ids, lids, fids, gids, xs, ys = [], [], [], [], [], []
+            for doc_id, kml_str in iter_docs_from_arrow(batch):
+                root = parse_kml(kml_str)
+                for feature_idx, geom_idx, pos in iter_point_coords(root):
+                    doc_ids.append(doc_id)
+                    lids.append(0)
+                    fids.append(feature_idx)
+                    gids.append(geom_idx)
+                    xs.append(pos[0])
+                    ys.append(pos[1])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(doc_ids, pa.string()),
+                 pa.array(lids, pa.int32()),
+                 pa.array(fids, pa.int32()),
+                 pa.array(gids, pa.int32()),
+                 pa.array(xs, pa.float64()),
+                 pa.array(ys, pa.float64())],
+                names=["doc_id", "layer_idx", "feature_idx", "geom_idx",
+                       "x", "y"])
+
+    return df.select("doc_id", "spans").mapInArrow(run, POINTS_SCHEMA)
 
 
 def _iter_file_doc_batches(batches: Iterator[pa.RecordBatch],
                            max_chunksize: int = 2048
                            ) -> Iterator[pa.RecordBatch]:
-    """Shared file-granular reader for the parquet hot paths: batches of
-    file paths → (doc_id, spans) RecordBatches, read worker-side with
+    """File-granular reader for :func:`tile_counts_from_parquet`: batches
+    of file paths → (doc_id, spans) RecordBatches, read worker-side with
     pyarrow (use_threads=False: each concurrent worker reading with its
     own full-width Arrow thread pool would oversubscribe the host)."""
     import pyarrow.parquet as pq
@@ -389,8 +370,10 @@ def tile_counts_from_parquet(spark, path: str, res: int) -> DataFrame:
     aggregate pushed INTO the Arrow kernel. Only pre-combined
     (cell_id, n) pairs cross the JVM boundary (~points-per-cell-per-doc
     fewer rows than raw points, and no strings), so the exchange and
-    the final aggregate are trivial. Result identical to
-    ``_tile_agg(extract_points_from_parquet(spark, path), res)`` —
+    the final aggregate are trivial. Each Python worker reads its
+    parquet files directly with pyarrow, so the JVM never converts the
+    nested ``spans`` column to rows. Result identical to
+    ``tile_assignments_from_docs(spark.read.parquet(path), res)`` —
     asserted in tests.
 
     Precondition: each document appears EXACTLY ONCE across the table's
@@ -398,9 +381,9 @@ def tile_counts_from_parquet(spark, path: str, res: int) -> DataFrame:
     doc, never split or duplicated across data files). ``n_docs`` here
     counts per-file document occurrences per cell (the doc_id string
     never crosses the Arrow boundary); a doc_id duplicated across files
-    would inflate it relative to ``_tile_agg``'s countDistinct
-    semantics. Tables that cannot guarantee this must use the unfused
-    ``_tile_agg`` path."""
+    would inflate it relative to the distinct-doc count of
+    :func:`.spatial.tile_assignments_from_docs`. Tables that cannot
+    guarantee this must use that unfused path."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in _iter_file_doc_batches(batches):
@@ -414,8 +397,8 @@ def tile_counts_from_parquet(spark, path: str, res: int) -> DataFrame:
 
 def parquet_files_df(spark, path: str) -> DataFrame:
     """One row per parquet data file of an (Iceberg-style) table
-    directory — the split list a table-format scan hands out. Used by
-    the file-granular readers below."""
+    directory — the split list a table-format scan hands out, read by
+    :func:`tile_counts_from_parquet`."""
     import glob
 
     files = sorted(glob.glob(f"{path}/*.parquet"))
@@ -423,78 +406,6 @@ def parquet_files_df(spark, path: str) -> DataFrame:
         raise FileNotFoundError(f"no parquet files under {path}")
     return spark.createDataFrame([(f,) for f in files], "path string") \
         .repartition(len(files))
-
-
-def extract_points_from_parquet(spark, path: str) -> DataFrame:
-    """Hot-path scan: distribute parquet FILES and let each Python
-    worker read its split directly with pyarrow (C++ columnar reader).
-
-    Why: Spark's mapInArrow/mapInPandas input crosses parquet →
-    ColumnarBatch → InternalRow → Arrow inside the JVM; for the nested
-    ``spans array<struct>`` column that row conversion costs ~2× the
-    actual parse CPU and caps scaling (measured: 4.1k docs/s via the
-    row path vs 17k docs/s pure-Python on 32 cores). Reading the
-    columnar file directly in the worker skips the JVM entirely — the
-    same split-granular pattern an Iceberg table scan provides at
-    cluster scale. Result is identical to
-    ``extract_points(spark.read.parquet(path))``.
-    """
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in _iter_file_doc_batches(batches):
-            yield _points_batch_from_docs(iter_docs_from_arrow(rb))
-
-    return parquet_files_df(spark, path).mapInArrow(run, POINTS_SCHEMA)
-
-
-def extract_points(df: DataFrame, *, separate_folders: bool = False) -> DataFrame:
-    """Slim fast path for the tiling engine: documents_kml → one row per
-    Point coordinate, nothing else — no feature JSON, no nested arrays,
-    so the Arrow transfer is 6 flat columns. This is the hot path for
-    bulk tile assignment; use :func:`extract_features` when you need the
-    full typed feature rows."""
-
-    from .convert_core import iter_point_coords
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            doc_ids, lids, fids, gids, xs, ys = [], [], [], [], [], []
-            for doc_id, kml_str in iter_docs_from_arrow(batch):
-                root = parse_kml(kml_str)
-                if separate_folders:
-                    layers = build_layers_dicts(root)
-                    for layer_idx, layer in enumerate(layers):
-                        for feature_idx, feature in enumerate(layer["features"]):
-                            for geom_idx, geom in enumerate(
-                                    _atomic_geometries(feature["geometry"])):
-                                if geom["type"] != "Point" or \
-                                        len(geom["coordinates"]) < 2:
-                                    continue
-                                doc_ids.append(doc_id)
-                                lids.append(layer_idx)
-                                fids.append(feature_idx)
-                                gids.append(geom_idx)
-                                xs.append(geom["coordinates"][0])
-                                ys.append(geom["coordinates"][1])
-                else:
-                    for feature_idx, geom_idx, pos in iter_point_coords(root):
-                        doc_ids.append(doc_id)
-                        lids.append(0)
-                        fids.append(feature_idx)
-                        gids.append(geom_idx)
-                        xs.append(pos[0])
-                        ys.append(pos[1])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(lids, pa.int32()),
-                 pa.array(fids, pa.int32()),
-                 pa.array(gids, pa.int32()),
-                 pa.array(xs, pa.float64()),
-                 pa.array(ys, pa.float64())],
-                names=["doc_id", "layer_idx", "feature_idx", "geom_idx",
-                       "x", "y"])
-
-    return df.select("doc_id", "spans").mapInArrow(run, POINTS_SCHEMA)
 
 
 def extract_styles(df: DataFrame, style_type: str = "svg") -> DataFrame:

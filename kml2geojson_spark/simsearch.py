@@ -56,12 +56,6 @@ def _dot_chain(a: str, b: str, dim: int) -> F.Column:
     return out
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding",
-              out_col: str = "norm") -> DataFrame:
-    d = df.withColumn("_vd", _as_double(vec_col))
-    return d.withColumn(out_col, F.sqrt(_dot("_vd", "_vd"))).drop("_vd")
-
-
 def cosine_topk_exact(embeddings: DataFrame, queries: DataFrame, k: int, *,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       query_id_col: str = "query_id") -> DataFrame:

@@ -29,15 +29,11 @@ Shapes provided:
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
-import pyarrow as pa
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import DOCUMENTS_KML_SCHEMA, POINTS_SCHEMA, iter_docs_from_arrow
-from .kmlparse import parse_kml
-from .convert_core import iter_point_coords
+from .engine import DOCUMENTS_KML_SCHEMA, extract_points
 
 
 def stream_documents(spark: SparkSession, path: str,
@@ -49,37 +45,11 @@ def stream_documents(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def _extract_points_stream(docs: DataFrame) -> DataFrame:
-    """Streaming-legal point extraction (mapInArrow is supported on
-    streaming DataFrames; the parse is stateless per document)."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            doc_ids, lids, fids, gids, xs, ys = [], [], [], [], [], []
-            for doc_id, kml_str in iter_docs_from_arrow(batch):
-                root = parse_kml(kml_str)
-                for feature_idx, geom_idx, pos in iter_point_coords(root):
-                    doc_ids.append(doc_id)
-                    lids.append(0)
-                    fids.append(feature_idx)
-                    gids.append(geom_idx)
-                    xs.append(pos[0])
-                    ys.append(pos[1])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()), pa.array(lids, pa.int32()),
-                 pa.array(fids, pa.int32()), pa.array(gids, pa.int32()),
-                 pa.array(xs, pa.float64()), pa.array(ys, pa.float64())],
-                names=["doc_id", "layer_idx", "feature_idx", "geom_idx",
-                       "x", "y"])
-
-    return docs.select("doc_id", "spans").mapInArrow(run, POINTS_SCHEMA)
-
-
 def stream_tile_counts(docs: DataFrame, res: int) -> DataFrame:
     """Incremental per-cell feature counts over a documents stream."""
     from .spatial.cells import cell_encode_col
 
-    pts = _extract_points_stream(docs)
+    pts = extract_points(docs)
     pts = pts.withColumn("cell_id", cell_encode_col(F.col("x"), F.col("y"), res))
     return pts.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_features"))
 
@@ -90,21 +60,17 @@ def stream_to_lineage(docs: DataFrame, res: int, out_root: str,
     a lineage stage keyed by batch id — resumable both via Spark's own
     streaming checkpoint AND via the engine manifests."""
     from .lineage import LineageLog
-    from .spatial.ops import _tile_agg
+    from .spatial import tile_assignments_from_docs
 
     log = LineageLog(out_root)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        # inside foreachBatch the frame is a normal batch DataFrame
         spark = batch_df.sparkSession
         log.run_stage(
             spark, "tiles",
-            lambda: _tile_agg(_extract_points_stream_batch(batch_df), res),
+            lambda: tile_assignments_from_docs(batch_df, res),
             params={"batch_id": batch_id}, cell_col="cell_id")
-
-    def _extract_points_stream_batch(batch_df: DataFrame) -> DataFrame:
-        # inside foreachBatch the frame is a normal batch DataFrame
-        from .engine import extract_points
-        return extract_points(batch_df)
 
     return (docs.writeStream
             .foreachBatch(handle)
@@ -275,7 +241,7 @@ def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
     from .spatial import encode_points
     from .spatial.ops import _pip_pairs
 
-    pts = _extract_points_stream(docs)
+    pts = extract_points(docs)
     # deterministic row id (monotonically_increasing_id is illegal on
     # streams): _pip_pairs emits (point_id, poly_id) matches; only the
     # count per polygon is aggregated downstream

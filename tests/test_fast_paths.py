@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import kml2geojson_spark as k2gs
-from kml2geojson_spark.engine import extract_points, extract_points_from_parquet
+from kml2geojson_spark.engine import extract_points, tile_counts_from_parquet
 from kml2geojson_spark.spatial import tile_assignments, tile_assignments_from_docs
 
 
@@ -37,61 +37,25 @@ def test_tile_assignments_paths_equal(spark):
     assert _sorted(a).equals(_sorted(b))
 
 
-def test_parquet_file_scan_equals_row_scan(spark, tmp_path):
-    docs = k2gs.synthesize_documents_kml(spark, 80, seed=19, max_placemarks=10)
-    path = str(tmp_path / "corpus")
-    docs.write.parquet(path)
-    via_rows = extract_points(spark.read.parquet(path)).toPandas()
-    via_files = extract_points_from_parquet(spark, path).toPandas()
-    assert _sorted(via_rows).equals(_sorted(via_files))
-
-
 def test_file_scan_missing_dir_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
-        extract_points_from_parquet(spark, str(tmp_path / "nope"))
+        tile_counts_from_parquet(spark, str(tmp_path / "nope"), 7)
 
 
 def test_tile_counts_fused_kernel_parity(spark, tmp_path):
     """The fused parse+encode+partial-agg kernel must produce exactly
-    the same tile table as the unfused extract→encode→agg path."""
-    import kml2geojson_spark as k2gs
-    from kml2geojson_spark.engine import (extract_points_from_parquet,
-                                          tile_counts_from_parquet)
-    from kml2geojson_spark.spatial.ops import _tile_agg
-
+    the same tile table as the unfused extract→encode→agg path over
+    the row scan of the same files."""
     path = str(tmp_path / "corpus")
     k2gs.synthesize_documents_kml(spark, 60, seed=13,
                                   max_placemarks=12).write.parquet(path)
     fused = {(r["cell_id"], r["n_features"], r["n_docs"])
              for r in tile_counts_from_parquet(spark, path, 7).collect()}
     unfused = {(r["cell_id"], r["n_features"], r["n_docs"])
-               for r in _tile_agg(
-                   extract_points_from_parquet(spark, path), 7).collect()}
+               for r in tile_assignments_from_docs(
+                   spark.read.parquet(path), 7).collect()}
     assert fused == unfused
     assert len(fused) > 0
-
-
-def test_convert_documents_from_parquet_parity(spark, tmp_path):
-    """The file-granular conversion scan must equal the DataFrame path
-    row-for-row (same doc ids, styles, layer names, layer JSON)."""
-    import kml2geojson_spark as k2gs
-
-    docs = k2gs.synthesize_documents_kml(spark, 60, seed=11,
-                                         max_placemarks=6)
-    path = str(tmp_path / "docs.parquet")
-    docs.write.parquet(path)
-
-    via_df = k2gs.convert_documents(
-        spark.read.parquet(path), style_type="svg").collect()
-    via_files = k2gs.convert_documents_from_parquet(
-        spark, path, style_type="svg").collect()
-
-    def norm(rows):
-        return sorted((r["doc_id"], r["style_json"],
-                       tuple(r["layer_names"]), tuple(r["layers"]))
-                      for r in rows)
-
-    assert norm(via_df) == norm(via_files)
 
 
 # ---------------------------------------------------------------------------

@@ -29,8 +29,7 @@ def main() -> None:
 
     import kml2geojson_spark as k2gs
     from kml2geojson_spark.lineage import Pipeline
-    from kml2geojson_spark.engine import extract_points
-    from kml2geojson_spark.spatial.ops import _tile_agg
+    from kml2geojson_spark.spatial import tile_assignments_from_docs
 
     t0 = time.time()
     pipe = Pipeline(spark, work)
@@ -40,7 +39,7 @@ def main() -> None:
         params={"n_docs": n_docs, "seed": 42})
     tiles = pipe.stage(
         "tiles",
-        lambda: _tile_agg(extract_points(docs), res),
+        lambda: tile_assignments_from_docs(docs, res),
         params={"res": res}, cell_col="cell_id")
 
     from pyspark.sql import functions as F

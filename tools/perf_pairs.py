@@ -2,9 +2,12 @@
 
     python tools/perf_pairs.py --workload convert_geojson --seeds 41-50 [--parent HEAD]
 
-Extracts ``--parent`` with ``git archive`` into a temporary directory and,
-per seed, runs ``perfbench/run.py`` on both sides, alternating which side
-goes first. Prints per pair the listed metrics, the unlisted end-to-end
+Extracts ``--parent`` with ``git archive`` and copies the working tree's
+tracked and untracked, non-ignored files (``git ls-files -co
+--exclude-standard``) into sibling temporary directories, so both sides
+run from fresh copies at the same depth; then, per seed, runs
+``perfbench/run.py`` on both sides, alternating which side goes first.
+Prints per pair the listed metrics, the unlisted end-to-end
 ``job_s_p50`` and ``cpu_s_per_*`` (so a change that trades executor CPU
 for driver wall time shows up), and the per-job median of each
 ``info.job_cpu_s`` class; then each side's median and quartiles, and
@@ -17,6 +20,7 @@ from __future__ import annotations
 import argparse
 import io
 import json
+import shutil
 import statistics
 import subprocess
 import sys
@@ -41,6 +45,16 @@ def run(tree: Path, args, seed: int) -> dict:
     return row
 
 
+def copy_worktree(dest: Path) -> None:
+    names = subprocess.run(["git", "ls-files", "-co", "--exclude-standard", "-z"], cwd=ROOT,
+                           check=True, capture_output=True, text=True).stdout.split("\0")
+    for name in filter(None, names):
+        src = ROOT / name
+        if src.is_symlink() or src.is_file():  # a tracked file deleted in the tree is skipped
+            (dest / name).parent.mkdir(parents=True, exist_ok=True)
+            shutil.copy2(src, dest / name, follow_symlinks=False)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
@@ -51,11 +65,13 @@ def main() -> None:
     args = ap.parse_args()
     first, last = map(int, args.seeds.split("-"))
     sides = {"parent": [], "change": []}
-    with tempfile.TemporaryDirectory(prefix="perf_pairs-") as parent:
+    with tempfile.TemporaryDirectory(prefix="perf_pairs-") as tmp:
+        parent, change = Path(tmp, "parent"), Path(tmp, "change")
         tar = subprocess.run(["git", "archive", args.parent], cwd=ROOT, check=True,
                              capture_output=True).stdout
         tarfile.open(fileobj=io.BytesIO(tar)).extractall(parent)
-        trees = [("parent", Path(parent)), ("change", ROOT)]
+        copy_worktree(change)
+        trees = [("parent", parent), ("change", change)]
         for i, seed in enumerate(range(first, last + 1)):
             for name, tree in trees[:: 1 if i % 2 == 0 else -1]:
                 sides[name].append(run(tree, args, seed))
