@@ -1548,15 +1548,6 @@ GROUP BY p.doc_a, p.doc_b
 """
 
 
-def _q67_polygon_cover_hier(spark, sf):
-    """The hierarchical two-pass cover against the SAME oracle as the
-    flat q54 — proving the hier strategy (interior fraction-1 shortcut
-    + boundary-only exact clips) is bit-exact vs DuckDB too."""
-    from kml2geojson_spark.spatial import polygon_cover
-    return polygon_cover(_nation_diamonds(spark, sf), 6, strategy="hier",
-                         coarse_delta=2)
-
-
 def _q68_compact_cells(spark, sf):
     """S2/H3-style cell-set compaction: complete sibling quads collapse
     to their parent, recursively res 5 → 2 (at sf0.01 this genuinely
@@ -9077,87 +9068,6 @@ FROM fin
 """
 
 
-def _q257_bh_fdr(spark, sf):
-    """Multiple-comparisons pipeline: Welch t per suppkey%37 bucket
-    (A vs R revenue, null true by construction) -> normal two-sided p
-    via the fixed A&S erfc polynomial -> Benjamini-Hochberg step-up
-    adjustment, micro-quantized. Round-5 post-pin registration:
-    in-repo oracle sweep only."""
-    from kml2geojson_spark.relational import (bh_fdr,
-                                              normal_two_sided_p,
-                                              welch_ttest)
-    li = _t(spark, sf, "lineitem").select(
-        (F.col("l_suppkey") % 37).alias("bucket"), "l_returnflag",
-        F.round(F.col("l_extendedprice")).cast("long")
-        .alias("price_dollars"))
-    w = welch_ttest(li, value_col="price_dollars",
-                    group_col="l_returnflag",
-                    group_a="A", group_b="R", group_cols=["bucket"])
-    tests = (w.where(F.col("t_stat").isNotNull())
-             .select(F.col("bucket").alias("tid"),
-                     normal_two_sided_p(F.col("t_stat")).alias("p")))
-    out = bh_fdr(tests, p_col="p", test_id_col="tid")
-    return out.select(
-        "test_id", "rank", "m",
-        F.round(F.col("p") * F.lit(1_000_000.0)).cast("long")
-        .alias("p_micro"),
-        "adj_p_micro", "significant")
-
-
-def _o257() -> str:
-    from kml2geojson_spark.relational import normal_two_sided_p_sql
-    p_expr = normal_two_sided_p_sql("t_stat")
-    return f"""
-WITH b AS (
-  SELECT l_suppkey % 37 AS tid, l_returnflag AS f,
-         CAST(ROUND(l_extendedprice) AS BIGINT) AS v
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_suppkey IS NOT NULL
-    AND l_returnflag IN ('A', 'R')),
-s AS (
-  SELECT tid,
-         CAST(SUM(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(SUM(CASE WHEN f = 'A' THEN v ELSE 0 END) AS BIGINT) AS s_a,
-         CAST(SUM(CASE WHEN f = 'A' THEN v * v ELSE 0 END) AS BIGINT)
-           AS ss_a,
-         CAST(SUM(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(SUM(CASE WHEN f = 'R' THEN v ELSE 0 END) AS BIGINT) AS s_b,
-         CAST(SUM(CASE WHEN f = 'R' THEN v * v ELSE 0 END) AS BIGINT)
-           AS ss_b
-  FROM b GROUP BY tid),
-e AS (
-  SELECT tid, n_a, n_b,
-         s_a::DOUBLE / n_a::DOUBLE AS mean_a,
-         s_b::DOUBLE / n_b::DOUBLE AS mean_b,
-         ((n_a::DOUBLE * ss_a::DOUBLE - s_a::DOUBLE * s_a::DOUBLE)
-          / (n_a::DOUBLE * (n_a::DOUBLE - 1.0))) / n_a::DOUBLE AS va,
-         ((n_b::DOUBLE * ss_b::DOUBLE - s_b::DOUBLE * s_b::DOUBLE)
-          / (n_b::DOUBLE * (n_b::DOUBLE - 1.0))) / n_b::DOUBLE AS vb
-  FROM s),
-tt AS (
-  SELECT tid,
-         CASE WHEN n_a >= 2 AND n_b >= 2 AND va + vb > 0
-              THEN (mean_a - mean_b) / sqrt(va + vb) END AS t_stat
-  FROM e),
-p AS (SELECT tid, {p_expr} AS p FROM tt WHERE t_stat IS NOT NULL),
-r AS (SELECT tid, p,
-             ROW_NUMBER() OVER (ORDER BY p ASC, tid ASC) AS rank,
-             COUNT(*) OVER () AS m
-      FROM p),
-a AS (SELECT tid, p, rank, m,
-             LEAST(1.0, MIN(m::DOUBLE * p / rank::DOUBLE)
-                        OVER (ORDER BY rank DESC
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW)) AS adj
-      FROM r)
-SELECT tid AS test_id, rank, m,
-       CAST(ROUND(p * 1000000.0) AS BIGINT) AS p_micro,
-       CAST(ROUND(adj * 1000000.0) AS BIGINT) AS adj_p_micro,
-       (CAST(ROUND(adj * 1000000.0) AS BIGINT) <= 50000) AS significant
-FROM a
-"""
-
-
 def _q258_kendall_tau(spark, sf):
     """Kendall tau-b per user between event value cents and event
     epoch seconds (is spend drifting with time, rank-wise): exact
@@ -11926,7 +11836,7 @@ FROM agg
 def _q322_holm(spark, sf):
     """Holm step-down FWER adjustment over deterministic synthetic
     p-values (one tiny unpartitioned window over the m-row test
-    table — the bh_fdr shape). Round-5 post-pin registration:
+    table). Round-5 post-pin registration:
     in-repo oracle sweep only."""
     from kml2geojson_spark.relational import holm_adjust
     s = _t(spark, sf, "supplier")
@@ -12207,7 +12117,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q64_interval_join": _q64_interval_join,
         "q65_within_distance": _q65_within_distance,
         "q66_coverage_pyramid": _q66_coverage_pyramid,
-        "q67_polygon_cover_hier": _q67_polygon_cover_hier,
         "q68_compact_cells": _q68_compact_cells,
         "q69_tfidf_top_terms": _q69_tfidf_top_terms,
         "q70_bloom_registers": _q70_bloom_registers,
@@ -12391,7 +12300,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q254_ewma_last": _q254_ewma_last,
         "q255_mann_kendall": _q255_mann_kendall,
         "q256_brown_forsythe": _q256_brown_forsythe,
-        "q257_bh_fdr": _q257_bh_fdr,
         "q258_kendall_tau": _q258_kendall_tau,
         "q259_idw_interpolate": _q259_idw_interpolate,
         "q260_two_hop_reach": _q260_two_hop_reach,
@@ -12514,7 +12422,6 @@ def oracle_sql() -> dict[str, str]:
         "q66_coverage_pyramid": _o66(),
         "q40_minhash_pairs": _o40(),
         "q58_minhash_similarity": _o58(),
-        "q67_polygon_cover_hier": _o54(),  # hier must equal flat cover
         "q68_compact_cells": _o68(),
         "q69_tfidf_top_terms": _O69,
         "q70_bloom_registers": _O70,
@@ -12698,7 +12605,6 @@ def oracle_sql() -> dict[str, str]:
         "q254_ewma_last": _O254,
         "q255_mann_kendall": _O255,
         "q256_brown_forsythe": _O256,
-        "q257_bh_fdr": _o257(),
         "q258_kendall_tau": _O258,
         "q259_idw_interpolate": _o259(),
         "q260_two_hop_reach": _O260,

@@ -3339,58 +3339,6 @@ def normal_two_sided_p_sql(z_expr: str) -> str:
     return f"(({poly}) * {t} * EXP(-({x} * {x})))"
 
 
-def bh_fdr(df: DataFrame, *, p_col: str, test_id_col: str,
-           q: float = 0.05) -> DataFrame:
-    """Benjamini–Hochberg false-discovery-rate adjustment over a
-    frame of test results — the multiple-comparisons closer for the
-    package's test family (:func:`welch_ttest`, :func:`mannwhitney_u`,
-    :func:`poisson_rate_ztest`, ...): rank the m p-values ascending,
-    adjusted p_(i) = min_{j ≥ i} (m·p_(j)/j) clamped to 1, reject at
-    FDR level ``q`` iff adjusted p ≤ q.
-
-    Determinism: the rank order totalizes on (p, test_id); the
-    step-up running minimum is a window over the RANKED frame; the
-    adjusted value quantizes to micro-units (``adj_p_micro`` BIGINT)
-    so upstream libm ulp noise in the p's cannot leak. Two p's within
-    an ulp of each other may swap ranks across engines — their m·p/j
-    then differ at the 1/j scale; totalizing on test_id makes the
-    swap deterministic PER ENGINE, and real-valued test statistics
-    make cross-engine near-ties measure-zero (exact ties order by id
-    identically everywhere).
-
-    Scale shape: this runs over a RESULTS frame (one row per test —
-    thousands, not billions), so the single-partition rank window is
-    free by construction; at millions of tests swap in the
-    :func:`vocabulary` two-phase distributed ranking. NULL p's drop.
-
-    Output: (test_id, p, rank, m, adj_p_micro BIGINT, significant
-    BOOLEAN).
-    """
-    base = (df.where(F.col(p_col).isNotNull()
-                     & F.col(test_id_col).isNotNull())
-            .select(F.col(test_id_col).alias("test_id"),
-                    F.col(p_col).cast("double").alias("p")))
-    wr = Window.orderBy(F.col("p").asc(), F.col("test_id").asc())
-    wm = Window.rowsBetween(Window.unboundedPreceding,
-                            Window.unboundedFollowing)
-    ranked = base.select(
-        "test_id", "p",
-        F.row_number().over(wr).alias("rank"),
-        F.count(F.lit(1)).over(wm).alias("m"))
-    step = (F.col("m").cast("double") * F.col("p")
-            / F.col("rank").cast("double"))
-    wmin = (Window.orderBy(F.col("rank").desc())
-            .rowsBetween(Window.unboundedPreceding, 0))
-    adj = F.least(F.lit(1.0), F.min(step).over(wmin))
-    out = ranked.withColumn(
-        "adj_p_micro",
-        F.round(adj * F.lit(1_000_000.0)).cast("long"))
-    return out.withColumn(
-        "significant",
-        F.col("adj_p_micro") <= F.round(F.lit(float(q) * 1_000_000.0))
-        .cast("long"))
-
-
 def kendall_tau(df: DataFrame, *, col_x: str, col_y: str,
                 id_col: str, group_cols: list[str]) -> DataFrame:
     """Kendall's τ-b rank correlation per group — the pair-concordance
@@ -5531,10 +5479,8 @@ def poisson_dispersion(df: DataFrame, *, count_col: str,
 
 def holm_adjust(df: DataFrame, *, p_col: str, test_id_col: str,
                 alpha: float = 0.05) -> DataFrame:
-    """Holm step-down multiple-testing adjustment — the
-    family-wise-error companion to :func:`bh_fdr`'s
-    false-discovery-rate control (stricter guarantees, no
-    independence assumption): order the m p-values ascending,
+    """Holm step-down multiple-testing adjustment — family-wise-error
+    control (no independence assumption): order the m p-values ascending,
     ``adj_i = min(1, max_{j≤i} (m−j+1)·p_j)``, reject while
     adj ≤ α.
 
@@ -5547,7 +5493,7 @@ def holm_adjust(df: DataFrame, *, p_col: str, test_id_col: str,
 
     Scale shape: the m tests are the OUTPUT of upstream aggregation
     (one row per test), so the single unpartitioned window runs over
-    an already-tiny frame — the :func:`bh_fdr` note verbatim.
+    an already-tiny frame.
 
     Output: (test_id, p, rank BIGINT, adj_p DOUBLE,
     significant BOOLEAN).

@@ -406,118 +406,6 @@ def _cover_one(rings: list[np.ndarray], res: int, min_fraction: float):
     return (cell_encode_grid_np(gxx[keep], gyy[keep], res), frac[keep])
 
 
-def _edge_touched_coarse_mask(rings: list[np.ndarray], cx0: int, cy0: int,
-                              nx: int, ny: int, ccw: float,
-                              cch: float) -> np.ndarray:
-    """(nx, ny) bool mask of coarse cells whose rect MAY be touched by
-    any ring edge — conservative (edge-bbox overlap, widened one cell
-    on each side so edges lying exactly on a cell boundary never slip
-    through). Rectangle marking is O(edges + grid) via a 2-D difference
-    array, never O(edges × grid)."""
-    D = np.zeros((nx + 1, ny + 1), dtype=np.int64)
-    for ring in rings:
-        a, b = ring, np.roll(ring, -1, axis=0)
-        ex0 = np.minimum(a[:, 0], b[:, 0])
-        ex1 = np.maximum(a[:, 0], b[:, 0])
-        ey0 = np.minimum(a[:, 1], b[:, 1])
-        ey1 = np.maximum(a[:, 1], b[:, 1])
-        x0 = np.clip(np.floor((ex0 + 180.0) / ccw).astype(np.int64) - 1 - cx0,
-                     0, nx - 1)
-        x1 = np.clip(np.floor((ex1 + 180.0) / ccw).astype(np.int64) + 1 - cx0,
-                     0, nx - 1)
-        y0 = np.clip(np.floor((ey0 + 90.0) / cch).astype(np.int64) - 1 - cy0,
-                     0, ny - 1)
-        y1 = np.clip(np.floor((ey1 + 90.0) / cch).astype(np.int64) + 1 - cy0,
-                     0, ny - 1)
-        np.add.at(D, (x0, y0), 1)
-        np.add.at(D, (x1 + 1, y0), -1)
-        np.add.at(D, (x0, y1 + 1), -1)
-        np.add.at(D, (x1 + 1, y1 + 1), 1)
-    return D.cumsum(axis=0).cumsum(axis=1)[:nx, :ny] > 0
-
-
-def _cover_one_hier(rings: list[np.ndarray], res: int, min_fraction: float,
-                    coarse_delta: int):
-    """Hierarchical two-pass cover of one polygon: classify cells at
-    the coarse resolution ``res - coarse_delta`` as boundary (an edge
-    may touch them — conservative bbox test), interior (edge-free,
-    center inside by even-odd ray cast over ALL rings, so holes
-    classify correctly), or exterior. Interior coarse cells emit every
-    child at fraction exactly 1 WITHOUT clipping; boundary coarse
-    cells run the exact strip-clip kernel on their child block only
-    (bit-identical per cell to the flat kernel — the clip of a cell
-    never depends on which other cells share the call); exterior
-    cells emit nothing. Work scales with the polygon PERIMETER at
-    ``res`` plus the interior cell count, not with bbox area — the
-    planetary-polygon path the flat kernel's chunk cap only bounds in
-    memory, not in time."""
-    nn = float(1 << res)
-    cell_w, cell_h = 360.0 / nn, 180.0 / nn
-    cell_area = cell_w * cell_h
-    k = 1 << coarse_delta
-    ccw, cch = cell_w * k, cell_h * k
-    outer = rings[0]
-    ix0, ix1, iy0, iy1 = _bbox_grid(outer, res)
-    cx0, cx1, cy0, cy1 = ix0 >> coarse_delta, ix1 >> coarse_delta, \
-        iy0 >> coarse_delta, iy1 >> coarse_delta
-    nx, ny = cx1 - cx0 + 1, cy1 - cy0 + 1
-
-    boundary = _edge_touched_coarse_mask(rings, cx0, cy0, nx, ny, ccw, cch)
-    cgx = np.repeat(np.arange(cx0, cx1 + 1, dtype=np.int64), ny)
-    cgy = np.tile(np.arange(cy0, cy1 + 1, dtype=np.int64), nx)
-    bflat = boundary.ravel()
-    # edge-free coarse cells: center-point even-odd ray cast decides
-    # fully-inside (fraction 1 children) vs fully-outside (dropped) —
-    # a hole's interior ray-casts outside, so it drops correctly
-    interior = np.zeros(nx * ny, dtype=bool)
-    free = ~bflat
-    if free.any():
-        px = (cgx[free] + 0.5) * ccw - 180.0
-        py = (cgy[free] + 0.5) * cch - 90.0
-        interior[free] = _raycast_np(px, py, rings)
-
-    out_cells, out_fracs = [], []
-    child = np.arange(k, dtype=np.int64)
-    # interior: pure enumeration, fully vectorized across blocks —
-    # (B, k²) child coordinates, bbox-clipped by mask, one encode
-    if interior.any() and min_fraction < 1.0:
-        bx, by = cgx[interior], cgy[interior]
-        gxx = np.repeat(bx[:, None] * k + child[None, :], k, axis=1)
-        gyy = np.tile(by[:, None] * k + child[None, :], (1, k))
-        ok = ((gxx >= ix0) & (gxx <= ix1) & (gyy >= iy0) & (gyy <= iy1))
-        gxx, gyy = gxx[ok], gyy[ok]
-        if len(gxx):
-            out_cells.append(cell_encode_grid_np(gxx, gyy, res))
-            out_fracs.append(np.ones(len(gxx)))
-    # boundary: exact clip kernel batched PER COARSE COLUMN — within a
-    # column the wanted fine cells are exactly {column children} ×
-    # {union of boundary blocks' child rows}: a true cross product, so
-    # one kernel call per column with zero fill-in
-    bmask2d = boundary
-    for col in np.nonzero(bmask2d.any(axis=1))[0]:
-        cg_x = cx0 + int(col)
-        gx = np.arange(max(cg_x * k, ix0), min((cg_x + 1) * k - 1, ix1) + 1,
-                       dtype=np.int64)
-        rows = cy0 + np.nonzero(bmask2d[col])[0]
-        gy = (rows[:, None] * k + child[None, :]).ravel()
-        gy = gy[(gy >= iy0) & (gy <= iy1)]
-        if len(gx) == 0 or len(gy) == 0:
-            continue
-        area = _ring_cell_areas(outer, gx, gy, cell_w, cell_h)
-        for hole in rings[1:]:
-            area = area - _ring_cell_areas(hole, gx, gy, cell_w, cell_h)
-        frac = area / cell_area
-        keep = frac > min_fraction
-        if keep.any():
-            out_cells.append(cell_encode_grid_np(
-                np.repeat(gx, len(gy))[keep], np.tile(gy, len(gx))[keep],
-                res))
-            out_fracs.append(frac[keep])
-    if not out_cells:
-        return (np.empty(0, dtype=np.int64), np.empty(0))
-    return (np.concatenate(out_cells), np.concatenate(out_fracs))
-
-
 def _arrow_rings(rings) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Arrow ``list<list<list<double>>>`` rings column → the
     :func:`_rings_to_np` rule applied to every row at once: vertices
@@ -694,61 +582,23 @@ def _cover_batch(xy: np.ndarray, ring_off: np.ndarray, ring_row: np.ndarray,
 
 def polygon_cover(polygons: DataFrame, res: int, *,
                   id_col: str = "poly_id", rings_col: str = "rings",
-                  min_fraction: float = 0.0,
-                  strategy: str = "flat",
-                  coarse_delta: int = 3) -> DataFrame:
+                  min_fraction: float = 0.0) -> DataFrame:
     """General raster←vector coverage: each polygon → the cells of its
     bbox at ``res`` with the exact fraction of each cell covered
     (Sutherland–Hodgman clip + shoelace; ring 0 is the outer ring,
     further rings are holes whose clipped area is subtracted).
 
-    One ``mapInArrow`` over the polygons: the ``"flat"`` kernel
-    (:func:`_cover_batch`) clips every polygon of an Arrow batch in one
-    vectorized pass — no per-polygon or per-cell Python.
-
-    ``strategy`` picks the per-polygon enumeration:
-
-    - ``"flat"`` (default, the oracle-matched baseline, driver q54 —
-      the DuckDB Sutherland–Hodgman formulation matches the float
-      arithmetic operation-for-operation): clip EVERY bbox cell at
-      ``res``. Work and memory scale with bbox area — fine when
-      bbox_cells ≈ O(100..10k) per polygon.
-    - ``"hier"`` (the planetary-polygon path): two-pass hierarchical
-      cover — classify cells at ``res - coarse_delta`` (conservative
-      edge-bbox boundary test + center ray cast), emit interior
-      children at fraction exactly 1 WITHOUT clipping, run the exact
-      clip only on boundary blocks. Work scales with perimeter at
-      ``res`` + interior count instead of bbox area. Per-cell clip
-      results are bit-identical to ``"flat"`` (asserted in tests on
-      the q54 corpus); an edge-free interior cell's flat-kernel clip
-      reproduces the cell rectangle exactly there, so the fraction-1
-      shortcut is also bit-equal — on adversarial rings the flat
-      kernel may round an interior cell to 1 ± few ulps where hier
-      reports the mathematically exact 1.
+    One ``mapInArrow`` over the polygons: :func:`_cover_batch` clips
+    every bbox cell of every polygon of an Arrow batch in one
+    vectorized pass — no per-polygon or per-cell Python. It matches
+    the DuckDB Sutherland–Hodgman formulation operation for operation
+    (driver q54). Work and output scale with bbox area; the clip
+    scratch is chunked to ``_COVER_BATCH_CHUNK_CELLS_X_VERTS``.
     """
-    if strategy not in ("flat", "hier"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    hier = strategy == "hier" and res >= coarse_delta
-
-    def cover_hier(xy, ring_off, ring_row):
-        by_row: dict = {}
-        for k, row in enumerate(ring_row.tolist()):
-            by_row.setdefault(row, []).append(xy[ring_off[k]:ring_off[k + 1]])
-        rows, cids, fracs = [np.empty(0, dtype=np.int64)], \
-            [np.empty(0, dtype=np.int64)], [np.empty(0)]
-        for row, rs in by_row.items():
-            c, f = _cover_one_hier(rs, res, min_fraction, coarse_delta)
-            rows.append(np.full(len(c), row, dtype=np.int64))
-            cids.append(c)
-            fracs.append(f)
-        return (np.concatenate(rows), np.concatenate(cids),
-                np.concatenate(fracs))
-
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            rings = _arrow_rings(batch.column(1))
-            rows, cids, fracs = cover_hier(*rings) if hier \
-                else _cover_batch(*rings, res, min_fraction)
+            rows, cids, fracs = _cover_batch(*_arrow_rings(batch.column(1)),
+                                             res, min_fraction)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(pa.array(rows, pa.int64())),
                  pa.array(cids, pa.int64()), pa.array(fracs, pa.float64())],
@@ -758,7 +608,7 @@ def polygon_cover(polygons: DataFrame, res: int, *,
         .mapInArrow(run, POLY_COVER_SCHEMA)
 
 
-def coverage_fractions(polygons: DataFrame, res: int, **kw) -> DataFrame:
+def coverage_fractions(polygons: DataFrame, res: int) -> DataFrame:
     """Per-cell total covered fraction across all polygons.
 
     The sum is accumulated as integer picounits (each addend rounded
@@ -770,7 +620,7 @@ def coverage_fractions(polygons: DataFrame, res: int, **kw) -> DataFrame:
 
     Output: (cell_id, total_frac_pico, total_fraction, n_polygons).
     """
-    cover = polygon_cover(polygons, res, **kw)
+    cover = polygon_cover(polygons, res)
     pico = F.sum(F.round(F.col("fraction") * 1e12).cast("long")) \
         .alias("total_frac_pico")
     return (cover.groupBy("cell_id")
@@ -1168,21 +1018,26 @@ def within_distance_join(points: DataFrame, queries: DataFrame,
             .select("query_id", F.col("_pid").alias("point_id"), "dist2"))
 
 
+# knn_join_adaptive's fixed k-ring radius and the levels it climbs per round
+_KNN_RING_RADIUS = 2
+_KNN_LEVEL_STEP = 2
+
+
 def knn_join_adaptive(points: DataFrame, queries: DataFrame, k: int, res: int,
-                      *, ring_radius: int = 2, level_step: int = 2,
-                      point_id: str = "point_id", x: str = "x", y: str = "y",
+                      *, point_id: str = "point_id", x: str = "x", y: str = "y",
                       query_id: str = "query_id") -> DataFrame:
     """Exact kNN via MULTI-RESOLUTION k-ring expansion — no magic radius.
 
     Instead of growing the ring (whose cell count grows quadratically),
-    each round keeps a small fixed ring (``ring_radius``) but climbs the
-    cell hierarchy ``level_step`` levels (parent = id >> 2·step) — the
-    searched area quadruples per round at constant candidate-cell count.
+    each round keeps a small fixed ring (``_KNN_RING_RADIUS``) but
+    climbs the cell hierarchy ``_KNN_LEVEL_STEP`` levels (parent = id >>
+    2·step) — the searched area quadruples per round at constant
+    candidate-cell count.
 
     A query is PROVEN done when it has ≥ k candidates and its k-th
     distance fits inside the current level's guaranteed coverage
-    (``ring_radius × cell_size``): any closer point would already be a
-    candidate. Unsatisfied queries continue to the coarser level; at
+    (``_KNN_RING_RADIUS × cell_size``): any closer point would already
+    be a candidate. Unsatisfied queries continue to the coarser level; at
     resolution 0 the ring is the whole grid, so convergence is
     unconditional. Each round is one equi-join + window over only the
     still-unsatisfied queries. Result equals :func:`knn_exact`
@@ -1207,13 +1062,13 @@ def knn_join_adaptive(points: DataFrame, queries: DataFrame, k: int, res: int,
     while True:
         n = 1 << level
         cell_w, cell_h = 360.0 / n, 180.0 / n
-        guarantee = ring_radius * min(cell_w, cell_h)
+        guarantee = _KNN_RING_RADIUS * min(cell_w, cell_h)
 
         # ring cells as a pure-Column offsets expansion — the candidate
         # stage stays entirely inside whole-stage codegen
         # (plan-asserted: no Python eval node)
         q = explode_kring(pending, F.col("_qx"), F.col("_qy"),
-                          level, ring_radius, out_col="_cell_lvl")
+                          level, _KNN_RING_RADIUS, out_col="_cell_lvl")
         p_lvl = p.withColumn(
             "_cell_lvl",
             F.col("cell_id") if level == res
@@ -1239,7 +1094,7 @@ def knn_join_adaptive(points: DataFrame, queries: DataFrame, k: int, res: int,
         cached.append(pending)
         if pending.count() == 0:
             break
-        level = max(level - level_step, 0)
+        level = max(level - _KNN_LEVEL_STEP, 0)
 
     out = done_parts[0]
     for part in done_parts[1:]:
@@ -1679,8 +1534,7 @@ def _grid_lo(coord, offset: float, extent: float, res: int):
 def grid_cluster(points: DataFrame, res: int, *,
                  x_col: str = "x", y_col: str = "y",
                  min_count: int = 1, diagonal: bool = True,
-                 max_iters: int = 50,
-                 components: str = "star") -> DataFrame:
+                 max_iters: int = 50) -> DataFrame:
     """Density clustering on the cell grid: cells holding at least
     ``min_count`` points are occupied; occupied cells that are
     8-neighbors (4 if ``diagonal=False``; x wraps at the antimeridian,
@@ -1693,15 +1547,14 @@ def grid_cluster(points: DataFrame, res: int, *,
     (map-side combinable); neighbor generation is an 8-way explode
     over OCCUPIED CELLS ONLY (≪ points), the adjacency check is a
     self equi-join on grid coords, and components run on the cell
-    graph. ``components`` defaults to ``"star"`` (large-star/small-star,
-    O(log² n) rounds independent of cluster diameter) because occupied-
-    cell graphs are the canonical LONG-CHAIN case — a snaking corridor
-    of occupied cells has diameter ~ its length, and min-label
-    propagation (``components="label"``) needs one round per hop (it
-    RAISES past ``max_iters`` rather than return wrong labels; the
-    sf0.1 customer grid at res 7 already exceeds 50 hops). Both
-    variants yield the identical min-cell-id labeling. At 100 TB the
-    cell graph is millions of rows, not trillions.
+    graph with :func:`~kml2geojson_spark.graph.connected_components_star`
+    (large-star/small-star, O(log² n) rounds independent of cluster
+    diameter; ``max_iters`` is its convergence guard): occupied-cell
+    graphs are the canonical LONG-CHAIN case — a snaking corridor of
+    occupied cells has diameter ~ its length, so min-label propagation
+    would need one round per hop (the sf0.1 customer grid at res 7
+    already exceeds 50 hops). At 100 TB the cell graph is millions of
+    rows, not trillions.
 
     Output: (cell_id, cluster_id, n_points) per occupied cell.
     """
@@ -1737,12 +1590,8 @@ def grid_cluster(points: DataFrame, res: int, *,
         ["nx", "ny"]).select(F.col("cell_id").alias("doc_a"),
                              F.col("nbr_id").alias("doc_b"))
 
-    from ..graph import connected_components, connected_components_star
-    if components not in ("label", "star"):
-        raise ValueError(f"unknown components algorithm {components!r}")
-    cc = connected_components if components == "label" \
-        else connected_components_star
-    comp = cc(edges, max_iters=max_iters)
+    from ..graph import connected_components_star
+    comp = connected_components_star(edges, max_iters=max_iters)
     return (occ.join(comp, occ["cell_id"] == comp["node"], "left")
             .select("cell_id",
                     F.coalesce(F.col("component"), F.col("cell_id"))

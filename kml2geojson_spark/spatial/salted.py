@@ -53,14 +53,14 @@ def hot_keys(df: DataFrame, key: str, *, top: int = 64,
 
 def salted_join(probe: DataFrame, build: DataFrame, key: str, *,
                 n_salt: int = 8, hot: Optional[Sequence] = None,
-                how: str = "inner", probe_hash_cols: Optional[list] = None) -> DataFrame:
+                how: str = "inner") -> DataFrame:
     """Skew-split equi-join: ``probe`` (large/skewed) ⋈ ``build``
     (small) on ``key``. ``hot`` keys (auto-detected from a probe sample
     when None) are split ``n_salt`` ways with a deterministic salt.
 
-    The salt is derived from a hash of the probe row's non-key columns
-    (or ``probe_hash_cols``), so retried tasks produce identical salt
-    assignments — required for checkpoint/lineage resume determinism.
+    The salt is derived from a hash of the probe row's non-key columns,
+    so retried tasks produce identical salt assignments — required for
+    checkpoint/lineage resume determinism.
 
     Supported ``how``: inner / left / left_semi / left_anti — joins
     where replicating unmatched BUILD rows cannot surface in the output.
@@ -81,7 +81,7 @@ def salted_join(probe: DataFrame, build: DataFrame, key: str, *,
     if not hot:
         return probe.join(build, key, how)
 
-    hash_cols = probe_hash_cols or [c for c in probe.columns if c != key]
+    hash_cols = [c for c in probe.columns if c != key]
     if not hash_cols:
         # key-only probe: no row content to hash — spread hot keys with
         # a per-partition row counter instead. Stable under plain task
@@ -89,9 +89,8 @@ def salted_join(probe: DataFrame, build: DataFrame, key: str, *,
         # under upstream shuffle recomputation, where partition row
         # order can change and with it the salt assignment: join RESULTS
         # stay row-identical either way, only lineage-resume determinism
-        # of intermediate salt values is weakened. Callers needing full
-        # determinism should pass probe_hash_cols explicitly.
-        hash_cols = None
+        # of intermediate salt values is weakened. A probe that carries
+        # a row id or any other non-key column gets the row-hash salt.
         salt_src = F.pmod(F.monotonically_increasing_id(), F.lit(n_salt))
     else:
         salt_src = F.pmod(F.hash(*[F.col(c) for c in hash_cols]),

@@ -188,11 +188,10 @@ def test_polygon_cover_is_narrow_map(spark):
         [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0],
                [-5.0, -5.0]]])],
         "poly_id long, rings array<array<array<double>>>")
-    for strategy in ("flat", "hier"):
-        plan = _plan(polygon_cover(polys, 6, strategy=strategy))
-        assert "Exchange" not in plan, plan
-        assert plan.count("MapInArrow") == 1, plan
-        assert "MapInPandas" not in plan, plan
+    plan = _plan(polygon_cover(polys, 6))
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
 
 
 def test_hll_estimate_partial_aggregation(spark):

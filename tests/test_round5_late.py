@@ -257,8 +257,8 @@ def test_two_pass_window_oracles_are_totally_ordered():
 def test_grid_cluster_long_chain_converges_with_star_default(spark):
     """A snaking corridor of occupied cells has diameter ~ its length;
     min-label propagation needs one round per hop (the sf0.1 sweep
-    caught q75 raising at 50 rounds), the star default converges in
-    O(log² n) rounds regardless."""
+    caught q75 raising at 50 rounds); grid_cluster's star components
+    converge in O(log² n) rounds regardless."""
     from kml2geojson_spark.spatial.ops import grid_cluster
     res, n = 9, 120
     step = 360.0 / (1 << res)
@@ -267,9 +267,6 @@ def test_grid_cluster_long_chain_converges_with_star_default(spark):
     out = grid_cluster(df, res).collect()
     assert len(out) == n
     assert len({r["cluster_id"] for r in out}) == 1  # one component
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError):
-        grid_cluster(df, res, components="label", max_iters=20).collect()
 
 
 # ------------------------------------------- interval_overlap_join

@@ -1,5 +1,6 @@
 """Round-5 session-9 operators: adamic_adar, spatial_thin,
-distinctive_terms, ewma_last, mann_kendall, brown_forsythe, bh_fdr.
+distinctive_terms, ewma_last, mann_kendall, brown_forsythe,
+normal_two_sided_p.
 Each is verified against an independent brute-force computation."""
 
 from __future__ import annotations
@@ -336,7 +337,7 @@ def test_brown_forsythe_rejects_float(spark):
 
 
 # ---------------------------------------------------------------------------
-# bh_fdr + normal_two_sided_p
+# normal_two_sided_p
 # ---------------------------------------------------------------------------
 
 def test_normal_p_matches_erfc(spark):
@@ -350,31 +351,3 @@ def test_normal_p_matches_erfc(spark):
     for i, z in enumerate(zs):
         assert got[i] == pytest.approx(math.erfc(abs(z) / math.sqrt(2)),
                                        abs=1.6e-7)
-
-
-def test_bh_fdr_matches_brute(spark):
-    from kml2geojson_spark.relational import bh_fdr
-
-    ps = [0.001, 0.008, 0.039, 0.041, 0.042, 0.06, 0.074, 0.205,
-          0.212, 0.216, 0.222, 0.251, 0.269, 0.275, 0.34, 0.341,
-          0.569, 0.594, 0.696, 0.762]
-    df = spark.createDataFrame([(i, p) for i, p in enumerate(ps)],
-                               "tid long, p double")
-    got = {r.test_id: (r.rank, r.adj_p_micro, r.significant)
-           for r in bh_fdr(df, p_col="p", test_id_col="tid").collect()}
-    m = len(ps)
-    # brute: adj_i = min_{j>=i} m*p_j/j (ps already sorted ascending)
-    adj = [0.0] * m
-    running = 1.0
-    for i in range(m - 1, -1, -1):
-        running = min(running, m * ps[i] / (i + 1))
-        adj[i] = running
-    for i, p in enumerate(ps):
-        rank, am, sig = got[i]
-        assert rank == i + 1
-        assert am == round(adj[i] * 1e6)
-        assert sig == (am <= 50_000)
-    # classic BH on this textbook vector: exactly the first 5 reject? no -
-    # verify against direct computation instead of folklore.
-    n_sig = sum(1 for i in range(m) if adj[i] <= 0.05)
-    assert sum(1 for v in got.values() if v[2]) == n_sig

@@ -393,70 +393,32 @@ def test_rect_overlap_join_antimeridian(spark):
     assert got == {(1, 2), (1, 3), (1, 5), (2, 5), (3, 5), (5, 6)}
 
 
-def _diamond(key):
-    cx = ((key * 2971 + 1234) % 30000) / 100.0 - 150.0
-    cy = ((key * 4231 + 567) % 13000) / 100.0 - 65.0
-    r = 4.0 + (key % 7) * 3.0
-    return np.array([[cx, cy - r], [cx + r, cy], [cx, cy + r],
-                     [cx - r, cy], [cx, cy - r]])
-
-
-def test_polygon_cover_hier_bitexact_vs_flat_on_diamonds():
-    """The hierarchical two-pass cover must be BIT-equal to the flat
-    kernel on the q54 diamond corpus: boundary cells run the identical
-    clip (per-cell results don't depend on call grouping) and interior
-    cells' flat clip reproduces exactly 1.0 there."""
-    from kml2geojson_spark.spatial.ops import _cover_one, _cover_one_hier
-    for key in range(25):
-        rings = [_diamond(key)]
-        for res in (5, 6, 8):
-            fc, ff = _cover_one(rings, res, 0.0)
-            hc, hf = _cover_one_hier(rings, res, 0.0, 2)
-            flat = dict(zip(fc.tolist(), ff.tolist()))
-            hier = dict(zip(hc.tolist(), hf.tolist()))
-            assert flat == hier, f"poly {key} res {res}"
-
-
-def test_polygon_cover_hier_with_hole_bitexact():
-    from kml2geojson_spark.spatial.ops import _cover_one, _cover_one_hier
-    outer = _diamond(5)
-    cx, cy = outer[:, 0].mean(), outer[1][1]
-    hole = np.array([[cx - 3, cy - 3], [cx + 3, cy - 3], [cx + 3, cy + 3],
-                     [cx - 3, cy + 3], [cx - 3, cy - 3]])
-    rings = [outer, hole]
-    fc, ff = _cover_one(rings, 7, 0.0)
-    hc, hf = _cover_one_hier(rings, 7, 0.0, 2)
-    assert dict(zip(fc.tolist(), ff.tolist())) == \
-        dict(zip(hc.tolist(), hf.tolist()))
-
-
-def test_polygon_cover_hier_beyond_chunk_cap(spark):
-    """A planetary polygon whose bbox at the target res exceeds the
-    flat kernel's chunk cap: the hier strategy completes through the
-    Spark operator and its integerized fraction total matches the flat
-    kernel's (the per-cell sets agree wherever both computed)."""
-    from kml2geojson_spark.spatial.ops import (_COVER_CHUNK_CELLS_X_VERTS,
-                                               _cover_one, _cover_one_hier,
+def test_polygon_cover_planetary_polygon(spark):
+    """A planetary polygon whose bbox at res 11 exceeds the batched
+    clip's chunk cap: ``_cover_batch`` runs it in many chunks and its
+    fraction total matches the shoelace area; through Spark,
+    ``polygon_cover`` equals the per-polygon reference."""
+    from kml2geojson_spark.spatial.ops import (_COVER_BATCH_CHUNK_CELLS_X_VERTS,
+                                               _cover_batch, _cover_one,
                                                polygon_cover)
     # diamond spanning most of the globe; at res 11 the bbox is
-    # ~1800 × 1500 cells × 5 verts >> the 4M chunk cap
+    # ~1800 × 1600 cells × 5 verts >> the batched chunk cap
     big = np.array([[0.0, -70.0], [160.0, 0.0], [0.0, 70.0],
                     [-160.0, 0.0], [0.0, -70.0]])
     res = 11
     nn = 1 << res
     bbox_cells = int((320.0 / 360.0) * nn) * int((140.0 / 180.0) * nn)
-    assert bbox_cells * 5 > _COVER_CHUNK_CELLS_X_VERTS
-    hc, hf = _cover_one_hier([big], res, 0.0, 3)
-    # exact total: integerized picounit sum equals the shoelace area
+    assert bbox_cells * len(big) > _COVER_BATCH_CHUNK_CELLS_X_VERTS
+    rows, cids, fracs = _cover_batch(big, np.array([0, len(big)]),
+                                     np.array([0]), res, 0.0)
+    assert (rows == 0).all() and len(cids) == len(fracs)
     cell_area = (360.0 / nn) * (180.0 / nn)
-    got_area = hf.sum() * cell_area
     true_area = 0.5 * abs(160.0 * 140.0 * 2)  # diamond = d1*d2/2
-    assert got_area == pytest.approx(true_area, rel=1e-9)
-    # and the Spark operator runs the hier path end-to-end
+    assert fracs.sum() * cell_area == pytest.approx(true_area, rel=1e-9)
     df = spark.createDataFrame(
         [(1, [[[float(x), float(y)] for x, y in big]])],
         "poly_id long, rings array<array<array<double>>>")
-    out = polygon_cover(df, 8, strategy="hier").toPandas()
+    out = polygon_cover(df, 8).toPandas()
     fc, ff = _cover_one([big], 8, 0.0)
     assert dict(zip(out["cell_id"], out["fraction"])) == \
         dict(zip(fc.tolist(), ff.tolist()))

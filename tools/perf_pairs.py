@@ -9,10 +9,12 @@ run from fresh copies at the same depth; then, per seed, runs
 ``perfbench/run.py`` on both sides, alternating which side goes first.
 Prints per pair the listed metrics, the unlisted end-to-end
 ``job_s_p50`` and ``cpu_s_per_*`` (so a change that trades executor CPU
-for driver wall time shows up), and the per-job median of each
-``info.job_cpu_s`` class; then each side's median and quartiles, and
-per metric the median change/parent ratio and how many pairs read lower
-at the change.
+for driver wall time shows up), each ``info.setup_phases`` phase as
+``setup.<phase>`` (so a slow ``setup_s`` names its phase: session
+start, corpus write, workload materialize or cold job), and the per-job
+median of each ``info.job_cpu_s`` class; then each side's median and
+quartiles, and per metric the median change/parent ratio and how many
+pairs read lower at the change.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ def run(tree: Path, args, seed: int) -> dict:
     info = json.loads(next(line for line in out if line.startswith("info "))[5:])
     row = {k: v["value"] for k, v in json.loads(out[-1])["metrics"].items()}
     row.update({k: info["end_to_end"][k] for k in UNLISTED})
+    row.update({f"setup.{k}": v for k, v in info["setup_phases"].items()})
     for c in info["job_cpu_s"][0]:
         row[f"cpu.{c}"] = statistics.median(j[c] for j in info["job_cpu_s"])
     return row
