@@ -472,7 +472,7 @@ def _q65_within_distance(spark, sf):
     """DWithin join: all (query, point) pairs within 5 degrees —
     k-ring candidates with radius-derived ring count, exact d² filter
     (identical double formula to the oracle)."""
-    from kml2geojson_spark.spatial import within_distance_join
+    from kml2geojson_spark.spatial.ops import within_distance_join
     return within_distance_join(_customer_points(spark, sf),
                                 _supplier_queries(spark, sf), 5.0, res=6)
 
@@ -487,7 +487,7 @@ WHERE (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y) <= 25.0
 
 
 def _q14_coverage_rect(spark, sf):
-    from kml2geojson_spark.spatial import cover_cells_rect
+    from kml2geojson_spark.spatial.ops import cover_cells_rect
     p = _nation_diamond_params(spark, sf)
     rects = p.select(
         F.col("poly_id").alias("rect_id"),
@@ -1553,7 +1553,8 @@ def _q68_compact_cells(spark, sf):
     to their parent, recursively res 5 → 2 (at sf0.01 this genuinely
     collapses: 891 cells → 396 across three mixed output resolutions).
     Oracle replays it level by level in chained CTEs."""
-    from kml2geojson_spark.spatial import compact_cells, encode_points
+    from kml2geojson_spark.spatial import encode_points
+    from kml2geojson_spark.spatial.ops import compact_cells
     cells = encode_points(_customer_points(spark, sf), 5) \
         .select("cell_id").distinct()
     return compact_cells(cells, min_res=2)
@@ -1722,7 +1723,7 @@ def _q74_line_cover(spark, sf):
     pure-Column column-sweep kernel. The oracle replays the identical
     sweep (column x-span → y interpolation → row range) float-for-
     float in DuckDB."""
-    from kml2geojson_spark.spatial import line_cover
+    from kml2geojson_spark.spatial.ops import line_cover
     return line_cover(_supplier_lines(spark, sf), 7)
 
 
@@ -1781,7 +1782,7 @@ def _q75_grid_cluster(spark, sf):
     8-neighbor adjacency (x wraps), cluster = min cell id of the
     connected component; oracle = recursive-CTE closure over the same
     cell graph."""
-    from kml2geojson_spark.spatial import grid_cluster
+    from kml2geojson_spark.spatial.ops import grid_cluster
     return grid_cluster(_customer_points(spark, sf), 7)
 
 
@@ -1886,7 +1887,7 @@ def _q78_spatial_extent(spark, sf):
     """Per-group extent planning statistic: bbox + count + bit-exact
     centroid (nano-degree integer sums, so partial-agg order can't
     perturb the float)."""
-    from kml2geojson_spark.spatial import spatial_extent
+    from kml2geojson_spark.spatial.ops import spatial_extent
     pts = _customer_points(spark, sf).withColumn(
         "grp", F.col("point_id") % 10)
     return spatial_extent(pts, "grp")
@@ -3556,7 +3557,7 @@ def _q129_nearest_segment(spark, sf):
     18.07 (sf0.01), so the ring-bounded result equals the oracle's
     brute-force nearest. Round-5 post-pin registration: in-repo
     oracle sweep only."""
-    from kml2geojson_spark.spatial import nearest_segment_join
+    from kml2geojson_spark.spatial.ops import nearest_segment_join
     return nearest_segment_join(_customer_points(spark, sf),
                                 _supplier_segments(spark, sf),
                                 res=4, radius=2)
@@ -3892,7 +3893,7 @@ def _q136_segment_intersections(spark, sf):
     equi-join, exactly-once by intersection-point cell ownership (no
     distinct). Round-5 post-pin registration: in-repo oracle sweep
     only."""
-    from kml2geojson_spark.spatial import segment_intersection_join
+    from kml2geojson_spark.spatial.ops import segment_intersection_join
     return segment_intersection_join(
         _supplier_segments(spark, sf), _nation_segments(spark, sf), res=6)
 
@@ -3945,7 +3946,7 @@ def _q137_grid_moran(spark, sf):
     the statistic is partition-order-independent and the DuckDB replay
     is bit-exact. Round-5 post-pin registration: in-repo oracle sweep
     only."""
-    from kml2geojson_spark.spatial import grid_moran
+    from kml2geojson_spark.spatial.ops import grid_moran
     return grid_moran(_customer_points(spark, sf), res=5)
 
 
@@ -4179,7 +4180,7 @@ def _q143_line_buffer(spark, sf):
     re-encode + ONE (id, cell) distinct hash-agg; composed with
     line_cover it stays join-free end-to-end. Round-5 post-pin
     registration: in-repo oracle sweep only."""
-    from kml2geojson_spark.spatial import buffer_cells, line_cover
+    from kml2geojson_spark.spatial.ops import buffer_cells, line_cover
     cover = line_cover(_supplier_lines(spark, sf), 7)
     return buffer_cells(cover, 7, radius=1)
 
@@ -4249,7 +4250,7 @@ def _q145_convex_hull(spark, sf):
     homomorphism, so only hull-sized rows shuffle), final hull per
     group in applyInPandas; exact Python-int orientation tests.
     Round-5 post-pin registration: in-repo oracle sweep only."""
-    from kml2geojson_spark.spatial import convex_hull
+    from kml2geojson_spark.spatial.ops import convex_hull
     c = _t(spark, sf, "customer").where(F.col("c_custkey") <= 1500)
     pts = c.select(
         (F.col("c_custkey") % 50).alias("group_id"),
@@ -6826,52 +6827,6 @@ FROM t
 """
 
 
-def _q200_hourly_profile(spark, sf):
-    """Hour-of-week seasonality of event value (cents) per event
-    type: pure integer epoch arithmetic for (dow, hour) — no engine
-    date-function conventions — exact BIGINT bucket sums, seasonal
-    index as one division of exact integer products. Round-5
-    post-pin registration: in-repo oracle sweep only."""
-    from kml2geojson_spark.eventops import hourly_profile
-    ev = _t(spark, sf, "events").where(
-        F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-        & F.col("value").isNotNull()).select(
-        "event_type",
-        F.expr("unix_micros(cast(ts as timestamp))").alias("tus"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"))
-    return hourly_profile(ev, ts_micros_col="tus", value_col="cents",
-                          group_cols=["event_type"])
-
-
-_O200 = """
-WITH b AS (
-  SELECT event_type AS g, epoch_us(ts) AS tus,
-         CAST(ROUND(value * 100) AS BIGINT) AS v
-  FROM events
-  WHERE event_type IS NOT NULL AND ts IS NOT NULL
-    AND value IS NOT NULL),
-bb AS (
-  SELECT g, CAST(((tus // 86400000000) + 3) % 7 AS BIGINT) AS dow,
-         CAST((tus // 3600000000) % 24 AS BIGINT) AS hour, v
-  FROM b WHERE tus >= 0),
-pb AS (
-  SELECT g, dow, hour, CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(SUM(v) AS BIGINT) AS value_sum
-  FROM bb GROUP BY g, dow, hour),
-w AS (
-  SELECT g, dow, hour, n_events, value_sum,
-         CAST(SUM(n_events) OVER (PARTITION BY g) AS BIGINT) AS tn,
-         CAST(SUM(value_sum) OVER (PARTITION BY g) AS BIGINT) AS tv
-  FROM pb)
-SELECT g AS event_type, dow, hour, n_events, value_sum,
-       CASE WHEN n_events > 0 AND tv != 0
-            THEN CAST(value_sum * tn AS DOUBLE)
-                 / CAST(n_events * tv AS DOUBLE)
-       END AS seasonal_index
-FROM w
-"""
-
-
 def _q201_assortativity(spark, sf):
     """Degree assortativity of the part co-order graph: exact
     DECIMAL(38,0) endpoint-degree sufficient statistics over the
@@ -8210,7 +8165,7 @@ def _q234_polygon_overlap(spark, sf):
     parity filter, general-edge Sutherland-Hodgman clip whose float
     sequence the DuckDB oracle replays bit-for-bit. Round-5 post-pin
     registration: in-repo oracle sweep only."""
-    from kml2geojson_spark.spatial import polygon_overlap_pairs
+    from kml2geojson_spark.spatial.ops import polygon_overlap_pairs
     return polygon_overlap_pairs(_supplier_diamonds(spark, sf), 6)
 
 
@@ -8391,7 +8346,7 @@ def _q238_haversine(spark, sf):
     anchor, aggregated per returnflag as floored-integer-meter exact
     BIGINT sums (the libm-quantization oracle discipline). Round-5
     post-pin registration: in-repo oracle sweep only."""
-    from kml2geojson_spark.spatial import haversine_m
+    from kml2geojson_spark.spatial.ops import haversine_m
     li = _t(spark, sf, "lineitem")
     x = ((F.col("l_orderkey") * 131 + F.col("l_linenumber") * 7 + 17)
          % 36000) / 100.0 - 180.0
@@ -11598,44 +11553,6 @@ FROM o
 """
 
 
-def _q317_weighted_quantile(spark, sf):
-    """Quantity-weighted P90 of extended price per return flag —
-    weighted_median generalized to any permille level, same exact
-    milli-mass machinery. Round-5 post-pin registration: in-repo
-    oracle sweep only."""
-    from kml2geojson_spark.relational import weighted_quantile
-    li = _t(spark, sf, "lineitem").select(
-        "l_returnflag", "l_extendedprice", "l_quantity",
-        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rid"))
-    return weighted_quantile(li, group_col="l_returnflag",
-                             value_col="l_extendedprice",
-                             weight_col="l_quantity", id_col="rid",
-                             p_milli=900)
-
-
-_O317 = """
-WITH d AS (
-  SELECT l_returnflag AS g, l_extendedprice AS v,
-         l_orderkey * 8 + l_linenumber AS i,
-         CAST(ROUND(l_quantity * 1000.0) AS BIGINT) AS wm
-  FROM lineitem
-  WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-    AND CAST(ROUND(l_quantity * 1000.0) AS BIGINT) > 0),
-run AS (
-  SELECT g, v, i, wm,
-         CAST(SUM(wm) OVER (PARTITION BY g ORDER BY v ASC, i ASC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS BIGINT) AS cum,
-         CAST(SUM(wm) OVER (PARTITION BY g) AS BIGINT) AS tot
-  FROM d),
-q AS (SELECT * FROM run WHERE cum * 1000 >= tot * 900)
-SELECT g AS l_returnflag,
-       MIN({'v': v, 'i': i})['v'] AS quantile,
-       CAST(MAX(tot) AS BIGINT) AS total_weight_milli
-FROM q GROUP BY g
-"""
-
-
 def _q318_sn_scale(spark, sf):
     """Rousseeuw-Croux Sn robust spread of purchase cents per user
     (50% breakdown, two exact selection medians over the pair
@@ -12248,7 +12165,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q196_cohens_d": _q196_cohens_d,
         "q197_time_weighted_avg": _q197_twa,
         "q198_mantel_haenszel": _q198_mantel_haenszel,
-        "q200_hourly_profile": _q200_hourly_profile,
         "q201_assortativity": _q201_assortativity,
         "q202_bigram_lm": _q202_bigram_lm,
         "q203_js_divergence": _q203_js_divergence,
@@ -12358,7 +12274,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q314_sequence_gaps": _q314_sequence_gaps,
         "q315_quadkey": _q315_quadkey,
         "q316_langid_eval": _q316_langid_eval,
-        "q317_weighted_quantile": _q317_weighted_quantile,
         "q318_sn_scale": _q318_sn_scale,
         "q319_canonical_url": _q319_canonical_url,
         "q320_cochran_q": _q320_cochran_q,
@@ -12553,7 +12468,6 @@ def oracle_sql() -> dict[str, str]:
         "q196_cohens_d": _O196,
         "q197_time_weighted_avg": _O197,
         "q198_mantel_haenszel": _O198,
-        "q200_hourly_profile": _O200,
         "q201_assortativity": _O201,
         "q202_bigram_lm": _O202,
         "q203_js_divergence": _O203,
@@ -12663,7 +12577,6 @@ def oracle_sql() -> dict[str, str]:
         "q314_sequence_gaps": _O314,
         "q315_quadkey": _o315(),
         "q316_langid_eval": _o316(),
-        "q317_weighted_quantile": _O317,
         "q318_sn_scale": _O318,
         "q319_canonical_url": _o319(),
         "q320_cochran_q": _O320,

@@ -45,8 +45,6 @@ from .engine import (
 )
 from .datagen import pack_spans, synthesize_documents_kml, spans_schema
 from . import compat  # reference-named drop-in API (kml2geojson v5.1.0)
-from . import bucketed  # co-located (pre-shuffled) table layout
-from . import rangejoin  # bucket-candidate interval (range) join
 
 if "pyspark.worker" in _sys.modules:
     from .worker_imports import freeze_heap as _freeze_heap

@@ -973,66 +973,6 @@ def time_weighted_average(df: DataFrame, *, ts_col: str,
                     "vdt_sum", twa.alias("twa"))
 
 
-def hourly_profile(df: DataFrame, *, ts_micros_col: str,
-                   value_col: str,
-                   group_cols: list[str]) -> DataFrame:
-    """Hour-of-week seasonality profile per group: event count, value
-    total, and a seasonal index (bucket mean ÷ group mean) for each
-    (day-of-week, hour) bucket — the load-shaping / staffing /
-    anomaly-baseline primitive.
-
-    Determinism: ``ts_micros_col`` must be INTEGER epoch
-    microseconds and ``value_col`` INTEGER (floats raise) — the
-    day-of-week (0 = Monday) and UTC hour come from PURE INTEGER
-    arithmetic on the epoch (``(days+3) mod 7``, ``hours mod 24``),
-    sidestepping every engine's date-function convention; counts and
-    sums are exact BIGINTs; the seasonal index is ONE division of
-    exact integer PRODUCTS (``(v_b·N)/(n_b·V)``) — bit-identical
-    across engines. Caller guarantees v_b·N < 2⁶³.
-
-    Scale shape: one (group, dow, hour) hash-aggregate with map-side
-    combine, then the group totals via a window over the ≤ 168
-    aggregated rows per group (value-level, never raw rows). No
-    join, no Python.
-
-    Output: (group..., dow, hour, n_events, value_sum,
-    seasonal_index) — index NULL when the bucket or group value sum
-    is 0-denominated.
-    """
-    from pyspark.sql.types import DoubleType, FloatType
-
-    fields = {f.name: f for f in df.schema.fields}
-    for c in (ts_micros_col, value_col):
-        if isinstance(fields[c].dataType, (DoubleType, FloatType)):
-            raise ValueError(
-                f"hourly_profile: {c!r} is floating-point — "
-                "integerize first (exact integer sums are the "
-                "determinism contract)")
-    if not group_cols:
-        raise ValueError("hourly_profile: group_cols must be non-empty")
-    keep = (F.col(ts_micros_col).isNotNull()
-            & F.col(value_col).isNotNull()
-            & (F.col(ts_micros_col) >= 0))
-    for g in group_cols:
-        keep = keep & F.col(g).isNotNull()
-    us = F.col(ts_micros_col).cast("long")
-    dow = F.pmod(F.expr(f"({ts_micros_col} div 86400000000) + 3"),
-                 F.lit(7))
-    hour = F.pmod(F.expr(f"{ts_micros_col} div 3600000000"), F.lit(24))
-    b = df.where(keep).select(
-        *group_cols, dow.alias("dow"), hour.alias("hour"),
-        F.col(value_col).cast("long").alias("_v"), us.alias("_us"))
-    per_b = b.groupBy(*group_cols, "dow", "hour").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("_v").alias("value_sum"))
-    wg = Window.partitionBy(*group_cols)
-    tot_n = F.sum("n_events").over(wg)
-    tot_v = F.sum("value_sum").over(wg)
-    idx = F.when((F.col("n_events") > 0) & (tot_v != 0),
-                 (F.col("value_sum") * tot_n).cast("double")
-                 / (F.col("n_events") * tot_v).cast("double"))
-    return per_b.select(*group_cols, "dow", "hour", "n_events",
-                        "value_sum", idx.alias("seasonal_index"))
 def last_touch_attribution(events: DataFrame, *,
                            conversion_type: str,
                            user_col: str = "user_id",
@@ -1200,9 +1140,8 @@ def circular_time_stats(events: DataFrame, *, ts_col: str = "ts",
     concentrated is it?". The linear mean of clock times is wrong
     across midnight (23:50 and 00:10 average to noon); the circular
     resultant handles the wrap: map each event to the unit-circle
-    angle ``θ = 2π·sec_of_day/86400`` and aggregate the vector sum.
-    Complements :func:`hourly_profile` (histogram shape) with the
-    standard two-number summary (resultant length, variance).
+    angle ``θ = 2π·sec_of_day/86400`` and aggregate the vector sum:
+    the standard two-number summary (resultant length, variance).
 
     Determinism: ``cos θ``/``sin θ`` are quantized PER ROW —
     ``floor(cos θ · scale)`` as exact BIGINT — then summed exactly,
@@ -1412,10 +1351,9 @@ def seasonality_strength(events: DataFrame, *, value_col: str,
     period (hour-of-day by default): the eta² of a one-way ANOVA on
     the phase bucket, ``eta2 = SSB / (SSB + SSW)`` ∈ [0, 1]. 0 ≈ no
     daily rhythm, → 1 ≈ the clock explains everything. The
-    decomposition screen you run before :func:`hourly_profile` (which
-    SHOWS the shape; this scores whether the shape matters) and
-    before trusting :func:`~kml2geojson_spark.relational.mann_kendall`
-    trend z's on strongly periodic series.
+    decomposition screen you run before trusting
+    :func:`~kml2geojson_spark.relational.mann_kendall` trend z's on
+    strongly periodic series.
 
     Phase = ``(epoch mod period) · n_phases div period`` — pure
     integer arithmetic, identical across engines. Everything

@@ -5253,46 +5253,6 @@ def sequence_gaps(df: DataFrame, *, id_col: str,
                     (F.col("_i") - F.col("_prev") - 1).alias("gap_len")))
 
 
-def weighted_quantile(df: DataFrame, *, group_col: str, value_col: str,
-                      weight_col: str, id_col: str,
-                      p_milli: int = 500) -> DataFrame:
-    """Exact weighted quantile per group — :func:`weighted_median`
-    generalized to any permille level p: the smallest value (ordered
-    by value, ties by id) whose cumulative milli-integerized weight
-    reaches ``p/1000`` of the group's total (``1000·cum ≥ p·tot``,
-    never a float aggregate; p = 500 reproduces the median exactly).
-    The weighted tail-threshold primitive (quantity-weighted P90
-    price, token-weighted quality cutoffs).
-
-    Milli-unit quantization, NULL/zero-mass filtering, and the
-    one-shuffle window shape are the :func:`weighted_median` contract
-    verbatim.
-
-    Output: (group_col, quantile DOUBLE, total_weight_milli BIGINT).
-    """
-    if not 1 <= int(p_milli) <= 999:
-        raise ValueError(f"p_milli must be in [1, 999], got {p_milli}")
-    wm = F.round(F.col(weight_col).cast("double") * 1000.0).cast("long")
-    d = (df.where(F.col(value_col).isNotNull()
-                  & F.col(weight_col).isNotNull()
-                  & (wm > 0) & F.col(id_col).isNotNull())
-         .select(F.col(group_col).alias("_g"),
-                 F.col(value_col).cast("double").alias("_v"),
-                 F.col(id_col).alias("_i"), wm.alias("_wm")))
-    wrun = (Window.partitionBy("_g")
-            .orderBy(F.col("_v").asc(), F.col("_i").asc())
-            .rowsBetween(Window.unboundedPreceding, 0))
-    q = (d.withColumn("_cum", F.sum("_wm").over(wrun))
-         .withColumn("_tot", F.sum("_wm").over(Window.partitionBy("_g")))
-         .where(F.col("_cum") * 1000 >= F.col("_tot") * int(p_milli)))
-    return (q.groupBy("_g")
-            .agg(F.min(F.struct("_v", "_i")).alias("_m"),
-                 F.max("_tot").alias("total_weight_milli"))
-            .select(F.col("_g").alias(group_col),
-                    F.col("_m._v").alias("quantile"),
-                    "total_weight_milli"))
-
-
 def sn_scale(df: DataFrame, *, value_col: str,
              order_cols: list[str] | str,
              group_cols: list[str]) -> DataFrame:

@@ -10,29 +10,14 @@ from .cells import (
     cell_res_col,
     cell_parent_col,
 )
-from .ops import (
+from .core import (
     encode_points,
-    cover_cells_rect,
     polygon_cover,
-    polygon_overlap_pairs,
-    haversine_m,
     pip_join,
     knn_join,
-    knn_join_adaptive,
     coverage_fractions,
-    within_distance_join,
-    compact_cells,
-    uncompact_cells,
     tile_assignments,
     tile_assignments_from_docs,
-    line_cover,
-    buffer_cells,
-    grid_cluster,
-    spatial_extent,
-    nearest_segment_join,
-    segment_intersection_join,
-    grid_moran,
-    convex_hull,
 )
 from .salted import salted_join, hot_keys
 
@@ -48,27 +33,12 @@ __all__ = [
     "cell_res_col",
     "cell_parent_col",
     "encode_points",
-    "cover_cells_rect",
     "polygon_cover",
-    "polygon_overlap_pairs",
-    "haversine_m",
     "pip_join",
     "knn_join",
-    "knn_join_adaptive",
     "coverage_fractions",
-    "within_distance_join",
-    "compact_cells",
-    "uncompact_cells",
     "tile_assignments",
     "tile_assignments_from_docs",
-    "line_cover",
-    "buffer_cells",
-    "grid_cluster",
-    "spatial_extent",
-    "nearest_segment_join",
-    "segment_intersection_join",
-    "grid_moran",
-    "convex_hull",
     "salted_join",
     "hot_keys",
 ]

@@ -15,9 +15,6 @@ Shapes provided:
   state). Exactly the batch ``tile_assignments`` cut down to the
   streaming-legal aggregate (no countDistinct in update mode — doc
   counts use approx or are finalized batch-side).
-- :func:`stream_pip_counts` — stream-static spatial join: streamed
-  points against a static polygon dimension, incremental per-polygon
-  counts.
 - :func:`stream_dedup_new_docs` — stateful ingestion dedup: first
   occurrence per exact content, later duplicates suppressed across
   micro-batches.
@@ -219,40 +216,6 @@ def stream_purchase_click_join(events: DataFrame, *,
     return (p.join(c, cond)
             .select(F.col("p_user").alias("user_id"), "purchase_id",
                     "click_id", gap.alias("gap_us")))
-
-
-def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
-                      res: int) -> DataFrame:
-    """Streaming spatial join: points parsed from a documents STREAM
-    against a STATIC polygon dimension → incremental per-polygon point
-    counts.
-
-    Stream-static shape: the streaming points equi-join
-    :func:`.spatial.pip_join`'s static cell cover (each cell carrying
-    its grid row's edges) on their cell id, and the exact ray cast is a
-    Column filter with batch's crossing rule (batch counts the same
-    crossings with an aggregation, which a stream would have to keep as
-    state) — all streaming-legal operators, so Spark maintains only the
-    final per-polygon running counts as state. Building the query runs
-    no Spark job. The batch counterpart
-    (``pip_join(...).groupBy(poly_id).count()``) equals the streamed
-    result once the stream drains (asserted in tests).
-    """
-    from .spatial import encode_points
-    from .spatial.ops import _pip_pairs
-
-    pts = extract_points(docs)
-    # deterministic row id (monotonically_increasing_id is illegal on
-    # streams): _pip_pairs emits (point_id, poly_id) matches; only the
-    # count per polygon is aggregated downstream
-    pts = pts.select(
-        F.xxhash64("doc_id", "feature_idx", "geom_idx").alias("point_id"),
-        "x", "y")
-    pts = encode_points(pts, res)
-    polys = polygons.select(F.col("poly_id"), F.col("rings"))
-    matched = _pip_pairs(pts, polys, res, stateless=True)
-    return matched.groupBy("poly_id").agg(
-        F.count(F.lit(1)).alias("n_points"))
 
 
 def stream_dedup_new_docs(docs: DataFrame, *,

@@ -545,8 +545,7 @@ def ngram_jaccard_pairs(documents: DataFrame, *, n: int = 3,
 
 def near_dedup_representatives(documents: DataFrame, *,
                                max_hamming: int = 3,
-                               bands: int = 4,
-                               components: str = "star") -> DataFrame:
+                               bands: int = 4) -> DataFrame:
     """The canonical training-corpus near-dedup pipeline in ONE call:
     exact duplicates (content-hash groups) ∪ SimHash near-duplicate
     pairs → connected components → representative = minimum doc_id per
@@ -562,22 +561,15 @@ def near_dedup_representatives(documents: DataFrame, *,
     its content-hash representative to that representative's component
     minimum — identical output to running the band join over the full
     corpus (an exact-dup group's members share a signature, so their
-    component is their representative's). ``components`` picks the
-    algorithm: the DEFAULT ``"star"`` is the diameter-independent
-    large-star/small-star method (O(log² n) rounds — a 100-TB corpus
-    with long transitive near-dup chains, e.g. boilerplate laddering,
-    converges in a dozen rounds where min-label propagation needs one
-    round per hop and would raise after ``max_iters``); ``"label"``
-    keeps min-label propagation for provably-shallow star clusters
-    (fewer, cheaper rounds there). Both yield the identical min-id
-    labeling. Oracle-checked end-to-end (driver q59: recursive-CTE
-    closure over the equivalent full edge set)."""
-    from .graph import connected_components, connected_components_star
+    component is their representative's). Components come from the
+    diameter-independent large-star/small-star method (O(log² n) rounds
+    — a 100-TB corpus with long transitive near-dup chains, e.g.
+    boilerplate laddering, converges in a dozen rounds where min-label
+    propagation needs one round per hop and would raise after
+    ``max_iters``). Oracle-checked end-to-end (driver q59:
+    recursive-CTE closure over the equivalent full edge set)."""
+    from .graph import connected_components_star
 
-    if components not in ("label", "star"):
-        raise ValueError(f"unknown components algorithm {components!r}")
-    cc = connected_components if components == "label" \
-        else connected_components_star
     docs = documents.select("doc_id", "text")
     h = docs.select("doc_id", "text",
                     content_hash_col(F.col("text")).alias("_h"))
@@ -587,7 +579,7 @@ def near_dedup_representatives(documents: DataFrame, *,
                 .select("doc_id", "text"))
     near = simhash_near_pairs(rep_docs, max_hamming=max_hamming,
                               bands=bands).select("doc_a", "doc_b")
-    rep_label = cc(near).select(
+    rep_label = connected_components_star(near).select(
         F.col("node").alias("_rep"), F.col("component").alias("_label"))
     return (h.select("doc_id", "_h")
             .join(gmin, "_h")

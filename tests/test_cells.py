@@ -230,7 +230,7 @@ def test_cell_kring_col_bit_exact_every_res(ansi_spark, radius):
 
 
 def test_explode_kring_bit_exact_every_res(ansi_spark):
-    from kml2geojson_spark.spatial.ops import explode_kring
+    from kml2geojson_spark.spatial.core import explode_kring
 
     df = _points_df(ansi_spark, RING_LON, RING_LAT)
     parts = [explode_kring(df, F.col("x"), F.col("y"), r, 1)

@@ -7,7 +7,7 @@ import math
 
 import numpy as np
 
-from kml2geojson_spark.spatial import grid_moran
+from kml2geojson_spark.spatial.ops import grid_moran
 
 
 def _ref(pts, res):

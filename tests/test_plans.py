@@ -298,7 +298,7 @@ def test_bloom_probe_broadcasts_registers_and_stays_jvm(spark):
 
 def test_uncompact_cells_stays_jvm(spark):
     """Expansion is sequence+explode bit math — zero Python nodes."""
-    from kml2geojson_spark.spatial import uncompact_cells
+    from kml2geojson_spark.spatial.ops import uncompact_cells
     from kml2geojson_spark.spatial.cells import cell_encode_grid_np
     cells = spark.createDataFrame(
         [(int(c),) for c in cell_encode_grid_np([0, 1], [0, 1], 3)],
@@ -312,7 +312,7 @@ def test_line_cover_pure_column_no_python(spark, tmp_path):
     """The supercover kernel must stay JVM-side: two Generate
     (sequence explode) stages, zero Python eval nodes — at 100 TB this
     path runs entirely inside codegen + one distinct shuffle."""
-    from kml2geojson_spark.spatial import line_cover
+    from kml2geojson_spark.spatial.ops import line_cover
     path = str(tmp_path / "lines")
     spark.range(50).selectExpr(
         "id AS line_id",
@@ -329,7 +329,7 @@ def test_line_cover_pure_column_no_python(spark, tmp_path):
 
 
 def test_grid_cluster_no_python_no_nested_loop(spark):
-    from kml2geojson_spark.spatial import grid_cluster
+    from kml2geojson_spark.spatial.ops import grid_cluster
     import numpy as np
     rng = np.random.RandomState(2)
     pts = [(float(x), float(y)) for x, y in
@@ -359,7 +359,7 @@ def test_cms_probe_broadcasts_registers(spark):
 
 
 def test_spatial_extent_single_shuffle_map_side_combine(spark, tmp_path):
-    from kml2geojson_spark.spatial import spatial_extent
+    from kml2geojson_spark.spatial.ops import spatial_extent
     path = str(tmp_path / "pts")
     spark.range(1000).selectExpr(
         "id % 7 AS g", "CAST(id % 360 AS DOUBLE) - 180.0 AS x",
@@ -588,7 +588,8 @@ def test_knn_join_and_dwithin_fully_jvm(spark):
     hash equi-join on the cell, never a nested loop."""
     import numpy as np
     import pandas as pd
-    from kml2geojson_spark.spatial.ops import knn_join, within_distance_join
+    from kml2geojson_spark.spatial import knn_join
+    from kml2geojson_spark.spatial.ops import within_distance_join
     pts = spark.createDataFrame(pd.DataFrame({
         "point_id": np.arange(200, dtype=np.int64),
         "x": np.linspace(-170, 170, 200), "y": np.linspace(-80, 80, 200)}))
@@ -644,7 +645,7 @@ def test_quantize_embeddings_no_exchange_no_python(spark):
 def test_buffer_cells_single_distinct_exchange(spark):
     """Grid dilation: the offset explode is narrow; the only shuffle
     is the (id, cell) distinct hash aggregate (partial+final)."""
-    from kml2geojson_spark.spatial import buffer_cells
+    from kml2geojson_spark.spatial.ops import buffer_cells
     from kml2geojson_spark.spatial.cells import cell_encode_np
     c = int(cell_encode_np([10.0], [20.0], 6)[0])
     df = spark.createDataFrame([(1, c)], "line_id long, cell_id long")
@@ -659,7 +660,7 @@ def test_convex_hull_partial_then_grouped(spark):
     """Two-level hull: one narrow MapInPandas (partial hulls) before
     the single group Exchange, one FlatMapGroupsInPandas after — the
     shuffle moves hull-sized rows only."""
-    from kml2geojson_spark.spatial import convex_hull
+    from kml2geojson_spark.spatial.ops import convex_hull
     df = spark.createDataFrame([(1, 0, 0), (1, 2, 2)],
                                "group_id long, x long, y long")
     plan = _plan(convex_hull(df))

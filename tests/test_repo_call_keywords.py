@@ -144,7 +144,7 @@ def test_stale_keywords_are_reported():
         "polygon_cover(df, 8, min_fraction=0.5, **extra)\n"
         "salted_join(p, b, 'k', probe_hash_cols=['x'])\n"
         "graph.connected_components_star(e, max_iters=5)\n"
-        "k2gs.spatial.grid_cluster(pts, 7, components='label')\n"
+        "k2gs.spatial.ops.grid_cluster(pts, 7, components='label')\n"
         "polygon_cover(df, 8).where(strategy='x')\n"
         "geofence_dwell(fixes, polys, 6, any_pip_option=1)\n"))
     assert n == 7

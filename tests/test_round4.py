@@ -287,7 +287,7 @@ def test_merge_intervals_single_exchange_plan(spark):
 
 def test_explode_kring_matches_np(spark):
     from kml2geojson_spark.spatial.cells import cell_encode_np, cell_kring_np
-    from kml2geojson_spark.spatial.ops import explode_kring
+    from kml2geojson_spark.spatial.core import explode_kring
     rng = np.random.default_rng(11)
     pts = pd.DataFrame({
         "qid": np.arange(30),
@@ -312,7 +312,7 @@ def test_explode_kring_matches_np(spark):
 
 
 def test_explode_kring_pure_column_plan(spark):
-    from kml2geojson_spark.spatial.ops import explode_kring
+    from kml2geojson_spark.spatial.core import explode_kring
     q = spark.createDataFrame([(1, 10.0, 20.0)],
                               "query_id long, x double, y double")
     ring = explode_kring(q, F.col("x"), F.col("y"), 6, 2)

@@ -156,7 +156,7 @@ def test_buffer_cells_matches_kring_brute_force(spark):
     import numpy as np
     from pyspark.sql import functions as F
     from kml2geojson_spark.spatial.cells import cell_encode_np, cell_kring_np
-    from kml2geojson_spark.spatial import buffer_cells
+    from kml2geojson_spark.spatial.ops import buffer_cells
     rng = np.random.default_rng(5)
     res, radius = 5, 2
     lon = rng.uniform(-180, 180, 300)
@@ -177,7 +177,7 @@ def test_buffer_cells_radius_zero_identity_and_guards(spark):
     from pyspark.sql.utils import SparkUpgradeException
     from py4j.protocol import Py4JJavaError
     from kml2geojson_spark.spatial.cells import cell_encode_np
-    from kml2geojson_spark.spatial import buffer_cells
+    from kml2geojson_spark.spatial.ops import buffer_cells
     c = int(cell_encode_np([10.0], [20.0], 6)[0])
     df = spark.createDataFrame([(1, c), (1, c), (2, c)],
                                "line_id long, cell_id long")
@@ -215,7 +215,7 @@ def _in_conv_of_others(p, others):
 
 def test_convex_hull_brute_force_and_partition_invariance(spark):
     import random as _random
-    from kml2geojson_spark.spatial import convex_hull
+    from kml2geojson_spark.spatial.ops import convex_hull
     rng = _random.Random(17)
     rows = [(g, rng.randrange(-50, 51), rng.randrange(-50, 51))
             for g in range(5) for _ in range(25)]
@@ -240,7 +240,7 @@ def test_convex_hull_brute_force_and_partition_invariance(spark):
 
 
 def test_convex_hull_degenerate_shapes(spark):
-    from kml2geojson_spark.spatial import convex_hull
+    from kml2geojson_spark.spatial.ops import convex_hull
     rows = ([(1, 0, 0)]                       # single point
             + [(2, 5, 5), (2, 5, 5)]          # duplicated point
             + [(3, i, 2 * i) for i in range(5)]   # all collinear
@@ -258,7 +258,7 @@ def test_convex_hull_degenerate_shapes(spark):
 
 def test_convex_hull_guards(spark):
     import pytest
-    from kml2geojson_spark.spatial import convex_hull
+    from kml2geojson_spark.spatial.ops import convex_hull
     df = spark.createDataFrame([(1, 0.5, 1.0)],
                                "group_id long, x double, y double")
     with pytest.raises(ValueError):

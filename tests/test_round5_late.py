@@ -197,7 +197,7 @@ def _diamond(spark, poly_id, cx, cy, r):
 
 
 def test_union_cover_stats_single_polygon_is_its_own_union(spark):
-    from kml2geojson_spark.spatial.ops import polygon_cover
+    from kml2geojson_spark.spatial import polygon_cover
     poly = _diamond(spark, 1, 10.0, 20.0, 5.0)
     (u,) = union_cover_stats(poly, 6).collect()
     cov = polygon_cover(poly, 6).collect()

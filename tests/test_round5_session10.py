@@ -144,7 +144,8 @@ def test_idw_matches_brute(spark):
 
 
 def test_idw_gap_cells_never_sampled(spark):
-    from kml2geojson_spark.spatial.ops import encode_points, idw_interpolate
+    from kml2geojson_spark.spatial import encode_points
+    from kml2geojson_spark.spatial.ops import idw_interpolate
 
     rng = np.random.default_rng(5)
     pts = [(float(rng.uniform(-10, 10)), float(rng.uniform(-10, 10)), 1)

@@ -1123,52 +1123,6 @@ def test_quadkey_prefix_is_parent(spark):
 
 
 # ---------------------------------------------------------------------------
-# weighted_quantile
-# ---------------------------------------------------------------------------
-
-def test_weighted_quantile_brute_and_median_parity(spark):
-    from kml2geojson_spark.relational import (weighted_median,
-                                              weighted_quantile)
-
-    rng = np.random.default_rng(79)
-    rows = []
-    data = {}
-    for g in range(4):
-        n = int(rng.integers(3, 25))
-        vs = [(float(rng.integers(0, 100)),
-               float(rng.integers(1, 10)) / 2.0, i)
-              for i in range(n)]
-        data[f"g{g}"] = vs
-        rows += [(f"g{g}", v, w, i) for v, w, i in vs]
-    df = spark.createDataFrame(rows,
-                               "g string, v double, w double, i long")
-
-    def brute(vs, p):
-        items = sorted((v, i, round(w * 1000)) for v, w, i in vs)
-        tot = sum(m for _, _, m in items)
-        cum = 0
-        for v, _, m in items:
-            cum += m
-            if cum * 1000 >= p * tot:
-                return v
-        return items[-1][0]
-
-    for p in (250, 500, 900):
-        got = {r.g: r.quantile for r in weighted_quantile(
-            df, group_col="g", value_col="v", weight_col="w",
-            id_col="i", p_milli=p).collect()}
-        want = {g: brute(vs, p) for g, vs in data.items()}
-        assert got == want
-    med = {r.g: r.median for r in weighted_median(
-        df, group_col="g", value_col="v", weight_col="w",
-        id_col="i").collect()}
-    q50 = {r.g: r.quantile for r in weighted_quantile(
-        df, group_col="g", value_col="v", weight_col="w",
-        id_col="i", p_milli=500).collect()}
-    assert med == q50
-
-
-# ---------------------------------------------------------------------------
 # sn_scale
 # ---------------------------------------------------------------------------
 

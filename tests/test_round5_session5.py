@@ -594,35 +594,6 @@ def test_mantel_haenszel_zero_denominator(spark):
     assert r["den_milli"] == 0 and r["or_mh"] is None
 
 
-# --------------------------------------------------------- hourly profile
-
-
-def test_hourly_profile_hand_case(spark):
-    from kml2geojson_spark.eventops import hourly_profile
-    hour_us = 3_600_000_000
-    day_us = 24 * hour_us
-    # 1970-01-01 is a Thursday -> dow 3 under 0=Monday
-    rows = [("g", 0 * hour_us, 10),          # thu 00
-            ("g", 0 * hour_us + 100, 20),    # thu 00 (same bucket)
-            ("g", 5 * hour_us, 30),          # thu 05
-            ("g", 4 * day_us, 40)]           # monday 00
-    df = spark.createDataFrame(rows, "grp string, tus long, v long")
-    out = {(r["dow"], r["hour"]): r for r in
-           hourly_profile(df, ts_micros_col="tus", value_col="v",
-                          group_cols=["grp"]).collect()}
-    assert set(out) == {(3, 0), (3, 5), (0, 0)}
-    b = out[(3, 0)]
-    assert b["n_events"] == 2 and b["value_sum"] == 30
-    # index = (30*4)/(2*100) = 0.6
-    assert abs(b["seasonal_index"] - 0.6) < 1e-15
-    assert abs(out[(0, 0)]["seasonal_index"] - (40 * 4) / 100) < 1e-15
-    dff = spark.createDataFrame([("g", 1.0, 2)],
-                                "grp string, tus double, v long")
-    with pytest.raises(ValueError):
-        hourly_profile(dff, ts_micros_col="tus", value_col="v",
-                       group_cols=["grp"])
-
-
 # ----------------------------------------------------- degree assortativity
 
 

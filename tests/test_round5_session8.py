@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from kml2geojson_spark.eventops import circular_time_stats
 from kml2geojson_spark.relational import mrr_at_k
-from kml2geojson_spark.spatial import polygon_overlap_pairs
-from kml2geojson_spark.spatial.ops import _clip_edge_many, _shoelace_many
+from kml2geojson_spark.spatial.core import _shoelace_many
+from kml2geojson_spark.spatial.ops import _clip_edge_many, polygon_overlap_pairs
 from kml2geojson_spark.textops import script_mix_stats
 
 
@@ -355,7 +355,7 @@ def test_hits_deterministic_integers(spark):
 
 
 def test_haversine_known_distances(spark):
-    from kml2geojson_spark.spatial import haversine_m
+    from kml2geojson_spark.spatial.ops import haversine_m
     df = spark.createDataFrame(
         [(1, 0.0, 0.0, 0.0, 1.0),    # 1 deg along the equator
          (2, 0.0, 0.0, 90.0, 0.0),   # equator to pole = quarter circle
@@ -374,7 +374,7 @@ def test_haversine_known_distances(spark):
 
 
 def test_haversine_pure_column_plan(spark):
-    from kml2geojson_spark.spatial import haversine_m
+    from kml2geojson_spark.spatial.ops import haversine_m
     df = spark.createDataFrame([(0.0, 0.0)], ["lat", "lon"])
     plan = _plan(df.select(haversine_m(
         F.col("lat"), F.col("lon"), F.lit(1.0), F.lit(1.0)).alias("d")))

@@ -249,7 +249,8 @@ def test_cell_smooth_matches_duckdb_oracle(spark):
 
 def test_pip_anti_join_is_exact_complement(spark):
     import __spark_entry__ as em
-    from kml2geojson_spark.spatial.ops import pip_join, pip_anti_join
+    from kml2geojson_spark.spatial import pip_join
+    from kml2geojson_spark.spatial.ops import pip_anti_join
     pts = em._customer_points(spark, SF)
     polys = em._region_polygons(spark, SF) if hasattr(em, "_region_polygons") \
         else None

@@ -8,7 +8,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
-from kml2geojson_spark.spatial import segment_intersection_join
+from kml2geojson_spark.spatial.ops import segment_intersection_join
 
 
 def _plan(df) -> str:

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kml2geojson_spark.spatial import (
-    cover_cells_rect,
     encode_points,
     knn_join,
     pip_join,
@@ -18,7 +17,8 @@ from kml2geojson_spark.spatial import (
     salted_join,
     hot_keys,
 )
-from kml2geojson_spark.spatial.ops import knn_exact, _raycast_np, _rings_to_np
+from kml2geojson_spark.spatial.core import _raycast_np, _rings_to_np
+from kml2geojson_spark.spatial.ops import cover_cells_rect, knn_exact
 
 from .conftest import spark_jobs
 
@@ -398,9 +398,9 @@ def test_polygon_cover_planetary_polygon(spark):
     clip's chunk cap: ``_cover_batch`` runs it in many chunks and its
     fraction total matches the shoelace area; through Spark,
     ``polygon_cover`` equals the per-polygon reference."""
-    from kml2geojson_spark.spatial.ops import (_COVER_BATCH_CHUNK_CELLS_X_VERTS,
-                                               _cover_batch, _cover_one,
-                                               polygon_cover)
+    from kml2geojson_spark.spatial.core import (_COVER_BATCH_CHUNK_CELLS_X_VERTS,
+                                                _cover_batch, _cover_one,
+                                                polygon_cover)
     # diamond spanning most of the globe; at res 11 the bbox is
     # ~1800 × 1600 cells × 5 verts >> the batched chunk cap
     big = np.array([[0.0, -70.0], [160.0, 0.0], [0.0, 70.0],
@@ -515,9 +515,8 @@ def test_clip_kernel_vectorized_bitexact_vs_scalar():
     BIT-identical to the scalar Sutherland–Hodgman reference for
     arbitrary (non-convex) rings — same emission order, intersection
     arithmetic, fold order."""
-    from kml2geojson_spark.spatial.ops import (_bbox_grid,
-                                               _clip_area_rect,
-                                               _ring_cell_areas)
+    from kml2geojson_spark.spatial.core import (_bbox_grid, _clip_area_rect,
+                                                _ring_cell_areas)
     rng = np.random.default_rng(123)
     for trial in range(20):
         m = int(rng.integers(3, 40))
@@ -636,29 +635,18 @@ def test_pip_join_modes_agree_on_malformed_polygons(spark):
     assert {pid for _, pid in got} == {0, 1, 2}
 
 
-def test_pip_join_and_stream_pip_counts_build_without_a_job(spark, tmp_path):
-    """Building pip_join's plan or stream_pip_counts' query starts no
-    Spark job: nothing probes the polygon side's size. The one plan is
-    the only ``rings_distribution`` accepted."""
-    import kml2geojson_spark as k2gs
-    from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
+def test_pip_join_builds_without_a_job(spark):
+    """Building pip_join's plan starts no Spark job: nothing probes the
+    polygon side's size. The one plan is the only ``rings_distribution``
+    accepted."""
     pts = _points_pdf()
     polys = _polygons()
     points_df = spark.createDataFrame(pts)
     poly_df = spark.createDataFrame(
         polys, "poly_id long, rings array<array<array<double>>>")
-    src = str(tmp_path / "docs")
-    kml = ('<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
-           '<Placemark><Point><coordinates>1.0,1.0</coordinates></Point>'
-           '</Placemark></Document></kml>')
-    spark.createDataFrame([("d0", k2gs.pack_spans(kml))],
-                          k2gs.spans_schema()).write.parquet(src)
-    stream = stream_documents(spark, src)
     with spark_jobs(spark) as built:
         joined = pip_join(points_df, poly_df, 6)
-        streamed = stream_pip_counts(stream, poly_df, 6)
     assert built == []
-    assert streamed.isStreaming
     # the job group does see the jobs the plan runs once it is executed
     with spark_jobs(spark) as ran:
         got = {(r["point_id"], r["poly_id"]) for r in joined.collect()}
@@ -691,7 +679,7 @@ def test_compact_uncompact_roundtrip(spark):
     """compact→uncompact restores the original uniform-res set exactly;
     a complete quad collapses all the way; finer-than-res uncompact
     input is refused."""
-    from kml2geojson_spark.spatial import compact_cells, uncompact_cells
+    from kml2geojson_spark.spatial.ops import compact_cells, uncompact_cells
     from kml2geojson_spark.spatial.cells import (cell_encode_grid_np,
                                                  cell_res_col)
 
@@ -718,7 +706,7 @@ def test_compact_uncompact_roundtrip(spark):
 def test_uncompact_refuses_finer_input(spark):
     """Validation is LAZY (raise_error in the plan — no extra
     validation scan per call); the error surfaces at action time."""
-    from kml2geojson_spark.spatial import uncompact_cells
+    from kml2geojson_spark.spatial.ops import uncompact_cells
     from kml2geojson_spark.spatial.cells import cell_encode_grid_np
     fine = int(cell_encode_grid_np([3], [3], 6)[0])
     df = spark.createDataFrame([(fine,)], "cell_id long")
@@ -732,7 +720,7 @@ def test_compact_cells_parent_child_mix_no_false_merge(spark):
     complete quad out of duplicated promotions: P1's children collapse
     into the pre-existing P1 (deduplicated), and the 3-of-4 quad
     {P1,P2,P3} must NOT merge to the grandparent."""
-    from kml2geojson_spark.spatial import compact_cells
+    from kml2geojson_spark.spatial.ops import compact_cells
     from kml2geojson_spark.spatial.cells import cell_encode_grid_np
     p = cell_encode_grid_np([0, 0, 1], [0, 1, 0], 2).tolist()  # P1,P2,P3
     children = cell_encode_grid_np([0, 0, 1, 1], [0, 1, 0, 1], 3).tolist()
@@ -746,7 +734,7 @@ def test_compact_cells_coarse_passthrough(spark):
     """Cells already coarser than min_res pass through unchanged (no
     error, no modification) — same behavior alone or mixed with finer
     cells."""
-    from kml2geojson_spark.spatial import compact_cells
+    from kml2geojson_spark.spatial.ops import compact_cells
     from kml2geojson_spark.spatial.cells import cell_encode_grid_np
     coarse = int(cell_encode_grid_np([1], [1], 1)[0])
     df = spark.createDataFrame([(coarse,)], "cell_id long")
@@ -758,7 +746,7 @@ def test_compact_cells_coarse_passthrough(spark):
 def test_compact_cells_idempotent_and_no_false_merge(spark):
     """An incomplete quad (3 of 4 siblings) must NOT collapse, and
     compacting an already-compact set is a no-op."""
-    from kml2geojson_spark.spatial import compact_cells
+    from kml2geojson_spark.spatial.ops import compact_cells
     from kml2geojson_spark.spatial.cells import cell_encode_grid_np
     trio = cell_encode_grid_np([0, 0, 1], [0, 1, 0], 3).tolist()
     df = spark.createDataFrame([(c,) for c in trio], "cell_id long")
@@ -791,7 +779,7 @@ def _brute_line_cells(coords, res, samples=20001):
 
 
 def test_line_cover_superset_of_dense_sampling(spark):
-    from kml2geojson_spark.spatial import line_cover
+    from kml2geojson_spark.spatial.ops import line_cover
     from kml2geojson_spark.spatial.cells import cell_bounds_np
 
     rng = np.random.RandomState(11)
@@ -831,7 +819,7 @@ def test_line_cover_superset_of_dense_sampling(spark):
 
 
 def test_line_cover_degenerate_and_axis_aligned(spark):
-    from kml2geojson_spark.spatial import line_cover
+    from kml2geojson_spark.spatial.ops import line_cover
     from kml2geojson_spark.spatial.cells import cell_encode_np
 
     res = 6
@@ -866,7 +854,8 @@ def test_line_cover_degenerate_and_axis_aligned(spark):
 def test_line_cover_equals_polygon_edges_on_grid(spark):
     """Supercover of a diamond's edge cycle must hit every boundary
     cell the polygon cover clips with fraction < 1 (edge cells)."""
-    from kml2geojson_spark.spatial import line_cover, polygon_cover
+    from kml2geojson_spark.spatial.ops import line_cover
+    from kml2geojson_spark.spatial import polygon_cover
 
     ring = [[20.0, 10.0], [28.0, 18.0], [20.0, 26.0],
             [12.0, 18.0], [20.0, 10.0]]
@@ -932,7 +921,7 @@ def _brute_grid_cluster(pts, res, min_count=1, diagonal=True):
 
 
 def test_grid_cluster_matches_union_find(spark):
-    from kml2geojson_spark.spatial import grid_cluster
+    from kml2geojson_spark.spatial.ops import grid_cluster
     rng = np.random.RandomState(3)
     pts = [(float(x), float(y)) for x, y in
            zip(rng.uniform(-175, 175, 400), rng.uniform(-85, 85, 400))]
@@ -950,7 +939,7 @@ def test_grid_cluster_matches_union_find(spark):
 def test_grid_cluster_antimeridian_wrap(spark):
     """Two blobs hugging x = ±180 at the same latitude must merge into
     ONE cluster through the antimeridian (x wraps, like the k-ring)."""
-    from kml2geojson_spark.spatial import grid_cluster
+    from kml2geojson_spark.spatial.ops import grid_cluster
     pts = [(-179.9, 10.0), (179.9, 10.0)]
     df = spark.createDataFrame(pts, "x double, y double")
     out = grid_cluster(df, 4).collect()
@@ -961,7 +950,7 @@ def test_grid_cluster_antimeridian_wrap(spark):
 def test_grid_cluster_pole_rows_do_not_wrap(spark):
     """y does NOT wrap: a cell on the north edge and one on the south
     edge in the same column stay separate clusters."""
-    from kml2geojson_spark.spatial import grid_cluster
+    from kml2geojson_spark.spatial.ops import grid_cluster
     pts = [(10.0, 89.9), (10.0, -89.9)]
     df = spark.createDataFrame(pts, "x double, y double")
     out = grid_cluster(df, 4).collect()
@@ -974,7 +963,7 @@ def test_grid_cluster_pole_rows_do_not_wrap(spark):
 
 
 def test_spatial_extent_exact_and_partition_invariant(spark):
-    from kml2geojson_spark.spatial import spatial_extent
+    from kml2geojson_spark.spatial.ops import spatial_extent
     rng = np.random.RandomState(5)
     rows = [(int(i % 4), float(x), float(y)) for i, (x, y) in
             enumerate(zip(rng.uniform(-170, 170, 500),
@@ -1175,7 +1164,7 @@ def _brute_nearest_segment(points, segs):
 
 
 def test_nearest_segment_matches_brute_force(spark):
-    from kml2geojson_spark.spatial import nearest_segment_join
+    from kml2geojson_spark.spatial.ops import nearest_segment_join
 
     rng = np.random.RandomState(29)
     points = [(i, float(x), float(y)) for i, (x, y) in enumerate(
@@ -1204,7 +1193,7 @@ def test_nearest_segment_matches_brute_force(spark):
 
 
 def test_nearest_segment_edge_cases(spark):
-    from kml2geojson_spark.spatial import nearest_segment_join
+    from kml2geojson_spark.spatial.ops import nearest_segment_join
 
     pts = spark.createDataFrame(
         [(0, 5.0, 1.0),    # beyond the right endpoint → t clamps to 1
@@ -1231,7 +1220,7 @@ def test_nearest_segment_edge_cases(spark):
 
 
 def test_nearest_segment_ring_bound_drops_far_points(spark):
-    from kml2geojson_spark.spatial import nearest_segment_join
+    from kml2geojson_spark.spatial.ops import nearest_segment_join
 
     # res 5 → cell 11.25×5.625; radius 1 → 5.625° guarantee. The far
     # point (90° away) has no segment in its 1-ring → dropped.
@@ -1250,7 +1239,7 @@ def test_nearest_segment_plan_shape(spark):
     """Candidates are equi-joins (cell, then seg key) + ONE final
     hash-aggregate arg-min: no cartesian/BNL, no window sort, no
     Python eval node."""
-    from kml2geojson_spark.spatial import nearest_segment_join
+    from kml2geojson_spark.spatial.ops import nearest_segment_join
 
     pts = spark.range(50).selectExpr(
         "id AS point_id", "CAST(id % 10 AS DOUBLE) AS x",

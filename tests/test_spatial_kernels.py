@@ -15,14 +15,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-import kml2geojson_spark as k2gs
-from kml2geojson_spark.spatial import ops, pip_join, polygon_cover
+from kml2geojson_spark.spatial import core, pip_join, polygon_cover
 from kml2geojson_spark.spatial.cells import cell_decode_np
-from kml2geojson_spark.spatial.ops import (_arrow_rings, _clean_rings_col,
-                                           _clip_area_rect, _cover_batch,
-                                           _cover_one, _edges_col,
-                                           _raycast_col, _raycast_np,
-                                           _rings_to_np)
+from kml2geojson_spark.spatial.core import (_arrow_rings, _clean_rings_col,
+                                            _clip_area_rect, _cover_batch,
+                                            _cover_one, _edges_col,
+                                            _raycast_np, _rings_to_np)
 
 from .test_spatial import _pip_oracle
 
@@ -82,14 +80,14 @@ def test_cover_batch_bitexact_vs_per_polygon_and_scalar(monkeypatch, res,
                                                         min_fraction):
     polys = _cover_corpus()
     runs = []
-    real_runs = ops._runs
+    real_runs = core._runs
 
     def counting_runs(*args):
         out = list(real_runs(*args))
         runs.append(len(out))
         return iter(out)
 
-    monkeypatch.setattr(ops, "_runs", counting_runs)
+    monkeypatch.setattr(core, "_runs", counting_runs)
     rows, cells, fracs = _cover_batch(
         *_arrow_rings(pa.array(polys, RINGS_TYPE)), res, min_fraction)
     if res == 8:
@@ -205,46 +203,39 @@ def ansi(spark):
     spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_raycast_col_equals_numpy_on_edge_cases(ansi):
-    """Every (point, polygon) verdict of the Column ray cast, as a
-    higher-order aggregate and as an exploded crossing count, equals
-    _raycast_np's, over all pairs (no cell pruning), under ANSI mode:
-    points on vertices, on horizontal and vertical edges, on cell and
-    bbox boundaries, inside holes, and against non-finite vertices."""
+def test_crossing_count_equals_numpy_on_edge_cases(ansi):
+    """Every (point, polygon) verdict of the Column ray cast, as
+    pip_join runs it (edges exploded into rows, _crossing rows counted,
+    odd counts inside), equals _raycast_np's, over all pairs (no cell
+    pruning), under ANSI mode: points on vertices, on horizontal and
+    vertical edges, on cell and bbox boundaries, inside holes, and
+    against non-finite vertices."""
     spark = ansi
     pts = _pip_points()
     polys = PIP_POLYS + NONFINITE_POLYS
     edges = (spark.createDataFrame(polys, POLY_SCHEMA)
              .select("poly_id", _edges_col(_clean_rings_col(F.col("rings")))
                      .alias("edges")))
-    got = {(r["point_id"], r["poly_id"]): r["inside"] for r in
-           spark.createDataFrame(pts).crossJoin(edges)
-           .select("point_id", "poly_id",
-                   _raycast_col(F.col("x"), F.col("y"), F.col("edges"))
-                   .alias("inside")).collect()}
-    exp = {}
-    for pid, rings in polys:
-        inside = _raycast_np(pts["x"].to_numpy(), pts["y"].to_numpy(),
-                             _rings_to_np(rings))
-        exp.update({(int(p), pid): bool(v)
-                    for p, v in zip(pts["point_id"], inside)})
-    assert got == exp
-    assert sum(exp.values()) > 100
-    # the same rule outside a higher-order function, as pip_join's batch
-    # shapes run it: edges exploded into rows, crossings counted
     rows = (spark.createDataFrame(pts).crossJoin(edges)
             .select("point_id", "poly_id", "x", "y",
                     F.explode("edges").alias("e"))
-            .where(ops._crossing(F.col("x"), F.col("y"), F.col("e")))
+            .where(core._crossing(F.col("x"), F.col("y"), F.col("e")))
             .groupBy("point_id", "poly_id").count().collect())
-    assert {(r["point_id"], r["poly_id"]) for r in rows
-            if r["count"] % 2} == {k for k, v in exp.items() if v}
+    inside = {(r["point_id"], r["poly_id"]) for r in rows if r["count"] % 2}
+    exp = {}
+    for pid, rings in polys:
+        verdict = _raycast_np(pts["x"].to_numpy(), pts["y"].to_numpy(),
+                              _rings_to_np(rings))
+        exp.update({(int(p), pid): bool(v)
+                    for p, v in zip(pts["point_id"], verdict)})
+    assert inside <= exp.keys()
+    assert {pair: pair in inside for pair in exp} == exp
+    assert sum(exp.values()) > 100
 
 
-def test_pip_join_shapes_and_stream_agree_on_edge_cases(ansi, tmp_path):
-    """pip_join, plain and salted, and the streaming stream_pip_counts
-    all give _pip_oracle's pairs under ANSI mode."""
-    from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
+def test_pip_join_shapes_and_stream_agree_on_edge_cases(ansi):
+    """pip_join, plain and salted, gives _pip_oracle's pairs under ANSI
+    mode."""
     spark = ansi
     pts = _pip_points()
     exp = _pip_oracle(pts, PIP_POLYS)
@@ -254,26 +245,6 @@ def test_pip_join_shapes_and_stream_agree_on_edge_cases(ansi, tmp_path):
         got = {(r["point_id"], r["poly_id"]) for r in
                pip_join(points, polys, PIP_RES, salt=salt).collect()}
         assert got == exp, salt
-
-    placemarks = "".join(
-        f"<Placemark><Point><coordinates>{x!r},{y!r}</coordinates></Point>"
-        f"</Placemark>" for x, y in zip(pts["x"], pts["y"]))
-    kml = ('<?xml version="1.0" encoding="UTF-8"?>'
-           '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
-           f"{placemarks}</Document></kml>")
-    src = str(tmp_path / "pip_edge_docs")
-    spark.createDataFrame([("edge", k2gs.pack_spans(kml))],
-                          k2gs.spans_schema()).write.parquet(src)
-    q = (stream_pip_counts(stream_documents(spark, src), polys, PIP_RES)
-         .writeStream.format("memory").queryName("pip_edge_mem")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["poly_id"]: r["n_points"]
-           for r in spark.sql("SELECT * FROM pip_edge_mem").collect()}
-    counts = pd.Series([pid for _, pid in exp]).value_counts()
-    assert got == {int(k): int(v) for k, v in counts.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -330,8 +301,8 @@ def test_pip_bands_keep_exactly_each_rows_edges(spark):
     rows."""
     polys = _band_polys()
     got = {}
-    for r in ops._pip_bands(spark.createDataFrame(polys, POLY_SCHEMA),
-                            BAND_RES).collect():
+    for r in core._pip_bands(spark.createDataFrame(polys, POLY_SCHEMA),
+                             BAND_RES).collect():
         x0, x1, edges = got.setdefault((r["poly_id"], r["_iy"]),
                                        (r["_x0"], r["_x1"], []))
         assert (x0, x1) == (r["_x0"], r["_x1"])
@@ -414,19 +385,17 @@ def _row_boundary_polys():
     ]
 
 
-def test_pip_horizontal_edges_on_row_boundaries(spark, pip_plan, tmp_path):
+def test_pip_horizontal_edges_on_row_boundaries(spark, pip_plan):
     """_pip_bands drops horizontal edges, which cross no ray. With such
     edges exactly on grid-row boundaries, points exactly at their height
     (and between) and on column boundaries, and polygons with
-    non-finite vertices, pip_join in both physical plans and
-    stream_pip_counts still give _pip_oracle's pairs among the points
-    of each polygon's bbox cells."""
-    from kml2geojson_spark.streaming import stream_documents, stream_pip_counts
-    name, ready = pip_plan
+    non-finite vertices, pip_join in both physical plans still gives
+    _pip_oracle's pairs among the points of each polygon's bbox cells."""
+    _, ready = pip_plan
     polys = _row_boundary_polys() + NONFINITE_POLYS
     poly_df = spark.createDataFrame(polys, POLY_SCHEMA)
     assert all(r["_e"]["y1"] != r["_e"]["y2"]
-               for r in ops._pip_bands(poly_df, PIP_RES).collect())
+               for r in core._pip_bands(poly_df, PIP_RES).collect())
     xs = np.arange(-45.0, 75.0, 2.5)
     ys = np.array([-11.25, -5.625, 0.0, 5.625, 11.25, 16.875, 22.5, 33.75])
     gx, gy = np.meshgrid(xs, ys)
@@ -438,7 +407,7 @@ def test_pip_horizontal_edges_on_row_boundaries(spark, pip_plan, tmp_path):
     col = np.clip(np.floor((pts["x"].to_numpy() + 180.0) / 360.0 * n), 0, n - 1)
     row = np.clip(np.floor((pts["y"].to_numpy() + 90.0) / 180.0 * n), 0, n - 1)
     bbox = {r["poly_id"]: (r["_x0"], r["_x1"], r["_y0"], r["_y1"])
-            for r in ops._pip_polys(poly_df, PIP_RES).collect()}
+            for r in core._pip_polys(poly_df, PIP_RES).collect()}
     exp = {(p, q) for p, q in _pip_oracle(pts, polys)
            if bbox[q][0] <= col[p] <= bbox[q][1] and bbox[q][2] <= row[p] <= bbox[q][3]}
     assert {q for _, q in exp} == {8, 10, 11, 12, 13}
@@ -447,25 +416,6 @@ def test_pip_horizontal_edges_on_row_boundaries(spark, pip_plan, tmp_path):
     got = {(r["point_id"], r["poly_id"]) for r in pip_join(
         ready(spark.createDataFrame(pts)), poly_df, PIP_RES).collect()}
     assert got == exp
-
-    placemarks = "".join(
-        f"<Placemark><Point><coordinates>{x!r},{y!r}</coordinates></Point>"
-        f"</Placemark>" for x, y in zip(pts["x"], pts["y"]))
-    kml = ('<?xml version="1.0" encoding="UTF-8"?>'
-           '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
-           f"{placemarks}</Document></kml>")
-    src = str(tmp_path / "row_edge_docs")
-    spark.createDataFrame([("rows", k2gs.pack_spans(kml))],
-                          k2gs.spans_schema()).write.parquet(src)
-    q = (stream_pip_counts(stream_documents(spark, src), poly_df, PIP_RES)
-         .writeStream.format("memory").queryName(f"pip_rows_{name}")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    counts = {r["poly_id"]: r["n_points"]
-              for r in spark.sql(f"SELECT * FROM pip_rows_{name}").collect()}
-    assert counts == dict(Counter(p for _, p in exp))
 
 
 def test_pip_bands_and_cells_skip_polygons_with_no_ring_left(spark):
@@ -476,9 +426,9 @@ def test_pip_bands_and_cells_skip_polygons_with_no_ring_left(spark):
     polys = spark.createDataFrame(
         [(0, []), (1, [[[5.0, 5.0], [6.0, 6.0]]]), (2, [[[1.0]] * 4]),
          (3, [[[1.0], [2.0, 2.0], [3.0, 1.0]]]), (4, [sq])], POLY_SCHEMA)
-    assert {r["poly_id"] for r in ops._pip_bands(polys, 6).collect()} == {4}
-    rows = ops._pip_polys(polys, 6).select(
-        "poly_id", F.explode(ops._index_range(F.col("_y0"), F.col("_y1"))))
+    assert {r["poly_id"] for r in core._pip_bands(polys, 6).collect()} == {4}
+    rows = core._pip_polys(polys, 6).select(
+        "poly_id", F.explode(core._index_range(F.col("_y0"), F.col("_y1"))))
     assert {r["poly_id"] for r in rows.collect()} == {4}
 
 

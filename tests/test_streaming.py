@@ -221,44 +221,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     assert (got["gap_us"] >= 0).all()
 
 
-def test_stream_pip_counts_equals_batch(spark, tmp_path):
-    """Stream-static spatial join: per-polygon counts over the drained
-    stream equal the batch pip_join aggregation."""
-    from pyspark.sql import functions as F
-    from kml2geojson_spark.streaming import stream_pip_counts
-    from kml2geojson_spark.spatial import pip_join
-    from kml2geojson_spark.engine import extract_points
-
-    src = str(tmp_path / "incoming3")
-    docs = k2gs.synthesize_documents_kml(spark, 40, seed=31, max_placemarks=8)
-    docs.write.parquet(src)
-
-    sq = [[[-120.0, -60.0], [120.0, -60.0], [120.0, 60.0], [-120.0, 60.0],
-           [-120.0, -60.0]]]
-    east = [[[0.0, -85.0], [179.0, -85.0], [179.0, 85.0], [0.0, 85.0],
-             [0.0, -85.0]]]
-    polys = spark.createDataFrame(
-        [(0, sq), (1, east)],
-        "poly_id long, rings array<array<array<double>>>")
-
-    out = stream_pip_counts(stream_documents(spark, src), polys, res=5)
-    q = (out.writeStream.format("memory").queryName("pip_mem")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "pckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["poly_id"]: r["n_points"]
-           for r in spark.sql("SELECT * FROM pip_mem").collect()}
-
-    pts = (extract_points(spark.read.parquet(src))
-           .select(F.xxhash64("doc_id", "feature_idx", "geom_idx")
-                   .alias("point_id"), "x", "y"))
-    batch = {r["poly_id"]: r["n"] for r in
-             pip_join(pts, polys, 5).groupBy("poly_id")
-             .agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got == batch and got
-
-
 def test_stream_dedup_new_docs_across_batches(spark, tmp_path):
     """Exact-dup suppression with cross-batch state: a duplicate
     arriving in a LATER micro-batch is suppressed; each content emits

@@ -489,26 +489,24 @@ def test_vocabulary_ranking_and_min_df(spark):
 
 
 def test_near_dedup_star_algorithm_same_output(spark):
-    import inspect
-
     from kml2geojson_spark.textops import near_dedup_representatives
 
-    # the DEFAULT must be the diameter-independent star algorithm: a
+    # components come from the diameter-independent star algorithm: a
     # 100-TB corpus with long transitive near-dup chains (boilerplate
     # laddering) converges in O(log² n) rounds there, while min-label
     # propagation needs one round per hop and raises past max_iters
     # (see test_graph.test_star_components_long_chain_beats_propagation)
-    sig = inspect.signature(near_dedup_representatives)
-    assert sig.parameters["components"].default == "star"
     base = "alpha beta gamma delta epsilon zeta " * 5
     docs = spark.createDataFrame(
         [(i, base + ("x" * (i % 3))) for i in range(1, 8)]
         + [(9, "entirely different text about shuffles and joins")],
         "doc_id long, text string")
-    a = sorted(map(tuple, near_dedup_representatives(docs).collect()))
-    b = sorted(map(tuple, near_dedup_representatives(
-        docs, components="label").collect()))
-    assert a == b and a
+    got = {r["doc_id"]: r["rep_id"]
+           for r in near_dedup_representatives(docs).collect()}
+    # exact groups {1, 4, 7}, {2, 5}, {3, 6} map to their minimum; the
+    # groups' one extra token ("x", "xx" or none) among six puts their
+    # SimHashes 8-13 bits apart, past max_hamming, and doc 9 stands alone
+    assert got == {1: 1, 4: 1, 7: 1, 2: 2, 5: 2, 3: 3, 6: 3, 9: 9}
 
 
 def test_tfidf_top_terms_tiny_corpus(spark):
